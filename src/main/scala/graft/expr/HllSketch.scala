@@ -49,12 +49,7 @@ case class HllSketchAgg(
     if (v != null) {
       val h = HllSketchAgg.splitmix64(v.asInstanceOf[Long])
       val idx = (h >>> restBits).toInt
-      val rest = h & ((1L << restBits) - 1)
-      // bit_length(rest) = 64 - nlz(rest); rho = restBits - bit_length + 1,
-      // and rest == 0 means all restBits are "zeros" -> rho = restBits + 1
-      val rho =
-        if (rest == 0L) restBits + 1
-        else restBits - (64 - java.lang.Long.numberOfLeadingZeros(rest)) + 1
+      val rho = HllSketchAgg.rho(h, restBits)
       if (buf(idx) < rho) buf(idx) = rho.toByte
     }
     buf

@@ -57,6 +57,8 @@ object BpeTrain {
     // gone. Plan depth stays constant (each round plans against the previous
     // round's LogicalRDD); checkpoint blocks are host-local and freed by the
     // ContextCleaner when the loop drops them. Bit-identical merges.
+    // No lineage backs a local checkpoint: a round's blocks evicted or lost
+    // before the next round reads them cannot be recomputed; that job fails.
     var vocab: Dataset[(List[String], Long)] =
       wordFreq.map { case (w, f) => (w.toList.map(_.toString), f) }.localCheckpoint(false)
     val merges = Seq.newBuilder[(Int, String, String, Long)]

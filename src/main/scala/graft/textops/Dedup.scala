@@ -519,7 +519,10 @@ object Dedup {
     * (per-round shuffles proportional to edge nodes; PlanSpec pins it with a
     * listener). Returns the (cached) labels over edge-incident nodes on
     * convergence within `maxRounds`, or None (caller falls back to
-    * large-star/small-star). */
+    * large-star/small-star).
+    *
+    * Side effect: sets `spark.sql.adaptive.enabled` to false on the shared
+    * session of `edges` while the round loop runs, then restores it. */
   private[graft] def minLabelPropagation(edges: DataFrame, maxRounds: Int): Option[DataFrame] = {
     // Round state is localCheckpoint'ed, NOT cache()+unpersist()'ed: the r5
     // form unpersisted round k-1 right after materializing round k, which

@@ -160,6 +160,9 @@ object HostRank {
     * materializes the round — no separate checkpoint job and no witness
     * join. See the in-loop comment for why cache+unpersist is a trap here;
     * loop-invariant caches are released before returning.
+    *
+    * Side effect: sets `spark.sql.adaptive.enabled` to false on the shared
+    * session of `edges` while the round loop runs, then restores it.
     */
   def rankConverged(edges: DataFrame, maxIters: Int = 50, dampBp: Long = 8500L,
                     scale: Long = 1000000L): DataFrame = {

@@ -43,7 +43,7 @@ class PlanSpec extends AnyFunSuite {
     import pageplus.data.PagesFromDocuments
     import pageplus.spark.Pipeline
     // prune check on a real parquet-backed pages table
-    val tmp = java.nio.file.Files.createTempDirectory("graft_plan_pages_").toString
+    val tmp = tempDir("graft_plan_pages_")
     PagesFromDocuments.clean(spark, sf).toDF().write.mode("overwrite").parquet(tmp)
     val pages = spark.read.parquet(tmp)
     val df = Pipeline.fulltext(pages).toDF()
@@ -65,7 +65,7 @@ class PlanSpec extends AnyFunSuite {
     assert(viaExpr == typed)
     // over a parquet-backed pages table the whole scan->extract stage is one
     // codegen stage with no object mode (the '*' markers denote WholeStageCodegen)
-    val tmp = java.nio.file.Files.createTempDirectory("graft_plan_expr_").toString
+    val tmp = tempDir("graft_plan_expr_")
     PagesFromDocuments.clean(spark, sf).toDF().write.mode("overwrite").parquet(tmp)
     graft.expr.PageFulltextExpr.register(spark)
     spark.read.parquet(tmp).createOrReplaceTempView("graft_pages_parquet")
@@ -89,7 +89,7 @@ class PlanSpec extends AnyFunSuite {
     val viaExpr = SparkEntry.queries("html_main_sql_expr")(spark, sf)
       .collect().map(r => r.getString(0) -> r.getString(1)).toMap
     assert(viaExpr == typed)
-    val tmp = java.nio.file.Files.createTempDirectory("graft_plan_html_expr_").toString
+    val tmp = tempDir("graft_plan_html_expr_")
     graft.webtext.WebText.htmlPages(spark.read.parquet(s"$sf/documents.parquet")).toDF()
       .write.mode("overwrite").parquet(tmp)
     graft.expr.HtmlMainTextExpr.register(spark)
@@ -109,7 +109,7 @@ class PlanSpec extends AnyFunSuite {
 
   test("checkpoint pending anti-join plans as a join, not a cartesian") {
     import pageplus.spark.Checkpoint
-    val manifestDir = java.nio.file.Files.createTempDirectory("graft_plan_ckpt_").toString
+    val manifestDir = tempDir("graft_plan_ckpt_")
     val pages = pageplus.data.PagesFromDocuments.clean(spark, sf).toDF()
     Checkpoint.commit(pages.limit(10).select("url"), manifestDir)
     val plan = executedPlan(Checkpoint.pending(pages, manifestDir))
@@ -326,8 +326,8 @@ class PlanSpec extends AnyFunSuite {
     // storage-partitioned; the sandbox stand-in is Spark bucketBy + parquet
     import org.apache.spark.sql.functions._
     val pages = pageplus.data.PagesFromDocuments.clean(spark, sf).toDF()
-    val d1 = java.nio.file.Files.createTempDirectory("graft_bucket_pages_").toString
-    val d2 = java.nio.file.Files.createTempDirectory("graft_bucket_meta_").toString
+    val d1 = tempDir("graft_bucket_pages_")
+    val d2 = tempDir("graft_bucket_meta_")
     spark.sql("DROP TABLE IF EXISTS graft_pages_b")
     spark.sql("DROP TABLE IF EXISTS graft_meta_b")
     pages.select("url", "html").write.option("path", d1)

@@ -189,7 +189,7 @@ class Round5Spec extends AnyFunSuite {
     import pageplus.data.PagesFromDocuments
     import pageplus.spark.{Pipeline, XmlDirIngest}
     val pages = PagesFromDocuments.clean(spark, sf).toDF()
-    val dir = java.nio.file.Files.createTempDirectory("graft_xmldir_spec_").toString
+    val dir = tempDir("graft_xmldir_spec_")
     XmlDirIngest.writeXmlDir(pages, dir)
     java.nio.file.Files.write(java.nio.file.Paths.get(dir, "notpage.xml"),
       "<foo>not a PAGE document</foo>".getBytes("UTF-8"))

@@ -11,14 +11,21 @@ object SparkSuite {
       .appName("pageplusspark-test")
       .config("spark.sql.shuffle.partitions", "4")
       .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.warehouse.dir",
-        java.nio.file.Files.createTempDirectory("graft_warehouse_").toString)
+      .config("spark.sql.warehouse.dir", tempDir("graft_warehouse_"))
       .config("spark.ui.enabled", "false")
       .getOrCreate()
     s.sparkContext.setLogLevel("WARN")
     s
   }
   val sf = "/root/testdata/sf0.001"
+
+  /** A fresh directory under java.io.tmpdir whose tree is deleted when the
+    * test JVM exits. */
+  def tempDir(prefix: String): String = {
+    val dir = java.nio.file.Files.createTempDirectory(prefix).toFile
+    sys.addShutdownHook(org.apache.commons.io.FileUtils.deleteQuietly(dir))
+    dir.toString
+  }
 }
 
 class ExtractionPipelineSpec extends AnyFunSuite {
@@ -169,8 +176,7 @@ class ScalePlumbingSpec extends AnyFunSuite {
       log.commit(pending1.select("url"))
       assert(Checkpoint.pending(pages, log).count() == 0)
     }
-    drive(ManifestCommitLog(
-      java.nio.file.Files.createTempDirectory("graft_ckpt_test_").toString))
+    drive(ManifestCommitLog(tempDir("graft_ckpt_test_")))
     // catalog-table backend: same flow through the session catalog (with an
     // Iceberg catalog this is the snapshot-append path, config-only switch)
     spark.sql("DROP TABLE IF EXISTS graft_ckpt_manifest")
@@ -185,7 +191,7 @@ class ScalePlumbingSpec extends AnyFunSuite {
 
   test("catalog seam: same pipeline runs off a catalog table or a parquet path") {
     import pageplus.spark.{CatalogPages, PagesSource, ParquetPages}
-    val tmp = java.nio.file.Files.createTempDirectory("graft_src_pages_").toString
+    val tmp = tempDir("graft_src_pages_")
     pageplus.data.PagesFromDocuments.clean(spark, sf).toDF().write.mode("overwrite").parquet(tmp)
     spark.read.parquet(tmp).createOrReplaceTempView("graft_catalog_pages")
     val viaPath = pageplus.spark.Pipeline.fulltext(ParquetPages(tmp).pages(spark))

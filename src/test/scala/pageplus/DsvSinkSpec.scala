@@ -24,7 +24,7 @@ class DsvSinkSpec extends AnyFunSuite {
   }
 
   test("tsv sink round-trips: written file reads back value-identical") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_dsv_").toString
+    val dir = tempDir("graft_dsv_")
     val df = rowsDf
     Dsv.writeCsv(df, dir)
     val back = Dsv.readCsv(spark, dir)
@@ -36,8 +36,8 @@ class DsvSinkSpec extends AnyFunSuite {
   test("delimiter option honored; bytes stable across re-writes") {
     val df = Dsv.csvColumns(rowsDf).coalesce(1)
       .sortWithinPartitions("url", "id")
-    val d1 = java.nio.file.Files.createTempDirectory("graft_dsv1_").toString
-    val d2 = java.nio.file.Files.createTempDirectory("graft_dsv2_").toString
+    val d1 = tempDir("graft_dsv1_")
+    val d2 = tempDir("graft_dsv2_")
     df.write.mode("overwrite").option("header", "true").option("delimiter", ";").csv(d1)
     df.write.mode("overwrite").option("header", "true").option("delimiter", ";").csv(d2)
     val b1 = partBytes(d1)
@@ -51,7 +51,7 @@ class DsvSinkSpec extends AnyFunSuite {
       1, 2, 3, 4, 5, 6, 7, 8, 9))
       .toDF("url", "id", "text", "region", "start_x", "start_y", "mean_x", "mean_y",
         "end_x", "end_y", "area", "width", "length")
-    val dir = java.nio.file.Files.createTempDirectory("graft_dsv_q_").toString
+    val dir = tempDir("graft_dsv_q_")
     Dsv.writeCsv(rows, dir)
     val content = partBytes(dir)
     assert(content.contains("\"he said \"\"hi\"\" there\""), s"got: $content")
@@ -63,7 +63,7 @@ class DsvSinkSpec extends AnyFunSuite {
     import spark.implicits._
     val doc = pageplus.data.PagesFromDocuments.cleanDoc(3L, "a b c d e f g h i")
     val rows = Dsv.rows(doc).toDF()
-    val dir = java.nio.file.Files.createTempDirectory("graft_dsv_fix_").toString
+    val dir = tempDir("graft_dsv_fix_")
     Dsv.writeCsv(rows.coalesce(1).sortWithinPartitions("id"), dir)
     val content = partBytes(dir)
     val expected =
