@@ -27,13 +27,15 @@ import org.apache.spark.sql.util.QueryExecutionListener
   */
 object Profile {
 
-  /** One query's profile; JSON names are these in snake_case. `runsS`: both
+  /** One query's profile; JSON names are these in snake_case. `family`: the
+    * query's family in [[graft.queries.Registry]]. `runsS`: both
     * runs (None: failed); `minS`: -1 if both failed. `executions`: internal
     * Dataset actions (a checkpoint, a witness) and the final `drain`, each with
     * its operators that have a non-zero rows, time, spill or size metric. */
-  final case class Record(query: String, sf: String, cores: Int, runsS: Seq[Option[Double]],
-      minS: Double, error: Option[String], jobs: Int, stages: Int, tasks: Int, exchanges: Int,
-      codegenStages: Int, jobList: Seq[Job], stageList: Seq[Stage], executions: Seq[Execution])
+  final case class Record(query: String, family: String, sf: String, cores: Int,
+      runsS: Seq[Option[Double]], minS: Double, error: Option[String], jobs: Int, stages: Int,
+      tasks: Int, exchanges: Int, codegenStages: Int, jobList: Seq[Job], stageList: Seq[Stage],
+      executions: Seq[Execution])
   /** `description`: the job description, else its result stage's call site. */
   final case class Job(id: Int, wallMs: Long, description: String)
   /** `runMs`: summed task run time. */
@@ -104,7 +106,8 @@ object Profile {
     }
     val execs = probe.executions.toSeq ++ warm.map(w => "drain" -> operators(w._2.executedPlan, 0))
     val runs = Seq(cold, warm.map(_._1))
-    val rec = Record(name, sfDir, spark.sparkContext.defaultParallelism,
+    val rec = Record(name, graft.queries.Registry.familyOf(name), sfDir,
+      spark.sparkContext.defaultParallelism,
       runs, runs.flatten.minOption.getOrElse(-1.0), errors.headOption,
       probe.jobs.size, probe.stages.size, probe.stages.map(_.tasks).sum,
       execs.flatMap(_._2).count(_.exchange), execs.flatMap(_._2).count(_.codegen),

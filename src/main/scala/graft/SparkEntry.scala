@@ -1,8 +1,6 @@
 package graft
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.expressions.Window
-import org.apache.spark.sql.functions._
 
 import pageplus.data.PagesFromDocuments
 import pageplus.spark.Pipeline
@@ -18,6320 +16,19 @@ import pageplus.spark.Pipeline
   */
 object SparkEntry {
 
-  private def t(spark: SparkSession, dir: String, name: String): DataFrame =
-    spark.read.parquet(s"$dir/$name.parquet")
-
-  /** Parallelized reader for map-heavy pipelines: the driver tables are
-    * single-row-group parquet files, so without an explicit repartition every
-    * pre-shuffle stage (signatures, cosine scans, regex passes) runs as ONE
-    * task no matter the core count (CLAUDE.md rule). Queries whose first real
-    * work is already a shuffle keep the plain reader — an extra exchange there
-    * would only add cost. */
-  private def tp(spark: SparkSession, dir: String, name: String): DataFrame =
-    t(spark, dir, name).repartition(spark.sparkContext.defaultParallelism)
-
   /** Flagship query on /root/testdata/sf0.001; driver smoke-checks rows>0. */
   def entry(spark: SparkSession): DataFrame = {
     val pages = PagesFromDocuments.clean(spark, "/root/testdata/sf0.001").toDF()
     Pipeline.fulltext(pages, saltPartitions = 8).toDF()
   }
 
-  /** FineWeb-style multi-gate audit: Gopher shape gate × repetition gate
-    * (dup words <= 50%) × LM surprise gate (avg <= 20000 fixed-point), each
-    * gate reported so ablations can attribute removals; three doc-grain
-    * joins share one hash partitioning. UNSORTED — `quality_ensemble` adds
-    * its presentation orderBy, while `host_quality_rollup` aggregates this
-    * directly (a sort there would add a range-sampling pass that re-executes
-    * the whole ensemble DAG before the rollup re-shuffles it anyway). */
-  private def qualityEnsemble(s: SparkSession, dir: String): DataFrame = {
-    val docs = tp(s, dir, "documents")
-    val g = graft.textops.Curate.gopherQuality(docs)
-      .select(col("doc_id"), col("keep").as("g_gopher"))
-    val r = graft.textops.Curate.repetitionStats(docs)
-      .select(col("doc_id"),
-        (lit(2L) * col("n_dup_words") <= col("n_words")).cast("long").as("g_rep"))
-    val l = graft.textops.Curate.lmQuality(docs)
-      .select(col("doc_id"),
-        (col("surprise_avg") <= 20000L).cast("long").as("g_lm"))
-    g.join(r, "doc_id").join(l, "doc_id")
-      .withColumn("keep", col("g_gopher") * col("g_rep") * col("g_lm"))
-  }
-
-  /** One entry per implemented operator from SURVEY.md §2. */
-  def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    // ---- PAGE-XML extraction path (SURVEY §2.8 export fulltext / §2.4 stats) ----
-    "fulltext_extract" -> ((s, dir) => {
-      Pipeline.fulltext(PagesFromDocuments.clean(s, dir).toDF(), saltPartitions = s.sparkContext.defaultParallelism).toDF()
-    }),
-    "xml_dir_ingest" -> ((s, dir) => {
-      // the reference's LITERAL input mode: a directory of individual
-      // PAGE-XML files (io/utils.py dir walk) read via a binaryFile scan —
-      // landing-format ingestion whose extraction must be byte-identical to
-      // the parquet-table path (same oracle as fulltext_extract)
-      val xmlDir = s"${sys.props("java.io.tmpdir")}/graft_xmldir_${dir.hashCode.toHexString}"
-      pageplus.spark.XmlDirIngest.writeXmlDir(
-        PagesFromDocuments.clean(s, dir).toDF(), xmlDir)
-      Pipeline.fulltext(pageplus.spark.XmlDirIngest.readXmlDir(s, xmlDir),
-          saltPartitions = s.sparkContext.defaultParallelism)
-        .toDF().orderBy("url")
-    }),
-    "fulltext_ro_lastwins" -> ((s, dir) => {
-      // reading_order=True literal semantics: only the LAST reading-order region
-      // survives (models/page.py:144-147)
-      Pipeline.fulltext(PagesFromDocuments.twoRegion(s, dir).toDF(), ro = true, saltPartitions = s.sparkContext.defaultParallelism).toDF()
-    }),
-    "page_stats" -> ((s, dir) => {
-      Pipeline.pageStats(PagesFromDocuments.clean(s, dir).toDF(),
-        saltPartitions = s.sparkContext.defaultParallelism).toDF()
-    }),
-    "corpus_stats" -> ((s, dir) => {
-      Pipeline.pageStats(PagesFromDocuments.clean(s, dir).toDF(),
-        saltPartitions = s.sparkContext.defaultParallelism).toDF()
-        .agg(
-          count(lit(1)).as("pages"),
-          sum("textregions").as("textregions"),
-          sum("tableregions").as("tableregions"),
-          sum("textlines").as("textlines"),
-          sum("words").as("words"),
-          sum("glyphs").as("glyphs"))
-    }),
-
-    "fulltext_columnar" -> ((s, dir) => {
-      // Catalyst/codegen variant of extraction: explode regions -> lines ->
-      // unicodes, deterministic array_sort reassembly (SURVEY §2.8)
-      val parsed = Pipeline.parse(PagesFromDocuments.clean(s, dir).toDF(), saltPartitions = s.sparkContext.defaultParallelism).toDF()
-      parsed
-        .select(col("url"), posexplode(col("regions")).as(Seq("ridx", "region")))
-        .select(col("url"), col("ridx"), posexplode(col("region.lines")).as(Seq("lidx", "line")))
-        .select(col("url"), col("ridx"), col("lidx"), posexplode(col("line.unicodes")).as(Seq("uidx", "txt")))
-        .groupBy("url")
-        .agg(array_join(
-          transform(
-            array_sort(collect_list(struct(col("ridx"), col("lidx"), col("uidx"), col("txt")))),
-            x => x.getField("txt")),
-          "\n").as("extracted_text"))
-    }),
-    "fulltext_with_words" -> ((s, dir) => {
-      // word-level Unicode is included by `.//Unicode` extraction (models/page.py:149-150)
-      Pipeline.fulltext(PagesFromDocuments.withWords(s, dir).toDF(), saltPartitions = s.sparkContext.defaultParallelism).toDF()
-    }),
-    "fulltext_skew_aware" -> ((s, dir) => {
-      // region-split path for big docs must stay byte-identical; threshold low
-      // enough that many documents take the split path at this scale
-      Pipeline.fulltextSkewAware(PagesFromDocuments.clean(s, dir).toDF(),
-        bigDocBytes = 2000, saltPartitions = s.sparkContext.defaultParallelism)
-    }),
-    "fulltext_skew_dehyphenate" -> ((s, dir) => {
-      // skew split composed with the cross-region dehyphe fold: lines are
-      // reassembled per document before the fold runs in the reducer
-      Pipeline.fulltextSkewAware(PagesFromDocuments.hyphenated(s, dir).toDF(),
-        dehyphenate = true, bigDocBytes = 2000, saltPartitions = s.sparkContext.defaultParallelism)
-    }),
-    "fulltext_skew_ro" -> ((s, dir) => {
-      // skew split composed with reading_order=True (last region wins)
-      Pipeline.fulltextSkewAware(PagesFromDocuments.twoRegion(s, dir).toDF(),
-        ro = true, bigDocBytes = 2000, saltPartitions = s.sparkContext.defaultParallelism)
-    }),
-    "fulltext_sql_expr" -> ((s, dir) => {
-      // codegen'd Catalyst Expression path, registered for SQL — the whole
-      // scan -> extract pipeline stays inside WholeStageCodegen
-      graft.expr.PageFulltextExpr.register(s)
-      PagesFromDocuments.clean(s, dir).toDF().createOrReplaceTempView("graft_pages_tmp")
-      s.sql("SELECT url, page_fulltext(html) AS extracted_text FROM graft_pages_tmp")
-    }),
-    "fulltext_dehyphenate" -> ((s, dir) => {
-      // literal dehyphe over a corpus with planted isolated trailing hyphens
-      Pipeline.fulltext(PagesFromDocuments.hyphenated(s, dir).toDF(), dehyphenate = true,
-        saltPartitions = s.sparkContext.defaultParallelism).toDF()
-    }),
-    "xml_roundtrip" -> ((s, dir) => {
-      // PAGE-XML sink fidelity: parse -> serialize -> reparse -> extract
-      import s.implicits._
-      Pipeline.parse(PagesFromDocuments.clean(s, dir).toDF(), saltPartitions = s.sparkContext.defaultParallelism)
-        .map { d =>
-          val xml = pageplus.xml.PageXmlWriter.write(d)
-          val re = pageplus.xml.StaxPageParser.parse(d.url, xml.getBytes(java.nio.charset.StandardCharsets.UTF_8))
-          Pipeline.Extracted(d.url, pageplus.text.FullText.extract(re))
-        }.toDF()
-    }),
-    "xml_extras_roundtrip" -> ((s, dir) => {
-      // pass-through fidelity, oracle-checked: documents lifted WITH unmodeled
-      // XML (Metadata, TextStyle, custom attrs — deterministic functions of
-      // doc_id) go parse -> serialize -> reparse; the captured extras and the
-      // extracted text must both survive both hops bit-for-bit
-      import s.implicits._
-      Pipeline.parse(PagesFromDocuments.withExtras(s, dir).toDF(), saltPartitions = s.sparkContext.defaultParallelism)
-        .map { d =>
-          val xml = pageplus.xml.PageXmlWriter.write(d)
-          val re = pageplus.xml.StaxPageParser.parse(d.url, xml.getBytes(java.nio.charset.StandardCharsets.UTF_8))
-          (re.url,
-            pageplus.text.FullText.extract(re),
-            re.extras.pcgts.children.mkString,
-            re.regions.head.extras.attrs.find(_.name == "custom").map(_.value).getOrElse(""),
-            re.regions.head.extras.children.mkString,
-            re.extras.page.attrs.find(_.name == "custom").map(_.value).getOrElse(""))
-        }.toDF("url", "extracted_text", "metadata_xml", "region_custom", "region_style", "page_custom")
-    }),
-    "split_region" -> ((s, dir) => {
-      import s.implicits._
-      Pipeline.parse(PagesFromDocuments.twoColumn(s, dir).toDF(), saltPartitions = s.sparkContext.defaultParallelism)
-        .flatMap { d =>
-          d.textRegions.flatMap { r =>
-            pageplus.ops.SplitRegion.split(r).zipWithIndex.map { case (g, i) =>
-              (d.url, i, g.lines.size.toLong,
-                pageplus.geo.Geo.polygon(g.ring).getArea.toLong)
-            }
-          }
-        }.toDF("url", "side", "n_lines", "area")
-    }),
-    "word_freq_top20" -> ((s, dir) => {
-      // SubCounter equivalent (analytics/counter.py:39-52): merge + most_common.
-      // tp(), not t() (VERDICT r3 item 1/#1): the explode + PARTIAL aggregation
-      // run before the exchange, so on a single-file table the whole map side
-      // would otherwise be one task regardless of core count
-      tp(s, dir, "documents")
-        .select(explode(split(col("text"), " ", -1)).as("word"))
-        .groupBy("word").agg(count(lit(1)).as("n"))
-        .orderBy(col("n").desc, col("word").asc)
-        .limit(20)
-    }),
-    "validation_report" -> ((s, dir) => {
-      import s.implicits._
-      Pipeline.parse(PagesFromDocuments.corrupt(s, dir).toDF(), saltPartitions = s.sparkContext.defaultParallelism)
-        .flatMap(pageplus.ops.Validate.page _)
-        .select(col("url"), col("elementId").as("element_id"), col("rule"))
-    }),
-    "repair_summary" -> ((s, dir) => {
-      import s.implicits._
-      Pipeline.parse(PagesFromDocuments.corrupt(s, dir).toDF(), saltPartitions = s.sparkContext.defaultParallelism)
-        .flatMap(d => pageplus.ops.Repair.page(d)._2)
-        .groupBy("url")
-        .agg(
-          sum(when(col("rule") === "hull_applied", 1L).otherwise(0L)).as("n_hull"),
-          sum(when(col("rule") === "baseline_missing", 1L).otherwise(0L)).as("n_baseline_missing"),
-          sum(when(col("rule") === "baseline_outside", 1L).otherwise(0L)).as("n_baseline_outside"))
-        .filter(col("n_hull") + col("n_baseline_missing") + col("n_baseline_outside") > 0)
-    }),
-    // ---- adversarial-geometry family (VERDICT r1 item 3): concave, rotated,
-    // self-intersecting, collinear-degenerate, stuttered rings and a U-shaped
-    // parent whose fit intersection is a MultiPolygon — end-to-end through
-    // validate / repair / extend / extend-baseline, oracles are CASE tables
-    // over m = doc_id % 7 (constants derived in PagesFromDocuments.messyDoc
-    // scaladoc + pinned by MessySpec) ----
-    "validate_messy" -> ((s, dir) => {
-      import s.implicits._
-      Pipeline.parse(PagesFromDocuments.messy(s, dir).toDF(), saltPartitions = s.sparkContext.defaultParallelism)
-        .flatMap(pageplus.ops.Validate.page _)
-        .select(col("url"), col("elementId").as("element_id"), col("rule"))
-    }),
-    "repair_messy" -> ((s, dir) => {
-      import s.implicits._
-      Pipeline.parse(PagesFromDocuments.messy(s, dir).toDF(), saltPartitions = s.sparkContext.defaultParallelism)
-        .flatMap(d => pageplus.ops.Repair.page(d)._2)
-        .select(col("url"), col("elementId").as("element_id"), col("rule"))
-    }),
-    "repair_messy_geom" -> ((s, dir) => {
-      import s.implicits._
-      Pipeline.parse(PagesFromDocuments.messy(s, dir).toDF(), saltPartitions = s.sparkContext.defaultParallelism)
-        .map(d => pageplus.ops.Repair.page(d)._1)
-        .flatMap(d => d.textRegions.flatMap(_.lines).map { l =>
-          (d.url, l.id, l.coords.size.toLong, pageplus.geo.Geo.polygon(l.coords).getArea.toLong)
-        })
-        .toDF("url", "id", "n_points", "area")
-    }),
-    "extend_messy" -> ((s, dir) => {
-      import s.implicits._
-      Pipeline.parse(PagesFromDocuments.messy(s, dir).toDF(), saltPartitions = s.sparkContext.defaultParallelism)
-        .map(d => pageplus.ops.Extend.extendLines(d)._1)
-        .flatMap(d => d.textRegions.flatMap(_.lines).map { l =>
-          val poly = pageplus.geo.Geo.polygon(l.coords)
-          val sides = pageplus.geo.Geo.sideLengths(pageplus.geo.Geo.mrr(poly))
-          (d.url, l.id, poly.getArea.toLong, sides.head.toLong, sides.last.toLong)
-        })
-        .toDF("url", "id", "area", "width", "length")
-    }),
-    "extend_baseline_messy" -> ((s, dir) => {
-      import s.implicits._
-      Pipeline.parse(PagesFromDocuments.messy(s, dir).toDF(), saltPartitions = s.sparkContext.defaultParallelism)
-        .flatMap(d => d.textRegions.flatMap(_.lines).flatMap { l =>
-          pageplus.ops.Baseline.extendBaseline(l).map { bl =>
-            (d.url, l.id, bl.head.x, bl.head.y, bl.last.x, bl.last.y)
-          }
-        })
-        .toDF("url", "id", "bl_sx", "bl_sy", "bl_ex", "bl_ey")
-    }),
-    "repair_extract" -> ((s, dir) => {
-      // repair never touches text: extraction after repair stays byte-identical
-      import s.implicits._
-      Pipeline.parse(PagesFromDocuments.corrupt(s, dir).toDF(), saltPartitions = s.sparkContext.defaultParallelism)
-        .map(d => pageplus.ops.Repair.page(d)._1)
-        .map(d => Pipeline.Extracted(d.url, pageplus.text.FullText.extract(d)))
-        .toDF()
-    }),
-    "dsv_export" -> ((s, dir) => {
-      import s.implicits._
-      Pipeline.parse(PagesFromDocuments.clean(s, dir).toDF(), saltPartitions = s.sparkContext.defaultParallelism)
-        .flatMap(pageplus.text.Dsv.rows _)
-        .toDF()
-    }),
-    "dsv_dehyphenated" -> ((s, dir) => {
-      // `export dsv --dehyphenate` (cli/export.py:128-129): dehyphe applied to
-      // the text column only, rows zipped (the reference's truncation hazard
-      // cannot fire here — the hyphenated lift has no empty lines)
-      import s.implicits._
-      Pipeline.parse(PagesFromDocuments.hyphenated(s, dir).toDF(), saltPartitions = s.sparkContext.defaultParallelism)
-        .flatMap(pageplus.text.Dsv.rowsDehyphenated _)
-        .toDF()
-    }),
-    "extend_lines" -> ((s, dir) => {
-      import s.implicits._
-      Pipeline.parse(PagesFromDocuments.clean(s, dir).toDF(), saltPartitions = s.sparkContext.defaultParallelism)
-        .map(d => pageplus.ops.Extend.extendLines(d)._1)
-        .flatMap(d => d.textRegions.flatMap(_.lines).map { l =>
-          val poly = pageplus.geo.Geo.polygon(l.coords)
-          val sides = pageplus.geo.Geo.sideLengths(pageplus.geo.Geo.mrr(poly))
-          (d.url, l.id, poly.getArea.toLong, sides.head.toLong, sides.last.toLong)
-        })
-        .toDF("url", "id", "area", "width", "length")
-    }),
-    "sort_and_merge" -> ((s, dir) => {
-      // split lines reassemble to the exact clean extraction (SURVEY §2.7)
-      import s.implicits._
-      Pipeline.parse(PagesFromDocuments.splitLines(s, dir).toDF(), saltPartitions = s.sparkContext.defaultParallelism)
-        .map(d => pageplus.ops.Merge.sortAndMerge(d)._1)
-        .map(d => Pipeline.Extracted(d.url, pageplus.text.FullText.extract(d)))
-        .toDF()
-    }),
-    "delete_words" -> ((s, dir) => {
-      import s.implicits._
-      Pipeline.parse(PagesFromDocuments.withWords(s, dir).toDF(), saltPartitions = s.sparkContext.defaultParallelism)
-        .map(pageplus.ops.Delete.words _)
-        .map(d => Pipeline.Extracted(d.url, pageplus.text.FullText.extract(d)))
-        .toDF()
-    }),
-    "delete_line_textequiv" -> ((s, dir) => {
-      import s.implicits._
-      Pipeline.parse(PagesFromDocuments.withWords(s, dir).toDF(), saltPartitions = s.sparkContext.defaultParallelism)
-        .map(pageplus.ops.Delete.lineTextEquiv _)
-        .map(d => Pipeline.Extracted(d.url, pageplus.text.FullText.extract(d)))
-        .toDF()
-    }),
-    "delete_textlines" -> ((s, dir) => {
-      import s.implicits._
-      Pipeline.parse(PagesFromDocuments.clean(s, dir).toDF(), saltPartitions = s.sparkContext.defaultParallelism)
-        .map(pageplus.ops.Delete.textlines _)
-        .map(d => Pipeline.Extracted(d.url, pageplus.text.FullText.extract(d)))
-        .toDF()
-    }),
-    "pseudo_literal_report" -> ((s, dir) => {
-      import s.implicits._
-      Pipeline.parse(PagesFromDocuments.clean(s, dir).toDF(), saltPartitions = s.sparkContext.defaultParallelism)
-        .flatMap(d => pageplus.ops.Baseline.pseudoLinePolygonLiteral(d)._2)
-        .select(col("url"), col("elementId").as("element_id"), col("rule"))
-    }),
-    "pseudo_intended" -> ((s, dir) => {
-      import s.implicits._
-      Pipeline.parse(PagesFromDocuments.clean(s, dir).toDF(), saltPartitions = s.sparkContext.defaultParallelism)
-        .map(d => pageplus.ops.Baseline.pseudoLinePolygonIntended(d)._1)
-        .flatMap(d => d.textRegions.flatMap(_.lines).map { l =>
-          val poly = pageplus.geo.Geo.polygon(l.coords)
-          val sides = pageplus.geo.Geo.sideLengths(pageplus.geo.Geo.mrr(poly))
-          (d.url, l.id, l.baseline.head.x, l.baseline.head.y, l.baseline.last.x, l.baseline.last.y,
-            poly.getArea.toLong, sides.head.toLong, sides.last.toLong)
-        })
-        .toDF("url", "id", "bl_sx", "bl_sy", "bl_ex", "bl_ey", "area", "width", "length")
-    }),
-    "translate_lines" -> ((s, dir) => {
-      // translate_textlinepolygon / translate_baseline by (+5, +7)
-      import s.implicits._
-      Pipeline.parse(PagesFromDocuments.clean(s, dir).toDF(), saltPartitions = s.sparkContext.defaultParallelism)
-        .flatMap { d =>
-          d.textRegions.flatMap(_.lines).map { l0 =>
-            val l = pageplus.ops.Baseline.translateBaseline(
-              pageplus.ops.Baseline.translatePolygon(l0, 5, 7), 5, 7)
-            (d.url, l.id, l.coords.head.x, l.coords.head.y,
-              l.baseline.head.x, l.baseline.head.y, l.baseline.last.x, l.baseline.last.y)
-          }
-        }.toDF("url", "id", "poly_x0", "poly_y0", "bl_sx", "bl_sy", "bl_ex", "bl_ey")
-    }),
-    "extend_baseline" -> ((s, dir) => {
-      import s.implicits._
-      Pipeline.parse(PagesFromDocuments.clean(s, dir).toDF(), saltPartitions = s.sparkContext.defaultParallelism)
-        .flatMap(d => d.textRegions.flatMap(_.lines).map { l =>
-          val bl = pageplus.ops.Baseline.extendBaseline(l).getOrElse(l.baseline)
-          (d.url, l.id, bl.head.x, bl.head.y, bl.last.x, bl.last.y)
-        })
-        .toDF("url", "id", "bl_sx", "bl_sy", "bl_ex", "bl_ey")
-    }),
-
-    // ---- relational surface (SURVEY §2.4/§2.9/§2.11 equivalents on TPC-H-ish data) ----
-    "q1_agg" -> ((s, dir) => {
-      t(s, dir, "lineitem")
-        .filter(col("l_shipdate") <= lit("1998-09-02").cast("timestamp_ntz"))
-        .groupBy("l_returnflag", "l_linestatus")
-        .agg(
-          sum(round(col("l_quantity")).cast("long")).as("sum_qty"), // round, not
-          // truncate: DuckDB CAST(double AS BIGINT) rounds to nearest
-          sum(round(col("l_extendedprice") * 100).cast("long")).as("sum_base_price_cents"),
-          sum(round(col("l_extendedprice") * (lit(1.0) - col("l_discount")) * 100).cast("long"))
-            .as("sum_disc_price_cents"),
-          count(lit(1)).as("count_order"))
-    }),
-    "q3_topk" -> ((s, dir) => {
-      // tp(): the high-cardinality partial agg runs pre-exchange (same
-      // single-file single-task trap as word_freq_top20)
-      tp(s, dir, "lineitem")
-        .groupBy("l_orderkey")
-        .agg(sum(round(col("l_extendedprice") * (lit(1.0) - col("l_discount")) * 100).cast("long"))
-          .as("revenue_cents"))
-        .orderBy(col("revenue_cents").desc, col("l_orderkey").asc)
-        .limit(10)
-    }),
-    "q4_window" -> ((s, dir) => {
-      val w = Window.partitionBy("o_custkey").orderBy(col("o_orderdate").asc, col("o_orderkey").asc)
-      t(s, dir, "orders")
-        .withColumn("rn", row_number().over(w))
-        .filter(col("rn") === 1)
-        .select(
-          col("o_custkey"),
-          col("o_orderkey").as("first_orderkey"),
-          date_format(col("o_orderdate"), "yyyy-MM-dd").as("first_orderdate"))
-    }),
-    "q5_multijoin" -> ((s, dir) => {
-      val li = t(s, dir, "lineitem")
-      val o = t(s, dir, "orders")
-      val c = t(s, dir, "customer")
-      val n = t(s, dir, "nation")
-      val r = t(s, dir, "region")
-      li.join(o, li("l_orderkey") === o("o_orderkey"))
-        .join(c, o("o_custkey") === c("c_custkey"))
-        .join(broadcast(n), c("c_nationkey") === n("n_nationkey"))
-        .join(broadcast(r), n("n_regionkey") === r("r_regionkey"))
-        .groupBy(col("r_name"), col("n_name"))
-        .agg(
-          sum(round(col("l_extendedprice") * (lit(1.0) - col("l_discount")) * 100).cast("long"))
-            .as("revenue_cents"),
-          count(lit(1)).as("n_lines"))
-    }),
-    "q6_filter" -> ((s, dir) => {
-      t(s, dir, "lineitem")
-        .filter(
-          col("l_shipdate") >= lit("1996-01-01").cast("timestamp_ntz") &&
-          col("l_shipdate") < lit("1997-01-01").cast("timestamp_ntz") &&
-          col("l_discount") >= 0.05 && col("l_discount") <= 0.07 &&
-          col("l_quantity") < 24)
-        .agg(
-          sum(round(col("l_extendedprice") * col("l_discount") * 100).cast("long"))
-            .as("revenue_cents"),
-          count(lit(1)).as("n_lines"))
-    }),
-    "q7_semijoin" -> ((s, dir) => {
-      val c = t(s, dir, "customer")
-      val o = t(s, dir, "orders")
-      c.join(o, c("c_custkey") === o("o_custkey"), "left_semi")
-        .groupBy("c_mktsegment")
-        .agg(count(lit(1)).as("n_customers_with_orders"))
-    }),
-    "q8_distinct" -> ((s, dir) => {
-      t(s, dir, "lineitem").agg(
-        countDistinct(col("l_partkey")).as("n_parts"),
-        countDistinct(col("l_suppkey")).as("n_supps"),
-        countDistinct(col("l_orderkey")).as("n_orders"))
-    }),
-    "q11_sessionize" -> ((s, dir) => {
-      // gap-based sessionization: new session when >30 min since the previous
-      // event of the same user (window lag + conditional cumulative sum)
-      val w = Window.partitionBy("user_id").orderBy(col("sec").asc, col("event_id").asc)
-      t(s, dir, "events")
-        // TZ-invariant wall-clock epoch (ts is TIMESTAMP_NTZ; a cast-to-
-        // timestamp epoch would leak the session zone — VERDICT r1 item 1)
-        .withColumn("sec", TimeCols.ntzEpochSeconds(col("ts")))
-        .withColumn("prev_sec", lag(col("sec"), 1).over(w))
-        .withColumn("new_session",
-          when(col("prev_sec").isNull || col("sec") - col("prev_sec") > 1800, 1L).otherwise(0L))
-        .withColumn("session_id", sum("new_session").over(
-          w.rowsBetween(Window.unboundedPreceding, Window.currentRow)))
-        .groupBy("user_id")
-        .agg(max("session_id").as("n_sessions"), count(lit(1)).as("n_events"))
-    }),
-    "q12_rollup" -> ((s, dir) => {
-      t(s, dir, "orders")
-        .rollup(col("o_orderstatus"), col("o_orderpriority"))
-        .agg(
-          count(lit(1)).as("n"),
-          sum(round(col("o_totalprice") * 100).cast("long")).as("total_cents"),
-          grouping_id().as("gid"))
-        .select(
-          coalesce(col("o_orderstatus"), lit("<all>")).as("status"),
-          coalesce(col("o_orderpriority"), lit("<all>")).as("priority"),
-          col("n"), col("total_cents"), col("gid"))
-    }),
-    "q10_events_window" -> ((s, dir) => {
-      t(s, dir, "events")
-        .groupBy(
-          date_format(date_trunc("hour", col("ts")), "yyyy-MM-dd HH:mm:ss").as("hour"),
-          col("event_type"))
-        .agg(
-          count(lit(1)).as("n"),
-          sum(round(col("value") * 100).cast("long")).as("value_cents"))
-    }),
-
-    // ---- training-data ops over documents (builder-prompt first-class set) ----
-    "dedup_exact" -> ((s, dir) => {
-      t(s, dir, "documents")
-        .groupBy("text")
-        .agg(min("doc_id").as("keep_id"), count(lit(1)).as("n_copies"))
-        .select("keep_id", "n_copies")
-    }),
-    "cross_corpus_dedup" -> ((s, dir) => {
-      // incremental recrawl dedup: the incoming snapshot (odd docs unchanged,
-      // even docs edited) anti-checked against the base corpus on the
-      // 12-byte (xxhash64, length) key — text never crosses the shuffle
-      val docs = tp(s, dir, "documents")
-      val incoming = docs.select(
-        (col("doc_id") + graft.textops.Dedup.PlantOffset).as("doc_id"),
-        when(col("doc_id") % 2 === 1, col("text"))
-          .otherwise(concat(lit("new "), col("text"))).as("text"))
-      graft.textops.Dedup.crossCorpusNew(incoming, docs)
-    }),
-    "text_quality" -> ((s, dir) => {
-      tp(s, dir, "documents")
-        .select(
-          col("doc_id"),
-          size(split(col("text"), " ", -1)).cast("long").as("n_tokens"),
-          length(col("text")).cast("long").as("n_chars"),
-          size(filter(split(col("text"), " ", -1),
-            w => w === "the" || w === "a")).cast("long").as("n_stopwords"))
-        .withColumn("stop_ratio",
-          round(col("n_stopwords").cast("double") / col("n_tokens"), 6))
-    }),
-    "lang_token_stats" -> ((s, dir) => {
-      t(s, dir, "documents")
-        .groupBy("lang")
-        .agg(
-          count(lit(1)).as("n_docs"),
-          sum(size(split(col("text"), " ", -1)).cast("long")).as("total_tokens"),
-          min("n_chars").as("min_chars"),
-          max("n_chars").as("max_chars"))
-    }),
-    "lang_mixture" -> ((s, dir) =>
-      // multilingual temperature sampling (tau=2 -> exact integer sqrt):
-      // one lang-grain corpus agg, then 1-row totals broadcast
-      graft.textops.LangMixture.temperatureMixture(tp(s, dir, "documents"))),
-    "codeswitch_stats" -> ((s, dir) =>
-      // paragraph-grain language segmentation (code-switching audit): each
-      // doc's paragraphs live in its own row, so dominant-language election
-      // + adjacent-switch counting are ONE map stage, zero shuffle
-      graft.textops.Multilingual.codeswitchStats(
-        graft.textops.Multilingual.plantCodeSwitch(tp(s, dir, "documents")))
-        .toDF().orderBy("doc_id")),
-    "domain_pareto" -> ((s, dir) =>
-      // corpus-concentration report: token mass by registered domain with
-      // rank + cumulative share; corpus agg to domain grain, report-sized
-      // window after
-      graft.webtext.UrlOps.domainPareto(tp(s, dir, "documents")).orderBy("rnk")),
-    "token_count_regex" -> ((s, dir) => {
-      tp(s, dir, "documents").select(
-        col("doc_id"),
-        size(regexp_extract_all(col("text"), lit(graft.textops.TextHash.TokenRegex), lit(0)))
-          .cast("long").as("n_regex_tokens"))
-    }),
-    "pii_scrub" -> ((s, dir) => {
-      // PII redaction (emails + IPv4) over deterministically planted PII —
-      // map-side regexp_replace, no UDF; counts from the pre-redaction text
-      graft.textops.Curate.scrubPii(
-        graft.textops.Curate.plantPii(tp(s, dir, "documents")))
-    }),
-    "gopher_repetition" -> ((s, dir) =>
-      // the full Gopher repetition battery (top-n-gram char fraction +
-      // dup-n-gram interval-union coverage), one typed map per doc, zero
-      // shuffle; planted self-repeats on doc_id%4==0 fire the dup gates
-      graft.textops.Curate.gopherRepetition(
-        graft.textops.Curate.plantRepetition(tp(s, dir, "documents")))),
-    "gopher_quality" -> ((s, dir) => {
-      // Gopher-style quality gate in exact integer arithmetic
-      graft.textops.Curate.gopherQuality(tp(s, dir, "documents"))
-    }),
-    "repetition_stats" -> ((s, dir) => {
-      // within-document duplicate word/bigram counts (Gopher dup-fraction family)
-      graft.textops.Curate.repetitionStats(tp(s, dir, "documents"))
-    }),
-    "lm_quality" -> ((s, dir) => {
-      // CCNet-style LM filter: corpus-trained character-trigram model on the
-      // deterministic 30% slice, integer fixed-point inverse-probability
-      // surprise per doc (broadcast LM, two map-side passes)
-      graft.textops.Curate.lmQuality(tp(s, dir, "documents"))
-    }),
-    "blocklist_filter" -> ((s, dir) =>
-      // C4 badword gate: exact-token blocklist membership in one codegen'd
-      // filter() lambda — map-side, zero shuffle; any hit drops the doc,
-      // occurrence count kept for ablations
-      graft.textops.Curate.blocklistFilter(tp(s, dir, "documents"))
-        .orderBy("doc_id")),
-    "ccnet_buckets" -> ((s, dir) => {
-      // CCNet §4.4 head/middle/tail split: per-LANGUAGE score terciles via a
-      // (lang, score) histogram + cumulative window over that tiny table,
-      // cutoffs broadcast back onto the doc stream — no doc-grain sort, the
-      // corpus is LM-scored once (exchange reuse)
-      graft.textops.Curate.ccnetBuckets(tp(s, dir, "documents")).orderBy("doc_id")
-    }),
-    "entropy_quality" -> ((s, dir) =>
-      // low-entropy junk gate: character-entropy in the integer bit-length
-      // surrogate (map-side explode, char-grain partial agg, doc rollup)
-      graft.textops.Curate.entropyQuality(tp(s, dir, "documents"))),
-    "dsir_weights" -> ((s, dir) =>
-      // DSIR importance resampling: per-doc target-vs-raw trigram-LM
-      // log-ratio in the integer bit-length surrogate (broadcast LMs,
-      // map-side scoring, 1-row totals cross-join)
-      graft.textops.Curate.dsirWeights(tp(s, dir, "documents"))),
-    "dsir_select" -> ((s, dir) =>
-      // DSIR selection to an exact budget: top-k by (weight_bits, doc_id)
-      // — plans as TakeOrderedAndProject, never a global sort; rank window
-      // runs over the k survivors only
-      graft.textops.Curate.dsirSelect(tp(s, dir, "documents"))
-        .orderBy("rnk")),
-    "cusum_bursts" -> ((s, dir) =>
-      // one-sided CUSUM burst detection in closed form (prefix sum −
-      // running min, two key-grain windows — the sequential recurrence
-      // parallelizes exactly); dense hour series, adaptive integer
-      // threshold, deterministic planted spike; TZ-free via TimeCols
-      graft.events.Cusum.hourlyBursts(
-          graft.events.Cusum.plantBurst(tp(s, dir, "events")))
-        .orderBy("event_type", "bucket")),
-    "zorder_layout" -> ((s, dir) =>
-      // Morton-curve layout audit: bit-interleaved 10-bit key, 16 files =
-      // 8×8 tiles of (d1,d2) space — both filter columns prune via file
-      // min/max, unlike any single-column sort
-      graft.layout.ZOrder.layoutAudit(tp(s, dir, "documents"))
-        .orderBy("file_id")),
-    "bucketed_join" -> ((s, dir) =>
-      // co-located join via bucketed storage: both doc-grain sides written
-      // bucketBy(8, doc_id)+sortBy, joined back with ZERO shuffle exchanges
-      // (LayoutSpec plan pin) — the repeated-join layout for a corpus table
-      graft.layout.TableLayout.bucketedJoin(s, tp(s, dir, "documents"))
-        .orderBy("doc_id")),
-    "partition_prune" -> ((s, dir) =>
-      // scan-time partition pruning: corpus written partitionBy(lang), the
-      // lang predicate prunes to the matching directories before any row is
-      // read (PartitionFilters pin in LayoutSpec)
-      graft.layout.TableLayout.partitionPrunedScan(s, tp(s, dir, "documents"), "en")
-        .orderBy("doc_id")),
-    "range_join" -> ((s, dir) => {
-      // bucketized interval-containment join: quantize the time axis,
-      // explode intervals to their bucket span, equi-join points on the
-      // single bucket they live in, exact BETWEEN re-verify inside the
-      // match — the equi-join form of the range join Catalyst would
-      // otherwise nested-loop (plan-pinned)
-      val ev = tp(s, dir, "events")
-      graft.events.RangeJoin.containJoin(
-          graft.events.RangeJoin.incidentWindows(ev),
-          graft.events.RangeJoin.errorPoints(ev))
-        .orderBy("iv_id", "event_id")
-    }),
-    "range_join_rule" -> ((s, dir) => {
-      // the SAME naive BETWEEN join a user would write — planned through
-      // the injected Catalyst optimizer rule (plans.BucketedRangeJoin),
-      // which rewrites it to the bucketized equi-join; without the rule
-      // this plan is a BroadcastNestedLoopJoin (pinned in the spec)
-      if (!s.experimental.extraOptimizations.exists(_.isInstanceOf[graft.plans.BucketedRangeJoin]))
-        s.experimental.extraOptimizations =
-          s.experimental.extraOptimizations :+ graft.plans.BucketedRangeJoin()
-      val ev = tp(s, dir, "events")
-      val iv = graft.events.RangeJoin.incidentWindows(ev)
-      val pt = graft.events.RangeJoin.errorPoints(ev)
-      // plain col() refs: the two sides carry disjoint column names (df("…")
-      // refs trip DetectAmbiguousSelfJoin — both sides scan the same table)
-      iv.join(pt, col("sec") >= col("lo") && col("sec") <= col("hi"))
-        .select("iv_id", "event_id", "sec")
-        .orderBy("iv_id", "event_id")
-    }),
-    "budget_alloc" -> ((s, dir) =>
-      // largest-remainder apportionment: exact global budget across hosts,
-      // base floor shares + top-R remainders as TakeOrderedAndProject
-      graft.textops.Curate.budgetAlloc(tp(s, dir, "documents"))
-        .orderBy("host")),
-    "ppr_hosts" -> ((s, dir) =>
-      // personalized PageRank (random walk with restart at site0): rank =
-      // proximity to the seed; unreachable hosts stay exactly 0
-      graft.webtext.HostRank.pprRank(
-        graft.webtext.HostRank.hostEdges(tp(s, dir, "documents")),
-        "site0.example.com")
-        .orderBy("host")),
-    "funnel_counts" -> ((s, dir) =>
-      // ordered conversion funnel with per-step windows: user-grain
-      // filtered projections + one per-user-bounded click×view join +
-      // user-grain mins — no corpus window, no driver state; TZ-free keys
-      graft.events.Funnel.funnel(tp(s, dir, "events"))
-        .orderBy("user_id")),
-    "fuzzy_join" -> ((s, dir) => {
-      // blocked record linkage: content-derived 8-char block key turns the
-      // quadratic edit-distance matrix into an equi-join; Levenshtein
-      // verifies only inside blocks
-      val docs = tp(s, dir, "documents")
-      graft.textops.FuzzyJoin.linkTitles(
-          graft.textops.FuzzyJoin.catalogA(docs),
-          graft.textops.FuzzyJoin.catalogB(docs))
-        .orderBy("a_id", "b_id")
-    }),
-    "hyperball_reach" -> ((s, dir) =>
-      // HyperBall neighborhood function: per-host reach |ball(v,r)| as an
-      // HLL sketch, BFS round = edge-grain join + (host,register) max —
-      // linear in edges, reach-size-independent (exact column = audit only)
-      graft.webtext.HyperBall.reach(
-        graft.webtext.HostRank.hostEdges(tp(s, dir, "documents")))
-        .orderBy("host", "r")),
-    "tfidf_keywords" -> ((s, dir) => {
-      // per-doc TF-IDF top-5 keyword extraction, integer fixed-point IDF
-      // surrogate; term-keyed shuffle join (vocab not broadcast-assumed)
-      graft.textops.Keywords.tfidfTopK(tp(s, dir, "documents"))
-    }),
-    "pmi_collocations" -> ((s, dir) =>
-      // corpus PMI bigram mining in the overflow-proof bit-length surrogate:
-      // ONE explode carries both vocabularies (unigram = rollup of the
-      // (w1,w2) partial agg), term-keyed shuffle joins, top-k as TOAP
-      graft.textops.Collocations.pmiTopK(tp(s, dir, "documents"))),
-    "ngram_novelty" -> ((s, dir) =>
-      // per-doc corpus novelty in doc_id order: one explode of distinct
-      // 8-byte gram hashes, min-only window (hash shuffle + fold, no sort),
-      // doc rollup — the explode is consumed exactly once
-      graft.textops.Dedup.ngramNovelty(tp(s, dir, "documents"))),
-    "multimodal_features" -> ((s, dir) => {
-      // REAL pixel decode (VERDICT r3 item 3): complete valid PNG payloads
-      // (deflate + CRC32) -> javax.imageio batch decode -> exact integer
-      // raster statistics. The oracle recomputes every pixel from the
-      // generator formula — decode drift of a single gray level fails the hash
-      graft.textops.Multimodal.extractFeatures(
-        graft.textops.Multimodal.mediaWithPixels(tp(s, dir, "documents"))).toDF()
-    }),
-    // deterministic stratified data-mixing: host k keeps (k+1)*10% via a
-    // salted FNV bucket of the doc identity — reproducible on any engine
-    // (the oracle recomputes the hash), map-side, zero corpus shuffle
-    "sample_mixture" -> ((s, dir) => mixtureSample(s, dir)),
-    // weighted priority sampling to an exact per-host budget (E-S shape,
-    // integer fixed-point keys); WindowGroupLimit prunes to k per partition
-    // before the host shuffle
-    // dedup-safe batch scheduling: wave = rank within duplicate group
-    // (narrow hash keys), shard = salted-FNV split, batch = disjoint range
-    // per wave — two copies can never share a batch, structurally
-    "batch_schedule" -> ((s, dir) =>
-      graft.textops.BatchSchedule.dedupSafeBatches(
-          graft.textops.BatchSchedule.plantTwins(tp(s, dir, "documents")))
-        .orderBy("doc_id")),
-    // duplication-aware epoch schedule: per unique text (narrow hash key),
-    // repeat budget inversely proportional to natural multiplicity —
-    // crawl-over-represented content is not also over-trained
-    "epoch_schedule" -> ((s, dir) =>
-      graft.textops.BatchSchedule.epochSchedule(
-          graft.textops.BatchSchedule.plantCopies(tp(s, dir, "documents")))
-        .orderBy("doc_id")),
-    // leakage-proof train/test split: content-free FNV draw collapsed to
-    // the min over each exact-duplicate group — cross-split duplicate
-    // leakage impossible by construction, `moved` audits the raw hazard
-    "split_leakproof" -> ((s, dir) =>
-      graft.textops.TrainSplit.splitLeakproof(
-          graft.textops.BatchSchedule.plantTwins(tp(s, dir, "documents")))
-        .orderBy("doc_id")),
-    // exact type-1 quantiles over the bounded length domain: value-grain
-    // agg is the only corpus-scale stage; cumulative + non-equi broadcast
-    // join run on <= |domain| rows
-    "exact_quantiles" -> ((s, dir) =>
-      graft.textops.LengthStats.exactQuantiles(tp(s, dir, "documents"))
-        .orderBy("q_bp")),
-    "priority_sample" -> ((s, dir) =>
-      graft.textops.Curate.prioritySample(tp(s, dir, "documents"))
-        .orderBy("host", "rnk")),
-    "stratified_sample" -> ((s, dir) =>
-      // exact-count proportional sample: Hamilton largest-remainder
-      // apportionment over (lang x length-bucket) strata, within-stratum
-      // pick by salted-FNV variate; constant-B WindowGroupLimit cap before
-      // the per-stratum quota cut
-      graft.textops.Curate.stratifiedSample(tp(s, dir, "documents"))),
-    "mixture_manifest" -> ((s, dir) =>
-      // the mixing run's audit table: per host, how many documents existed
-      // and how many the rate kept (partial-agg rollup of sample_mixture)
-      mixtureSample(s, dir)
-        .groupBy("host")
-        .agg(count(lit(1)).as("n_docs"),
-          sum(col("keep").cast("long")).as("n_kept"))),
-    "image_phash_dedup" -> ((s, dir) =>
-      // perceptual image dedup: REAL ImageIO decode -> aHash -> Manku-key
-      // candidate join -> exact hamming; planted brightness+4 twins are
-      // different PNG bytes but near-identical perception
-      graft.textops.Multimodal.imageNearDupPairs(
-        graft.textops.Multimodal.mediaWithNearTwins(tp(s, dir, "documents")))),
-    "audio_phash_dedup" -> ((s, dir) =>
-      // perceptual audio dedup: REAL WAV chunk-walk decode -> 64-bit
-      // energy-delta-sign fingerprint -> Manku-key candidate join -> exact
-      // hamming; planted phase-inverted twins are byte-wise different
-      // payloads with bit-identical prints (gain/phase invariance)
-      graft.textops.Multimodal.audioNearDupPairs(
-        graft.textops.Multimodal.mediaWithAudioTwins(tp(s, dir, "documents")))
-        .orderBy("a", "b")),
-    "audio_features" -> ((s, dir) => {
-      // REAL audio decode: complete valid RIFF/WAVE PCM payloads parsed by
-      // chunk walk (a LIST chunk sits before data, so fixed-offset readers
-      // break), exact integer energy/peak/zero-crossing features
-      graft.textops.Multimodal.audioFeatures(
-        graft.textops.Multimodal.mediaWithAudio(tp(s, dir, "documents"))).toDF()
-    }),
-    "multimodal_resize" -> ((s, dir) => {
-      // real Graphics2D nearest-neighbor downscale, PNG re-encode, re-decode:
-      // encode -> decode -> resize -> encode -> decode, all real, with the
-      // pixel-center NN mapping recomputed by the oracle (integer-exact)
-      graft.textops.Multimodal.extractFeatures(
-        graft.textops.Multimodal.resize(
-          graft.textops.Multimodal.mediaWithPixels(tp(s, dir, "documents")))).toDF()
-    }),
-    "multimodal_dims" -> ((s, dir) => {
-      // REAL container-format decode (PNG IHDR / JPEG SOF marker walk / GIF
-      // LSD) over payloads carrying spec-conformant headers — the min-res /
-      // aspect-ratio gate a corpus pipeline runs before paying for pixels
-      graft.textops.Multimodal.decodeHeaders(
-        graft.textops.Multimodal.mediaWithHeaders(tp(s, dir, "documents"))).toDF()
-    }),
-
-    // ---- dedup / similarity / ANN (every query below is fully oracle-checked;
-    // ScalaTest adds recall/content properties on top) ----
-    "url_normalize" -> ((s, dir) => {
-      // crawl-url canonicalization (case folding, www./default-port strip,
-      // fragment drop, tracking-param removal) over planted messy urls —
-      // the canonical key URL-exact dedup and host blocklists run on
-      graft.webtext.UrlOps.withNormalized(
-        graft.webtext.UrlOps.plantMessyUrls(tp(s, dir, "documents")))
-        .select("doc_id", "url_norm", "host")
-    }),
-    "url_normalize_sql_expr" -> ((s, dir) => {
-      // codegen Catalyst-Expression twin of url_normalize (same static
-      // methods, SQL-registered) — no ScalaUDF boundary, WholeStageCodegen
-      graft.expr.UrlNormalizeExpr.register(s)
-      graft.webtext.UrlOps.plantMessyUrls(tp(s, dir, "documents"))
-        .createOrReplaceTempView("graft_urls_tmp")
-      // url_host takes the NORMALIZED url: the repeated url_normalize(url)
-      // subtree is evaluated once by codegen subexpression elimination
-      s.sql("""SELECT doc_id, url_normalize(url) AS url_norm,
-              |       url_host(url_normalize(url)) AS host
-              |FROM graft_urls_tmp""".stripMargin)
-    }),
-    "host_prefix_trim" -> ((s, dir) => {
-      // per-host banner prefixes (planted on hosts 0-3) trimmed via the
-      // min/max-lexicographic LCP identity — one host-grain agg, no pairs
-      val d = tp(s, dir, "documents")
-      val corpus = d.select(col("doc_id"),
-        concat(lit("site"), (col("doc_id") % 7).cast("string"), lit(".example.com")).as("host"),
-        when(col("doc_id") % 7 < 4,
-          concat(lit("WELCOME TO SITE"), (col("doc_id") % 7).cast("string"),
-            lit(" NAV HOME | "), col("text"))).otherwise(col("text")).as("text"))
-      graft.webtext.Templates.prefixTrim(corpus)
-    }),
-    "mirror_hosts" -> ((s, dir) => {
-      // mirror-host detection: planted full mirror of site3 must pair, the
-      // partial mirror of site5 (docs with doc_id%35==5 missing) must NOT
-      val d = tp(s, dir, "documents")
-      val base = d.select(
-        concat(lit("site"), (col("doc_id") % 7).cast("string"), lit(".example.com")).as("host"),
-        col("text"))
-      val mirror = d.filter(col("doc_id") % 7 === 3)
-        .select(lit("mirror3.example.com").as("host"), col("text"))
-      val partial = d.filter(col("doc_id") % 7 === 5 && col("doc_id") % 35 =!= 5)
-        .select(lit("partial5.example.com").as("host"), col("text"))
-      graft.webtext.Mirrors.mirrorHosts(base.unionByName(mirror).unionByName(partial))
-    }),
-    "host_stats" -> ((s, dir) => {
-      // host-grain rollup on the canonical host: docs + content chars per host
-      graft.webtext.UrlOps.hostStats(
-        graft.webtext.UrlOps.plantMessyUrls(tp(s, dir, "documents")), "text")
-    }),
-    // eTLD+1 extraction (public-suffix longest match, prevailing-rule
-    // fallback, private registries, IPv4/single-label edge cases) — pure
-    // builtin when-chain + anchored regexp, map-side codegen, no UDF
-    "registered_domain" -> ((s, dir) =>
-      graft.webtext.UrlOps.withRegisteredDomain(
-          graft.webtext.UrlOps.plantHosts(tp(s, dir, "documents")))
-        .select("doc_id", "host", "suffix", "registered_domain")
-        .orderBy("doc_id")),
-    "decontaminate" -> ((s, dir) => {
-      // 13-gram eval-set overlap (GPT-3/PaLM decontamination): eval set =
-      // every doc_id % 41 == 0 document's first 13-gram, broadcast; one
-      // map-side pass over the corpus, zero shuffle
-      val docs = tp(s, dir, "documents")
-      graft.textops.Curate.contamination(docs, docs.filter(col("doc_id") % 41 === 0))
-    }),
-    "contamination_spans" -> ((s, dir) => {
-      // span-level decontamination: exact char ranges of eval 13-gram leaks
-      // (merged via the sorted-gap identity), the surgical alternative to
-      // dropping whole docs. Planted eval-head leak on doc_id%7==3 gives the
-      // corpus genuine cross-document contamination. Broadcast eval grams,
-      // one map-side pass, zero shuffle.
-      val docs = tp(s, dir, "documents")
-      val eval = docs.filter(col("doc_id") % 41 === 0)
-      graft.textops.Curate.contaminationSpans(
-        graft.textops.Curate.plantEvalLeak(docs, eval), eval)
-    }),
-    "decontaminate_neardup" -> ((s, dir) => {
-      // paraphrase-tier decontamination: word-bigram-shingle Jaccard >= 4/5
-      // vs any eval doc (broadcast eval shingle sets, exact-safe size
-      // screen, zero corpus shuffle); planted near-copies on doc_id%7==6
-      val docs = tp(s, dir, "documents")
-      val eval = docs.filter(col("doc_id") % 41 === 0)
-      graft.textops.Curate.decontaminateNearDup(
-        graft.textops.Curate.plantEvalNearDup(docs, eval), eval)
-        .orderBy("doc_id")
-    }),
-    "decontaminate_fold" -> ((s, dir) => {
-      // case/punct-insensitive decontamination (the GPT-3 normalization):
-      // catches the planted mangled-leak class (doc_id%7==5, uppercased +
-      // comma-joined eval heads) that exact gram matching misses
-      val docs = tp(s, dir, "documents")
-      val eval = docs.filter(col("doc_id") % 41 === 0)
-      graft.textops.Curate.contaminationFolded(
-        graft.textops.Curate.plantMangledLeak(docs, eval), eval)
-        .orderBy("doc_id")
-    }),
-    "eval_leak_report" -> ((s, dir) => {
-      // inverse decontamination: rank EVAL items by corpus leakage of their
-      // head 13-gram (planted cross-doc leaks on doc_id%7==3); hit rows are
-      // leak-sized, membership tested inside the corpus scan
-      val docs = tp(s, dir, "documents")
-      val eval = docs.filter(col("doc_id") % 41 === 0)
-      graft.textops.Curate.evalLeakReport(
-        graft.textops.Curate.plantEvalLeak(docs, eval), eval)
-        .orderBy("eval_doc_id")
-    }),
-    "decontaminate_bloom" -> ((s, dir) => {
-      // the 100 TB broadcast form of decontaminate: eval grams ride a Bloom
-      // sketch (treeAggregate-built, ~3.6 B/gram) instead of an exact string
-      // set. The bit layout is deterministic, so the flags are too; the
-      // oracle is the EXACT overlap, which means green ALSO pins "zero false
-      // positives at this capacity/fpp on this corpus" — the no-false-
-      // negative guarantee makes any mismatch a widened flag, never a lost
-      // one, and the ScalaTest property bounds the widening separately
-      val docs = tp(s, dir, "documents")
-      graft.textops.Curate.contaminationBloom(docs, docs.filter(col("doc_id") % 41 === 0))
-    }),
-    "corpus_pipeline" -> ((s, dir) => {
-      // the full FineWeb-style curation pipeline as ONE composition of
-      // already-oracle-checked operators: canonical-URL dedup -> C4 line
-      // dedup -> Gopher quality gate -> 13-gram decontamination -> near-dup
-      // cluster representative. Every stage shrinks the corpus before the
-      // next (the expensive near-dup step sees only quality survivors).
-      val docs = tp(s, dir, "documents")
-      // urls planted to collide on doc_id % 250 (re-crawled pages)
-      val withUrls = docs.select(col("doc_id"), col("text"),
-        concat(lit("HTTPS://WWW.Dup.Example.com/p"), (col("doc_id") % 250).cast("string"),
-          lit("?utm_source=x")).as("url"))
-      val keep1 = graft.webtext.UrlOps.withNormalized(withUrls)
-        .groupBy("url_norm").agg(min("doc_id").as("doc_id"))
-      val stage1 = docs.join(keep1.select("doc_id"), "doc_id")
-      // Stage boundaries MATERIALIZE (eager localCheckpoint): `cleaned` feeds
-      // four downstream branches (quality gate, stage3 join, stage4's
-      // clean_text, the near-dup input) and `stage4` feeds two — without the
-      // checkpoint each branch re-evaluates the whole upstream subtree (the
-      // projections differ, so ReuseExchange can't dedup them; measured 21 s
-      // -> 5 s warm at sf0.1). This is the production shape anyway: a real
-      // pipeline persists each stage's survivors before the next, and the
-      // blocks are GC-collectable once the returned frame is dropped.
-      val cleaned = graft.textops.Dedup.lineDedup(
-        graft.textops.Dedup.plantBoilerplate(stage1.select("doc_id", "text")), minCount = 3)
-        .localCheckpoint(true)
-      val quality = graft.textops.Curate.gopherQuality(
-          cleaned.select(col("doc_id"), col("clean_text").as("text")))
-        .filter(col("keep") === 1)
-        .select(col("doc_id"), col("n_words"))
-      val stage3 = cleaned.join(quality, "doc_id")
-      val decon = graft.textops.Curate.contamination(
-          stage3.select(col("doc_id"), col("clean_text").as("text")),
-          docs.filter(col("doc_id") % 41 === 0))
-        .filter(!col("contaminated")).select("doc_id")
-      val stage4 = stage3.join(decon, "doc_id").localCheckpoint(true)
-      val clusters = graft.textops.Dedup.neardupClusters(
-        stage4.select(col("doc_id"), col("clean_text").as("text")))
-      stage4.join(clusters, "doc_id")
-        .filter(col("cluster_id") === col("doc_id"))
-        .select("doc_id", "n_words")
-    }),
-    "line_dedup" -> ((s, dir) => {
-      // C4-style corpus-frequency line removal: a constant boilerplate line
-      // planted into every document must vanish; lines repeated across >= 3
-      // docs go with it; each doc reassembles from its surviving lines
-      graft.textops.Dedup.lineDedup(
-        graft.textops.Dedup.plantBoilerplate(tp(s, dir, "documents")), minCount = 3)
-    }),
-    "minhash_neardup" -> ((s, dir) => {
-      graft.textops.Dedup.minhashPairs(
-        graft.textops.Dedup.planted(tp(s, dir, "documents")))
-    }),
-    "host_lang_audit" -> ((s, dir) =>
-      // can this domain's declared language label be trusted? per host:
-      // detected-vs-declared mismatch count + majority detected language;
-      // corpus shuffles once, as (host, lang) counts
-      graft.textops.Multilingual.hostLangAudit(tp(s, dir, "documents"))),
-    "shard_checksum" -> ((s, dir) =>
-      // post-movement integrity audit: per-shard row/byte counts + an
-      // order-invariant XOR-of-FNV content checksum (partial-merge-safe, so
-      // any layout of the same logical shard agrees)
-      graft.textops.Integrity.shardChecksums(tp(s, dir, "documents"))),
-    "cross_corpus_neardup" -> ((s, dir) => {
-      // recrawl near-dup gate: light edits of base-corpus content must not
-      // pass just because their exact hash changed; verdict per incoming doc
-      // (is_neardup + smallest qualifying base id), linear in the snapshot
-      val base = tp(s, dir, "documents")
-      graft.textops.Dedup.crossCorpusNearDup(
-        graft.textops.Dedup.crossSnapshot(base), base)
-    }),
-    "oph_minhash" -> ((s, dir) => {
-      // one-permutation-hashing twin of minhash_neardup: same planted corpus,
-      // same rational threshold, same exact-pairs oracle — candidates come
-      // from ONE mixed hash per shingle (64x cheaper signatures map-side)
-      // densified per Shrivastava & Li; completeness on this fixture is
-      // verified in tools/oph_oracle_check.py (600/600 exact pairs caught)
-      graft.textops.Dedup.ophPairs(
-        graft.textops.Dedup.planted(tp(s, dir, "documents")))
-    }),
-    "simhash_neardup" -> ((s, dir) => {
-      // maxHamming = 3 is the guaranteed-recall regime: Manku 3-of-6-block
-      // keys (TextHash.simHashKeys) make any pair within hamming distance 3
-      // share at least one key (pigeonhole over 6 blocks), so the candidate
-      // join is lossless and the output equals all-pairs hamming<=3 — which
-      // the DuckDB oracle recomputes bit-for-bit (FNV-1a + sign-bit majority
-      // in SQL). Key space is ~2^30 per table, so bucket occupancy stays
-      // linear at web scale. Wider radii trade recall for cost and are
-      // covered by the ScalaTest recall property.
-      graft.textops.Dedup.simhashPairs(
-        graft.textops.Dedup.plantedTail(tp(s, dir, "documents")), maxHamming = 3)
-    }),
-    "ngram_jaccard" -> ((s, dir) => {
-      graft.textops.Dedup.ngramJaccardPairs(
-        graft.textops.Dedup.planted(tp(s, dir, "documents")))
-    }),
-    "corpus_filter" -> ((s, dir) => {
-      // the flagship training-data composition: language-ID + token-count
-      // quality gate + near-dup cluster representative (keep the min doc_id
-      // of each >= 0.8-Jaccard component) -> the clean corpus, one row per
-      // kept document. Every stage is an already-oracle-checked operator.
-      import s.implicits._
-      val docs = tp(s, dir, "documents")
-      val lang = docs.select("doc_id", "text").as[(Long, String)]
-        .map { case (id, text) =>
-          val (l, _, n) = graft.textops.TextHash.langIdDetail(text)
-          (id, l, n)
-        }.toDF("doc_id", "lang_pred", "n_tokens")
-      val clusters = graft.textops.Dedup.neardupClusters(docs)
-      docs.select("doc_id")
-        .join(lang, "doc_id")
-        .join(clusters, "doc_id")
-        .filter(col("n_tokens") >= 20 && col("lang_pred") =!= "und" &&
-          col("cluster_id") === col("doc_id"))
-        .select("doc_id", "lang_pred", "n_tokens", "cluster_id")
-    }),
-    "neardup_clusters" -> ((s, dir) => {
-      // connected components over the near-dup graph: cluster_id = min doc_id
-      // reachable via >= 0.8-Jaccard pairs (min-label propagation to fixpoint)
-      graft.textops.Dedup.neardupClusters(
-        graft.textops.Dedup.planted(tp(s, dir, "documents")))
-    }),
-    "cluster_canonical" -> ((s, dir) =>
-      // canonical-document election per near-dup cluster: best stop-ratio
-      // score wins (ties to lowest doc_id) — the keep-best-version curation
-      // decision, NOT first-crawled-wins; one cluster-grain max(struct) agg,
-      // no window, no text past the scan
-      graft.textops.Dedup.clusterCanonical(
-          graft.textops.Dedup.planted(tp(s, dir, "documents")))
-        .orderBy("cluster_id")),
-    "embedding_neardup" -> ((s, dir) => {
-      graft.textops.Ann.nearDupPairs(
-        graft.textops.Ann.plantedEmbeddings(tp(s, dir, "embeddings")), threshold = 0.999)
-    }),
-    // model-based quality filter (FineWeb-Edu/DCLM stage): NB probability
-    // voting over hashed word buckets + length-bin evidence, trained in ONE
-    // distributed agg pass on the 30% slice, broadcast model, map-side score
-    "quality_classifier" -> ((s, dir) =>
-      graft.textops.QualityModel.nbQuality(tp(s, dir, "documents"))),
-    // SemDeDup cluster-then-prune semantic dedup over planted one-dim-zeroed
-    // near-twins (not bit-identical — exact/bit-exact dedup both miss them);
-    // every drop decision is integer fixed-point, recomputed by the oracle
-    "semantic_dedup" -> ((s, dir) => {
-      val emb = tp(s, dir, "embeddings")
-      graft.textops.Ann.semanticDedup(graft.textops.Ann.plantedSemantic(emb))
-    }),
-    "ann_bruteforce" -> ((s, dir) => {
-      val emb = tp(s, dir, "embeddings")
-      val queries = emb.orderBy("vec_id").limit(5).collect()
-        .map(r => r.getLong(0) -> r.getSeq[Float](1).toArray).toMap
-      graft.textops.Ann.bruteForceTopK(emb, queries, k = 5)
-    }),
-    "contrastive_pairs" -> ((s, dir) => {
-      // hard-negative mining over the twin-planted corpus: rank-1 non-dup =
-      // positive, next 5 = hard negatives; anchor near-dups (the planted
-      // exact twins) excluded by the integer rational cosine and reported
-      // as role='dup' audit rows
-      val emb = graft.textops.Ann.plantedEmbeddings(tp(s, dir, "embeddings"))
-      val anchors = emb.orderBy("vec_id").limit(5).collect()
-        .map(r => r.getLong(0) -> r.getSeq[Float](1).toArray).toMap
-      graft.textops.Ann.hardNegatives(emb, anchors, k = 6)
-        .orderBy("query_id", "rank", "neighbor_id")
-    }),
-    // ANN LSH/IVF stay genuinely approximate; the oracle recomputes the SAME
-    // approximate algorithm bit-for-bit (integer fixed-point bucketing /
-    // assignment — see Ann scaladoc) and the `hit` flag is the recall join
-    // against brute force (VERDICT r1 item 2)
-    "ann_lsh" -> ((s, dir) => {
-      val emb = tp(s, dir, "embeddings")
-      val queries = emb.orderBy("vec_id").limit(5).collect()
-        .map(r => r.getLong(0) -> r.getSeq[Float](1).toArray).toMap
-      graft.textops.Ann.withBruteForceHits(
-        graft.textops.Ann.lshTopK(emb, queries, k = 5), emb, queries, k = 5)
-    }),
-    "ann_ivf" -> ((s, dir) => {
-      val emb = tp(s, dir, "embeddings")
-      val queries = emb.orderBy("vec_id").limit(5).collect()
-        .map(r => r.getLong(0) -> r.getSeq[Float](1).toArray).toMap
-      graft.textops.Ann.withBruteForceHits(
-        graft.textops.Ann.ivfTopK(emb, queries, k = 5), emb, queries, k = 5)
-    }),
-    "cluster_balanced_sample" -> ((s, dir) =>
-      // topic-balanced sampling: IVF-cell assignment (integer fixed-point)
-      // + Hamilton-exact per-cell quotas + FNV-salted within-cell priority;
-      // the diversity counterpart of quality-ranked selection
-      graft.textops.Ann.clusterBalancedSample(tp(s, dir, "embeddings"))
-        .orderBy("vec_id")),
-    "pq_codes" -> ((s, dir) =>
-      // product quantization code table: 16 subspaces × 64 codes over the
-      // fixed-point vectors (codebook = bounded id-stride sample, broadcast;
-      // assignment map-side, zero shuffles). 256 B float vector -> 16 codes.
-      graft.textops.Ann.pqCodes(tp(s, dir, "embeddings"))),
-    "ann_ivfpq" -> ((s, dir) => {
-      // IVF-PQ composition (the production 10^12-vector layout): coarse
-      // lists prune the corpus to ~nprobe/nlist, ADC reads 16 code bytes per
-      // surviving vector — multiplicative pruning x compression. hit =
-      // exact integer-L2 brute-force membership (recall audit).
-      val emb = tp(s, dir, "embeddings")
-      val queries = emb.orderBy("vec_id").limit(5).collect()
-        .map(r => r.getLong(0) -> r.getSeq[Float](1).toArray).toMap
-      graft.textops.Ann.withPqHits(
-        graft.textops.Ann.ivfPqTopK(emb, queries, k = 5), emb, queries, k = 5)
-    }),
-    "ann_pq" -> ((s, dir) => {
-      // PQ asymmetric-distance ANN: per-query 16×64 integer LUT broadcast;
-      // the scan scores vectors by summing table lookups over their codes —
-      // reads 16 code bytes/vec, never the raw embedding. hit = membership
-      // in the exact integer-L2 brute-force top-k (the recall audit).
-      val emb = tp(s, dir, "embeddings")
-      val queries = emb.orderBy("vec_id").limit(5).collect()
-        .map(r => r.getLong(0) -> r.getSeq[Float](1).toArray).toMap
-      graft.textops.Ann.withPqHits(
-        graft.textops.Ann.pqTopK(emb, queries, k = 5), emb, queries, k = 5)
-    }),
-    "multimodal_frames" -> ((s, dir) => {
-      // REAL frame extraction: video-like payloads (concatenated complete
-      // PNGs) split on parsed container boundaries, every 2nd frame kept,
-      // each sampled frame ImageIO-decoded for its exact pixel sum
-      graft.textops.Multimodal.frameFeatures(
-        graft.textops.Multimodal.frameSample(
-          graft.textops.Multimodal.mediaWithFrames(tp(s, dir, "documents")))).toDF()
-        .groupBy("doc_id")
-        .agg(count(lit(1)).as("n_frames"), max("frame_idx").as("last_frame"),
-          sum("px_sum").as("px_sum"))
-    }),
-    // ---- HTML main-content extraction (north_rule: boilerplate strip, DOM
-    // heuristics). documents -> deterministic boilerplate-wrapped HTML pages
-    // -> parse + readability-style block scoring -> paragraph text. The
-    // oracle is byte-identity: the recovered main text must equal the
-    // original document text re-chunked into 24-word paragraphs. ----
-    "html_main_content" -> ((s, dir) => {
-      graft.webtext.WebText.mainContent(
-        graft.webtext.WebText.htmlPages(tp(s, dir, "documents")).toDF()).toDF()
-    }),
-    "html_main_sql_expr" -> ((s, dir) => {
-      // codegen'd Catalyst Expression twin of html_main_content: the whole
-      // scan -> boilerplate-strip pipeline stays inside WholeStageCodegen
-      graft.expr.HtmlMainTextExpr.register(s)
-      graft.webtext.WebText.htmlPages(tp(s, dir, "documents")).toDF()
-        .createOrReplaceTempView("graft_html_pages_tmp")
-      s.sql("SELECT url, html_main_text(html) AS extracted_text FROM graft_html_pages_tmp")
-    }),
-    "html_block_stats" -> ((s, dir) => {
-      graft.webtext.WebText.blockStats(
-        graft.webtext.WebText.htmlPages(tp(s, dir, "documents")).toDF()).toDF()
-    }),
-    "html_to_markdown" -> ((s, dir) => {
-      // boilerplate strip + Markdown re-serialization of the main block:
-      // headings/paragraph structure and inline emphasis/links preserved.
-      // Byte-identity oracle: the render is reconstructible from the
-      // generator's paragraph arithmetic (bold first word when p%3==1,
-      // trailing [last](/w/id/p) link when p%3==2).
-      graft.webtext.WebText.mainMarkdown(
-        graft.webtext.WebText.htmlPages(tp(s, dir, "documents")).toDF()).toDF()
-    }),
-    "paragraph_spans" -> ((s, dir) => {
-      // span-level addressing into the extracted main text (north_rule:
-      // "extracted text/spans per document"): per-paragraph [start, end)
-      // char offsets such that extract(html).substring(start, end) is the
-      // paragraph. Map-side flatMap, no shuffle.
-      graft.webtext.WebText.paragraphSpans(
-        graft.webtext.WebText.htmlPages(tp(s, dir, "documents")).toDF()).toDF()
-    }),
-    "paragraph_dedup" -> ((s, dir) =>
-      // corpus exact-paragraph dedup AUDIT (RefinedWeb grain) at span
-      // addressing: first-occurrence flag + copy count per paragraph span.
-      // Paragraph text never crosses a shuffle (8-byte phash only).
-      graft.webtext.WebText.paragraphDedup(
-        graft.webtext.WebText.htmlPages(tp(s, dir, "documents")).toDF())),
-    "paragraph_dedup_clean" -> ((s, dir) =>
-      // corpus paragraph dedup APPLIED: pages re-emitted with non-first
-      // duplicate paragraphs cut; fully-duplicate pages drop out. Text moves
-      // exactly twice (phash window, url regroup) — the RefinedWeb plan.
-      graft.webtext.WebText.paragraphDedupClean(
-        graft.webtext.WebText.htmlPages(tp(s, dir, "documents")).toDF())),
-    "warc_extract" -> ((s, dir) => {
-      // the Common-Crawl ingestion edge: deterministic WARC segment blobs ->
-      // record-boundary walk -> boilerplate strip; must be byte-identical to
-      // reading the pages table directly, so it shares html_main_content's
-      // oracle
-      graft.webtext.Warc.extractFromSegments(
-        graft.webtext.Warc.segmentsFromDocuments(tp(s, dir, "documents"))).toDF()
-    }),
-    "wet_extract" -> ((s, dir) =>
-      // WARC -> WET conversion segments (the .warc.wet derived artifact) ->
-      // read BACK with the same walker: one fused parse+extract+re-emit pass
-      // per segment, no shuffle; dates ride as ISO strings end-to-end
-      graft.webtext.Warc.wetParse(
-        graft.webtext.Warc.wetSegments(
-          graft.webtext.Warc.segmentsFromDocuments(tp(s, dir, "documents"))))
-        .toDF().orderBy("url")),
-    "cdx_index" -> ((s, dir) =>
-      // CDX capture index (the Common-Crawl index artifact): per-record byte
-      // offset + total length inside its WARC segment, so a fetcher can
-      // range-read one record. Map-side walk, records-sized output, page
-      // bytes never materialized. Oracle rebuilds every offset from the
-      // generator's closed-form page-length arithmetic.
-      graft.webtext.Warc.cdxIndex(
-        graft.webtext.Warc.segmentsFromDocuments(tp(s, dir, "documents"))).toDF()),
-    "warc_stats" -> ((s, dir) => {
-      // per-segment ingestion audit: record count, first target URI, earliest
-      // WARC-Date (ISO strings end-to-end — TZ-free by construction)
-      graft.webtext.Warc.parse(
-        graft.webtext.Warc.segmentsFromDocuments(tp(s, dir, "documents"))).toDF()
-        .groupBy("segment_id")
-        .agg(count(lit(1)).as("n_records"), min("url").as("first_url"),
-          min("warc_date").as("min_date"))
-    }),
-    "html_links" -> ((s, dir) => {
-      // link-graph extraction: every anchor in pre-order with its raw href,
-      // absolute resolved target, decoded anchor text, and main-block
-      // membership. Map-side flatMap, no shuffle.
-      graft.webtext.WebText.pageLinks(
-        graft.webtext.WebText.htmlPages(tp(s, dir, "documents")).toDF()).toDF()
-    }),
-    // structured web-table mining (WDC-style): one row per td/th cell with
-    // table/row/col addressing + header flag, entities decoded; fused
-    // map-side parse->emit, cell rows shrink the corpus before downstream
-    "html_tables" -> ((s, dir) =>
-      graft.webtext.WebText.tableCells(
-          graft.webtext.WebText.tablePages(tp(s, dir, "documents")).toDF()).toDF()
-        .orderBy("url", "table_idx", "row_idx", "col_idx")),
-    "microdata_items" -> ((s, dir) =>
-      // attribute-level schema.org mining: nearest-ancestor itemscope
-      // property walk, nested Person scopes as values, decoy scopes skipped
-      graft.webtext.Microdata.articles(
-        graft.webtext.WebText.microdataPages(tp(s, dir, "documents")).toDF()).toDF()),
-    "hreflang_clusters" -> ((s, dir) => {
-      // translation-family mining: hreflang alternate links -> family rows
-      // (cluster = min href, x-default routing hints and malformed links
-      // excluded); family key computed inside the per-page flatMap, shuffles
-      // touch only family-grain rows
-      graft.webtext.Hreflang.clusters(
-        graft.webtext.WebText.hreflangPages(tp(s, dir, "documents")).toDF())
-    }),
-    "bitext_mine" -> ((s, dir) => {
-      // parallel-corpus mining: sentence-segment both sides of a translation
-      // family, align on (doc_id, sent_idx), gate on the integer Gale-Church
-      // length-ratio prior 13/10 (truncated pseudo-translations must fail)
-      val docs = tp(s, dir, "documents")
-      graft.textops.Bitext.alignByIndex(
-        graft.textops.Bitext.segmentWords(docs),
-        graft.textops.Bitext.pseudoTranslated(docs))
-    }),
-    "link_targets_top" -> ((s, dir) => {
-      // cross-corpus target popularity (the frontier/blocklist rollup over
-      // the exploded link table): partial-agg on href, then top-k — plans as
-      // TakeOrderedAndProject, no global sort materialization
-      graft.webtext.WebText.pageLinks(
-        graft.webtext.WebText.htmlPages(tp(s, dir, "documents")).toDF())
-        .groupBy("href").agg(count(lit(1)).as("n_docs"))
-        .orderBy(desc("n_docs"), asc("href")).limit(20)
-    }),
-    "anchor_text_agg" -> ((s, dir) => {
-      // anchor-text mining: top-3 terms per cross-document target (citation
-      // floor >= 2 distinct pages) — target description by inbound anchors
-      graft.webtext.WebText.anchorTextAgg(
-        graft.webtext.WebText.pageLinks(
-          graft.webtext.WebText.htmlPages(tp(s, dir, "documents")).toDF()).toDF())
-    }),
-    "crawl_delta" -> ((s, dir) => {
-      // recrawl snapshot diff: narrow (xxhash64, length) content keys into a
-      // co-partitioned full-outer join; added/removed/changed/unchanged
-      val a = tp(s, dir, "documents")
-      graft.webtext.Recrawl.delta(a, graft.webtext.Recrawl.snapshotB(a))
-    }),
-    "kmv_overlap" -> ((s, dir) => {
-      // the MONITORING twin of crawl_delta: snapshot overlap (union /
-      // intersection / Jaccard) estimated from two 2 KB KMV sketches instead
-      // of the corpus-grain join; sketch + estimates are integer-exact so
-      // the oracle recomputes them bit-for-bit, exact counts ride along
-      val docs = tp(s, dir, "documents")
-      graft.webtext.SnapshotOverlap.overlap(
-        graft.webtext.SnapshotOverlap.stateKeysA(docs),
-        graft.webtext.SnapshotOverlap.stateKeysB(docs))
-    }),
-    // SCD2 capture history: validity intervals [valid_from, valid_to) per
-    // (url, version) via one lead() window over the capture log — the batch
-    // materialization of the as-of lookup
-    "scd2_history" -> ((s, dir) =>
-      graft.webtext.Recrawl.scd2(
-          graft.webtext.AsofJoin.plantSnapshots(tp(s, dir, "documents")))
-        .orderBy("k", "version")),
-    // adaptive recrawl scheduling: observed mean change interval (trunc
-    // division) clamped to [2h, 24h] -> next_fetch + hot/warm/cold/unseen
-    // tier; one narrow (k,t) hash agg, everything after is codegen arithmetic
-    "recrawl_interval" -> ((s, dir) =>
-      graft.webtext.Recrawl.recrawlIntervals(
-          graft.webtext.Recrawl.plantCaptures(tp(s, dir, "documents")))
-        .orderBy("k")),
-    "host_rank" -> ((s, dir) => {
-      // damped PageRank over the synthetic host graph, 3 fixed iterations in
-      // integer fixed-point (rank scaled 10^6, basis-point damping) so the
-      // oracle's unrolled CTEs recompute it bit-for-bit. tp(): the edge
-      // synthesis + partial count run pre-shuffle in the scan stage.
-      graft.webtext.HostRank.rank(
-        graft.webtext.HostRank.hostEdges(tp(s, dir, "documents")))
-        .orderBy("host")
-    }),
-    "host_rank_converged" -> ((s, dir) => {
-      // convergence-stopped PageRank (VERDICT r4 stretch 7): iterate to the
-      // exact trunc-division fixed point, witnessed by a host-grain
-      // zero-delta join per round, instead of a pinned round count. The
-      // oracle stays sf-agnostic because a fixed point is invariant under
-      // further iteration (it unrolls 40 >= the measured 28-29 rounds).
-      graft.webtext.HostRank.rankConverged(
-        graft.webtext.HostRank.hostEdges(tp(s, dir, "documents")))
-        .orderBy("host")
-    }),
-    "host_triangles" -> ((s, dir) =>
-      // triangle counts + local clustering coefficients via degree-ordered
-      // orientation (Suri-Vassilvitskii): wedges only at oriented
-      // out-neighbors, closed against the oriented edge set — each triangle
-      // once, wedge cost bounded by sum out-deg^2 with out-deg = O(sqrt m)
-      graft.webtext.Triangles.hostTriangles(
-        graft.webtext.HostRank.hostEdges(tp(s, dir, "documents")))
-        .orderBy("host")),
-    "kcore_hosts" -> ((s, dir) =>
-      // k-core peeling to the fixed point (Seidman): per round drop hosts
-      // with induced degree < k — link farms peel out, interlinked
-      // communities survive; edge-grain semi-joins, per-round localCheckpoint
-      graft.webtext.KCore.kcoreHosts(
-        graft.webtext.HostRank.hostEdges(tp(s, dir, "documents")))
-        .orderBy("host")),
-    "cocitation_hosts" -> ((s, dir) =>
-      // co-citation similarity (Small/Dean-Henzinger): exact Jaccard of two
-      // hosts' citing sets in basis points — pair generator fans out on the
-      // CITING side only (out-degree-bounded wedges, popular targets free)
-      graft.webtext.Cocite.cocitationPairs(
-        graft.webtext.HostRank.hostEdges(tp(s, dir, "documents")))
-        .orderBy("h1", "h2")),
-    "hits_scores" -> ((s, dir) =>
-      // HITS hubs/authorities over the same host graph, 3 rounds of integer
-      // fixed-point with max-norm renormalization — the link-farm/authority
-      // separator PageRank can't provide; unrolled-CTE oracle bit-for-bit
-      graft.webtext.Hits.hubsAuths(
-        graft.webtext.HostRank.hostEdges(tp(s, dir, "documents")))
-        .orderBy("host")),
-    "crawl_budget" -> ((s, dir) => {
-      // rank-proportional fetch-slot allocation composed on host_rank's
-      // fixed-point output: budget = (rank * 10^6) div sum(rank); the 1-row
-      // global sum is broadcast onto the host-grain table (no big-side
-      // shuffle, one map stage after rank() converges)
-      graft.webtext.HostRank.crawlBudget(
-        graft.webtext.HostRank.rank(
-          graft.webtext.HostRank.hostEdges(tp(s, dir, "documents"))))
-        .orderBy("host")
-    }),
-    "reciprocal_links" -> ((s, dir) =>
-      // link-farm detection: host pairs linking BOTH ways — the edge table
-      // split by canonical order and equi-joined on the pair key (edge-grain
-      // in, pair-grain out; never a host product)
-      graft.webtext.HostRank.reciprocalLinks(
-        graft.webtext.HostRank.hostEdges(tp(s, dir, "documents")))
-        .orderBy("host_a", "host_b")),
-    "quality_ensemble" -> ((s, dir) => qualityEnsemble(s, dir).orderBy("doc_id")),
-    "quality_mixture" -> ((s, dir) => {
-      // DCLM-style tiered sampling: keep rate scales with the number of
-      // ensemble gates passed (tier 0..3 -> 10/40/70/100% in bp), bucket by
-      // the salted-FNV doc identity (the sample_mixture contract) — the
-      // quality-weighted downsampling stage, fully reproducible
-      import s.implicits._
-      qualityEnsemble(s, dir)
-        .select(col("doc_id"),
-          (col("g_gopher") + col("g_rep") + col("g_lm")).as("tier"))
-        .as[(Long, Long)]
-        .map { case (id, tier) =>
-          val bucket =
-            java.lang.Long.remainderUnsigned(graft.textops.TextHash.fnv64(s"qmix:$id"), 10000L)
-          (id, tier, bucket, if (bucket < 1000L + tier * 3000L) 1L else 0L)
-        }
-        .toDF("doc_id", "tier", "bucket", "keep")
-    }),
-    "sitemap_urls" -> ((s, dir) => {
-      // sitemap discovery: per-host blobs (even hosts behind a sitemapindex
-      // of two parity shards, odd hosts flat) -> StAX parse -> url rows with
-      // freshness hints; priority carried as basis points, never a float
-      graft.webtext.Sitemap.urlRows(
-        graft.webtext.Sitemap.plantSitemaps(tp(s, dir, "documents")))
-        .orderBy("loc")
-    }),
-    // schema.org JSON-LD Article mining: raw script-span scan (DOM drops
-    // script bodies by design) + minimal recursive-descent JSON parse with
-    // raw-string numbers; decoys/malformed blocks skipped, absent-block
-    // pages yield no row. Map-side, zero shuffles.
-    "jsonld_articles" -> ((s, dir) =>
-      graft.webtext.JsonLd.articles(tp(s, dir, "documents")).toDF()
-        .orderBy("doc_id")),
-    // syndication-feed parsing: one StAX pass handles RSS 2.0 AND Atom
-    // (fixture alternates by parity), items ≪ feed bytes, map-side flatMap
-    "feed_items" -> ((s, dir) =>
-      graft.webtext.Feeds.items(
-          graft.webtext.Feeds.plantFeeds(tp(s, dir, "documents"))).toDF()
-        .orderBy("doc_id", "item_idx")),
-    // robots-meta opt-out governance (noindex/noai exclusion with auditable
-    // per-directive flags; unrelated directives must not trip the gate)
-    "optout_gate" -> ((s, dir) =>
-      graft.webtext.Metadata.optOutGate(tp(s, dir, "documents")).toDF()
-        .orderBy("doc_id")),
-    // rel="license" mining + CC-family verdicts (the rights-clearance twin of
-    // optout_gate): token-wise rel match, head link or body anchor, CC url
-    // parse -> allows_commercial / allows_derivatives routing flags
-    "license_detect" -> ((s, dir) =>
-      graft.webtext.License.licenseGate(tp(s, dir, "documents")).toDF()
-        .orderBy("doc_id")),
-    // code-vs-prose gate over planted source-shaped docs (doc_id%5==0):
-    // integer line-structure features, builtins only, zero shuffle
-    "code_detect" -> ((s, dir) =>
-      graft.textops.Curate.codeDetect(
-        graft.textops.Curate.plantCode(tp(s, dir, "documents")))
-        .orderBy("doc_id")),
-    // streaming twin of license_detect: stateless map-side DOM walk per
-    // micro-batch — append-exact, bit-identical to batch, same oracle
-    "stream_license_detect" -> ((s, dir) =>
-      pageplus.streaming.StreamingExtract.licenseGateOnce(s, dir)
-        .orderBy("doc_id")),
-    // character-level verification of dedup candidate pairs: banded (Ukkonen
-    // cutoff) Levenshtein at pair grain — planted sparse-edit twins pass the
-    // 20% gate, successor-twin decoys are rejected at the cap
-    "edit_verify" -> ((s, dir) =>
-      graft.textops.EditDistance.verifyPairs(tp(s, dir, "documents"))
-        .orderBy("a", "b")),
-    // Heaps-law vocabulary growth: cumulative unigram/bigram vocab + token
-    // mass at power-of-two checkpoints (one term-grain first-seen agg per
-    // gram order, then checkpoint-grain bit-arithmetic bucketing + cumsum)
-    "vocab_growth" -> ((s, dir) =>
-      graft.textops.VocabGrowth.growth(tp(s, dir, "documents"))
-        .orderBy("docs_seen")),
-    // quality-ordered token-budget selection ("data diet"): exact global
-    // prefix sum in (TTR quality desc, doc_id) order via the two-pass
-    // range-partitioned pattern — no corpus-grain Window
-    "token_budget_select" -> ((s, dir) =>
-      graft.textops.TokenBudget.select(tp(s, dir, "documents"))
-        .orderBy("doc_id")),
-    // posting-list delta-gap varbyte sizing (index capacity planning):
-    // term-partitioned lag window + exact bit-arithmetic byte accounting
-    "posting_gaps" -> ((s, dir) =>
-      graft.textops.InvertedIndex.postingGaps(tp(s, dir, "documents"))
-        .orderBy("term")),
-    "redirect_resolve" -> ((s, dir) => {
-      // frontier redirect-chain resolution via pointer doubling: 3 node-grain
-      // self-joins resolve every chain <= 8 hops (O(log) rounds — a 10^6
-      // chain needs 20); loops and over-limit chains classify 'cycle'
-      val docs = tp(s, dir, "documents")
-      graft.webtext.Redirects.resolve(
-          graft.webtext.Redirects.plantUrls(docs),
-          graft.webtext.Redirects.plantRedirects(docs))
-        .orderBy("doc_id")
-    }),
-    "dedup_normalized" -> ((s, dir) => {
-      // normalize-then-dedup composition: the messy corpus unioned with its
-      // clean twins dedups on text_normalize output — NBSP/CR/zero-width
-      // variants unify (raw dedup would fragment them), NFC-composed accents
-      // stay distinct from their unaccented originals. Narrow (xxhash64,
-      // length) grouping keys: normalized text never shuffles (dedup_exact's
-      // documented collision tradeoff)
-      val docs = tp(s, dir, "documents")
-      val messy = graft.textops.TextNorm.plantMessy(docs)
-        .select(col("doc_id"), col("raw").as("t"))
-      val twins = docs.select((col("doc_id") + lit(1000000L)).as("doc_id"),
-        col("text").as("t"))
-      messy.unionByName(twins)
-        .select(col("doc_id"),
-          graft.expr.TextNormalizeExpr.textNormalize(col("t")).as("norm"))
-        .groupBy(xxhash64(col("norm")), length(col("norm")))
-        .agg(min("doc_id").as("keep_id"), count(lit(1)).as("n_copies"))
-        .select("keep_id", "n_copies")
-        .orderBy("keep_id")
-    }),
-    "charset_decode" -> ((s, dir) => {
-      // ingestion edge: WHATWG-order charset sniff (BOM > meta > default)
-      // over mixed-encoding raw bytes, decode fused with main-content
-      // extraction in one map stage; byte-identity proven via the same
-      // word-chunk oracle as html_main_content
-      graft.webtext.Charset.decodeExtract(
-        graft.webtext.Charset.encodedPages(tp(s, dir, "documents")))
-        .toDF().orderBy("doc_id")
-    }),
-    "dup_spans" -> ((s, dir) => {
-      // exact-substring dedup stats (Lee et al.): per-doc coverage by word
-      // 20-grams shared with ANY other document; gram text never shuffles
-      // (8-byte xxhash64 keys), interval union via the sorted-gap identity
-      graft.textops.DupSpans.dupSpans(
-        graft.textops.DupSpans.plantDisclaimer(tp(s, dir, "documents")))
-        .orderBy("doc_id")
-    }),
-    "dup_span_removal" -> ((s, dir) => {
-      // the EXCISION stage of exact-substring dedup (Lee et al. ExactSubstr
-      // policy: every occurrence of a cross-doc duplicate 20-gram is cut,
-      // merged intervals excised, survivors re-joined) — dup_spans measures,
-      // this rewrites; rebuild is one aggregate() lambda per doc, no UDF
-      graft.textops.DupSpans.dupSpanRemoval(
-        graft.textops.DupSpans.plantDisclaimer(tp(s, dir, "documents")))
-        .orderBy("doc_id")
-    }),
-    "html_metadata" -> ((s, dir) => {
-      // head-metadata mining (title / description / canonical / og:title /
-      // lang attr) via a real DOM walk over the metadata-bearing page
-      // variant; map-side, zero shuffle
-      graft.webtext.Metadata.headMetadata(tp(s, dir, "documents")).toDF().orderBy("doc_id")
-    }),
-    "robots_gate" -> ((s, dir) => {
-      // RFC 9309 fetch-policy decisions: host-grain robots bodies joined onto
-      // the frontier (tiny side broadcast), longest-match evaluation map-side
-      // with a parse-once-per-host partition cache. Two agents: graftbot has
-      // its own group (exact token beats *), newsbot falls to the * group
-      val r = graft.webtext.Robots
-      r.decisions(r.plantFrontier(tp(s, dir, "documents")), r.robotsTable(s),
-          Seq("graftbot", "newsbot"))
-        .select(col("doc_id"), col("host"), col("path"),
-          col("allowed_graftbot").cast("long").as("allowed_graftbot"),
-          col("allowed_newsbot").cast("long").as("allowed_newsbot"),
-          col("crawl_delay"))
-        .orderBy("doc_id")
-    }),
-    "fetch_schedule" -> ((s, dir) => {
-      // politeness schedule over the admitted frontier: host-partitioned
-      // window (one shuffle on the fetcher's natural shard key), per-host
-      // sequence spaced by the host's crawl-delay
-      val r = graft.webtext.Robots
-      r.schedule(
-          r.decisions(r.plantFrontier(tp(s, dir, "documents")), r.robotsTable(s),
-            Seq("graftbot", "newsbot")),
-          "allowed_newsbot")
-        .orderBy("doc_id")
-    }),
-    "text_normalize" -> ((s, dir) => {
-      // NFC + NBSP/zero-width/CR cleanup + space collapse over planted messy
-      // text, via the codegen Catalyst Expression (no ScalaUDF boundary) —
-      // the canonical-bytes pass every exact-match op depends on
-      val raw = graft.textops.TextNorm.plantMessy(tp(s, dir, "documents"))
-      raw.select(col("doc_id"),
-          graft.expr.TextNormalizeExpr.textNormalize(col("raw")).as("text_norm"))
-        .withColumn("n_chars", length(col("text_norm")).cast("long"))
-        .orderBy("doc_id")
-    }),
-    // ---- layout-text reading order (north_rule: PDF/layout parse): spans
-    // (page, x, y, text-run) in scrambled stream order -> column clustering
-    // -> (page, column, row) reading order -> byte-identical document text ----
-    "layout_reading_order" -> ((s, dir) => {
-      graft.layout.LayoutText.extract(
-        graft.layout.LayoutText.spansFromDocuments(tp(s, dir, "documents"))).toDF()
-    }),
-    // ---- real PDF decode (north_rule: PDF/layout parse): deterministic
-    // uncompressed PDF 1.4 binaries -> startxref/xref/object-tree/content-
-    // stream structural parse -> positioned spans -> column-clustered reading
-    // order -> byte-identical document text; wholly map-side ----
-    "pdf_text_extract" -> ((s, dir) =>
-      graft.layout.Pdf.extractText(tp(s, dir, "documents")).toDF()),
-    // same decode pipeline through /Filter /FlateDecode content streams
-    // (JDK DEFLATE round-trip) — the compressed form real PDFs take
-    "pdf_flate_extract" -> ((s, dir) =>
-      graft.layout.Pdf.extractText(tp(s, dir, "documents"), compress = true).toDF()),
-    "pdf_doc_stats" -> ((s, dir) =>
-      graft.layout.Pdf.docStats(tp(s, dir, "documents")).toDF().orderBy("url")),
-    "lang_id" -> ((s, dir) => {
-      import s.implicits._
-      tp(s, dir, "documents").select("doc_id", "text").as[(Long, String)]
-        .map { case (id, text) =>
-          val (lang, num, n) = graft.textops.TextHash.langIdDetail(text)
-          (id, lang, num, n)
-        }
-        .toDF("doc_id", "lang_pred", "score_num", "n_tokens")
-    }),
-    // ---- scale plumbing: streaming / checkpoint-resume / lineage ----
-    "stream_extract" -> ((s, dir) => {
-      // same transforms under Structured Streaming; must equal the batch answer
-      pageplus.streaming.StreamingExtract.extractOnce(s, dir)
-    }),
-    "stream_feed_items" -> ((s, dir) =>
-      // stateless streaming twin of feed_items: poll -> parse -> append;
-      // micro-batching-invariant because the op is per-row
-      pageplus.streaming.StreamingExtract.feedItemsOnce(s, dir)),
-    "stream_dedup_exact" -> ((s, dir) => {
-      // exact dedup as custom streaming state on the narrow text key; must
-      // equal the batch dedup_exact answer
-      pageplus.streaming.StreamingExtract.dedupExactOnce(s, dir)
-    }),
-    "stream_paragraph_dedup" -> ((s, dir) =>
-      // incremental first-occurrence paragraph dedup: pages stream in, parse
-      // map-side to 8-byte phash rows, state keeps least (doc, para) + count
-      // per hash (order-free folds — equals the batch window answer under
-      // any micro-batching)
-      pageplus.streaming.StreamingExtract.paragraphDedupOnce(s, dir)),
-    "stream_scd2_history" -> ((s, dir) =>
-      // incremental SCD2: state = open interval per key only (16 bytes);
-      // closures + fresh opens stream out, last-write-wins per (k, version)
-      // collapses the update log — equals the batch lead() answer
-      pageplus.streaming.StreamingExtract.scd2Once(s, dir)
-        .orderBy("k", "version")),
-    "stream_range_join" -> ((s, dir) =>
-      // stream-static twin of range_join: streaming error points tagged
-      // against static incident windows — the bucket equi-key is what makes
-      // a stream-static range join POSSIBLE (streaming has no nested-loop);
-      // stateless, append-exact under any micro-batching
-      pageplus.streaming.StreamingExtract.rangeJoinOnce(s, dir)
-        .orderBy("iv_id", "event_id")),
-    "stream_decontaminate" -> ((s, dir) =>
-      // stream-static twin of decontaminate: static broadcast eval grams,
-      // stateless map-side gram check per micro-batch — append-exact,
-      // bit-identical to the batch query
-      pageplus.streaming.StreamingExtract.decontaminateOnce(s, dir)
-        .orderBy("doc_id")),
-    "stream_cross_corpus" -> ((s, dir) =>
-      // stream-static twin of cross_corpus_dedup: stateless per-micro-batch
-      // hash join against the static base key table — verdicts identical
-      // under any micro-batching, append-exact
-      pageplus.streaming.StreamingExtract.crossCorpusOnce(s, dir)),
-    "stream_bitext" -> ((s, dir) =>
-      // stream-static twin of bitext_mine: source docs segmented in-flight,
-      // static pre-segmented translation side, stateless inner join +
-      // integer ratio gate — bit-identical to the batch answer
-      pageplus.streaming.StreamingExtract.bitextOnce(s, dir)),
-    "stream_simhash_candidates" -> ((s, dir) => {
-      // incremental near-dup candidate filter: min doc_id per Manku key in
-      // the state store (arrival-order-independent), drained then joined
-      // against the deterministic batch key recompute
-      pageplus.streaming.StreamingExtract.simhashCandidatesOnce(s, dir)
-    }),
-    "stream_html_content" -> ((s, dir) => {
-      // the HTML boilerplate-strip path under Structured Streaming; must
-      // equal the batch html_main_content answer
-      pageplus.streaming.StreamingExtract.htmlContentOnce(s, dir)
-    }),
-    "stream_events_window" -> ((s, dir) => {
-      // watermark + tumbling-window aggregation under Structured Streaming;
-      // must equal the batch q10 answer
-      pageplus.streaming.StreamingExtract.eventsWindowedOnce(s, dir)
-    }),
-    "stream_sessionize" -> ((s, dir) => {
-      // flatMapGroupsWithState gap sessionization (custom streaming state);
-      // must equal the batch q11 answer
-      pageplus.streaming.StreamingExtract.sessionizeOnce(s, dir)
-    }),
-    "checkpoint_resume" -> ((s, dir) => {
-      // commit the even-doc_id half, then resume: only the odd half is pending
-      val manifestDir = java.nio.file.Files
-        .createTempDirectory("graft_manifest_").toString
-      val pages = PagesFromDocuments.clean(s, dir).toDF()
-      val docIdFromUrl = expr("CAST(substring(url, 7) AS LONG)")
-      pageplus.spark.Checkpoint.commit(
-        pages.filter(docIdFromUrl % 2 === 0).select("url"), manifestDir)
-      val pending = pageplus.spark.Checkpoint.pending(pages, manifestDir)
-      Pipeline.fulltext(pending, saltPartitions = s.sparkContext.defaultParallelism).toDF()
-    }),
-    "checkpoint_resume_table" -> ((s, dir) => {
-      // same resume semantics through the CATALOG-TABLE CommitLog backend
-      // (VERDICT r3 stretch 8): with an Iceberg catalog this exact code path
-      // is a snapshot append + snapshot read — selected purely by config
-      // (graft.checkpoint.table), no other code change vs checkpoint_resume
-      val table = "graft_ckpt_resume_q"
-      s.sql(s"DROP TABLE IF EXISTS $table") // re-runnable (bench min-of-two)
-      // a PREVIOUS session's drop removes catalog metadata but can leave the
-      // managed location on disk, which fails the next saveAsTable with
-      // LOCATION_ALREADY_EXISTS — clear it too
-      val loc = new org.apache.hadoop.fs.Path(s.conf.get("spark.sql.warehouse.dir"), table)
-      loc.getFileSystem(s.sparkContext.hadoopConfiguration).delete(loc, true)
-      // exercise the config-driven backend selection, then RESTORE the conf:
-      // queries share one session, and a leaked graft.checkpoint.table would
-      // silently redirect any later fromConf caller to this scratch table
-      val prevConf = s.conf.getOption("graft.checkpoint.table")
-      s.conf.set("graft.checkpoint.table", table)
-      val log =
-        try pageplus.spark.Checkpoint.fromConf(s)
-        finally prevConf match {
-          case Some(v) => s.conf.set("graft.checkpoint.table", v)
-          case None    => s.conf.unset("graft.checkpoint.table")
-        }
-      val pages = PagesFromDocuments.clean(s, dir).toDF()
-      val docIdFromUrl = expr("CAST(substring(url, 7) AS LONG)")
-      log.commit(pages.filter(docIdFromUrl % 2 === 0).select("url"))
-      Pipeline.fulltext(pageplus.spark.Checkpoint.pending(pages, log),
-        saltPartitions = s.sparkContext.defaultParallelism).toDF()
-    }),
-    "lineage_metrics" -> ((s, dir) => {
-      // per-bucket lineage over an explicitly-salted layout. The bucket key is
-      // SQL-recomputable (doc_id % 8) so the oracle checks exact per-bucket
-      // doc/byte totals; n_partitions == 1 per bucket is the REAL colocation
-      // invariant (hash repartition puts equal keys in one partition), read
-      // off spark_partition_id() in the partial-agg stage that runs on the
-      // repartitioned data. Production salting by url-hash (Pipeline.saltByUrl)
-      // is exercised by ScalePlumbingSpec's invariance tests.
-      val docs = t(s, dir, "documents")
-        .select(col("doc_id"), length(col("text")).cast("long").as("bytes"))
-        .withColumn("bucket", pmod(col("doc_id"), lit(8)).cast("long"))
-        .repartition(8, col("bucket"))
-        .withColumn("pid", spark_partition_id()) // projected pre-agg (Spark
-        // rejects nondeterministic expressions directly inside aggregates)
-      docs.groupBy("bucket")
-        .agg(count(lit(1)).as("docs"), sum("bytes").as("bytes"),
-          countDistinct(col("pid")).as("n_partitions"))
-    }),
-    "doc_fingerprint" -> ((s, dir) => {
-      import s.implicits._
-      tp(s, dir, "documents").select("doc_id", "text").as[(Long, String)]
-        .map { case (id, text) =>
-          val (grams, fp) = graft.textops.TextHash.winnow(text)
-          (id, fp, grams.size.toLong)
-        }
-        .toDF("doc_id", "fingerprint", "n_grams")
-    }),
-    "template_strip" -> ((s, dir) => {
-      // host-grain template removal: per-host banner (100% of the host's
-      // docs) must go, the 4%-of-each-host syndicated promo must stay —
-      // the within-host document-frequency ratio line_dedup can't express
-      graft.webtext.Templates.templateStrip(
-        graft.webtext.Templates.plantHostTemplates(tp(s, dir, "documents")))
-    }),
-    "snapshot_asof" -> ((s, dir) => {
-      // as-of join: every event matched to the latest page snapshot with
-      // snap_t <= event_t (inclusive tie: snapshots sort before events) —
-      // one key shuffle + a running-last window, no range explosion
-      val docs = tp(s, dir, "documents")
-      // r6: row count from the plain reader — counting the salted reader
-      // paid its repartition shuffle for a number the parquet footer knows
-      val nDocs = t(s, dir, "documents").count()
-      val ev = tp(s, dir, "events").select(
-        (col("event_id") % nDocs).as("k"),
-        TimeCols.ntzEpochSeconds(col("ts")).as("t"),
-        col("event_id"))
-      graft.webtext.AsofJoin.asof(graft.webtext.AsofJoin.plantSnapshots(docs), ev)
-        .orderBy("event_id")
-    }),
-    "stream_snapshot_asof" -> ((s, dir) =>
-      // stream-static as-of: stateless per-batch broadcast temporal join
-      // against the per-key snapshot timeline — micro-batch-invariant, must
-      // match the batch as-of (and its oracle) bit-for-bit
-      pageplus.streaming.StreamingExtract.asofOnce(s, dir).orderBy("event_id")),
-    "asof_join_exec" -> ((s, dir) => {
-      // the SAME as-of semantics through the whole-operator Catalyst
-      // extension (custom LogicalPlan + SparkStrategy + physical SparkPlan,
-      // plans/AsofJoinExec.scala): per-side exchanges at native row width +
-      // an O(1)-state streaming merge, instead of the union+window's
-      // combined-stream sort — must match snapshot_asof's oracle bit-for-bit
-      val docs = tp(s, dir, "documents")
-      // r6: same plain-reader count as snapshot_asof
-      val nDocs = t(s, dir, "documents").count()
-      val ev = tp(s, dir, "events").select(
-        (col("event_id") % nDocs).as("k"),
-        TimeCols.ntzEpochSeconds(col("ts")).as("t"),
-        col("event_id"))
-      graft.plans.AsofExec.asof(graft.webtext.AsofJoin.plantSnapshots(docs), ev)
-        .orderBy("event_id")
-    }),
-    "host_cap_sample" -> ((s, dir) => {
-      // FineWeb-style per-host cap: keep <= 50 docs per host in deterministic
-      // LCG order; rank filter plans as WindowGroupLimit (partial limit
-      // before the host shuffle)
-      graft.webtext.HostCap.hostCapSample(tp(s, dir, "documents")).orderBy("doc_id")
-    }),
-    "inverted_index" -> ((s, dir) => {
-      // bigram phrase index: (term, df, cf, capped posting list); tf and
-      // df/cf aggs share one term-grain partitioning, cap is group-limited
-      graft.textops.InvertedIndex.phraseIndex(tp(s, dir, "documents")).orderBy("term")
-    }),
-    // containment near-dup (Broder's asymmetric twin of Jaccard): bottom-k
-    // KMV sketch candidates with a hot-bucket cap, exact hash-array verify —
-    // flags the planted predecessor-quote docs as subset duplicates
-    "containment_dedup" -> ((s, dir) =>
-      graft.textops.Containment.containmentPairs(
-          graft.textops.Containment.plantQuotes(tp(s, dir, "documents")))
-        .orderBy("a", "b")),
-    // BM25 top-k retrieval over corpus-derived queries: bit-length idf,
-    // 4096-fp length norm, one corpus explode (df AND dl derived from tf),
-    // broadcast query join, WindowGroupLimit top-k
-    "bm25_topk" -> ((s, dir) =>
-      graft.textops.Bm25.topK(tp(s, dir, "documents")).orderBy("q_id", "rnk")),
-    "mojibake_repair" -> ((s, dir) => {
-      // ftfy-core encoding repair via the codegen Expression: mangled
-      // UTF-8-as-Latin-1 prefixes recover byte-exactly, genuine Latin-1
-      // accents and ASCII pass through untouched
-      val planted = graft.webtext.Mojibake.plantMojibake(tp(s, dir, "documents"))
-      planted.select(col("doc_id"),
-          graft.expr.MojibakeRepairExpr.mojibakeRepair(col("text")).as("repaired"),
-          (graft.expr.MojibakeRepairExpr.mojibakeRepair(col("text")) =!= col("text"))
-            .cast("long").as("was_mojibake"))
-        .orderBy("doc_id")
-    }),
-    "extraction_prf" -> ((s, dir) => {
-      // extractor regression eval: word-multiset P/R/F1 in basis points over
-      // the planted degraded extraction (dropped paragraph = recall damage,
-      // appended promo = precision damage); narrow (doc_id, wordhash) keys
-      graft.webtext.ExtractionEval.prf(
-        graft.webtext.ExtractionEval.plantDegraded(tp(s, dir, "documents")))
-        .orderBy("doc_id")
-    }),
-    "extraction_drift" -> ((s, dir) =>
-      // extractor version-drift gate (the report a release pipeline
-      // thresholds on before a new extractor config reprocesses the corpus):
-      // per-doc byte-identity + char delta + word-multiset added/dropped
-      // masses between incumbent and candidate extractions — needs no gold,
-      // unlike extraction_prf; word text never crosses a shuffle
-      graft.webtext.ExtractionEval.driftReport(
-        graft.webtext.ExtractionEval.plantDegraded(tp(s, dir, "documents")))
-        .orderBy("doc_id")),
-    "soft404_detect" -> ((s, dir) => {
-      // soft-404 content classifier fused with the HTML parse: 404-title
-      // markers + tiny-main-content apology fallback, one map stage
-      graft.webtext.Soft404.detect(
-        graft.webtext.Soft404.plantPages(tp(s, dir, "documents")))
-        .orderBy("doc_id")
-    }),
-    "index_delta" -> ((s, dir) => {
-      // incremental reindex delta for the recrawl: only changed/added/removed
-      // docs reach the term explode; upserts vs tombstones at term grain
-      val docs = tp(s, dir, "documents").select("doc_id", "text")
-      graft.textops.IndexDelta.indexDelta(docs, graft.webtext.Recrawl.snapshotB(docs))
-        .orderBy("term")
-    }),
-    "hll_distinct" -> ((s, dir) => {
-      // distinct (user, day) per event type via the custom HLL
-      // TypedImperativeAggregate: 64-byte sketches through partial agg, the
-      // oracle recomputes registers + raw estimator bit-for-bit; exact
-      // countDistinct rides along as the eval ground truth (ANN-'hit' style)
-      val ev = tp(s, dir, "events")
-        .select(col("event_type"), col("user_id"),
-          TimeCols.ntzEpochSeconds(col("ts")).as("es"))
-        .select(col("event_type"), expr("user_id * 1024L + (es div 86400L)").as("v"))
-      ev.groupBy("event_type")
-        .agg(graft.expr.HllSketchAgg.hllDistinct(col("v")).as("approx_distinct"),
-          countDistinct(col("v")).as("exact_distinct"))
-        .withColumn("err_bp",
-          expr("abs(approx_distinct - exact_distinct) * 10000L div exact_distinct"))
-        .orderBy("event_type")
-    }),
-    "hll_cumulative" -> ((s, dir) =>
-      // running distinct-to-date per event type via HLL register MERGE
-      // (register-wise max as a windowed step-function difference): the
-      // mergeability property that lets per-partition / per-day sketches
-      // roll up without rescanning history; exact cumulative distinct rides
-      // along as ground truth
-      graft.textops.SketchMerge.cumulativeDailyDistinct(tp(s, dir, "events"))
-        .orderBy("event_type", "day")),
-    "hll_sliding" -> ((s, dir) =>
-      // trailing-7-day distinct per event type: the register merge FORGETS —
-      // a value-range window max per (type, idx) over the day axis, sketch
-      // grain throughout; exact windowed distinct rides along as audit
-      graft.textops.SketchMerge.slidingDailyDistinct(tp(s, dir, "events"))
-        .orderBy("event_type", "day")),
-    "cms_freq" -> ((s, dir) => {
-      // count-min heavy-hitter frequencies: one corpus pass builds a global
-      // 4x1024 sketch (32 KB through partial agg), point queries answer via
-      // the codegen cms_query scalar; exact counts ride along as the eval
-      // ground truth (est >= exact is the CMS one-sided guarantee)
-      import s.implicits._
-      val planted = graft.textops.Dedup.plantBoilerplate(tp(s, dir, "documents"))
-      val ws = split(col("text"), " ", -1)
-      val bigramsC = transform(sequence(lit(0), size(ws) - 2),
-        i => concat(element_at(ws, i + 1), lit(" "), element_at(ws, i + 2)))
-      val terms = planted.filter(size(ws) >= 2).select(explode(bigramsC).as("term"))
-      val fstream = terms.as[String].map(graft.textops.TextHash.fnv64).toDF("f")
-      val sketch = fstream.agg(graft.expr.CmsSketch.cmsSketch(col("f")).as("sk"))
-      val keyTerms = graft.textops.Dedup.BoilerLine.split(" ").sliding(2)
-        .map(_.mkString(" ")).toSeq :+ "zzz qqq"
-      val keysDf = keyTerms.map(t => (t, graft.textops.TextHash.fnv64(t))).toDF("term", "kf")
-      val exact = terms.filter(col("term").isin(keyTerms: _*))
-        .groupBy("term").agg(count(lit(1)).as("exact"))
-      keysDf.crossJoin(broadcast(sketch))
-        .select(col("term"), graft.expr.CmsSketch.cmsQuery(col("sk"), col("kf")).as("est"))
-        .join(exact, Seq("term"), "left")
-        .withColumn("exact", coalesce(col("exact"), lit(0L)))
-        .withColumn("over_bp",
-          when(col("exact") > 0, expr("(est - exact) * 10000L div exact")).otherwise(lit(-1L)))
-        .orderBy("term")
-    }),
-    "heavy_hitters" -> ((s, dir) =>
-      // exact corpus heavy hitters (boilerplate-bigram discovery) via the
-      // two-pass lossy-counting pattern: pass 1 map-side candidates (zero
-      // term-grain shuffle), pass 2 exact counts of the broadcast candidate
-      // superset only — result partition-invariant, so the oracle is a
-      // plain GROUP BY + HAVING over the same bigram stream
-      graft.textops.HeavyHitters.heavyHitters(
-          graft.textops.HeavyHitters.bigramTerms(tp(s, dir, "documents")))
-        .orderBy(desc("cnt"), col("term"))),
-    "audience_overlap" -> ((s, dir) =>
-      // pairwise (user, day) co-activity between event types from per-type
-      // KMV sketches: ONE corpus pass builds t sketches, the t x t matrix is
-      // broadcast arithmetic — vs t^2 corpus self-joins exactly; exact
-      // counts ride along from a (type, v)-distinct side table
-      graft.events.AudienceOverlap.overlapMatrix(
-        graft.events.AudienceOverlap.userDayKeys(tp(s, dir, "events")))),
-    "stream_kmv_distinct" -> ((s, dir) =>
-      // the KMV sketch as streaming aggregation state: set-union merge makes
-      // the sketch batch-split-invariant, the distinct estimate is projected
-      // after the stateful agg — must equal the batch sketch bit-for-bit
-      pageplus.streaming.StreamingExtract.kmvDistinctOnce(s, dir)
-        .orderBy("event_type")),
-    "stream_hll_distinct" -> ((s, dir) => {
-      // the HLL sketch as streaming aggregation state: same grain as batch
-      // hll_distinct, must produce the IDENTICAL sketch estimate (merge is
-      // order/batch-invariant); exact countDistinct is unsupported in
-      // streaming — which is the point of the sketch
-      pageplus.streaming.StreamingExtract.hllDistinctOnce(s, dir).orderBy("event_type")
-    }),
-    "length_quantiles" -> ((s, dir) => {
-      // corpus length percentiles from a fixed 64-bin log2 histogram —
-      // integer-exact (no GK sketch float), nothing past the scan > 64 rows
-      graft.textops.LengthStats.lengthQuantiles(tp(s, dir, "documents"))
-    }),
-    "url_templates" -> ((s, dir) => {
-      // crawler structure report: digit runs -> {n}, counts per (host,
-      // template); map-side rewrite + tiny hash agg
-      graft.webtext.UrlTemplates.templates(
-        graft.webtext.UrlTemplates.plantFrontierUrls(tp(s, dir, "documents")))
-        .orderBy("host", "template")
-    }),
-    "host_quality_rollup" -> ((s, dir) => {
-      // crawl-prioritization composition: quality_ensemble's doc-grain keep
-      // bit rolled up to host grain (keep rate in basis points) joined with
-      // host_rank's fixed-point endorsement score — the table a recrawl
-      // scheduler reads. All three inputs are already-oracle-checked ops.
-      val keep = qualityEnsemble(s, dir).select(col("doc_id"), col("keep"))
-      val hostd = keep.select(col("doc_id"),
-        concat(lit("site"), (col("doc_id") % 7).cast("string"),
-          lit(".example.com")).as("host"), col("keep"))
-      val hq = hostd.groupBy("host")
-        .agg(count(lit(1)).as("n_docs"), sum("keep").as("n_keep"))
-        .withColumn("keep_rate_bp", expr("n_keep * 10000L div n_docs"))
-      val rank = graft.webtext.HostRank.rank(
-        graft.webtext.HostRank.hostEdges(tp(s, dir, "documents")))
-      hq.join(rank, Seq("host")).orderBy("host")
-    }),
-    "sequence_pack" -> ((s, dir) => {
-      // pretraining concat-and-chunk packing: exact global token offsets via
-      // the distributed two-pass prefix sum (range partition -> per-partition
-      // sums -> broadcast offsets), NOT a single-partition window
-      graft.textops.SequencePack.pack(tp(s, dir, "documents")).orderBy("doc_id")
-    }),
-    "pack_greedy" -> ((s, dir) =>
-      // NO-SPLIT greedy bin packing (docs never cross sequence boundaries —
-      // the cross-contamination-free loader shape): bins scoped to doc_id
-      // blocks so every block packs independently — one block-grain shuffle
-      // + a linear scan, partition-count-invariant by construction
-      graft.textops.SequencePack.packGreedy(tp(s, dir, "documents"))
-        .orderBy("doc_id")),
-    "curriculum_rank" -> ((s, dir) =>
-      // short-first curriculum: exact global rank by (n_words, doc_id) via
-      // range partition + broadcast offsets — never a single-task Window
-      graft.textops.SequencePack.curriculumRank(tp(s, dir, "documents"))),
-    "train_shuffle" -> ((s, dir) =>
-      // deterministic training shuffle: global position under the salted-FNV
-      // pseudo-random total order (reproducible across re-runs/resume, unlike
-      // orderBy(rand())) — same two-pass rank, never a single-task Window
-      graft.textops.SequencePack.trainShuffle(tp(s, dir, "documents"))),
-    "sequence_pack_shuffled" -> ((s, dir) =>
-      // packing in the SHUFFLED epoch order (trainShuffle's salted-FNV total
-      // order): one composed two-pass job — the packed sequences ARE the
-      // shuffled training batches
-      graft.textops.SequencePack.packShuffled(tp(s, dir, "documents"))
-        .orderBy("doc_id")),
-    "sequence_pack_bpe" -> ((s, dir) =>
-      // packing under REAL tokenizer counts (bpe_encode ∘ two-pass prefix
-      // sum) — whitespace counts misprice a BPE budget (fertility ~2.6x
-      // here), so production packs on encoded counts
-      graft.textops.SequencePack.packCounts(
-        graft.textops.BpeTrain.encode(tp(s, dir, "documents"),
-          graft.textops.BpeTrain.FixtureMerges)
-          .select("doc_id", "n_tokens")).orderBy("doc_id")),
-    "shard_pack" -> ((s, dir) => {
-      // byte-balanced output sharding: whole docs into fixed-size shards by
-      // global byte offset — same two-pass prefix sum, no window
-      graft.textops.SequencePack.shardByBytes(tp(s, dir, "documents")).orderBy("doc_id")
-    }),
-    "chunk_passages" -> ((s, dir) =>
-      // RAG passage chunking: 64-word windows, stride 48 — pure map-side
-      // explode, zero shuffle
-      graft.textops.Chunker.chunk(tp(s, dir, "documents"))),
-    "cdc_chunks" -> ((s, dir) =>
-      // content-defined chunking: rolling-window-hash boundaries (avg ~8
-      // tokens), ONE map stage — the shift-resistant dedup grain
-      graft.textops.Cdc.chunks(tp(s, dir, "documents"))
-        .toDF().orderBy("doc_id", "chunk_idx")),
-    "cdc_shift_dedup" -> ((s, dir) =>
-      // shift-resistance report over planted one-token-prefix twins: CDC
-      // chunks re-sync after the first boundary (high shared bp), the
-      // same-mean fixed stride shares ~nothing; narrow (id, hash) shuffles
-      graft.textops.Cdc.shiftReport(
-        graft.textops.Cdc.plantShifted(tp(s, dir, "documents")))
-        .orderBy("doc_id")),
-    "bpe_train" -> ((s, dir) => {
-      // tokenizer training: one corpus pass -> word-frequency vocab, then 8
-      // vocabulary-grain merge rounds with deterministic tie-breaking
-      graft.textops.BpeTrain.train(tp(s, dir, "documents")).orderBy("rank")
-    }),
-    "bpe_encode" -> ((s, dir) =>
-      // tokenizer APPLY: per-doc token counts under the FIXED fixture merge
-      // table (applying given merges is sf-agnostic; vocab-grain encode, one
-      // corpus pass, word-keyed join — the tfidf precedent)
-      graft.textops.BpeTrain.encode(tp(s, dir, "documents"),
-        graft.textops.BpeTrain.FixtureMerges)),
-    "bpe_fertility" -> ((s, dir) => {
-      // tokenizer fertility audit per language: milli-tokens-per-word from
-      // bpe_encode's doc-grain output rolled up at lang grain (the
-      // tokenizer-fairness metric multilingual pipelines track)
-      val docs = tp(s, dir, "documents")
-      graft.textops.BpeTrain.encode(docs, graft.textops.BpeTrain.FixtureMerges)
-        .join(docs.select("doc_id", "lang"), "doc_id")
-        .groupBy("lang")
-        .agg(sum("n_words").as("n_words"), sum("n_tokens").as("n_tokens"),
-          expr("(sum(n_tokens) * 1000) div sum(n_words)").as("fertility_milli"))
-    }),
-    "readability" -> ((s, dir) => {
-      // integer Flesch reading-ease (milli-points, trunc division): sentence
-      // proxy = the corpus' 24-word paragraph grain, syllables = vowel runs
-      // (min 1/word). Map-side explode + doc-grain agg, builtins only.
-      val ws = split(col("text"), " ", -1)
-      tp(s, dir, "documents")
-        .select(col("doc_id"), size(ws).cast("long").as("nw"),
-          explode(ws).as("x"))
-        .groupBy("doc_id", "nw")
-        .agg(sum(greatest(lit(1L),
-          size(regexp_extract_all(col("x"), lit("[aeiouy]+"), lit(0))).cast("long"))).as("syl"))
-        .select(col("doc_id"), col("nw").as("n_words"),
-          expr("(nw + 23) div 24").as("n_sentences"), col("syl").as("n_syllables"),
-          expr("206835 - (1015 * nw) div ((nw + 23) div 24) - (84600 * syl) div nw").as("flesch_milli"))
-        .orderBy("doc_id")
-    })
-  )
-
-  /** Shared oracle bodies: the fused and skew-split paths must produce the
-    * same bytes, so they share one oracle per flag combination. */
-  private val DehypheOracleSql =
-    """SELECT 'doc://'||doc_id AS url,
-      |  array_to_string([
-      |    CASE
-      |      WHEN (j-1)%3=2 AND j < nl THEN array_to_string(words[(j-1)*8+1:(j-1)*8+8],' ') || words[j*8+1]
-      |      WHEN (j-1)%3=0 AND j > 1 THEN coalesce(array_to_string(words[(j-1)*8+2:(j-1)*8+8],' '), '')
-      |      ELSE array_to_string(words[(j-1)*8+1:(j-1)*8+8],' ')
-      |    END
-      |    for j in range(1, nl+1)], chr(10)) AS extracted_text
-      |FROM (SELECT doc_id, words, CAST(ceil(len(words)/8.0) AS BIGINT) AS nl
-      |      FROM (SELECT doc_id, string_split(text,' ') AS words FROM documents))""".stripMargin
-
-  /** Shared by the batch window-function query and its stateful-streaming twin. */
-  private val Q11SessionizeOracleSql =
-    """SELECT user_id, CAST(max(session_id) AS BIGINT) AS n_sessions, count(*) AS n_events
-      |FROM (
-      |  SELECT user_id,
-      |         sum(new_session) OVER (PARTITION BY user_id ORDER BY sec, event_id
-      |                                ROWS UNBOUNDED PRECEDING) AS session_id
-      |  FROM (
-      |    SELECT user_id, sec, event_id,
-      |           CASE WHEN lag(sec) OVER (PARTITION BY user_id ORDER BY sec, event_id) IS NULL
-      |                  OR sec - lag(sec) OVER (PARTITION BY user_id ORDER BY sec, event_id) > 1800
-      |                THEN 1 ELSE 0 END AS new_session
-      |    FROM (SELECT user_id, event_id, CAST(floor(epoch(ts)) AS BIGINT) AS sec FROM events)))
-      |GROUP BY user_id""".stripMargin
-
-  private val HtmlMainOracleSql =
-    """SELECT 'doc://' || doc_id AS url,
-      |       array_to_string([array_to_string(words[i:i+23], ' ')
-      |                        for i in range(1, len(words)+1, 24)], chr(10)) AS extracted_text
-      |FROM (SELECT doc_id, string_split(text, ' ') AS words FROM documents)""".stripMargin
-
-  /** The mixture pair's shared recipe: host k keeps (k+1)*10% (basis points)
-    * via a salted-FNV bucket of the doc identity. Both queries and both
-    * oracles derive from this single definition + [[MixtureRowsSql]], so the
-    * hash/salt/rates cannot desynchronize between them. */
-  private val MixtureRates: Map[String, Int] =
-    (0 until 7).map(k => s"site$k.example.com" -> (k + 1) * 1000).toMap
-
-  private def mixtureSample(s: SparkSession, dir: String): DataFrame =
-    graft.textops.Curate.sampleMixture(
-      graft.webtext.UrlOps.withNormalized(
-        graft.webtext.UrlOps.plantMessyUrls(tp(s, dir, "documents")))
-        .select("doc_id", "host"), MixtureRates)
-
-  /** Shared mixture CTE (`k`): doc -> (host, salted-FNV-1a HUGEINT bucket
-    * hash); the final SELECT runs over it. */
-  /** The salted-FNV-1a HUGEINT bucket-hash CTE (`k`) as a fragment, so it
-    * composes into other WITH chains (quality_mixture). */
-  private def FnvCte(salt: String): String =
-    s"""k AS (
-      |  SELECT doc_id, 'site' || (doc_id%7) || '.example.com' AS host,
-      |         list_reduce(
-      |           list_prepend(14695981039346656037::HUGEINT,
-      |                        [unicode(c)::HUGEINT for c in string_split('$salt:' || doc_id, '')]),
-      |           (h, b) -> ((h - h % 128 + xor((h % 128)::BIGINT, b::BIGINT)::HUGEINT)
-      |                      * 1099511628211::HUGEINT) % (1::HUGEINT << 64)) AS h
-      |  FROM documents)""".stripMargin
-
-  private def MixtureRowsSql(select: String, salt: String = "mix"): String =
-    "WITH " + FnvCte(salt) + "\n" + select
-
-  /** The quality-gate ensemble CTE chain ending in `gates(doc_id, g_gopher,
-    * g_rep, g_lm, keep)` — the three individually-validated gate oracles
-    * joined at doc grain. `extraCtes` appends further CTEs (must start with
-    * ",") before the final select. */
-  private def QualityGatesSql(select: String, extraCtes: String = ""): String =
-    """WITH w AS (SELECT doc_id, string_split(text,' ') AS ws,
-      |                  CAST(length(text) AS BIGINT) AS c FROM documents),
-      |g AS (SELECT doc_id, CAST(CASE WHEN len(ws) BETWEEN 50 AND 100000
-      |             AND c-(len(ws)-1) BETWEEN 3*len(ws) AND 10*len(ws)
-      |        THEN 1 ELSE 0 END AS BIGINT) AS g_gopher FROM w),
-      |r AS (SELECT doc_id, CAST(CASE WHEN 2*(len(ws)-len(list_distinct(ws))) <= len(ws)
-      |        THEN 1 ELSE 0 END AS BIGINT) AS g_rep FROM w),
-      |t AS (SELECT doc_id, lower(text) AS lt FROM documents),
-      |tri AS (SELECT doc_id, unnest([substring(lt, i, 3) for i in range(1, length(lt)-1)]) AS tri
-      |        FROM t WHERE length(lt) >= 3),
-      |lm AS (SELECT tri, CAST(count(*) AS BIGINT) AS tc FROM tri WHERE doc_id%10<3 GROUP BY tri),
-      |bg AS (SELECT substring(tri,1,2) AS bi, sum(tc) AS bt FROM lm GROUP BY bi),
-      |sc AS (SELECT d.doc_id, CASE WHEN lm.tc IS NULL THEN 4096000
-      |              ELSE least((bg.bt*4096)//lm.tc, 4096000) END AS s
-      |       FROM tri d LEFT JOIN lm ON d.tri = lm.tri
-      |                  LEFT JOIN bg ON substring(d.tri,1,2) = bg.bi),
-      |l AS (SELECT doc_id, CAST(CASE WHEN sum(s)//count(*) <= 20000 THEN 1 ELSE 0 END AS BIGINT) AS g_lm
-      |      FROM sc GROUP BY doc_id),
-      |gates AS (SELECT g.doc_id AS doc_id, g_gopher, g_rep, g_lm, g_gopher*g_rep*g_lm AS keep
-      |          FROM g JOIN r USING (doc_id) JOIN l USING (doc_id))""".stripMargin +
-      extraCtes + "\n" + select
-
-  /** bpe_encode / bpe_fertility shared CTE chain (`docs_tok`): vocab-grain
-    * application of [[graft.textops.BpeTrain.FixtureMerges]] rendered as
-    * nested `replace()` over delimiter-wrapped chars — `|a||b|` -> `|ab|`.
-    * Wrapping every token as `|tok|` makes ONE non-overlapping left-to-right
-    * replace pass EXACTLY the engine's greedy-left foldMerge (adjacent pairs
-    * can't share delimiter chars, so both consume the same positions; the
-    * corpus alphabet is a–z, so `|` never collides with content). Rendered
-    * FROM the FixtureMerges constant so engine and oracle can't drift
-    * (the simKeySpecSql precedent). Python-validated at sf0.01 (0/500
-    * mismatches) before wiring. */
-  private def BpeEncodeSql(select: String): String = {
-    val rep = graft.textops.BpeTrain.FixtureMerges.foldLeft(
-      "regexp_replace(w, '(.)', '|\\1|', 'g')") { case (acc, (a, b)) =>
-      s"replace($acc, '|$a||$b|', '|$a$b|')"
-    }
-    s"""WITH dw AS MATERIALIZED (
-      |  SELECT doc_id, w, count(*) AS c
-      |  FROM (SELECT doc_id, unnest(string_split(text, ' ')) AS w FROM documents)
-      |  WHERE len(w) > 0 GROUP BY doc_id, w),
-      |enc AS MATERIALIZED (SELECT w, $rep AS t FROM (SELECT DISTINCT w FROM dw)),
-      |tok AS (SELECT w, (len(t) - len(replace(t, '|', ''))) // 2 AS ntok FROM enc),
-      |docs_tok AS (SELECT dw.doc_id AS doc_id, CAST(sum(c) AS BIGINT) AS n_words,
-      |                    CAST(sum(c * ntok) AS BIGINT) AS n_tokens
-      |             FROM dw JOIN tok USING (w) GROUP BY dw.doc_id)
-      |""".stripMargin + select
-  }
-
-  /** Shared link-inventory CTE (`rows`): every anchor of every generated
-    * page as (doc_id, ord0, href, anchor_text, in_main), recomputed from
-    * HtmlGen's modular arithmetic — the final SELECT runs over it. */
-  private def LinkRowsSql(select: String): String =
-    """WITH base AS (
-      |  SELECT doc_id, string_split(text, ' ') AS ws, len(string_split(text, ' ')) AS w,
-      |         CAST(ceil(len(string_split(text, ' '))/24.0) AS BIGINT) AS np,
-      |         CAST(4 + doc_id % 4 AS BIGINT) AS navn,
-      |         CAST(3 + doc_id % 3 AS BIGINT) AS siden
-      |  FROM documents
-      |), nav AS (
-      |  SELECT doc_id, k AS ord0, '/nav/' || k AS href,
-      |         list_extract(['homepage','politics','business','sciences','cultures','archives','weathers','sportive','contacts','newsfeed','features'],
-      |                      CAST(1 + (doc_id + k) % 11 AS BIGINT)) AS anchor_text,
-      |         FALSE AS in_main
-      |  FROM (SELECT doc_id, unnest(range(0, navn)) AS k FROM base)
-      |), rel AS (
-      |  SELECT doc_id, navn + k AS ord0, '/rel/' || k AS href,
-      |         list_extract(['trending now','most shared','editor desk','latest wire','top stories','deep dives'],
-      |                      CAST(1 + (doc_id + 2*k) % 6 AS BIGINT)) AS anchor_text,
-      |         FALSE AS in_main
-      |  FROM (SELECT doc_id, unnest(range(0, siden)) AS k, navn FROM base)
-      |), inl AS (
-      |  SELECT doc_id, navn + siden + (p - 2) // 3 AS ord0,
-      |         '/w/' || doc_id || '/' || p AS href,
-      |         list_extract(ws, CAST(least(24*(p+1), w) AS BIGINT)) AS anchor_text,
-      |         TRUE AS in_main
-      |  FROM (SELECT doc_id, unnest(range(0, np)) AS p, navn, siden, ws, w FROM base)
-      |  WHERE p % 3 = 2
-      |), foot AS (
-      |  SELECT doc_id, navn + siden + np // 3 + f.i AS ord0,
-      |         f.href AS href, f.anchor_text AS anchor_text, FALSE AS in_main
-      |  FROM base, (VALUES (0, '/about', 'about us!'), (1, '/terms', 'terms!!!')) AS f(i, href, anchor_text)
-      |), rows AS (
-      |  SELECT * FROM nav UNION ALL SELECT * FROM rel
-      |  UNION ALL SELECT * FROM inl UNION ALL SELECT * FROM foot
-      |)
-      |""".stripMargin + select
-
-  /** Manku block spec rendered from the engine's own constants. */
-  private val SimKeySpecSql = graft.textops.TextHash.simKeySpecSql
-
-  private val RoLastWinsOracleSql =
-    """SELECT 'doc://' || doc_id AS url,
-      |       array_to_string(lines[len(lines)//2 + 1 :], chr(10)) AS extracted_text
-      |FROM (SELECT doc_id,
-      |             [array_to_string(words[i:i+7], ' ')
-      |              for i in range(1, len(words)+1, 8)] AS lines
-      |      FROM (SELECT doc_id, string_split(text, ' ') AS words FROM documents))""".stripMargin
+  /** One entry per implemented operator from SURVEY.md §2, each declared once
+    * as a [[graft.queries.Q]] in its family file under `graft/queries`. */
+  val queries: Map[String, (SparkSession, String) => DataFrame] =
+    graft.queries.Registry.all.map(q => q.name -> q.run).toMap
 
   /** For each key in queries, equivalent ANSI SQL runnable by DuckDB on
-    * the same parquet tables. Omit for non-SQL-expressible ops. */
-  /** host_rank oracle CTE chain: the synthetic edge recipe + `rounds`
-    * unrolled fixed-point PageRank iterations (r1..r`rounds`), generated so
-    * host_rank (3 rounds), crawl_budget (3 rounds) and host_rank_converged
-    * (40 rounds — an exact fixed point is invariant under further iteration,
-    * so any M >= the measured 28-29 convergence rounds matches at every sf)
-    * share one source of truth. `//` is DuckDB integral division (floor; all
-    * values non-negative so it matches Spark's trunc `div`). Every CTE is
-    * `AS MATERIALIZED`: DuckDB otherwise INLINES single-reference CTEs, and
-    * the 40-round chain re-expands nodes/e/ow per round — measured >2 min at
-    * sf0.01 plain vs 1.5 s materialized (bit-identical result, validated
-    * against the Python fixed-point recompute before wiring). */
-  /** Unrolled k-core peel rounds over the host graph (k = 3). MATERIALIZED
-    * is load-bearing: each round references the previous CTE twice, so the
-    * un-materialized expansion is 4^rounds scans of the parquet. Rounds past
-    * the fixed point are no-ops, so a fixed unroll ≥ the data's peel depth
-    * (validated 2 at both sfs, tools/round5b_check.py asserts ≤ 8) equals
-    * the engine's data-dependent loop exactly. */
-  private def kcoreCtes(rounds: Int): String = {
-    val head =
-      """WITH e0 AS (
-        |  SELECT 'site' || (doc_id%7) || '.example.com' AS src,
-        |         'site' || ((2*doc_id+1)%7) || '.example.com' AS dst FROM documents
-        |  UNION ALL
-        |  SELECT 'site' || (doc_id%7) || '.example.com' AS src,
-        |         'site' || ((3*doc_id+2)%7) || '.example.com' AS dst FROM documents WHERE doc_id%3=0
-        |  UNION ALL
-        |  SELECT 'site' || (doc_id%7) || '.example.com' AS src,
-        |         'site0.example.com' AS dst FROM documents WHERE doc_id%5<2),
-        |und AS MATERIALIZED (SELECT DISTINCT least(src,dst) AS a, greatest(src,dst) AS b FROM e0 WHERE src <> dst),
-        |n0 AS MATERIALIZED (SELECT a AS host FROM und UNION SELECT b FROM und)""".stripMargin
-    val iters = (1 to rounds).map { r =>
-      s"""e$r AS MATERIALIZED (SELECT a, b FROM und WHERE a IN (SELECT host FROM n${r - 1}) AND b IN (SELECT host FROM n${r - 1})),
-         |n$r AS MATERIALIZED (SELECT host FROM (SELECT a AS host FROM e$r UNION ALL SELECT b FROM e$r) GROUP BY 1 HAVING count(*) >= 3)""".stripMargin
-    }
-    (head +: iters).mkString(",\n")
-  }
-
-  /** Unrolled personalized-PageRank rounds: hostRankCtes with all teleport
-    * mass at the seed (r0 = scale at seed, teleport paid only at seed). */
-  private def pprCtes(rounds: Int): String = {
-    val head =
-      """WITH e0 AS MATERIALIZED (
-        |  SELECT 'site' || (doc_id%7) || '.example.com' AS src,
-        |         'site' || ((2*doc_id+1)%7) || '.example.com' AS dst FROM documents
-        |  UNION ALL
-        |  SELECT 'site' || (doc_id%7) || '.example.com' AS src,
-        |         'site' || ((3*doc_id+2)%7) || '.example.com' AS dst FROM documents WHERE doc_id%3=0
-        |  UNION ALL
-        |  SELECT 'site' || (doc_id%7) || '.example.com' AS src,
-        |         'site0.example.com' AS dst FROM documents WHERE doc_id%5<2),
-        |e AS MATERIALIZED (SELECT src, dst, CAST(count(*) AS BIGINT) AS weight FROM e0 GROUP BY src, dst),
-        |ow AS MATERIALIZED (SELECT src, sum(weight) AS outw FROM e GROUP BY src),
-        |nodes AS MATERIALIZED (SELECT src AS host FROM e UNION SELECT dst FROM e),
-        |r0 AS MATERIALIZED (SELECT host, CASE WHEN host = 'site0.example.com' THEN 1000000 ELSE 0 END AS rank FROM nodes)""".stripMargin
-    val iters = (1 to rounds).map { k =>
-      s"""r$k AS MATERIALIZED (SELECT n.host,
-         |       (CASE WHEN n.host = 'site0.example.com' THEN (10000-8500)*1000000//10000 ELSE 0 END)
-         |       + coalesce(s.c, 0) AS rank
-         |       FROM nodes n LEFT JOIN (
-         |         SELECT e.dst AS host, sum((r${k - 1}.rank * e.weight * 8500) // (ow.outw * 10000)) AS c
-         |         FROM e JOIN ow USING (src) JOIN r${k - 1} ON r${k - 1}.host = e.src GROUP BY e.dst) s USING (host))""".stripMargin
-    }
-    (head +: iters).mkString(",\n")
-  }
-
-  private def hostRankCtes(rounds: Int): String = {
-    val head =
-      """WITH e0 AS MATERIALIZED (
-        |  SELECT 'site' || (doc_id%7) || '.example.com' AS src,
-        |         'site' || ((2*doc_id+1)%7) || '.example.com' AS dst FROM documents
-        |  UNION ALL
-        |  SELECT 'site' || (doc_id%7) || '.example.com' AS src,
-        |         'site' || ((3*doc_id+2)%7) || '.example.com' AS dst FROM documents WHERE doc_id%3=0
-        |  UNION ALL
-        |  SELECT 'site' || (doc_id%7) || '.example.com' AS src,
-        |         'site0.example.com' AS dst FROM documents WHERE doc_id%5<2),
-        |e AS MATERIALIZED (SELECT src, dst, CAST(count(*) AS BIGINT) AS weight FROM e0 GROUP BY src, dst),
-        |ow AS MATERIALIZED (SELECT src, sum(weight) AS outw FROM e GROUP BY src),
-        |nodes AS MATERIALIZED (SELECT src AS host FROM e UNION SELECT dst FROM e),
-        |nn AS MATERIALIZED (SELECT count(*) AS n FROM nodes),
-        |r0 AS MATERIALIZED (SELECT host, 1000000 // (SELECT n FROM nn) AS rank FROM nodes)""".stripMargin
-    val iters = (1 to rounds).map { k =>
-      s"""r$k AS MATERIALIZED (SELECT n.host, ((10000-8500)*1000000//10000) // (SELECT n FROM nn) + coalesce(s.c, 0) AS rank
-         |       FROM nodes n LEFT JOIN (
-         |         SELECT e.dst AS host, sum((r${k - 1}.rank * e.weight * 8500) // (ow.outw * 10000)) AS c
-         |         FROM e JOIN ow USING (src) JOIN r${k - 1} ON r${k - 1}.host = e.src GROUP BY e.dst) s USING (host))""".stripMargin
-    }.mkString(",\n")
-    head + ",\n" + iters
-  }
-
-  /** Feed-items oracle — shared by the batch query and its stateless
-    * streaming twin (per-row op, so the drained table equals the batch
-    * answer under any micro-batching). */
-  private val FeedItemsSql: String =
-    """WITH base AS (SELECT doc_id, 1 + doc_id%4 AS n FROM documents),
-      |i AS (SELECT doc_id, n, unnest(range(0, n)) AS i FROM base)
-      |SELECT doc_id,
-      |  CASE WHEN doc_id%2=0 THEN 'rss' ELSE 'atom' END AS fmt,
-      |  CAST(i AS BIGINT) AS item_idx,
-      |  'item ' || doc_id || ' ' || i || CASE WHEN (doc_id+i)%5=0 THEN ' & news' ELSE '' END AS title,
-      |  'https://site' || (doc_id%7) || '.example.com/a/' || doc_id || '/' || i AS link,
-      |  CAST(DATE '2020-01-01' + CAST((doc_id+i)%365 AS INTEGER) AS VARCHAR) AS stamp
-      |FROM i ORDER BY doc_id, item_idx""".stripMargin
-
-  /** SCD2 oracle over the planted capture log — shared by the batch query
-    * and its streaming twin (both must produce the same dimension table). */
-  private val Scd2Sql: String =
-    """WITH s AS (
-      |  SELECT doc_id AS k, unnest(range(0, doc_id%3 + 1)) AS version FROM documents),
-      |t AS (SELECT k, version, 1704067200 + version*864000 + (k%97)*3600 AS t FROM s),
-      |v AS (SELECT k, version, t AS valid_from,
-      |        coalesce(lead(t) OVER (PARTITION BY k ORDER BY t), -1) AS valid_to
-      |      FROM t)
-      |SELECT k, CAST(version AS BIGINT) AS version,
-      |       CAST(valid_from AS BIGINT) AS valid_from,
-      |       CAST(valid_to AS BIGINT) AS valid_to,
-      |       CAST(CASE WHEN valid_to = -1 THEN 1 ELSE 0 END AS BIGINT) AS is_current
-      |FROM v ORDER BY k, version""".stripMargin
-
-  /** Unrolled HITS CTE chain over the synthetic host graph (same edge recipe
-    * as hostRankCtes): per round k, auth half (hub-weighted in-edge sum,
-    * max-renormalized with one trunc division) then hub half symmetrically.
-    * Python-validated 7/7 at sf0.01 and sf0.001 (tools/hits_check.py). */
-  private def hitsCtes(rounds: Int): String = {
-    val head =
-      """WITH e0 AS MATERIALIZED (
-        |  SELECT 'site' || (doc_id%7) || '.example.com' AS src,
-        |         'site' || ((2*doc_id+1)%7) || '.example.com' AS dst FROM documents
-        |  UNION ALL
-        |  SELECT 'site' || (doc_id%7) || '.example.com' AS src,
-        |         'site' || ((3*doc_id+2)%7) || '.example.com' AS dst FROM documents WHERE doc_id%3=0
-        |  UNION ALL
-        |  SELECT 'site' || (doc_id%7) || '.example.com' AS src,
-        |         'site0.example.com' AS dst FROM documents WHERE doc_id%5<2),
-        |e AS MATERIALIZED (SELECT src, dst, CAST(count(*) AS BIGINT) AS weight FROM e0 GROUP BY src, dst),
-        |nodes AS MATERIALIZED (SELECT src AS host FROM e UNION SELECT dst FROM e),
-        |h0 AS MATERIALIZED (SELECT host, 1000000 AS hub FROM nodes)""".stripMargin
-    val iters = (1 to rounds).map { k =>
-      s"""a${k}r AS MATERIALIZED (SELECT e.dst AS host, sum(h${k - 1}.hub * e.weight) AS raw
-         |  FROM e JOIN h${k - 1} ON h${k - 1}.host = e.src GROUP BY e.dst),
-         |a$k AS MATERIALIZED (SELECT n.host, coalesce((a${k}r.raw * 1000000) // (SELECT max(raw) FROM a${k}r), 0) AS auth
-         |  FROM nodes n LEFT JOIN a${k}r USING (host)),
-         |h${k}r AS MATERIALIZED (SELECT e.src AS host, sum(a$k.auth * e.weight) AS raw
-         |  FROM e JOIN a$k ON a$k.host = e.dst GROUP BY e.src),
-         |h$k AS MATERIALIZED (SELECT n.host, coalesce((h${k}r.raw * 1000000) // (SELECT max(raw) FROM h${k}r), 0) AS hub
-         |  FROM nodes n LEFT JOIN h${k}r USING (host))""".stripMargin
-    }.mkString(",\n")
-    head + ",\n" + iters
-  }
-
-  def oracleSql: Map[String, String] = Map(
-    "fulltext_skew_dehyphenate" -> DehypheOracleSql,
-    "fulltext_skew_ro" -> RoLastWinsOracleSql,
-    "fulltext_extract" ->
-      """SELECT 'doc://' || doc_id AS url,
-        |       array_to_string([array_to_string(words[i:i+7], ' ')
-        |                        for i in range(1, len(words)+1, 8)], chr(10)) AS extracted_text
-        |FROM (SELECT doc_id, string_split(text, ' ') AS words FROM documents)""".stripMargin,
-    // xml_dir_ingest: byte-identical to the parquet path by contract, so the
-    // oracle is fulltext_extract's verbatim — a diff here means the
-    // file-landing path lost or altered bytes
-    "xml_dir_ingest" ->
-      """SELECT 'doc://' || doc_id AS url,
-        |       array_to_string([array_to_string(words[i:i+7], ' ')
-        |                        for i in range(1, len(words)+1, 8)], chr(10)) AS extracted_text
-        |FROM (SELECT doc_id, string_split(text, ' ') AS words FROM documents)""".stripMargin,
-    "fulltext_ro_lastwins" -> RoLastWinsOracleSql,
-    "page_stats" ->
-      """SELECT 'doc://' || doc_id AS url,
-        |       1::BIGINT AS textregions, 0::BIGINT AS tableregions, 0::BIGINT AS tablecells,
-        |       CAST(ceil(nw / 8.0) AS BIGINT) AS textlines,
-        |       nw AS words,
-        |       nc - (CAST(ceil(nw / 8.0) AS BIGINT) - 1) AS glyphs
-        |FROM (SELECT doc_id, CAST(len(string_split(text,' ')) AS BIGINT) AS nw,
-        |             CAST(length(text) AS BIGINT) AS nc FROM documents)""".stripMargin,
-    "corpus_stats" ->
-      """SELECT count(*) AS pages,
-        |       count(*)::BIGINT AS textregions, 0::BIGINT AS tableregions,
-        |       CAST(sum(ceil(len(string_split(text,' ')) / 8.0)) AS BIGINT) AS textlines,
-        |       CAST(sum(len(string_split(text,' '))) AS BIGINT) AS words,
-        |       CAST(sum(length(text) - ceil(len(string_split(text,' ')) / 8.0) + 1) AS BIGINT) AS glyphs
-        |FROM documents""".stripMargin,
-    "fulltext_columnar" ->
-      """SELECT 'doc://' || doc_id AS url,
-        |       array_to_string([array_to_string(words[i:i+7], ' ')
-        |                        for i in range(1, len(words)+1, 8)], chr(10)) AS extracted_text
-        |FROM (SELECT doc_id, string_split(text, ' ') AS words FROM documents)""".stripMargin,
-    "xml_extras_roundtrip" ->
-      """SELECT 'doc://'||doc_id AS url,
-        |  array_to_string([array_to_string(words[i:i+7], ' ')
-        |                   for i in range(1, len(words)+1, 8)], chr(10)) AS extracted_text,
-        |  '<Metadata><Creator>gen-'||(doc_id%7)||'</Creator></Metadata>' AS metadata_xml,
-        |  'structure {type:paragraph; idx:'||(doc_id%5)||'}' AS region_custom,
-        |  '<TextStyle fontSize="'||(doc_id%7)||'.5" bold="true"></TextStyle>' AS region_style,
-        |  'readingDirection {ltr} n:'||(doc_id%7) AS page_custom
-        |FROM (SELECT doc_id, string_split(text, ' ') AS words FROM documents)""".stripMargin,
-    "fulltext_with_words" ->
-      """SELECT 'doc://'||doc_id AS url,
-        |  array_to_string(flatten([[words[(i-1)*8+1],
-        |                            array_to_string(words[(i-1)*8+1:(i-1)*8+8],' ')]
-        |                           for i in range(1, CAST(ceil(len(words)/8.0) AS BIGINT)+1)]), chr(10)) AS extracted_text
-        |FROM (SELECT doc_id, string_split(text,' ') AS words FROM documents)""".stripMargin,
-    "fulltext_skew_aware" ->
-      """SELECT 'doc://' || doc_id AS url,
-        |       array_to_string([array_to_string(words[i:i+7], ' ')
-        |                        for i in range(1, len(words)+1, 8)], chr(10)) AS extracted_text
-        |FROM (SELECT doc_id, string_split(text, ' ') AS words FROM documents)""".stripMargin,
-    "fulltext_sql_expr" ->
-      """SELECT 'doc://' || doc_id AS url,
-        |       array_to_string([array_to_string(words[i:i+7], ' ')
-        |                        for i in range(1, len(words)+1, 8)], chr(10)) AS extracted_text
-        |FROM (SELECT doc_id, string_split(text, ' ') AS words FROM documents)""".stripMargin,
-    "fulltext_dehyphenate" -> DehypheOracleSql,
-    "xml_roundtrip" ->
-      """SELECT 'doc://' || doc_id AS url,
-        |       array_to_string([array_to_string(words[i:i+7], ' ')
-        |                        for i in range(1, len(words)+1, 8)], chr(10)) AS extracted_text
-        |FROM (SELECT doc_id, string_split(text, ' ') AS words FROM documents)""".stripMargin,
-    "split_region" ->
-      """WITH d AS (SELECT doc_id, CAST(ceil(len(string_split(text,' '))/8.0) AS BIGINT) AS nl FROM documents)
-        |SELECT 'doc://'||doc_id AS url, 0 AS side, CAST(nl//2 AS BIGINT) AS n_lines,
-        |       CAST(300*(60*(nl//2 - 1)+50) AS BIGINT) AS area
-        |FROM d WHERE nl >= 3
-        |UNION ALL
-        |SELECT 'doc://'||doc_id, 1, CAST((nl+1)//2 AS BIGINT),
-        |       CAST(300*(60*((nl+1)//2 - 1)+50) AS BIGINT)
-        |FROM d WHERE nl >= 3""".stripMargin,
-    "word_freq_top20" ->
-      """SELECT word, count(*) AS n
-        |FROM (SELECT unnest(string_split(text,' ')) AS word FROM documents)
-        |GROUP BY word ORDER BY n DESC, word ASC LIMIT 20""".stripMargin,
-    "validation_report" ->
-      """WITH d AS (SELECT doc_id, 'doc://'||doc_id AS url, doc_id % 5 AS m FROM documents)
-        |SELECT url, 'r0l0' AS element_id, 'ring_not_valid' AS rule FROM d WHERE m = 1
-        |UNION ALL SELECT url, 'r0l0', 'baseline_missing' FROM d WHERE m = 1
-        |UNION ALL SELECT url, 'r0l0', 'insufficient_points' FROM d WHERE m = 2
-        |UNION ALL SELECT url, 'r0l0', 'baseline_missing' FROM d WHERE m = 3
-        |UNION ALL SELECT url, 'r0l0', 'baseline_outside' FROM d WHERE m = 4
-        |UNION ALL SELECT url, 'r0lE', 'text_empty' FROM d WHERE doc_id % 7 = 0""".stripMargin,
-    "repair_summary" ->
-      """SELECT 'doc://'||doc_id AS url,
-        |       CAST(CASE WHEN doc_id%5 IN (1,2) THEN 1 ELSE 0 END AS BIGINT) AS n_hull,
-        |       CAST(CASE WHEN doc_id%5 IN (1,3) THEN 1 ELSE 0 END AS BIGINT) AS n_baseline_missing,
-        |       CAST(CASE WHEN doc_id%5 = 4 THEN 1 ELSE 0 END AS BIGINT) AS n_baseline_outside
-        |FROM documents WHERE doc_id%5 IN (1,2,3,4)""".stripMargin,
-    "repair_extract" ->
-      """SELECT 'doc://' || doc_id AS url,
-        |       array_to_string([array_to_string(words[i:i+7], ' ')
-        |                        for i in range(1, len(words)+1, 8)], chr(10)) AS extracted_text
-        |FROM (SELECT doc_id, string_split(text, ' ') AS words FROM documents)""".stripMargin,
-    "dsv_export" ->
-      """WITH d AS (SELECT doc_id, string_split(text,' ') AS words FROM documents),
-        |     l AS (SELECT doc_id, words, CAST(ceil(len(words)/8.0) AS BIGINT) AS nl FROM d)
-        |SELECT 'doc://'||doc_id AS url, 'r0l'||(i-1) AS id,
-        |       array_to_string(words[(i-1)*8+1:(i-1)*8+8], ' ') AS text,
-        |       0 AS region,
-        |       120 AS start_x, CAST(100+60*(i-1)+40 AS INT) AS start_y,
-        |       500 AS mean_x, CAST(100+60*(i-1)+40 AS INT) AS mean_y,
-        |       880 AS end_x, CAST(100+60*(i-1)+40 AS INT) AS end_y,
-        |       40000 AS area, 50 AS width, 800 AS length
-        |FROM l, UNNEST(generate_series(1, nl)) AS t(i)""".stripMargin,
-    // same geometry as dsv_export (the hyphenated lift shares the line grid),
-    // text column from the dehyphe CASE the fulltext_dehyphenate oracle uses
-    "dsv_dehyphenated" ->
-      """WITH d AS (SELECT doc_id, string_split(text,' ') AS words FROM documents),
-        |     l AS (SELECT doc_id, words, CAST(ceil(len(words)/8.0) AS BIGINT) AS nl FROM d)
-        |SELECT 'doc://'||doc_id AS url, 'r0l'||(i-1) AS id,
-        |       CASE
-        |         WHEN (i-1)%3=2 AND i < nl THEN array_to_string(words[(i-1)*8+1:(i-1)*8+8],' ') || words[i*8+1]
-        |         WHEN (i-1)%3=0 AND i > 1 THEN coalesce(array_to_string(words[(i-1)*8+2:(i-1)*8+8],' '), '')
-        |         ELSE array_to_string(words[(i-1)*8+1:(i-1)*8+8],' ')
-        |       END AS text,
-        |       0 AS region,
-        |       120 AS start_x, CAST(100+60*(i-1)+40 AS INT) AS start_y,
-        |       500 AS mean_x, CAST(100+60*(i-1)+40 AS INT) AS mean_y,
-        |       880 AS end_x, CAST(100+60*(i-1)+40 AS INT) AS end_y,
-        |       40000 AS area, 50 AS width, 800 AS length
-        |FROM l, UNNEST(generate_series(1, nl)) AS t(i)""".stripMargin,
-    "extend_lines" ->
-      """WITH d AS (SELECT doc_id, CAST(ceil(len(string_split(text,' '))/8.0) AS BIGINT) AS nl FROM documents),
-        |     g AS (SELECT doc_id, nl, i,
-        |                  CASE WHEN nl = 1 THEN 76 WHEN i = 1 THEN 71 WHEN i = nl THEN 65 ELSE 60 END AS h
-        |           FROM d, UNNEST(generate_series(1, nl)) AS t(i))
-        |SELECT 'doc://'||doc_id AS url, 'r0l'||(i-1) AS id,
-        |       CAST(832*h AS BIGINT) AS area, CAST(h AS BIGINT) AS width, CAST(832 AS BIGINT) AS length
-        |FROM g""".stripMargin,
-    "sort_and_merge" ->
-      """SELECT 'doc://' || doc_id AS url,
-        |       array_to_string([array_to_string(words[i:i+7], ' ')
-        |                        for i in range(1, len(words)+1, 8)], chr(10)) AS extracted_text
-        |FROM (SELECT doc_id, string_split(text, ' ') AS words FROM documents)""".stripMargin,
-    "delete_words" ->
-      """SELECT 'doc://' || doc_id AS url,
-        |       array_to_string([array_to_string(words[i:i+7], ' ')
-        |                        for i in range(1, len(words)+1, 8)], chr(10)) AS extracted_text
-        |FROM (SELECT doc_id, string_split(text, ' ') AS words FROM documents)""".stripMargin,
-    "delete_line_textequiv" ->
-      """SELECT 'doc://'||doc_id AS url,
-        |  array_to_string([words[(i-1)*8+1] for i in range(1, CAST(ceil(len(words)/8.0) AS BIGINT)+1)], chr(10)) AS extracted_text
-        |FROM (SELECT doc_id, string_split(text,' ') AS words FROM documents)""".stripMargin,
-    "delete_textlines" ->
-      """SELECT 'doc://'||doc_id AS url, '' AS extracted_text FROM documents""".stripMargin,
-    "pseudo_literal_report" ->
-      """WITH d AS (SELECT doc_id, CAST(ceil(len(string_split(text,' '))/8.0) AS BIGINT) AS nl FROM documents)
-        |SELECT 'doc://'||doc_id AS url, 'r0l'||(i-1) AS element_id, 'pseudo_error' AS rule
-        |FROM d, UNNEST(generate_series(1, nl)) AS t(i)""".stripMargin,
-    "pseudo_intended" ->
-      """WITH d AS (SELECT doc_id, CAST(ceil(len(string_split(text,' '))/8.0) AS BIGINT) AS nl FROM documents)
-        |SELECT 'doc://'||doc_id AS url, 'r0l'||(i-1) AS id,
-        |       104 AS bl_sx, CAST(100+60*(i-1)+50 AS INT) AS bl_sy, 896 AS bl_ex, CAST(100+60*(i-1)+50 AS INT) AS bl_ey,
-        |       CAST(25344 AS BIGINT) AS area, CAST(32 AS BIGINT) AS width, CAST(792 AS BIGINT) AS length
-        |FROM d, UNNEST(generate_series(1, nl)) AS t(i)""".stripMargin,
-    "translate_lines" ->
-      """WITH d AS (SELECT doc_id, CAST(ceil(len(string_split(text,' '))/8.0) AS BIGINT) AS nl FROM documents)
-        |SELECT 'doc://'||doc_id AS url, 'r0l'||(i-1) AS id,
-        |       105 AS poly_x0, CAST(100+60*(i-1)+7 AS INT) AS poly_y0,
-        |       125 AS bl_sx, CAST(100+60*(i-1)+47 AS INT) AS bl_sy, 885 AS bl_ex, CAST(100+60*(i-1)+47 AS INT) AS bl_ey
-        |FROM d, UNNEST(generate_series(1, nl)) AS t(i)""".stripMargin,
-    "extend_baseline" ->
-      """WITH d AS (SELECT doc_id, CAST(ceil(len(string_split(text,' '))/8.0) AS BIGINT) AS nl FROM documents)
-        |SELECT 'doc://'||doc_id AS url, 'r0l'||(i-1) AS id,
-        |       100 AS bl_sx, CAST(100+60*(i-1)+40 AS INT) AS bl_sy, 900 AS bl_ex, CAST(100+60*(i-1)+40 AS INT) AS bl_ey
-        |FROM d, UNNEST(generate_series(1, nl)) AS t(i)""".stripMargin,
-    // ---- messy-geometry family: m = doc_id % 7 selects the planted defect on
-    // line 0 (see PagesFromDocuments.messyDoc); every other line follows the
-    // clean arithmetic. Geometry constants derive from the planted shapes:
-    // bite-concave area 40000-200*20=36000; rotated 120x50 rect area 6000;
-    // collinear ring area 0; extend constants measured once from the
-    // deterministic JTS pipeline and pinned by MessySpec. ----
-    "validate_messy" ->
-      """SELECT 'doc://'||doc_id AS url, 'r0l0' AS element_id,
-        |       unnest(CASE WHEN doc_id % 7 = 3 THEN ['ring_not_valid','baseline_pts_outside']
-        |                   WHEN doc_id % 7 = 4 THEN ['ring_not_valid','baseline_outside']
-        |                   ELSE []::VARCHAR[] END) AS rule
-        |FROM documents""".stripMargin,
-    "repair_messy" ->
-      """SELECT 'doc://'||doc_id AS url, 'r0l0' AS element_id,
-        |       unnest(CASE WHEN doc_id % 7 = 3 THEN ['ring_not_valid','hull_applied']
-        |                   WHEN doc_id % 7 = 4 THEN ['ring_not_valid','repair_error']
-        |                   ELSE []::VARCHAR[] END) AS rule
-        |FROM documents""".stripMargin,
-    "repair_messy_geom" ->
-      """WITH d AS (SELECT doc_id, doc_id % 7 AS m,
-        |                  CAST(ceil(len(string_split(text,' '))/8.0) AS BIGINT) AS nl
-        |           FROM documents),
-        |g AS (SELECT doc_id, m, i FROM d, UNNEST(generate_series(1, nl)) AS t(i))
-        |SELECT 'doc://'||doc_id AS url, 'r0l'||(i-1) AS id,
-        |       CAST(CASE WHEN i = 1 AND m = 1 THEN 8 ELSE 4 END AS BIGINT) AS n_points,
-        |       CAST(CASE WHEN i > 1 THEN 40000
-        |                 WHEN m = 1 THEN 36000 WHEN m = 2 THEN 6000 WHEN m = 4 THEN 0
-        |                 ELSE 40000 END AS BIGINT) AS area
-        |FROM g
-        |UNION ALL
-        |SELECT 'doc://'||doc_id, 'rxl0', 4, 40000 FROM d WHERE m = 6""".stripMargin,
-    "extend_messy" ->
-      """WITH d AS (SELECT doc_id, doc_id % 7 AS m,
-        |                  CAST(ceil(len(string_split(text,' '))/8.0) AS BIGINT) AS nl
-        |           FROM documents),
-        |g AS (SELECT doc_id, m, nl, i,
-        |             -- clean height: 82 minus midline cut below (11), cut
-        |             -- above (11), and the 6px parent bottom clip on the last
-        |             -- line; a line after a non-touching (rotated/bow-tie/
-        |             -- degenerate) line 0 keeps its top uncut
-        |             CASE WHEN nl = 1 THEN 76
-        |                  WHEN i = 1 THEN 71
-        |                  WHEN i = 2 AND m IN (2,3,4) THEN (CASE WHEN i = nl THEN 76 ELSE 71 END)
-        |                  WHEN i = nl THEN 65 ELSE 60 END AS h
-        |      FROM d, UNNEST(generate_series(1, nl)) AS t(i))
-        |SELECT 'doc://'||doc_id AS url, 'r0l'||(i-1) AS id,
-        |       CAST(CASE WHEN i = 1 AND m = 2 THEN 12511
-        |                 WHEN i = 1 AND m = 3 THEN 65682
-        |                 WHEN i = 1 AND m = 4 THEN 25600
-        |                 ELSE 832*h END AS BIGINT) AS area,
-        |       CAST(CASE WHEN i = 1 AND m IN (2,3) THEN 82
-        |                 WHEN i = 1 AND m = 4 THEN 32
-        |                 ELSE h END AS BIGINT) AS width,
-        |       CAST(CASE WHEN i = 1 AND m = 2 THEN 152
-        |                 WHEN i = 1 AND m = 3 THEN 801
-        |                 WHEN i = 1 AND m = 4 THEN 800
-        |                 ELSE 832 END AS BIGINT) AS length
-        |FROM g
-        |UNION ALL
-        |SELECT 'doc://'||doc_id, 'rxl0', 34112, 82, 416 FROM d WHERE m = 6""".stripMargin,
-    "extend_baseline_messy" ->
-      """WITH d AS (SELECT doc_id, doc_id % 7 AS m,
-        |                  CAST(ceil(len(string_split(text,' '))/8.0) AS BIGINT) AS nl
-        |           FROM documents)
-        |SELECT 'doc://'||doc_id AS url, 'r0l'||(i-1) AS id,
-        |       CAST(CASE WHEN i = 1 AND m = 2 THEN 173 ELSE 100 END AS INT) AS bl_sx,
-        |       CAST(CASE WHEN i = 1 AND m = 2 THEN 115 WHEN i = 1 AND m = 4 THEN 100
-        |                 ELSE 100+60*(i-1)+40 END AS INT) AS bl_sy,
-        |       CAST(CASE WHEN i = 1 AND m = 2 THEN 292 ELSE 900 END AS INT) AS bl_ex,
-        |       CAST(CASE WHEN i = 1 AND m = 2 THEN 157 WHEN i = 1 AND m = 4 THEN 100
-        |                 ELSE 100+60*(i-1)+40 END AS INT) AS bl_ey
-        |FROM d, UNNEST(generate_series(1, nl)) AS t(i)
-        |UNION ALL
-        |SELECT 'doc://'||doc_id, 'rxl0', 100, 1040, 900, 1040 FROM d WHERE m = 6""".stripMargin,
-    "q1_agg" ->
-      """SELECT l_returnflag, l_linestatus,
-        |       CAST(sum(CAST(round(l_quantity) AS BIGINT)) AS BIGINT) AS sum_qty,
-        |       CAST(sum(CAST(round(l_extendedprice*100) AS BIGINT)) AS BIGINT) AS sum_base_price_cents,
-        |       CAST(sum(CAST(round(l_extendedprice*(1-l_discount)*100) AS BIGINT)) AS BIGINT) AS sum_disc_price_cents,
-        |       count(*) AS count_order
-        |FROM lineitem WHERE l_shipdate <= TIMESTAMP '1998-09-02'
-        |GROUP BY l_returnflag, l_linestatus""".stripMargin,
-    "q3_topk" ->
-      """SELECT l_orderkey,
-        |       CAST(sum(CAST(round(l_extendedprice*(1-l_discount)*100) AS BIGINT)) AS BIGINT) AS revenue_cents
-        |FROM lineitem GROUP BY l_orderkey
-        |ORDER BY revenue_cents DESC, l_orderkey ASC LIMIT 10""".stripMargin,
-    "q4_window" ->
-      """SELECT o_custkey, first_orderkey, first_orderdate FROM (
-        |  SELECT o_custkey, o_orderkey AS first_orderkey,
-        |         strftime(o_orderdate, '%Y-%m-%d') AS first_orderdate,
-        |         row_number() OVER (PARTITION BY o_custkey ORDER BY o_orderdate, o_orderkey) AS rn
-        |  FROM orders) WHERE rn = 1""".stripMargin,
-    "q5_multijoin" ->
-      """SELECT r_name, n_name,
-        |       CAST(sum(CAST(round(l_extendedprice*(1-l_discount)*100) AS BIGINT)) AS BIGINT) AS revenue_cents,
-        |       count(*) AS n_lines
-        |FROM lineitem
-        |JOIN orders   ON l_orderkey = o_orderkey
-        |JOIN customer ON o_custkey = c_custkey
-        |JOIN nation   ON c_nationkey = n_nationkey
-        |JOIN region   ON n_regionkey = r_regionkey
-        |GROUP BY r_name, n_name""".stripMargin,
-    "q6_filter" ->
-      """SELECT CAST(sum(CAST(round(l_extendedprice*l_discount*100) AS BIGINT)) AS BIGINT) AS revenue_cents,
-        |       count(*) AS n_lines
-        |FROM lineitem
-        |WHERE l_shipdate >= TIMESTAMP '1996-01-01' AND l_shipdate < TIMESTAMP '1997-01-01'
-        |  AND l_discount >= 0.05 AND l_discount <= 0.07 AND l_quantity < 24""".stripMargin,
-    "q7_semijoin" ->
-      """SELECT c_mktsegment, count(*) AS n_customers_with_orders
-        |FROM customer
-        |WHERE EXISTS (SELECT 1 FROM orders WHERE o_custkey = c_custkey)
-        |GROUP BY c_mktsegment""".stripMargin,
-    "q8_distinct" ->
-      """SELECT count(DISTINCT l_partkey) AS n_parts,
-        |       count(DISTINCT l_suppkey) AS n_supps,
-        |       count(DISTINCT l_orderkey) AS n_orders
-        |FROM lineitem""".stripMargin,
-    "q11_sessionize" -> Q11SessionizeOracleSql,
-    "stream_sessionize" -> Q11SessionizeOracleSql,
-    "q12_rollup" ->
-      """SELECT coalesce(o_orderstatus, '<all>') AS status,
-        |       coalesce(o_orderpriority, '<all>') AS priority,
-        |       count(*) AS n,
-        |       CAST(sum(CAST(round(o_totalprice*100) AS BIGINT)) AS BIGINT) AS total_cents,
-        |       CAST(grouping(o_orderstatus)*2 + grouping(o_orderpriority) AS BIGINT) AS gid
-        |FROM orders
-        |GROUP BY ROLLUP (o_orderstatus, o_orderpriority)""".stripMargin,
-    "q10_events_window" ->
-      """SELECT strftime(date_trunc('hour', ts), '%Y-%m-%d %H:%M:%S') AS hour, event_type,
-        |       count(*) AS n,
-        |       CAST(sum(CAST(round(value*100) AS BIGINT)) AS BIGINT) AS value_cents
-        |FROM events GROUP BY 1, 2""".stripMargin,
-    "dedup_exact" ->
-      """SELECT min(doc_id) AS keep_id, count(*) AS n_copies
-        |FROM documents GROUP BY text""".stripMargin,
-    "stream_dedup_exact" ->
-      """SELECT min(doc_id) AS keep_id, count(*) AS n_copies
-        |FROM documents GROUP BY text""".stripMargin,
-    // cross_corpus_dedup: the oracle recomputes the verdict by STRING
-    // equality against the base corpus; the engine must reach the same
-    // verdict through the (xxhash64, length) narrow-key join
-    "cross_corpus_dedup" ->
-      """WITH inc AS (SELECT doc_id + 1000000 AS doc_id,
-        |                    CASE WHEN doc_id%2=1 THEN text ELSE 'new ' || text END AS text
-        |             FROM documents)
-        |SELECT i.doc_id AS doc_id,
-        |       CAST(CASE WHEN EXISTS (SELECT 1 FROM documents b WHERE b.text = i.text)
-        |            THEN 0 ELSE 1 END AS BIGINT) AS is_new
-        |FROM inc i""".stripMargin,
-    // stream_cross_corpus: identical recompute — the stateless stream-static
-    // join must land the exact batch answer
-    "stream_cross_corpus" ->
-      """WITH inc AS (SELECT doc_id + 1000000 AS doc_id,
-        |                    CASE WHEN doc_id%2=1 THEN text ELSE 'new ' || text END AS text
-        |             FROM documents)
-        |SELECT i.doc_id AS doc_id,
-        |       CAST(CASE WHEN EXISTS (SELECT 1 FROM documents b WHERE b.text = i.text)
-        |            THEN 0 ELSE 1 END AS BIGINT) AS is_new
-        |FROM inc i""".stripMargin,
-    // stream_simhash_candidates: full SQL recompute of the simhash (the
-    // simhash_neardup CTE), the 20 Manku 3-of-6-block keys (spec table =
-    // TextHash.SimBlockTriples in combinations order, 11-bit lane packing,
-    // t<<34 table tag) and the min-partner-per-doc verdict. Python-validated
-    // (581/1000 candidates at sf0.01: all 500 planted tail-drop twins + 81
-    // organic collisions — a candidate filter over-generates by design).
-    "stream_simhash_candidates" ->
-      ("""WITH planted AS (
-        |  SELECT doc_id, text FROM documents
-        |  UNION ALL
-        |  SELECT doc_id + 1000000,
-        |         substring(text, 1, length(text) - instr(reverse(text), ' '))
-        |  FROM documents),
-        |toks AS (SELECT doc_id, unnest(string_split(text, ' ')) AS tok FROM planted),
-        |th AS (SELECT doc_id,
-        |         list_reduce(
-        |           list_prepend(14695981039346656037::HUGEINT,
-        |                        [unicode(c)::HUGEINT for c in string_split(tok, '')]),
-        |           (h, b) -> ((h - h % 128 + xor((h % 128)::BIGINT, b::BIGINT)::HUGEINT)
-        |                      * 1099511628211::HUGEINT) % (1::HUGEINT << 64)) AS h
-        |  FROM toks),
-        |bits AS (SELECT doc_id, b,
-        |         sum(CASE WHEN (th.h // (1::HUGEINT << b)) % 2 = 1 THEN 1 ELSE -1 END) AS cnt
-        |  FROM th, range(64) r(b) GROUP BY doc_id, b),
-        |hu AS (SELECT doc_id,
-        |              sum(CASE WHEN cnt > 0 THEN (1::HUGEINT << b) ELSE 0::HUGEINT END) AS v
-        |       FROM bits GROUP BY doc_id),
-        |spec(t, o0, w0, o1, w1, o2, w2) AS (VALUES """ + SimKeySpecSql + """),
-        |keys AS (SELECT doc_id,
-        |                CAST(t * (1::HUGEINT << 34)
-        |                   + ((v // (1::HUGEINT << o0)) % (1::HUGEINT << w0)) * 4194304
-        |                   + ((v // (1::HUGEINT << o1)) % (1::HUGEINT << w1)) * 2048
-        |                   + ((v // (1::HUGEINT << o2)) % (1::HUGEINT << w2)) AS BIGINT) AS key
-        |         FROM hu, spec),
-        |cand AS (SELECT a.doc_id, min(b.doc_id) AS mn
-        |         FROM keys a JOIN keys b USING (key) GROUP BY a.doc_id)
-        |SELECT doc_id,
-        |       CAST(CASE WHEN mn < doc_id THEN mn ELSE -1 END AS BIGINT) AS partner,
-        |       CAST(CASE WHEN mn < doc_id THEN 1 ELSE 0 END AS BIGINT) AS is_cand
-        |FROM cand""").stripMargin,
-    "corpus_pipeline" ->
-      """WITH RECURSIVE
-        |u AS (SELECT min(doc_id) AS doc_id FROM documents GROUP BY doc_id%250),
-        |d1 AS (SELECT d.doc_id, d.text FROM documents d JOIN u USING (doc_id)),
-        |w AS (SELECT doc_id, string_split('boiler plate nav menu spam footer links here ' || text, ' ') AS ws FROM d1),
-        |c AS (SELECT doc_id, i, array_to_string(ws[(i-1)*8+1:(i-1)*8+8], ' ') AS line
-        |      FROM w, UNNEST(generate_series(1, CAST(ceil(len(ws)/8.0) AS BIGINT))) t(i)),
-        |f AS (SELECT line, count(DISTINCT doc_id) AS n FROM c GROUP BY line),
-        |k AS (SELECT c.doc_id, c.i, c.line FROM c JOIN f USING (line) WHERE f.n < 3),
-        |r AS (SELECT doc_id, string_agg(line, ' ' ORDER BY i) AS ct FROM k GROUP BY doc_id),
-        |d2 AS (SELECT d1.doc_id, coalesce(r.ct, '') AS ct FROM d1 LEFT JOIN r ON d1.doc_id = r.doc_id),
-        |q AS (SELECT doc_id, ct, CAST(len(string_split(ct,' ')) AS BIGINT) AS nw,
-        |             CAST(length(ct) - (len(string_split(ct,' ')) - 1) AS BIGINT) AS wc FROM d2),
-        |d3 AS (SELECT doc_id, ct, nw FROM q WHERE nw BETWEEN 50 AND 100000 AND wc >= 3*nw AND wc <= 10*nw),
-        |bw AS (SELECT doc_id, string_split(text,' ') AS ws FROM documents WHERE doc_id%41=0),
-        |bench AS (SELECT DISTINCT array_to_string(ws[1:13],' ') AS gram FROM bw WHERE len(ws)>=13),
-        |g3 AS (SELECT doc_id, unnest(CASE WHEN len(string_split(ct,' ')) >= 13
-        |              THEN [array_to_string(string_split(ct,' ')[i:i+12],' ') for i in range(1, len(string_split(ct,' '))-11)]
-        |              ELSE [] END) AS gram FROM d3),
-        |cont AS (SELECT DISTINCT g3.doc_id FROM g3 JOIN bench USING (gram)),
-        |d4 AS (SELECT d3.doc_id, d3.ct, d3.nw FROM d3 LEFT JOIN cont ON d3.doc_id = cont.doc_id WHERE cont.doc_id IS NULL),
-        |dw AS (SELECT doc_id, string_split(ct,' ') AS w FROM d4),
-        |sh AS (SELECT doc_id,
-        |              CASE WHEN len(w) < 3 THEN [array_to_string(w, ' ')]
-        |                   ELSE list_distinct([array_to_string(w[i:i+2],' ') for i in range(1, len(w)-1)]) END AS s
-        |       FROM dw),
-        |pairs AS (
-        |  SELECT x.doc_id AS a, y.doc_id AS b
-        |  FROM sh x, sh y
-        |  WHERE x.doc_id < y.doc_id
-        |    AND 5*len(list_intersect(x.s, y.s)) >= 4*(len(x.s) + len(y.s) - len(list_intersect(x.s, y.s)))),
-        |edges AS (SELECT a AS u, b AS v FROM pairs UNION SELECT b, a FROM pairs),
-        |reach(u, r) AS (
-        |  SELECT doc_id, doc_id FROM d4
-        |  UNION
-        |  SELECT e.v, reach.r FROM reach JOIN edges e ON e.u = reach.u),
-        |clus AS (SELECT u AS doc_id, min(r) AS cluster_id FROM reach GROUP BY u)
-        |SELECT d4.doc_id, d4.nw AS n_words
-        |FROM d4 JOIN clus ON d4.doc_id = clus.doc_id
-        |WHERE clus.cluster_id = d4.doc_id""".stripMargin,
-    "line_dedup" ->
-      """WITH w AS (SELECT doc_id, string_split('boiler plate nav menu spam footer links here ' || text, ' ') AS ws FROM documents),
-        |c AS (SELECT doc_id, i, array_to_string(ws[(i-1)*8+1:(i-1)*8+8], ' ') AS line
-        |      FROM w, UNNEST(generate_series(1, CAST(ceil(len(ws)/8.0) AS BIGINT))) t(i)),
-        |f AS (SELECT line, count(DISTINCT doc_id) AS n FROM c GROUP BY line),
-        |k AS (SELECT c.doc_id, c.i, c.line FROM c JOIN f USING (line) WHERE f.n < 3),
-        |r AS (SELECT doc_id, string_agg(line, ' ' ORDER BY i) AS clean_text FROM k GROUP BY doc_id)
-        |SELECT d.doc_id, coalesce(r.clean_text, '') AS clean_text
-        |FROM documents d LEFT JOIN r ON d.doc_id = r.doc_id""".stripMargin,
-    "text_quality" ->
-      """SELECT doc_id,
-        |       CAST(len(string_split(text,' ')) AS BIGINT) AS n_tokens,
-        |       CAST(length(text) AS BIGINT) AS n_chars,
-        |       CAST(len(list_filter(string_split(text,' '), w -> w IN ('the','a'))) AS BIGINT) AS n_stopwords,
-        |       round(CAST(len(list_filter(string_split(text,' '), w -> w IN ('the','a'))) AS DOUBLE)
-        |             / len(string_split(text,' ')), 6) AS stop_ratio
-        |FROM documents""".stripMargin,
-    // lang_mixture: isqrt in SQL = max k with k*k <= n over a bounded
-    // series (exact, no float sqrt anywhere on either side)
-    "lang_mixture" ->
-      """WITH t AS (SELECT lang, CAST(sum(len(string_split(text,' '))) AS BIGINT) AS n_tokens
-        |           FROM documents GROUP BY lang),
-        |tot AS (SELECT sum(n_tokens) AS tt FROM t),
-        |sq AS (SELECT lang, n_tokens,
-        |              (SELECT max(k) FROM generate_series(0, 100000) g(k) WHERE k*k <= t.n_tokens) AS w
-        |       FROM t),
-        |sw AS (SELECT sum(w) AS swt FROM sq)
-        |SELECT lang, n_tokens,
-        |       CAST(n_tokens * 1000000 // (SELECT tt FROM tot) AS BIGINT) AS natural_ppm,
-        |       CAST(w * 1000000 // (SELECT swt FROM sw) AS BIGINT) AS temp_ppm,
-        |       CAST((w * 1000000 // (SELECT swt FROM sw)) * 10000
-        |            // (n_tokens * 1000000 // (SELECT tt FROM tot)) AS BIGINT) AS boost_bp
-        |FROM sq""".stripMargin,
-    // codeswitch_stats: paragraph 0's language is the lang_id CTE verbatim
-    // (green since r3); planted bank paragraphs have PINNED languages
-    // (Multilingual.BankLang, margins Python-validated >= 9 points), so the
-    // oracle only replays the (doc_id + 7*i) % 6 walk. Validated by
-    // tools/new_ops_oracle_check.py (500/500 vs an independent Python replica
-    // of langIdDetail).
-    "codeswitch_stats" ->
-      """WITH cj AS (SELECT doc_id,
-        |              CAST(length(text) AS BIGINT) AS cps,
-        |              CAST(len(list_filter(string_split(text,''), c -> unicode(c) BETWEEN 19968 AND 40959)) AS BIGINT) AS cjk
-        |            FROM documents),
-        |t AS (SELECT doc_id, lower(text) AS lt, string_split(lower(text),' ') AS toks FROM documents),
-        |s AS (SELECT doc_id, toks, [substring(lt, i, 3) for i in range(1, length(lt)-1)] AS tris FROM t),
-        |sc AS (SELECT doc_id, CAST(len(toks) AS BIGINT) AS n_tokens,
-        |  CAST(3*len(list_filter(toks, w -> w IN ('the','and','of','to','a','in','is','it','that','for'))) + len(list_filter(tris, g -> g IN ('the','ing','ion','and','ent'))) AS BIGINT) AS n_en,
-        |  CAST(3*len(list_filter(toks, w -> w IN ('der','die','und','das','ist','nicht','ein','mit','zu','den'))) + len(list_filter(tris, g -> g IN ('sch','ich','ein','cht','und'))) AS BIGINT) AS n_de,
-        |  CAST(3*len(list_filter(toks, w -> w IN ('le','la','et','les','des','un','une','est','pour','que'))) + len(list_filter(tris, g -> g IN ('ent','les','ion','que','eur'))) AS BIGINT) AS n_fr,
-        |  CAST(3*len(list_filter(toks, w -> w IN ('el','los','las','y','es','una','por','para','con','del'))) + len(list_filter(tris, g -> g IN ('ent','los','cio','ado','que'))) AS BIGINT) AS n_es
-        |  FROM s),
-        |p0 AS (SELECT sc.doc_id,
-        |  CASE WHEN cj.cps > 0 AND 5*cj.cjk > cj.cps THEN 'zh'
-        |       WHEN greatest(n_de, n_en, n_es, n_fr) = 0 THEN 'und'
-        |       WHEN n_de >= n_en AND n_de >= n_es AND n_de >= n_fr THEN 'de'
-        |       WHEN n_en >= n_es AND n_en >= n_fr THEN 'en'
-        |       WHEN n_es >= n_fr THEN 'es' ELSE 'fr' END AS lang
-        |  FROM sc JOIN cj ON sc.doc_id = cj.doc_id),
-        |l0 AS (SELECT doc_id, CAST(0 AS BIGINT) AS i, lang FROM p0),
-        |pl0 AS (SELECT doc_id, unnest(range(1, 3 + CAST(doc_id % 3 AS INT))) AS i FROM documents),
-        |pl AS (SELECT doc_id, CAST(i AS BIGINT) AS i,
-        |         CASE (doc_id + 7*i) % 6 WHEN 0 THEN 'en' WHEN 1 THEN 'en' WHEN 2 THEN 'de'
-        |              WHEN 3 THEN 'fr' WHEN 4 THEN 'es' ELSE 'zh' END AS lang
-        |       FROM pl0),
-        |langs AS (SELECT * FROM l0 UNION ALL SELECT * FROM pl),
-        |counts AS (SELECT doc_id, lang, count(*) AS c FROM langs GROUP BY doc_id, lang),
-        |dom AS (SELECT doc_id, lang, c,
-        |          row_number() OVER (PARTITION BY doc_id ORDER BY c DESC, lang) AS rn
-        |        FROM counts),
-        |sw AS (SELECT a.doc_id, sum(CASE WHEN a.lang != b.lang THEN 1 ELSE 0 END) AS s
-        |       FROM langs a JOIN langs b ON a.doc_id = b.doc_id AND b.i = a.i + 1
-        |       GROUP BY a.doc_id),
-        |np AS (SELECT doc_id, count(*) AS n_paras, count(DISTINCT lang) AS n_langs
-        |       FROM langs GROUP BY doc_id)
-        |SELECT np.doc_id, CAST(np.n_paras AS BIGINT) AS n_paras,
-        |       CAST(np.n_langs AS BIGINT) AS n_langs,
-        |       dom.lang AS dominant_lang, CAST(dom.c AS BIGINT) AS dominant_cnt,
-        |       CAST(coalesce(sw.s, 0) AS BIGINT) AS n_switches
-        |FROM np JOIN dom ON np.doc_id = dom.doc_id AND dom.rn = 1
-        |LEFT JOIN sw ON np.doc_id = sw.doc_id
-        |ORDER BY np.doc_id""".stripMargin,
-    // domain_pareto: replays the plantHosts walk collapsed straight to the
-    // registered domain (the PSL reduction is constant per branch), then the
-    // same rank / cumulative-share window. Integer bp, trunc division.
-    // Validated by tools/new_ops_oracle_check.py (23/23 rows at sf0.01).
-    "domain_pareto" ->
-      """WITH h AS (SELECT doc_id, text,
-        |  CASE doc_id%10
-        |    WHEN 0 THEN 'news' || (doc_id%5) || '.co.uk'
-        |    WHEN 1 THEN 'blog' || (doc_id%7) || '.github.io'
-        |    WHEN 2 THEN 'example.com'
-        |    WHEN 3 THEN CASE WHEN doc_id%9=0 THEN '' ELSE 'corp' || (doc_id%3) || '.com.au' END
-        |    WHEN 4 THEN 'deep' || (doc_id%4) || '.org'
-        |    WHEN 5 THEN 'cdn' || (doc_id%6) || '.net'
-        |    WHEN 6 THEN 'shop' || (doc_id%5) || '.co.jp'
-        |    WHEN 7 THEN '192.168.' || (doc_id%4) || '.10'
-        |    WHEN 8 THEN 'example.zz'
-        |    ELSE 'localhost' END AS domain
-        |  FROM documents),
-        |d AS (SELECT domain, CAST(sum(len(string_split(text,' '))) AS BIGINT) AS n_tokens
-        |      FROM h GROUP BY domain),
-        |r AS (SELECT domain, n_tokens,
-        |        CAST(row_number() OVER (ORDER BY n_tokens DESC, domain) AS BIGINT) AS rnk,
-        |        CAST(sum(n_tokens) OVER (ORDER BY n_tokens DESC, domain
-        |             ROWS UNBOUNDED PRECEDING) AS BIGINT) AS cum_tokens
-        |      FROM d),
-        |t AS (SELECT sum(n_tokens) AS tt FROM d)
-        |SELECT domain, n_tokens, rnk, cum_tokens,
-        |       CAST(cum_tokens * 10000 // tt AS BIGINT) AS cum_share_bp
-        |FROM r, t ORDER BY rnk""".stripMargin,
-    "lang_token_stats" ->
-      """SELECT lang, count(*) AS n_docs,
-        |       CAST(sum(len(string_split(text,' '))) AS BIGINT) AS total_tokens,
-        |       min(n_chars) AS min_chars, max(n_chars) AS max_chars
-        |FROM documents GROUP BY lang""".stripMargin,
-    "stream_extract" ->
-      """SELECT 'doc://' || doc_id AS url,
-        |       array_to_string([array_to_string(words[i:i+7], ' ')
-        |                        for i in range(1, len(words)+1, 8)], chr(10)) AS extracted_text
-        |FROM (SELECT doc_id, string_split(text, ' ') AS words FROM documents)""".stripMargin,
-    "stream_events_window" ->
-      """SELECT strftime(date_trunc('hour', ts), '%Y-%m-%d %H:%M:%S') AS hour, event_type,
-        |       count(*) AS n,
-        |       CAST(sum(CAST(round(value*100) AS BIGINT)) AS BIGINT) AS value_cents
-        |FROM events GROUP BY 1, 2""".stripMargin,
-    "checkpoint_resume" ->
-      """SELECT 'doc://' || doc_id AS url,
-        |       array_to_string([array_to_string(words[i:i+7], ' ')
-        |                        for i in range(1, len(words)+1, 8)], chr(10)) AS extracted_text
-        |FROM (SELECT doc_id, string_split(text, ' ') AS words FROM documents)
-        |WHERE doc_id % 2 = 1""".stripMargin,
-    "checkpoint_resume_table" ->
-      """SELECT 'doc://' || doc_id AS url,
-        |       array_to_string([array_to_string(words[i:i+7], ' ')
-        |                        for i in range(1, len(words)+1, 8)], chr(10)) AS extracted_text
-        |FROM (SELECT doc_id, string_split(text, ' ') AS words FROM documents)
-        |WHERE doc_id % 2 = 1""".stripMargin,
-    // exact per-bucket totals + the colocation invariant (each bucket lives in
-    // exactly one partition after hash repartitioning on the bucket key)
-    "lineage_metrics" ->
-      """SELECT doc_id % 8 AS bucket, count(*) AS docs,
-        |       CAST(sum(length(text)) AS BIGINT) AS bytes,
-        |       1::BIGINT AS n_partitions
-        |FROM documents GROUP BY 1""".stripMargin,
-    "minhash_neardup" ->
-      """WITH planted AS (
-        |  SELECT doc_id, text FROM documents
-        |  UNION ALL
-        |  SELECT doc_id + 1000000, substring(text, instr(text, ' ') + 1) FROM documents),
-        |d AS (SELECT doc_id, string_split(text,' ') AS w FROM planted),
-        |sh AS (SELECT doc_id,
-        |              CASE WHEN len(w) < 3 THEN [array_to_string(w, ' ')]
-        |                   ELSE list_distinct([array_to_string(w[i:i+2],' ') for i in range(1, len(w)-1)]) END AS s
-        |       FROM d),
-        |pairs AS (
-        |  SELECT x.doc_id AS a, y.doc_id AS b,
-        |         CAST(len(list_intersect(x.s, y.s)) AS BIGINT) AS inter,
-        |         CAST(len(x.s) + len(y.s) - len(list_intersect(x.s, y.s)) AS BIGINT) AS un
-        |  FROM sh x, sh y WHERE x.doc_id < y.doc_id)
-        |SELECT a, b, inter, un FROM pairs WHERE 5*inter >= 4*un""".stripMargin,
-    // host_lang_audit: the proven lang_id detection chain, joined back to the
-    // declared label, rolled up per host with the same (count desc, lang asc)
-    // majority tie-break the engine uses.
-    "host_lang_audit" ->
-      """WITH cj AS (SELECT doc_id,
-        |              CAST(length(text) AS BIGINT) AS cps,
-        |              CAST(len(list_filter(string_split(text,''), c -> unicode(c) BETWEEN 19968 AND 40959)) AS BIGINT) AS cjk
-        |            FROM documents),
-        |t AS (SELECT doc_id, lower(text) AS lt, string_split(lower(text),' ') AS toks FROM documents),
-        |s AS (SELECT doc_id, toks, [substring(lt, i, 3) for i in range(1, length(lt)-1)] AS tris FROM t),
-        |sc AS (SELECT doc_id, CAST(len(toks) AS BIGINT) AS n_tokens,
-        |  CAST(3*len(list_filter(toks, w -> w IN ('the','and','of','to','a','in','is','it','that','for'))) + len(list_filter(tris, g -> g IN ('the','ing','ion','and','ent'))) AS BIGINT) AS n_en,
-        |  CAST(3*len(list_filter(toks, w -> w IN ('der','die','und','das','ist','nicht','ein','mit','zu','den'))) + len(list_filter(tris, g -> g IN ('sch','ich','ein','cht','und'))) AS BIGINT) AS n_de,
-        |  CAST(3*len(list_filter(toks, w -> w IN ('le','la','et','les','des','un','une','est','pour','que'))) + len(list_filter(tris, g -> g IN ('ent','les','ion','que','eur'))) AS BIGINT) AS n_fr,
-        |  CAST(3*len(list_filter(toks, w -> w IN ('el','los','las','y','es','una','por','para','con','del'))) + len(list_filter(tris, g -> g IN ('ent','los','cio','ado','que'))) AS BIGINT) AS n_es
-        |  FROM s),
-        |dd AS (SELECT sc.doc_id,
-        |  CASE WHEN cj.cps > 0 AND 5*cj.cjk > cj.cps THEN 'zh'
-        |       WHEN greatest(n_de, n_en, n_es, n_fr) = 0 THEN 'und'
-        |       WHEN n_de >= n_en AND n_de >= n_es AND n_de >= n_fr THEN 'de'
-        |       WHEN n_en >= n_es AND n_en >= n_fr THEN 'en'
-        |       WHEN n_es >= n_fr THEN 'es' ELSE 'fr' END AS pred
-        |  FROM sc JOIN cj ON sc.doc_id = cj.doc_id),
-        |j AS (SELECT 'site'||(d.doc_id%7)||'.example.com' AS host, dd.pred,
-        |             CASE WHEN dd.pred = d.lang THEN 0 ELSE 1 END AS mism
-        |      FROM dd JOIN documents d ON dd.doc_id = d.doc_id),
-        |g AS (SELECT host, pred, CAST(count(*) AS BIGINT) AS n, CAST(sum(mism) AS BIGINT) AS m
-        |      FROM j GROUP BY host, pred),
-        |r AS (SELECT host, pred, n,
-        |             sum(n) OVER (PARTITION BY host) AS n_docs,
-        |             sum(m) OVER (PARTITION BY host) AS n_mismatch,
-        |             row_number() OVER (PARTITION BY host ORDER BY n DESC, pred) AS rn
-        |      FROM g)
-        |SELECT host, CAST(n_docs AS BIGINT) AS n_docs, CAST(n_mismatch AS BIGINT) AS n_mismatch,
-        |       pred AS majority_lang, n AS majority_n
-        |FROM r WHERE rn = 1""".stripMargin,
-    // shard_checksum: full FNV-over-text recompute in SQL (the doc_fingerprint
-    // HUGEINT chain; %128 low-bits XOR is byte-exact for this ASCII corpus),
-    // signed conversion, then the same commutative bit_xor rollup.
-    "shard_checksum" ->
-      """WITH h AS (
-        |  SELECT doc_id % 8 AS shard, CAST(length(text) AS BIGINT) AS bytes,
-        |         list_reduce(
-        |           list_prepend(14695981039346656037::HUGEINT,
-        |                        [unicode(c)::HUGEINT for c in string_split(text, '')]),
-        |           (h, b) -> ((h - h % 128 + xor((h % 128)::BIGINT, b::BIGINT)::HUGEINT)
-        |                      * 1099511628211::HUGEINT) % (1::HUGEINT << 64)) AS hu
-        |  FROM documents)
-        |SELECT shard, CAST(count(*) AS BIGINT) AS n_docs, CAST(sum(bytes) AS BIGINT) AS bytes,
-        |       bit_xor(CAST(CASE WHEN hu >= (1::HUGEINT << 63) THEN hu - (1::HUGEINT << 64) ELSE hu END AS BIGINT)) AS checksum
-        |FROM h GROUP BY shard""".stripMargin,
-    // cross_corpus_neardup: exact bipartite ground truth — per incoming doc,
-    // any base doc at word-shingle Jaccard >= 4/5 flags it, base_match = the
-    // smallest qualifying base id. The engine's band-LSH candidates are
-    // complete on this fixture (360/360 qualifying pairs share a band key —
-    // tools/crossnear_oracle_check.py), so after verify it equals the exact
-    // answer. Validated against an independent Python recompute there too.
-    "cross_corpus_neardup" ->
-      """WITH binc AS (
-        |  SELECT doc_id + 2000000 AS doc_id,
-        |         CASE WHEN doc_id%3=0 THEN text
-        |              WHEN doc_id%3=1 THEN substring(text, instr(text,' ')+1)
-        |              ELSE array_to_string(['f'||doc_id||'w'||w for w in range(1,21)], ' ') END AS text
-        |  FROM documents),
-        |shb AS (SELECT doc_id, string_split(text,' ') AS w FROM documents),
-        |shi AS (SELECT doc_id, string_split(text,' ') AS w FROM binc),
-        |sb AS (SELECT doc_id, CASE WHEN len(w) < 3 THEN [array_to_string(w,' ')]
-        |                           ELSE list_distinct([array_to_string(w[i:i+2],' ') for i in range(1, len(w)-1)]) END AS s
-        |       FROM shb),
-        |si AS (SELECT doc_id, CASE WHEN len(w) < 3 THEN [array_to_string(w,' ')]
-        |                           ELSE list_distinct([array_to_string(w[i:i+2],' ') for i in range(1, len(w)-1)]) END AS s
-        |       FROM shi),
-        |q AS (SELECT i.doc_id AS a, b.doc_id AS b
-        |      FROM si i, sb b
-        |      WHERE 5*len(list_intersect(i.s, b.s)) >= 4*(len(i.s)+len(b.s)-len(list_intersect(i.s, b.s))))
-        |SELECT i.doc_id,
-        |       CAST(CASE WHEN min(q.b) IS NULL THEN 0 ELSE 1 END AS BIGINT) AS is_neardup,
-        |       coalesce(min(q.b), -1) AS base_match
-        |FROM si i LEFT JOIN q ON i.doc_id = q.a
-        |GROUP BY i.doc_id""".stripMargin,
-    // Same exact all-pairs ground truth as minhash_neardup: the OPH candidate
-    // generator is complete on this fixture (600/600 exact pairs share a band
-    // key — verified numerically in tools/oph_oracle_check.py), so after the
-    // exact-Jaccard verify the output equals the all-pairs answer.
-    "oph_minhash" ->
-      """WITH planted AS (
-        |  SELECT doc_id, text FROM documents
-        |  UNION ALL
-        |  SELECT doc_id + 1000000, substring(text, instr(text, ' ') + 1) FROM documents),
-        |d AS (SELECT doc_id, string_split(text,' ') AS w FROM planted),
-        |sh AS (SELECT doc_id,
-        |              CASE WHEN len(w) < 3 THEN [array_to_string(w, ' ')]
-        |                   ELSE list_distinct([array_to_string(w[i:i+2],' ') for i in range(1, len(w)-1)]) END AS s
-        |       FROM d),
-        |pairs AS (
-        |  SELECT x.doc_id AS a, y.doc_id AS b,
-        |         CAST(len(list_intersect(x.s, y.s)) AS BIGINT) AS inter,
-        |         CAST(len(x.s) + len(y.s) - len(list_intersect(x.s, y.s)) AS BIGINT) AS un
-        |  FROM sh x, sh y WHERE x.doc_id < y.doc_id)
-        |SELECT a, b, inter, un FROM pairs WHERE 5*inter >= 4*un""".stripMargin,
-    // Exact char-3-gram Jaccard over the planted corpus. The Spark side
-    // reranks MinHash-LSH candidates; at >= 0.8 similarity the 64-perm /
-    // 16-band LSH recall is complete on this corpus, so the all-pairs oracle
-    // matches. Integer filter 5*inter >= 4*un == inter/un >= 0.8 exactly.
-    "ngram_jaccard" ->
-      """WITH planted AS (
-        |  SELECT doc_id, text FROM documents
-        |  UNION ALL
-        |  SELECT doc_id + 1000000, substring(text, instr(text, ' ') + 1) FROM documents),
-        |sh AS (SELECT doc_id,
-        |              CASE WHEN length(text) < 3 THEN [text]
-        |                   ELSE list_distinct([substring(text, i, 3) for i in range(1, length(text) - 1)]) END AS s
-        |       FROM planted),
-        |pairs AS (
-        |  SELECT x.doc_id AS a, y.doc_id AS b,
-        |         CAST(len(list_intersect(x.s, y.s)) AS BIGINT) AS inter,
-        |         CAST(len(x.s) + len(y.s) - len(list_intersect(x.s, y.s)) AS BIGINT) AS un
-        |  FROM sh x, sh y WHERE x.doc_id < y.doc_id)
-        |SELECT a, b, inter, un FROM pairs WHERE 5*inter >= 4*un""".stripMargin,
-    // Bit-exact SimHash recompute in SQL: FNV-1a(64) per token via a
-    // HUGEINT list_reduce (mod 2^64, xor on the low 7 ASCII bits), sign-bit
-    // majority per bit position, signed-BIGINT reassembly, all-pairs
-    // hamming <= 3 (the radius where the Spark chunk-key join is lossless).
-    "simhash_neardup" ->
-      """WITH planted AS (
-        |  SELECT doc_id, text FROM documents
-        |  UNION ALL
-        |  SELECT doc_id + 1000000,
-        |         substring(text, 1, length(text) - instr(reverse(text), ' '))
-        |  FROM documents),
-        |toks AS (
-        |  SELECT doc_id, unnest(string_split(text, ' ')) AS tok FROM planted),
-        |th AS (
-        |  SELECT doc_id,
-        |         list_reduce(
-        |           list_prepend(14695981039346656037::HUGEINT,
-        |                        [unicode(c)::HUGEINT for c in string_split(tok, '')]),
-        |           (h, b) -> ((h - h % 128 + xor((h % 128)::BIGINT, b::BIGINT)::HUGEINT)
-        |                      * 1099511628211::HUGEINT) % (1::HUGEINT << 64)) AS h
-        |  FROM toks),
-        |bits AS (
-        |  SELECT doc_id, b,
-        |         sum(CASE WHEN (th.h // (1::HUGEINT << b)) % 2 = 1 THEN 1 ELSE -1 END) AS cnt
-        |  FROM th, range(64) r(b)
-        |  GROUP BY doc_id, b),
-        |sims AS (
-        |  SELECT doc_id,
-        |         CAST(CASE WHEN v >= (1::HUGEINT << 63) THEN v - (1::HUGEINT << 64) ELSE v END AS BIGINT) AS sim
-        |  FROM (SELECT doc_id,
-        |               sum(CASE WHEN cnt > 0 THEN (1::HUGEINT << b) ELSE 0::HUGEINT END) AS v
-        |        FROM bits GROUP BY doc_id))
-        |SELECT x.doc_id AS a, y.doc_id AS b,
-        |       CAST(bit_count(xor(x.sim, y.sim)) AS BIGINT) AS hamming
-        |FROM sims x, sims y
-        |WHERE x.doc_id < y.doc_id AND bit_count(xor(x.sim, y.sim)) <= 3""".stripMargin,
-    // Bit-exact winnowing recompute: FNV-1a over each 8-gram, signed-Long
-    // window(4) minima, distinct + signed sort, FNV-style fold. The 128-bit
-    // xor identity: for 64-bit operands sign-extended to HUGEINT, the low 64
-    // bits of the xor are the 64-bit xor and the CASE +2^64 re-normalizes.
-    "doc_fingerprint" ->
-      """WITH gl AS (
-        |  SELECT doc_id, length(text) - 7 AS n,
-        |         [substring(text, i, 8) for i in range(1, length(text) - 6)] AS gs
-        |  FROM documents),
-        |grams AS (
-        |  SELECT doc_id, n, i0 AS i,
-        |         CAST(CASE WHEN h >= (1::HUGEINT << 63) THEN h - (1::HUGEINT << 64) ELSE h END AS BIGINT) AS g
-        |  FROM (SELECT doc_id, n, generate_subscripts(gs, 1) AS i0,
-        |               list_reduce(
-        |                 list_prepend(14695981039346656037::HUGEINT,
-        |                              [unicode(c)::HUGEINT for c in string_split(unnest(gs), '')]),
-        |                 (h, b) -> ((h - h % 128 + xor((h % 128)::BIGINT, b::BIGINT)::HUGEINT)
-        |                            * 1099511628211::HUGEINT) % (1::HUGEINT << 64)) AS h
-        |        FROM gl) t0),
-        |minima AS (
-        |  SELECT doc_id, i, n,
-        |         min(g) OVER (PARTITION BY doc_id ORDER BY i ROWS BETWEEN CURRENT ROW AND 3 FOLLOWING) AS m
-        |  FROM grams),
-        |sel AS (
-        |  SELECT doc_id, list_sort(list(DISTINCT m)) AS sels
-        |  FROM minima WHERE i + 4 <= n + 1
-        |  GROUP BY doc_id)
-        |SELECT doc_id,
-        |       CAST(CASE WHEN f >= (1::HUGEINT << 63) THEN f - (1::HUGEINT << 64) ELSE f END AS BIGINT) AS fingerprint,
-        |       CAST(len(sels) AS BIGINT) AS n_grams
-        |FROM (
-        |  SELECT doc_id, sels,
-        |         list_reduce(
-        |           list_prepend(14695981039346656037::HUGEINT, sels::HUGEINT[]),
-        |           (h, g) -> ((CASE WHEN xor(CAST(CASE WHEN h >= (1::HUGEINT << 63) THEN h - (1::HUGEINT << 64) ELSE h END AS BIGINT), g) < 0
-        |                            THEN xor(CAST(CASE WHEN h >= (1::HUGEINT << 63) THEN h - (1::HUGEINT << 64) ELSE h END AS BIGINT), g)::HUGEINT + (1::HUGEINT << 64)
-        |                            ELSE xor(CAST(CASE WHEN h >= (1::HUGEINT << 63) THEN h - (1::HUGEINT << 64) ELSE h END AS BIGINT), g)::HUGEINT END)
-        |                      * 1099511628211::HUGEINT) % (1::HUGEINT << 64)) AS f
-        |  FROM sel) t1
-        |UNION ALL
-        |SELECT doc_id, CAST(-3750763034362895579 AS BIGINT) AS fingerprint, CAST(0 AS BIGINT) AS n_grams
-        |FROM documents WHERE length(text) BETWEEN 8 AND 10
-        |UNION ALL
-        |SELECT doc_id,
-        |       CAST(CASE WHEN h >= (1::HUGEINT << 63) THEN h - (1::HUGEINT << 64) ELSE h END AS BIGINT) AS fingerprint,
-        |       CAST(1 AS BIGINT) AS n_grams
-        |FROM (SELECT doc_id,
-        |             list_reduce(
-        |               list_prepend(14695981039346656037::HUGEINT,
-        |                            [unicode(c)::HUGEINT for c in string_split(text, '')]),
-        |               (h, b) -> ((h - h % 128 + xor((h % 128)::BIGINT, b::BIGINT)::HUGEINT)
-        |                          * 1099511628211::HUGEINT) % (1::HUGEINT << 64)) AS h
-        |      FROM documents WHERE length(text) BETWEEN 1 AND 7) t2
-        |UNION ALL
-        |SELECT doc_id, CAST(-3750763034362895579 AS BIGINT), CAST(1 AS BIGINT)
-        |FROM documents WHERE length(text) = 0""".stripMargin,
-    // the composed pipeline oracle: lang scoring + token gate + cluster
-    // representative, each piece identical to its standalone validated oracle
-    // (lang_id, neardup_clusters) but over the RAW corpus (no planting)
-    "corpus_filter" ->
-      """WITH RECURSIVE
-        |t AS (SELECT doc_id, lower(text) AS lt, string_split(lower(text),' ') AS toks FROM documents),
-        |s AS (SELECT doc_id, toks, [substring(lt, i, 3) for i in range(1, length(lt)-1)] AS tris FROM t),
-        |sc AS (SELECT doc_id, CAST(len(toks) AS BIGINT) AS n_tokens,
-        |  CAST(3*len(list_filter(toks, w -> w IN ('the','and','of','to','a','in','is','it','that','for'))) + len(list_filter(tris, g -> g IN ('the','ing','ion','and','ent'))) AS BIGINT) AS n_en,
-        |  CAST(3*len(list_filter(toks, w -> w IN ('der','die','und','das','ist','nicht','ein','mit','zu','den'))) + len(list_filter(tris, g -> g IN ('sch','ich','ein','cht','und'))) AS BIGINT) AS n_de,
-        |  CAST(3*len(list_filter(toks, w -> w IN ('le','la','et','les','des','un','une','est','pour','que'))) + len(list_filter(tris, g -> g IN ('ent','les','ion','que','eur'))) AS BIGINT) AS n_fr,
-        |  CAST(3*len(list_filter(toks, w -> w IN ('el','los','las','y','es','una','por','para','con','del'))) + len(list_filter(tris, g -> g IN ('ent','los','cio','ado','que'))) AS BIGINT) AS n_es
-        |  FROM s),
-        |cj AS (SELECT doc_id,
-        |              CAST(length(text) AS BIGINT) AS cps,
-        |              CAST(len(list_filter(string_split(text,''), c -> unicode(c) BETWEEN 19968 AND 40959)) AS BIGINT) AS cjk
-        |       FROM documents),
-        |lang AS (SELECT sc.doc_id,
-        |  CASE WHEN cj.cps > 0 AND 5*cj.cjk > cj.cps THEN 'zh'
-        |       WHEN greatest(n_de, n_en, n_es, n_fr) = 0 THEN 'und'
-        |       WHEN n_de >= n_en AND n_de >= n_es AND n_de >= n_fr THEN 'de'
-        |       WHEN n_en >= n_es AND n_en >= n_fr THEN 'en'
-        |       WHEN n_es >= n_fr THEN 'es' ELSE 'fr' END AS lang_pred,
-        |  CASE WHEN cj.cps > 0 AND 5*cj.cjk > cj.cps THEN cj.cps ELSE n_tokens END AS n_tokens
-        |  FROM sc JOIN cj ON sc.doc_id = cj.doc_id),
-        |dw AS (SELECT doc_id, string_split(text,' ') AS w FROM documents),
-        |sh AS (SELECT doc_id,
-        |              CASE WHEN len(w) < 3 THEN [array_to_string(w, ' ')]
-        |                   ELSE list_distinct([array_to_string(w[i:i+2],' ') for i in range(1, len(w)-1)]) END AS s
-        |       FROM dw),
-        |pairs AS (
-        |  SELECT x.doc_id AS a, y.doc_id AS b
-        |  FROM sh x, sh y
-        |  WHERE x.doc_id < y.doc_id
-        |    AND 5*len(list_intersect(x.s, y.s)) >= 4*(len(x.s) + len(y.s) - len(list_intersect(x.s, y.s)))),
-        |edges AS (SELECT a AS u, b AS v FROM pairs UNION SELECT b, a FROM pairs),
-        |reach(u, r) AS (
-        |  SELECT doc_id, doc_id FROM documents
-        |  UNION
-        |  SELECT e.v, reach.r FROM reach JOIN edges e ON e.u = reach.u),
-        |clus AS (SELECT u AS doc_id, min(r) AS cluster_id FROM reach GROUP BY u)
-        |SELECT d.doc_id, l.lang_pred, l.n_tokens, c.cluster_id
-        |FROM documents d
-        |JOIN lang l ON l.doc_id = d.doc_id
-        |JOIN clus c ON c.doc_id = d.doc_id
-        |WHERE l.n_tokens >= 20 AND l.lang_pred != 'und' AND c.cluster_id = d.doc_id""".stripMargin,
-    // transitive closure via recursive CTE: min reachable doc_id over the
-    // same all-pairs >= 0.8 word-shingle graph the minhash oracle uses
-    "neardup_clusters" ->
-      """WITH RECURSIVE
-        |planted AS (
-        |  SELECT doc_id, text FROM documents
-        |  UNION ALL
-        |  SELECT doc_id + 1000000, substring(text, instr(text, ' ') + 1) FROM documents),
-        |d AS (SELECT doc_id, string_split(text,' ') AS w FROM planted),
-        |sh AS (SELECT doc_id,
-        |              CASE WHEN len(w) < 3 THEN [array_to_string(w, ' ')]
-        |                   ELSE list_distinct([array_to_string(w[i:i+2],' ') for i in range(1, len(w)-1)]) END AS s
-        |       FROM d),
-        |pairs AS (
-        |  SELECT x.doc_id AS a, y.doc_id AS b
-        |  FROM sh x, sh y
-        |  WHERE x.doc_id < y.doc_id
-        |    AND 5*len(list_intersect(x.s, y.s)) >= 4*(len(x.s) + len(y.s) - len(list_intersect(x.s, y.s)))),
-        |edges AS (SELECT a AS u, b AS v FROM pairs UNION SELECT b, a FROM pairs),
-        |reach(u, r) AS (
-        |  SELECT doc_id, doc_id FROM planted
-        |  UNION
-        |  SELECT e.v, reach.r FROM reach JOIN edges e ON e.u = reach.u)
-        |SELECT u AS doc_id, min(r) AS cluster_id FROM reach GROUP BY u""".stripMargin,
-    // cluster_canonical: the neardup_clusters recursive-CTE family plus the
-    // text_quality score and a window argmax election; Python-validated at
-    // both sfs incl. the discrimination stat (419/476 clusters elect a
-    // non-min-id representative) — tools/canonical_oracle_check.py
-    "cluster_canonical" ->
-      """WITH RECURSIVE
-        |planted AS (
-        |  SELECT doc_id, text FROM documents
-        |  UNION ALL
-        |  SELECT doc_id + 1000000, substring(text, instr(text, ' ') + 1) FROM documents),
-        |d AS (SELECT doc_id, string_split(text,' ') AS w FROM planted),
-        |sh AS (SELECT doc_id,
-        |              CASE WHEN len(w) < 3 THEN [array_to_string(w, ' ')]
-        |                   ELSE list_distinct([array_to_string(w[i:i+2],' ') for i in range(1, len(w)-1)]) END AS s
-        |       FROM d),
-        |pairs AS (
-        |  SELECT x.doc_id AS a, y.doc_id AS b
-        |  FROM sh x, sh y
-        |  WHERE x.doc_id < y.doc_id
-        |    AND 5*len(list_intersect(x.s, y.s)) >= 4*(len(x.s) + len(y.s) - len(list_intersect(x.s, y.s)))),
-        |edges AS (SELECT a AS u, b AS v FROM pairs UNION SELECT b, a FROM pairs),
-        |reach(u, r) AS (
-        |  SELECT doc_id, doc_id FROM planted
-        |  UNION
-        |  SELECT e.v, reach.r FROM reach JOIN edges e ON e.u = reach.u),
-        |c AS (SELECT u AS doc_id, min(r) AS cluster_id FROM reach GROUP BY u),
-        |q AS (SELECT doc_id,
-        |             CAST(len(list_filter(string_split(text,' '), w -> w IN ('the','a'))) * 1000000
-        |                  // len(string_split(text,' ')) AS BIGINT) AS score
-        |      FROM planted),
-        |j AS (SELECT c.cluster_id, c.doc_id, q.score FROM c JOIN q USING (doc_id)),
-        |r AS (SELECT cluster_id, doc_id, score,
-        |             row_number() OVER (PARTITION BY cluster_id ORDER BY score DESC, doc_id ASC) AS rn
-        |      FROM j),
-        |n AS (SELECT cluster_id, CAST(count(*) AS BIGINT) AS n_members FROM j GROUP BY 1)
-        |SELECT r.cluster_id, n.n_members, r.doc_id AS rep_doc_id, r.score AS rep_score
-        |FROM r JOIN n USING (cluster_id) WHERE rn = 1 ORDER BY cluster_id""".stripMargin,
-    "embedding_neardup" ->
-      """WITH all_v AS (
-        |  SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings
-        |  UNION ALL
-        |  SELECT vec_id + 1000000, CAST(embedding AS DOUBLE[]) FROM embeddings)
-        |SELECT x.vec_id AS a, y.vec_id AS b,
-        |       round(list_cosine_similarity(x.v, y.v), 6) AS cos
-        |FROM all_v x, all_v y
-        |WHERE x.vec_id < y.vec_id AND list_cosine_similarity(x.v, y.v) >= 0.999""".stripMargin,
-    "stream_html_content" ->
-      """SELECT 'doc://' || doc_id AS url,
-        |       array_to_string([array_to_string(words[i:i+23], ' ')
-        |                        for i in range(1, len(words)+1, 24)], chr(10)) AS extracted_text
-        |FROM (SELECT doc_id, string_split(text, ' ') AS words FROM documents)""".stripMargin,
-    // layout reconstruction must recover the document text exactly: the span
-    // generator is a bijective re-layout of the words, so the oracle is the
-    // raw text itself
-    "layout_reading_order" ->
-      """SELECT 'doc://' || doc_id AS url, text AS extracted_text
-        |FROM documents""".stripMargin,
-    // PDF decode is a bijective re-encoding of the words: the text oracle is
-    // the raw document text; the structural stats are closed-form in the word
-    // count (4 words/span, 12 lines/page, objects = catalog+pages+font+2/page,
-    // TJ for odd-indexed spans with >= 2 words)
-    "pdf_text_extract" ->
-      """SELECT 'doc://' || doc_id AS url, text AS extracted_text
-        |FROM documents""".stripMargin,
-    // flate round-trip must be text-transparent: same byte-identity oracle
-    "pdf_flate_extract" ->
-      """SELECT 'doc://' || doc_id AS url, text AS extracted_text
-        |FROM documents""".stripMargin,
-    "pdf_doc_stats" ->
-      """WITH w AS (SELECT doc_id, CAST(len(string_split(text,' ')) AS BIGINT) AS nw FROM documents),
-        |d AS (SELECT doc_id, nw, (nw+3)//4 AS nlines FROM w),
-        |e AS (SELECT doc_id, nlines, (nlines+11)//12 AS npages, nw - 4*(nlines-1) AS lastw FROM d),
-        |f AS (SELECT doc_id, nlines, npages,
-        |        (nlines-1)//2 + CASE WHEN (nlines-1)%2=1 AND lastw>=2 THEN 1 ELSE 0 END AS nttj
-        |      FROM e)
-        |SELECT 'doc://' || doc_id AS url,
-        |  CAST(npages AS BIGINT) AS n_pages,
-        |  CAST(3 + 2*npages AS BIGINT) AS n_objects,
-        |  CAST(4 + 2*npages AS BIGINT) AS xref_size,
-        |  CAST(nlines AS BIGINT) AS n_spans,
-        |  CAST(nlines - nttj AS BIGINT) AS n_tj,
-        |  CAST(nttj AS BIGINT) AS n_ttj
-        |FROM f ORDER BY url""".stripMargin,
-    // main-content byte-identity: same word-chunk reassembly as the fulltext
-    // oracle, at the HTML generator's 24-word paragraph grain (typed and
-    // codegen-Expression paths must produce identical bytes)
-    "html_main_content" -> HtmlMainOracleSql,
-    "html_main_sql_expr" -> HtmlMainOracleSql,
-    // Markdown render reconstructed from the generator's paragraph
-    // arithmetic: '# document {id}' heading, blank-line-joined paragraphs,
-    // '**first**' when p%3==1, trailing '[last](/w/{id}/{p})' when p%3==2
-    // (single-word chunks degenerate to the bare marked word — the CASEs
-    // guard len(chunk)=1). Python-validated 0/500 before wiring.
-    "html_to_markdown" ->
-      """WITH d AS (SELECT doc_id, string_split(text,' ') AS ws FROM documents),
-        |p AS (SELECT doc_id, CAST((i-1)//24 AS BIGINT) AS p, ws[i:i+23] AS chunk
-        |      FROM d, UNNEST(generate_series(1, len(ws), 24)) AS t(i)),
-        |r AS (SELECT doc_id, p,
-        |        CASE
-        |          WHEN p%3=1 THEN '**'||chunk[1]||'**' ||
-        |               CASE WHEN len(chunk) > 1 THEN ' '||array_to_string(chunk[2:], ' ') ELSE '' END
-        |          WHEN p%3=2 THEN CASE WHEN len(chunk) > 1 THEN array_to_string(chunk[1:len(chunk)-1], ' ')||' ' ELSE '' END
-        |               || '['||chunk[len(chunk)]||'](/w/'||doc_id||'/'||p||')'
-        |          ELSE array_to_string(chunk, ' ')
-        |        END AS m
-        |      FROM p)
-        |SELECT 'doc://'||doc_id AS url,
-        |       '# document '||doc_id || chr(10)||chr(10) ||
-        |       string_agg(m, chr(10)||chr(10) ORDER BY p) AS markdown
-        |FROM r GROUP BY doc_id""".stripMargin,
-    // paragraph spans: cumulative 24-word-chunk lengths + one '\n' joint per
-    // boundary; substring(extracted, start, len) == paragraph by
-    // construction. Python-validated 0/1355 before wiring.
-    "paragraph_spans" ->
-      """WITH d AS (SELECT doc_id, string_split(text,' ') AS ws FROM documents),
-        |p AS (SELECT doc_id, CAST((i-1)//24 AS BIGINT) AS p,
-        |             CAST(length(array_to_string(ws[i:i+23], ' ')) AS BIGINT) AS plen
-        |      FROM d, UNNEST(generate_series(1, len(ws), 24)) AS t(i))
-        |SELECT 'doc://'||doc_id AS url, p AS para_idx,
-        |       CAST(coalesce(sum(plen) OVER (PARTITION BY doc_id ORDER BY p
-        |             ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0) + p AS BIGINT) AS start_off,
-        |       CAST(coalesce(sum(plen) OVER (PARTITION BY doc_id ORDER BY p
-        |             ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0) + p + plen AS BIGINT) AS end_off,
-        |       plen AS n_chars
-        |FROM p""".stripMargin,
-    // paragraph dedup audit: the oracle windows over raw paragraph TEXT where
-    // the engine windows over its xxhash64 — identical barring a 64-bit
-    // collision (the dedup_exact tradeoff). Python-validated 0/1355 (45 dup
-    // rows at sf0.01) before wiring.
-    "paragraph_dedup" ->
-      """WITH d AS (SELECT doc_id, string_split(text,' ') AS ws FROM documents),
-        |p AS (SELECT doc_id, CAST((i-1)//24 AS BIGINT) AS p,
-        |             array_to_string(ws[i:i+23],' ') AS para,
-        |             CAST(length(array_to_string(ws[i:i+23], ' ')) AS BIGINT) AS plen
-        |      FROM d, UNNEST(generate_series(1, len(ws), 24)) AS t(i)),
-        |s AS (SELECT doc_id, p, para, plen,
-        |        coalesce(sum(plen) OVER (PARTITION BY doc_id ORDER BY p
-        |          ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING),0) + p AS start_off
-        |      FROM p),
-        |w AS (SELECT doc_id, p, plen, start_off,
-        |        row_number() OVER (PARTITION BY para ORDER BY doc_id, p) AS rn,
-        |        count(*) OVER (PARTITION BY para) AS ndups
-        |      FROM s)
-        |SELECT 'doc://'||doc_id AS url, p AS para_idx,
-        |   CAST(start_off AS BIGINT) AS start_off, CAST(start_off+plen AS BIGINT) AS end_off,
-        |   CAST(CASE WHEN rn = 1 THEN 1 ELSE 0 END AS BIGINT) AS is_first,
-        |   CAST(ndups AS BIGINT) AS n_dups
-        |FROM w""".stripMargin,
-    // streaming paragraph dedup drains to the distinct-paragraph grain:
-    // least (doc, para) + copy count per paragraph text (the engine keys on
-    // xxhash64 — equal barring a 64-bit collision, the dedup_exact tradeoff)
-    "stream_paragraph_dedup" ->
-      """WITH d AS (SELECT doc_id, string_split(text,' ') AS ws FROM documents),
-        |p AS (SELECT doc_id, CAST((i-1)//24 AS BIGINT) AS p,
-        |             array_to_string(ws[i:i+23],' ') AS para
-        |      FROM d, UNNEST(generate_series(1, len(ws), 24)) AS t(i)),
-        |w AS (SELECT doc_id, p, para,
-        |        row_number() OVER (PARTITION BY para ORDER BY doc_id, p) AS rn,
-        |        count(*) OVER (PARTITION BY para) AS n
-        |      FROM p)
-        |SELECT 'doc://'||doc_id AS keep_url, p AS keep_para_idx,
-        |       CAST(n AS BIGINT) AS n_copies
-        |FROM w WHERE rn = 1""".stripMargin,
-    // applied paragraph dedup: keep rn=1 rows, rejoin with '\n' in paragraph
-    // order; docs with zero kept paragraphs drop out (GROUP BY over kept rows
-    // only). Python-validated 0/499 (1 doc fully dropped) before wiring.
-    "paragraph_dedup_clean" ->
-      """WITH d AS (SELECT doc_id, string_split(text,' ') AS ws FROM documents),
-        |p AS (SELECT doc_id, CAST((i-1)//24 AS BIGINT) AS p,
-        |             array_to_string(ws[i:i+23],' ') AS para
-        |      FROM d, UNNEST(generate_series(1, len(ws), 24)) AS t(i)),
-        |w AS (SELECT doc_id, p, para,
-        |        row_number() OVER (PARTITION BY para ORDER BY doc_id, p) AS rn
-        |      FROM p)
-        |SELECT 'doc://'||doc_id AS url,
-        |       string_agg(para, chr(10) ORDER BY p) AS clean_text,
-        |       CAST(count(*) AS BIGINT) AS n_kept
-        |FROM w WHERE rn = 1 GROUP BY doc_id""".stripMargin,
-    // the WARC path must recover the pages byte-identically, so its oracle
-    // IS the main-content oracle; warc_stats recomputes the segment audit
-    // from doc_id arithmetic (make_timestamp is NTZ in DuckDB — the strftime
-    // render is TZ-invariant, verified under Asia/Kolkata + America/New_York)
-    "warc_extract" -> HtmlMainOracleSql,
-    // wet_extract: WET rows reconstructed in closed form — the payload is
-    // html_main_content's 24-word rechunk (same char count as the raw text,
-    // ASCII, so content_length = its length), the date is the response
-    // record's ISO render of doc_id*3600s
-    "wet_extract" ->
-      """SELECT 'doc://' || doc_id AS url,
-        |       strftime(make_timestamp(doc_id*3600*1000000), '%Y-%m-%dT%H:%M:%SZ') AS warc_date,
-        |       CAST(length(extracted_text) AS BIGINT) AS content_length,
-        |       extracted_text
-        |FROM (SELECT doc_id,
-        |        array_to_string([array_to_string(words[i:i+23], ' ')
-        |                         for i in range(1, len(words)+1, 24)], chr(10)) AS extracted_text
-        |      FROM (SELECT doc_id, string_split(text, ' ') AS words FROM documents))
-        |ORDER BY url""".stripMargin,
-    // cdx_index: every byte offset recomputed from the generator's
-    // closed-form page-length model — skeleton constants measured from the
-    // builder literals, label pools as CASE tables, paragraph markup overhead
-    // as per-index list_sum, WARC header = 113 + digits(doc_id) +
-    // digits(clen) + clen. Python-validated 0/500 before wiring.
-    "cdx_index" ->
-      """WITH d AS (SELECT doc_id, text, string_split(text,' ') AS ws FROM documents),
-        |c AS (SELECT doc_id, text,
-        |        CAST((len(ws) + 23) // 24 AS BIGINT) AS np,
-        |        length(CAST(doc_id AS VARCHAR)) AS tid,
-        |        4 + doc_id % 4 AS navn, 3 + doc_id % 3 AS siden, 2 + doc_id % 2 AS comn
-        |      FROM d),
-        |clen AS (SELECT doc_id,
-        |    244 + 2*tid
-        |    + navn * 39
-        |    + 50
-        |    + list_sum([34 + (CASE (doc_id+2*k)%6 WHEN 0 THEN 12 WHEN 5 THEN 10 ELSE 11 END) for k in range(0, siden)])
-        |    + 28 + (CASE doc_id%5 WHEN 0 THEN 13 ELSE 12 END)
-        |    + (CASE WHEN doc_id%2=1 THEN 26 ELSE 0 END)
-        |    + 28 + tid
-        |    + (length(text) - (np - 1)) + np * 8
-        |    + list_sum([CASE WHEN p%3=1 THEN 7 WHEN p%3=2 THEN 19 + tid + length(CAST(p AS VARCHAR)) ELSE 0 END for p in range(0, np)])
-        |    + 34
-        |    + list_sum([28 + (CASE (doc_id+k)%6 WHEN 0 THEN 29 WHEN 1 THEN 26 WHEN 2 THEN 29 WHEN 3 THEN 27 WHEN 4 THEN 29 ELSE 27 END) for k in range(0, comn)])
-        |    + 128 AS clen
-        |  FROM c),
-        |rl AS (SELECT doc_id, clen,
-        |    113 + length(CAST(doc_id AS VARCHAR)) + length(CAST(clen AS VARCHAR)) + clen AS rec_length
-        |  FROM clen)
-        |SELECT 'doc://'||doc_id AS url, CAST(doc_id//16 AS BIGINT) AS segment_id,
-        |  CAST(row_number() OVER (PARTITION BY doc_id//16 ORDER BY doc_id) - 1 AS BIGINT) AS rec_ord,
-        |  CAST(coalesce(sum(rec_length) OVER (PARTITION BY doc_id//16 ORDER BY doc_id
-        |        ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0) AS BIGINT) AS rec_offset,
-        |  CAST(rec_length AS BIGINT) AS rec_length,
-        |  CAST(clen AS BIGINT) AS content_length,
-        |  strftime(make_timestamp(doc_id*3600*1000000), '%Y-%m-%dT%H:%M:%SZ') AS warc_date
-        |FROM rl""".stripMargin,
-    "warc_stats" ->
-      """SELECT CAST(doc_id//16 AS BIGINT) AS segment_id,
-        |       CAST(count(*) AS BIGINT) AS n_records,
-        |       min('doc://' || doc_id) AS first_url,
-        |       min(strftime(make_timestamp(doc_id*3600*1000000), '%Y-%m-%dT%H:%M:%SZ')) AS min_date
-        |FROM documents GROUP BY 1""".stripMargin,
-    // DOM statistics recomputed from the generator's arithmetic: nav links
-    // 4+id%4, sidebar 3+id%3, footer 2, inline anchors floor(P/3); paragraphs
-    // P + promo + copyright; comment divs 2+id%2; the chosen block is the
-    // article, so main_chars = length(text) - (P-1) separator spaces
-    "html_block_stats" ->
-      """WITH d AS (SELECT doc_id, length(text) AS tl,
-        |                  CAST(ceil(len(string_split(text,' '))/24.0) AS BIGINT) AS np
-        |           FROM documents)
-        |SELECT 'doc://' || doc_id AS url,
-        |       CAST(9 + doc_id%4 + doc_id%3 + np//3 AS BIGINT) AS n_anchors,
-        |       CAST(np + 2 AS BIGINT) AS n_paragraphs,
-        |       CAST(2 + doc_id%2 AS BIGINT) AS n_comment_divs,
-        |       np AS main_paragraphs,
-        |       CAST(tl - (np - 1) AS BIGINT) AS main_chars
-        |FROM d""".stripMargin,
-    // link inventory recomputed from the generator's arithmetic (HtmlGen):
-    // nav k in [0, 4+id%4) labeled from the 11-label pool at (id+k)%11;
-    // sidebar k in [0, 3+id%3) labeled at (id+2k)%6; inline anchors at
-    // paragraph indices p%3==2 wrapping the paragraph's LAST word (word
-    // index min(24(p+1), W)); footer /about + /terms. Ordinals follow
-    // document pre-order: nav, sidebar, inline, footer. Only inline anchors
-    // sit inside the chosen main block. Validated bit-for-bit against an
-    // independent Python recompute before wiring (CLAUDE.md protocol).
-    "html_links" -> LinkRowsSql("""SELECT 'doc://' || doc_id AS url, ord0 AS link_ord, href,
-        |       'doc://' || doc_id || href AS resolved, anchor_text, in_main
-        |FROM rows""".stripMargin),
-    // html_tables: the oracle regrows every cell from the generator's doc_id
-    // arithmetic (header row, R x C data grid with the entity trap decoded,
-    // conditional second table); Python-validated 5498/5498 at sf0.01.
-    "html_tables" ->
-      """WITH base AS (SELECT doc_id, 2 + doc_id%2 AS c, 2 + doc_id%3 AS r FROM documents),
-        |hdr AS (SELECT doc_id, 0 AS table_idx, 0 AS row_idx, j AS col_idx, TRUE AS is_header, 'h'||j AS cell
-        |        FROM (SELECT doc_id, unnest(range(0, c)) AS j FROM base)),
-        |dat AS (SELECT doc_id, 0 AS table_idx, 1 + i AS row_idx, j AS col_idx, FALSE AS is_header,
-        |               'v' || (doc_id*7 + i*c + j) || CASE WHEN (i+j)%3=0 THEN ' & x' ELSE '' END AS cell
-        |        FROM (SELECT doc_id, c, i, unnest(range(0, c)) AS j
-        |              FROM (SELECT doc_id, c, unnest(range(0, r)) AS i FROM base))),
-        |ext AS (SELECT a.doc_id, 1 AS table_idx, a.i AS row_idx, b.j AS col_idx, FALSE AS is_header,
-        |               'w' || (a.doc_id + 2*a.i + b.j) AS cell
-        |        FROM (SELECT doc_id, unnest(range(0,2)) AS i FROM base WHERE doc_id%4=0) a
-        |        CROSS JOIN (SELECT unnest(range(0,2)) AS j) b),
-        |allc AS (SELECT * FROM hdr UNION ALL SELECT * FROM dat UNION ALL SELECT * FROM ext)
-        |SELECT 'doc://'||doc_id AS url, CAST(table_idx AS BIGINT) AS table_idx,
-        |       CAST(row_idx AS BIGINT) AS row_idx, CAST(col_idx AS BIGINT) AS col_idx,
-        |       is_header, cell
-        |FROM allc ORDER BY url, table_idx, row_idx, col_idx""".stripMargin,
-    // microdata_items: regenerate from doc_id arithmetic (pageWithMicrodata
-    // classes: %11==3 absent, %7==0 entity trap decoded by the extractor,
-    // %3 branches plain-span vs nested-Person author — both resolve to the
-    // same value, so the oracle needs no branch for it).
-    "microdata_items" ->
-      """SELECT 'doc://'||doc_id AS url,
-        |       'document '||doc_id || CASE WHEN doc_id%7=0 THEN ' & co' ELSE '' END AS headline,
-        |       'author '||(doc_id%13) AS author,
-        |       CAST(len(string_split(text,' ')) AS BIGINT) AS word_count
-        |FROM documents WHERE doc_id%11 <> 3""".stripMargin,
-    // hreflang_clusters: regenerate the translation families from doc_id
-    // arithmetic (HtmlGen.pageWithHreflang plants 1+doc_id%4 language
-    // variants; x-default and the malformed pt link never reach the output,
-    // so the oracle simply doesn't generate them). Validated against an
-    // independent Python recompute in tools/multilingual_oracle_check.py.
-    "hreflang_clusters" ->
-      """WITH fam AS (
-        |  SELECT doc_id, (['en','de','fr','es'])[1:(1 + doc_id % 4)] AS langs FROM documents),
-        |alt AS (
-        |  SELECT doc_id, unnest(langs) AS l, len(langs)::BIGINT AS n_langs FROM fam),
-        |rows_ AS (
-        |  SELECT doc_id, l AS hreflang,
-        |         'https://site'||(doc_id%7)||'.example.com/'||l||'/doc'||doc_id||'.html' AS href,
-        |         n_langs
-        |  FROM alt)
-        |SELECT min(href) OVER (PARTITION BY doc_id) AS cluster, hreflang, href, n_langs
-        |FROM rows_""".stripMargin,
-    // bitext_mine: replay the 12-word segmentation, the per-sentence
-    // reversal/truncation fixture, and the integer 13/10 ratio gate.
-    // coalesce() guards DuckDB's empty-list array_to_string -> NULL quirk
-    // (CLAUDE.md); validated in tools/multilingual_oracle_check.py.
-    "bitext_mine" ->
-      """WITH w AS (SELECT doc_id, string_split(text,' ') AS w FROM documents),
-        |seg AS (
-        |  SELECT doc_id, (s//12)::BIGINT AS sent_idx,
-        |         coalesce(array_to_string(w[(s+1)::INT:(s+12)::INT], ' '), '') AS sent
-        |  FROM w CROSS JOIN unnest(range(0, len(w), 12)) AS t(s)),
-        |tgt AS (
-        |  SELECT doc_id, sent_idx,
-        |         CASE WHEN sent_idx % 3 = 2
-        |              THEN coalesce(array_to_string(list_reverse(string_split(sent,' '))[1:4], ' '), '')
-        |              ELSE coalesce(array_to_string(list_reverse(string_split(sent,' ')), ' '), '') END AS sent
-        |  FROM seg)
-        |SELECT s.doc_id, s.sent_idx, s.sent AS src_sent, t.sent AS tgt_sent,
-        |       CAST(length(s.sent) AS BIGINT) AS src_chars,
-        |       CAST(length(t.sent) AS BIGINT) AS tgt_chars,
-        |       CAST(CASE WHEN greatest(length(s.sent), length(t.sent)) * 10
-        |                      <= least(length(s.sent), length(t.sent)) * 13 THEN 1 ELSE 0 END AS BIGINT) AS pair_ok
-        |FROM seg s JOIN tgt t USING (doc_id, sent_idx)""".stripMargin,
-    // stream_bitext: identical recompute — the stateless stream-static join
-    // must land the exact batch answer
-    "stream_bitext" ->
-      """WITH w AS (SELECT doc_id, string_split(text,' ') AS w FROM documents),
-        |seg AS (
-        |  SELECT doc_id, (s//12)::BIGINT AS sent_idx,
-        |         coalesce(array_to_string(w[(s+1)::INT:(s+12)::INT], ' '), '') AS sent
-        |  FROM w CROSS JOIN unnest(range(0, len(w), 12)) AS t(s)),
-        |tgt AS (
-        |  SELECT doc_id, sent_idx,
-        |         CASE WHEN sent_idx % 3 = 2
-        |              THEN coalesce(array_to_string(list_reverse(string_split(sent,' '))[1:4], ' '), '')
-        |              ELSE coalesce(array_to_string(list_reverse(string_split(sent,' ')), ' '), '') END AS sent
-        |  FROM seg)
-        |SELECT s.doc_id, s.sent_idx, s.sent AS src_sent, t.sent AS tgt_sent,
-        |       CAST(length(s.sent) AS BIGINT) AS src_chars,
-        |       CAST(length(t.sent) AS BIGINT) AS tgt_chars,
-        |       CAST(CASE WHEN greatest(length(s.sent), length(t.sent)) * 10
-        |                      <= least(length(s.sent), length(t.sent)) * 13 THEN 1 ELSE 0 END AS BIGINT) AS pair_ok
-        |FROM seg s JOIN tgt t USING (doc_id, sent_idx)""".stripMargin,
-    "link_targets_top" -> LinkRowsSql("""SELECT href, CAST(count(*) AS BIGINT) AS n_docs
-        |FROM rows GROUP BY href
-        |ORDER BY n_docs DESC, href LIMIT 20""".stripMargin),
-    // anchor_text_agg: same link-inventory CTE; citation floor via HAVING on
-    // distinct doc_id, per-target top-3 terms with term tie-break.
-    "anchor_text_agg" -> LinkRowsSql(
-      """SELECT href, term, CAST(rank AS BIGINT) AS rank, cnt FROM (
-        |  SELECT href, term, CAST(count(*) AS BIGINT) AS cnt,
-        |         row_number() OVER (PARTITION BY href ORDER BY count(*) DESC, term) AS rank
-        |  FROM (SELECT href, unnest(string_split(anchor_text, ' ')) AS term
-        |        FROM rows WHERE href IN (SELECT href FROM rows GROUP BY href HAVING count(DISTINCT doc_id) >= 2))
-        |  GROUP BY href, term)
-        |WHERE rank <= 3""".stripMargin),
-    // crawl_delta: the oracle rebuilds snapshot B and classifies by direct
-    // text equality; the engine compares (xxhash64, length) content keys —
-    // same classification barring a 64-bit same-length collision (the
-    // dedup_exact tradeoff).
-    // scd2_history: the capture log is the planted as-of snapshot fixture;
-    // intervals are the same lead() recompute — Python-validated 999/999.
-    // The streaming twin must converge to the identical dimension table.
-    "scd2_history" -> Scd2Sql,
-    "stream_scd2_history" -> Scd2Sql,
-    // recrawl_interval: the oracle regrows the richer capture fixture
-    // (doc_id%5+1 captures spaced 3600*(k%41+1) s) and recomputes the
-    // clamped trunc-division estimate; Python-validated 500/500 at sf0.01.
-    "recrawl_interval" ->
-      """WITH s AS (SELECT doc_id AS k, unnest(range(0, doc_id%5 + 1)) AS version FROM documents),
-        |t AS (SELECT k, version, 1704067200 + version*3600*(k%41+1) + (k%97)*60 AS t FROM s),
-        |g AS (SELECT k, count(*) AS captures, min(t) AS first_t, max(t) AS last_t FROM t GROUP BY k),
-        |e AS (SELECT k, captures, captures-1 AS changes,
-        |        CASE WHEN captures=1 THEN 86400
-        |             ELSE least(greatest((last_t-first_t)//(captures-1), 7200), 86400) END AS est_interval_s,
-        |        last_t FROM g)
-        |SELECT k, CAST(captures AS BIGINT) AS captures, CAST(changes AS BIGINT) AS changes,
-        |       CAST(est_interval_s AS BIGINT) AS est_interval_s,
-        |       CAST(last_t + est_interval_s AS BIGINT) AS next_fetch,
-        |       CASE WHEN changes=0 THEN 'unseen' WHEN est_interval_s<=28800 THEN 'hot'
-        |            WHEN est_interval_s<86400 THEN 'warm' ELSE 'cold' END AS tier
-        |FROM e ORDER BY k""".stripMargin,
-    "crawl_delta" ->
-      """WITH a AS (SELECT doc_id, text FROM documents),
-        |b AS (SELECT doc_id, CASE WHEN doc_id%5=1 THEN text || ' updated' ELSE text END AS text
-        |      FROM documents WHERE doc_id%7<>3
-        |      UNION ALL
-        |      SELECT doc_id+1000000 AS doc_id, 'recrawl new page ' || doc_id AS text
-        |      FROM documents WHERE doc_id%11=0)
-        |SELECT coalesce(a.doc_id, b.doc_id) AS doc_id,
-        |       CASE WHEN a.doc_id IS NULL THEN 'added'
-        |            WHEN b.doc_id IS NULL THEN 'removed'
-        |            WHEN a.text = b.text THEN 'unchanged'
-        |            ELSE 'changed' END AS status
-        |FROM a FULL OUTER JOIN b ON a.doc_id = b.doc_id""".stripMargin,
-    // kmv_overlap: full sketch recompute — splitmix64 as the proven
-    // HUGEINT chain (shared verbatim with hll_distinct), bottom-k as
-    // ORDER BY h LIMIT k, every estimate trunc-integer; Python-validated
-    // at both sfs (tools/kmv_oracle_check.py)
-    "kmv_overlap" ->
-      """WITH av AS (SELECT DISTINCT CAST(doc_id*2 AS HUGEINT) AS v FROM documents),
-        |bv AS (SELECT DISTINCT v FROM (
-        |         SELECT CAST(doc_id*2 + CASE WHEN doc_id%5=1 THEN 1 ELSE 0 END AS HUGEINT) AS v
-        |         FROM documents WHERE doc_id%7<>3
-        |         UNION ALL
-        |         SELECT CAST((doc_id+1000000)*2 AS HUGEINT) FROM documents WHERE doc_id%11=0)),
-        |a1 AS (SELECT (v + 11400714819323198485) % 18446744073709551616 AS z FROM av),
-        |a2 AS (SELECT xor(z, z >> 30) AS x FROM a1),
-        |a3 AS (SELECT ((x % 4294967296) * 484763065
-        |        + (((x % 4294967296) * 3210233709 + (x // 4294967296) * 484763065) % 4294967296) * 4294967296)
-        |       % 18446744073709551616 AS z FROM a2),
-        |a4 AS (SELECT xor(z, z >> 27) AS x FROM a3),
-        |a5 AS (SELECT ((x % 4294967296) * 321982955
-        |        + (((x % 4294967296) * 2496678331 + (x // 4294967296) * 321982955) % 4294967296) * 4294967296)
-        |       % 18446744073709551616 AS z FROM a4),
-        |ha AS (SELECT DISTINCT xor(z, z >> 31) AS h FROM a5),
-        |b1 AS (SELECT (v + 11400714819323198485) % 18446744073709551616 AS z FROM bv),
-        |b2 AS (SELECT xor(z, z >> 30) AS x FROM b1),
-        |b3 AS (SELECT ((x % 4294967296) * 484763065
-        |        + (((x % 4294967296) * 3210233709 + (x // 4294967296) * 484763065) % 4294967296) * 4294967296)
-        |       % 18446744073709551616 AS z FROM b2),
-        |b4 AS (SELECT xor(z, z >> 27) AS x FROM b3),
-        |b5 AS (SELECT ((x % 4294967296) * 321982955
-        |        + (((x % 4294967296) * 2496678331 + (x // 4294967296) * 321982955) % 4294967296) * 4294967296)
-        |       % 18446744073709551616 AS z FROM b4),
-        |hb AS (SELECT DISTINCT xor(z, z >> 31) AS h FROM b5),
-        |sa AS (SELECT h FROM ha ORDER BY h LIMIT 256),
-        |sb AS (SELECT h FROM hb ORDER BY h LIMIT 256),
-        |mk AS (SELECT DISTINCT h FROM (SELECT h FROM sa UNION ALL SELECT h FROM sb)
-        |       ORDER BY h LIMIT 256),
-        |mm AS (SELECT CAST(count(*) AS BIGINT) AS m, max(h) AS uk FROM mk),
-        |mat AS (SELECT CAST(count(*) AS BIGINT) AS matches FROM mk
-        |        WHERE h IN (SELECT h FROM sa) AND h IN (SELECT h FROM sb)),
-        |exu AS (SELECT CAST(count(*) AS BIGINT) AS exact_union
-        |        FROM (SELECT v FROM av UNION SELECT v FROM bv)),
-        |exi AS (SELECT CAST(count(*) AS BIGINT) AS exact_inter FROM av
-        |        WHERE v IN (SELECT v FROM bv)),
-        |est AS (SELECT m, matches,
-        |               CASE WHEN m < 256 THEN m
-        |                    ELSE CAST((255 * CAST(18446744073709551616 AS HUGEINT)) // uk AS BIGINT)
-        |               END AS est_union
-        |        FROM mm, mat)
-        |SELECT CAST(256 AS BIGINT) AS k, m, matches,
-        |       matches * 10000 // m AS jaccard_bp,
-        |       est_union,
-        |       matches * est_union // m AS est_inter,
-        |       exact_union, exact_inter,
-        |       abs(est_union - exact_union) * 10000 // exact_union AS union_err_bp
-        |FROM est, exu, exi""".stripMargin,
-    // host_rank: the engine's integer fixed-point PageRank unrolled as 3 CTE
-    // iterations over the same edge recipe (generated — see hostRankCtes).
-    "host_rank" ->
-      (hostRankCtes(3) + "\nSELECT host, CAST(rank AS BIGINT) AS rank FROM r3 ORDER BY host"),
-    // host_rank_converged: the engine iterates to the exact integer fixed
-    // point (zero host-grain delta); the oracle unrolls a FIXED 40 rounds —
-    // past the fixed point every further iteration is the identity, so the
-    // same SQL matches at any sf converging within 40 (measured 28-29).
-    "host_rank_converged" ->
-      (hostRankCtes(40) + "\nSELECT host, CAST(rank AS BIGINT) AS rank FROM r40 ORDER BY host"),
-    // host_triangles: the oracle enumerates triangles by the lexicographic
-    // 3-way join (same SET as the engine's degree-ordered orientation);
-    // Python-validated 7/7 at both sfs (tools/sched_quant_tri_check.py)
-    "host_triangles" ->
-      """WITH e0 AS (
-        |  SELECT 'site' || (doc_id%7) || '.example.com' AS src,
-        |         'site' || ((2*doc_id+1)%7) || '.example.com' AS dst FROM documents
-        |  UNION ALL
-        |  SELECT 'site' || (doc_id%7) || '.example.com' AS src,
-        |         'site' || ((3*doc_id+2)%7) || '.example.com' AS dst FROM documents WHERE doc_id%3=0
-        |  UNION ALL
-        |  SELECT 'site' || (doc_id%7) || '.example.com' AS src,
-        |         'site0.example.com' AS dst FROM documents WHERE doc_id%5<2),
-        |und AS (SELECT DISTINCT least(src,dst) AS a, greatest(src,dst) AS b FROM e0 WHERE src <> dst),
-        |deg AS (SELECT host, count(*)::BIGINT AS deg
-        |        FROM (SELECT a AS host FROM und UNION ALL SELECT b FROM und) GROUP BY 1),
-        |tri AS (SELECT e1.a AS x, e1.b AS y, e2.b AS z
-        |        FROM und e1 JOIN und e2 ON e2.a = e1.b
-        |        JOIN und e3 ON e3.a = e1.a AND e3.b = e2.b),
-        |ph AS (SELECT host, count(*)::BIGINT AS tri
-        |       FROM (SELECT unnest([x,y,z]) AS host FROM tri) GROUP BY 1)
-        |SELECT deg.host, deg.deg, coalesce(ph.tri, 0)::BIGINT AS tri,
-        |       CAST(CASE WHEN deg.deg < 2 THEN 0
-        |            ELSE (coalesce(ph.tri,0)*20000)//(deg.deg*(deg.deg-1)) END AS BIGINT) AS cc_bp
-        |FROM deg LEFT JOIN ph USING (host) ORDER BY host""".stripMargin,
-    // kcore_hosts: unrolled peel rounds (fixed point ⇒ extra rounds no-op);
-    // Python-validated at both sfs (tools/round5b_check.py, 2 peel rounds)
-    "kcore_hosts" -> (kcoreCtes(8) + """,
-      |core_e AS (SELECT a, b FROM und WHERE a IN (SELECT host FROM n8) AND b IN (SELECT host FROM n8)),
-      |core_d AS (SELECT host, count(*)::BIGINT AS core_deg
-      |           FROM (SELECT a AS host FROM core_e UNION ALL SELECT b FROM core_e) GROUP BY 1)
-      |SELECT n0.host,
-      |       CAST(CASE WHEN core_d.host IS NOT NULL THEN 1 ELSE 0 END AS BIGINT) AS in_core,
-      |       coalesce(core_d.core_deg, 0)::BIGINT AS core_deg
-      |FROM n0 LEFT JOIN core_d ON n0.host = core_d.host ORDER BY n0.host""".stripMargin),
-    // cocitation_hosts: exact Jaccard of citing sets per co-cited pair;
-    // Python-validated 9/9 pairs at both sfs (tools/round5b_check.py)
-    "cocitation_hosts" ->
-      """WITH e0 AS (
-        |  SELECT 'site' || (doc_id%7) || '.example.com' AS src,
-        |         'site' || ((2*doc_id+1)%7) || '.example.com' AS dst FROM documents
-        |  UNION ALL
-        |  SELECT 'site' || (doc_id%7) || '.example.com' AS src,
-        |         'site' || ((3*doc_id+2)%7) || '.example.com' AS dst FROM documents WHERE doc_id%3=0
-        |  UNION ALL
-        |  SELECT 'site' || (doc_id%7) || '.example.com' AS src,
-        |         'site0.example.com' AS dst FROM documents WHERE doc_id%5<2),
-        |e AS (SELECT DISTINCT src, dst FROM e0 WHERE src <> dst),
-        |ind AS (SELECT dst, count(*)::BIGINT AS indeg FROM e GROUP BY 1),
-        |p AS (SELECT e1.dst AS h1, e2.dst AS h2, count(*)::BIGINT AS cocite
-        |      FROM e e1 JOIN e e2 ON e1.src = e2.src AND e1.dst < e2.dst GROUP BY 1, 2)
-        |SELECT h1, h2, cocite,
-        |       CAST((cocite*10000)//(i1.indeg + i2.indeg - cocite) AS BIGINT) AS jac_bp
-        |FROM p JOIN ind i1 ON p.h1 = i1.dst JOIN ind i2 ON p.h2 = i2.dst
-        |ORDER BY h1, h2""".stripMargin,
-    // ppr_hosts: unrolled personalized-PageRank rounds (teleport at seed
-    // only); Python-validated at both sfs incl. the unreachable-host zero
-    // (tools/round5e_check.py)
-    "ppr_hosts" ->
-      (pprCtes(3) + "\nSELECT host, CAST(rank AS BIGINT) AS rank FROM r3 ORDER BY host"),
-    // range_join: the oracle is the direct BETWEEN join (DuckDB IEJoin);
-    // the engine's bucketized equi-join must produce the identical pair
-    // set; Python-validated 5/443 pairs at the two sfs
-    // (tools/round5e_check.py, incl. the single-bucket-meet property)
-    "range_join" ->
-      """WITH ev AS (SELECT event_id, event_type, floor(epoch(ts))::BIGINT AS sec FROM events),
-        |iv AS (SELECT event_id AS iv_id, sec AS lo, sec + 5400 AS hi FROM ev WHERE event_id % 97 = 0),
-        |pt AS (SELECT event_id, sec FROM ev WHERE event_type = 'error')
-        |SELECT iv_id, pt.event_id, sec FROM iv JOIN pt ON sec BETWEEN lo AND hi
-        |ORDER BY iv_id, pt.event_id""".stripMargin,
-    // range_join_rule: identical result contract to range_join — the rule
-    // only changes the physical plan, never the pair set
-    "range_join_rule" ->
-      """WITH ev AS (SELECT event_id, event_type, floor(epoch(ts))::BIGINT AS sec FROM events),
-        |iv AS (SELECT event_id AS iv_id, sec AS lo, sec + 5400 AS hi FROM ev WHERE event_id % 97 = 0),
-        |pt AS (SELECT event_id, sec FROM ev WHERE event_type = 'error')
-        |SELECT iv_id, pt.event_id, sec FROM iv JOIN pt ON sec BETWEEN lo AND hi
-        |ORDER BY iv_id, pt.event_id""".stripMargin,
-    // stream_range_join: append-exact stream-static twin — identical pair
-    // set to the batch BETWEEN join
-    "stream_range_join" ->
-      """WITH ev AS (SELECT event_id, event_type, floor(epoch(ts))::BIGINT AS sec FROM events),
-        |iv AS (SELECT event_id AS iv_id, sec AS lo, sec + 5400 AS hi FROM ev WHERE event_id % 97 = 0),
-        |pt AS (SELECT event_id, sec FROM ev WHERE event_type = 'error')
-        |SELECT iv_id, pt.event_id, sec FROM iv JOIN pt ON sec BETWEEN lo AND hi
-        |ORDER BY iv_id, pt.event_id""".stripMargin,
-    // budget_alloc: largest-remainder apportionment to an exact budget of
-    // 997 (prime, so remainder slots exist at any sf); Python-validated at
-    // both sfs (tools/round5e_check.py)
-    "budget_alloc" ->
-      """WITH h AS (SELECT 'site' || (doc_id%7) || '.example.com' AS host,
-        |                  count(*)::BIGINT AS n_docs FROM documents GROUP BY 1),
-        |t AS (SELECT sum(n_docs)::BIGINT AS total FROM h),
-        |b AS (SELECT host, n_docs, (997*n_docs)//total AS base, (997*n_docs)%total AS rem FROM h, t),
-        |s AS (SELECT sum(base)::BIGINT AS sb FROM b),
-        |r AS (SELECT host, n_docs, base,
-        |             row_number() OVER (ORDER BY rem DESC, host) AS rk FROM b)
-        |SELECT host, n_docs,
-        |       CAST(base + CASE WHEN rk <= 997 - (SELECT sb FROM s) THEN 1 ELSE 0 END AS BIGINT) AS alloc
-        |FROM r ORDER BY host""".stripMargin,
-    // hyperball_reach: the full sketch recomputed in SQL — FNV of the host
-    // string through the HUGEINT splitmix64 chain (the hll_distinct CTE
-    // shapes), 3 register-max rounds over the self-looped adjacency, grid
-    // fill + the same alpha·m²·2^59 integer estimator; exact balls via the
-    // unrolled pair closure. Python-validated 21/21 rows at both sfs
-    // (tools/round5d_check.py)
-    "hyperball_reach" ->
-      """WITH e0 AS (
-        |  SELECT 'site' || (doc_id%7) || '.example.com' AS src,
-        |         'site' || ((2*doc_id+1)%7) || '.example.com' AS dst FROM documents
-        |  UNION ALL
-        |  SELECT 'site' || (doc_id%7) || '.example.com' AS src,
-        |         'site' || ((3*doc_id+2)%7) || '.example.com' AS dst FROM documents WHERE doc_id%3=0
-        |  UNION ALL
-        |  SELECT 'site' || (doc_id%7) || '.example.com' AS src,
-        |         'site0.example.com' AS dst FROM documents WHERE doc_id%5<2),
-        |und AS MATERIALIZED (SELECT DISTINCT least(src,dst) AS a, greatest(src,dst) AS b FROM e0 WHERE src <> dst),
-        |hosts AS MATERIALIZED (SELECT a AS host FROM und UNION SELECT b FROM und),
-        |adj AS MATERIALIZED (SELECT a AS u, b AS v FROM und UNION SELECT b, a FROM und
-        |                     UNION SELECT host, host FROM hosts),
-        |f AS (SELECT host, list_reduce(list_prepend(14695981039346656037::HUGEINT,
-        |        [unicode(c)::HUGEINT for c in string_split(host, '')]),
-        |        (h,b) -> ((h - h%128 + xor((h%128)::BIGINT, b::BIGINT)::HUGEINT) * 1099511628211::HUGEINT) % (1::HUGEINT<<64)) AS v
-        |      FROM hosts),
-        |h1 AS (SELECT host, (v + 11400714819323198485) % 18446744073709551616 AS z FROM f),
-        |h2 AS (SELECT host, xor(z, z >> 30) AS x FROM h1),
-        |h3 AS (SELECT host,
-        |         ((x % 4294967296) * 484763065
-        |          + (((x % 4294967296) * 3210233709 + (x // 4294967296) * 484763065) % 4294967296) * 4294967296)
-        |         % 18446744073709551616 AS z
-        |       FROM h2),
-        |h4 AS (SELECT host, xor(z, z >> 27) AS x FROM h3),
-        |h5 AS (SELECT host,
-        |         ((x % 4294967296) * 321982955
-        |          + (((x % 4294967296) * 2496678331 + (x // 4294967296) * 321982955) % 4294967296) * 4294967296)
-        |         % 18446744073709551616 AS z
-        |       FROM h4),
-        |hh AS (SELECT host, xor(z, z >> 31) AS h FROM h5),
-        |s0 AS MATERIALIZED (SELECT host, CAST(h // 288230376151711744 AS BIGINT) AS idx,
-        |        CAST(CASE WHEN h % 288230376151711744 = 0 THEN 59
-        |                  ELSE 58 - len(bin(h % 288230376151711744)) + 1 END AS BIGINT) AS rho
-        |      FROM hh),
-        |s1 AS MATERIALIZED (SELECT adj.u AS host, idx, max(rho) AS rho FROM adj JOIN s0 ON s0.host = adj.v GROUP BY 1, 2),
-        |s2 AS MATERIALIZED (SELECT adj.u AS host, idx, max(rho) AS rho FROM adj JOIN s1 ON s1.host = adj.v GROUP BY 1, 2),
-        |s3 AS MATERIALIZED (SELECT adj.u AS host, idx, max(rho) AS rho FROM adj JOIN s2 ON s2.host = adj.v GROUP BY 1, 2),
-        |p0 AS MATERIALIZED (SELECT host, host AS member FROM hosts),
-        |p1 AS MATERIALIZED (SELECT DISTINCT adj.u AS host, p0.member FROM adj JOIN p0 ON p0.host = adj.v),
-        |p2 AS MATERIALIZED (SELECT DISTINCT adj.u AS host, p1.member FROM adj JOIN p1 ON p1.host = adj.v),
-        |p3 AS MATERIALIZED (SELECT DISTINCT adj.u AS host, p2.member FROM adj JOIN p2 ON p2.host = adj.v),
-        |grid AS (SELECT hosts.host, g.i AS idx FROM hosts, UNNEST(generate_series(0, 63)) g(i)),
-        |est AS (
-        |  SELECT 1 AS r, grid.host, sum(CAST(1 AS HUGEINT) << (59 - coalesce(s1.rho, 0))) AS z2
-        |  FROM grid LEFT JOIN s1 ON grid.host = s1.host AND grid.idx = s1.idx GROUP BY 1, 2
-        |  UNION ALL
-        |  SELECT 2, grid.host, sum(CAST(1 AS HUGEINT) << (59 - coalesce(s2.rho, 0)))
-        |  FROM grid LEFT JOIN s2 ON grid.host = s2.host AND grid.idx = s2.idx GROUP BY 1, 2
-        |  UNION ALL
-        |  SELECT 3, grid.host, sum(CAST(1 AS HUGEINT) << (59 - coalesce(s3.rho, 0)))
-        |  FROM grid LEFT JOIN s3 ON grid.host = s3.host AND grid.idx = s3.idx GROUP BY 1, 2),
-        |ex AS (
-        |  SELECT 1 AS r, host, count(*)::BIGINT AS ball_exact FROM p1 GROUP BY 1, 2
-        |  UNION ALL SELECT 2, host, count(*)::BIGINT FROM p2 GROUP BY 1, 2
-        |  UNION ALL SELECT 3, host, count(*)::BIGINT FROM p3 GROUP BY 1, 2)
-        |SELECT est.host, CAST(est.r AS BIGINT) AS r,
-        |       CAST((709343 * CAST(4096 AS HUGEINT) * 576460752303423488) // (1000000 * z2) AS BIGINT) AS ball_est,
-        |       ex.ball_exact
-        |FROM est JOIN ex ON est.host = ex.host AND est.r = ex.r
-        |ORDER BY est.host, est.r""".stripMargin,
-    // hits_scores: unrolled auth/hub half-round CTEs, integer max-norm
-    "hits_scores" ->
-      (hitsCtes(3) +
-        "\nSELECT host, CAST(hub AS BIGINT) AS hub, CAST(auth AS BIGINT) AS auth" +
-        "\nFROM h3 JOIN a3 USING (host) ORDER BY host"),
-    // crawl_budget: host_rank's CTE chain + a one-line budget split —
-    // floor((rank * 10^6) / sum(rank)), all non-negative so // matches div
-    "crawl_budget" ->
-      (hostRankCtes(3) +
-        """,
-          |rs AS (SELECT sum(rank) AS s FROM r3)
-          |SELECT host, CAST(rank AS BIGINT) AS rank,
-          |       CAST((rank * 1000000) // (SELECT s FROM rs) AS BIGINT) AS budget
-          |FROM r3 ORDER BY host""".stripMargin),
-    // reciprocal_links: the same synthetic edge recipe, split by canonical
-    // pair order and self-joined — host pairs linking both ways
-    "reciprocal_links" ->
-      """WITH e0 AS (
-        |  SELECT 'site' || (doc_id%7) || '.example.com' AS src,
-        |         'site' || ((2*doc_id+1)%7) || '.example.com' AS dst FROM documents
-        |  UNION ALL
-        |  SELECT 'site' || (doc_id%7) || '.example.com' AS src,
-        |         'site' || ((3*doc_id+2)%7) || '.example.com' AS dst FROM documents WHERE doc_id%3=0
-        |  UNION ALL
-        |  SELECT 'site' || (doc_id%7) || '.example.com' AS src,
-        |         'site0.example.com' AS dst FROM documents WHERE doc_id%5<2),
-        |e AS (SELECT src, dst, CAST(count(*) AS BIGINT) AS weight FROM e0 GROUP BY src, dst),
-        |ab AS (SELECT src AS host_a, dst AS host_b, weight AS w_ab FROM e WHERE src < dst),
-        |ba AS (SELECT dst AS host_a, src AS host_b, weight AS w_ba FROM e WHERE src > dst)
-        |SELECT host_a, host_b, CAST(w_ab AS BIGINT) AS w_ab, CAST(w_ba AS BIGINT) AS w_ba,
-        |       CAST(least(w_ab, w_ba) AS BIGINT) AS w_min
-        |FROM ab JOIN ba USING (host_a, host_b)
-        |ORDER BY host_a, host_b""".stripMargin,
-    // quality_ensemble: composes the three individually-validated gate
-    // oracles (gopher shape, repetition, LM surprise) at doc grain
-    "quality_ensemble" -> QualityGatesSql(
-      """SELECT doc_id, g_gopher, g_rep, g_lm, keep FROM gates ORDER BY doc_id"""),
-    // quality_mixture: DCLM-style tiered sampling — keep rate scales with the
-    // number of ensemble gates passed; bucket = the same salted FNV as
-    // sample_mixture (salt qmix). Python-validated 0/500 before wiring.
-    "quality_mixture" -> QualityGatesSql(
-      """SELECT gates.doc_id AS doc_id, CAST(g_gopher + g_rep + g_lm AS BIGINT) AS tier,
-        |       CAST(h % 10000 AS BIGINT) AS bucket,
-        |       CAST(CASE WHEN (h % 10000) < 1000 + (g_gopher + g_rep + g_lm) * 3000
-        |            THEN 1 ELSE 0 END AS BIGINT) AS keep
-        |FROM gates JOIN k ON gates.doc_id = k.doc_id""".stripMargin,
-      extraCtes = ",\n" + FnvCte("qmix")),
-    // sitemap_urls: every document appears exactly once regardless of the
-    // index/flat split, so the oracle is pure doc arithmetic; lastmod is
-    // date arithmetic rendered ISO (TZ-free), priority integer basis points
-    // feed_items: the oracle regrows every item from the generator's doc_id
-    // arithmetic (parity picks the format, entity trap decoded, ISO stamps
-    // as strings); Python-validated 1250/1250 at sf0.01. The streaming twin
-    // shares it (stateless per-row op: drained table == batch answer).
-    "feed_items" -> FeedItemsSql,
-    "stream_feed_items" -> FeedItemsSql,
-    // jsonld_articles: CASE arithmetic over the generator (escaped-quote
-    // headline, ISO date, author %13, exact space-count word count); pages
-    // with no Article block (doc_id%11=3) are absent; Python-validated
-    // 454/454 at sf0.01.
-    "jsonld_articles" ->
-      """WITH w AS (SELECT doc_id, length(text) - length(replace(text,' ','')) + 1 AS wc FROM documents)
-        |SELECT doc_id,
-        |  'document ' || doc_id || CASE WHEN doc_id%7=0 THEN ' "brief"' ELSE '' END AS headline,
-        |  CAST(DATE '2020-01-01' + CAST(doc_id%365 AS INTEGER) AS VARCHAR) AS date_published,
-        |  'author ' || (doc_id%13) AS author_name,
-        |  CAST(wc AS BIGINT) AS word_count
-        |FROM w WHERE doc_id%11<>3 ORDER BY doc_id""".stripMargin,
-    // optout_gate: CASE table over the six planted robots-meta branches
-    // (directive parsing = trim+lowercase on comma splits; only
-    // noindex/noai flip the training gate); Python-validated 500/500.
-    "optout_gate" ->
-      """SELECT doc_id,
-        |  CASE doc_id%6 WHEN 0 THEN 'noindex' WHEN 1 THEN 'noai, noimageai' WHEN 2 THEN 'index, follow'
-        |       WHEN 3 THEN '' WHEN 4 THEN 'NOINDEX,NOFOLLOW' ELSE 'max-snippet:-1' END AS robots_meta,
-        |  doc_id%6 IN (0,4) AS noindex,
-        |  doc_id%6 = 4 AS nofollow,
-        |  doc_id%6 = 1 AS noai,
-        |  NOT (doc_id%6 IN (0,1,4)) AS keep_for_training
-        |FROM documents ORDER BY doc_id""".stripMargin,
-    // license_detect: CASE table over the six planted rel=license branches
-    // (multi-token and uppercase rel both declare; absent/non-CC -> all
-    // clearance flags false). Python-validated 500/500 at sf0.01.
-    "license_detect" ->
-      """SELECT doc_id,
-        |  CASE doc_id%6
-        |    WHEN 0 THEN 'https://creativecommons.org/licenses/by/4.0/'
-        |    WHEN 1 THEN 'https://creativecommons.org/licenses/by-nc-sa/3.0/'
-        |    WHEN 2 THEN 'https://creativecommons.org/licenses/by-nd/4.0/'
-        |    WHEN 4 THEN 'https://example.com/terms-of-use'
-        |    WHEN 5 THEN 'https://creativecommons.org/publicdomain/zero/1.0/'
-        |    ELSE NULL END AS license_url,
-        |  doc_id%6 IN (0,1,2,5) AS is_cc,
-        |  CASE doc_id%6 WHEN 0 THEN 'by' WHEN 1 THEN 'by-nc-sa' WHEN 2 THEN 'by-nd'
-        |       WHEN 5 THEN 'zero' ELSE NULL END AS cc_family,
-        |  CASE doc_id%6 WHEN 0 THEN '4.0' WHEN 1 THEN '3.0' WHEN 2 THEN '4.0'
-        |       WHEN 5 THEN '1.0' ELSE NULL END AS cc_version,
-        |  doc_id%6 IN (0,2,5) AS allows_commercial,
-        |  doc_id%6 IN (0,1,5) AS allows_derivatives,
-        |  doc_id%6 = 1 AS requires_sharealike,
-        |  doc_id%6 IN (0,2,5) AS keep_commercial
-        |FROM documents ORDER BY doc_id""".stripMargin,
-    // stream_license_detect: stateless stream twin — same answer as the
-    // batch license gate by construction, same oracle SQL
-    "stream_license_detect" ->
-      """SELECT doc_id,
-        |  CASE doc_id%6
-        |    WHEN 0 THEN 'https://creativecommons.org/licenses/by/4.0/'
-        |    WHEN 1 THEN 'https://creativecommons.org/licenses/by-nc-sa/3.0/'
-        |    WHEN 2 THEN 'https://creativecommons.org/licenses/by-nd/4.0/'
-        |    WHEN 4 THEN 'https://example.com/terms-of-use'
-        |    WHEN 5 THEN 'https://creativecommons.org/publicdomain/zero/1.0/'
-        |    ELSE NULL END AS license_url,
-        |  doc_id%6 IN (0,1,2,5) AS is_cc,
-        |  CASE doc_id%6 WHEN 0 THEN 'by' WHEN 1 THEN 'by-nc-sa' WHEN 2 THEN 'by-nd'
-        |       WHEN 5 THEN 'zero' ELSE NULL END AS cc_family,
-        |  CASE doc_id%6 WHEN 0 THEN '4.0' WHEN 1 THEN '3.0' WHEN 2 THEN '4.0'
-        |       WHEN 5 THEN '1.0' ELSE NULL END AS cc_version,
-        |  doc_id%6 IN (0,2,5) AS allows_commercial,
-        |  doc_id%6 IN (0,1,5) AS allows_derivatives,
-        |  doc_id%6 = 1 AS requires_sharealike,
-        |  doc_id%6 IN (0,2,5) AS keep_commercial
-        |FROM documents ORDER BY doc_id""".stripMargin,
-    // code_detect: the oracle replants the 8-word-chunk code lines with a
-    // list comprehension (line_dedup's chunk grain) and recomputes every
-    // integer feature; trunc division on the per-1000 density both sides.
-    // Python-validated 500/500 at sf0.01 (planted 100 flagged, prose 0).
-    "code_detect" ->
-      """WITH w AS (SELECT doc_id, text, string_split(text,' ') AS ws FROM documents),
-        |b AS (SELECT doc_id,
-        |  CASE WHEN doc_id%5=0 THEN
-        |    array_to_string([ '  let v'||(i-1)||' = ('||coalesce(array_to_string(ws[(i-1)*8+1:(i-1)*8+8],' '),'')||');'
-        |                      for i in range(1, CAST(ceil(len(ws)/8.0) AS BIGINT)+1) ], chr(10))
-        |  ELSE text END AS body FROM w),
-        |f AS (SELECT doc_id, body,
-        |  CAST(length(body) AS BIGINT) AS n_chars,
-        |  string_split(body, chr(10)) AS lns,
-        |  CAST(length(body) - length(regexp_replace(body, '[;(){}=<>\[\]]', '', 'g')) AS BIGINT) AS n_symbols
-        |  FROM b)
-        |SELECT doc_id,
-        |  CAST(len(lns) AS BIGINT) AS n_lines,
-        |  CAST(len(list_filter(lns, l -> l LIKE '%;')) AS BIGINT) AS n_semicolon_lines,
-        |  CAST(len(list_filter(lns, l -> l LIKE '  %')) AS BIGINT) AS n_indent_lines,
-        |  n_symbols, n_chars,
-        |  CAST(n_symbols*1000 // n_chars AS BIGINT) AS symbol_per_1000,
-        |  (2*len(list_filter(lns, l -> l LIKE '%;')) >= len(lns)
-        |   AND n_symbols*1000 // n_chars >= 10) AS is_code
-        |FROM f ORDER BY doc_id""".stripMargin,
-    // edit_verify: the oracle regrows the sparse-edit twins (every 16th word
-    // -> 'e'||i) with an indexed list comprehension and recomputes the CAPPED
-    // distance via least(levenshtein, maxlen//5 + 1) — bit-equal to the
-    // banded kernel by the cap contract. Python-validated 999/999 at sf0.01
-    // (tools/edit_oracle_check.py: 500 twins dup, 499 decoys rejected).
-    "edit_verify" ->
-      """WITH w AS (SELECT doc_id, string_split(text, ' ') AS ws FROM documents),
-        |tw AS (SELECT doc_id + 1000000 AS doc_id,
-        |  array_to_string([CASE WHEN (i-1)%16 = 3 THEN 'e'||(i-1) ELSE ws[i] END
-        |                   for i in range(1, len(ws)+1)], ' ') AS text FROM w),
-        |corpus AS (SELECT doc_id, text FROM documents UNION ALL SELECT doc_id, text FROM tw),
-        |cand AS (SELECT doc_id AS a, doc_id + 1000000 AS b FROM documents
-        |         UNION ALL SELECT doc_id AS a, doc_id + 1000001 AS b FROM documents),
-        |j AS (SELECT c.a, c.b, x.text AS ta, y.text AS tb
-        |      FROM cand c JOIN corpus x ON x.doc_id = c.a JOIN corpus y ON y.doc_id = c.b)
-        |SELECT a, b,
-        |  CAST(least(levenshtein(ta, tb), greatest(length(ta), length(tb)) // 5 + 1) AS BIGINT) AS edit_dist,
-        |  CAST(greatest(length(ta), length(tb)) AS BIGINT) AS max_len,
-        |  5 * least(levenshtein(ta, tb), greatest(length(ta), length(tb)) // 5 + 1)
-        |    <= greatest(length(ta), length(tb)) AS is_dup
-        |FROM j ORDER BY a, b""".stripMargin,
-    // vocab_growth: cumulative-count correlated subqueries per checkpoint
-    // (tiny), new_* via lag-diff — equal to the engine's first-seen bucket
-    // counts because bucket(fd) = min{cp : cp > fd} (both identities
-    // Python-validated at sf0.01, tools/vocab_oracle_check.py).
-    "vocab_growth" ->
-      """WITH n AS (SELECT max(doc_id) + 1 AS n FROM documents),
-        |cps AS (SELECT DISTINCT cp FROM (
-        |    SELECT (1::BIGINT << p) AS cp FROM range(0, 63) t(p), n WHERE (1::BIGINT << p) < n.n
-        |    UNION ALL SELECT n FROM n)),
-        |w AS (SELECT doc_id, string_split(text, ' ') AS ws FROM documents),
-        |tok AS (SELECT doc_id, unnest(ws) AS term FROM w),
-        |big AS (SELECT doc_id, unnest([ws[i] || ' ' || ws[i+1] for i in range(1, len(ws))]) AS term FROM w),
-        |fs AS (SELECT term, min(doc_id) AS fd FROM tok GROUP BY term),
-        |fb AS (SELECT term, min(doc_id) AS fd FROM big GROUP BY term),
-        |dt AS (SELECT doc_id, len(ws) AS tc FROM w),
-        |cum AS (SELECT c.cp AS docs_seen,
-        |  CAST((SELECT count(*) FROM fs f WHERE f.fd < c.cp) AS BIGINT) AS vocab_size,
-        |  CAST((SELECT count(*) FROM fb f WHERE f.fd < c.cp) AS BIGINT) AS bigram_vocab,
-        |  CAST((SELECT coalesce(sum(tc), 0) FROM dt WHERE dt.doc_id < c.cp) AS BIGINT) AS token_count
-        |  FROM cps c)
-        |SELECT docs_seen, vocab_size, bigram_vocab, token_count,
-        |  vocab_size - lag(vocab_size, 1, 0) OVER (ORDER BY docs_seen) AS new_terms,
-        |  bigram_vocab - lag(bigram_vocab, 1, 0) OVER (ORDER BY docs_seen) AS new_bigrams
-        |FROM cum ORDER BY docs_seen""".stripMargin,
-    // token_budget_select: the oracle's window cumsum (fine at oracle scale;
-    // the engine uses the two-pass prefix sum instead) recomputes the greedy
-    // prefix exactly; HUGEINT window sum cast back to BIGINT (the r2 class).
-    // Python-validated 500/500 at sf0.01 (tools/budget_oracle_check.py,
-    // 328 selected at the 13000-token budget).
-    "token_budget_select" ->
-      """WITH w AS (SELECT doc_id, string_split(text, ' ') AS ws FROM documents),
-        |q AS (SELECT doc_id, CAST(len(ws) AS BIGINT) AS n_tokens,
-        |      CAST(len(list_distinct(ws)) * 1000 // len(ws) AS BIGINT) AS quality_bp FROM w),
-        |c AS (SELECT *, coalesce(sum(n_tokens) OVER (ORDER BY quality_bp DESC, doc_id
-        |        ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0) AS cb FROM q)
-        |SELECT doc_id, quality_bp, n_tokens, CAST(cb AS BIGINT) AS cum_before,
-        |  cb < 13000 AS selected
-        |FROM c ORDER BY doc_id""".stripMargin,
-    // posting_gaps: delta-gap + varbyte recompute over the distinct bigram
-    // postings; byte cost is pure bit arithmetic (length(bin(v))), first
-    // posting stored as-is, max_gap NULL for single-posting terms.
-    // Python-validated 916/916 terms at sf0.01 (tools/posting_oracle_check.py,
-    // 25728 B varbyte vs 205672 B raw = 8.0x).
-    "posting_gaps" ->
-      """WITH w AS (SELECT doc_id, string_split(text, ' ') AS ws FROM documents),
-        |bg AS (SELECT doc_id, unnest([ws[i] || ' ' || ws[i+1] for i in range(1, len(ws))]) AS term FROM w),
-        |p AS (SELECT DISTINCT term, doc_id FROM bg),
-        |g AS (SELECT term, doc_id, doc_id - lag(doc_id) OVER (PARTITION BY term ORDER BY doc_id) AS gap FROM p),
-        |e AS (SELECT term, coalesce(gap, doc_id) AS v, gap FROM g)
-        |SELECT term, CAST(count(*) AS BIGINT) AS df,
-        |  CAST(sum(CASE WHEN v = 0 THEN 1 ELSE (length(bin(v)) + 6) // 7 END) AS BIGINT) AS index_bytes,
-        |  CAST(8 * count(*) AS BIGINT) AS raw_bytes,
-        |  CAST(max(gap) AS BIGINT) AS max_gap
-        |FROM e GROUP BY term ORDER BY term""".stripMargin,
-    "sitemap_urls" ->
-      """SELECT 'https://site'||(doc_id%7)||'.example.com/articles/doc'||doc_id||'.html' AS loc,
-        |  CAST(DATE '2020-01-01' + CAST(doc_id%365 AS INTEGER) AS VARCHAR) AS lastmod,
-        |  CASE doc_id%3 WHEN 0 THEN 'daily' WHEN 1 THEN 'weekly' ELSE 'monthly' END AS changefreq,
-        |  CAST((doc_id%10)*1000 AS BIGINT) AS priority_bp
-        |FROM documents ORDER BY loc""".stripMargin,
-    // redirect_resolve: the fixture's chains (class c = c hops down to the
-    // class-0 landing url) and 2-cycles (doc_id%77 in 5,6) collapse to CASE
-    // arithmetic — validated against an independent Python walk
-    "redirect_resolve" ->
-      """SELECT doc_id,
-        |  'https://site'||(doc_id%7)||'.example.com/r/'||doc_id AS url,
-        |  CASE WHEN doc_id%77 IN (5,6) THEN 'cycle' ELSE 'ok' END AS status,
-        |  CAST(CASE WHEN doc_id%77 IN (5,6) THEN -1
-        |            WHEN doc_id%7 BETWEEN 1 AND 4 THEN doc_id%7
-        |            ELSE 0 END AS BIGINT) AS hops,
-        |  CASE WHEN doc_id%77 IN (5,6) THEN NULL
-        |       WHEN doc_id%7 BETWEEN 1 AND 4 THEN 'https://site0.example.com/r/'||(doc_id - doc_id%7)
-        |       ELSE 'https://site'||(doc_id%7)||'.example.com/r/'||doc_id END AS final_url
-        |FROM documents ORDER BY doc_id""".stripMargin,
-    // dedup_normalized: same messy fixture + clean twins, grouped on the
-    // oracle-side normalization chain (the engine's hash keys carry
-    // dedup_exact's collision tradeoff); 375 pairs merge, accent class stays
-    "dedup_normalized" ->
-      """WITH m AS (SELECT doc_id,
-        |  CASE doc_id%4
-        |    WHEN 0 THEN replace(text, 'e', 'e' || chr(769))
-        |    WHEN 1 THEN replace(text, ' ', chr(160))
-        |    WHEN 2 THEN chr(13) || replace(text, ' ', '  ') || '  '
-        |    ELSE chr(8203) || text || chr(65279)
-        |  END AS raw FROM documents),
-        |a AS (SELECT doc_id, raw AS t FROM m
-        |      UNION ALL SELECT doc_id + 1000000, text FROM documents),
-        |n AS (SELECT doc_id,
-        |  trim(regexp_replace(
-        |    replace(replace(replace(replace(nfc_normalize(t), chr(160), ' '), chr(8203), ''), chr(65279), ''), chr(13), ''),
-        |    ' +', ' ', 'g')) AS norm FROM a)
-        |SELECT min(doc_id) AS keep_id, CAST(count(*) AS BIGINT) AS n_copies
-        |FROM n GROUP BY norm ORDER BY keep_id""".stripMargin,
-    // charset_decode: charset/bom are fixture arithmetic; extracted_text is
-    // the html_main_content reassembly — equality proves the decode was
-    // byte-exact through every encoding class (a wrong charset would corrupt
-    // the article words, not just the label)
-    "charset_decode" ->
-      """SELECT doc_id,
-        |  CASE doc_id%4 WHEN 0 THEN 'utf-8' WHEN 1 THEN 'utf-16le'
-        |       WHEN 2 THEN 'iso-8859-1' ELSE 'utf-8' END AS charset,
-        |  CAST(CASE doc_id%4 WHEN 0 THEN 3 WHEN 1 THEN 2 ELSE 0 END AS BIGINT) AS bom_len,
-        |  array_to_string([array_to_string(words[i:i+23], ' ')
-        |                   for i in range(1, len(words)+1, 24)], chr(10)) AS extracted_text
-        |FROM (SELECT doc_id, string_split(text, ' ') AS words FROM documents)
-        |ORDER BY doc_id""".stripMargin,
-    // dup_spans: full recompute by gram TEXT (the engine's 64-bit hash keys
-    // carry dedup_exact's documented collision tradeoff); coverage via the
-    // same sorted-gap window identity; planted 26-word licence disclaimer on
-    // doc_id%3==0 plus whatever naturally-duplicated texts the corpus holds
-    "dup_spans" ->
-      ("""WITH d AS (SELECT doc_id,
-        |             CASE WHEN doc_id%3=0 THEN text || ' """.stripMargin +
-        graft.textops.DupSpans.Disclaimer +
-        """' ELSE text END AS t FROM documents),
-        |w AS (SELECT doc_id, string_split(t,' ') AS ws FROM d),
-        |b AS (SELECT doc_id, len(ws) AS total_words, ws FROM w),
-        |g0 AS (SELECT doc_id, total_words,
-        |         CASE WHEN total_words >= 20
-        |              THEN [{'pos': i - 1, 'gram': array_to_string(ws[i:i+19],' ')} for i in range(1, total_words - 18)]
-        |              ELSE [] END AS gs FROM b),
-        |g AS (SELECT doc_id, unnest(gs, recursive := true) FROM g0),
-        |df AS (SELECT gram FROM (SELECT gram, doc_id FROM g GROUP BY gram, doc_id) GROUP BY gram HAVING count(*) >= 2),
-        |ds AS (SELECT g.doc_id, g.pos FROM g JOIN df USING (gram)),
-        |cov0 AS (SELECT doc_id, pos, coalesce(lead(pos) OVER (PARTITION BY doc_id ORDER BY pos) - pos, 20) AS gap FROM ds),
-        |cov AS (SELECT doc_id, count(*) AS n_dup_grams, sum(least(gap, 20)) AS covered FROM cov0 GROUP BY doc_id)
-        |SELECT b.doc_id, CAST(b.total_words AS BIGINT) AS total_words,
-        |       CAST(greatest(b.total_words - 19, 0) AS BIGINT) AS n_grams,
-        |       CAST(coalesce(cov.n_dup_grams, 0) AS BIGINT) AS n_dup_grams,
-        |       CAST(coalesce(cov.covered, 0) AS BIGINT) AS covered_words,
-        |       CAST(CASE WHEN b.total_words > 0 THEN (coalesce(cov.covered,0) * 10000) // b.total_words ELSE 0 END AS BIGINT) AS dup_frac_bp
-        |FROM b LEFT JOIN cov USING (doc_id) ORDER BY b.doc_id""".stripMargin),
-    // dup_span_removal: full recompute by gram TEXT; interval merge via the
-    // same sorted-island window identity the engine uses, then the clean
-    // text is rebuilt from the gap slices (string_agg ORDER BY gap start).
-    // Validated against an independent pure-Python excision recompute
-    // (tools pattern; 198 docs touched / 6937 words removed at sf0.01).
-    "dup_span_removal" ->
-      ("""WITH d AS (SELECT doc_id,
-        |             CASE WHEN doc_id%3=0 THEN text || ' """.stripMargin +
-        graft.textops.DupSpans.Disclaimer +
-        """' ELSE text END AS t FROM documents),
-        |w AS (SELECT doc_id, string_split(t,' ') AS ws FROM d),
-        |b AS (SELECT doc_id, len(ws) AS total_words, ws FROM w),
-        |g0 AS (SELECT doc_id, total_words,
-        |         CASE WHEN total_words >= 20
-        |              THEN [{'pos': i - 1, 'gram': array_to_string(ws[i:i+19],' ')} for i in range(1, total_words - 18)]
-        |              ELSE [] END AS gs FROM b),
-        |g AS (SELECT doc_id, unnest(gs, recursive := true) FROM g0),
-        |df AS (SELECT gram FROM (SELECT gram, doc_id FROM g GROUP BY gram, doc_id) GROUP BY gram HAVING count(*) >= 2),
-        |ds AS (SELECT g.doc_id, g.pos FROM g JOIN df USING (gram)),
-        |m0 AS (SELECT doc_id, pos,
-        |         CASE WHEN pos > coalesce(max(pos+20) OVER (PARTITION BY doc_id ORDER BY pos
-        |              ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), -1) THEN 1 ELSE 0 END AS brk FROM ds),
-        |m1 AS (SELECT doc_id, pos, sum(brk) OVER (PARTITION BY doc_id ORDER BY pos) AS isl FROM m0),
-        |iv AS (SELECT doc_id, isl, min(pos) AS s, max(pos)+20 AS e FROM m1 GROUP BY doc_id, isl),
-        |rem AS (SELECT doc_id, sum(e-s) AS removed FROM iv GROUP BY doc_id),
-        |lastg AS (SELECT iv.doc_id, max(iv.e) AS gs, any_value(b.total_words) AS ge
-        |          FROM iv JOIN b ON iv.doc_id=b.doc_id GROUP BY iv.doc_id),
-        |gaps AS (SELECT doc_id, coalesce(lag(e) OVER (PARTITION BY doc_id ORDER BY s), 0) AS gs, s AS ge FROM iv
-        |         UNION ALL SELECT doc_id, gs, ge FROM lastg),
-        |pieces AS (SELECT gaps.doc_id, gaps.gs, array_to_string(b.ws[gaps.gs+1:gaps.ge], ' ') AS piece
-        |           FROM gaps JOIN b ON gaps.doc_id=b.doc_id WHERE gaps.ge > gaps.gs),
-        |clean AS (SELECT doc_id, string_agg(piece, ' ' ORDER BY gs) AS clean_text FROM pieces GROUP BY doc_id)
-        |SELECT b.doc_id,
-        |       CAST(b.total_words AS BIGINT) AS total_words,
-        |       CAST(coalesce(rem.removed,0) AS BIGINT) AS removed_words,
-        |       CAST(b.total_words - coalesce(rem.removed,0) AS BIGINT) AS kept_words,
-        |       CASE WHEN rem.removed IS NULL THEN array_to_string(b.ws, ' ')
-        |            ELSE coalesce(clean.clean_text, '') END AS clean_text
-        |FROM b LEFT JOIN rem USING (doc_id) LEFT JOIN clean USING (doc_id) ORDER BY b.doc_id""".stripMargin),
-    // html_metadata: every field is generator arithmetic (title/og from
-    // doc_id, description = first 6 words, canonical from doc_id%7, lang
-    // passed through) — the extraction must recover them from the parsed DOM
-    "html_metadata" ->
-      """SELECT doc_id,
-        |  'document '||doc_id AS title,
-        |  'doc '||doc_id||': '||array_to_string((string_split(text,' '))[1:6],' ') AS description,
-        |  'https://site'||(doc_id%7)||'.example.com/articles/doc'||doc_id||'.html' AS canonical,
-        |  'document '||doc_id||' | site'||(doc_id%7) AS og_title,
-        |  lang AS html_lang
-        |FROM documents ORDER BY doc_id""".stripMargin,
-    // robots_gate: the fixture's rule set collapses to a CASE truth table
-    // over (doc_id%5 path class, doc_id%7 host) — validated against BOTH an
-    // independent Python longest-match recompute and stdlib robotparser:
-    // graftbot's group: /private/ disallowed, /private/pub/ re-allowed on
-    // even hosts (longest match); * group: /tmp/ disallowed, /nav/ disallowed
-    // on hosts %3==0, crawl-delay 1 + host%4
-    "robots_gate" ->
-      """SELECT doc_id,
-        |  'site'||(doc_id%7)||'.example.com' AS host,
-        |  CASE doc_id%5 WHEN 0 THEN '/private/doc'||doc_id WHEN 1 THEN '/private/pub/doc'||doc_id
-        |       WHEN 2 THEN '/tmp/doc'||doc_id WHEN 3 THEN '/nav/doc'||doc_id
-        |       ELSE '/articles/doc'||doc_id||'.html' END AS path,
-        |  CASE WHEN doc_id%5=0 THEN 0::BIGINT
-        |       WHEN doc_id%5=1 THEN CASE WHEN (doc_id%7)%2=0 THEN 1::BIGINT ELSE 0::BIGINT END
-        |       ELSE 1::BIGINT END AS allowed_graftbot,
-        |  CASE WHEN doc_id%5=2 THEN 0::BIGINT
-        |       WHEN doc_id%5=3 AND (doc_id%7)%3=0 THEN 0::BIGINT
-        |       ELSE 1::BIGINT END AS allowed_newsbot,
-        |  CAST(1+(doc_id%7)%4 AS BIGINT) AS crawl_delay
-        |FROM documents ORDER BY doc_id""".stripMargin,
-    // fetch_schedule: row_number window over the *-group-admitted frontier,
-    // per-host, ordered by the (unique) path; start_sec spaces fetches by
-    // the host's crawl-delay
-    "fetch_schedule" ->
-      """WITH f AS (
-        |  SELECT doc_id,
-        |    'site'||(doc_id%7)||'.example.com' AS host,
-        |    CASE doc_id%5 WHEN 0 THEN '/private/doc'||doc_id WHEN 1 THEN '/private/pub/doc'||doc_id
-        |         WHEN 2 THEN '/tmp/doc'||doc_id WHEN 3 THEN '/nav/doc'||doc_id
-        |         ELSE '/articles/doc'||doc_id||'.html' END AS path,
-        |    CASE WHEN doc_id%5=2 THEN 0 WHEN doc_id%5=3 AND (doc_id%7)%3=0 THEN 0 ELSE 1 END AS ok,
-        |    CAST(1+(doc_id%7)%4 AS BIGINT) AS delay
-        |  FROM documents)
-        |SELECT doc_id, host, path,
-        |  CAST(row_number() OVER (PARTITION BY host ORDER BY path) AS BIGINT) AS fetch_seq,
-        |  CAST((row_number() OVER (PARTITION BY host ORDER BY path) - 1) * delay AS BIGINT) AS start_sec
-        |FROM f WHERE ok=1 ORDER BY doc_id""".stripMargin,
-    // text_normalize: the same messy-fixture arithmetic (decomposed accents,
-    // NBSP, CR/double-space, ZWSP..BOM wrap) re-planted in SQL, then DuckDB's
-    // nfc_normalize + the identical cleanup chain
-    "text_normalize" ->
-      """WITH m AS (SELECT doc_id,
-        |  CASE doc_id%4
-        |    WHEN 0 THEN replace(text, 'e', 'e' || chr(769))
-        |    WHEN 1 THEN replace(text, ' ', chr(160))
-        |    WHEN 2 THEN chr(13) || replace(text, ' ', '  ') || '  '
-        |    ELSE chr(8203) || text || chr(65279)
-        |  END AS raw FROM documents)
-        |SELECT doc_id,
-        |  trim(regexp_replace(
-        |    replace(replace(replace(replace(nfc_normalize(raw), chr(160), ' '), chr(8203), ''), chr(65279), ''), chr(13), ''),
-        |    ' +', ' ', 'g')) AS text_norm,
-        |  CAST(length(trim(regexp_replace(
-        |    replace(replace(replace(replace(nfc_normalize(raw), chr(160), ' '), chr(8203), ''), chr(65279), ''), chr(13), ''),
-        |    ' +', ' ', 'g'))) AS BIGINT) AS n_chars
-        |FROM m ORDER BY doc_id""".stripMargin,
-    "lang_id" ->
-      """WITH cj AS (SELECT doc_id,
-        |              CAST(length(text) AS BIGINT) AS cps,
-        |              CAST(len(list_filter(string_split(text,''), c -> unicode(c) BETWEEN 19968 AND 40959)) AS BIGINT) AS cjk
-        |            FROM documents),
-        |t AS (SELECT doc_id, lower(text) AS lt, string_split(lower(text),' ') AS toks FROM documents),
-        |s AS (SELECT doc_id, toks, [substring(lt, i, 3) for i in range(1, length(lt)-1)] AS tris FROM t),
-        |sc AS (SELECT doc_id, CAST(len(toks) AS BIGINT) AS n_tokens,
-        |  CAST(3*len(list_filter(toks, w -> w IN ('the','and','of','to','a','in','is','it','that','for'))) + len(list_filter(tris, g -> g IN ('the','ing','ion','and','ent'))) AS BIGINT) AS n_en,
-        |  CAST(3*len(list_filter(toks, w -> w IN ('der','die','und','das','ist','nicht','ein','mit','zu','den'))) + len(list_filter(tris, g -> g IN ('sch','ich','ein','cht','und'))) AS BIGINT) AS n_de,
-        |  CAST(3*len(list_filter(toks, w -> w IN ('le','la','et','les','des','un','une','est','pour','que'))) + len(list_filter(tris, g -> g IN ('ent','les','ion','que','eur'))) AS BIGINT) AS n_fr,
-        |  CAST(3*len(list_filter(toks, w -> w IN ('el','los','las','y','es','una','por','para','con','del'))) + len(list_filter(tris, g -> g IN ('ent','los','cio','ado','que'))) AS BIGINT) AS n_es
-        |  FROM s)
-        |SELECT sc.doc_id,
-        |  CASE WHEN cj.cps > 0 AND 5*cj.cjk > cj.cps THEN 'zh'
-        |       WHEN greatest(n_de, n_en, n_es, n_fr) = 0 THEN 'und'
-        |       WHEN n_de >= n_en AND n_de >= n_es AND n_de >= n_fr THEN 'de'
-        |       WHEN n_en >= n_es AND n_en >= n_fr THEN 'en'
-        |       WHEN n_es >= n_fr THEN 'es' ELSE 'fr' END AS lang_pred,
-        |  CAST(CASE WHEN cj.cps > 0 AND 5*cj.cjk > cj.cps THEN cj.cjk
-        |            ELSE greatest(n_de, n_en, n_es, n_fr) END AS BIGINT) AS score_num,
-        |  CAST(CASE WHEN cj.cps > 0 AND 5*cj.cjk > cj.cps THEN cj.cps
-        |            ELSE n_tokens END AS BIGINT) AS n_tokens
-        |FROM sc JOIN cj ON sc.doc_id = cj.doc_id""".stripMargin,
-    "ann_bruteforce" ->
-      """WITH q AS (SELECT vec_id AS query_id, CAST(embedding AS DOUBLE[]) AS qv
-        |           FROM embeddings ORDER BY vec_id LIMIT 5)
-        |SELECT query_id, neighbor_id, CAST(rank AS INT) AS rank, sim FROM (
-        |  SELECT q.query_id, e.vec_id AS neighbor_id,
-        |         round(list_cosine_similarity(q.qv, CAST(e.embedding AS DOUBLE[])), 6) AS sim,
-        |         row_number() OVER (PARTITION BY q.query_id
-        |                            ORDER BY list_cosine_similarity(q.qv, CAST(e.embedding AS DOUBLE[])) DESC,
-        |                                     e.vec_id) AS rank
-        |  FROM q, embeddings e WHERE e.vec_id != q.query_id)
-        |WHERE rank <= 5""".stripMargin,
-    // contrastive_pairs: ranking by exact double cosine (the ann_bruteforce
-    // contract), dup exclusion by integer rational cosine over trunc(x*4096)
-    // quantized vectors in HUGEINT — Python-validated 35/35 rows with 5 dup
-    // exclusions at sf0.01 and sf0.001 (tools/contrastive_check.py)
-    "contrastive_pairs" ->
-      """WITH all_v AS (
-        |  SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v,
-        |         [trunc(x*4096)::BIGINT for x in CAST(embedding AS DOUBLE[])] AS q
-        |  FROM embeddings
-        |  UNION ALL
-        |  SELECT vec_id + 1000000, CAST(embedding AS DOUBLE[]) AS v,
-        |         [trunc(x*4096)::BIGINT for x in CAST(embedding AS DOUBLE[])] AS q
-        |  FROM embeddings),
-        |qs AS (SELECT vec_id AS query_id, v AS qv, q AS qq FROM all_v ORDER BY vec_id LIMIT 5),
-        |p AS (
-        |  SELECT qs.query_id, e.vec_id AS neighbor_id,
-        |         list_cosine_similarity(qs.qv, e.v) AS rawsim,
-        |         list_sum([qs.qq[d] * e.q[d] for d in range(1, len(e.q)+1)])::HUGEINT AS dot,
-        |         list_sum([qs.qq[d] * qs.qq[d] for d in range(1, len(qs.qq)+1)])::HUGEINT AS na,
-        |         list_sum([e.q[d] * e.q[d] for d in range(1, len(e.q)+1)])::HUGEINT AS nb
-        |  FROM qs, all_v e WHERE e.vec_id <> qs.query_id),
-        |d AS (SELECT *, CASE WHEN dot > 0 AND dot*dot*1000000 >= 999*999*na*nb
-        |                     THEN 1 ELSE 0 END AS isdup FROM p),
-        |r AS (SELECT *, row_number() OVER (PARTITION BY query_id ORDER BY rawsim DESC, neighbor_id) AS rn
-        |      FROM d WHERE isdup = 0)
-        |SELECT query_id, neighbor_id, CAST(rn AS BIGINT) AS rank, round(rawsim, 6) AS sim,
-        |       CASE WHEN rn = 1 THEN 'positive' ELSE 'hard_negative' END AS role
-        |FROM r WHERE rn <= 6
-        |UNION ALL
-        |SELECT query_id, neighbor_id, 0, round(rawsim, 6), 'dup' FROM d WHERE isdup = 1
-        |ORDER BY query_id, rank, neighbor_id""".stripMargin,
-    // Bit-exact recompute of the APPROXIMATE LSH ANN: ±1 hyperplane signs
-    // (splitmix64 table inlined as a literal, same constants as Ann.signs),
-    // integer sign-dot bucketing over trunc(x*4096) fixed-point vectors,
-    // 1-bit multiprobe, exact cosine rerank, plus the recall join against the
-    // brute-force top-k as the `hit` flag. Validated against an independent
-    // Python recompute before wiring (tools/ann_oracle_check.py).
-    "ann_lsh" ->
-      ("""WITH sg AS (SELECT """ + graft.textops.Ann.signsSqlLiteral() + """::BIGINT[] AS s),
-        |e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v,
-        |             [trunc(x*4096)::BIGINT for x in CAST(embedding AS DOUBLE[])] AS q
-        |      FROM embeddings),
-        |bits AS (
-        |  SELECT vec_id, t, b,
-        |         CASE WHEN list_sum([sg.s[(t*6+b)*64 + d] * q[d] for d in range(1,65)]) >= 0
-        |              THEN (1::BIGINT << b) ELSE 0::BIGINT END AS bit
-        |  FROM e, sg, range(4) rt(t), range(6) rb(b)),
-        |eb AS (SELECT vec_id, (t::BIGINT << 32) | sum(bit)::BIGINT AS bucket FROM bits GROUP BY vec_id, t),
-        |q5 AS (SELECT vec_id AS query_id, v AS qv FROM e ORDER BY vec_id LIMIT 5),
-        |qbase AS (SELECT query_id, bucket FROM eb JOIN q5 ON eb.vec_id = q5.query_id),
-        |qprobe AS (SELECT DISTINCT query_id,
-        |                  unnest(list_prepend(bucket, [xor(bucket, (1::BIGINT << b)) for b in range(0,6)])) AS bucket
-        |           FROM qbase),
-        |cand AS (SELECT DISTINCT query_id, eb.vec_id
-        |         FROM qprobe JOIN eb USING (bucket) WHERE eb.vec_id != query_id),
-        |scored AS (SELECT c.query_id, c.vec_id AS neighbor_id,
-        |                  list_cosine_similarity(q5.qv, e.v) AS rawsim
-        |           FROM cand c JOIN q5 USING (query_id) JOIN e ON e.vec_id = c.vec_id),
-        |ranked AS (SELECT query_id, neighbor_id, round(rawsim, 6) AS sim,
-        |                  row_number() OVER (PARTITION BY query_id ORDER BY rawsim DESC, neighbor_id) AS rank
-        |           FROM scored),
-        |bf AS (SELECT query_id, neighbor_id FROM (
-        |         SELECT q5.query_id, e.vec_id AS neighbor_id,
-        |                row_number() OVER (PARTITION BY q5.query_id
-        |                                   ORDER BY list_cosine_similarity(q5.qv, e.v) DESC, e.vec_id) AS r
-        |         FROM q5, e WHERE e.vec_id != q5.query_id)
-        |       WHERE r <= 5)
-        |SELECT r.query_id, r.neighbor_id, CAST(r.rank AS INT) AS rank, r.sim,
-        |       CASE WHEN bf.neighbor_id IS NOT NULL THEN 1::BIGINT ELSE 0::BIGINT END AS hit
-        |FROM ranked r LEFT JOIN bf USING (query_id, neighbor_id)
-        |WHERE r.rank <= 5""").stripMargin,
-    // quality_classifier: the oracle retrains the whole NB model (FNV word
-    // buckets via the cms_freq idiom, decile length bins, add-1-smoothed
-    // fixed-point posteriors) and rescores every doc — training and
-    // inference both recomputed, validated against a Python recompute.
-    "quality_classifier" ->
-      ("""WITH d AS (SELECT doc_id, string_split(text, ' ') AS ws,
-        |                  CAST(length(text) AS BIGINT) AS c
-        |           FROM documents),
-        |l AS (SELECT doc_id, CAST(CASE WHEN len(ws) BETWEEN 50 AND 100000
-        |                           AND c - (len(ws)-1) BETWEEN 3*len(ws) AND 10*len(ws)
-        |                      THEN 1 ELSE 0 END AS BIGINT) AS label FROM d),
-        |terms AS (SELECT doc_id, unnest(ws) AS term FROM d),
-        |vb AS (SELECT term, CAST(list_reduce(
-        |           list_prepend(14695981039346656037::HUGEINT,
-        |                        [unicode(ch)::HUGEINT for ch in string_split(term, '')]),
-        |           (h, x) -> ((h - h % 256 + xor((h % 256)::BIGINT, x::BIGINT)::HUGEINT)
-        |                      * 1099511628211::HUGEINT) % (1::HUGEINT << 64)) % 256 AS BIGINT) AS bucket
-        |       FROM (SELECT DISTINCT term FROM terms)),
-        |f AS (SELECT doc_id, bucket, CAST(count(*) AS BIGINT) AS cnt
-        |      FROM terms JOIN vb USING (term) GROUP BY doc_id, bucket
-        |      UNION ALL
-        |      SELECT doc_id, 256 + least(len(ws)//10, 1023), CAST(len(ws) AS BIGINT) FROM d),
-        |model AS (SELECT bucket,
-        |                 ((sum(CASE WHEN label = 1 THEN cnt ELSE 0 END) + 1) * 4096)
-        |                 // (sum(cnt) + 2) AS p1
-        |          FROM f JOIN l USING (doc_id) WHERE doc_id % 10 < 3 GROUP BY bucket),
-        |sc AS (SELECT f.doc_id,
-        |              sum(f.cnt * COALESCE(model.p1, 2048)) // sum(f.cnt) AS score
-        |       FROM f LEFT JOIN model USING (bucket) GROUP BY f.doc_id)
-        |SELECT sc.doc_id, CAST(score AS BIGINT) AS score,
-        |       CAST(CASE WHEN 2*score >= 4096 THEN 1 ELSE 0 END AS BIGINT) AS pred,
-        |       l.label
-        |FROM sc JOIN l USING (doc_id)""").stripMargin,
-    // SemDeDup: the oracle rebuilds the planted near-twin corpus (one float
-    // zeroed is exact), the stride-seeded quantized centroids, the integer
-    // assignment/ordering, and every rational-threshold drop decision
-    // bit-for-bit (validated against an independent Python recompute:
-    // 452/1000 dropped at sf0.01, zero mismatches).
-    "semantic_dedup" ->
-      """WITH base AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings),
-        |pl AS (SELECT vec_id, v FROM base
-        |       UNION ALL
-        |       SELECT vec_id + 1000000,
-        |              [CASE WHEN d = vec_id % 64 + 1 THEN 0.0 ELSE v[d] END for d in range(1,65)]
-        |       FROM base),
-        |e AS (SELECT vec_id, [trunc(x*4096)::BIGINT for x in v] AS q FROM pl),
-        |head AS (SELECT q, row_number() OVER (ORDER BY vec_id) - 1 AS pos FROM e QUALIFY pos < 10000),
-        |n AS (SELECT count(*) AS ns FROM head),
-        |cent AS (SELECT CAST(pos // (ns // 16) AS BIGINT) AS list_id, q AS cq
-        |         FROM head, n WHERE pos % (ns // 16) = 0 AND pos // (ns // 16) < 16),
-        |dists AS (SELECT e.vec_id, c.list_id,
-        |                 list_sum([(e.q[d]-c.cq[d])*(e.q[d]-c.cq[d]) for d in range(1,65)]) AS dist
-        |          FROM e, cent c),
-        |asn AS (SELECT vec_id, list_id AS cluster, dist AS cdist FROM (
-        |          SELECT vec_id, list_id, dist,
-        |                 row_number() OVER (PARTITION BY vec_id ORDER BY dist, list_id) AS r
-        |          FROM dists) WHERE r = 1),
-        |eq AS (SELECT e.vec_id, e.q, list_sum([e.q[d]*e.q[d] for d in range(1,65)]) AS nq,
-        |              a.cluster, a.cdist
-        |       FROM e JOIN asn a USING (vec_id)),
-        |pair AS (SELECT a.vec_id,
-        |                list_sum([a.q[d]*b.q[d] for d in range(1,65)]) AS dot,
-        |                a.nq AS na, b.nq AS nb
-        |         FROM eq a JOIN eq b ON a.cluster = b.cluster
-        |          AND (b.cdist > a.cdist OR (b.cdist = a.cdist AND b.vec_id < a.vec_id))),
-        |dropped AS (SELECT DISTINCT vec_id FROM pair
-        |            WHERE dot > 0 AND CAST(dot AS HUGEINT)*dot*25 >= 16::HUGEINT*na*nb)
-        |SELECT eq.vec_id, CAST(eq.cluster AS BIGINT) AS cluster, CAST(eq.cdist AS BIGINT) AS cdist,
-        |       CAST(CASE WHEN d.vec_id IS NULL THEN 1 ELSE 0 END AS BIGINT) AS kept
-        |FROM eq LEFT JOIN dropped d ON eq.vec_id = d.vec_id""".stripMargin,
-    // Bit-exact recompute of the APPROXIMATE IVF ANN: stride-seeded quantized
-    // centroids, integer squared-L2 list assignment and nprobe=4 probing,
-    // exact cosine rerank + brute-force recall join.
-    "ann_ivf" ->
-      """WITH e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v,
-        |                  [trunc(x*4096)::BIGINT for x in CAST(embedding AS DOUBLE[])] AS q
-        |           FROM embeddings),
-        |head AS (SELECT q, row_number() OVER (ORDER BY vec_id) - 1 AS pos FROM e QUALIFY pos < 10000),
-        |n AS (SELECT count(*) AS ns FROM head),
-        |cent AS (SELECT CAST(pos // (ns // 16) AS BIGINT) AS list_id, q AS cq
-        |         FROM head, n WHERE pos % (ns // 16) = 0 AND pos // (ns // 16) < 16),
-        |dists AS (SELECT e.vec_id, c.list_id,
-        |                 list_sum([(e.q[d]-c.cq[d])*(e.q[d]-c.cq[d]) for d in range(1,65)]) AS dist
-        |          FROM e, cent c),
-        |asn AS (SELECT vec_id, list_id FROM (
-        |          SELECT vec_id, list_id,
-        |                 row_number() OVER (PARTITION BY vec_id ORDER BY dist, list_id) AS r
-        |          FROM dists) WHERE r = 1),
-        |q5 AS (SELECT vec_id AS query_id, v AS qv FROM e ORDER BY vec_id LIMIT 5),
-        |probe AS (SELECT query_id, list_id FROM (
-        |            SELECT q5.query_id, d.list_id,
-        |                   row_number() OVER (PARTITION BY q5.query_id ORDER BY d.dist, d.list_id) AS r
-        |            FROM q5 JOIN dists d ON d.vec_id = q5.query_id) WHERE r <= 4),
-        |cand AS (SELECT DISTINCT p.query_id, a.vec_id
-        |         FROM probe p JOIN asn a USING (list_id) WHERE a.vec_id != p.query_id),
-        |scored AS (SELECT c.query_id, c.vec_id AS neighbor_id,
-        |                  list_cosine_similarity(q5.qv, e.v) AS rawsim
-        |           FROM cand c JOIN q5 USING (query_id) JOIN e ON e.vec_id = c.vec_id),
-        |ranked AS (SELECT query_id, neighbor_id, round(rawsim, 6) AS sim,
-        |                  row_number() OVER (PARTITION BY query_id ORDER BY rawsim DESC, neighbor_id) AS rank
-        |           FROM scored),
-        |bf AS (SELECT query_id, neighbor_id FROM (
-        |         SELECT q5.query_id, e.vec_id AS neighbor_id,
-        |                row_number() OVER (PARTITION BY q5.query_id
-        |                                   ORDER BY list_cosine_similarity(q5.qv, e.v) DESC, e.vec_id) AS r
-        |         FROM q5, e WHERE e.vec_id != q5.query_id)
-        |       WHERE r <= 5)
-        |SELECT r.query_id, r.neighbor_id, CAST(r.rank AS INT) AS rank, r.sim,
-        |       CASE WHEN bf.neighbor_id IS NOT NULL THEN 1::BIGINT ELSE 0::BIGINT END AS hit
-        |FROM ranked r LEFT JOIN bf USING (query_id, neighbor_id)
-        |WHERE r.rank <= 5""".stripMargin,
-    // cluster_balanced_sample: ann_ivf's assignment CTEs composed with
-    // stratified_sample's Hamilton CTEs, FNV priority over 'cbal:'||vec_id.
-    // Python-validated 100/100 at sf0.01 (tools/cbal_oracle_check.py:
-    // quotas 4-9 across the 16 cells).
-    "cluster_balanced_sample" ->
-      """WITH e AS (SELECT vec_id, [trunc(x*4096)::BIGINT for x in CAST(embedding AS DOUBLE[])] AS q FROM embeddings),
-        |head AS (SELECT q, row_number() OVER (ORDER BY vec_id) - 1 AS pos FROM e QUALIFY pos < 10000),
-        |n AS (SELECT count(*) AS ns FROM head),
-        |cent AS (SELECT CAST(pos // (ns // 16) AS BIGINT) AS list_id, q AS cq
-        |         FROM head, n WHERE pos % (ns // 16) = 0 AND pos // (ns // 16) < 16),
-        |dists AS (SELECT e.vec_id, c.list_id,
-        |                 list_sum([(e.q[d]-c.cq[d])*(e.q[d]-c.cq[d]) for d in range(1,65)]) AS dist
-        |          FROM e, cent c),
-        |asn AS (SELECT vec_id, list_id FROM (
-        |          SELECT vec_id, list_id, row_number() OVER (PARTITION BY vec_id ORDER BY dist, list_id) AS r
-        |          FROM dists) WHERE r = 1),
-        |k AS (SELECT vec_id, list_reduce(
-        |           list_prepend(14695981039346656037::HUGEINT,
-        |                        [unicode(c)::HUGEINT for c in string_split('cbal:' || vec_id, '')]),
-        |           (h, b) -> ((h - h % 128 + xor((h % 128)::BIGINT, b::BIGINT)::HUGEINT)
-        |                      * 1099511628211::HUGEINT) % (1::HUGEINT << 64)) AS h
-        |      FROM embeddings),
-        |ks AS (SELECT a.vec_id, a.list_id, (k.h % (1::HUGEINT << 32)) AS priority
-        |       FROM asn a JOIN k USING (vec_id)),
-        |c AS (SELECT list_id, count(*)::BIGINT AS n_cell FROM ks GROUP BY list_id),
-        |q AS (SELECT list_id, n_cell,
-        |             (100*n_cell)//(sum(n_cell) OVER ()) AS base,
-        |             (100*n_cell)%(sum(n_cell) OVER ()) AS rem
-        |      FROM c),
-        |q2 AS (SELECT list_id, n_cell, base, rem,
-        |              100 - sum(base) OVER () AS leftover,
-        |              row_number() OVER (ORDER BY rem DESC, list_id) AS seat_rank
-        |       FROM q),
-        |q3 AS (SELECT list_id, n_cell,
-        |              least(base + CASE WHEN seat_rank <= leftover THEN 1 ELSE 0 END, n_cell) AS quota
-        |       FROM q2),
-        |r AS (SELECT vec_id, list_id, row_number() OVER (PARTITION BY list_id ORDER BY priority, vec_id) AS rnk
-        |      FROM ks)
-        |SELECT r.vec_id, r.list_id, CAST(r.rnk AS BIGINT) AS rnk,
-        |       CAST(q3.quota AS BIGINT) AS quota, q3.n_cell
-        |FROM r JOIN q3 USING (list_id) WHERE r.rnk <= q3.quota ORDER BY vec_id""".stripMargin,
-    // pq_codes: the oracle recomputes the 16×64 stride-seeded codebook and
-    // the integer-L2 assignment bit-for-bit (the ann_oracle_check pattern).
-    // Python-validated 0/8000 before wiring.
-    "pq_codes" ->
-      """WITH e AS (SELECT vec_id, [trunc(x*4096)::BIGINT for x in CAST(embedding AS DOUBLE[])] AS q FROM embeddings),
-        |head AS (SELECT q, row_number() OVER (ORDER BY vec_id) - 1 AS pos FROM e QUALIFY pos < 10000),
-        |n AS (SELECT count(*) AS ns FROM head),
-        |cent AS (SELECT CAST(pos // (ns // 64) AS BIGINT) AS code, q AS cq
-        |         FROM head, n WHERE pos % (ns // 64) = 0 AND pos // (ns // 64) < 64),
-        |subs AS (SELECT unnest(range(16)) AS sub),
-        |dists AS (SELECT e.vec_id, s.sub, c.code,
-        |                 list_sum([(e.q[s.sub*4+d]-c.cq[s.sub*4+d])*(e.q[s.sub*4+d]-c.cq[s.sub*4+d]) for d in range(1,5)]) AS dist
-        |          FROM e, subs s, cent c)
-        |SELECT vec_id, CAST(sub AS BIGINT) AS sub, code, CAST(dist AS BIGINT) AS sqdist FROM (
-        |  SELECT vec_id, sub, code, dist,
-        |         row_number() OVER (PARTITION BY vec_id, sub ORDER BY dist, code) AS r
-        |  FROM dists) WHERE r = 1""".stripMargin,
-    // ann_pq: ADC = per-(query,sub,code) LUT join against the code table,
-    // exact brute-force integer L2 as the hit ground truth. Integer
-    // fixed-point end to end. Python-validated 0/25 (recall 9/25 on these
-    // structureless uniform embeddings — the audit column, not a target).
-    "ann_pq" ->
-      """WITH e AS (SELECT vec_id, [trunc(x*4096)::BIGINT for x in CAST(embedding AS DOUBLE[])] AS q FROM embeddings),
-        |head AS (SELECT q, row_number() OVER (ORDER BY vec_id) - 1 AS pos FROM e QUALIFY pos < 10000),
-        |n AS (SELECT count(*) AS ns FROM head),
-        |cent AS (SELECT CAST(pos // (ns // 64) AS BIGINT) AS code, q AS cq
-        |         FROM head, n WHERE pos % (ns // 64) = 0 AND pos // (ns // 64) < 64),
-        |subs AS (SELECT unnest(range(16)) AS sub),
-        |dists AS (SELECT e.vec_id, s.sub, c.code,
-        |                 list_sum([(e.q[s.sub*4+d]-c.cq[s.sub*4+d])*(e.q[s.sub*4+d]-c.cq[s.sub*4+d]) for d in range(1,5)]) AS dist
-        |          FROM e, subs s, cent c),
-        |asn AS (SELECT vec_id, sub, code FROM (
-        |          SELECT vec_id, sub, code,
-        |                 row_number() OVER (PARTITION BY vec_id, sub ORDER BY dist, code) AS r
-        |          FROM dists) WHERE r = 1),
-        |q5 AS (SELECT vec_id AS query_id, q AS qq FROM e ORDER BY vec_id LIMIT 5),
-        |qd AS (SELECT q5.query_id, s.sub, c.code,
-        |              list_sum([(q5.qq[s.sub*4+d]-c.cq[s.sub*4+d])*(q5.qq[s.sub*4+d]-c.cq[s.sub*4+d]) for d in range(1,5)]) AS d
-        |       FROM q5, subs s, cent c),
-        |adc AS (SELECT qd.query_id, a.vec_id, sum(qd.d) AS adist
-        |        FROM asn a JOIN qd ON qd.sub = a.sub AND qd.code = a.code
-        |        WHERE a.vec_id != qd.query_id
-        |        GROUP BY qd.query_id, a.vec_id),
-        |ranked AS (SELECT query_id, vec_id AS neighbor_id, CAST(adist AS BIGINT) AS adist,
-        |                  row_number() OVER (PARTITION BY query_id ORDER BY adist, vec_id) AS rank
-        |           FROM adc),
-        |bf AS (SELECT query_id, neighbor_id FROM (
-        |         SELECT q5.query_id, e.vec_id AS neighbor_id,
-        |                row_number() OVER (PARTITION BY q5.query_id
-        |                  ORDER BY list_sum([(q5.qq[d]-e.q[d])*(q5.qq[d]-e.q[d]) for d in range(1,65)]), e.vec_id) AS r
-        |         FROM q5, e WHERE e.vec_id != q5.query_id)
-        |       WHERE r <= 5)
-        |SELECT r.query_id, r.neighbor_id, CAST(r.rank AS BIGINT) AS rank, r.adist,
-        |       CASE WHEN bf.neighbor_id IS NOT NULL THEN 1::BIGINT ELSE 0::BIGINT END AS hit
-        |FROM ranked r LEFT JOIN bf USING (query_id, neighbor_id)
-        |WHERE r.rank <= 5""".stripMargin,
-    // ann_ivfpq: the ann_ivf coarse CTEs (16 stride-seeded lists, 4 probes)
-    // composed with the ann_pq ADC CTEs, candidates restricted to probed
-    // lists; hit = the same exact integer-L2 brute force. Python-validated
-    // 25/25 against a full engine mirror at sf0.01.
-    "ann_ivfpq" ->
-      """WITH e AS (SELECT vec_id, [trunc(x*4096)::BIGINT for x in CAST(embedding AS DOUBLE[])] AS q FROM embeddings),
-        |head AS (SELECT q, row_number() OVER (ORDER BY vec_id) - 1 AS pos FROM e QUALIFY pos < 10000),
-        |n AS (SELECT count(*) AS ns FROM head),
-        |cl AS (SELECT CAST(pos // (ns // 16) AS BIGINT) AS list_id, q AS cq
-        |       FROM head, n WHERE pos % (ns // 16) = 0 AND pos // (ns // 16) < 16),
-        |cdists AS (SELECT e.vec_id, c.list_id,
-        |                  list_sum([(e.q[d]-c.cq[d])*(e.q[d]-c.cq[d]) for d in range(1,65)]) AS dist
-        |           FROM e, cl c),
-        |lasn AS (SELECT vec_id, list_id FROM (
-        |           SELECT vec_id, list_id, row_number() OVER (PARTITION BY vec_id ORDER BY dist, list_id) AS r
-        |           FROM cdists) WHERE r = 1),
-        |cent AS (SELECT CAST(pos // (ns // 64) AS BIGINT) AS code, q AS cq
-        |         FROM head, n WHERE pos % (ns // 64) = 0 AND pos // (ns // 64) < 64),
-        |subs AS (SELECT unnest(range(16)) AS sub),
-        |dists AS (SELECT e.vec_id, s.sub, c.code,
-        |                 list_sum([(e.q[s.sub*4+d]-c.cq[s.sub*4+d])*(e.q[s.sub*4+d]-c.cq[s.sub*4+d]) for d in range(1,5)]) AS dist
-        |          FROM e, subs s, cent c),
-        |asn AS (SELECT vec_id, sub, code FROM (
-        |          SELECT vec_id, sub, code,
-        |                 row_number() OVER (PARTITION BY vec_id, sub ORDER BY dist, code) AS r
-        |          FROM dists) WHERE r = 1),
-        |q5 AS (SELECT vec_id AS query_id, q AS qq FROM e ORDER BY vec_id LIMIT 5),
-        |probe AS (SELECT query_id, list_id FROM (
-        |            SELECT q5.query_id, d.list_id,
-        |                   row_number() OVER (PARTITION BY q5.query_id ORDER BY d.dist, d.list_id) AS r
-        |            FROM q5 JOIN cdists d ON d.vec_id = q5.query_id) WHERE r <= 4),
-        |cand AS (SELECT DISTINCT p.query_id, a.vec_id
-        |         FROM probe p JOIN lasn a USING (list_id) WHERE a.vec_id != p.query_id),
-        |qd AS (SELECT q5.query_id, s.sub, c.code,
-        |              list_sum([(q5.qq[s.sub*4+d]-c.cq[s.sub*4+d])*(q5.qq[s.sub*4+d]-c.cq[s.sub*4+d]) for d in range(1,5)]) AS d
-        |       FROM q5, subs s, cent c),
-        |adc AS (SELECT cand.query_id, cand.vec_id, sum(qd.d) AS adist
-        |        FROM cand JOIN asn a ON a.vec_id = cand.vec_id
-        |                  JOIN qd ON qd.query_id = cand.query_id AND qd.sub = a.sub AND qd.code = a.code
-        |        GROUP BY cand.query_id, cand.vec_id),
-        |ranked AS (SELECT query_id, vec_id AS neighbor_id, CAST(adist AS BIGINT) AS adist,
-        |                  row_number() OVER (PARTITION BY query_id ORDER BY adist, vec_id) AS rank
-        |           FROM adc),
-        |bf AS (SELECT query_id, neighbor_id FROM (
-        |         SELECT q5.query_id, e.vec_id AS neighbor_id,
-        |                row_number() OVER (PARTITION BY q5.query_id
-        |                  ORDER BY list_sum([(q5.qq[d]-e.q[d])*(q5.qq[d]-e.q[d]) for d in range(1,65)]), e.vec_id) AS r
-        |         FROM q5, e WHERE e.vec_id != q5.query_id)
-        |       WHERE r <= 5)
-        |SELECT r.query_id, r.neighbor_id, CAST(r.rank AS BIGINT) AS rank, r.adist,
-        |       CASE WHEN bf.neighbor_id IS NOT NULL THEN 1::BIGINT ELSE 0::BIGINT END AS hit
-        |FROM ranked r LEFT JOIN bf USING (query_id, neighbor_id)
-        |WHERE r.rank <= 5""".stripMargin,
-    // same regexes as Curate (Java-regex ∩ RE2 subset), same planting
-    "pii_scrub" ->
-      ("""WITH planted AS (
-        |  SELECT doc_id, text ||
-        |    CASE WHEN doc_id % 3 = 0 THEN ' user' || doc_id || '@example.com' ELSE '' END ||
-        |    CASE WHEN doc_id % 5 = 0 THEN ' 10.' || (doc_id % 256) || '.0.1' ELSE '' END AS text
-        |  FROM documents)
-        |SELECT doc_id,
-        |  regexp_replace(de_emailed, '""" + graft.textops.Curate.IpRe + """', '<IP>', 'g') AS clean_text,
-        |  CAST(len(regexp_extract_all(text, '""" + graft.textops.Curate.EmailRe + """')) AS BIGINT) AS n_emails,
-        |  CAST(len(regexp_extract_all(de_emailed, '""" + graft.textops.Curate.IpRe + """')) AS BIGINT) AS n_ips
-        |FROM (SELECT doc_id, text,
-        |             regexp_replace(text, '""" + graft.textops.Curate.EmailRe +
-        """', '<EMAIL>', 'g') AS de_emailed
-        |      FROM planted)""").stripMargin,
-    // gopher_repetition: full SQL recompute — per-n gram tables, top-1 by
-    // (count DESC, gram ASC), dup coverage via the sorted-gap interval-union
-    // identity (lead() window; word-gram ends are monotone so it is exact).
-    // NB the i=1 slice guard: DuckDB ws[1:0] is NULL, not empty.
-    "gopher_repetition" ->
-      """WITH p AS (SELECT doc_id, CASE WHEN doc_id % 4 = 0
-        |                 THEN text || ' ' || array_to_string(string_split(text,' ')[1:8], ' ')
-        |                           || ' ' || array_to_string(string_split(text,' ')[1:8], ' ')
-        |                 ELSE text END AS text
-        |            FROM documents),
-        |d AS (SELECT doc_id, string_split(text, ' ') AS ws, CAST(length(text) AS BIGINT) AS L FROM p),
-        |g2 AS (SELECT doc_id, L, array_to_string(ws[i:i+1], ' ') AS g
-        |       FROM d, UNNEST(generate_series(1, len(ws)-1)) t(i) WHERE len(ws) >= 2),
-        |gc2 AS (SELECT doc_id, L, g, count(*) AS c FROM g2 GROUP BY doc_id, L, g),
-        |top2 AS (SELECT doc_id, c * length(g) * 10000 // L AS bp FROM (
-        |           SELECT doc_id, L, g, c, row_number() OVER (PARTITION BY doc_id ORDER BY c DESC, g) AS r
-        |           FROM gc2) WHERE r = 1),
-        |g3 AS (SELECT doc_id, L, array_to_string(ws[i:i+2], ' ') AS g
-        |       FROM d, UNNEST(generate_series(1, len(ws)-2)) t(i) WHERE len(ws) >= 3),
-        |gc3 AS (SELECT doc_id, L, g, count(*) AS c FROM g3 GROUP BY doc_id, L, g),
-        |top3 AS (SELECT doc_id, c * length(g) * 10000 // L AS bp FROM (
-        |           SELECT doc_id, L, g, c, row_number() OVER (PARTITION BY doc_id ORDER BY c DESC, g) AS r
-        |           FROM gc3) WHERE r = 1),
-        |g4 AS (SELECT doc_id, L, array_to_string(ws[i:i+3], ' ') AS g
-        |       FROM d, UNNEST(generate_series(1, len(ws)-3)) t(i) WHERE len(ws) >= 4),
-        |gc4 AS (SELECT doc_id, L, g, count(*) AS c FROM g4 GROUP BY doc_id, L, g),
-        |top4 AS (SELECT doc_id, c * length(g) * 10000 // L AS bp FROM (
-        |           SELECT doc_id, L, g, c, row_number() OVER (PARTITION BY doc_id ORDER BY c DESC, g) AS r
-        |           FROM gc4) WHERE r = 1),
-        |h5 AS (SELECT doc_id, L, i,
-        |              CASE WHEN i = 1 THEN 0 ELSE length(array_to_string(ws[1:i-1], ' ')) + 1 END AS s,
-        |              array_to_string(ws[i:i+4], ' ') AS g
-        |       FROM d, UNNEST(generate_series(1, len(ws)-4)) t(i) WHERE len(ws) >= 5),
-        |hd5 AS (SELECT doc_id, L, s, length(g) AS ln,
-        |               lead(s) OVER (PARTITION BY doc_id ORDER BY s) AS nxt
-        |        FROM h5 WHERE g IN (SELECT g FROM h5 h2
-        |                            WHERE h2.doc_id = h5.doc_id GROUP BY g HAVING count(*) >= 2)),
-        |dup5 AS (SELECT doc_id, COALESCE(sum(CASE WHEN nxt IS NULL THEN ln
-        |                                          ELSE least(nxt - s, ln) END), 0) * 10000 // any_value(L) AS bp
-        |         FROM hd5 GROUP BY doc_id),
-        |h10 AS (SELECT doc_id, L, i,
-        |              CASE WHEN i = 1 THEN 0 ELSE length(array_to_string(ws[1:i-1], ' ')) + 1 END AS s,
-        |              array_to_string(ws[i:i+9], ' ') AS g
-        |       FROM d, UNNEST(generate_series(1, len(ws)-9)) t(i) WHERE len(ws) >= 10),
-        |hd10 AS (SELECT doc_id, L, s, length(g) AS ln,
-        |               lead(s) OVER (PARTITION BY doc_id ORDER BY s) AS nxt
-        |        FROM h10 WHERE g IN (SELECT g FROM h10 h2
-        |                             WHERE h2.doc_id = h10.doc_id GROUP BY g HAVING count(*) >= 2)),
-        |dup10 AS (SELECT doc_id, COALESCE(sum(CASE WHEN nxt IS NULL THEN ln
-        |                                           ELSE least(nxt - s, ln) END), 0) * 10000 // any_value(L) AS bp
-        |         FROM hd10 GROUP BY doc_id)
-        |SELECT d.doc_id,
-        |       CAST(COALESCE(top2.bp, 0) AS BIGINT) AS top2_bp,
-        |       CAST(COALESCE(top3.bp, 0) AS BIGINT) AS top3_bp,
-        |       CAST(COALESCE(top4.bp, 0) AS BIGINT) AS top4_bp,
-        |       CAST(COALESCE(dup5.bp, 0) AS BIGINT) AS dup5_bp,
-        |       CAST(COALESCE(dup10.bp, 0) AS BIGINT) AS dup10_bp,
-        |       CAST(CASE WHEN COALESCE(top2.bp,0) <= 2000 AND COALESCE(top3.bp,0) <= 1800
-        |                  AND COALESCE(top4.bp,0) <= 1600 AND COALESCE(dup5.bp,0) <= 1500
-        |                  AND COALESCE(dup10.bp,0) <= 1000 THEN 1 ELSE 0 END AS BIGINT) AS keep
-        |FROM d
-        |LEFT JOIN top2 USING (doc_id) LEFT JOIN top3 USING (doc_id) LEFT JOIN top4 USING (doc_id)
-        |LEFT JOIN dup5 USING (doc_id) LEFT JOIN dup10 USING (doc_id)""".stripMargin,
-    "gopher_quality" ->
-      """WITH w AS (SELECT doc_id, string_split(text,' ') AS ws,
-        |                  CAST(length(text) AS BIGINT) AS c FROM documents)
-        |SELECT doc_id, CAST(len(ws) AS BIGINT) AS n_words,
-        |       c - (len(ws) - 1) AS word_chars,
-        |       CAST(len(list_filter(ws, x -> length(x) > 10)) AS BIGINT) AS n_long_words,
-        |       CAST(CASE WHEN len(ws) BETWEEN 50 AND 100000
-        |                  AND c - (len(ws) - 1) BETWEEN 3*len(ws) AND 10*len(ws)
-        |             THEN 1 ELSE 0 END AS BIGINT) AS keep
-        |FROM w""".stripMargin,
-    // lm_quality: DuckDB recomputes the trigram LM and the integer surprise
-    // surrogate exactly (// is integral floor; all values non-negative so it
-    // matches Spark's trunc `div`). Validated against a Python recompute.
-    "lm_quality" ->
-      """WITH t AS (SELECT doc_id, lower(text) AS lt FROM documents),
-        |tri AS (SELECT doc_id, unnest([substring(lt, i, 3) for i in range(1, length(lt)-1)]) AS tri
-        |        FROM t WHERE length(lt) >= 3),
-        |lm AS (SELECT tri, CAST(count(*) AS BIGINT) AS tc FROM tri WHERE doc_id%10<3 GROUP BY tri),
-        |bg AS (SELECT substring(tri,1,2) AS bi, sum(tc) AS bt FROM lm GROUP BY bi),
-        |sc AS (SELECT d.doc_id,
-        |              CASE WHEN lm.tc IS NULL THEN 4096000
-        |                   ELSE least((bg.bt*4096)//lm.tc, 4096000) END AS s
-        |       FROM tri d LEFT JOIN lm ON d.tri = lm.tri
-        |                  LEFT JOIN bg ON substring(d.tri,1,2) = bg.bi)
-        |SELECT doc_id, CAST(count(*) AS BIGINT) AS n_tris, CAST(sum(s) AS BIGINT) AS surprise_total,
-        |       CAST(sum(s)//count(*) AS BIGINT) AS surprise_avg
-        |FROM sc GROUP BY doc_id""".stripMargin,
-    // blocklist_filter: same token-membership lambda in DuckDB; the fixture
-    // list ('dup' = the 5%-of-docs rare word, 'crash' = a zero-hit entry)
-    // keeps the gate non-degenerate. Python-validated 0/500 before wiring.
-    "blocklist_filter" ->
-      """WITH w AS (SELECT doc_id, string_split(text,' ') AS ws FROM documents)
-        |SELECT doc_id, CAST(len(ws) AS BIGINT) AS n_words,
-        |  CAST(len(list_filter(ws, w -> list_contains(['dup','crash'], w))) AS BIGINT) AS n_blocked,
-        |  CAST(CASE WHEN len(list_filter(ws, w -> list_contains(['dup','crash'], w)))=0 THEN 1 ELSE 0 END AS BIGINT) AS keep
-        |FROM w ORDER BY doc_id""".stripMargin,
-    // ccnet_buckets: the lm_quality CTE chain + per-lang cumulative-count
-    // tercile cut at (lang, score) grain; tie rule = whole cell tips into
-    // the earliest third whose boundary its cumulative prefix fits
-    // (cum*3 <= total / cum*3 <= 2*total). Python-validated 0/500
-    // (165 head / 166 middle / 169 tail at sf0.01) before wiring.
-    "ccnet_buckets" ->
-      """WITH t AS (SELECT doc_id, lower(text) AS lt FROM documents),
-        |tri AS (SELECT doc_id, unnest([substring(lt, i, 3) for i in range(1, length(lt)-1)]) AS tri
-        |        FROM t WHERE length(lt) >= 3),
-        |lm AS (SELECT tri, CAST(count(*) AS BIGINT) AS tc FROM tri WHERE doc_id%10<3 GROUP BY tri),
-        |bg AS (SELECT substring(tri,1,2) AS bi, sum(tc) AS bt FROM lm GROUP BY bi),
-        |sc AS (SELECT d.doc_id,
-        |              CASE WHEN lm.tc IS NULL THEN 4096000
-        |                   ELSE least((bg.bt*4096)//lm.tc, 4096000) END AS s
-        |       FROM tri d LEFT JOIN lm ON d.tri = lm.tri
-        |                  LEFT JOIN bg ON substring(d.tri,1,2) = bg.bi),
-        |lq AS (SELECT doc_id, sum(s)//count(*) AS score FROM sc GROUP BY doc_id),
-        |sl AS (SELECT d.doc_id, d.lang, lq.score FROM documents d JOIN lq USING (doc_id)),
-        |hist AS (SELECT lang, score, count(*) AS cnt FROM sl GROUP BY lang, score),
-        |cut AS (SELECT lang, score,
-        |         CASE WHEN sum(cnt) OVER (PARTITION BY lang ORDER BY score)*3 <= sum(cnt) OVER (PARTITION BY lang) THEN 'head'
-        |              WHEN sum(cnt) OVER (PARTITION BY lang ORDER BY score)*3 <= sum(cnt) OVER (PARTITION BY lang)*2 THEN 'middle'
-        |              ELSE 'tail' END AS bucket FROM hist)
-        |SELECT sl.doc_id, sl.lang, CAST(sl.score AS BIGINT) AS score, cut.bucket
-        |FROM sl JOIN cut ON sl.lang=cut.lang AND sl.score=cut.score ORDER BY sl.doc_id""".stripMargin,
-    // entropy_quality: the same bit-length log surrogate as dsir_weights,
-    // over per-doc character counts. Python-validated 0/500 before wiring.
-    "entropy_quality" ->
-      """WITH ch AS (SELECT doc_id, length(text) AS n,
-        |                   unnest([substring(text, i, 1) for i in range(1, length(text)+1)]) AS c
-        |            FROM documents WHERE length(text) >= 1),
-        |cc AS (SELECT doc_id, n, c, CAST(count(*) AS BIGINT) AS k FROM ch GROUP BY doc_id, n, c)
-        |SELECT doc_id, CAST(n AS BIGINT) AS n_chars,
-        |       CAST(sum(k*(length(bin(n)) - length(bin(k)))) AS BIGINT) AS entropy_bits,
-        |       CAST((sum(k*(length(bin(n)) - length(bin(k)))) * 1000) // n AS BIGINT) AS entropy_milli
-        |FROM cc GROUP BY doc_id, n""".stripMargin,
-    // dsir_weights: the float log replaced by the bit-length surrogate
-    // (length(bin(x)) = floor(log2)+1, add-1 smoothed) so the importance
-    // weight recomputes bit-for-bit; totals folded out of the per-trigram
-    // term. Python-validated 0/500 before wiring.
-    "dsir_weights" ->
-      """WITH t AS (SELECT doc_id, lower(text) AS lt FROM documents),
-        |tri AS (SELECT doc_id, unnest([substring(lt, i, 3) for i in range(1, length(lt)-1)]) AS tri
-        |        FROM t WHERE length(lt) >= 3),
-        |lmt AS (SELECT tri, CAST(count(*) AS BIGINT) AS ct FROM tri WHERE doc_id%10=0 GROUP BY tri),
-        |lmr AS (SELECT tri, CAST(count(*) AS BIGINT) AS cr FROM tri WHERE doc_id%10>=5 GROUP BY tri),
-        |tot AS (SELECT (SELECT coalesce(sum(ct),0) FROM lmt) AS tt, (SELECT coalesce(sum(cr),0) FROM lmr) AS tr),
-        |sc AS (SELECT d.doc_id,
-        |              CAST(length(bin(coalesce(lmt.ct,0)+1)) - length(bin(coalesce(lmr.cr,0)+1)) AS BIGINT) AS s
-        |       FROM tri d LEFT JOIN lmt ON d.tri = lmt.tri LEFT JOIN lmr ON d.tri = lmr.tri)
-        |SELECT doc_id, CAST(count(*) AS BIGINT) AS n_tris,
-        |       CAST(sum(s) + count(*) * (length(bin((SELECT tr FROM tot)+1)) - length(bin((SELECT tt FROM tot)+1))) AS BIGINT) AS weight_bits
-        |FROM sc GROUP BY doc_id""".stripMargin,
-    // dsir_select: the dsir_weights CTE chain + a global (weight DESC, id)
-    // rank cut at 100; Python-validated at both sfs (tools/round5c_check.py)
-    "dsir_select" ->
-      """WITH t AS (SELECT doc_id, lower(text) AS lt FROM documents),
-        |tri AS (SELECT doc_id, unnest([substring(lt, i, 3) for i in range(1, length(lt)-1)]) AS tri
-        |        FROM t WHERE length(lt) >= 3),
-        |lmt AS (SELECT tri, CAST(count(*) AS BIGINT) AS ct FROM tri WHERE doc_id%10=0 GROUP BY tri),
-        |lmr AS (SELECT tri, CAST(count(*) AS BIGINT) AS cr FROM tri WHERE doc_id%10>=5 GROUP BY tri),
-        |tot AS (SELECT (SELECT coalesce(sum(ct),0) FROM lmt) AS tt, (SELECT coalesce(sum(cr),0) FROM lmr) AS tr),
-        |sc AS (SELECT d.doc_id,
-        |              CAST(length(bin(coalesce(lmt.ct,0)+1)) - length(bin(coalesce(lmr.cr,0)+1)) AS BIGINT) AS s
-        |       FROM tri d LEFT JOIN lmt ON d.tri = lmt.tri LEFT JOIN lmr ON d.tri = lmr.tri),
-        |w AS (SELECT doc_id,
-        |             CAST(sum(s) + count(*) * (length(bin((SELECT tr FROM tot)+1)) - length(bin((SELECT tt FROM tot)+1))) AS BIGINT) AS weight_bits
-        |      FROM sc GROUP BY doc_id),
-        |r AS (SELECT doc_id, weight_bits,
-        |             row_number() OVER (ORDER BY weight_bits DESC, doc_id) AS rnk FROM w)
-        |SELECT doc_id, weight_bits, CAST(rnk AS BIGINT) AS rnk FROM r WHERE rnk <= 100
-        |ORDER BY rnk""".stripMargin,
-    // cusum_bursts: closed-form CUSUM (prefix sum − running min) over the
-    // dense per-type hour series, adaptive integer threshold, planted
-    // spike; Python-validated at both sfs (102 and 885 burst buckets,
-    // tools/round5c_check.py)
-    "cusum_bursts" ->
-      """WITH all_e AS (
-        |  SELECT event_id, event_type, ts FROM events
-        |  UNION ALL
-        |  SELECT event_id + 10000000, event_type,
-        |         TIMESTAMP '2024-01-15 12:00:00' + to_hours(event_id%3) AS ts
-        |  FROM events WHERE event_id%5=0),
-        |ep AS (SELECT event_type, floor(epoch(ts))::BIGINT // 3600 AS b FROM all_e),
-        |rng AS (SELECT event_type, min(b) AS lo, max(b) AS hi, count(*)::BIGINT AS total FROM ep GROUP BY 1),
-        |th AS (SELECT event_type, lo, hi, (total + (hi-lo+1) - 1) // (hi-lo+1) + 1 AS thr FROM rng),
-        |bk AS (SELECT event_type, thr, unnest([lo + i for i in range(0, hi - lo + 1)]) AS b FROM th),
-        |cnt AS (SELECT event_type, b, count(*)::BIGINT AS n FROM ep GROUP BY 1, 2),
-        |d AS (SELECT bk.event_type, bk.thr, bk.b, coalesce(cnt.n, 0)::BIGINT AS n
-        |      FROM bk LEFT JOIN cnt USING (event_type, b)),
-        |p AS (SELECT event_type, thr, b, n,
-        |             sum(n - thr) OVER (PARTITION BY event_type ORDER BY b) AS pf FROM d),
-        |m AS (SELECT event_type, thr, b, n, pf,
-        |             least(0, min(pf) OVER (PARTITION BY event_type ORDER BY b)) AS mn FROM p)
-        |SELECT event_type, CAST(b AS BIGINT) AS bucket, n, CAST(thr AS BIGINT) AS thr,
-        |       CAST(pf - mn AS BIGINT) AS s,
-        |       CAST(CASE WHEN pf - mn >= thr + 2 THEN 1 ELSE 0 END AS BIGINT) AS burst
-        |FROM m ORDER BY event_type, bucket""".stripMargin,
-    // bucketed_join: layout is invisible to the RESULT (that's the point —
-    // bucketing changes bytes moved, not rows produced); oracle = the plain
-    // doc-grain join arithmetic
-    "bucketed_join" ->
-      """SELECT doc_id,
-        |       CAST(len(string_split(text, ' ')) AS BIGINT) AS n_words,
-        |       CAST(length(text) AS BIGINT) AS n_chars,
-        |       lang, source
-        |FROM documents ORDER BY doc_id""".stripMargin,
-    // partition_prune: pruning changes files LISTED, not rows produced;
-    // oracle = the same lang predicate applied row-wise
-    "partition_prune" ->
-      """SELECT doc_id, lang, CAST(length(text) AS BIGINT) AS n_chars
-        |FROM documents WHERE lang = 'en' ORDER BY doc_id""".stripMargin,
-    // zorder_layout: Morton interleave + 16-file audit; the 8×8-tile
-    // locality invariant is asserted by the checker at both sfs
-    // (tools/round5c_check.py)
-    "zorder_layout" ->
-      """WITH z AS (SELECT doc_id, doc_id%32 AS d1, length(text)%32 AS d2 FROM documents),
-        |zi AS (SELECT doc_id, d1, d2,
-        |              list_sum([(((d1 >> i) & 1) << (2*i+1)) + (((d2 >> i) & 1) << (2*i))
-        |                        for i in range(0, 5)]) AS zval FROM z),
-        |f AS (SELECT doc_id, d1, d2, zval // 64 AS file_id FROM zi)
-        |SELECT CAST(file_id AS BIGINT) AS file_id, count(*)::BIGINT AS n_rows,
-        |       CAST(min(d1) AS BIGINT) AS min_d1, CAST(max(d1) AS BIGINT) AS max_d1,
-        |       CAST(min(d2) AS BIGINT) AS min_d2, CAST(max(d2) AS BIGINT) AS max_d2
-        |FROM f GROUP BY 1 ORDER BY file_id""".stripMargin,
-    // fuzzy_join: block on the title's first 8 chars, verify lev <= 3;
-    // Python-validated 439/436 pairs at the two sfs (tools/round5d_check.py)
-    "fuzzy_join" ->
-      """WITH a AS (SELECT doc_id AS a_id, substring(text, 1, 40) AS title_a FROM documents),
-        |b AS (SELECT doc_id + 1000000 AS b_id,
-        |             CASE WHEN doc_id%5=0 THEN reverse(substring(text, 1, 40))
-        |                  ELSE substring(text, 1, 40) || ' v' || (doc_id%3) END AS title_b
-        |      FROM documents),
-        |c AS (SELECT a_id, b_id, title_a, title_b FROM a JOIN b
-        |      ON substring(title_a, 1, 8) = substring(title_b, 1, 8)),
-        |m AS (SELECT a_id, b_id, CAST(levenshtein(title_a, title_b) AS BIGINT) AS lev FROM c)
-        |SELECT a_id, b_id, lev FROM m WHERE lev <= 3 ORDER BY a_id, b_id""".stripMargin,
-    // funnel_counts: any-touch ordered funnel, W = 14400 s per step,
-    // composite (sec, event_id) order key; Python-validated at both sfs
-    // with all three levels populated (tools/round5d_check.py)
-    "funnel_counts" ->
-      """WITH ev AS (SELECT user_id, event_type, floor(epoch(ts))::BIGINT AS sec,
-        |                   floor(epoch(ts))::BIGINT * 10000000 + event_id AS k
-        |            FROM events),
-        |v AS (SELECT user_id, min(k) AS vk FROM ev WHERE event_type = 'view' GROUP BY 1),
-        |cand AS (SELECT c.user_id, c.k FROM ev c JOIN ev vv
-        |         ON c.user_id = vv.user_id AND vv.event_type = 'view'
-        |        WHERE c.event_type = 'click' AND vv.k < c.k AND c.sec - vv.sec <= 14400),
-        |cs AS (SELECT user_id, min(k) AS ck FROM cand GROUP BY 1),
-        |p AS (SELECT ev.user_id, min(k) AS pk FROM ev JOIN cs USING (user_id)
-        |      WHERE event_type = 'purchase' AND k > ck AND sec - ck // 10000000 <= 14400
-        |      GROUP BY 1)
-        |SELECT v.user_id,
-        |       CAST(1 + (ck IS NOT NULL)::INT + (pk IS NOT NULL)::INT AS BIGINT) AS reached,
-        |       CAST(vk // 10000000 AS BIGINT) AS view_sec,
-        |       CAST(coalesce(ck // 10000000, -1) AS BIGINT) AS click_sec,
-        |       CAST(coalesce(pk // 10000000, -1) AS BIGINT) AS purchase_sec
-        |FROM v LEFT JOIN cs ON v.user_id = cs.user_id LEFT JOIN p ON v.user_id = p.user_id
-        |ORDER BY v.user_id""".stripMargin,
-    // tfidf_keywords: same integer IDF surrogate (N*4096)//df; ties broken
-    // by term so the per-doc top-5 is total-ordered on both sides.
-    "tfidf_keywords" ->
-      """WITH w AS (SELECT doc_id, unnest(string_split(lower(text),' ')) AS term FROM documents),
-        |tf AS (SELECT doc_id, term, CAST(count(*) AS BIGINT) AS tf FROM w GROUP BY doc_id, term),
-        |df AS (SELECT term, CAST(count(DISTINCT doc_id) AS BIGINT) AS df FROM w GROUP BY term),
-        |n AS (SELECT count(*) AS n FROM documents),
-        |sc AS (SELECT tf.doc_id, tf.term, tf.tf * (((SELECT n FROM n)*4096)//df.df) AS score
-        |       FROM tf JOIN df USING (term)),
-        |rk AS (SELECT doc_id, term, score,
-        |              row_number() OVER (PARTITION BY doc_id ORDER BY score DESC, term) AS rank
-        |       FROM sc)
-        |SELECT doc_id, CAST(rank AS BIGINT) AS rank, term, CAST(score AS BIGINT) AS score
-        |FROM rk WHERE rank <= 5""".stripMargin,
-    // pmi_collocations: the overflow-proof bit-length PMI surrogate
-    // (bitlen(c)+bitlen(N)-bitlen(c1)-bitlen(c2) — no c*N product); the
-    // position struct mirrors the engine's single-explode shape so unigram
-    // counts are the rollup of the (w1,w2) aggregate. Python-validated
-    // 0/50 before wiring.
-    "pmi_collocations" ->
-      """WITH d AS (SELECT string_split(text,' ') AS ws FROM documents),
-        |p AS (SELECT unnest([{'w1': ws[i], 'w2': CASE WHEN i < len(ws) THEN ws[i+1] ELSE NULL END}
-        |                     for i in range(1, len(ws)+1)]) AS g FROM d),
-        |counts AS (SELECT g.w1 AS w1, g.w2 AS w2, CAST(count(*) AS BIGINT) AS c FROM p GROUP BY 1, 2),
-        |uni AS (SELECT w1 AS w, CAST(sum(c) AS BIGINT) AS cw FROM counts WHERE c >= 1 GROUP BY w1),
-        |n AS (SELECT sum(cw) AS n FROM uni),
-        |bi AS (SELECT w1, w2, c FROM counts WHERE w2 IS NOT NULL AND c >= 5)
-        |SELECT w1||' '||w2 AS bigram,
-        |       CAST(length(bin(c)) + length(bin((SELECT n FROM n))) -
-        |            length(bin(u1.cw)) - length(bin(u2.cw)) AS BIGINT) AS pmi_bits,
-        |       c AS n
-        |FROM bi JOIN uni u1 ON u1.w = bi.w1 JOIN uni u2 ON u2.w = bi.w2
-        |ORDER BY pmi_bits DESC, n DESC, bigram ASC LIMIT 50""".stripMargin,
-    // ngram_novelty: the oracle minimizes over raw gram STRINGS where the
-    // engine minimizes over xxhash64 keys — identical barring a 64-bit
-    // collision (the dedup_exact tradeoff). Python-validated 0/500.
-    "ngram_novelty" ->
-      """WITH d AS (SELECT doc_id, string_split(text,' ') AS ws FROM documents),
-        |g AS (SELECT DISTINCT doc_id, unnest([array_to_string(ws[i:i+7],' ') for i in range(1, len(ws)-6)]) AS gram
-        |      FROM d WHERE len(ws) >= 8),
-        |m AS (SELECT gram, min(doc_id) AS first_doc FROM g GROUP BY gram)
-        |SELECT g.doc_id AS doc_id, CAST(count(*) AS BIGINT) AS n_grams,
-        |       CAST(sum(CASE WHEN m.first_doc = g.doc_id THEN 1 ELSE 0 END) AS BIGINT) AS n_novel,
-        |       CAST((sum(CASE WHEN m.first_doc = g.doc_id THEN 1 ELSE 0 END) * 10000) // count(*) AS BIGINT) AS novelty_fp
-        |FROM g JOIN m USING (gram)
-        |GROUP BY g.doc_id""".stripMargin,
-    "repetition_stats" ->
-      """WITH w AS (SELECT doc_id, string_split(text,' ') AS ws FROM documents),
-        |b AS (SELECT doc_id, ws, [ws[i] || ' ' || ws[i+1] for i in range(1, len(ws))] AS bg FROM w)
-        |SELECT doc_id, CAST(len(ws) AS BIGINT) AS n_words,
-        |       CAST(len(list_distinct(ws)) AS BIGINT) AS n_distinct_words,
-        |       CAST(list_max(list_transform(list_distinct(ws), w2 -> len(list_filter(ws, x -> x = w2)))) AS BIGINT) AS top_word_n,
-        |       CAST(len(bg) AS BIGINT) AS n_bigrams,
-        |       CAST(len(list_distinct(bg)) AS BIGINT) AS n_distinct_bigrams,
-        |       CAST(len(ws) - len(list_distinct(ws)) AS BIGINT) AS n_dup_words,
-        |       CAST(len(bg) - len(list_distinct(bg)) AS BIGINT) AS n_dup_bigrams
-        |FROM b""".stripMargin,
-    "token_count_regex" ->
-      """SELECT doc_id,
-        |       CAST(len(regexp_extract_all(text, '[a-z0-9]+')) AS BIGINT) AS n_regex_tokens
-        |FROM documents""".stripMargin,
-    // the oracles below recompute the generator's pixel function per pixel —
-    // the Spark side must decode the SAME values out of real PNG bytes via
-    // ImageIO, so any codec/CRC/deflate defect breaks the hash
-    "multimodal_frames" ->
-      """WITH d AS (SELECT doc_id, CAST(2 + doc_id%5 AS BIGINT) AS nf FROM documents),
-        |     f AS (SELECT doc_id, unnest(range(0, nf)) AS fr FROM d),
-        |     s AS (SELECT doc_id, fr,
-        |                  CAST(list_sum([ CAST(((doc_id*31 + 17*fr)%256 + 7*(i%8) + 13*(i//8)) % 256 AS BIGINT)
-        |                                  for i in range(0, 48) ]) AS BIGINT) AS fsum
-        |           FROM f WHERE fr % 2 = 0)
-        |SELECT doc_id, count(*) AS n_frames, CAST(max(fr) AS INT) AS last_frame,
-        |       CAST(sum(fsum) AS BIGINT) AS px_sum
-        |FROM s GROUP BY doc_id""".stripMargin,
-    "multimodal_features" ->
-      """WITH d AS (SELECT doc_id, CAST(8 + doc_id%16 AS INT) AS width, CAST(8 + doc_id%11 AS INT) AS height,
-        |                  (doc_id*31)%256 AS a FROM documents),
-        |     p AS (SELECT doc_id, width, height,
-        |                  [ CAST((a + 7*(i%width) + 13*(i//width)) % 256 AS BIGINT) for i in range(0, width*height) ] AS px
-        |           FROM d)
-        |SELECT doc_id, 'png' AS kind, width, height,
-        |       CAST(list_sum(px) AS BIGINT) AS px_sum,
-        |       CAST(list_min(px) AS INT) AS px_min,
-        |       CAST(list_max(px) AS INT) AS px_max,
-        |       CAST(len(list_filter(px, g -> g < 128)) AS BIGINT) AS n_dark
-        |FROM p""".stripMargin,
-    // the keep decision is FNV-1a over 'mix:<doc_id>' mod 10000 — recomputed
-    // byte-for-byte in SQL (HUGEINT arithmetic; ASCII input so the 7-bit xor
-    // trick is exact), same pattern as doc_fingerprint
-    "sample_mixture" -> MixtureRowsSql("""SELECT doc_id, host, CAST(h % 10000 AS BIGINT) AS bucket,
-        |       (h % 10000) < (doc_id%7 + 1) * 1000 AS keep
-        |FROM k""".stripMargin),
-    "mixture_manifest" -> MixtureRowsSql("""SELECT host, count(*) AS n_docs,
-        |       CAST(sum(CASE WHEN (h % 10000) < (doc_id%7 + 1) * 1000 THEN 1 ELSE 0 END) AS BIGINT) AS n_kept
-        |FROM k GROUP BY host""".stripMargin),
-    // batch_schedule: the oracle groups by raw text (the engine's narrow
-    // (xxhash64, length) key — the dedup_exact collision tradeoff) and
-    // replays the salted-FNV shard split; validity (no same-text batch
-    // collision) is asserted by the checker. Python-validated 1000/1000 at
-    // both sfs (tools/sched_quant_tri_check.py)
-    "batch_schedule" ->
-      """WITH all_d AS (SELECT doc_id, text FROM documents
-        |               UNION ALL SELECT doc_id + 1000000, text FROM documents),
-        |h AS (SELECT doc_id, text, list_reduce(list_prepend(14695981039346656037::HUGEINT,
-        |        [unicode(c)::HUGEINT for c in string_split('batch:' || doc_id, '')]),
-        |        (h,b) -> ((h - h%128 + xor((h%128)::BIGINT, b::BIGINT)::HUGEINT) * 1099511628211::HUGEINT) % (1::HUGEINT<<64)) AS hv
-        |      FROM all_d),
-        |w AS (SELECT doc_id, (hv % 4)::BIGINT AS shard,
-        |             row_number() OVER (PARTITION BY text ORDER BY doc_id) AS wave FROM h)
-        |SELECT doc_id, CAST(wave AS BIGINT) AS wave, shard,
-        |       CAST((wave-1)*4 + shard AS BIGINT) AS batch
-        |FROM w ORDER BY doc_id""".stripMargin,
-    // epoch_schedule: variable-multiplicity plant (group sizes 1..4 by
-    // doc_id%4), per-group min-id representative + inverse-multiplicity
-    // epoch budget; Python-validated 500/500 groups at both sfs
-    // (tools/round5b_check.py)
-    "epoch_schedule" ->
-      """WITH all_d AS (
-        |  SELECT doc_id, text FROM documents
-        |  UNION ALL SELECT doc_id + 1000000, text FROM documents WHERE doc_id%4 >= 1
-        |  UNION ALL SELECT doc_id + 2000000, text FROM documents WHERE doc_id%4 >= 2
-        |  UNION ALL SELECT doc_id + 3000000, text FROM documents WHERE doc_id%4 >= 3),
-        |g AS (SELECT min(doc_id) AS doc_id, count(*)::BIGINT AS dup_count FROM all_d GROUP BY text)
-        |SELECT doc_id, dup_count,
-        |       CAST(greatest(1, 4//dup_count) AS BIGINT) AS epochs,
-        |       CAST(dup_count * greatest(1, 4//dup_count) AS BIGINT) AS naive_passes
-        |FROM g ORDER BY doc_id""".stripMargin,
-    // split_leakproof: FNV("split:"||id) mod 100 draw, min-collapsed over
-    // exact-duplicate groups (twins planted) — the oracle replays the draw
-    // and the collapse; Python-validated 1000/1000 rows, 99 moved, at both
-    // sfs (tools/round5b_check.py)
-    "split_leakproof" ->
-      """WITH all_d AS (SELECT doc_id, text FROM documents
-        |               UNION ALL SELECT doc_id + 1000000, text FROM documents),
-        |h AS (SELECT doc_id, text, list_reduce(list_prepend(14695981039346656037::HUGEINT,
-        |        [unicode(c)::HUGEINT for c in string_split('split:' || doc_id, '')]),
-        |        (h,b) -> ((h - h%128 + xor((h%128)::BIGINT, b::BIGINT)::HUGEINT) * 1099511628211::HUGEINT) % (1::HUGEINT<<64)) AS hv
-        |      FROM all_d),
-        |r AS (SELECT doc_id, text,
-        |             CASE WHEN (hv % 100) < 10 THEN 1 ELSE 0 END AS raw_split FROM h),
-        |f AS (SELECT doc_id, raw_split,
-        |             min(raw_split) OVER (PARTITION BY text) AS split FROM r)
-        |SELECT doc_id, CAST(raw_split AS BIGINT) AS raw_split, CAST(split AS BIGINT) AS split,
-        |       CAST(CASE WHEN raw_split <> split THEN 1 ELSE 0 END AS BIGINT) AS moved
-        |FROM f ORDER BY doc_id""".stripMargin,
-    // exact_quantiles: full type-1 inverse-CDF recompute at value grain;
-    // Python-validated at both sfs (tools/sched_quant_tri_check.py)
-    "exact_quantiles" ->
-      """WITH v AS (SELECT length(text)::BIGINT AS v, count(*)::BIGINT AS n FROM documents GROUP BY 1),
-        |c AS (SELECT v, sum(n) OVER (ORDER BY v) AS cumn FROM v),
-        |t AS (SELECT sum(n)::BIGINT AS total FROM v),
-        |q AS (SELECT unnest([2500,5000,7500,9000,9900])::BIGINT AS q_bp),
-        |r AS (SELECT q_bp, (q_bp*total + 9999)//10000 AS rnk FROM q, t)
-        |SELECT q_bp, CAST(rnk AS BIGINT) AS rnk, CAST(min(c.v) AS BIGINT) AS value
-        |FROM r JOIN c ON c.cumn >= r.rnk GROUP BY 1, 2 ORDER BY q_bp""".stripMargin,
-    // priority_sample: the same FNV CTE supplies the u32 variate; the sample
-    // is recomputed bit-for-bit ((u32 << 16) // w keys, top-25 per host,
-    // doc_id tiebreak) — Python-validated 175/175 vs an independent recompute
-    "priority_sample" -> ("WITH " + FnvCte("psamp") +
-      """,
-        |p AS (SELECT k.doc_id, k.host, CAST(length(d.text) AS BIGINT) + 1 AS w,
-        |        CAST((k.h % (1::HUGEINT << 32))::BIGINT * 65536
-        |             // (CAST(length(d.text) AS BIGINT) + 1) AS BIGINT) AS priority
-        |      FROM k JOIN documents d USING (doc_id)),
-        |r AS (SELECT *, row_number() OVER (PARTITION BY host ORDER BY priority, doc_id) AS rn
-        |      FROM p)
-        |SELECT host, doc_id, w, priority, CAST(rn AS BIGINT) AS rnk
-        |FROM r WHERE rn <= 25 ORDER BY host, rnk""").stripMargin,
-    // stratified_sample: full apportionment replay — (lang x length-bucket)
-    // strata, Hamilton largest-remainder quotas (integer div/mod, remainder
-    // ties by stratum key), within-stratum smallest salted-FNV u32 variates.
-    // Validated against an independent Python recompute
-    // (tools/stratified_oracle_check.py: 100/100 selected rows identical).
-    "stratified_sample" -> ("WITH " + FnvCte("strat") +
-      """,
-        |ks AS (SELECT k.doc_id,
-        |              d.lang || '|' || least(length(d.text)//256, 3) AS stratum,
-        |              (k.h % (1::HUGEINT << 32)) AS priority
-        |       FROM k JOIN documents d USING (doc_id)),
-        |c AS (SELECT stratum, count(*)::BIGINT AS n_stratum FROM ks GROUP BY stratum),
-        |q AS (SELECT stratum, n_stratum,
-        |             (100*n_stratum)//(sum(n_stratum) OVER ()) AS base,
-        |             (100*n_stratum)%(sum(n_stratum) OVER ()) AS rem
-        |      FROM c),
-        |q2 AS (SELECT stratum, n_stratum, base, rem,
-        |              100 - sum(base) OVER () AS leftover,
-        |              row_number() OVER (ORDER BY rem DESC, stratum) AS seat_rank
-        |       FROM q),
-        |q3 AS (SELECT stratum, n_stratum,
-        |              least(base + CASE WHEN seat_rank <= leftover THEN 1 ELSE 0 END, n_stratum) AS quota
-        |       FROM q2),
-        |r AS (SELECT doc_id, stratum,
-        |             row_number() OVER (PARTITION BY stratum ORDER BY priority, doc_id) AS rnk
-        |      FROM ks)
-        |SELECT r.doc_id, r.stratum, CAST(r.rnk AS BIGINT) AS rnk,
-        |       CAST(q3.quota AS BIGINT) AS quota, q3.n_stratum
-        |FROM r JOIN q3 USING (stratum) WHERE r.rnk <= q3.quota""").stripMargin,
-    // image_phash_dedup: the oracle rebuilds every pixel arithmetically
-    // (generator + clamped brightness plant), the 8x8 pixel-center sample,
-    // the strict x64 mean-threshold aHash, the Manku keys (same spec table
-    // as stream_simhash_candidates) and the hamming verify — the engine
-    // must arrive at the same bits THROUGH the real PNG encode/decode.
-    "image_phash_dedup" ->
-      ("""WITH base AS (SELECT doc_id FROM documents),
-        |imgs AS (SELECT doc_id AS img_id, doc_id AS d, 0 AS shift FROM base
-        |         UNION ALL
-        |         SELECT doc_id + 1000000, doc_id, 4 FROM base),
-        |smp AS (SELECT img_id,
-        |               [ least((( (d*31)%256 + 7*(((2*(b%8)+1)*(8+d%16))//16)
-        |                         + 13*(((2*(b//8)+1)*(8+d%11))//16) ) % 256) + shift, 255)
-        |                 for b in range(0, 64) ] AS px
-        |        FROM imgs),
-        |ah AS (SELECT img_id,
-        |              sum(CASE WHEN px[b+1]*64 > list_sum(px) THEN (1::HUGEINT << b) ELSE 0::HUGEINT END) AS v
-        |       FROM smp, range(64) r(b) GROUP BY img_id, px),
-        |spec(t, o0, w0, o1, w1, o2, w2) AS (VALUES """ + SimKeySpecSql + """),
-        |keys AS (SELECT img_id, v,
-        |                CAST(t * (1::HUGEINT << 34)
-        |                   + ((v // (1::HUGEINT << o0)) % (1::HUGEINT << w0)) * 4194304
-        |                   + ((v // (1::HUGEINT << o1)) % (1::HUGEINT << w1)) * 2048
-        |                   + ((v // (1::HUGEINT << o2)) % (1::HUGEINT << w2)) AS BIGINT) AS key
-        |         FROM ah, spec),
-        |cand AS (SELECT DISTINCT x.img_id AS a, y.img_id AS b, x.v AS va, y.v AS vb
-        |         FROM keys x JOIN keys y USING (key) WHERE x.img_id < y.img_id)
-        |SELECT a, b, CAST(bit_count(xor(
-        |         CAST(va - CASE WHEN va >= (1::HUGEINT << 63) THEN (1::HUGEINT << 64) ELSE 0::HUGEINT END AS BIGINT),
-        |         CAST(vb - CASE WHEN vb >= (1::HUGEINT << 63) THEN (1::HUGEINT << 64) ELSE 0::HUGEINT END AS BIGINT)))
-        |       AS BIGINT) AS hamming
-        |FROM cand
-        |WHERE bit_count(xor(
-        |         CAST(va - CASE WHEN va >= (1::HUGEINT << 63) THEN (1::HUGEINT << 64) ELSE 0::HUGEINT END AS BIGINT),
-        |         CAST(vb - CASE WHEN vb >= (1::HUGEINT << 63) THEN (1::HUGEINT << 64) ELSE 0::HUGEINT END AS BIGINT))) <= 3""").stripMargin,
-    // audio_phash_dedup: regrow samples (+ sign-flip twins), recompute the
-    // 65-window energy-delta fingerprint, the Manku key CTE (same spec
-    // literal as image_phash_dedup), and exact hamming. Python-validated
-    // 552/552 at sf0.01 against a key-free all-pairs recompute (500 twin
-    // pairs at hamming 0 + 52 cross-doc collisions) — tools/
-    // audio_oracle_check.py.
-    "audio_phash_dedup" ->
-      ("""WITH base AS (SELECT doc_id FROM documents),
-        |clips AS (SELECT doc_id AS clip_id, doc_id AS d, 0 AS flip FROM base
-        |          UNION ALL SELECT doc_id + 1000000, doc_id, 1 FROM base),
-        |s AS (SELECT clip_id, CAST(64 + d%64 AS BIGINT) AS n,
-        |        [ CASE WHEN flip = 1 AND ((d*7919 + 2663*i) % 65536) - 32768 != -32768
-        |               THEN -(((d*7919 + 2663*i) % 65536) - 32768)
-        |               ELSE ((d*7919 + 2663*i) % 65536) - 32768 END
-        |          for i in range(0, 64 + d%64) ] AS sm
-        |      FROM clips),
-        |es AS (SELECT clip_id,
-        |        [ coalesce(list_sum(list_transform(sm[(b*n//65)+1 : ((b+1)*n//65)], v -> v*v)), 0)
-        |          for b in range(0, 65) ] AS e
-        |       FROM s),
-        |ah AS (SELECT clip_id,
-        |              sum(CASE WHEN e[b+2] > e[b+1] THEN (1::HUGEINT << b) ELSE 0::HUGEINT END) AS v
-        |       FROM es, range(64) r(b) GROUP BY clip_id, e),
-        |spec(t, o0, w0, o1, w1, o2, w2) AS (VALUES """ + SimKeySpecSql + """),
-        |keys AS (SELECT clip_id, v,
-        |                CAST(t * (1::HUGEINT << 34)
-        |                   + ((v // (1::HUGEINT << o0)) % (1::HUGEINT << w0)) * 4194304
-        |                   + ((v // (1::HUGEINT << o1)) % (1::HUGEINT << w1)) * 2048
-        |                   + ((v // (1::HUGEINT << o2)) % (1::HUGEINT << w2)) AS BIGINT) AS key
-        |         FROM ah, spec),
-        |cand AS (SELECT DISTINCT x.clip_id AS a, y.clip_id AS b, x.v AS va, y.v AS vb
-        |         FROM keys x JOIN keys y USING (key) WHERE x.clip_id < y.clip_id)
-        |SELECT a, b, CAST(bit_count(xor(
-        |         CAST(va - CASE WHEN va >= (1::HUGEINT << 63) THEN (1::HUGEINT << 64) ELSE 0::HUGEINT END AS BIGINT),
-        |         CAST(vb - CASE WHEN vb >= (1::HUGEINT << 63) THEN (1::HUGEINT << 64) ELSE 0::HUGEINT END AS BIGINT)))
-        |       AS BIGINT) AS hamming
-        |FROM cand
-        |WHERE bit_count(xor(
-        |         CAST(va - CASE WHEN va >= (1::HUGEINT << 63) THEN (1::HUGEINT << 64) ELSE 0::HUGEINT END AS BIGINT),
-        |         CAST(vb - CASE WHEN vb >= (1::HUGEINT << 63) THEN (1::HUGEINT << 64) ELSE 0::HUGEINT END AS BIGINT))) <= 3
-        |ORDER BY a, b""").stripMargin,
-    "audio_features" ->
-      """WITH d AS (SELECT doc_id, CAST(64 + doc_id%64 AS BIGINT) AS n FROM documents),
-        |     s AS (SELECT doc_id, n,
-        |                  [ CAST(((doc_id*7919 + 2663*i) % 65536) - 32768 AS BIGINT) for i in range(0, n) ] AS sm
-        |           FROM d)
-        |SELECT doc_id, CAST(8000 AS INT) AS sample_rate, CAST(n AS BIGINT) AS n_samples,
-        |       CAST(list_sum(list_transform(sm, v -> v*v)) AS BIGINT) AS sum_sq,
-        |       CAST(list_max(list_transform(sm, v -> abs(v))) AS BIGINT) AS peak,
-        |       CAST(len(list_filter(range(1, CAST(n AS BIGINT)), i -> (sm[i+1] >= 0) != (sm[i] >= 0))) AS BIGINT) AS zero_crossings
-        |FROM s""".stripMargin,
-    // resized pixel (x, y) samples source (((2x+1)*w)//(2*ow), ((2y+1)*h)//(2*oh))
-    // — Java2D's nearest-neighbor pixel-center rule, pinned by ScalaTest
-    // (MultimodalPixelSpec) so a JDK rendering change is caught locally
-    "multimodal_resize" ->
-      """WITH d AS (SELECT doc_id, CAST(8 + doc_id%16 AS INT) AS width, CAST(8 + doc_id%11 AS INT) AS height,
-        |                  (doc_id*31)%256 AS a FROM documents),
-        |     r AS (SELECT doc_id, a, width, height, width//2 AS ow, height//2 AS oh FROM d),
-        |     p AS (SELECT doc_id, ow, oh,
-        |                  [ CAST((a + 7*(((2*(i%ow)+1)*width)//(2*ow)) + 13*(((2*(i//ow)+1)*height)//(2*oh))) % 256 AS BIGINT)
-        |                    for i in range(0, ow*oh) ] AS px
-        |           FROM r)
-        |SELECT doc_id, 'png' AS kind, CAST(ow AS INT) AS width, CAST(oh AS INT) AS height,
-        |       CAST(list_sum(px) AS BIGINT) AS px_sum,
-        |       CAST(list_min(px) AS INT) AS px_min,
-        |       CAST(list_max(px) AS INT) AS px_max,
-        |       CAST(len(list_filter(px, g -> g < 128)) AS BIGINT) AS n_dark
-        |FROM p""".stripMargin,
-    "url_normalize" ->
-      """SELECT doc_id,
-        |  (CASE WHEN doc_id%2=0 THEN 'http' ELSE 'https' END)||'://site'||(doc_id%7)||'.example.com/Path/p'||(doc_id%11)||
-        |  (CASE WHEN doc_id%5 IN (0,1) THEN '?q='||(doc_id%13) ELSE '' END) AS url_norm,
-        |  'site'||(doc_id%7)||'.example.com' AS host
-        |FROM documents""".stripMargin,
-    "url_normalize_sql_expr" ->
-      """SELECT doc_id,
-        |  (CASE WHEN doc_id%2=0 THEN 'http' ELSE 'https' END)||'://site'||(doc_id%7)||'.example.com/Path/p'||(doc_id%11)||
-        |  (CASE WHEN doc_id%5 IN (0,1) THEN '?q='||(doc_id%13) ELSE '' END) AS url_norm,
-        |  'site'||(doc_id%7)||'.example.com' AS host
-        |FROM documents""".stripMargin,
-    // host_prefix_trim: the oracle reproduces the min/max LCP identity;
-    // prefix-match is monotone in k so counting matching prefixes IS the
-    // LCP (list comprehension — generate_series can't take lateral args)
-    "host_prefix_trim" ->
-      """WITH c AS (SELECT doc_id, 'site' || (doc_id%7) || '.example.com' AS host,
-        |                  CASE WHEN doc_id%7 < 4
-        |                       THEN 'WELCOME TO SITE' || (doc_id%7) || ' NAV HOME | ' || text
-        |                       ELSE text END AS text
-        |           FROM documents),
-        |mm AS (SELECT host, min(text) AS mn, max(text) AS mx FROM c GROUP BY host),
-        |l AS (SELECT host,
-        |             len(list_filter([substring(mn, 1, k) = substring(mx, 1, k)
-        |                              for k in range(1, least(length(mn), length(mx)) + 1)],
-        |                             x -> x)) AS lcp
-        |      FROM mm)
-        |SELECT c.doc_id, c.host, CAST(l.lcp AS BIGINT) AS lcp_len,
-        |       substring(c.text, l.lcp + 1) AS trimmed
-        |FROM c JOIN l USING (host)""".stripMargin,
-    // mirror_hosts: content-SET fingerprint (bit_xor over distinct FNV
-    // hashes, signed-BIGINT view of the unsigned HUGEINT fold) recomputed in
-    // full; planted mirror pairs, planted partial mirror stays unmatched
-    "mirror_hosts" ->
-      """WITH base AS (SELECT doc_id, 'site' || (doc_id % 7) || '.example.com' AS host, text
-        |              FROM documents),
-        |pl AS (SELECT host, text FROM base
-        |       UNION ALL
-        |       SELECT 'mirror3.example.com', text FROM base WHERE doc_id % 7 = 3
-        |       UNION ALL
-        |       SELECT 'partial5.example.com', text FROM base WHERE doc_id % 7 = 5 AND doc_id % 35 != 5),
-        |fnv AS (SELECT host, list_reduce(
-        |           list_prepend(14695981039346656037::HUGEINT,
-        |                        [unicode(ch)::HUGEINT for ch in string_split(text, '')]),
-        |           (h, x) -> ((h - h % 256 + xor((h % 256)::BIGINT, x::BIGINT)::HUGEINT)
-        |                      * 1099511628211::HUGEINT) % (1::HUGEINT << 64)) AS hu
-        |        FROM pl),
-        |th AS (SELECT DISTINCT host,
-        |              CAST(hu - CASE WHEN hu >= (1::HUGEINT << 63)
-        |                             THEN (1::HUGEINT << 64) ELSE 0::HUGEINT END AS BIGINT) AS h
-        |       FROM fnv),
-        |fp AS (SELECT host, bit_xor(h) AS fp, CAST(count(*) AS BIGINT) AS n_docs FROM th GROUP BY host),
-        |m AS (SELECT a.host, min(b.host) AS partner
-        |      FROM fp a JOIN fp b ON a.fp = b.fp AND a.n_docs = b.n_docs AND a.host != b.host
-        |      GROUP BY a.host)
-        |SELECT fp.host, fp.fp, fp.n_docs, COALESCE(m.partner, '') AS mirror_of
-        |FROM fp LEFT JOIN m USING (host)""".stripMargin,
-    "host_stats" ->
-      """SELECT 'site'||(doc_id%7)||'.example.com' AS host,
-        |       count(*) AS n_docs, CAST(sum(length(text)) AS BIGINT) AS total_chars
-        |FROM documents GROUP BY 1""".stripMargin,
-    // registered_domain: the oracle recomputes the eTLD+1 CASE-by-CASE from
-    // doc_id arithmetic (geometry-family pattern — the engine runs the
-    // generic longest-suffix matcher, the oracle pins each fixture branch's
-    // expected result); Python-validated 500/500 vs an independent PSL
-    // recompute at sf0.01.
-    "registered_domain" ->
-      """WITH h AS (SELECT doc_id,
-        |  CASE doc_id%10
-        |    WHEN 0 THEN 'www.news' || (doc_id%5) || '.co.uk'
-        |    WHEN 1 THEN 'blog' || (doc_id%7) || '.github.io'
-        |    WHEN 2 THEN 'site' || (doc_id%7) || '.example.com'
-        |    WHEN 3 THEN CASE WHEN doc_id%9=0 THEN 'co.uk' ELSE 'media.corp' || (doc_id%3) || '.com.au' END
-        |    WHEN 4 THEN 'a.b.deep' || (doc_id%4) || '.org'
-        |    WHEN 5 THEN 'cdn' || (doc_id%6) || '.net'
-        |    WHEN 6 THEN 'shop' || (doc_id%5) || '.co.jp'
-        |    WHEN 7 THEN '192.168.' || (doc_id%4) || '.10'
-        |    WHEN 8 THEN 'intranet.example.zz'
-        |    ELSE 'localhost' END AS host FROM documents)
-        |SELECT doc_id, host,
-        |  CASE doc_id%10
-        |    WHEN 0 THEN 'co.uk' WHEN 1 THEN 'github.io' WHEN 2 THEN 'com'
-        |    WHEN 3 THEN CASE WHEN doc_id%9=0 THEN 'co.uk' ELSE 'com.au' END
-        |    WHEN 4 THEN 'org' WHEN 5 THEN 'net' WHEN 6 THEN 'co.jp'
-        |    WHEN 7 THEN '' WHEN 8 THEN 'zz' ELSE '' END AS suffix,
-        |  CASE doc_id%10
-        |    WHEN 0 THEN 'news' || (doc_id%5) || '.co.uk'
-        |    WHEN 1 THEN 'blog' || (doc_id%7) || '.github.io'
-        |    WHEN 2 THEN 'example.com'
-        |    WHEN 3 THEN CASE WHEN doc_id%9=0 THEN '' ELSE 'corp' || (doc_id%3) || '.com.au' END
-        |    WHEN 4 THEN 'deep' || (doc_id%4) || '.org'
-        |    WHEN 5 THEN 'cdn' || (doc_id%6) || '.net'
-        |    WHEN 6 THEN 'shop' || (doc_id%5) || '.co.jp'
-        |    WHEN 7 THEN '192.168.' || (doc_id%4) || '.10'
-        |    WHEN 8 THEN 'example.zz'
-        |    ELSE 'localhost' END AS registered_domain
-        |FROM h ORDER BY doc_id""".stripMargin,
-    "decontaminate" ->
-      """WITH w AS (SELECT doc_id, string_split(text,' ') AS ws FROM documents),
-        |     g AS (SELECT doc_id, CASE WHEN len(ws) >= 13
-        |                  THEN [array_to_string(ws[i:i+12],' ') for i in range(1, len(ws)-11)]
-        |                  ELSE [] END AS grams FROM w),
-        |     bench AS (SELECT DISTINCT grams[1] AS gram FROM g WHERE doc_id%41=0 AND len(grams)>0),
-        |     x AS (SELECT doc_id, unnest(grams) AS gram FROM g),
-        |     m AS (SELECT x.doc_id, count(*) AS nc FROM x JOIN bench USING (gram) GROUP BY x.doc_id)
-        |SELECT g.doc_id, CAST(len(g.grams) AS BIGINT) AS n_grams,
-        |       CAST(coalesce(m.nc, 0) AS BIGINT) AS n_contaminated,
-        |       coalesce(m.nc, 0) > 0 AS contaminated
-        |FROM g LEFT JOIN m ON g.doc_id = m.doc_id""".stripMargin,
-    // stream_decontaminate: stateless stream-static twin — same answer as
-    // the batch decontaminate by construction, same oracle SQL
-    "stream_decontaminate" ->
-      """WITH w AS (SELECT doc_id, string_split(text,' ') AS ws FROM documents),
-        |     g AS (SELECT doc_id, CASE WHEN len(ws) >= 13
-        |                  THEN [array_to_string(ws[i:i+12],' ') for i in range(1, len(ws)-11)]
-        |                  ELSE [] END AS grams FROM w),
-        |     bench AS (SELECT DISTINCT grams[1] AS gram FROM g WHERE doc_id%41=0 AND len(grams)>0),
-        |     x AS (SELECT doc_id, unnest(grams) AS gram FROM g),
-        |     m AS (SELECT x.doc_id, count(*) AS nc FROM x JOIN bench USING (gram) GROUP BY x.doc_id)
-        |SELECT g.doc_id, CAST(len(g.grams) AS BIGINT) AS n_grams,
-        |       CAST(coalesce(m.nc, 0) AS BIGINT) AS n_contaminated,
-        |       coalesce(m.nc, 0) > 0 AS contaminated
-        |FROM g LEFT JOIN m ON g.doc_id = m.doc_id ORDER BY g.doc_id""".stripMargin,
-    // decontaminate_neardup: replant the near-copies, recompute word-bigram
-    // shingle sets (the inclusive-slice w[i:i+1] = 2 words) and the 4/5
-    // rational Jaccard over the full corpus x eval cross (tiny eval side).
-    // Python-validated 500/500 at sf0.01 (tools/nddecon_oracle_check.py:
-    // 82 contaminated = planted %7==6 near-copies + eval selves).
-    "decontaminate_neardup" ->
-      """WITH ev0 AS (SELECT doc_id AS eid, text FROM documents WHERE doc_id%41=0),
-        |pl AS (SELECT d.doc_id,
-        |         CASE WHEN d.doc_id%7=6 AND e.text IS NOT NULL
-        |              THEN substring(e.text, instr(e.text,' ')+1) ELSE d.text END AS text
-        |       FROM documents d LEFT JOIN ev0 e ON e.eid = (d.doc_id%2)*41),
-        |cw AS (SELECT doc_id, string_split(text,' ') AS w FROM pl),
-        |cs AS (SELECT doc_id, CASE WHEN len(w) < 3 THEN [array_to_string(w,' ')]
-        |            ELSE list_distinct([array_to_string(w[i:i+1],' ') for i in range(1, len(w))]) END AS s FROM cw),
-        |ew AS (SELECT eid, string_split(text,' ') AS w FROM ev0),
-        |es AS (SELECT eid, CASE WHEN len(w) < 3 THEN [array_to_string(w,' ')]
-        |            ELSE list_distinct([array_to_string(w[i:i+1],' ') for i in range(1, len(w))]) END AS s FROM ew),
-        |pairs AS (SELECT c.doc_id, e.eid, len(list_intersect(c.s, e.s)) AS inter,
-        |                 len(c.s) + len(e.s) - len(list_intersect(c.s, e.s)) AS un
-        |          FROM cs c CROSS JOIN es e),
-        |q AS (SELECT doc_id, eid FROM pairs WHERE inter*5 >= un*4)
-        |SELECT c.doc_id, CAST(count(q.eid) AS BIGINT) AS n_eval_matches,
-        |       CAST(coalesce(min(q.eid), -1) AS BIGINT) AS eval_doc_id,
-        |       count(q.eid) > 0 AS contaminated
-        |FROM cs c LEFT JOIN q ON q.doc_id = c.doc_id
-        |GROUP BY c.doc_id ORDER BY c.doc_id""".stripMargin,
-    // decontaminate_fold: replant the mangled leaks (upper + comma-join),
-    // fold both sides (lower, strip non-alnum, collapse spaces), then the
-    // decontaminate CTEs. Python-validated 500/500 at sf0.01
-    // (tools/fold_oracle_check.py: 82 flagged incl. the mangled class).
-    "decontaminate_fold" ->
-      """WITH w0 AS (SELECT doc_id, string_split(text,' ') AS ws FROM documents),
-        |bench0 AS (SELECT doc_id AS bid, array_to_string(ws[1:13], ', ') AS mangled
-        |           FROM w0 WHERE doc_id%41=0 AND len(ws)>=13),
-        |pl AS (SELECT d.doc_id,
-        |         CASE WHEN d.doc_id%7=5 AND b.mangled IS NOT NULL
-        |              THEN d.text || ' ' || upper(b.mangled) ELSE d.text END AS text
-        |       FROM documents d LEFT JOIN bench0 b ON b.bid = (d.doc_id%2)*41),
-        |f AS (SELECT doc_id,
-        |        trim(regexp_replace(regexp_replace(lower(text), '[^a-z0-9 ]', '', 'g'), ' +', ' ', 'g')) AS text
-        |      FROM pl),
-        |fe AS (SELECT doc_id,
-        |        trim(regexp_replace(regexp_replace(lower(text), '[^a-z0-9 ]', '', 'g'), ' +', ' ', 'g')) AS text
-        |      FROM documents WHERE doc_id%41=0),
-        |w AS (SELECT doc_id, string_split(text,' ') AS ws FROM f),
-        |g AS (SELECT doc_id, CASE WHEN len(ws) >= 13
-        |             THEN [array_to_string(ws[i:i+12],' ') for i in range(1, len(ws)-11)]
-        |             ELSE [] END AS grams FROM w),
-        |we AS (SELECT doc_id, string_split(text,' ') AS ws FROM fe),
-        |bench AS (SELECT DISTINCT array_to_string(ws[1:13],' ') AS gram FROM we WHERE len(ws)>=13),
-        |x AS (SELECT doc_id, unnest(grams) AS gram FROM g),
-        |m AS (SELECT x.doc_id, count(*) AS nc FROM x JOIN bench USING (gram) GROUP BY x.doc_id)
-        |SELECT g.doc_id, CAST(len(g.grams) AS BIGINT) AS n_grams,
-        |       CAST(coalesce(m.nc, 0) AS BIGINT) AS n_contaminated,
-        |       coalesce(m.nc, 0) > 0 AS contaminated
-        |FROM g LEFT JOIN m ON g.doc_id = m.doc_id ORDER BY g.doc_id""".stripMargin,
-    // eval_leak_report: replant the eval-head leaks (contamination_spans'
-    // CTE), flip the aggregation to per-eval-gram distinct-doc counts.
-    // Python-validated 13/13 at sf0.01 (tools/leak_oracle_check.py:
-    // 2 items leaked beyond self, max 37 hitting docs).
-    "eval_leak_report" ->
-      """WITH w0 AS (SELECT doc_id, string_split(text,' ') AS ws FROM documents),
-        |bench AS (SELECT doc_id AS bid, array_to_string(ws[1:13],' ') AS gram
-        |          FROM w0 WHERE doc_id%41=0 AND len(ws)>=13),
-        |pl AS (SELECT d.doc_id,
-        |         CASE WHEN d.doc_id%7=3 AND b.gram IS NOT NULL
-        |              THEN d.text || ' ' || b.gram ELSE d.text END AS text
-        |       FROM documents d LEFT JOIN bench b ON b.bid = (d.doc_id%2)*41),
-        |w AS (SELECT doc_id, string_split(text,' ') AS ws FROM pl),
-        |g AS (SELECT doc_id, CASE WHEN len(ws) >= 13
-        |             THEN [array_to_string(ws[i:i+12],' ') for i in range(1, len(ws)-11)]
-        |             ELSE [] END AS grams FROM w),
-        |ev AS (SELECT bid AS eval_doc_id, gram FROM bench),
-        |x AS (SELECT doc_id, unnest(grams) AS gram FROM g),
-        |hits AS (SELECT DISTINCT x.gram, x.doc_id FROM x JOIN (SELECT DISTINCT gram FROM ev) b USING (gram)),
-        |agg AS (SELECT gram, CAST(count(*) AS BIGINT) AS n_docs_hit,
-        |        CAST(min(doc_id) AS BIGINT) AS min_hit_doc FROM hits GROUP BY gram)
-        |SELECT ev.eval_doc_id, ev.gram, agg.n_docs_hit, agg.min_hit_doc,
-        |       agg.n_docs_hit > 1 AS leaked_beyond_self
-        |FROM ev JOIN agg USING (gram) ORDER BY ev.eval_doc_id""".stripMargin,
-    // contamination_spans: full recompute — planted eval-head leak, matched
-    // gram positions, gaps-and-islands merge (lag + running sum), char
-    // offsets via list_sum prefix arithmetic. The engine matches on exact
-    // gram STRINGS (broadcast eval set), so the oracle is exact too.
-    // Python-validated 0/84 (73 planted cross-doc rows) before wiring.
-    "contamination_spans" ->
-      """WITH w0 AS (SELECT doc_id, string_split(text,' ') AS ws FROM documents),
-        |bench AS (SELECT doc_id AS bid, array_to_string(ws[1:13],' ') AS gram
-        |          FROM w0 WHERE doc_id%41=0 AND len(ws)>=13),
-        |pl AS (SELECT d.doc_id,
-        |         CASE WHEN d.doc_id%7=3 AND b.gram IS NOT NULL
-        |              THEN d.text || ' ' || b.gram ELSE d.text END AS text
-        |       FROM documents d LEFT JOIN bench b ON b.bid = (d.doc_id%2)*41),
-        |w AS (SELECT doc_id, string_split(text,' ') AS ws FROM pl),
-        |g0 AS (SELECT doc_id, ws, len(ws) AS nw FROM w),
-        |g AS (SELECT doc_id, ws, unnest(CASE WHEN nw >= 13
-        |        THEN [{'pos': i-1, 'gram': array_to_string(ws[i:i+12],' ')} for i in range(1, nw-11)]
-        |        ELSE [] END, recursive := true) FROM g0),
-        |bset AS (SELECT DISTINCT gram FROM bench),
-        |m AS (SELECT g.doc_id, g.ws, g.pos FROM g JOIN bset USING (gram)),
-        |lg AS (SELECT doc_id, ws, pos,
-        |         lag(pos) OVER (PARTITION BY doc_id ORDER BY pos) AS prev
-        |       FROM m),
-        |isl AS (SELECT doc_id, ws, pos,
-        |         sum(CASE WHEN prev IS NULL OR pos - prev > 13 THEN 1 ELSE 0 END)
-        |           OVER (PARTITION BY doc_id ORDER BY pos) AS isle
-        |       FROM lg),
-        |sp AS (SELECT doc_id, any_value(ws) AS ws, isle, min(pos) AS a, max(pos) + 13 AS b, count(*) AS ng
-        |       FROM isl GROUP BY doc_id, isle)
-        |SELECT doc_id, CAST(isle - 1 AS BIGINT) AS span_idx,
-        |  CAST(a AS BIGINT) AS start_word, CAST(b AS BIGINT) AS end_word,
-        |  CAST(CASE WHEN a=0 THEN 0 ELSE list_sum([length(x) for x in ws[1:a]]) + a END AS BIGINT) AS start_char,
-        |  CAST(list_sum([length(x) for x in ws[1:b]]) + b - 1 AS BIGINT) AS end_char,
-        |  CAST(ng AS BIGINT) AS n_grams
-        |FROM sp""".stripMargin,
-    // the bloom variant's oracle is the EXACT overlap under the bloom's
-    // column names: deterministic sketch layout + verified-FP-free corpus
-    // make the approximate result bit-for-bit recomputable (the same move
-    // the LSH/IVF oracles use, CLAUDE.md "approximate ops" rule)
-    "decontaminate_bloom" ->
-      """WITH w AS (SELECT doc_id, string_split(text,' ') AS ws FROM documents),
-        |     g AS (SELECT doc_id, CASE WHEN len(ws) >= 13
-        |                  THEN [array_to_string(ws[i:i+12],' ') for i in range(1, len(ws)-11)]
-        |                  ELSE [] END AS grams FROM w),
-        |     bench AS (SELECT DISTINCT grams[1] AS gram FROM g WHERE doc_id%41=0 AND len(grams)>0),
-        |     x AS (SELECT doc_id, unnest(grams) AS gram FROM g),
-        |     m AS (SELECT x.doc_id, count(*) AS nc FROM x JOIN bench USING (gram) GROUP BY x.doc_id)
-        |SELECT g.doc_id, CAST(len(g.grams) AS BIGINT) AS n_grams,
-        |       CAST(coalesce(m.nc, 0) AS BIGINT) AS n_flagged,
-        |       coalesce(m.nc, 0) > 0 AS flagged
-        |FROM g LEFT JOIN m ON g.doc_id = m.doc_id""".stripMargin,
-    // the payload headers are spec-conformant, so the decoded dimensions are
-    // the generator's arithmetic — the oracle recomputes them directly
-    "multimodal_dims" ->
-      """SELECT doc_id,
-        |       CASE doc_id%3 WHEN 0 THEN 'png' WHEN 1 THEN 'jpeg' ELSE 'gif' END AS format,
-        |       CAST(16 + doc_id%97 AS INT) AS width,
-        |       CAST(16 + doc_id%53 AS INT) AS height
-        |FROM documents""".stripMargin,
-    // template_strip: within-host document-frequency ratio (>= 10% of the
-    // host's docs -> template). The banner (100%) vanishes, the syndicated
-    // promo (4% per host) survives — the host-grain semantics line_dedup's
-    // corpus threshold cannot express. Same 8-word chunk grain as line_dedup.
-    "template_strip" ->
-      """WITH p AS (
-        |  SELECT doc_id, doc_id % 7 AS h,
-        |         'welcome to site' || (doc_id % 7) || ' official portal navigation bar menu '
-        |         || CASE WHEN doc_id % 25 = 0 THEN 'shared promo line appears rarely across hosts here ' ELSE '' END
-        |         || text AS text
-        |  FROM documents),
-        |w AS (SELECT doc_id, h, string_split(text, ' ') AS ws FROM p),
-        |c AS (SELECT doc_id, h, i, array_to_string(ws[(i-1)*8+1:(i-1)*8+8], ' ') AS line
-        |      FROM w, UNNEST(generate_series(1, CAST(ceil(len(ws)/8.0) AS BIGINT))) t(i)),
-        |hd AS (SELECT h, count(DISTINCT doc_id) AS nd FROM c GROUP BY h),
-        |f AS (SELECT h, line, count(DISTINCT doc_id) AS n FROM c GROUP BY h, line),
-        |k AS (SELECT c.doc_id, c.i, c.line FROM c JOIN f USING (h, line) JOIN hd USING (h)
-        |      WHERE f.n * 10 < hd.nd),
-        |r AS (SELECT doc_id, string_agg(line, ' ' ORDER BY i) AS clean_text FROM k GROUP BY doc_id)
-        |SELECT d.doc_id, coalesce(r.clean_text, '') AS clean_text
-        |FROM documents d LEFT JOIN r ON d.doc_id = r.doc_id""".stripMargin,
-    // snapshot_asof: the oracle recomputes the as-of with the same
-    // union + running last_value(IGNORE NULLS) window — snapshots sort before
-    // events at equal t (is_event 0 < 1) for inclusive <= semantics; epochs
-    // via floor(epoch(ts)) = TimeCols.ntzEpochSeconds (TZ-free)
-    "snapshot_asof" ->
-      """WITH n AS (SELECT count(*) AS nd FROM documents),
-        |s AS (SELECT doc_id AS k, 1704067200 + v*864000 + (doc_id % 97)*3600 AS t,
-        |             v AS version, 0 AS is_event, CAST(NULL AS BIGINT) AS event_id
-        |      FROM documents, UNNEST(generate_series(0, doc_id % 3)) tt(v)),
-        |e AS (SELECT event_id % (SELECT nd FROM n) AS k, CAST(floor(epoch(ts)) AS BIGINT) AS t,
-        |             CAST(NULL AS BIGINT) AS version, 1 AS is_event, event_id
-        |      FROM events),
-        |u AS (SELECT * FROM s UNION ALL BY NAME SELECT * FROM e),
-        |m AS (SELECT k, t, is_event, event_id,
-        |             last_value(version IGNORE NULLS) OVER
-        |               (PARTITION BY k ORDER BY t, is_event
-        |                ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS mv,
-        |             last_value(CASE WHEN is_event = 0 THEN t END IGNORE NULLS) OVER
-        |               (PARTITION BY k ORDER BY t, is_event
-        |                ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS mt
-        |      FROM u)
-        |SELECT event_id, k AS doc_key,
-        |       coalesce(mv, -1) AS version,
-        |       CASE WHEN mv IS NULL THEN -1 ELSE t - mt END AS age_s
-        |FROM m WHERE is_event = 1""".stripMargin,
-    // asof_join_exec: SAME semantics as snapshot_asof through the physical
-    // operator — the oracle is deliberately the identical window recompute
-    // (the fixture has no equal-(k,t) snapshot ties, so the exec's
-    // highest-version tie rule and the window's running-last agree)
-    // stream_snapshot_asof: identical semantics and oracle as the batch
-    // as-of family (the streaming path is stateless, so equality is exact)
-    "stream_snapshot_asof" ->
-      """WITH n AS (SELECT count(*) AS nd FROM documents),
-        |s AS (SELECT doc_id AS k, 1704067200 + v*864000 + (doc_id % 97)*3600 AS t,
-        |             v AS version, 0 AS is_event, CAST(NULL AS BIGINT) AS event_id
-        |      FROM documents, UNNEST(generate_series(0, doc_id % 3)) tt(v)),
-        |e AS (SELECT event_id % (SELECT nd FROM n) AS k, CAST(floor(epoch(ts)) AS BIGINT) AS t,
-        |             CAST(NULL AS BIGINT) AS version, 1 AS is_event, event_id
-        |      FROM events),
-        |u AS (SELECT * FROM s UNION ALL BY NAME SELECT * FROM e),
-        |m AS (SELECT k, t, is_event, event_id,
-        |             last_value(version IGNORE NULLS) OVER
-        |               (PARTITION BY k ORDER BY t, is_event
-        |                ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS mv,
-        |             last_value(CASE WHEN is_event = 0 THEN t END IGNORE NULLS) OVER
-        |               (PARTITION BY k ORDER BY t, is_event
-        |                ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS mt
-        |      FROM u)
-        |SELECT event_id, k AS doc_key,
-        |       coalesce(mv, -1) AS version,
-        |       CASE WHEN mv IS NULL THEN -1 ELSE t - mt END AS age_s
-        |FROM m WHERE is_event = 1""".stripMargin,
-    "asof_join_exec" ->
-      """WITH n AS (SELECT count(*) AS nd FROM documents),
-        |s AS (SELECT doc_id AS k, 1704067200 + v*864000 + (doc_id % 97)*3600 AS t,
-        |             v AS version, 0 AS is_event, CAST(NULL AS BIGINT) AS event_id
-        |      FROM documents, UNNEST(generate_series(0, doc_id % 3)) tt(v)),
-        |e AS (SELECT event_id % (SELECT nd FROM n) AS k, CAST(floor(epoch(ts)) AS BIGINT) AS t,
-        |             CAST(NULL AS BIGINT) AS version, 1 AS is_event, event_id
-        |      FROM events),
-        |u AS (SELECT * FROM s UNION ALL BY NAME SELECT * FROM e),
-        |m AS (SELECT k, t, is_event, event_id,
-        |             last_value(version IGNORE NULLS) OVER
-        |               (PARTITION BY k ORDER BY t, is_event
-        |                ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS mv,
-        |             last_value(CASE WHEN is_event = 0 THEN t END IGNORE NULLS) OVER
-        |               (PARTITION BY k ORDER BY t, is_event
-        |                ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS mt
-        |      FROM u)
-        |SELECT event_id, k AS doc_key,
-        |       coalesce(mv, -1) AS version,
-        |       CASE WHEN mv IS NULL THEN -1 ELSE t - mt END AS age_s
-        |FROM m WHERE is_event = 1""".stripMargin,
-    // host_cap_sample: the 31-bit LCG order key is exact integer arithmetic
-    // on both sides (no 64-bit overflow for id domains < 2^33)
-    "host_cap_sample" ->
-      """WITH h AS (SELECT doc_id, 'site' || (doc_id % 7) || '.example.com' AS host,
-        |                  (doc_id * 1103515245 + 12345) % 2147483648 AS hv
-        |           FROM documents),
-        |r AS (SELECT doc_id, host, hv,
-        |             row_number() OVER (PARTITION BY host ORDER BY hv, doc_id) AS rk
-        |      FROM h)
-        |SELECT doc_id, host, hv, CAST(rk AS BIGINT) AS rk FROM r WHERE rk <= 50""".stripMargin,
-    // inverted_index: bigram phrase postings; the cap (first 20 docs by
-    // doc_id) and df>=2 floor are recomputed by window rank
-    "inverted_index" ->
-      """WITH w AS (SELECT doc_id, string_split(text, ' ') AS ws FROM documents),
-        |b AS (SELECT doc_id, ws[i] || ' ' || ws[i+1] AS term
-        |      FROM w, UNNEST(generate_series(1, len(ws)-1)) t(i)),
-        |tfp AS (SELECT term, doc_id, count(*) AS tf FROM b GROUP BY term, doc_id),
-        |rk AS (SELECT term, doc_id, tf,
-        |              row_number() OVER (PARTITION BY term ORDER BY doc_id) AS r,
-        |              count(*) OVER (PARTITION BY term) AS df,
-        |              sum(tf) OVER (PARTITION BY term) AS cf
-        |       FROM tfp)
-        |SELECT term, CAST(any_value(df) AS BIGINT) AS df, CAST(any_value(cf) AS BIGINT) AS cf,
-        |       string_agg(CASE WHEN r <= 20 THEN doc_id || ':' || tf END, ',' ORDER BY doc_id) AS postings
-        |FROM rk GROUP BY term HAVING any_value(df) >= 2""".stripMargin,
-    // containment_dedup: the oracle recomputes the ENTIRE approximate
-    // pipeline bit-for-bit — FNV-1a gram keys (63-bit masked, ASCII fold),
-    // bottom-6 sketch probed into the FULL gram index (the asymmetric
-    // candidate rule), ≤64-doc key cap, exact list_intersect verify.
-    // Python-validated 81/81 pairs at sf0.01, 87/87 at sf0.001, all 56
-    // planted quote pairs surfaced (tools/containment_check.py)
-    "containment_dedup" ->
-      """WITH base AS (SELECT doc_id, text FROM documents),
-        |p AS (SELECT b.doc_id,
-        |        CASE WHEN b.doc_id%9=2 AND pv.text IS NOT NULL THEN pv.text || ' ' || b.text ELSE b.text END AS text
-        |      FROM base b LEFT JOIN base pv ON pv.doc_id = b.doc_id - 1),
-        |w AS (SELECT doc_id, string_split(text,' ') AS ws FROM p),
-        |gt AS (SELECT doc_id, list_distinct([array_to_string(ws[i:i+4],' ') for i in range(1, len(ws)-3)]) AS grams
-        |       FROM w WHERE len(ws) >= 5),
-        |g AS (SELECT doc_id, list_sort(list_distinct(
-        |        [ (list_reduce(list_prepend(14695981039346656037::HUGEINT,
-        |             [unicode(c)::HUGEINT for c in string_split(x,'')]),
-        |             (h,b) -> ((h - h%128 + xor((h%128)::BIGINT, b::BIGINT)::HUGEINT) * 1099511628211::HUGEINT) % (1::HUGEINT<<64))
-        |            % (1::HUGEINT<<63))::BIGINT
-        |          for x in grams ])) AS gh
-        |      FROM gt),
-        |ge AS (SELECT doc_id, unnest(gh) AS s FROM g),
-        |sk AS (SELECT doc_id, unnest(gh[1:6]) AS s FROM g),
-        |ok AS (SELECT s FROM ge GROUP BY s HAVING count(*) <= 64),
-        |cand AS (SELECT DISTINCT least(x.doc_id, y.doc_id) AS a, greatest(x.doc_id, y.doc_id) AS b
-        |         FROM sk x JOIN ok USING (s) JOIN ge y ON x.s = y.s AND x.doc_id <> y.doc_id),
-        |v AS (SELECT c.a, c.b,
-        |        CAST(len(list_intersect(ga.gh, gb.gh)) AS BIGINT) AS inter,
-        |        CAST(len(ga.gh) AS BIGINT) AS na, CAST(len(gb.gh) AS BIGINT) AS nb
-        |      FROM cand c JOIN g ga ON ga.doc_id=c.a JOIN g gb ON gb.doc_id=c.b)
-        |SELECT a, b, inter, na, nb,
-        |       (inter*10000)//na AS cont_a, (inter*10000)//nb AS cont_b,
-        |       CAST(CASE WHEN inter*10 >= na*9 OR inter*10 >= nb*9 THEN 1 ELSE 0 END AS BIGINT) AS contained
-        |FROM v ORDER BY a, b""".stripMargin,
-    // bm25_topk: full integer recompute — bit-length idf surrogate, 4096-fp
-    // length norm (k1=1.2, b=0.75 in milli-units), per-term trunc division,
-    // queries = distinct first-3-word prefixes of docs 3,10,17,24,31.
-    // Python-validated 50/50 at sf0.01 AND sf0.001 (tools/bm25_check.py)
-    "bm25_topk" ->
-      """WITH t AS (
-        |  SELECT doc_id, unnest(string_split(lower(text), ' ')) AS term FROM documents),
-        |tf AS (SELECT doc_id, term, count(*)::BIGINT AS tf FROM t GROUP BY 1, 2),
-        |df AS (SELECT term, count(*)::BIGINT AS df FROM tf GROUP BY 1),
-        |dl AS (SELECT doc_id, sum(tf)::BIGINT AS dl FROM tf GROUP BY 1),
-        |tot AS (SELECT count(*)::BIGINT AS n, sum(dl)::BIGINT AS a FROM dl),
-        |q AS (
-        |  SELECT DISTINCT (doc_id - 3) // 7 AS q_id,
-        |         unnest(string_split(lower(text), ' ')[1:3]) AS term
-        |  FROM documents WHERE doc_id % 7 = 3 AND doc_id <= 31),
-        |sc AS (
-        |  SELECT q.q_id, tf.doc_id,
-        |    sum((length(bin(n // df)) * tf * 2200 * 4096)
-        |        // ((tf * 4096 + (1200 * (250 * 4096 + 750 * ((dl * 4096) // (a // n)))) // 1000000) * 1000)
-        |       )::BIGINT AS score
-        |  FROM tf JOIN df USING (term) JOIN dl USING (doc_id) CROSS JOIN tot
-        |       JOIN q USING (term)
-        |  GROUP BY 1, 2),
-        |r AS (SELECT *, row_number() OVER (PARTITION BY q_id ORDER BY score DESC, doc_id) AS rn
-        |      FROM sc)
-        |SELECT CAST(q_id AS BIGINT) AS q_id, CAST(rn AS BIGINT) AS rnk, doc_id, score
-        |FROM r WHERE rn <= 10 ORDER BY q_id, rnk""".stripMargin,
-    // mojibake_repair: repairing the mangled prefix must reproduce the CLEAN
-    // planted prefix byte-exactly, clean accents and ASCII pass through —
-    // the oracle reconstructs the expected output from the plant arithmetic
-    "mojibake_repair" ->
-      """SELECT doc_id,
-        |       CASE WHEN doc_id % 10 IN (0, 5)
-        |            THEN 'café naïve résumé ' || text ELSE text END AS repaired,
-        |       CAST(CASE WHEN doc_id % 10 = 0 THEN 1 ELSE 0 END AS BIGINT) AS was_mojibake
-        |FROM documents""".stripMargin,
-    // extraction_prf: the oracle recomputes the word-multiset overlap
-    // generically (unnest both sides, per-word least()), then the same
-    // trunc-division basis-point chain; empty extraction -> precision 0
-    // extraction_drift: same degraded-extractor CTE family as
-    // extraction_prf; DuckDB quirks handled explicitly (out-of-range list
-    // slice -> NULL, array_to_string([]) -> NULL) so short docs match
-    // Spark's empty-array semantics; Python-validated at both sfs
-    "extraction_drift" ->
-      """WITH d AS (SELECT doc_id, text AS gold,
-        |                  coalesce(array_to_string(
-        |                    list_concat(
-        |                      CASE WHEN doc_id % 4 = 0
-        |                           THEN coalesce(string_split(text,' ')[25:], [])
-        |                           ELSE string_split(text,' ') END,
-        |                      CASE WHEN doc_id % 3 = 0
-        |                           THEN string_split('subscribe to our newsletter for daily updates',' ')
-        |                           ELSE [] END), ' '), '') AS extracted
-        |           FROM documents),
-        |g AS (SELECT doc_id, w, CAST(count(*) AS BIGINT) AS cg
-        |      FROM (SELECT doc_id, unnest(string_split(gold,' ')) AS w FROM d)
-        |      WHERE len(w) > 0 GROUP BY doc_id, w),
-        |e AS (SELECT doc_id, w, CAST(count(*) AS BIGINT) AS ce
-        |      FROM (SELECT doc_id, unnest(string_split(extracted,' ')) AS w FROM d)
-        |      WHERE len(w) > 0 GROUP BY doc_id, w),
-        |j AS (SELECT coalesce(g.doc_id, e.doc_id) AS doc_id,
-        |             coalesce(cg, 0) AS cg, coalesce(ce, 0) AS ce
-        |      FROM g FULL OUTER JOIN e ON g.doc_id = e.doc_id AND g.w = e.w),
-        |m AS (SELECT doc_id, sum(greatest(ce - cg, 0))::BIGINT AS added_words,
-        |             sum(greatest(cg - ce, 0))::BIGINT AS dropped_words
-        |      FROM j GROUP BY doc_id)
-        |SELECT d.doc_id, CASE WHEN gold = extracted THEN 1 ELSE 0 END::BIGINT AS identical,
-        |       (len(extracted) - len(gold))::BIGINT AS char_delta,
-        |       added_words, dropped_words
-        |FROM d JOIN m ON d.doc_id = m.doc_id ORDER BY d.doc_id""".stripMargin,
-    "extraction_prf" ->
-      """WITH g AS (SELECT doc_id, unnest(string_split(text, ' ')) AS w FROM documents),
-        |ext AS (SELECT doc_id,
-        |         list_concat(
-        |           CASE WHEN doc_id % 4 = 0 THEN string_split(text, ' ')[25:] ELSE string_split(text, ' ') END,
-        |           CASE WHEN doc_id % 3 = 0 THEN string_split('subscribe to our newsletter for daily updates', ' ') ELSE [] END) AS ws
-        |        FROM documents),
-        |e AS (SELECT doc_id, unnest(ws) AS w FROM ext),
-        |gc AS (SELECT doc_id, w, count(*) AS cg FROM g GROUP BY doc_id, w),
-        |ec AS (SELECT doc_id, w, count(*) AS ce FROM e GROUP BY doc_id, w),
-        |j AS (SELECT coalesce(gc.doc_id, ec.doc_id) AS doc_id,
-        |             coalesce(cg, 0) AS cg, coalesce(ce, 0) AS ce
-        |      FROM gc FULL OUTER JOIN ec ON gc.doc_id = ec.doc_id AND gc.w = ec.w),
-        |m AS (SELECT doc_id, sum(least(cg, ce)) AS inter, sum(cg) AS ng, sum(ce) AS ne
-        |      FROM j GROUP BY doc_id)
-        |SELECT doc_id, CAST(ng AS BIGINT) AS n_gold, CAST(ne AS BIGINT) AS n_extracted,
-        |       CAST(inter AS BIGINT) AS n_match,
-        |       CAST(CASE WHEN ne > 0 THEN inter * 10000 // ne ELSE 0 END AS BIGINT) AS precision_bp,
-        |       CAST(inter * 10000 // ng AS BIGINT) AS recall_bp,
-        |       CAST(CASE WHEN ne > 0 AND inter * 10000 // ne + inter * 10000 // ng > 0
-        |            THEN (2 * (inter * 10000 // ne) * (inter * 10000 // ng)) // (inter * 10000 // ne + inter * 10000 // ng)
-        |            ELSE 0 END AS BIGINT) AS f1_bp
-        |FROM m""".stripMargin,
-    // soft404_detect: classification and the error page's 8-word apology are
-    // fixture arithmetic; normal pages' main text equals the document text
-    // (html_main_content's proven byte-identity), so n_main_words = len(words)
-    "soft404_detect" ->
-      """SELECT doc_id,
-        |       CAST(CASE WHEN doc_id % 13 = 0 THEN 1 ELSE 0 END AS BIGINT) AS is_soft404,
-        |       CAST(CASE WHEN doc_id % 13 = 0 THEN 8
-        |            ELSE len(string_split(text, ' ')) END AS BIGINT) AS n_main_words
-        |FROM documents""".stripMargin,
-    // index_delta: snapshot B is crawl_delta's fixture arithmetic (removed
-    // id%7==3, changed id%5==1, added id%11==0 at id+1000000); the oracle
-    // rebuilds both doc sets and counts distinct-doc bigram activity
-    "index_delta" ->
-      """WITH oldd AS (SELECT doc_id, text FROM documents),
-        |tombdocs AS (SELECT doc_id, text FROM oldd
-        |             WHERE doc_id % 7 = 3 OR (doc_id % 5 = 1 AND doc_id % 7 <> 3)),
-        |updocs AS (SELECT doc_id, text || ' updated' AS text FROM oldd
-        |           WHERE doc_id % 5 = 1 AND doc_id % 7 <> 3
-        |           UNION ALL
-        |           SELECT doc_id + 1000000, 'recrawl new page ' || doc_id FROM oldd
-        |           WHERE doc_id % 11 = 0),
-        |tb AS (SELECT DISTINCT doc_id, ws[i] || ' ' || ws[i+1] AS term
-        |       FROM (SELECT doc_id, string_split(text, ' ') AS ws FROM tombdocs),
-        |            UNNEST(generate_series(1, len(ws)-1)) t(i)),
-        |ub AS (SELECT DISTINCT doc_id, ws[i] || ' ' || ws[i+1] AS term
-        |       FROM (SELECT doc_id, string_split(text, ' ') AS ws FROM updocs),
-        |            UNNEST(generate_series(1, len(ws)-1)) t(i)),
-        |tc AS (SELECT term, count(*) AS nt FROM tb GROUP BY term),
-        |uc AS (SELECT term, count(*) AS nu FROM ub GROUP BY term)
-        |SELECT coalesce(uc.term, tc.term) AS term,
-        |       CAST(coalesce(nu, 0) AS BIGINT) AS n_upserts,
-        |       CAST(coalesce(nt, 0) AS BIGINT) AS n_tombstones
-        |FROM uc FULL OUTER JOIN tc ON uc.term = tc.term""".stripMargin,
-    // hll_distinct: the oracle recomputes the ENTIRE sketch — splitmix64 in
-    // HUGEINT with 32-bit-split mod-2^64 multiplication (a 64x64 product
-    // would overflow HUGEINT), top-6-bit buckets, leading-zero rho via
-    // bin()-length, per-bucket max, then the raw estimator in exact integer
-    // arithmetic. Constants K2/K3 pre-split into 32-bit halves.
-    "hll_distinct" ->
-      """WITH vals AS (
-        |  SELECT event_type,
-        |         CAST(user_id * 1024 + (CAST(floor(epoch(ts)) AS BIGINT) // 86400) AS HUGEINT) AS v
-        |  FROM events),
-        |h1 AS (SELECT event_type, (v + 11400714819323198485) % 18446744073709551616 AS z FROM vals),
-        |h2 AS (SELECT event_type, xor(z, z >> 30) AS x FROM h1),
-        |h3 AS (SELECT event_type,
-        |         ((x % 4294967296) * 484763065
-        |          + (((x % 4294967296) * 3210233709 + (x // 4294967296) * 484763065) % 4294967296) * 4294967296)
-        |         % 18446744073709551616 AS z
-        |       FROM h2),
-        |h4 AS (SELECT event_type, xor(z, z >> 27) AS x FROM h3),
-        |h5 AS (SELECT event_type,
-        |         ((x % 4294967296) * 321982955
-        |          + (((x % 4294967296) * 2496678331 + (x // 4294967296) * 321982955) % 4294967296) * 4294967296)
-        |         % 18446744073709551616 AS z
-        |       FROM h4),
-        |h AS (SELECT event_type, xor(z, z >> 31) AS h FROM h5),
-        |b AS (SELECT event_type, CAST(h // 288230376151711744 AS BIGINT) AS idx,
-        |             h % 288230376151711744 AS rest FROM h),
-        |r AS (SELECT event_type, idx,
-        |             max(CASE WHEN rest = 0 THEN 59 ELSE 58 - len(bin(rest)) + 1 END) AS rho
-        |      FROM b GROUP BY event_type, idx),
-        |types AS (SELECT DISTINCT event_type FROM events),
-        |grid AS (SELECT t.event_type, g.i AS idx
-        |         FROM types t, UNNEST(generate_series(0, 63)) g(i)),
-        |regs AS (SELECT grid.event_type, grid.idx, coalesce(r.rho, 0) AS rho
-        |         FROM grid LEFT JOIN r ON grid.event_type = r.event_type AND grid.idx = r.idx),
-        |est AS (SELECT event_type, sum(CAST(1 AS HUGEINT) << (59 - rho)) AS z2
-        |        FROM regs GROUP BY event_type),
-        |ex AS (SELECT event_type, count(DISTINCT v) AS exact FROM vals GROUP BY event_type)
-        |SELECT est.event_type,
-        |       CAST((709343 * CAST(4096 AS HUGEINT) * 576460752303423488) // (1000000 * z2) AS BIGINT) AS approx_distinct,
-        |       CAST(exact AS BIGINT) AS exact_distinct,
-        |       CAST(abs(CAST((709343 * CAST(4096 AS HUGEINT) * 576460752303423488) // (1000000 * z2) AS BIGINT) - exact) * 10000 // exact AS BIGINT) AS err_bp
-        |FROM est JOIN ex USING (event_type)""".stripMargin,
-    // hll_cumulative: the hll_distinct sketch recompute extended with a day
-    // axis — per-(type, day, idx) register maxima, register-wise max over all
-    // days <= d (the MERGE), then the same exact-integer raw estimator, plus
-    // the first-seen-day exact cumulative distinct as ground truth. Validated
-    // by tools/new_ops_oracle_check.py (150/150 rows vs a Python re-merge).
-    "hll_cumulative" ->
-      """WITH vals AS (
-        |  SELECT event_type, CAST(floor(epoch(ts)) AS BIGINT) // 86400 AS day,
-        |         CAST(user_id * 1024 + (CAST(floor(epoch(ts)) AS BIGINT) // 86400) AS HUGEINT) AS v
-        |  FROM events),
-        |h1 AS (SELECT event_type, day, (v + 11400714819323198485) % 18446744073709551616 AS z FROM vals),
-        |h2 AS (SELECT event_type, day, xor(z, z >> 30) AS x FROM h1),
-        |h3 AS (SELECT event_type, day,
-        |         ((x % 4294967296) * 484763065
-        |          + (((x % 4294967296) * 3210233709 + (x // 4294967296) * 484763065) % 4294967296) * 4294967296)
-        |         % 18446744073709551616 AS z
-        |       FROM h2),
-        |h4 AS (SELECT event_type, day, xor(z, z >> 27) AS x FROM h3),
-        |h5 AS (SELECT event_type, day,
-        |         ((x % 4294967296) * 321982955
-        |          + (((x % 4294967296) * 2496678331 + (x // 4294967296) * 321982955) % 4294967296) * 4294967296)
-        |         % 18446744073709551616 AS z
-        |       FROM h4),
-        |hh AS (SELECT event_type, day, xor(z, z >> 31) AS h FROM h5),
-        |b AS (SELECT event_type, day, CAST(h // 288230376151711744 AS BIGINT) AS idx,
-        |             h % 288230376151711744 AS rest FROM hh),
-        |r AS (SELECT event_type, day, idx,
-        |             max(CASE WHEN rest = 0 THEN 59 ELSE 58 - len(bin(rest)) + 1 END) AS rho
-        |      FROM b GROUP BY event_type, day, idx),
-        |grid AS (SELECT DISTINCT event_type, day FROM vals),
-        |gi AS (SELECT g.event_type, g.day, x.i AS idx
-        |       FROM grid g, UNNEST(generate_series(0, 63)) x(i)),
-        |regs AS (SELECT gi.event_type, gi.day, gi.idx, coalesce(max(r.rho), 0) AS rho
-        |         FROM gi LEFT JOIN r ON r.event_type = gi.event_type AND r.idx = gi.idx
-        |                            AND r.day <= gi.day
-        |         GROUP BY gi.event_type, gi.day, gi.idx),
-        |est AS (SELECT event_type, day, sum(CAST(1 AS HUGEINT) << (59 - rho)) AS z2
-        |        FROM regs GROUP BY event_type, day),
-        |estv AS (SELECT event_type, day,
-        |           CAST((709343 * CAST(4096 AS HUGEINT) * 576460752303423488) // (1000000 * z2) AS BIGINT) AS e
-        |         FROM est),
-        |firsts AS (SELECT event_type, v, min(day) AS fday FROM vals GROUP BY event_type, v),
-        |exact AS (SELECT g.event_type, g.day, count(*) AS ex FROM grid g
-        |          JOIN firsts f ON f.event_type = g.event_type AND f.fday <= g.day
-        |          GROUP BY g.event_type, g.day)
-        |SELECT estv.event_type, CAST(estv.day AS BIGINT) AS day, e AS cum_distinct_est,
-        |       CAST(ex AS BIGINT) AS cum_distinct_exact,
-        |       CAST(abs(e - ex) * 10000 // ex AS BIGINT) AS err_bp
-        |FROM estv JOIN exact USING (event_type, day)
-        |ORDER BY event_type, day""".stripMargin,
-    // hll_sliding: the hll_cumulative recompute with the register merge
-    // windowed to the trailing 7 days (r.day BETWEEN gi.day-6 AND gi.day) and
-    // the exact side counting distinct v with ANY occurrence in the window.
-    // Validated by tools/hll_sliding_check.py (150/150 rows at both sfs).
-    "hll_sliding" ->
-      """WITH vals AS (
-        |  SELECT event_type, CAST(floor(epoch(ts)) AS BIGINT) // 86400 AS day,
-        |         CAST(user_id * 1024 + (CAST(floor(epoch(ts)) AS BIGINT) // 86400) AS HUGEINT) AS v
-        |  FROM events),
-        |h1 AS (SELECT event_type, day, (v + 11400714819323198485) % 18446744073709551616 AS z FROM vals),
-        |h2 AS (SELECT event_type, day, xor(z, z >> 30) AS x FROM h1),
-        |h3 AS (SELECT event_type, day,
-        |         ((x % 4294967296) * 484763065
-        |          + (((x % 4294967296) * 3210233709 + (x // 4294967296) * 484763065) % 4294967296) * 4294967296)
-        |         % 18446744073709551616 AS z
-        |       FROM h2),
-        |h4 AS (SELECT event_type, day, xor(z, z >> 27) AS x FROM h3),
-        |h5 AS (SELECT event_type, day,
-        |         ((x % 4294967296) * 321982955
-        |          + (((x % 4294967296) * 2496678331 + (x // 4294967296) * 321982955) % 4294967296) * 4294967296)
-        |         % 18446744073709551616 AS z
-        |       FROM h4),
-        |hh AS (SELECT event_type, day, xor(z, z >> 31) AS h FROM h5),
-        |b AS (SELECT event_type, day, CAST(h // 288230376151711744 AS BIGINT) AS idx,
-        |             h % 288230376151711744 AS rest FROM hh),
-        |r AS (SELECT event_type, day, idx,
-        |             max(CASE WHEN rest = 0 THEN 59 ELSE 58 - len(bin(rest)) + 1 END) AS rho
-        |      FROM b GROUP BY event_type, day, idx),
-        |grid AS (SELECT DISTINCT event_type, day FROM vals),
-        |gi AS (SELECT g.event_type, g.day, x.i AS idx
-        |       FROM grid g, UNNEST(generate_series(0, 63)) x(i)),
-        |regs AS (SELECT gi.event_type, gi.day, gi.idx, coalesce(max(r.rho), 0) AS rho
-        |         FROM gi LEFT JOIN r ON r.event_type = gi.event_type AND r.idx = gi.idx
-        |                            AND r.day BETWEEN gi.day - 6 AND gi.day
-        |         GROUP BY gi.event_type, gi.day, gi.idx),
-        |est AS (SELECT event_type, day, sum(CAST(1 AS HUGEINT) << (59 - rho)) AS z2
-        |        FROM regs GROUP BY event_type, day),
-        |estv AS (SELECT event_type, day,
-        |           CAST((709343 * CAST(4096 AS HUGEINT) * 576460752303423488) // (1000000 * z2) AS BIGINT) AS e
-        |         FROM est),
-        |vd AS (SELECT DISTINCT event_type, v, day FROM vals),
-        |exact AS (SELECT g.event_type, g.day, count(DISTINCT f.v) AS ex FROM grid g
-        |          JOIN vd f ON f.event_type = g.event_type
-        |                   AND f.day BETWEEN g.day - 6 AND g.day
-        |          GROUP BY g.event_type, g.day)
-        |SELECT estv.event_type, CAST(estv.day AS BIGINT) AS day, e AS win_distinct_est,
-        |       CAST(ex AS BIGINT) AS win_distinct_exact,
-        |       CAST(abs(e - ex) * 10000 // ex AS BIGINT) AS err_bp
-        |FROM estv JOIN exact USING (event_type, day)
-        |ORDER BY event_type, day""".stripMargin,
-    // audience_overlap: full per-type sketch recompute (shared splitmix
-    // HUGEINT chain + per-type ORDER BY h row_number <= k), pairwise merged
-    // bottom-k + trunc-integer estimates; Python-validated at both sfs
-    // (tools/audience_oracle_check.py)
-    "audience_overlap" ->
-      """WITH 
-        |vals AS (SELECT DISTINCT event_type,
-        |                CAST(user_id * 1024 + (CAST(floor(epoch(ts)) AS BIGINT) // 86400) AS HUGEINT) AS v
-        |         FROM events),
-        |h1 AS (SELECT event_type, v, (v + 11400714819323198485) % 18446744073709551616 AS z FROM vals),
-        |h2 AS (SELECT event_type, v, xor(z, z >> 30) AS x FROM h1),
-        |h3 AS (SELECT event_type, v, ((x % 4294967296) * 484763065
-        |        + (((x % 4294967296) * 3210233709 + (x // 4294967296) * 484763065) % 4294967296) * 4294967296)
-        |       % 18446744073709551616 AS z FROM h2),
-        |h4 AS (SELECT event_type, v, xor(z, z >> 27) AS x FROM h3),
-        |h5 AS (SELECT event_type, v, ((x % 4294967296) * 321982955
-        |        + (((x % 4294967296) * 2496678331 + (x // 4294967296) * 321982955) % 4294967296) * 4294967296)
-        |       % 18446744073709551616 AS z FROM h4),
-        |h AS (SELECT event_type, v, xor(z, z >> 31) AS h FROM h5),
-        |sk AS (SELECT event_type, h FROM
-        |        (SELECT event_type, h, row_number() OVER (PARTITION BY event_type ORDER BY h) AS rn FROM h)
-        |       WHERE rn <= 256),
-        |pairs AS (SELECT a.event_type AS type_a, b.event_type AS type_b
-        |          FROM (SELECT DISTINCT event_type FROM vals) a,
-        |               (SELECT DISTINCT event_type FROM vals) b
-        |          WHERE a.event_type < b.event_type),
-        |mraw AS (SELECT DISTINCT p.type_a, p.type_b, u.h
-        |         FROM pairs p JOIN sk u ON u.event_type IN (p.type_a, p.type_b)),
-        |mk AS (SELECT type_a, type_b, h FROM
-        |        (SELECT type_a, type_b, h,
-        |                row_number() OVER (PARTITION BY type_a, type_b ORDER BY h) AS rn
-        |         FROM mraw)
-        |       WHERE rn <= 256),
-        |mku AS (SELECT type_a, type_b, h FROM mk),
-        |mm AS (SELECT type_a, type_b, CAST(count(*) AS BIGINT) AS m, max(h) AS uk
-        |       FROM mku GROUP BY type_a, type_b),
-        |mat AS (SELECT m.type_a, m.type_b, CAST(count(*) AS BIGINT) AS matches
-        |        FROM mku m
-        |        JOIN sk a ON a.event_type = m.type_a AND a.h = m.h
-        |        JOIN sk b ON b.event_type = m.type_b AND b.h = m.h
-        |        GROUP BY m.type_a, m.type_b),
-        |exi AS (SELECT x.event_type AS type_a, y.event_type AS type_b,
-        |               CAST(count(*) AS BIGINT) AS exact_inter
-        |        FROM vals x JOIN vals y ON x.v = y.v AND x.event_type < y.event_type
-        |        GROUP BY 1, 2),
-        |nd AS (SELECT event_type, CAST(count(*) AS BIGINT) AS nd FROM vals GROUP BY 1),
-        |est AS (SELECT mm.type_a, mm.type_b, mm.m, mat.matches,
-        |               CASE WHEN mm.m < 256 THEN mm.m
-        |                    ELSE CAST((255 * CAST(18446744073709551616 AS HUGEINT)) // mm.uk AS BIGINT)
-        |               END AS est_union,
-        |               na.nd + nb.nd - exi.exact_inter AS exact_union, exi.exact_inter
-        |        FROM mm JOIN mat USING (type_a, type_b) JOIN exi USING (type_a, type_b)
-        |        JOIN nd na ON na.event_type = mm.type_a
-        |        JOIN nd nb ON nb.event_type = mm.type_b)
-        |SELECT type_a, type_b, m, matches,
-        |       matches * 10000 // m AS jaccard_bp,
-        |       est_union,
-        |       matches * est_union // m AS est_inter,
-        |       exact_union, exact_inter,
-        |       abs(est_union - exact_union) * 10000 // exact_union AS union_err_bp
-        |FROM est ORDER BY type_a, type_b""".stripMargin,
-    // stream_kmv_distinct: the same per-type sketch, single-sketch distinct
-    // estimate — the streaming agg must reproduce the batch sketch exactly
-    "stream_kmv_distinct" ->
-      """WITH 
-        |vals AS (SELECT DISTINCT event_type,
-        |                CAST(user_id * 1024 + (CAST(floor(epoch(ts)) AS BIGINT) // 86400) AS HUGEINT) AS v
-        |         FROM events),
-        |h1 AS (SELECT event_type, v, (v + 11400714819323198485) % 18446744073709551616 AS z FROM vals),
-        |h2 AS (SELECT event_type, v, xor(z, z >> 30) AS x FROM h1),
-        |h3 AS (SELECT event_type, v, ((x % 4294967296) * 484763065
-        |        + (((x % 4294967296) * 3210233709 + (x // 4294967296) * 484763065) % 4294967296) * 4294967296)
-        |       % 18446744073709551616 AS z FROM h2),
-        |h4 AS (SELECT event_type, v, xor(z, z >> 27) AS x FROM h3),
-        |h5 AS (SELECT event_type, v, ((x % 4294967296) * 321982955
-        |        + (((x % 4294967296) * 2496678331 + (x // 4294967296) * 321982955) % 4294967296) * 4294967296)
-        |       % 18446744073709551616 AS z FROM h4),
-        |h AS (SELECT event_type, v, xor(z, z >> 31) AS h FROM h5),
-        |sk AS (SELECT event_type, h FROM
-        |        (SELECT event_type, h, row_number() OVER (PARTITION BY event_type ORDER BY h) AS rn FROM h)
-        |       WHERE rn <= 256),
-        |mm AS (SELECT event_type, CAST(count(*) AS BIGINT) AS m, max(h) AS uk FROM sk GROUP BY 1)
-        |SELECT event_type,
-        |       CASE WHEN m < 256 THEN m
-        |            ELSE CAST((255 * CAST(18446744073709551616 AS HUGEINT)) // uk AS BIGINT)
-        |       END AS kmv_distinct
-        |FROM mm ORDER BY event_type""".stripMargin,
-    "stream_hll_distinct" ->
-      """WITH vals AS (
-        |  SELECT event_type,
-        |         CAST(user_id * 1024 + (CAST(floor(epoch(ts)) AS BIGINT) // 86400) AS HUGEINT) AS v
-        |  FROM events),
-        |h1 AS (SELECT event_type, (v + 11400714819323198485) % 18446744073709551616 AS z FROM vals),
-        |h2 AS (SELECT event_type, xor(z, z >> 30) AS x FROM h1),
-        |h3 AS (SELECT event_type,
-        |         ((x % 4294967296) * 484763065
-        |          + (((x % 4294967296) * 3210233709 + (x // 4294967296) * 484763065) % 4294967296) * 4294967296)
-        |         % 18446744073709551616 AS z
-        |       FROM h2),
-        |h4 AS (SELECT event_type, xor(z, z >> 27) AS x FROM h3),
-        |h5 AS (SELECT event_type,
-        |         ((x % 4294967296) * 321982955
-        |          + (((x % 4294967296) * 2496678331 + (x // 4294967296) * 321982955) % 4294967296) * 4294967296)
-        |         % 18446744073709551616 AS z
-        |       FROM h4),
-        |h AS (SELECT event_type, xor(z, z >> 31) AS h FROM h5),
-        |b AS (SELECT event_type, CAST(h // 288230376151711744 AS BIGINT) AS idx,
-        |             h % 288230376151711744 AS rest FROM h),
-        |r AS (SELECT event_type, idx,
-        |             max(CASE WHEN rest = 0 THEN 59 ELSE 58 - len(bin(rest)) + 1 END) AS rho
-        |      FROM b GROUP BY event_type, idx),
-        |types AS (SELECT DISTINCT event_type FROM events),
-        |grid AS (SELECT t.event_type, g.i AS idx
-        |         FROM types t, UNNEST(generate_series(0, 63)) g(i)),
-        |regs AS (SELECT grid.event_type, grid.idx, coalesce(r.rho, 0) AS rho
-        |         FROM grid LEFT JOIN r ON grid.event_type = r.event_type AND grid.idx = r.idx),
-        |est AS (SELECT event_type, sum(CAST(1 AS HUGEINT) << (59 - rho)) AS z2
-        |        FROM regs GROUP BY event_type)
-        |SELECT est.event_type,
-        |       CAST((709343 * CAST(4096 AS HUGEINT) * 576460752303423488) // (1000000 * z2) AS BIGINT) AS approx_distinct
-        |FROM est""".stripMargin,
-    // cms_freq: the oracle rebuilds the ENTIRE counter table — FNV-1a over
-    // bigram terms (the simhash oracle's list_reduce idiom), four splitmix64
-    // row hashes in HUGEINT 32-bit-split mod-2^64 arithmetic, bucket sums —
-    // then answers the same point queries by min-over-rows. CMS invariant:
-    // est >= exact always; 'zzz qqq' probes the absent-key path.
-    "cms_freq" ->
-      """WITH p AS (SELECT 'boiler plate nav menu spam footer links here ' || text AS text FROM documents),
-        |w AS (SELECT string_split(text, ' ') AS ws FROM p),
-        |b AS (SELECT ws[i] || ' ' || ws[i+1] AS term
-        |      FROM w, UNNEST(generate_series(1, len(ws)-1)) t(i)),
-        |tc AS (SELECT term, count(*) AS n FROM b GROUP BY term),
-        |tfv AS (SELECT term, n, list_reduce(
-        |           list_prepend(14695981039346656037::HUGEINT,
-        |                        [unicode(c)::HUGEINT for c in string_split(term, '')]),
-        |           (h, x) -> ((h - h % 256 + xor((h % 256)::BIGINT, x::BIGINT)::HUGEINT)
-        |                      * 1099511628211::HUGEINT) % (1::HUGEINT << 64)) AS f FROM tc),
-        |sx AS (SELECT term, n, i, ((f + i) + 11400714819323198485) % 18446744073709551616 AS z
-        |       FROM tfv, UNNEST(generate_series(0, 3)) r(i)),
-        |sxa AS (SELECT *, xor(z, z >> 30) AS x1 FROM sx),
-        |sxb AS (SELECT * EXCLUDE (z),
-        |         ((x1 % 4294967296) * 484763065
-        |          + (((x1 % 4294967296) * 3210233709 + (x1 // 4294967296) * 484763065) % 4294967296) * 4294967296)
-        |         % 18446744073709551616 AS z FROM sxa),
-        |sxc AS (SELECT * EXCLUDE (x1), xor(z, z >> 27) AS x2 FROM sxb),
-        |sxd AS (SELECT * EXCLUDE (z),
-        |         ((x2 % 4294967296) * 321982955
-        |          + (((x2 % 4294967296) * 2496678331 + (x2 // 4294967296) * 321982955) % 4294967296) * 4294967296)
-        |         % 18446744073709551616 AS z FROM sxc),
-        |sxe AS (SELECT * EXCLUDE (x2, z), xor(z, z >> 31) AS h FROM sxd),
-        |cnt AS (SELECT i, CAST(h % 1024 AS BIGINT) AS bucket, sum(n) AS c
-        |        FROM sxe GROUP BY i, CAST(h % 1024 AS BIGINT)),
-        |keys AS (SELECT unnest(['boiler plate', 'plate nav', 'nav menu', 'menu spam', 'spam footer', 'footer links', 'links here', 'zzz qqq']) AS term),
-        |kf AS (SELECT term, list_reduce(
-        |           list_prepend(14695981039346656037::HUGEINT,
-        |                        [unicode(c)::HUGEINT for c in string_split(term, '')]),
-        |           (h, x) -> ((h - h % 256 + xor((h % 256)::BIGINT, x::BIGINT)::HUGEINT)
-        |                      * 1099511628211::HUGEINT) % (1::HUGEINT << 64)) AS f FROM keys),
-        |ky AS (SELECT term, i, ((f + i) + 11400714819323198485) % 18446744073709551616 AS z
-        |       FROM kf, UNNEST(generate_series(0, 3)) r(i)),
-        |kya AS (SELECT *, xor(z, z >> 30) AS x1 FROM ky),
-        |kyb AS (SELECT * EXCLUDE (z),
-        |         ((x1 % 4294967296) * 484763065
-        |          + (((x1 % 4294967296) * 3210233709 + (x1 // 4294967296) * 484763065) % 4294967296) * 4294967296)
-        |         % 18446744073709551616 AS z FROM kya),
-        |kyc AS (SELECT * EXCLUDE (x1), xor(z, z >> 27) AS x2 FROM kyb),
-        |kyd AS (SELECT * EXCLUDE (z),
-        |         ((x2 % 4294967296) * 321982955
-        |          + (((x2 % 4294967296) * 2496678331 + (x2 // 4294967296) * 321982955) % 4294967296) * 4294967296)
-        |         % 18446744073709551616 AS z FROM kyc),
-        |kye AS (SELECT * EXCLUDE (x2, z), xor(z, z >> 31) AS h FROM kyd),
-        |kb AS (SELECT term, i, CAST(h % 1024 AS BIGINT) AS bucket FROM kye),
-        |est AS (SELECT kb.term, min(coalesce(cnt.c, 0)) AS est
-        |        FROM kb LEFT JOIN cnt USING (i, bucket) GROUP BY kb.term)
-        |SELECT keys.term, CAST(est.est AS BIGINT) AS est,
-        |       CAST(coalesce(tc.n, 0) AS BIGINT) AS exact,
-        |       CAST(CASE WHEN coalesce(tc.n, 0) > 0
-        |            THEN (est.est - tc.n) * 10000 // tc.n ELSE -1 END AS BIGINT) AS over_bp
-        |FROM keys JOIN est USING (term) LEFT JOIN tc USING (term)""".stripMargin,
-    // heavy_hitters: the two-pass engine result is EXACT and
-    // partition-invariant (lossy-count candidates are a proven superset,
-    // the final filter is the exact integer rational cnt*200 >= N), so the
-    // oracle is a plain GROUP BY + HAVING over the same planted bigram
-    // stream — no sketch recompute (contrast cms_freq/hll_distinct).
-    "heavy_hitters" ->
-      """WITH p AS (SELECT 'boiler plate nav menu spam footer links here ' || text AS text FROM documents),
-        |w AS (SELECT string_split(text, ' ') AS ws FROM p),
-        |b AS (SELECT ws[i] || ' ' || ws[i+1] AS term
-        |      FROM w, UNNEST(generate_series(1, len(ws)-1)) t(i)),
-        |tc AS (SELECT term, CAST(count(*) AS BIGINT) AS cnt FROM b GROUP BY term),
-        |n AS (SELECT CAST(sum(cnt) AS BIGINT) AS n FROM tc)
-        |SELECT term, cnt, CAST(cnt * 10000 // (SELECT n FROM n) AS BIGINT) AS share_bp
-        |FROM tc WHERE cnt * 200 >= (SELECT n FROM n)
-        |ORDER BY cnt DESC, term""".stripMargin,
-    // length_quantiles: same log2-bin histogram + cumulative threshold in SQL
-    "length_quantiles" ->
-      """WITH b AS (SELECT len(bin(n_chars)) - 1 AS bin FROM documents),
-        |c AS (SELECT bin, count(*) AS n FROM b GROUP BY bin),
-        |t AS (SELECT count(*) AS total FROM documents),
-        |cum AS (SELECT bin, sum(n) OVER (ORDER BY bin) AS cumn FROM c)
-        |SELECT CAST((SELECT total FROM t) AS BIGINT) AS n_docs,
-        |       CAST((SELECT min(1 << bin) FROM cum, t WHERE cumn * 100 >= 50 * total) AS BIGINT) AS p50_lo,
-        |       CAST((SELECT min(1 << bin) FROM cum, t WHERE cumn * 100 >= 90 * total) AS BIGINT) AS p90_lo,
-        |       CAST((SELECT min(1 << bin) FROM cum, t WHERE cumn * 100 >= 99 * total) AS BIGINT) AS p99_lo""".stripMargin,
-    // url_templates: same digit-run rewrite + (host, template) counts
-    "url_templates" ->
-      """WITH u AS (
-        |  SELECT 'site' || (doc_id % 7) || '.example.com' AS host,
-        |         '/articles/doc' || doc_id || '.html' AS path FROM documents
-        |  UNION ALL
-        |  SELECT 'site' || (doc_id % 7) || '.example.com', '/r/' || doc_id FROM documents)
-        |SELECT host, regexp_replace(path, '[0-9]+', '{n}', 'g') AS template,
-        |       CAST(count(*) AS BIGINT) AS n_urls
-        |FROM u GROUP BY host, template ORDER BY host, template""".stripMargin,
-    // host_quality_rollup: quality_ensemble's keep CTEs rolled to host grain
-    // + host_rank's unrolled fixed-point CTEs, joined — pure composition of
-    // two validated oracles
-    "host_quality_rollup" ->
-      """WITH w AS (SELECT doc_id, string_split(text,' ') AS ws,
-        |                  CAST(length(text) AS BIGINT) AS c FROM documents),
-        |g AS (SELECT doc_id, CAST(CASE WHEN len(ws) BETWEEN 50 AND 100000
-        |             AND c-(len(ws)-1) BETWEEN 3*len(ws) AND 10*len(ws)
-        |        THEN 1 ELSE 0 END AS BIGINT) AS g_gopher FROM w),
-        |r AS (SELECT doc_id, CAST(CASE WHEN 2*(len(ws)-len(list_distinct(ws))) <= len(ws)
-        |        THEN 1 ELSE 0 END AS BIGINT) AS g_rep FROM w),
-        |t AS (SELECT doc_id, lower(text) AS lt FROM documents),
-        |tri AS (SELECT doc_id, unnest([substring(lt, i, 3) for i in range(1, length(lt)-1)]) AS tri
-        |        FROM t WHERE length(lt) >= 3),
-        |lm AS (SELECT tri, CAST(count(*) AS BIGINT) AS tc FROM tri WHERE doc_id%10<3 GROUP BY tri),
-        |bg AS (SELECT substring(tri,1,2) AS bi, sum(tc) AS bt FROM lm GROUP BY bi),
-        |sc AS (SELECT d.doc_id, CASE WHEN lm.tc IS NULL THEN 4096000
-        |              ELSE least((bg.bt*4096)//lm.tc, 4096000) END AS s
-        |       FROM tri d LEFT JOIN lm ON d.tri = lm.tri
-        |                  LEFT JOIN bg ON substring(d.tri,1,2) = bg.bi),
-        |l AS (SELECT doc_id, CAST(CASE WHEN sum(s)//count(*) <= 20000 THEN 1 ELSE 0 END AS BIGINT) AS g_lm
-        |      FROM sc GROUP BY doc_id),
-        |keep AS (SELECT g.doc_id, g_gopher*g_rep*g_lm AS keep
-        |         FROM g JOIN r USING (doc_id) JOIN l USING (doc_id)),
-        |hostd AS (SELECT doc_id, 'site' || (doc_id % 7) || '.example.com' AS host FROM documents),
-        |hq AS (SELECT host, count(*) AS n_docs, sum(keep) AS n_keep
-        |       FROM hostd JOIN keep USING (doc_id) GROUP BY host),
-        |-- host_rank oracle CTEs (3 unrolled iterations, fixed point)
-        |e0 AS (SELECT 'site' || (doc_id % 7) || '.example.com' AS src,
-        |              'site' || ((doc_id * 2 + 1) % 7) || '.example.com' AS dst FROM documents
-        |       UNION ALL
-        |       SELECT 'site' || (doc_id % 7) || '.example.com',
-        |              'site' || ((doc_id * 3 + 2) % 7) || '.example.com' FROM documents WHERE doc_id % 3 = 0
-        |       UNION ALL
-        |       SELECT 'site' || (doc_id % 7) || '.example.com', 'site0.example.com'
-        |       FROM documents WHERE doc_id % 5 < 2),
-        |e AS (SELECT src, dst, count(*) AS weight FROM e0 GROUP BY src, dst),
-        |nodes AS (SELECT DISTINCT host FROM (SELECT src AS host FROM e UNION ALL SELECT dst FROM e)),
-        |nn AS (SELECT count(*) AS n FROM nodes),
-        |ow AS (SELECT src, sum(weight) AS outw FROM e GROUP BY src),
-        |r0 AS (SELECT host, 1000000 // (SELECT n FROM nn) AS rank FROM nodes),
-        |i1 AS (SELECT e.dst AS host, sum((r0.rank * e.weight * 8500) // (ow.outw * 10000)) AS ir
-        |       FROM e JOIN r0 ON e.src = r0.host JOIN ow ON e.src = ow.src GROUP BY e.dst),
-        |r1 AS (SELECT nodes.host, ((10000-8500) * 1000000 // 10000) // (SELECT n FROM nn) + coalesce(i1.ir, 0) AS rank
-        |       FROM nodes LEFT JOIN i1 USING (host)),
-        |i2 AS (SELECT e.dst AS host, sum((r1.rank * e.weight * 8500) // (ow.outw * 10000)) AS ir
-        |       FROM e JOIN r1 ON e.src = r1.host JOIN ow ON e.src = ow.src GROUP BY e.dst),
-        |r2 AS (SELECT nodes.host, ((10000-8500) * 1000000 // 10000) // (SELECT n FROM nn) + coalesce(i2.ir, 0) AS rank
-        |       FROM nodes LEFT JOIN i2 USING (host)),
-        |i3 AS (SELECT e.dst AS host, sum((r2.rank * e.weight * 8500) // (ow.outw * 10000)) AS ir
-        |       FROM e JOIN r2 ON e.src = r2.host JOIN ow ON e.src = ow.src GROUP BY e.dst),
-        |r3 AS (SELECT nodes.host, ((10000-8500) * 1000000 // 10000) // (SELECT n FROM nn) + coalesce(i3.ir, 0) AS rank
-        |       FROM nodes LEFT JOIN i3 USING (host))
-        |SELECT hq.host, CAST(hq.n_docs AS BIGINT) AS n_docs, CAST(hq.n_keep AS BIGINT) AS n_keep,
-        |       CAST(hq.n_keep * 10000 // hq.n_docs AS BIGINT) AS keep_rate_bp,
-        |       CAST(r3.rank AS BIGINT) AS rank
-        |FROM hq JOIN r3 ON hq.host = r3.host ORDER BY hq.host""".stripMargin,
-    // sequence_pack: the oracle's window cumsum IS the single-partition
-    // formulation the engine must avoid — same numbers, opposite plan
-    // pack_greedy: the greedy-with-reset recurrence the engine computes in
-    // one linear scan, recomputed as a per-block recursive CTE (depth <=
-    // blockDocs=256 rows; all blocks advance in one working table);
-    // Python-validated at both sfs (tools/packgreedy_oracle_check.py)
-    "pack_greedy" ->
-      """WITH RECURSIVE t AS (
-        |  SELECT doc_id, doc_id // 256 AS block,
-        |         CAST(len(string_split(text, ' ')) AS BIGINT) AS n,
-        |         row_number() OVER (PARTITION BY doc_id // 256 ORDER BY doc_id) AS rn
-        |  FROM documents),
-        |r AS (
-        |  SELECT doc_id, block, n, rn, CAST(0 AS BIGINT) AS bin,
-        |         CAST(0 AS BIGINT) AS off, n AS fill
-        |  FROM t WHERE rn = 1
-        |  UNION ALL
-        |  SELECT t.doc_id, t.block, t.n, t.rn,
-        |         CASE WHEN r.fill + t.n > 96 THEN r.bin + 1 ELSE r.bin END,
-        |         CASE WHEN r.fill + t.n > 96 THEN CAST(0 AS BIGINT) ELSE r.fill END,
-        |         CASE WHEN r.fill + t.n > 96 THEN t.n ELSE r.fill + t.n END
-        |  FROM r JOIN t ON t.block = r.block AND t.rn = r.rn + 1)
-        |SELECT doc_id, n AS n_tokens, block, block * 256 + bin AS bin_id, off AS bin_off
-        |FROM r ORDER BY doc_id""".stripMargin,
-    "sequence_pack" ->
-      """WITH w AS (SELECT doc_id, CAST(len(string_split(text,' ')) AS BIGINT) AS nt FROM documents),
-        |c AS (SELECT doc_id, nt, sum(nt + 1) OVER (ORDER BY doc_id) AS oe FROM w)
-        |SELECT doc_id, nt AS n_tokens, CAST(oe - (nt+1) AS BIGINT) AS offset_start,
-        |       CAST((oe - (nt+1)) // 2048 AS BIGINT) AS seq_first,
-        |       CAST((oe - 1) // 2048 AS BIGINT) AS seq_last
-        |FROM c""".stripMargin,
-    // curriculum_rank: the oracle's global row_number is exactly the
-    // single-partition plan the engine must avoid
-    "curriculum_rank" ->
-      """SELECT doc_id, CAST(len(string_split(text,' ')) AS BIGINT) AS n_words,
-        |       CAST(row_number() OVER (ORDER BY len(string_split(text,' ')), doc_id) AS BIGINT) AS rank
-        |FROM documents""".stripMargin,
-    // train_shuffle: the oracle's global row_number over the salted-FNV key
-    // is the single-partition plan the engine must avoid (curriculum_rank
-    // precedent); key = fnv64('shuf:'||doc_id) mod 2^63 (the engine's
-    // & Long.MaxValue), so signed BIGINT order matches unsigned HUGEINT
-    "train_shuffle" -> MixtureRowsSql(
-      """SELECT doc_id, CAST(h % (1::HUGEINT << 63) AS BIGINT) AS skey,
-        |       CAST(row_number() OVER (ORDER BY h % (1::HUGEINT << 63), doc_id) AS BIGINT) AS pos
-        |FROM k""".stripMargin, salt = "shuf"),
-    // shard_pack: the oracle's single-partition window cumsum is exactly the
-    // plan the engine must avoid (sequence_pack precedent)
-    "shard_pack" ->
-      """WITH d AS (SELECT doc_id, CAST(length(text) AS BIGINT) AS n_bytes FROM documents),
-        |c AS (SELECT doc_id, n_bytes,
-        |        COALESCE(sum(n_bytes) OVER (ORDER BY doc_id
-        |                 ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0) AS o
-        |      FROM d)
-        |SELECT doc_id, n_bytes, CAST(o AS BIGINT) AS offset_start,
-        |       CAST(o // 32768 AS BIGINT) AS shard FROM c""".stripMargin,
-    // cdc_chunks / cdc_shift_dedup: per-token FNV-1a (char-wise list_reduce,
-    // the doc_fingerprint precedent), window key = 3/5/7/11-weighted HUGEINT
-    // combine, boundary when key % 8 = 0, chunk hash = FNV of the rebuilt
-    // chunk string. Python-validated at both sfs (tools/cdc_check.py).
-    "cdc_chunks" ->
-      """WITH d AS (SELECT doc_id, text FROM documents),
-        |tk AS (SELECT doc_id, string_split(text, ' ') AS ws FROM d),
-        |th AS (SELECT doc_id, ws, [list_reduce(list_prepend(14695981039346656037::HUGEINT, [unicode(c)::HUGEINT for c in string_split(t,'')]), (h,b) -> ((h - h%128 + xor((h%128)::BIGINT, b::BIGINT)::HUGEINT) * 1099511628211::HUGEINT) % (1::HUGEINT << 64)) for t in ws] AS hs FROM tk),
-        |bd AS (SELECT doc_id, ws, len(ws) AS n,
-        |         [i for i in range(4, len(ws))
-        |          if (hs[i-3]*3 + hs[i-2]*5 + hs[i-1]*7 + hs[i]*11) % 8 = 0] AS bs
-        |       FROM th),
-        |ck AS (SELECT doc_id, n, ws,
-        |         list_prepend(1, [b + 1 for b in bs]) AS ss,
-        |         list_append(bs, n) AS es
-        |       FROM bd),
-        |cr AS (SELECT doc_id, i - 1 AS cidx, ss[i] AS s, es[i] AS e,
-        |         array_to_string(ws[ss[i]:es[i]], ' ') AS cs
-        |       FROM ck, UNNEST(generate_series(1, len(ss))) t(i)),
-        |chash AS (SELECT doc_id, cidx, s, e, list_reduce(list_prepend(14695981039346656037::HUGEINT, [unicode(c)::HUGEINT for c in string_split(cs,'')]), (h,b) -> ((h - h%128 + xor((h%128)::BIGINT, b::BIGINT)::HUGEINT) * 1099511628211::HUGEINT) % (1::HUGEINT << 64)) AS h FROM cr)
-        |SELECT doc_id, CAST(cidx AS BIGINT) AS chunk_idx, CAST(s - 1 AS BIGINT) AS start_tok,
-        |       CAST(e - s + 1 AS BIGINT) AS n_tokens,
-        |       CAST(CASE WHEN h >= (1::HUGEINT << 63) THEN h - (1::HUGEINT << 64) ELSE h END AS BIGINT) AS chunk_hash
-        |FROM chash ORDER BY doc_id, chunk_idx""".stripMargin,
-    "cdc_shift_dedup" ->
-      """WITH d AS (
-        |  SELECT doc_id, text FROM documents
-        |  UNION ALL
-        |  SELECT doc_id + 1000000, 'banner' || (doc_id % 5) || ' ' || text FROM documents),
-        |tk AS (SELECT doc_id, string_split(text, ' ') AS ws FROM d),
-        |th AS (SELECT doc_id, ws, [list_reduce(list_prepend(14695981039346656037::HUGEINT, [unicode(c)::HUGEINT for c in string_split(t,'')]), (h,b) -> ((h - h%128 + xor((h%128)::BIGINT, b::BIGINT)::HUGEINT) * 1099511628211::HUGEINT) % (1::HUGEINT << 64)) for t in ws] AS hs FROM tk),
-        |bd AS (SELECT doc_id, ws, len(ws) AS n,
-        |         [i for i in range(4, len(ws))
-        |          if (hs[i-3]*3 + hs[i-2]*5 + hs[i-1]*7 + hs[i]*11) % 8 = 0] AS bs
-        |       FROM th),
-        |ck AS (SELECT doc_id, n, ws,
-        |         list_prepend(1, [b + 1 for b in bs]) AS ss,
-        |         list_append(bs, n) AS es
-        |       FROM bd),
-        |cr AS (SELECT doc_id, i - 1 AS cidx, ss[i] AS s, es[i] AS e,
-        |         array_to_string(ws[ss[i]:es[i]], ' ') AS cs
-        |       FROM ck, UNNEST(generate_series(1, len(ss))) t(i)),
-        |chash AS (SELECT doc_id, cidx, s, e, list_reduce(list_prepend(14695981039346656037::HUGEINT, [unicode(c)::HUGEINT for c in string_split(cs,'')]), (h,b) -> ((h - h%128 + xor((h%128)::BIGINT, b::BIGINT)::HUGEINT) * 1099511628211::HUGEINT) % (1::HUGEINT << 64)) AS h FROM cr),
-        |fx AS (SELECT doc_id, list_reduce(list_prepend(14695981039346656037::HUGEINT, [unicode(c)::HUGEINT for c in string_split(array_to_string(ws[(i*8+1):least((i+1)*8, len(ws))], ' '),'')]), (h,b) -> ((h - h%128 + xor((h%128)::BIGINT, b::BIGINT)::HUGEINT) * 1099511628211::HUGEINT) % (1::HUGEINT << 64)) AS h
-        |       FROM tk, UNNEST(generate_series(0, (len(ws) - 1) // 8)) t(i)),
-        |cs AS (SELECT DISTINCT doc_id % 1000000 AS base_id,
-        |              CASE WHEN doc_id >= 1000000 THEN 1 ELSE 0 END AS it, h FROM chash),
-        |ca AS (SELECT base_id, h, max(it) AS mt, min(it) AS ms FROM cs GROUP BY base_id, h),
-        |cdc AS (SELECT base_id, CAST(sum(mt) AS BIGINT) AS n_cdc,
-        |               CAST(sum(CASE WHEN mt=1 AND ms=0 THEN 1 ELSE 0 END) AS BIGINT) AS shared_cdc
-        |        FROM ca GROUP BY base_id),
-        |fs AS (SELECT DISTINCT doc_id % 1000000 AS base_id,
-        |              CASE WHEN doc_id >= 1000000 THEN 1 ELSE 0 END AS it, h FROM fx),
-        |fa AS (SELECT base_id, h, max(it) AS mt, min(it) AS ms FROM fs GROUP BY base_id, h),
-        |fxd AS (SELECT base_id, CAST(sum(mt) AS BIGINT) AS n_fixed,
-        |               CAST(sum(CASE WHEN mt=1 AND ms=0 THEN 1 ELSE 0 END) AS BIGINT) AS shared_fixed
-        |        FROM fa GROUP BY base_id)
-        |SELECT cdc.base_id AS doc_id, n_cdc, shared_cdc,
-        |       CAST(shared_cdc * 10000 // n_cdc AS BIGINT) AS cdc_share_bp,
-        |       n_fixed, shared_fixed,
-        |       CAST(shared_fixed * 10000 // n_fixed AS BIGINT) AS fixed_share_bp
-        |FROM cdc JOIN fxd ON cdc.base_id = fxd.base_id
-        |ORDER BY doc_id""".stripMargin,
-    // chunk_passages: inclusive 1-based list slice recomputes every window
-    "chunk_passages" ->
-      """WITH d AS (SELECT doc_id, string_split(text,' ') AS ws FROM documents),
-        |n AS (SELECT doc_id, ws, CAST(len(ws) AS BIGINT) AS nw,
-        |             CASE WHEN len(ws) <= 64 THEN 1 ELSE (len(ws)-64+47)//48+1 END AS nc FROM d)
-        |SELECT doc_id, CAST(i AS BIGINT) AS chunk_id,
-        |       CAST(least(64, nw - i*48) AS BIGINT) AS n_words,
-        |       array_to_string(ws[i*48+1 : i*48+least(64, nw-i*48)], ' ') AS chunk_text
-        |FROM n, UNNEST(generate_series(0, nc-1)) t(i)""".stripMargin,
-    // bpe_train: iterative argmax-dependent state is not one SQL statement;
-    // the oracle pins the result derived by the INDEPENDENT recompute in
-    // tools/bpe_oracle_check.py (run `python3 tools/bpe_oracle_check.py
-    // /root/testdata/sf0.01 8` to re-derive — the geometry-oracle precedent).
-    // Note merge 6 is ('m','er'): a genuinely learned multi-char token.
-    // *** SF-PINNED (ADVICE r4): unlike every other oracle, these VALUES are
-    // the sf0.01 merge table — running Verify against a different sf dir
-    // turns this query red even though the engine is correct. If the driver
-    // sf ever changes, re-derive the constants with bpe_oracle_check.py at
-    // the new sf before reading a mismatch as an engine bug. ***
-    "bpe_train" ->
-      """SELECT CAST(rank AS BIGINT) AS rank, left_tok, right_tok, CAST(freq AS BIGINT) AS freq
-        |FROM (VALUES
-        |  (1, 'e', 'r', 4568),
-        |  (2, 'i', 'n', 2760),
-        |  (3, 'o', 'w', 2747),
-        |  (4, 'o', 'r', 2696),
-        |  (5, 's', 't', 2676),
-        |  (6, 'm', 'er', 1852),
-        |  (7, 'a', 't', 1845),
-        |  (8, 'l', 'u', 1831)) t(rank, left_tok, right_tok, freq)""".stripMargin,
-    // bpe_encode / bpe_fertility: sf-AGNOSTIC (unlike bpe_train) — the merge
-    // table is a FIXED parameter, and applying given merges is a pure
-    // recompute at any scale factor (see BpeEncodeSql)
-    "bpe_encode" -> BpeEncodeSql(
-      "SELECT doc_id, n_words, n_tokens FROM docs_tok"),
-    "bpe_fertility" -> BpeEncodeSql(
-      """SELECT d.lang AS lang, CAST(sum(t.n_words) AS BIGINT) AS n_words,
-        |       CAST(sum(t.n_tokens) AS BIGINT) AS n_tokens,
-        |       CAST((sum(t.n_tokens) * 1000) // sum(t.n_words) AS BIGINT) AS fertility_milli
-        |FROM docs_tok t JOIN documents d USING (doc_id) GROUP BY d.lang""".stripMargin),
-    // sequence_pack_shuffled: window cumsum ORDER BY the salted-FNV HUGEINT
-    // key — the single-partition plan the engine must avoid; same FNV CTE as
-    // train_shuffle (Python-validated 0/500)
-    "sequence_pack_shuffled" -> MixtureRowsSql(
-      """,
-        |w AS (SELECT doc_id, CAST(len(string_split(text,' ')) AS BIGINT) AS nt FROM documents),
-        |c AS (SELECT w.doc_id AS doc_id, nt, sum(nt + 1) OVER (ORDER BY h % (1::HUGEINT << 63), w.doc_id) AS oe
-        |      FROM w JOIN k ON w.doc_id = k.doc_id)
-        |SELECT doc_id, nt AS n_tokens, CAST(oe - (nt+1) AS BIGINT) AS offset_start,
-        |       CAST((oe - (nt+1)) // 2048 AS BIGINT) AS seq_first,
-        |       CAST((oe - 1) // 2048 AS BIGINT) AS seq_last
-        |FROM c""".stripMargin, salt = "shuf"),
-    // sequence_pack_bpe: the oracle's single-partition window cumsum over the
-    // ENCODED token counts — the plan the engine must avoid (sequence_pack
-    // precedent, composed on BpeEncodeSql's docs_tok)
-    "sequence_pack_bpe" -> BpeEncodeSql(
-      """,
-        |c AS (SELECT doc_id, n_tokens, sum(n_tokens + 1) OVER (ORDER BY doc_id) AS oe FROM docs_tok)
-        |SELECT doc_id, n_tokens, CAST(oe - (n_tokens+1) AS BIGINT) AS offset_start,
-        |       CAST((oe - (n_tokens+1)) // 2048 AS BIGINT) AS seq_first,
-        |       CAST((oe - 1) // 2048 AS BIGINT) AS seq_last
-        |FROM c""".stripMargin),
-    // readability: same vowel-run syllables + paragraph-grain sentence proxy
-    // + trunc-division milli-point Flesch in SQL
-    "readability" ->
-      """WITH w AS (SELECT doc_id, string_split(text, ' ') AS ws FROM documents),
-        |sy AS (SELECT doc_id, CAST(len(ws) AS BIGINT) AS nw,
-        |              CAST(sum(greatest(1, len(regexp_extract_all(x, '[aeiouy]+')))) AS BIGINT) AS syl
-        |       FROM (SELECT doc_id, ws, unnest(ws) AS x FROM w) GROUP BY doc_id, len(ws))
-        |SELECT doc_id, nw AS n_words, CAST((nw + 23) // 24 AS BIGINT) AS n_sentences, syl AS n_syllables,
-        |       CAST(206835 - (1015 * nw) // ((nw + 23) // 24) - (84600 * syl) // nw AS BIGINT) AS flesch_milli
-        |FROM sy""".stripMargin
-  )
+    * the same parquet tables. */
+  val oracleSql: Map[String, String] =
+    graft.queries.Registry.all.map(q => q.name -> q.oracle).toMap
 }

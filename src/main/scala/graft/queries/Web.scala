@@ -1,0 +1,1456 @@
+package graft.queries
+
+import org.apache.spark.sql.functions._
+
+import Shared._
+
+/** HTML main-content extraction (north_rule: boilerplate strip, DOM
+  * heuristics). documents -> deterministic boilerplate-wrapped HTML pages
+  * -> parse + readability-style block scoring -> paragraph text. The
+  * oracle is byte-identity: the recovered main text must equal the
+  * original document text re-chunked into 24-word paragraphs.
+  *
+  * Also URL normalization and host metrics, the host-graph algorithms,
+  * templates, mojibake repair, extraction evaluation and soft-404s. */
+object Web {
+
+  /** Shared link-inventory CTE (`rows`): every anchor of every generated
+    * page as (doc_id, ord0, href, anchor_text, in_main), recomputed from
+    * HtmlGen's modular arithmetic — the final SELECT runs over it. */
+  private def LinkRowsSql(select: String): String =
+    """WITH base AS (
+      |  SELECT doc_id, string_split(text, ' ') AS ws, len(string_split(text, ' ')) AS w,
+      |         CAST(ceil(len(string_split(text, ' '))/24.0) AS BIGINT) AS np,
+      |         CAST(4 + doc_id % 4 AS BIGINT) AS navn,
+      |         CAST(3 + doc_id % 3 AS BIGINT) AS siden
+      |  FROM documents
+      |), nav AS (
+      |  SELECT doc_id, k AS ord0, '/nav/' || k AS href,
+      |         list_extract(['homepage','politics','business','sciences','cultures','archives','weathers','sportive','contacts','newsfeed','features'],
+      |                      CAST(1 + (doc_id + k) % 11 AS BIGINT)) AS anchor_text,
+      |         FALSE AS in_main
+      |  FROM (SELECT doc_id, unnest(range(0, navn)) AS k FROM base)
+      |), rel AS (
+      |  SELECT doc_id, navn + k AS ord0, '/rel/' || k AS href,
+      |         list_extract(['trending now','most shared','editor desk','latest wire','top stories','deep dives'],
+      |                      CAST(1 + (doc_id + 2*k) % 6 AS BIGINT)) AS anchor_text,
+      |         FALSE AS in_main
+      |  FROM (SELECT doc_id, unnest(range(0, siden)) AS k, navn FROM base)
+      |), inl AS (
+      |  SELECT doc_id, navn + siden + (p - 2) // 3 AS ord0,
+      |         '/w/' || doc_id || '/' || p AS href,
+      |         list_extract(ws, CAST(least(24*(p+1), w) AS BIGINT)) AS anchor_text,
+      |         TRUE AS in_main
+      |  FROM (SELECT doc_id, unnest(range(0, np)) AS p, navn, siden, ws, w FROM base)
+      |  WHERE p % 3 = 2
+      |), foot AS (
+      |  SELECT doc_id, navn + siden + np // 3 + f.i AS ord0,
+      |         f.href AS href, f.anchor_text AS anchor_text, FALSE AS in_main
+      |  FROM base, (VALUES (0, '/about', 'about us!'), (1, '/terms', 'terms!!!')) AS f(i, href, anchor_text)
+      |), rows AS (
+      |  SELECT * FROM nav UNION ALL SELECT * FROM rel
+      |  UNION ALL SELECT * FROM inl UNION ALL SELECT * FROM foot
+      |)
+      |""".stripMargin + select
+
+  /** Unrolled k-core peel rounds over the host graph (k = 3). MATERIALIZED
+    * is load-bearing: each round references the previous CTE twice, so the
+    * un-materialized expansion is 4^rounds scans of the parquet. Rounds past
+    * the fixed point are no-ops, so a fixed unroll ≥ the data's peel depth
+    * (validated 2 at both sfs, tools/round5b_check.py asserts ≤ 8) equals
+    * the engine's data-dependent loop exactly. */
+  private def kcoreCtes(rounds: Int): String = {
+    val head =
+      """WITH e0 AS (
+        |  SELECT 'site' || (doc_id%7) || '.example.com' AS src,
+        |         'site' || ((2*doc_id+1)%7) || '.example.com' AS dst FROM documents
+        |  UNION ALL
+        |  SELECT 'site' || (doc_id%7) || '.example.com' AS src,
+        |         'site' || ((3*doc_id+2)%7) || '.example.com' AS dst FROM documents WHERE doc_id%3=0
+        |  UNION ALL
+        |  SELECT 'site' || (doc_id%7) || '.example.com' AS src,
+        |         'site0.example.com' AS dst FROM documents WHERE doc_id%5<2),
+        |und AS MATERIALIZED (SELECT DISTINCT least(src,dst) AS a, greatest(src,dst) AS b FROM e0 WHERE src <> dst),
+        |n0 AS MATERIALIZED (SELECT a AS host FROM und UNION SELECT b FROM und)""".stripMargin
+    val iters = (1 to rounds).map { r =>
+      s"""e$r AS MATERIALIZED (SELECT a, b FROM und WHERE a IN (SELECT host FROM n${r - 1}) AND b IN (SELECT host FROM n${r - 1})),
+         |n$r AS MATERIALIZED (SELECT host FROM (SELECT a AS host FROM e$r UNION ALL SELECT b FROM e$r) GROUP BY 1 HAVING count(*) >= 3)""".stripMargin
+    }
+    (head +: iters).mkString(",\n")
+  }
+
+  /** Unrolled personalized-PageRank rounds: hostRankCtes with all teleport
+    * mass at the seed (r0 = scale at seed, teleport paid only at seed). */
+  private def pprCtes(rounds: Int): String = {
+    val head =
+      """WITH e0 AS MATERIALIZED (
+        |  SELECT 'site' || (doc_id%7) || '.example.com' AS src,
+        |         'site' || ((2*doc_id+1)%7) || '.example.com' AS dst FROM documents
+        |  UNION ALL
+        |  SELECT 'site' || (doc_id%7) || '.example.com' AS src,
+        |         'site' || ((3*doc_id+2)%7) || '.example.com' AS dst FROM documents WHERE doc_id%3=0
+        |  UNION ALL
+        |  SELECT 'site' || (doc_id%7) || '.example.com' AS src,
+        |         'site0.example.com' AS dst FROM documents WHERE doc_id%5<2),
+        |e AS MATERIALIZED (SELECT src, dst, CAST(count(*) AS BIGINT) AS weight FROM e0 GROUP BY src, dst),
+        |ow AS MATERIALIZED (SELECT src, sum(weight) AS outw FROM e GROUP BY src),
+        |nodes AS MATERIALIZED (SELECT src AS host FROM e UNION SELECT dst FROM e),
+        |r0 AS MATERIALIZED (SELECT host, CASE WHEN host = 'site0.example.com' THEN 1000000 ELSE 0 END AS rank FROM nodes)""".stripMargin
+    val iters = (1 to rounds).map { k =>
+      s"""r$k AS MATERIALIZED (SELECT n.host,
+         |       (CASE WHEN n.host = 'site0.example.com' THEN (10000-8500)*1000000//10000 ELSE 0 END)
+         |       + coalesce(s.c, 0) AS rank
+         |       FROM nodes n LEFT JOIN (
+         |         SELECT e.dst AS host, sum((r${k - 1}.rank * e.weight * 8500) // (ow.outw * 10000)) AS c
+         |         FROM e JOIN ow USING (src) JOIN r${k - 1} ON r${k - 1}.host = e.src GROUP BY e.dst) s USING (host))""".stripMargin
+    }
+    (head +: iters).mkString(",\n")
+  }
+
+  /** host_rank oracle CTE chain: the synthetic edge recipe + `rounds`
+    * unrolled fixed-point PageRank iterations (r1..r`rounds`), generated so
+    * host_rank (3 rounds), crawl_budget (3 rounds) and host_rank_converged
+    * (40 rounds — an exact fixed point is invariant under further iteration,
+    * so any M >= the measured 28-29 convergence rounds matches at every sf)
+    * share one source of truth. `//` is DuckDB integral division (floor; all
+    * values non-negative so it matches Spark's trunc `div`). Every CTE is
+    * `AS MATERIALIZED`: DuckDB otherwise INLINES single-reference CTEs, and
+    * the 40-round chain re-expands nodes/e/ow per round — measured >2 min at
+    * sf0.01 plain vs 1.5 s materialized (bit-identical result, validated
+    * against the Python fixed-point recompute before wiring). */
+  private def hostRankCtes(rounds: Int): String = {
+    val head =
+      """WITH e0 AS MATERIALIZED (
+        |  SELECT 'site' || (doc_id%7) || '.example.com' AS src,
+        |         'site' || ((2*doc_id+1)%7) || '.example.com' AS dst FROM documents
+        |  UNION ALL
+        |  SELECT 'site' || (doc_id%7) || '.example.com' AS src,
+        |         'site' || ((3*doc_id+2)%7) || '.example.com' AS dst FROM documents WHERE doc_id%3=0
+        |  UNION ALL
+        |  SELECT 'site' || (doc_id%7) || '.example.com' AS src,
+        |         'site0.example.com' AS dst FROM documents WHERE doc_id%5<2),
+        |e AS MATERIALIZED (SELECT src, dst, CAST(count(*) AS BIGINT) AS weight FROM e0 GROUP BY src, dst),
+        |ow AS MATERIALIZED (SELECT src, sum(weight) AS outw FROM e GROUP BY src),
+        |nodes AS MATERIALIZED (SELECT src AS host FROM e UNION SELECT dst FROM e),
+        |nn AS MATERIALIZED (SELECT count(*) AS n FROM nodes),
+        |r0 AS MATERIALIZED (SELECT host, 1000000 // (SELECT n FROM nn) AS rank FROM nodes)""".stripMargin
+    val iters = (1 to rounds).map { k =>
+      s"""r$k AS MATERIALIZED (SELECT n.host, ((10000-8500)*1000000//10000) // (SELECT n FROM nn) + coalesce(s.c, 0) AS rank
+         |       FROM nodes n LEFT JOIN (
+         |         SELECT e.dst AS host, sum((r${k - 1}.rank * e.weight * 8500) // (ow.outw * 10000)) AS c
+         |         FROM e JOIN ow USING (src) JOIN r${k - 1} ON r${k - 1}.host = e.src GROUP BY e.dst) s USING (host))""".stripMargin
+    }.mkString(",\n")
+    head + ",\n" + iters
+  }
+
+  /** Unrolled HITS CTE chain over the synthetic host graph (same edge recipe
+    * as hostRankCtes): per round k, auth half (hub-weighted in-edge sum,
+    * max-renormalized with one trunc division) then hub half symmetrically.
+    * Python-validated 7/7 at sf0.01 and sf0.001 (tools/hits_check.py). */
+  private def hitsCtes(rounds: Int): String = {
+    val head =
+      """WITH e0 AS MATERIALIZED (
+        |  SELECT 'site' || (doc_id%7) || '.example.com' AS src,
+        |         'site' || ((2*doc_id+1)%7) || '.example.com' AS dst FROM documents
+        |  UNION ALL
+        |  SELECT 'site' || (doc_id%7) || '.example.com' AS src,
+        |         'site' || ((3*doc_id+2)%7) || '.example.com' AS dst FROM documents WHERE doc_id%3=0
+        |  UNION ALL
+        |  SELECT 'site' || (doc_id%7) || '.example.com' AS src,
+        |         'site0.example.com' AS dst FROM documents WHERE doc_id%5<2),
+        |e AS MATERIALIZED (SELECT src, dst, CAST(count(*) AS BIGINT) AS weight FROM e0 GROUP BY src, dst),
+        |nodes AS MATERIALIZED (SELECT src AS host FROM e UNION SELECT dst FROM e),
+        |h0 AS MATERIALIZED (SELECT host, 1000000 AS hub FROM nodes)""".stripMargin
+    val iters = (1 to rounds).map { k =>
+      s"""a${k}r AS MATERIALIZED (SELECT e.dst AS host, sum(h${k - 1}.hub * e.weight) AS raw
+         |  FROM e JOIN h${k - 1} ON h${k - 1}.host = e.src GROUP BY e.dst),
+         |a$k AS MATERIALIZED (SELECT n.host, coalesce((a${k}r.raw * 1000000) // (SELECT max(raw) FROM a${k}r), 0) AS auth
+         |  FROM nodes n LEFT JOIN a${k}r USING (host)),
+         |h${k}r AS MATERIALIZED (SELECT e.src AS host, sum(a$k.auth * e.weight) AS raw
+         |  FROM e JOIN a$k ON a$k.host = e.dst GROUP BY e.src),
+         |h$k AS MATERIALIZED (SELECT n.host, coalesce((h${k}r.raw * 1000000) // (SELECT max(raw) FROM h${k}r), 0) AS hub
+         |  FROM nodes n LEFT JOIN h${k}r USING (host))""".stripMargin
+    }.mkString(",\n")
+    head + ",\n" + iters
+  }
+
+  /** URL normalization: the UDF path and its codegen expression twin. */
+  private val UrlNormalizeOracleSql =
+    """SELECT doc_id,
+      |  (CASE WHEN doc_id%2=0 THEN 'http' ELSE 'https' END)||'://site'||(doc_id%7)||'.example.com/Path/p'||(doc_id%11)||
+      |  (CASE WHEN doc_id%5 IN (0,1) THEN '?q='||(doc_id%13) ELSE '' END) AS url_norm,
+      |  'site'||(doc_id%7)||'.example.com' AS host
+      |FROM documents""".stripMargin
+
+  val queries: Seq[Q] = Seq(
+    Q("domain_pareto", (s, dir) =>
+      // corpus-concentration report: token mass by registered domain with
+      // rank + cumulative share; corpus agg to domain grain, report-sized
+      // window after
+      graft.webtext.UrlOps.domainPareto(tp(s, dir, "documents")).orderBy("rnk"),
+      // domain_pareto: replays the plantHosts walk collapsed straight to the
+      // registered domain (the PSL reduction is constant per branch), then the
+      // same rank / cumulative-share window. Integer bp, trunc division.
+      // Validated by tools/new_ops_oracle_check.py (23/23 rows at sf0.01).
+      """WITH h AS (SELECT doc_id, text,
+        |  CASE doc_id%10
+        |    WHEN 0 THEN 'news' || (doc_id%5) || '.co.uk'
+        |    WHEN 1 THEN 'blog' || (doc_id%7) || '.github.io'
+        |    WHEN 2 THEN 'example.com'
+        |    WHEN 3 THEN CASE WHEN doc_id%9=0 THEN '' ELSE 'corp' || (doc_id%3) || '.com.au' END
+        |    WHEN 4 THEN 'deep' || (doc_id%4) || '.org'
+        |    WHEN 5 THEN 'cdn' || (doc_id%6) || '.net'
+        |    WHEN 6 THEN 'shop' || (doc_id%5) || '.co.jp'
+        |    WHEN 7 THEN '192.168.' || (doc_id%4) || '.10'
+        |    WHEN 8 THEN 'example.zz'
+        |    ELSE 'localhost' END AS domain
+        |  FROM documents),
+        |d AS (SELECT domain, CAST(sum(len(string_split(text,' '))) AS BIGINT) AS n_tokens
+        |      FROM h GROUP BY domain),
+        |r AS (SELECT domain, n_tokens,
+        |        CAST(row_number() OVER (ORDER BY n_tokens DESC, domain) AS BIGINT) AS rnk,
+        |        CAST(sum(n_tokens) OVER (ORDER BY n_tokens DESC, domain
+        |             ROWS UNBOUNDED PRECEDING) AS BIGINT) AS cum_tokens
+        |      FROM d),
+        |t AS (SELECT sum(n_tokens) AS tt FROM d)
+        |SELECT domain, n_tokens, rnk, cum_tokens,
+        |       CAST(cum_tokens * 10000 // tt AS BIGINT) AS cum_share_bp
+        |FROM r, t ORDER BY rnk""".stripMargin),
+    Q("ppr_hosts", (s, dir) =>
+      // personalized PageRank (random walk with restart at site0): rank =
+      // proximity to the seed; unreachable hosts stay exactly 0
+      graft.webtext.HostRank.pprRank(
+        graft.webtext.HostRank.hostEdges(tp(s, dir, "documents")),
+        "site0.example.com")
+        .orderBy("host"),
+      // ppr_hosts: unrolled personalized-PageRank rounds (teleport at seed
+      // only); Python-validated at both sfs incl. the unreachable-host zero
+      // (tools/round5e_check.py)
+      (pprCtes(3) + "\nSELECT host, CAST(rank AS BIGINT) AS rank FROM r3 ORDER BY host")),
+    Q("hyperball_reach", (s, dir) =>
+      // HyperBall neighborhood function: per-host reach |ball(v,r)| as an
+      // HLL sketch, BFS round = edge-grain join + (host,register) max —
+      // linear in edges, reach-size-independent (exact column = audit only)
+      graft.webtext.HyperBall.reach(
+        graft.webtext.HostRank.hostEdges(tp(s, dir, "documents")))
+        .orderBy("host", "r"),
+      // hyperball_reach: the full sketch recomputed in SQL — FNV of the host
+      // string through the HUGEINT splitmix64 chain (the hll_distinct CTE
+      // shapes), 3 register-max rounds over the self-looped adjacency, grid
+      // fill + the same alpha·m²·2^59 integer estimator; exact balls via the
+      // unrolled pair closure. Python-validated 21/21 rows at both sfs
+      // (tools/round5d_check.py)
+      """WITH e0 AS (
+        |  SELECT 'site' || (doc_id%7) || '.example.com' AS src,
+        |         'site' || ((2*doc_id+1)%7) || '.example.com' AS dst FROM documents
+        |  UNION ALL
+        |  SELECT 'site' || (doc_id%7) || '.example.com' AS src,
+        |         'site' || ((3*doc_id+2)%7) || '.example.com' AS dst FROM documents WHERE doc_id%3=0
+        |  UNION ALL
+        |  SELECT 'site' || (doc_id%7) || '.example.com' AS src,
+        |         'site0.example.com' AS dst FROM documents WHERE doc_id%5<2),
+        |und AS MATERIALIZED (SELECT DISTINCT least(src,dst) AS a, greatest(src,dst) AS b FROM e0 WHERE src <> dst),
+        |hosts AS MATERIALIZED (SELECT a AS host FROM und UNION SELECT b FROM und),
+        |adj AS MATERIALIZED (SELECT a AS u, b AS v FROM und UNION SELECT b, a FROM und
+        |                     UNION SELECT host, host FROM hosts),
+        |f AS (SELECT host, list_reduce(list_prepend(14695981039346656037::HUGEINT,
+        |        [unicode(c)::HUGEINT for c in string_split(host, '')]),
+        |        (h,b) -> ((h - h%128 + xor((h%128)::BIGINT, b::BIGINT)::HUGEINT) * 1099511628211::HUGEINT) % (1::HUGEINT<<64)) AS v
+        |      FROM hosts),
+        |h1 AS (SELECT host, (v + 11400714819323198485) % 18446744073709551616 AS z FROM f),
+        |h2 AS (SELECT host, xor(z, z >> 30) AS x FROM h1),
+        |h3 AS (SELECT host,
+        |         ((x % 4294967296) * 484763065
+        |          + (((x % 4294967296) * 3210233709 + (x // 4294967296) * 484763065) % 4294967296) * 4294967296)
+        |         % 18446744073709551616 AS z
+        |       FROM h2),
+        |h4 AS (SELECT host, xor(z, z >> 27) AS x FROM h3),
+        |h5 AS (SELECT host,
+        |         ((x % 4294967296) * 321982955
+        |          + (((x % 4294967296) * 2496678331 + (x // 4294967296) * 321982955) % 4294967296) * 4294967296)
+        |         % 18446744073709551616 AS z
+        |       FROM h4),
+        |hh AS (SELECT host, xor(z, z >> 31) AS h FROM h5),
+        |s0 AS MATERIALIZED (SELECT host, CAST(h // 288230376151711744 AS BIGINT) AS idx,
+        |        CAST(CASE WHEN h % 288230376151711744 = 0 THEN 59
+        |                  ELSE 58 - len(bin(h % 288230376151711744)) + 1 END AS BIGINT) AS rho
+        |      FROM hh),
+        |s1 AS MATERIALIZED (SELECT adj.u AS host, idx, max(rho) AS rho FROM adj JOIN s0 ON s0.host = adj.v GROUP BY 1, 2),
+        |s2 AS MATERIALIZED (SELECT adj.u AS host, idx, max(rho) AS rho FROM adj JOIN s1 ON s1.host = adj.v GROUP BY 1, 2),
+        |s3 AS MATERIALIZED (SELECT adj.u AS host, idx, max(rho) AS rho FROM adj JOIN s2 ON s2.host = adj.v GROUP BY 1, 2),
+        |p0 AS MATERIALIZED (SELECT host, host AS member FROM hosts),
+        |p1 AS MATERIALIZED (SELECT DISTINCT adj.u AS host, p0.member FROM adj JOIN p0 ON p0.host = adj.v),
+        |p2 AS MATERIALIZED (SELECT DISTINCT adj.u AS host, p1.member FROM adj JOIN p1 ON p1.host = adj.v),
+        |p3 AS MATERIALIZED (SELECT DISTINCT adj.u AS host, p2.member FROM adj JOIN p2 ON p2.host = adj.v),
+        |grid AS (SELECT hosts.host, g.i AS idx FROM hosts, UNNEST(generate_series(0, 63)) g(i)),
+        |est AS (
+        |  SELECT 1 AS r, grid.host, sum(CAST(1 AS HUGEINT) << (59 - coalesce(s1.rho, 0))) AS z2
+        |  FROM grid LEFT JOIN s1 ON grid.host = s1.host AND grid.idx = s1.idx GROUP BY 1, 2
+        |  UNION ALL
+        |  SELECT 2, grid.host, sum(CAST(1 AS HUGEINT) << (59 - coalesce(s2.rho, 0)))
+        |  FROM grid LEFT JOIN s2 ON grid.host = s2.host AND grid.idx = s2.idx GROUP BY 1, 2
+        |  UNION ALL
+        |  SELECT 3, grid.host, sum(CAST(1 AS HUGEINT) << (59 - coalesce(s3.rho, 0)))
+        |  FROM grid LEFT JOIN s3 ON grid.host = s3.host AND grid.idx = s3.idx GROUP BY 1, 2),
+        |ex AS (
+        |  SELECT 1 AS r, host, count(*)::BIGINT AS ball_exact FROM p1 GROUP BY 1, 2
+        |  UNION ALL SELECT 2, host, count(*)::BIGINT FROM p2 GROUP BY 1, 2
+        |  UNION ALL SELECT 3, host, count(*)::BIGINT FROM p3 GROUP BY 1, 2)
+        |SELECT est.host, CAST(est.r AS BIGINT) AS r,
+        |       CAST((709343 * CAST(4096 AS HUGEINT) * 576460752303423488) // (1000000 * z2) AS BIGINT) AS ball_est,
+        |       ex.ball_exact
+        |FROM est JOIN ex ON est.host = ex.host AND est.r = ex.r
+        |ORDER BY est.host, est.r""".stripMargin),
+
+    Q("url_normalize", (s, dir) => {
+      // crawl-url canonicalization (case folding, www./default-port strip,
+      // fragment drop, tracking-param removal) over planted messy urls —
+      // the canonical key URL-exact dedup and host blocklists run on
+      graft.webtext.UrlOps.withNormalized(
+        graft.webtext.UrlOps.plantMessyUrls(tp(s, dir, "documents")))
+        .select("doc_id", "url_norm", "host")
+    },
+      UrlNormalizeOracleSql),
+    Q("url_normalize_sql_expr", (s, dir) => {
+      // codegen Catalyst-Expression twin of url_normalize (same static
+      // methods, SQL-registered) — no ScalaUDF boundary, WholeStageCodegen
+      graft.expr.UrlNormalizeExpr.register(s)
+      graft.webtext.UrlOps.plantMessyUrls(tp(s, dir, "documents"))
+        .createOrReplaceTempView("graft_urls_tmp")
+      // url_host takes the NORMALIZED url: the repeated url_normalize(url)
+      // subtree is evaluated once by codegen subexpression elimination
+      s.sql("""SELECT doc_id, url_normalize(url) AS url_norm,
+              |       url_host(url_normalize(url)) AS host
+              |FROM graft_urls_tmp""".stripMargin)
+    },
+      UrlNormalizeOracleSql),
+    Q("host_prefix_trim", (s, dir) => {
+      // per-host banner prefixes (planted on hosts 0-3) trimmed via the
+      // min/max-lexicographic LCP identity — one host-grain agg, no pairs
+      val d = tp(s, dir, "documents")
+      val corpus = d.select(col("doc_id"),
+        concat(lit("site"), (col("doc_id") % 7).cast("string"), lit(".example.com")).as("host"),
+        when(col("doc_id") % 7 < 4,
+          concat(lit("WELCOME TO SITE"), (col("doc_id") % 7).cast("string"),
+            lit(" NAV HOME | "), col("text"))).otherwise(col("text")).as("text"))
+      graft.webtext.Templates.prefixTrim(corpus)
+    },
+      // host_prefix_trim: the oracle reproduces the min/max LCP identity;
+      // prefix-match is monotone in k so counting matching prefixes IS the
+      // LCP (list comprehension — generate_series can't take lateral args)
+      """WITH c AS (SELECT doc_id, 'site' || (doc_id%7) || '.example.com' AS host,
+        |                  CASE WHEN doc_id%7 < 4
+        |                       THEN 'WELCOME TO SITE' || (doc_id%7) || ' NAV HOME | ' || text
+        |                       ELSE text END AS text
+        |           FROM documents),
+        |mm AS (SELECT host, min(text) AS mn, max(text) AS mx FROM c GROUP BY host),
+        |l AS (SELECT host,
+        |             len(list_filter([substring(mn, 1, k) = substring(mx, 1, k)
+        |                              for k in range(1, least(length(mn), length(mx)) + 1)],
+        |                             x -> x)) AS lcp
+        |      FROM mm)
+        |SELECT c.doc_id, c.host, CAST(l.lcp AS BIGINT) AS lcp_len,
+        |       substring(c.text, l.lcp + 1) AS trimmed
+        |FROM c JOIN l USING (host)""".stripMargin),
+    Q("mirror_hosts", (s, dir) => {
+      // mirror-host detection: planted full mirror of site3 must pair, the
+      // partial mirror of site5 (docs with doc_id%35==5 missing) must NOT
+      val d = tp(s, dir, "documents")
+      val base = d.select(
+        concat(lit("site"), (col("doc_id") % 7).cast("string"), lit(".example.com")).as("host"),
+        col("text"))
+      val mirror = d.filter(col("doc_id") % 7 === 3)
+        .select(lit("mirror3.example.com").as("host"), col("text"))
+      val partial = d.filter(col("doc_id") % 7 === 5 && col("doc_id") % 35 =!= 5)
+        .select(lit("partial5.example.com").as("host"), col("text"))
+      graft.webtext.Mirrors.mirrorHosts(base.unionByName(mirror).unionByName(partial))
+    },
+      // mirror_hosts: content-SET fingerprint (bit_xor over distinct FNV
+      // hashes, signed-BIGINT view of the unsigned HUGEINT fold) recomputed in
+      // full; planted mirror pairs, planted partial mirror stays unmatched
+      """WITH base AS (SELECT doc_id, 'site' || (doc_id % 7) || '.example.com' AS host, text
+        |              FROM documents),
+        |pl AS (SELECT host, text FROM base
+        |       UNION ALL
+        |       SELECT 'mirror3.example.com', text FROM base WHERE doc_id % 7 = 3
+        |       UNION ALL
+        |       SELECT 'partial5.example.com', text FROM base WHERE doc_id % 7 = 5 AND doc_id % 35 != 5),
+        |fnv AS (SELECT host, list_reduce(
+        |           list_prepend(14695981039346656037::HUGEINT,
+        |                        [unicode(ch)::HUGEINT for ch in string_split(text, '')]),
+        |           (h, x) -> ((h - h % 256 + xor((h % 256)::BIGINT, x::BIGINT)::HUGEINT)
+        |                      * 1099511628211::HUGEINT) % (1::HUGEINT << 64)) AS hu
+        |        FROM pl),
+        |th AS (SELECT DISTINCT host,
+        |              CAST(hu - CASE WHEN hu >= (1::HUGEINT << 63)
+        |                             THEN (1::HUGEINT << 64) ELSE 0::HUGEINT END AS BIGINT) AS h
+        |       FROM fnv),
+        |fp AS (SELECT host, bit_xor(h) AS fp, CAST(count(*) AS BIGINT) AS n_docs FROM th GROUP BY host),
+        |m AS (SELECT a.host, min(b.host) AS partner
+        |      FROM fp a JOIN fp b ON a.fp = b.fp AND a.n_docs = b.n_docs AND a.host != b.host
+        |      GROUP BY a.host)
+        |SELECT fp.host, fp.fp, fp.n_docs, COALESCE(m.partner, '') AS mirror_of
+        |FROM fp LEFT JOIN m USING (host)""".stripMargin),
+    Q("host_stats", (s, dir) => {
+      // host-grain rollup on the canonical host: docs + content chars per host
+      graft.webtext.UrlOps.hostStats(
+        graft.webtext.UrlOps.plantMessyUrls(tp(s, dir, "documents")), "text")
+    },
+      """SELECT 'site'||(doc_id%7)||'.example.com' AS host,
+        |       count(*) AS n_docs, CAST(sum(length(text)) AS BIGINT) AS total_chars
+        |FROM documents GROUP BY 1""".stripMargin),
+    // eTLD+1 extraction (public-suffix longest match, prevailing-rule
+    // fallback, private registries, IPv4/single-label edge cases) — pure
+    // builtin when-chain + anchored regexp, map-side codegen, no UDF
+    Q("registered_domain", (s, dir) =>
+      graft.webtext.UrlOps.withRegisteredDomain(
+          graft.webtext.UrlOps.plantHosts(tp(s, dir, "documents")))
+        .select("doc_id", "host", "suffix", "registered_domain")
+        .orderBy("doc_id"),
+      // registered_domain: the oracle recomputes the eTLD+1 CASE-by-CASE from
+      // doc_id arithmetic (geometry-family pattern — the engine runs the
+      // generic longest-suffix matcher, the oracle pins each fixture branch's
+      // expected result); Python-validated 500/500 vs an independent PSL
+      // recompute at sf0.01.
+      """WITH h AS (SELECT doc_id,
+        |  CASE doc_id%10
+        |    WHEN 0 THEN 'www.news' || (doc_id%5) || '.co.uk'
+        |    WHEN 1 THEN 'blog' || (doc_id%7) || '.github.io'
+        |    WHEN 2 THEN 'site' || (doc_id%7) || '.example.com'
+        |    WHEN 3 THEN CASE WHEN doc_id%9=0 THEN 'co.uk' ELSE 'media.corp' || (doc_id%3) || '.com.au' END
+        |    WHEN 4 THEN 'a.b.deep' || (doc_id%4) || '.org'
+        |    WHEN 5 THEN 'cdn' || (doc_id%6) || '.net'
+        |    WHEN 6 THEN 'shop' || (doc_id%5) || '.co.jp'
+        |    WHEN 7 THEN '192.168.' || (doc_id%4) || '.10'
+        |    WHEN 8 THEN 'intranet.example.zz'
+        |    ELSE 'localhost' END AS host FROM documents)
+        |SELECT doc_id, host,
+        |  CASE doc_id%10
+        |    WHEN 0 THEN 'co.uk' WHEN 1 THEN 'github.io' WHEN 2 THEN 'com'
+        |    WHEN 3 THEN CASE WHEN doc_id%9=0 THEN 'co.uk' ELSE 'com.au' END
+        |    WHEN 4 THEN 'org' WHEN 5 THEN 'net' WHEN 6 THEN 'co.jp'
+        |    WHEN 7 THEN '' WHEN 8 THEN 'zz' ELSE '' END AS suffix,
+        |  CASE doc_id%10
+        |    WHEN 0 THEN 'news' || (doc_id%5) || '.co.uk'
+        |    WHEN 1 THEN 'blog' || (doc_id%7) || '.github.io'
+        |    WHEN 2 THEN 'example.com'
+        |    WHEN 3 THEN CASE WHEN doc_id%9=0 THEN '' ELSE 'corp' || (doc_id%3) || '.com.au' END
+        |    WHEN 4 THEN 'deep' || (doc_id%4) || '.org'
+        |    WHEN 5 THEN 'cdn' || (doc_id%6) || '.net'
+        |    WHEN 6 THEN 'shop' || (doc_id%5) || '.co.jp'
+        |    WHEN 7 THEN '192.168.' || (doc_id%4) || '.10'
+        |    WHEN 8 THEN 'example.zz'
+        |    ELSE 'localhost' END AS registered_domain
+        |FROM h ORDER BY doc_id""".stripMargin),
+    Q("html_main_content", (s, dir) => {
+      graft.webtext.WebText.mainContent(
+        graft.webtext.WebText.htmlPages(tp(s, dir, "documents")).toDF()).toDF()
+    },
+      // main-content byte-identity: same word-chunk reassembly as the fulltext
+      // oracle, at the HTML generator's 24-word paragraph grain (typed and
+      // codegen-Expression paths must produce identical bytes)
+      HtmlMainOracleSql),
+    Q("html_main_sql_expr", (s, dir) => {
+      // codegen'd Catalyst Expression twin of html_main_content: the whole
+      // scan -> boilerplate-strip pipeline stays inside WholeStageCodegen
+      graft.expr.HtmlMainTextExpr.register(s)
+      graft.webtext.WebText.htmlPages(tp(s, dir, "documents")).toDF()
+        .createOrReplaceTempView("graft_html_pages_tmp")
+      s.sql("SELECT url, html_main_text(html) AS extracted_text FROM graft_html_pages_tmp")
+    }, HtmlMainOracleSql),
+    Q("html_block_stats", (s, dir) => {
+      graft.webtext.WebText.blockStats(
+        graft.webtext.WebText.htmlPages(tp(s, dir, "documents")).toDF()).toDF()
+    },
+      // DOM statistics recomputed from the generator's arithmetic: nav links
+      // 4+id%4, sidebar 3+id%3, footer 2, inline anchors floor(P/3); paragraphs
+      // P + promo + copyright; comment divs 2+id%2; the chosen block is the
+      // article, so main_chars = length(text) - (P-1) separator spaces
+      """WITH d AS (SELECT doc_id, length(text) AS tl,
+        |                  CAST(ceil(len(string_split(text,' '))/24.0) AS BIGINT) AS np
+        |           FROM documents)
+        |SELECT 'doc://' || doc_id AS url,
+        |       CAST(9 + doc_id%4 + doc_id%3 + np//3 AS BIGINT) AS n_anchors,
+        |       CAST(np + 2 AS BIGINT) AS n_paragraphs,
+        |       CAST(2 + doc_id%2 AS BIGINT) AS n_comment_divs,
+        |       np AS main_paragraphs,
+        |       CAST(tl - (np - 1) AS BIGINT) AS main_chars
+        |FROM d""".stripMargin),
+    Q("html_to_markdown", (s, dir) => {
+      // boilerplate strip + Markdown re-serialization of the main block:
+      // headings/paragraph structure and inline emphasis/links preserved.
+      // Byte-identity oracle: the render is reconstructible from the
+      // generator's paragraph arithmetic (bold first word when p%3==1,
+      // trailing [last](/w/id/p) link when p%3==2).
+      graft.webtext.WebText.mainMarkdown(
+        graft.webtext.WebText.htmlPages(tp(s, dir, "documents")).toDF()).toDF()
+    },
+      // Markdown render reconstructed from the generator's paragraph
+      // arithmetic: '# document {id}' heading, blank-line-joined paragraphs,
+      // '**first**' when p%3==1, trailing '[last](/w/{id}/{p})' when p%3==2
+      // (single-word chunks degenerate to the bare marked word — the CASEs
+      // guard len(chunk)=1). Python-validated 0/500 before wiring.
+      """WITH d AS (SELECT doc_id, string_split(text,' ') AS ws FROM documents),
+        |p AS (SELECT doc_id, CAST((i-1)//24 AS BIGINT) AS p, ws[i:i+23] AS chunk
+        |      FROM d, UNNEST(generate_series(1, len(ws), 24)) AS t(i)),
+        |r AS (SELECT doc_id, p,
+        |        CASE
+        |          WHEN p%3=1 THEN '**'||chunk[1]||'**' ||
+        |               CASE WHEN len(chunk) > 1 THEN ' '||array_to_string(chunk[2:], ' ') ELSE '' END
+        |          WHEN p%3=2 THEN CASE WHEN len(chunk) > 1 THEN array_to_string(chunk[1:len(chunk)-1], ' ')||' ' ELSE '' END
+        |               || '['||chunk[len(chunk)]||'](/w/'||doc_id||'/'||p||')'
+        |          ELSE array_to_string(chunk, ' ')
+        |        END AS m
+        |      FROM p)
+        |SELECT 'doc://'||doc_id AS url,
+        |       '# document '||doc_id || chr(10)||chr(10) ||
+        |       string_agg(m, chr(10)||chr(10) ORDER BY p) AS markdown
+        |FROM r GROUP BY doc_id""".stripMargin),
+    Q("paragraph_spans", (s, dir) => {
+      // span-level addressing into the extracted main text (north_rule:
+      // "extracted text/spans per document"): per-paragraph [start, end)
+      // char offsets such that extract(html).substring(start, end) is the
+      // paragraph. Map-side flatMap, no shuffle.
+      graft.webtext.WebText.paragraphSpans(
+        graft.webtext.WebText.htmlPages(tp(s, dir, "documents")).toDF()).toDF()
+    },
+      // paragraph spans: cumulative 24-word-chunk lengths + one '\n' joint per
+      // boundary; substring(extracted, start, len) == paragraph by
+      // construction. Python-validated 0/1355 before wiring.
+      """WITH d AS (SELECT doc_id, string_split(text,' ') AS ws FROM documents),
+        |p AS (SELECT doc_id, CAST((i-1)//24 AS BIGINT) AS p,
+        |             CAST(length(array_to_string(ws[i:i+23], ' ')) AS BIGINT) AS plen
+        |      FROM d, UNNEST(generate_series(1, len(ws), 24)) AS t(i))
+        |SELECT 'doc://'||doc_id AS url, p AS para_idx,
+        |       CAST(coalesce(sum(plen) OVER (PARTITION BY doc_id ORDER BY p
+        |             ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0) + p AS BIGINT) AS start_off,
+        |       CAST(coalesce(sum(plen) OVER (PARTITION BY doc_id ORDER BY p
+        |             ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0) + p + plen AS BIGINT) AS end_off,
+        |       plen AS n_chars
+        |FROM p""".stripMargin),
+    Q("paragraph_dedup", (s, dir) =>
+      // corpus exact-paragraph dedup AUDIT (RefinedWeb grain) at span
+      // addressing: first-occurrence flag + copy count per paragraph span.
+      // Paragraph text never crosses a shuffle (8-byte phash only).
+      graft.webtext.WebText.paragraphDedup(
+        graft.webtext.WebText.htmlPages(tp(s, dir, "documents")).toDF()),
+      // paragraph dedup audit: the oracle windows over raw paragraph TEXT where
+      // the engine windows over its xxhash64 — identical barring a 64-bit
+      // collision (the dedup_exact tradeoff). Python-validated 0/1355 (45 dup
+      // rows at sf0.01) before wiring.
+      """WITH d AS (SELECT doc_id, string_split(text,' ') AS ws FROM documents),
+        |p AS (SELECT doc_id, CAST((i-1)//24 AS BIGINT) AS p,
+        |             array_to_string(ws[i:i+23],' ') AS para,
+        |             CAST(length(array_to_string(ws[i:i+23], ' ')) AS BIGINT) AS plen
+        |      FROM d, UNNEST(generate_series(1, len(ws), 24)) AS t(i)),
+        |s AS (SELECT doc_id, p, para, plen,
+        |        coalesce(sum(plen) OVER (PARTITION BY doc_id ORDER BY p
+        |          ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING),0) + p AS start_off
+        |      FROM p),
+        |w AS (SELECT doc_id, p, plen, start_off,
+        |        row_number() OVER (PARTITION BY para ORDER BY doc_id, p) AS rn,
+        |        count(*) OVER (PARTITION BY para) AS ndups
+        |      FROM s)
+        |SELECT 'doc://'||doc_id AS url, p AS para_idx,
+        |   CAST(start_off AS BIGINT) AS start_off, CAST(start_off+plen AS BIGINT) AS end_off,
+        |   CAST(CASE WHEN rn = 1 THEN 1 ELSE 0 END AS BIGINT) AS is_first,
+        |   CAST(ndups AS BIGINT) AS n_dups
+        |FROM w""".stripMargin),
+    Q("paragraph_dedup_clean", (s, dir) =>
+      // corpus paragraph dedup APPLIED: pages re-emitted with non-first
+      // duplicate paragraphs cut; fully-duplicate pages drop out. Text moves
+      // exactly twice (phash window, url regroup) — the RefinedWeb plan.
+      graft.webtext.WebText.paragraphDedupClean(
+        graft.webtext.WebText.htmlPages(tp(s, dir, "documents")).toDF()),
+      // applied paragraph dedup: keep rn=1 rows, rejoin with '\n' in paragraph
+      // order; docs with zero kept paragraphs drop out (GROUP BY over kept rows
+      // only). Python-validated 0/499 (1 doc fully dropped) before wiring.
+      """WITH d AS (SELECT doc_id, string_split(text,' ') AS ws FROM documents),
+        |p AS (SELECT doc_id, CAST((i-1)//24 AS BIGINT) AS p,
+        |             array_to_string(ws[i:i+23],' ') AS para
+        |      FROM d, UNNEST(generate_series(1, len(ws), 24)) AS t(i)),
+        |w AS (SELECT doc_id, p, para,
+        |        row_number() OVER (PARTITION BY para ORDER BY doc_id, p) AS rn
+        |      FROM p)
+        |SELECT 'doc://'||doc_id AS url,
+        |       string_agg(para, chr(10) ORDER BY p) AS clean_text,
+        |       CAST(count(*) AS BIGINT) AS n_kept
+        |FROM w WHERE rn = 1 GROUP BY doc_id""".stripMargin),
+    Q("warc_extract", (s, dir) => {
+      // the Common-Crawl ingestion edge: deterministic WARC segment blobs ->
+      // record-boundary walk -> boilerplate strip; must be byte-identical to
+      // reading the pages table directly, so it shares html_main_content's
+      // oracle
+      graft.webtext.Warc.extractFromSegments(
+        graft.webtext.Warc.segmentsFromDocuments(tp(s, dir, "documents"))).toDF()
+    },
+      // the WARC path must recover the pages byte-identically, so its oracle
+      // IS the main-content oracle; warc_stats recomputes the segment audit
+      // from doc_id arithmetic (make_timestamp is NTZ in DuckDB — the strftime
+      // render is TZ-invariant, verified under Asia/Kolkata + America/New_York)
+      HtmlMainOracleSql),
+    Q("wet_extract", (s, dir) =>
+      // WARC -> WET conversion segments (the .warc.wet derived artifact) ->
+      // read BACK with the same walker: one fused parse+extract+re-emit pass
+      // per segment, no shuffle; dates ride as ISO strings end-to-end
+      graft.webtext.Warc.wetParse(
+        graft.webtext.Warc.wetSegments(
+          graft.webtext.Warc.segmentsFromDocuments(tp(s, dir, "documents"))))
+        .toDF().orderBy("url"),
+      // wet_extract: WET rows reconstructed in closed form — the payload is
+      // html_main_content's 24-word rechunk (same char count as the raw text,
+      // ASCII, so content_length = its length), the date is the response
+      // record's ISO render of doc_id*3600s
+      """SELECT 'doc://' || doc_id AS url,
+        |       strftime(make_timestamp(doc_id*3600*1000000), '%Y-%m-%dT%H:%M:%SZ') AS warc_date,
+        |       CAST(length(extracted_text) AS BIGINT) AS content_length,
+        |       extracted_text
+        |FROM (SELECT doc_id,
+        |        array_to_string([array_to_string(words[i:i+23], ' ')
+        |                         for i in range(1, len(words)+1, 24)], chr(10)) AS extracted_text
+        |      FROM (SELECT doc_id, string_split(text, ' ') AS words FROM documents))
+        |ORDER BY url""".stripMargin),
+    Q("cdx_index", (s, dir) =>
+      // CDX capture index (the Common-Crawl index artifact): per-record byte
+      // offset + total length inside its WARC segment, so a fetcher can
+      // range-read one record. Map-side walk, records-sized output, page
+      // bytes never materialized. Oracle rebuilds every offset from the
+      // generator's closed-form page-length arithmetic.
+      graft.webtext.Warc.cdxIndex(
+        graft.webtext.Warc.segmentsFromDocuments(tp(s, dir, "documents"))).toDF(),
+      // cdx_index: every byte offset recomputed from the generator's
+      // closed-form page-length model — skeleton constants measured from the
+      // builder literals, label pools as CASE tables, paragraph markup overhead
+      // as per-index list_sum, WARC header = 113 + digits(doc_id) +
+      // digits(clen) + clen. Python-validated 0/500 before wiring.
+      """WITH d AS (SELECT doc_id, text, string_split(text,' ') AS ws FROM documents),
+        |c AS (SELECT doc_id, text,
+        |        CAST((len(ws) + 23) // 24 AS BIGINT) AS np,
+        |        length(CAST(doc_id AS VARCHAR)) AS tid,
+        |        4 + doc_id % 4 AS navn, 3 + doc_id % 3 AS siden, 2 + doc_id % 2 AS comn
+        |      FROM d),
+        |clen AS (SELECT doc_id,
+        |    244 + 2*tid
+        |    + navn * 39
+        |    + 50
+        |    + list_sum([34 + (CASE (doc_id+2*k)%6 WHEN 0 THEN 12 WHEN 5 THEN 10 ELSE 11 END) for k in range(0, siden)])
+        |    + 28 + (CASE doc_id%5 WHEN 0 THEN 13 ELSE 12 END)
+        |    + (CASE WHEN doc_id%2=1 THEN 26 ELSE 0 END)
+        |    + 28 + tid
+        |    + (length(text) - (np - 1)) + np * 8
+        |    + list_sum([CASE WHEN p%3=1 THEN 7 WHEN p%3=2 THEN 19 + tid + length(CAST(p AS VARCHAR)) ELSE 0 END for p in range(0, np)])
+        |    + 34
+        |    + list_sum([28 + (CASE (doc_id+k)%6 WHEN 0 THEN 29 WHEN 1 THEN 26 WHEN 2 THEN 29 WHEN 3 THEN 27 WHEN 4 THEN 29 ELSE 27 END) for k in range(0, comn)])
+        |    + 128 AS clen
+        |  FROM c),
+        |rl AS (SELECT doc_id, clen,
+        |    113 + length(CAST(doc_id AS VARCHAR)) + length(CAST(clen AS VARCHAR)) + clen AS rec_length
+        |  FROM clen)
+        |SELECT 'doc://'||doc_id AS url, CAST(doc_id//16 AS BIGINT) AS segment_id,
+        |  CAST(row_number() OVER (PARTITION BY doc_id//16 ORDER BY doc_id) - 1 AS BIGINT) AS rec_ord,
+        |  CAST(coalesce(sum(rec_length) OVER (PARTITION BY doc_id//16 ORDER BY doc_id
+        |        ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0) AS BIGINT) AS rec_offset,
+        |  CAST(rec_length AS BIGINT) AS rec_length,
+        |  CAST(clen AS BIGINT) AS content_length,
+        |  strftime(make_timestamp(doc_id*3600*1000000), '%Y-%m-%dT%H:%M:%SZ') AS warc_date
+        |FROM rl""".stripMargin, eventTime = true),
+    Q("warc_stats", (s, dir) => {
+      // per-segment ingestion audit: record count, first target URI, earliest
+      // WARC-Date (ISO strings end-to-end — TZ-free by construction)
+      graft.webtext.Warc.parse(
+        graft.webtext.Warc.segmentsFromDocuments(tp(s, dir, "documents"))).toDF()
+        .groupBy("segment_id")
+        .agg(count(lit(1)).as("n_records"), min("url").as("first_url"),
+          min("warc_date").as("min_date"))
+    },
+      """SELECT CAST(doc_id//16 AS BIGINT) AS segment_id,
+        |       CAST(count(*) AS BIGINT) AS n_records,
+        |       min('doc://' || doc_id) AS first_url,
+        |       min(strftime(make_timestamp(doc_id*3600*1000000), '%Y-%m-%dT%H:%M:%SZ')) AS min_date
+        |FROM documents GROUP BY 1""".stripMargin, eventTime = true),
+    Q("html_links", (s, dir) => {
+      // link-graph extraction: every anchor in pre-order with its raw href,
+      // absolute resolved target, decoded anchor text, and main-block
+      // membership. Map-side flatMap, no shuffle.
+      graft.webtext.WebText.pageLinks(
+        graft.webtext.WebText.htmlPages(tp(s, dir, "documents")).toDF()).toDF()
+    },
+      // link inventory recomputed from the generator's arithmetic (HtmlGen):
+      // nav k in [0, 4+id%4) labeled from the 11-label pool at (id+k)%11;
+      // sidebar k in [0, 3+id%3) labeled at (id+2k)%6; inline anchors at
+      // paragraph indices p%3==2 wrapping the paragraph's LAST word (word
+      // index min(24(p+1), W)); footer /about + /terms. Ordinals follow
+      // document pre-order: nav, sidebar, inline, footer. Only inline anchors
+      // sit inside the chosen main block. Validated bit-for-bit against an
+      // independent Python recompute before wiring (CLAUDE.md protocol).
+      LinkRowsSql("""SELECT 'doc://' || doc_id AS url, ord0 AS link_ord, href,
+        |       'doc://' || doc_id || href AS resolved, anchor_text, in_main
+        |FROM rows""".stripMargin)),
+    // structured web-table mining (WDC-style): one row per td/th cell with
+    // table/row/col addressing + header flag, entities decoded; fused
+    // map-side parse->emit, cell rows shrink the corpus before downstream
+    Q("html_tables", (s, dir) =>
+      graft.webtext.WebText.tableCells(
+          graft.webtext.WebText.tablePages(tp(s, dir, "documents")).toDF()).toDF()
+        .orderBy("url", "table_idx", "row_idx", "col_idx"),
+      // html_tables: the oracle regrows every cell from the generator's doc_id
+      // arithmetic (header row, R x C data grid with the entity trap decoded,
+      // conditional second table); Python-validated 5498/5498 at sf0.01.
+      """WITH base AS (SELECT doc_id, 2 + doc_id%2 AS c, 2 + doc_id%3 AS r FROM documents),
+        |hdr AS (SELECT doc_id, 0 AS table_idx, 0 AS row_idx, j AS col_idx, TRUE AS is_header, 'h'||j AS cell
+        |        FROM (SELECT doc_id, unnest(range(0, c)) AS j FROM base)),
+        |dat AS (SELECT doc_id, 0 AS table_idx, 1 + i AS row_idx, j AS col_idx, FALSE AS is_header,
+        |               'v' || (doc_id*7 + i*c + j) || CASE WHEN (i+j)%3=0 THEN ' & x' ELSE '' END AS cell
+        |        FROM (SELECT doc_id, c, i, unnest(range(0, c)) AS j
+        |              FROM (SELECT doc_id, c, unnest(range(0, r)) AS i FROM base))),
+        |ext AS (SELECT a.doc_id, 1 AS table_idx, a.i AS row_idx, b.j AS col_idx, FALSE AS is_header,
+        |               'w' || (a.doc_id + 2*a.i + b.j) AS cell
+        |        FROM (SELECT doc_id, unnest(range(0,2)) AS i FROM base WHERE doc_id%4=0) a
+        |        CROSS JOIN (SELECT unnest(range(0,2)) AS j) b),
+        |allc AS (SELECT * FROM hdr UNION ALL SELECT * FROM dat UNION ALL SELECT * FROM ext)
+        |SELECT 'doc://'||doc_id AS url, CAST(table_idx AS BIGINT) AS table_idx,
+        |       CAST(row_idx AS BIGINT) AS row_idx, CAST(col_idx AS BIGINT) AS col_idx,
+        |       is_header, cell
+        |FROM allc ORDER BY url, table_idx, row_idx, col_idx""".stripMargin),
+    Q("microdata_items", (s, dir) =>
+      // attribute-level schema.org mining: nearest-ancestor itemscope
+      // property walk, nested Person scopes as values, decoy scopes skipped
+      graft.webtext.Microdata.articles(
+        graft.webtext.WebText.microdataPages(tp(s, dir, "documents")).toDF()).toDF(),
+      // microdata_items: regenerate from doc_id arithmetic (pageWithMicrodata
+      // classes: %11==3 absent, %7==0 entity trap decoded by the extractor,
+      // %3 branches plain-span vs nested-Person author — both resolve to the
+      // same value, so the oracle needs no branch for it).
+      """SELECT 'doc://'||doc_id AS url,
+        |       'document '||doc_id || CASE WHEN doc_id%7=0 THEN ' & co' ELSE '' END AS headline,
+        |       'author '||(doc_id%13) AS author,
+        |       CAST(len(string_split(text,' ')) AS BIGINT) AS word_count
+        |FROM documents WHERE doc_id%11 <> 3""".stripMargin),
+    Q("hreflang_clusters", (s, dir) => {
+      // translation-family mining: hreflang alternate links -> family rows
+      // (cluster = min href, x-default routing hints and malformed links
+      // excluded); family key computed inside the per-page flatMap, shuffles
+      // touch only family-grain rows
+      graft.webtext.Hreflang.clusters(
+        graft.webtext.WebText.hreflangPages(tp(s, dir, "documents")).toDF())
+    },
+      // hreflang_clusters: regenerate the translation families from doc_id
+      // arithmetic (HtmlGen.pageWithHreflang plants 1+doc_id%4 language
+      // variants; x-default and the malformed pt link never reach the output,
+      // so the oracle simply doesn't generate them). Validated against an
+      // independent Python recompute in tools/multilingual_oracle_check.py.
+      """WITH fam AS (
+        |  SELECT doc_id, (['en','de','fr','es'])[1:(1 + doc_id % 4)] AS langs FROM documents),
+        |alt AS (
+        |  SELECT doc_id, unnest(langs) AS l, len(langs)::BIGINT AS n_langs FROM fam),
+        |rows_ AS (
+        |  SELECT doc_id, l AS hreflang,
+        |         'https://site'||(doc_id%7)||'.example.com/'||l||'/doc'||doc_id||'.html' AS href,
+        |         n_langs
+        |  FROM alt)
+        |SELECT min(href) OVER (PARTITION BY doc_id) AS cluster, hreflang, href, n_langs
+        |FROM rows_""".stripMargin),
+    Q("bitext_mine", (s, dir) => {
+      // parallel-corpus mining: sentence-segment both sides of a translation
+      // family, align on (doc_id, sent_idx), gate on the integer Gale-Church
+      // length-ratio prior 13/10 (truncated pseudo-translations must fail)
+      val docs = tp(s, dir, "documents")
+      graft.textops.Bitext.alignByIndex(
+        graft.textops.Bitext.segmentWords(docs),
+        graft.textops.Bitext.pseudoTranslated(docs))
+    },
+      // bitext_mine: replay the 12-word segmentation, the per-sentence
+      // reversal/truncation fixture, and the integer 13/10 ratio gate.
+      // coalesce() guards DuckDB's empty-list array_to_string -> NULL quirk
+      // (CLAUDE.md); validated in tools/multilingual_oracle_check.py.
+      BitextOracleSql),
+    Q("link_targets_top", (s, dir) => {
+      // cross-corpus target popularity (the frontier/blocklist rollup over
+      // the exploded link table): partial-agg on href, then top-k — plans as
+      // TakeOrderedAndProject, no global sort materialization
+      graft.webtext.WebText.pageLinks(
+        graft.webtext.WebText.htmlPages(tp(s, dir, "documents")).toDF())
+        .groupBy("href").agg(count(lit(1)).as("n_docs"))
+        .orderBy(desc("n_docs"), asc("href")).limit(20)
+    }, LinkRowsSql("""SELECT href, CAST(count(*) AS BIGINT) AS n_docs
+        |FROM rows GROUP BY href
+        |ORDER BY n_docs DESC, href LIMIT 20""".stripMargin)),
+    Q("anchor_text_agg", (s, dir) => {
+      // anchor-text mining: top-3 terms per cross-document target (citation
+      // floor >= 2 distinct pages) — target description by inbound anchors
+      graft.webtext.WebText.anchorTextAgg(
+        graft.webtext.WebText.pageLinks(
+          graft.webtext.WebText.htmlPages(tp(s, dir, "documents")).toDF()).toDF())
+    },
+      // anchor_text_agg: same link-inventory CTE; citation floor via HAVING on
+      // distinct doc_id, per-target top-3 terms with term tie-break.
+      LinkRowsSql(
+      """SELECT href, term, CAST(rank AS BIGINT) AS rank, cnt FROM (
+        |  SELECT href, term, CAST(count(*) AS BIGINT) AS cnt,
+        |         row_number() OVER (PARTITION BY href ORDER BY count(*) DESC, term) AS rank
+        |  FROM (SELECT href, unnest(string_split(anchor_text, ' ')) AS term
+        |        FROM rows WHERE href IN (SELECT href FROM rows GROUP BY href HAVING count(DISTINCT doc_id) >= 2))
+        |  GROUP BY href, term)
+        |WHERE rank <= 3""".stripMargin)),
+    Q("crawl_delta", (s, dir) => {
+      // recrawl snapshot diff: narrow (xxhash64, length) content keys into a
+      // co-partitioned full-outer join; added/removed/changed/unchanged
+      val a = tp(s, dir, "documents")
+      graft.webtext.Recrawl.delta(a, graft.webtext.Recrawl.snapshotB(a))
+    },
+      """WITH a AS (SELECT doc_id, text FROM documents),
+        |b AS (SELECT doc_id, CASE WHEN doc_id%5=1 THEN text || ' updated' ELSE text END AS text
+        |      FROM documents WHERE doc_id%7<>3
+        |      UNION ALL
+        |      SELECT doc_id+1000000 AS doc_id, 'recrawl new page ' || doc_id AS text
+        |      FROM documents WHERE doc_id%11=0)
+        |SELECT coalesce(a.doc_id, b.doc_id) AS doc_id,
+        |       CASE WHEN a.doc_id IS NULL THEN 'added'
+        |            WHEN b.doc_id IS NULL THEN 'removed'
+        |            WHEN a.text = b.text THEN 'unchanged'
+        |            ELSE 'changed' END AS status
+        |FROM a FULL OUTER JOIN b ON a.doc_id = b.doc_id""".stripMargin, eventTime = true),
+    Q("kmv_overlap", (s, dir) => {
+      // the MONITORING twin of crawl_delta: snapshot overlap (union /
+      // intersection / Jaccard) estimated from two 2 KB KMV sketches instead
+      // of the corpus-grain join; sketch + estimates are integer-exact so
+      // the oracle recomputes them bit-for-bit, exact counts ride along
+      val docs = tp(s, dir, "documents")
+      graft.webtext.SnapshotOverlap.overlap(
+        graft.webtext.SnapshotOverlap.stateKeysA(docs),
+        graft.webtext.SnapshotOverlap.stateKeysB(docs))
+    },
+      // kmv_overlap: full sketch recompute — splitmix64 as the proven
+      // HUGEINT chain (shared verbatim with hll_distinct), bottom-k as
+      // ORDER BY h LIMIT k, every estimate trunc-integer; Python-validated
+      // at both sfs (tools/kmv_oracle_check.py)
+      """WITH av AS (SELECT DISTINCT CAST(doc_id*2 AS HUGEINT) AS v FROM documents),
+        |bv AS (SELECT DISTINCT v FROM (
+        |         SELECT CAST(doc_id*2 + CASE WHEN doc_id%5=1 THEN 1 ELSE 0 END AS HUGEINT) AS v
+        |         FROM documents WHERE doc_id%7<>3
+        |         UNION ALL
+        |         SELECT CAST((doc_id+1000000)*2 AS HUGEINT) FROM documents WHERE doc_id%11=0)),
+        |a1 AS (SELECT (v + 11400714819323198485) % 18446744073709551616 AS z FROM av),
+        |a2 AS (SELECT xor(z, z >> 30) AS x FROM a1),
+        |a3 AS (SELECT ((x % 4294967296) * 484763065
+        |        + (((x % 4294967296) * 3210233709 + (x // 4294967296) * 484763065) % 4294967296) * 4294967296)
+        |       % 18446744073709551616 AS z FROM a2),
+        |a4 AS (SELECT xor(z, z >> 27) AS x FROM a3),
+        |a5 AS (SELECT ((x % 4294967296) * 321982955
+        |        + (((x % 4294967296) * 2496678331 + (x // 4294967296) * 321982955) % 4294967296) * 4294967296)
+        |       % 18446744073709551616 AS z FROM a4),
+        |ha AS (SELECT DISTINCT xor(z, z >> 31) AS h FROM a5),
+        |b1 AS (SELECT (v + 11400714819323198485) % 18446744073709551616 AS z FROM bv),
+        |b2 AS (SELECT xor(z, z >> 30) AS x FROM b1),
+        |b3 AS (SELECT ((x % 4294967296) * 484763065
+        |        + (((x % 4294967296) * 3210233709 + (x // 4294967296) * 484763065) % 4294967296) * 4294967296)
+        |       % 18446744073709551616 AS z FROM b2),
+        |b4 AS (SELECT xor(z, z >> 27) AS x FROM b3),
+        |b5 AS (SELECT ((x % 4294967296) * 321982955
+        |        + (((x % 4294967296) * 2496678331 + (x // 4294967296) * 321982955) % 4294967296) * 4294967296)
+        |       % 18446744073709551616 AS z FROM b4),
+        |hb AS (SELECT DISTINCT xor(z, z >> 31) AS h FROM b5),
+        |sa AS (SELECT h FROM ha ORDER BY h LIMIT 256),
+        |sb AS (SELECT h FROM hb ORDER BY h LIMIT 256),
+        |mk AS (SELECT DISTINCT h FROM (SELECT h FROM sa UNION ALL SELECT h FROM sb)
+        |       ORDER BY h LIMIT 256),
+        |mm AS (SELECT CAST(count(*) AS BIGINT) AS m, max(h) AS uk FROM mk),
+        |mat AS (SELECT CAST(count(*) AS BIGINT) AS matches FROM mk
+        |        WHERE h IN (SELECT h FROM sa) AND h IN (SELECT h FROM sb)),
+        |exu AS (SELECT CAST(count(*) AS BIGINT) AS exact_union
+        |        FROM (SELECT v FROM av UNION SELECT v FROM bv)),
+        |exi AS (SELECT CAST(count(*) AS BIGINT) AS exact_inter FROM av
+        |        WHERE v IN (SELECT v FROM bv)),
+        |est AS (SELECT m, matches,
+        |               CASE WHEN m < 256 THEN m
+        |                    ELSE CAST((255 * CAST(18446744073709551616 AS HUGEINT)) // uk AS BIGINT)
+        |               END AS est_union
+        |        FROM mm, mat)
+        |SELECT CAST(256 AS BIGINT) AS k, m, matches,
+        |       matches * 10000 // m AS jaccard_bp,
+        |       est_union,
+        |       matches * est_union // m AS est_inter,
+        |       exact_union, exact_inter,
+        |       abs(est_union - exact_union) * 10000 // exact_union AS union_err_bp
+        |FROM est, exu, exi""".stripMargin),
+    // SCD2 capture history: validity intervals [valid_from, valid_to) per
+    // (url, version) via one lead() window over the capture log — the batch
+    // materialization of the as-of lookup
+    Q("scd2_history", (s, dir) =>
+      graft.webtext.Recrawl.scd2(
+          graft.webtext.AsofJoin.plantSnapshots(tp(s, dir, "documents")))
+        .orderBy("k", "version"),
+      // crawl_delta: the oracle rebuilds snapshot B and classifies by direct
+      // text equality; the engine compares (xxhash64, length) content keys —
+      // same classification barring a 64-bit same-length collision (the
+      // dedup_exact tradeoff).
+      // scd2_history: the capture log is the planted as-of snapshot fixture;
+      // intervals are the same lead() recompute — Python-validated 999/999.
+      // The streaming twin must converge to the identical dimension table.
+      Scd2Sql),
+    // adaptive recrawl scheduling: observed mean change interval (trunc
+    // division) clamped to [2h, 24h] -> next_fetch + hot/warm/cold/unseen
+    // tier; one narrow (k,t) hash agg, everything after is codegen arithmetic
+    Q("recrawl_interval", (s, dir) =>
+      graft.webtext.Recrawl.recrawlIntervals(
+          graft.webtext.Recrawl.plantCaptures(tp(s, dir, "documents")))
+        .orderBy("k"),
+      // recrawl_interval: the oracle regrows the richer capture fixture
+      // (doc_id%5+1 captures spaced 3600*(k%41+1) s) and recomputes the
+      // clamped trunc-division estimate; Python-validated 500/500 at sf0.01.
+      """WITH s AS (SELECT doc_id AS k, unnest(range(0, doc_id%5 + 1)) AS version FROM documents),
+        |t AS (SELECT k, version, 1704067200 + version*3600*(k%41+1) + (k%97)*60 AS t FROM s),
+        |g AS (SELECT k, count(*) AS captures, min(t) AS first_t, max(t) AS last_t FROM t GROUP BY k),
+        |e AS (SELECT k, captures, captures-1 AS changes,
+        |        CASE WHEN captures=1 THEN 86400
+        |             ELSE least(greatest((last_t-first_t)//(captures-1), 7200), 86400) END AS est_interval_s,
+        |        last_t FROM g)
+        |SELECT k, CAST(captures AS BIGINT) AS captures, CAST(changes AS BIGINT) AS changes,
+        |       CAST(est_interval_s AS BIGINT) AS est_interval_s,
+        |       CAST(last_t + est_interval_s AS BIGINT) AS next_fetch,
+        |       CASE WHEN changes=0 THEN 'unseen' WHEN est_interval_s<=28800 THEN 'hot'
+        |            WHEN est_interval_s<86400 THEN 'warm' ELSE 'cold' END AS tier
+        |FROM e ORDER BY k""".stripMargin, eventTime = true),
+    Q("host_rank", (s, dir) => {
+      // damped PageRank over the synthetic host graph, 3 fixed iterations in
+      // integer fixed-point (rank scaled 10^6, basis-point damping) so the
+      // oracle's unrolled CTEs recompute it bit-for-bit. tp(): the edge
+      // synthesis + partial count run pre-shuffle in the scan stage.
+      graft.webtext.HostRank.rank(
+        graft.webtext.HostRank.hostEdges(tp(s, dir, "documents")))
+        .orderBy("host")
+    },
+      // host_rank: the engine's integer fixed-point PageRank unrolled as 3 CTE
+      // iterations over the same edge recipe (generated — see hostRankCtes).
+      (hostRankCtes(3) + "\nSELECT host, CAST(rank AS BIGINT) AS rank FROM r3 ORDER BY host")),
+    Q("host_rank_converged", (s, dir) => {
+      // convergence-stopped PageRank (VERDICT r4 stretch 7): iterate to the
+      // exact trunc-division fixed point, witnessed by a host-grain
+      // zero-delta join per round, instead of a pinned round count. The
+      // oracle stays sf-agnostic because a fixed point is invariant under
+      // further iteration (it unrolls 40 >= the measured 28-29 rounds).
+      graft.webtext.HostRank.rankConverged(
+        graft.webtext.HostRank.hostEdges(tp(s, dir, "documents")))
+        .orderBy("host")
+    },
+      // host_rank_converged: the engine iterates to the exact integer fixed
+      // point (zero host-grain delta); the oracle unrolls a FIXED 40 rounds —
+      // past the fixed point every further iteration is the identity, so the
+      // same SQL matches at any sf converging within 40 (measured 28-29).
+      (hostRankCtes(40) + "\nSELECT host, CAST(rank AS BIGINT) AS rank FROM r40 ORDER BY host")),
+    Q("host_triangles", (s, dir) =>
+      // triangle counts + local clustering coefficients via degree-ordered
+      // orientation (Suri-Vassilvitskii): wedges only at oriented
+      // out-neighbors, closed against the oriented edge set — each triangle
+      // once, wedge cost bounded by sum out-deg^2 with out-deg = O(sqrt m)
+      graft.webtext.Triangles.hostTriangles(
+        graft.webtext.HostRank.hostEdges(tp(s, dir, "documents")))
+        .orderBy("host"),
+      // host_triangles: the oracle enumerates triangles by the lexicographic
+      // 3-way join (same SET as the engine's degree-ordered orientation);
+      // Python-validated 7/7 at both sfs (tools/sched_quant_tri_check.py)
+      """WITH e0 AS (
+        |  SELECT 'site' || (doc_id%7) || '.example.com' AS src,
+        |         'site' || ((2*doc_id+1)%7) || '.example.com' AS dst FROM documents
+        |  UNION ALL
+        |  SELECT 'site' || (doc_id%7) || '.example.com' AS src,
+        |         'site' || ((3*doc_id+2)%7) || '.example.com' AS dst FROM documents WHERE doc_id%3=0
+        |  UNION ALL
+        |  SELECT 'site' || (doc_id%7) || '.example.com' AS src,
+        |         'site0.example.com' AS dst FROM documents WHERE doc_id%5<2),
+        |und AS (SELECT DISTINCT least(src,dst) AS a, greatest(src,dst) AS b FROM e0 WHERE src <> dst),
+        |deg AS (SELECT host, count(*)::BIGINT AS deg
+        |        FROM (SELECT a AS host FROM und UNION ALL SELECT b FROM und) GROUP BY 1),
+        |tri AS (SELECT e1.a AS x, e1.b AS y, e2.b AS z
+        |        FROM und e1 JOIN und e2 ON e2.a = e1.b
+        |        JOIN und e3 ON e3.a = e1.a AND e3.b = e2.b),
+        |ph AS (SELECT host, count(*)::BIGINT AS tri
+        |       FROM (SELECT unnest([x,y,z]) AS host FROM tri) GROUP BY 1)
+        |SELECT deg.host, deg.deg, coalesce(ph.tri, 0)::BIGINT AS tri,
+        |       CAST(CASE WHEN deg.deg < 2 THEN 0
+        |            ELSE (coalesce(ph.tri,0)*20000)//(deg.deg*(deg.deg-1)) END AS BIGINT) AS cc_bp
+        |FROM deg LEFT JOIN ph USING (host) ORDER BY host""".stripMargin),
+    Q("kcore_hosts", (s, dir) =>
+      // k-core peeling to the fixed point (Seidman): per round drop hosts
+      // with induced degree < k — link farms peel out, interlinked
+      // communities survive; edge-grain semi-joins, per-round localCheckpoint
+      graft.webtext.KCore.kcoreHosts(
+        graft.webtext.HostRank.hostEdges(tp(s, dir, "documents")))
+        .orderBy("host"),
+      // kcore_hosts: unrolled peel rounds (fixed point ⇒ extra rounds no-op);
+      // Python-validated at both sfs (tools/round5b_check.py, 2 peel rounds)
+      (kcoreCtes(8) + """,
+      |core_e AS (SELECT a, b FROM und WHERE a IN (SELECT host FROM n8) AND b IN (SELECT host FROM n8)),
+      |core_d AS (SELECT host, count(*)::BIGINT AS core_deg
+      |           FROM (SELECT a AS host FROM core_e UNION ALL SELECT b FROM core_e) GROUP BY 1)
+      |SELECT n0.host,
+      |       CAST(CASE WHEN core_d.host IS NOT NULL THEN 1 ELSE 0 END AS BIGINT) AS in_core,
+      |       coalesce(core_d.core_deg, 0)::BIGINT AS core_deg
+      |FROM n0 LEFT JOIN core_d ON n0.host = core_d.host ORDER BY n0.host""".stripMargin)),
+    Q("cocitation_hosts", (s, dir) =>
+      // co-citation similarity (Small/Dean-Henzinger): exact Jaccard of two
+      // hosts' citing sets in basis points — pair generator fans out on the
+      // CITING side only (out-degree-bounded wedges, popular targets free)
+      graft.webtext.Cocite.cocitationPairs(
+        graft.webtext.HostRank.hostEdges(tp(s, dir, "documents")))
+        .orderBy("h1", "h2"),
+      // cocitation_hosts: exact Jaccard of citing sets per co-cited pair;
+      // Python-validated 9/9 pairs at both sfs (tools/round5b_check.py)
+      """WITH e0 AS (
+        |  SELECT 'site' || (doc_id%7) || '.example.com' AS src,
+        |         'site' || ((2*doc_id+1)%7) || '.example.com' AS dst FROM documents
+        |  UNION ALL
+        |  SELECT 'site' || (doc_id%7) || '.example.com' AS src,
+        |         'site' || ((3*doc_id+2)%7) || '.example.com' AS dst FROM documents WHERE doc_id%3=0
+        |  UNION ALL
+        |  SELECT 'site' || (doc_id%7) || '.example.com' AS src,
+        |         'site0.example.com' AS dst FROM documents WHERE doc_id%5<2),
+        |e AS (SELECT DISTINCT src, dst FROM e0 WHERE src <> dst),
+        |ind AS (SELECT dst, count(*)::BIGINT AS indeg FROM e GROUP BY 1),
+        |p AS (SELECT e1.dst AS h1, e2.dst AS h2, count(*)::BIGINT AS cocite
+        |      FROM e e1 JOIN e e2 ON e1.src = e2.src AND e1.dst < e2.dst GROUP BY 1, 2)
+        |SELECT h1, h2, cocite,
+        |       CAST((cocite*10000)//(i1.indeg + i2.indeg - cocite) AS BIGINT) AS jac_bp
+        |FROM p JOIN ind i1 ON p.h1 = i1.dst JOIN ind i2 ON p.h2 = i2.dst
+        |ORDER BY h1, h2""".stripMargin),
+    Q("hits_scores", (s, dir) =>
+      // HITS hubs/authorities over the same host graph, 3 rounds of integer
+      // fixed-point with max-norm renormalization — the link-farm/authority
+      // separator PageRank can't provide; unrolled-CTE oracle bit-for-bit
+      graft.webtext.Hits.hubsAuths(
+        graft.webtext.HostRank.hostEdges(tp(s, dir, "documents")))
+        .orderBy("host"),
+      // hits_scores: unrolled auth/hub half-round CTEs, integer max-norm
+      (hitsCtes(3) +
+        "\nSELECT host, CAST(hub AS BIGINT) AS hub, CAST(auth AS BIGINT) AS auth" +
+        "\nFROM h3 JOIN a3 USING (host) ORDER BY host")),
+    Q("crawl_budget", (s, dir) => {
+      // rank-proportional fetch-slot allocation composed on host_rank's
+      // fixed-point output: budget = (rank * 10^6) div sum(rank); the 1-row
+      // global sum is broadcast onto the host-grain table (no big-side
+      // shuffle, one map stage after rank() converges)
+      graft.webtext.HostRank.crawlBudget(
+        graft.webtext.HostRank.rank(
+          graft.webtext.HostRank.hostEdges(tp(s, dir, "documents"))))
+        .orderBy("host")
+    },
+      // crawl_budget: host_rank's CTE chain + a one-line budget split —
+      // floor((rank * 10^6) / sum(rank)), all non-negative so // matches div
+      (hostRankCtes(3) +
+        """,
+          |rs AS (SELECT sum(rank) AS s FROM r3)
+          |SELECT host, CAST(rank AS BIGINT) AS rank,
+          |       CAST((rank * 1000000) // (SELECT s FROM rs) AS BIGINT) AS budget
+          |FROM r3 ORDER BY host""".stripMargin)),
+    Q("reciprocal_links", (s, dir) =>
+      // link-farm detection: host pairs linking BOTH ways — the edge table
+      // split by canonical order and equi-joined on the pair key (edge-grain
+      // in, pair-grain out; never a host product)
+      graft.webtext.HostRank.reciprocalLinks(
+        graft.webtext.HostRank.hostEdges(tp(s, dir, "documents")))
+        .orderBy("host_a", "host_b"),
+      // reciprocal_links: the same synthetic edge recipe, split by canonical
+      // pair order and self-joined — host pairs linking both ways
+      """WITH e0 AS (
+        |  SELECT 'site' || (doc_id%7) || '.example.com' AS src,
+        |         'site' || ((2*doc_id+1)%7) || '.example.com' AS dst FROM documents
+        |  UNION ALL
+        |  SELECT 'site' || (doc_id%7) || '.example.com' AS src,
+        |         'site' || ((3*doc_id+2)%7) || '.example.com' AS dst FROM documents WHERE doc_id%3=0
+        |  UNION ALL
+        |  SELECT 'site' || (doc_id%7) || '.example.com' AS src,
+        |         'site0.example.com' AS dst FROM documents WHERE doc_id%5<2),
+        |e AS (SELECT src, dst, CAST(count(*) AS BIGINT) AS weight FROM e0 GROUP BY src, dst),
+        |ab AS (SELECT src AS host_a, dst AS host_b, weight AS w_ab FROM e WHERE src < dst),
+        |ba AS (SELECT dst AS host_a, src AS host_b, weight AS w_ba FROM e WHERE src > dst)
+        |SELECT host_a, host_b, CAST(w_ab AS BIGINT) AS w_ab, CAST(w_ba AS BIGINT) AS w_ba,
+        |       CAST(least(w_ab, w_ba) AS BIGINT) AS w_min
+        |FROM ab JOIN ba USING (host_a, host_b)
+        |ORDER BY host_a, host_b""".stripMargin),
+    Q("sitemap_urls", (s, dir) => {
+      // sitemap discovery: per-host blobs (even hosts behind a sitemapindex
+      // of two parity shards, odd hosts flat) -> StAX parse -> url rows with
+      // freshness hints; priority carried as basis points, never a float
+      graft.webtext.Sitemap.urlRows(
+        graft.webtext.Sitemap.plantSitemaps(tp(s, dir, "documents")))
+        .orderBy("loc")
+    },
+      """SELECT 'https://site'||(doc_id%7)||'.example.com/articles/doc'||doc_id||'.html' AS loc,
+        |  CAST(DATE '2020-01-01' + CAST(doc_id%365 AS INTEGER) AS VARCHAR) AS lastmod,
+        |  CASE doc_id%3 WHEN 0 THEN 'daily' WHEN 1 THEN 'weekly' ELSE 'monthly' END AS changefreq,
+        |  CAST((doc_id%10)*1000 AS BIGINT) AS priority_bp
+        |FROM documents ORDER BY loc""".stripMargin, eventTime = true),
+    // schema.org JSON-LD Article mining: raw script-span scan (DOM drops
+    // script bodies by design) + minimal recursive-descent JSON parse with
+    // raw-string numbers; decoys/malformed blocks skipped, absent-block
+    // pages yield no row. Map-side, zero shuffles.
+    Q("jsonld_articles", (s, dir) =>
+      graft.webtext.JsonLd.articles(tp(s, dir, "documents")).toDF()
+        .orderBy("doc_id"),
+      // jsonld_articles: CASE arithmetic over the generator (escaped-quote
+      // headline, ISO date, author %13, exact space-count word count); pages
+      // with no Article block (doc_id%11=3) are absent; Python-validated
+      // 454/454 at sf0.01.
+      """WITH w AS (SELECT doc_id, length(text) - length(replace(text,' ','')) + 1 AS wc FROM documents)
+        |SELECT doc_id,
+        |  'document ' || doc_id || CASE WHEN doc_id%7=0 THEN ' "brief"' ELSE '' END AS headline,
+        |  CAST(DATE '2020-01-01' + CAST(doc_id%365 AS INTEGER) AS VARCHAR) AS date_published,
+        |  'author ' || (doc_id%13) AS author_name,
+        |  CAST(wc AS BIGINT) AS word_count
+        |FROM w WHERE doc_id%11<>3 ORDER BY doc_id""".stripMargin, eventTime = true),
+    // syndication-feed parsing: one StAX pass handles RSS 2.0 AND Atom
+    // (fixture alternates by parity), items ≪ feed bytes, map-side flatMap
+    Q("feed_items", (s, dir) =>
+      graft.webtext.Feeds.items(
+          graft.webtext.Feeds.plantFeeds(tp(s, dir, "documents"))).toDF()
+        .orderBy("doc_id", "item_idx"),
+      // sitemap_urls: every document appears exactly once regardless of the
+      // index/flat split, so the oracle is pure doc arithmetic; lastmod is
+      // date arithmetic rendered ISO (TZ-free), priority integer basis points
+      // feed_items: the oracle regrows every item from the generator's doc_id
+      // arithmetic (parity picks the format, entity trap decoded, ISO stamps
+      // as strings); Python-validated 1250/1250 at sf0.01. The streaming twin
+      // shares it (stateless per-row op: drained table == batch answer).
+      FeedItemsSql, eventTime = true),
+    // robots-meta opt-out governance (noindex/noai exclusion with auditable
+    // per-directive flags; unrelated directives must not trip the gate)
+    Q("optout_gate", (s, dir) =>
+      graft.webtext.Metadata.optOutGate(tp(s, dir, "documents")).toDF()
+        .orderBy("doc_id"),
+      // optout_gate: CASE table over the six planted robots-meta branches
+      // (directive parsing = trim+lowercase on comma splits; only
+      // noindex/noai flip the training gate); Python-validated 500/500.
+      """SELECT doc_id,
+        |  CASE doc_id%6 WHEN 0 THEN 'noindex' WHEN 1 THEN 'noai, noimageai' WHEN 2 THEN 'index, follow'
+        |       WHEN 3 THEN '' WHEN 4 THEN 'NOINDEX,NOFOLLOW' ELSE 'max-snippet:-1' END AS robots_meta,
+        |  doc_id%6 IN (0,4) AS noindex,
+        |  doc_id%6 = 4 AS nofollow,
+        |  doc_id%6 = 1 AS noai,
+        |  NOT (doc_id%6 IN (0,1,4)) AS keep_for_training
+        |FROM documents ORDER BY doc_id""".stripMargin),
+    // rel="license" mining + CC-family verdicts (the rights-clearance twin of
+    // optout_gate): token-wise rel match, head link or body anchor, CC url
+    // parse -> allows_commercial / allows_derivatives routing flags
+    Q("license_detect", (s, dir) =>
+      graft.webtext.License.licenseGate(tp(s, dir, "documents")).toDF()
+        .orderBy("doc_id"),
+      // license_detect: CASE table over the six planted rel=license branches
+      // (multi-token and uppercase rel both declare; absent/non-CC -> all
+      // clearance flags false). Python-validated 500/500 at sf0.01.
+      LicenseOracleSql),
+    Q("redirect_resolve", (s, dir) => {
+      // frontier redirect-chain resolution via pointer doubling: 3 node-grain
+      // self-joins resolve every chain <= 8 hops (O(log) rounds — a 10^6
+      // chain needs 20); loops and over-limit chains classify 'cycle'
+      val docs = tp(s, dir, "documents")
+      graft.webtext.Redirects.resolve(
+          graft.webtext.Redirects.plantUrls(docs),
+          graft.webtext.Redirects.plantRedirects(docs))
+        .orderBy("doc_id")
+    },
+      // redirect_resolve: the fixture's chains (class c = c hops down to the
+      // class-0 landing url) and 2-cycles (doc_id%77 in 5,6) collapse to CASE
+      // arithmetic — validated against an independent Python walk
+      """SELECT doc_id,
+        |  'https://site'||(doc_id%7)||'.example.com/r/'||doc_id AS url,
+        |  CASE WHEN doc_id%77 IN (5,6) THEN 'cycle' ELSE 'ok' END AS status,
+        |  CAST(CASE WHEN doc_id%77 IN (5,6) THEN -1
+        |            WHEN doc_id%7 BETWEEN 1 AND 4 THEN doc_id%7
+        |            ELSE 0 END AS BIGINT) AS hops,
+        |  CASE WHEN doc_id%77 IN (5,6) THEN NULL
+        |       WHEN doc_id%7 BETWEEN 1 AND 4 THEN 'https://site0.example.com/r/'||(doc_id - doc_id%7)
+        |       ELSE 'https://site'||(doc_id%7)||'.example.com/r/'||doc_id END AS final_url
+        |FROM documents ORDER BY doc_id""".stripMargin),
+    Q("charset_decode", (s, dir) => {
+      // ingestion edge: WHATWG-order charset sniff (BOM > meta > default)
+      // over mixed-encoding raw bytes, decode fused with main-content
+      // extraction in one map stage; byte-identity proven via the same
+      // word-chunk oracle as html_main_content
+      graft.webtext.Charset.decodeExtract(
+        graft.webtext.Charset.encodedPages(tp(s, dir, "documents")))
+        .toDF().orderBy("doc_id")
+    },
+      // charset_decode: charset/bom are fixture arithmetic; extracted_text is
+      // the html_main_content reassembly — equality proves the decode was
+      // byte-exact through every encoding class (a wrong charset would corrupt
+      // the article words, not just the label)
+      """SELECT doc_id,
+        |  CASE doc_id%4 WHEN 0 THEN 'utf-8' WHEN 1 THEN 'utf-16le'
+        |       WHEN 2 THEN 'iso-8859-1' ELSE 'utf-8' END AS charset,
+        |  CAST(CASE doc_id%4 WHEN 0 THEN 3 WHEN 1 THEN 2 ELSE 0 END AS BIGINT) AS bom_len,
+        |  array_to_string([array_to_string(words[i:i+23], ' ')
+        |                   for i in range(1, len(words)+1, 24)], chr(10)) AS extracted_text
+        |FROM (SELECT doc_id, string_split(text, ' ') AS words FROM documents)
+        |ORDER BY doc_id""".stripMargin),
+    Q("html_metadata", (s, dir) => {
+      // head-metadata mining (title / description / canonical / og:title /
+      // lang attr) via a real DOM walk over the metadata-bearing page
+      // variant; map-side, zero shuffle
+      graft.webtext.Metadata.headMetadata(tp(s, dir, "documents")).toDF().orderBy("doc_id")
+    },
+      // html_metadata: every field is generator arithmetic (title/og from
+      // doc_id, description = first 6 words, canonical from doc_id%7, lang
+      // passed through) — the extraction must recover them from the parsed DOM
+      """SELECT doc_id,
+        |  'document '||doc_id AS title,
+        |  'doc '||doc_id||': '||array_to_string((string_split(text,' '))[1:6],' ') AS description,
+        |  'https://site'||(doc_id%7)||'.example.com/articles/doc'||doc_id||'.html' AS canonical,
+        |  'document '||doc_id||' | site'||(doc_id%7) AS og_title,
+        |  lang AS html_lang
+        |FROM documents ORDER BY doc_id""".stripMargin),
+    Q("robots_gate", (s, dir) => {
+      // RFC 9309 fetch-policy decisions: host-grain robots bodies joined onto
+      // the frontier (tiny side broadcast), longest-match evaluation map-side
+      // with a parse-once-per-host partition cache. Two agents: graftbot has
+      // its own group (exact token beats *), newsbot falls to the * group
+      val r = graft.webtext.Robots
+      r.decisions(r.plantFrontier(tp(s, dir, "documents")), r.robotsTable(s),
+          Seq("graftbot", "newsbot"))
+        .select(col("doc_id"), col("host"), col("path"),
+          col("allowed_graftbot").cast("long").as("allowed_graftbot"),
+          col("allowed_newsbot").cast("long").as("allowed_newsbot"),
+          col("crawl_delay"))
+        .orderBy("doc_id")
+    },
+      // robots_gate: the fixture's rule set collapses to a CASE truth table
+      // over (doc_id%5 path class, doc_id%7 host) — validated against BOTH an
+      // independent Python longest-match recompute and stdlib robotparser:
+      // graftbot's group: /private/ disallowed, /private/pub/ re-allowed on
+      // even hosts (longest match); * group: /tmp/ disallowed, /nav/ disallowed
+      // on hosts %3==0, crawl-delay 1 + host%4
+      """SELECT doc_id,
+        |  'site'||(doc_id%7)||'.example.com' AS host,
+        |  CASE doc_id%5 WHEN 0 THEN '/private/doc'||doc_id WHEN 1 THEN '/private/pub/doc'||doc_id
+        |       WHEN 2 THEN '/tmp/doc'||doc_id WHEN 3 THEN '/nav/doc'||doc_id
+        |       ELSE '/articles/doc'||doc_id||'.html' END AS path,
+        |  CASE WHEN doc_id%5=0 THEN 0::BIGINT
+        |       WHEN doc_id%5=1 THEN CASE WHEN (doc_id%7)%2=0 THEN 1::BIGINT ELSE 0::BIGINT END
+        |       ELSE 1::BIGINT END AS allowed_graftbot,
+        |  CASE WHEN doc_id%5=2 THEN 0::BIGINT
+        |       WHEN doc_id%5=3 AND (doc_id%7)%3=0 THEN 0::BIGINT
+        |       ELSE 1::BIGINT END AS allowed_newsbot,
+        |  CAST(1+(doc_id%7)%4 AS BIGINT) AS crawl_delay
+        |FROM documents ORDER BY doc_id""".stripMargin),
+    Q("fetch_schedule", (s, dir) => {
+      // politeness schedule over the admitted frontier: host-partitioned
+      // window (one shuffle on the fetcher's natural shard key), per-host
+      // sequence spaced by the host's crawl-delay
+      val r = graft.webtext.Robots
+      r.schedule(
+          r.decisions(r.plantFrontier(tp(s, dir, "documents")), r.robotsTable(s),
+            Seq("graftbot", "newsbot")),
+          "allowed_newsbot")
+        .orderBy("doc_id")
+    },
+      // fetch_schedule: row_number window over the *-group-admitted frontier,
+      // per-host, ordered by the (unique) path; start_sec spaces fetches by
+      // the host's crawl-delay
+      """WITH f AS (
+        |  SELECT doc_id,
+        |    'site'||(doc_id%7)||'.example.com' AS host,
+        |    CASE doc_id%5 WHEN 0 THEN '/private/doc'||doc_id WHEN 1 THEN '/private/pub/doc'||doc_id
+        |         WHEN 2 THEN '/tmp/doc'||doc_id WHEN 3 THEN '/nav/doc'||doc_id
+        |         ELSE '/articles/doc'||doc_id||'.html' END AS path,
+        |    CASE WHEN doc_id%5=2 THEN 0 WHEN doc_id%5=3 AND (doc_id%7)%3=0 THEN 0 ELSE 1 END AS ok,
+        |    CAST(1+(doc_id%7)%4 AS BIGINT) AS delay
+        |  FROM documents)
+        |SELECT doc_id, host, path,
+        |  CAST(row_number() OVER (PARTITION BY host ORDER BY path) AS BIGINT) AS fetch_seq,
+        |  CAST((row_number() OVER (PARTITION BY host ORDER BY path) - 1) * delay AS BIGINT) AS start_sec
+        |FROM f WHERE ok=1 ORDER BY doc_id""".stripMargin),
+    Q("template_strip", (s, dir) => {
+      // host-grain template removal: per-host banner (100% of the host's
+      // docs) must go, the 4%-of-each-host syndicated promo must stay —
+      // the within-host document-frequency ratio line_dedup can't express
+      graft.webtext.Templates.templateStrip(
+        graft.webtext.Templates.plantHostTemplates(tp(s, dir, "documents")))
+    },
+      // template_strip: within-host document-frequency ratio (>= 10% of the
+      // host's docs -> template). The banner (100%) vanishes, the syndicated
+      // promo (4% per host) survives — the host-grain semantics line_dedup's
+      // corpus threshold cannot express. Same 8-word chunk grain as line_dedup.
+      """WITH p AS (
+        |  SELECT doc_id, doc_id % 7 AS h,
+        |         'welcome to site' || (doc_id % 7) || ' official portal navigation bar menu '
+        |         || CASE WHEN doc_id % 25 = 0 THEN 'shared promo line appears rarely across hosts here ' ELSE '' END
+        |         || text AS text
+        |  FROM documents),
+        |w AS (SELECT doc_id, h, string_split(text, ' ') AS ws FROM p),
+        |c AS (SELECT doc_id, h, i, array_to_string(ws[(i-1)*8+1:(i-1)*8+8], ' ') AS line
+        |      FROM w, UNNEST(generate_series(1, CAST(ceil(len(ws)/8.0) AS BIGINT))) t(i)),
+        |hd AS (SELECT h, count(DISTINCT doc_id) AS nd FROM c GROUP BY h),
+        |f AS (SELECT h, line, count(DISTINCT doc_id) AS n FROM c GROUP BY h, line),
+        |k AS (SELECT c.doc_id, c.i, c.line FROM c JOIN f USING (h, line) JOIN hd USING (h)
+        |      WHERE f.n * 10 < hd.nd),
+        |r AS (SELECT doc_id, string_agg(line, ' ' ORDER BY i) AS clean_text FROM k GROUP BY doc_id)
+        |SELECT d.doc_id, coalesce(r.clean_text, '') AS clean_text
+        |FROM documents d LEFT JOIN r ON d.doc_id = r.doc_id""".stripMargin),
+    Q("host_cap_sample", (s, dir) => {
+      // FineWeb-style per-host cap: keep <= 50 docs per host in deterministic
+      // LCG order; rank filter plans as WindowGroupLimit (partial limit
+      // before the host shuffle)
+      graft.webtext.HostCap.hostCapSample(tp(s, dir, "documents")).orderBy("doc_id")
+    },
+      // host_cap_sample: the 31-bit LCG order key is exact integer arithmetic
+      // on both sides (no 64-bit overflow for id domains < 2^33)
+      """WITH h AS (SELECT doc_id, 'site' || (doc_id % 7) || '.example.com' AS host,
+        |                  (doc_id * 1103515245 + 12345) % 2147483648 AS hv
+        |           FROM documents),
+        |r AS (SELECT doc_id, host, hv,
+        |             row_number() OVER (PARTITION BY host ORDER BY hv, doc_id) AS rk
+        |      FROM h)
+        |SELECT doc_id, host, hv, CAST(rk AS BIGINT) AS rk FROM r WHERE rk <= 50""".stripMargin),
+    Q("mojibake_repair", (s, dir) => {
+      // ftfy-core encoding repair via the codegen Expression: mangled
+      // UTF-8-as-Latin-1 prefixes recover byte-exactly, genuine Latin-1
+      // accents and ASCII pass through untouched
+      val planted = graft.webtext.Mojibake.plantMojibake(tp(s, dir, "documents"))
+      planted.select(col("doc_id"),
+          graft.expr.MojibakeRepairExpr.mojibakeRepair(col("text")).as("repaired"),
+          (graft.expr.MojibakeRepairExpr.mojibakeRepair(col("text")) =!= col("text"))
+            .cast("long").as("was_mojibake"))
+        .orderBy("doc_id")
+    },
+      // mojibake_repair: repairing the mangled prefix must reproduce the CLEAN
+      // planted prefix byte-exactly, clean accents and ASCII pass through —
+      // the oracle reconstructs the expected output from the plant arithmetic
+      """SELECT doc_id,
+        |       CASE WHEN doc_id % 10 IN (0, 5)
+        |            THEN 'café naïve résumé ' || text ELSE text END AS repaired,
+        |       CAST(CASE WHEN doc_id % 10 = 0 THEN 1 ELSE 0 END AS BIGINT) AS was_mojibake
+        |FROM documents""".stripMargin),
+    Q("extraction_prf", (s, dir) => {
+      // extractor regression eval: word-multiset P/R/F1 in basis points over
+      // the planted degraded extraction (dropped paragraph = recall damage,
+      // appended promo = precision damage); narrow (doc_id, wordhash) keys
+      graft.webtext.ExtractionEval.prf(
+        graft.webtext.ExtractionEval.plantDegraded(tp(s, dir, "documents")))
+        .orderBy("doc_id")
+    },
+      """WITH g AS (SELECT doc_id, unnest(string_split(text, ' ')) AS w FROM documents),
+        |ext AS (SELECT doc_id,
+        |         list_concat(
+        |           CASE WHEN doc_id % 4 = 0 THEN string_split(text, ' ')[25:] ELSE string_split(text, ' ') END,
+        |           CASE WHEN doc_id % 3 = 0 THEN string_split('subscribe to our newsletter for daily updates', ' ') ELSE [] END) AS ws
+        |        FROM documents),
+        |e AS (SELECT doc_id, unnest(ws) AS w FROM ext),
+        |gc AS (SELECT doc_id, w, count(*) AS cg FROM g GROUP BY doc_id, w),
+        |ec AS (SELECT doc_id, w, count(*) AS ce FROM e GROUP BY doc_id, w),
+        |j AS (SELECT coalesce(gc.doc_id, ec.doc_id) AS doc_id,
+        |             coalesce(cg, 0) AS cg, coalesce(ce, 0) AS ce
+        |      FROM gc FULL OUTER JOIN ec ON gc.doc_id = ec.doc_id AND gc.w = ec.w),
+        |m AS (SELECT doc_id, sum(least(cg, ce)) AS inter, sum(cg) AS ng, sum(ce) AS ne
+        |      FROM j GROUP BY doc_id)
+        |SELECT doc_id, CAST(ng AS BIGINT) AS n_gold, CAST(ne AS BIGINT) AS n_extracted,
+        |       CAST(inter AS BIGINT) AS n_match,
+        |       CAST(CASE WHEN ne > 0 THEN inter * 10000 // ne ELSE 0 END AS BIGINT) AS precision_bp,
+        |       CAST(inter * 10000 // ng AS BIGINT) AS recall_bp,
+        |       CAST(CASE WHEN ne > 0 AND inter * 10000 // ne + inter * 10000 // ng > 0
+        |            THEN (2 * (inter * 10000 // ne) * (inter * 10000 // ng)) // (inter * 10000 // ne + inter * 10000 // ng)
+        |            ELSE 0 END AS BIGINT) AS f1_bp
+        |FROM m""".stripMargin),
+    Q("extraction_drift", (s, dir) =>
+      // extractor version-drift gate (the report a release pipeline
+      // thresholds on before a new extractor config reprocesses the corpus):
+      // per-doc byte-identity + char delta + word-multiset added/dropped
+      // masses between incumbent and candidate extractions — needs no gold,
+      // unlike extraction_prf; word text never crosses a shuffle
+      graft.webtext.ExtractionEval.driftReport(
+        graft.webtext.ExtractionEval.plantDegraded(tp(s, dir, "documents")))
+        .orderBy("doc_id"),
+      // extraction_prf: the oracle recomputes the word-multiset overlap
+      // generically (unnest both sides, per-word least()), then the same
+      // trunc-division basis-point chain; empty extraction -> precision 0
+      // extraction_drift: same degraded-extractor CTE family as
+      // extraction_prf; DuckDB quirks handled explicitly (out-of-range list
+      // slice -> NULL, array_to_string([]) -> NULL) so short docs match
+      // Spark's empty-array semantics; Python-validated at both sfs
+      """WITH d AS (SELECT doc_id, text AS gold,
+        |                  coalesce(array_to_string(
+        |                    list_concat(
+        |                      CASE WHEN doc_id % 4 = 0
+        |                           THEN coalesce(string_split(text,' ')[25:], [])
+        |                           ELSE string_split(text,' ') END,
+        |                      CASE WHEN doc_id % 3 = 0
+        |                           THEN string_split('subscribe to our newsletter for daily updates',' ')
+        |                           ELSE [] END), ' '), '') AS extracted
+        |           FROM documents),
+        |g AS (SELECT doc_id, w, CAST(count(*) AS BIGINT) AS cg
+        |      FROM (SELECT doc_id, unnest(string_split(gold,' ')) AS w FROM d)
+        |      WHERE len(w) > 0 GROUP BY doc_id, w),
+        |e AS (SELECT doc_id, w, CAST(count(*) AS BIGINT) AS ce
+        |      FROM (SELECT doc_id, unnest(string_split(extracted,' ')) AS w FROM d)
+        |      WHERE len(w) > 0 GROUP BY doc_id, w),
+        |j AS (SELECT coalesce(g.doc_id, e.doc_id) AS doc_id,
+        |             coalesce(cg, 0) AS cg, coalesce(ce, 0) AS ce
+        |      FROM g FULL OUTER JOIN e ON g.doc_id = e.doc_id AND g.w = e.w),
+        |m AS (SELECT doc_id, sum(greatest(ce - cg, 0))::BIGINT AS added_words,
+        |             sum(greatest(cg - ce, 0))::BIGINT AS dropped_words
+        |      FROM j GROUP BY doc_id)
+        |SELECT d.doc_id, CASE WHEN gold = extracted THEN 1 ELSE 0 END::BIGINT AS identical,
+        |       (len(extracted) - len(gold))::BIGINT AS char_delta,
+        |       added_words, dropped_words
+        |FROM d JOIN m ON d.doc_id = m.doc_id ORDER BY d.doc_id""".stripMargin),
+    Q("soft404_detect", (s, dir) => {
+      // soft-404 content classifier fused with the HTML parse: 404-title
+      // markers + tiny-main-content apology fallback, one map stage
+      graft.webtext.Soft404.detect(
+        graft.webtext.Soft404.plantPages(tp(s, dir, "documents")))
+        .orderBy("doc_id")
+    },
+      // soft404_detect: classification and the error page's 8-word apology are
+      // fixture arithmetic; normal pages' main text equals the document text
+      // (html_main_content's proven byte-identity), so n_main_words = len(words)
+      """SELECT doc_id,
+        |       CAST(CASE WHEN doc_id % 13 = 0 THEN 1 ELSE 0 END AS BIGINT) AS is_soft404,
+        |       CAST(CASE WHEN doc_id % 13 = 0 THEN 8
+        |            ELSE len(string_split(text, ' ')) END AS BIGINT) AS n_main_words
+        |FROM documents""".stripMargin),
+    Q("index_delta", (s, dir) => {
+      // incremental reindex delta for the recrawl: only changed/added/removed
+      // docs reach the term explode; upserts vs tombstones at term grain
+      val docs = tp(s, dir, "documents").select("doc_id", "text")
+      graft.textops.IndexDelta.indexDelta(docs, graft.webtext.Recrawl.snapshotB(docs))
+        .orderBy("term")
+    },
+      // index_delta: snapshot B is crawl_delta's fixture arithmetic (removed
+      // id%7==3, changed id%5==1, added id%11==0 at id+1000000); the oracle
+      // rebuilds both doc sets and counts distinct-doc bigram activity
+      """WITH oldd AS (SELECT doc_id, text FROM documents),
+        |tombdocs AS (SELECT doc_id, text FROM oldd
+        |             WHERE doc_id % 7 = 3 OR (doc_id % 5 = 1 AND doc_id % 7 <> 3)),
+        |updocs AS (SELECT doc_id, text || ' updated' AS text FROM oldd
+        |           WHERE doc_id % 5 = 1 AND doc_id % 7 <> 3
+        |           UNION ALL
+        |           SELECT doc_id + 1000000, 'recrawl new page ' || doc_id FROM oldd
+        |           WHERE doc_id % 11 = 0),
+        |tb AS (SELECT DISTINCT doc_id, ws[i] || ' ' || ws[i+1] AS term
+        |       FROM (SELECT doc_id, string_split(text, ' ') AS ws FROM tombdocs),
+        |            UNNEST(generate_series(1, len(ws)-1)) t(i)),
+        |ub AS (SELECT DISTINCT doc_id, ws[i] || ' ' || ws[i+1] AS term
+        |       FROM (SELECT doc_id, string_split(text, ' ') AS ws FROM updocs),
+        |            UNNEST(generate_series(1, len(ws)-1)) t(i)),
+        |tc AS (SELECT term, count(*) AS nt FROM tb GROUP BY term),
+        |uc AS (SELECT term, count(*) AS nu FROM ub GROUP BY term)
+        |SELECT coalesce(uc.term, tc.term) AS term,
+        |       CAST(coalesce(nu, 0) AS BIGINT) AS n_upserts,
+        |       CAST(coalesce(nt, 0) AS BIGINT) AS n_tombstones
+        |FROM uc FULL OUTER JOIN tc ON uc.term = tc.term""".stripMargin),
+    Q("url_templates", (s, dir) => {
+      // crawler structure report: digit runs -> {n}, counts per (host,
+      // template); map-side rewrite + tiny hash agg
+      graft.webtext.UrlTemplates.templates(
+        graft.webtext.UrlTemplates.plantFrontierUrls(tp(s, dir, "documents")))
+        .orderBy("host", "template")
+    },
+      // url_templates: same digit-run rewrite + (host, template) counts
+      """WITH u AS (
+        |  SELECT 'site' || (doc_id % 7) || '.example.com' AS host,
+        |         '/articles/doc' || doc_id || '.html' AS path FROM documents
+        |  UNION ALL
+        |  SELECT 'site' || (doc_id % 7) || '.example.com', '/r/' || doc_id FROM documents)
+        |SELECT host, regexp_replace(path, '[0-9]+', '{n}', 'g') AS template,
+        |       CAST(count(*) AS BIGINT) AS n_urls
+        |FROM u GROUP BY host, template ORDER BY host, template""".stripMargin)
+  )
+}

@@ -29,6 +29,7 @@ class ProfileSpec extends AnyFunSuite {
 
     val lines = Files.readAllLines(Paths.get(out, "PROFILE.json")).asScala.map(new ObjectMapper().readTree)
     assert(lines.map(_.get("query").asText) == queries)
+    assert(lines.map(_.get("family").asText) == Seq("pagexml", "dedup", "training"))
     lines.foreach { r =>
       val q = r.get("query").asText
       assert(r.get("error").isNull, s"$q: ${r.get("error")}")

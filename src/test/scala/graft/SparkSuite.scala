@@ -1,7 +1,11 @@
 package graft
 
 import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
+import org.apache.spark.sql.types.TimestampNTZType
 import org.scalatest.funsuite.AnyFunSuite
+
+import graft.queries.Registry
 
 /** Shared local SparkSession for all Spark-backed suites. */
 object SparkSuite {
@@ -21,11 +25,7 @@ object SparkSuite {
 
   /** A fresh directory under java.io.tmpdir whose tree is deleted when the
     * test JVM exits. */
-  def tempDir(prefix: String): String = {
-    val dir = java.nio.file.Files.createTempDirectory(prefix).toFile
-    sys.addShutdownHook(org.apache.commons.io.FileUtils.deleteQuietly(dir))
-    dir.toString
-  }
+  def tempDir(prefix: String): String = Scratch.tempDir(prefix)
 }
 
 class ExtractionPipelineSpec extends AnyFunSuite {
@@ -260,37 +260,10 @@ class TzInvarianceSpec extends AnyFunSuite {
     // the events parquet is TIMESTAMP_NTZ; any epoch extraction or window
     // rendering that leaks the session zone changes answers under a DST zone
     // (VERDICT r1: q11_sessionize failed exactly this way on the driver)
-    val names = Seq("q11_sessionize", "q10_events_window", "q1_agg", "q6_filter",
-      "stream_events_window", "stream_sessionize",
-      // WARC-Date is an ISO string rendered by an explicit-UTC formatter
-      // from epoch millis — invariance here pins that no NTZ cast sneaks in
-      "warc_stats",
-      // r4 event-time surface (VERDICT r4 item 5 + ADVICE r4): as-of ordering
-      // on ts, sitemap ISO date render, recrawl delta keyed off snapshot ts,
-      // and the two HLL paths that derive epochs from events.ts
-      "snapshot_asof", "sitemap_urls", "crawl_delta",
-      "hll_distinct", "stream_hll_distinct",
-      // r5: cumulative daily distinct derives (day, v) from events.ts via
-      // ntzEpochSeconds — the day axis must not move under a DST zone
-      "hll_cumulative", "hll_sliding",
-      // r5: the CDX index renders WARC-Date through the same explicit-UTC
-      // formatter; invariance pins its epoch arithmetic too
-      "cdx_index",
-      // r5: CUSUM buckets derive from ntzEpochSeconds AND the planted spike
-      // is an NTZ literal + field-arithmetic interval — both must hold
-      // under DST zones
-      "cusum_bursts",
-      // r5: funnel order keys are ntzEpochSeconds-derived composites
-      "funnel_counts",
-      // r5: interval bounds and point epochs are ntzEpochSeconds-derived
-      "range_join", "range_join_rule", "stream_range_join",
-      // r5c: recrawl scheduling is pure epoch-long arithmetic; feed stamps
-      // and JSON-LD datePublished render via TZ-free LocalDate — invariance
-      // pins that none of them grows a session-zone dependency
-      "recrawl_interval", "feed_items", "jsonld_articles",
-      // r5: the physical as-of operator and the stream-static twin consume
-      // the same ntzEpochSeconds-derived event epochs as snapshot_asof
-      "asof_join_exec", "stream_snapshot_asof")
+    // Besides the NTZ readers, the flag marks queries that render dates from
+    // epoch arithmetic (WARC-Date, CDX, sitemap, feed and JSON-LD stamps,
+    // recrawl intervals): invariance pins that none grows a zone dependency
+    val names = Registry.all.filter(_.eventTime).map(_.name)
     val utc = names.map(n => n -> run(n)).toMap
     for (tz <- Seq("America/New_York", "Asia/Kolkata")) {
       spark.conf.set("spark.sql.session.timeZone", tz)
@@ -303,13 +276,26 @@ class TzInvarianceSpec extends AnyFunSuite {
 class QueriesSmokeSpec extends AnyFunSuite {
   import SparkSuite._
   test("every declared query runs on sf0.001 and returns rows") {
-    SparkEntry.queries.foreach { case (name, fn) =>
-      val n = fn(spark, sf).count()
+    val eventTime = Registry.all.filter(_.eventTime).map(_.name).toSet
+    val unflagged = SparkEntry.queries.toSeq.flatMap { case (name, fn) =>
+      val df = fn(spark, sf)
+      val n = df.count()
       assert(n > 0, s"query $name returned 0 rows")
+      if (!eventTime(name) && readsNtz(df.queryExecution.optimizedPlan)) Some(name) else None
     }
+    assert(unflagged.isEmpty, s"read a TIMESTAMP_NTZ column without eventTime: ${unflagged.sorted}")
   }
-  test("every oracleSql key has a matching query") {
-    val missing = SparkEntry.oracleSql.keySet -- SparkEntry.queries.keySet
-    assert(missing.isEmpty, s"oracleSql without query: $missing")
+  test("the registry rejects two queries with one name") {
+    val Seq(a, b) = Registry.all.take(2)
+    val e = intercept[IllegalArgumentException](Registry.uniqueNames(Seq(a, b, a.copy(oracle = ""))))
+    assert(e.getMessage.contains(a.name))
   }
+
+  /** Whether any operator or subquery of `plan` uses a TIMESTAMP_NTZ column
+    * (events.ts, lineitem.l_shipdate, orders.o_orderdate). A memory-sink
+    * result (the streaming twins) hides its source, so those are flagged by
+    * hand. */
+  private def readsNtz(plan: LogicalPlan): Boolean =
+    (plan.output +: plan.collectWithSubqueries { case p => p.references.toSeq })
+      .exists(_.exists(_.dataType == TimestampNTZType))
 }
