@@ -1,12 +1,14 @@
 package graft.textops
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 /** Deduplication operators over a `documents(doc_id, text, ...)` table:
   * exact (hash group-by), MinHash+LSH (shingle -> minhash -> band -> bucket
-  * self-join -> exact-Jaccard verify), SimHash (chunk-key candidates -> hamming),
-  * and n-gram Jaccard rerank.
+  * self-join -> exact-Jaccard verify), SimHash (Manku-key candidates ->
+  * hamming, the one fingerprint path image and audio dedup share), and
+  * n-gram Jaccard rerank.
   *
   * Scale notes (100 TB shape): signatures are computed map-side with zero
   * shuffle; the only shuffles are the band-key self-join (keys are uniform
@@ -17,8 +19,9 @@ import org.apache.spark.sql.functions._
   * survive: n identical documents share every band key, so a naive self-join
   * emits n^2/2 candidate pairs inside one bucket before any verify filter (AQE
   * splits a skewed partition but cannot cap pair EMISSION). Every candidate
-  * generator here therefore runs exact dedup first ([[textGroups]]): identical
-  * texts collapse to one representative, banding/verification happen at
+  * generator here therefore runs exact dedup first ([[textGroups]],
+  * [[hashGroups]]): identical texts or fingerprints collapse to one
+  * representative, banding/verification happen at
   * representative grain (linear in corpus size), and member-level pairs are
   * reconstructed afterwards by expansion joins — pure output materialization,
   * no signature or Jaccard work per member pair. The clustering path never
@@ -88,14 +91,9 @@ object Dedup {
     * expected false merges at 10^12 docs) — acceptable for dedup, where a
     * false merge drops one non-duplicate document. */
   private[graft] def textGroups(docs: DataFrame): (DataFrame, DataFrame) = {
-    // one shuffle (window min over the hashed key), not groupBy + join-back:
-    // both outputs derive from the same exchange, which Catalyst reuses
-    val withRep = docs.select(col("doc_id"), col("text"))
+    val (reps, members) = collapse(docs.select(col("doc_id"), col("text"))
       .withColumn("tkey", xxhash64(col("text")))
-      .withColumn("tlen", length(col("text")))
-      .withColumn("rep",
-        min("doc_id").over(org.apache.spark.sql.expressions.Window.partitionBy("tkey", "tlen")))
-    val members = withRep.select(col("doc_id"), col("rep"))
+      .withColumn("tlen", length(col("text"))), "tkey", "tlen")
     // NOTE (r6): reps is read >= 3 times by every pair op (signature bands +
     // both sides of the candidate->text verify join); ReuseExchange writes
     // the text-carrying shuffle once and each reader re-runs only the
@@ -104,8 +102,25 @@ object Dedup {
     // job-count-dominated surface) — at true 100 TB scale, materializing
     // reps at this boundary (the standard persist-after-exact-dedup point)
     // becomes the right trade; left plan-stable deliberately.
-    val reps = withRep.filter(col("doc_id") === col("rep")).select(col("doc_id"), col("text"))
-    (reps, members)
+    (reps.select(col("doc_id"), col("text")), members)
+  }
+
+  /** [[textGroups]] for 64-bit fingerprints `(doc_id, h)`: `reps(doc_id, h)`
+    * holds one row per distinct h, `members(doc_id, rep)` maps every doc to
+    * it. The key is the fingerprint itself, 8 bytes. */
+  private[graft] def hashGroups(hashed: DataFrame): (DataFrame, DataFrame) = {
+    val (reps, members) = collapse(hashed.select(col("doc_id"), col("h")), "h")
+    (reps.select(col("doc_id"), col("h")), members)
+  }
+
+  /** The collapse step of every candidate generator: the representative of
+    * each distinct `keys` value is its smallest doc_id. Returns the
+    * representatives' rows and `members(doc_id, rep)`. One shuffle (a window
+    * min over the key), not groupBy + join-back: both outputs derive from the
+    * same exchange, which Catalyst reuses. */
+  private def collapse(keyed: DataFrame, keys: String*): (DataFrame, DataFrame) = {
+    val withRep = keyed.withColumn("rep", min("doc_id").over(Window.partitionBy(keys.map(col): _*)))
+    (withRep.filter(col("doc_id") === col("rep")), withRep.select(col("doc_id"), col("rep")))
   }
 
   /** Cross-corpus incremental dedup — the "only new content" stage of a
@@ -134,11 +149,11 @@ object Dedup {
     * representatives in one band bucket, and an uncapped self-join emits
     * K^2/2 candidate rows before verification — 10^10 candidates from one
     * 10^5-member bucket. The caps below bound per-bucket emission the
-    * Containment.maxBucket way, sized ~10-30x above the largest bucket
-    * measured on any test SF (minhash <= 8, OPH <= 18, simhash Manku keys
-    * <= 80 at sf0.1), so they are provably inactive on the oracle surface
-    * and bind only at the corpus scales the quadratic blowup exists for.
-    * Audit hook (no silent caps): [[hotBandStats]] reports every
+    * Containment.maxBucket way, sized >= 10x above the largest
+    * representative bucket measured on any test SF (MinHash <= 8, OPH <= 18,
+    * Hamming keys <= 84 at sf0.1), so they are provably inactive on the
+    * oracle surface and bind only at the corpus scales the quadratic blowup
+    * exists for. Audit hook (no silent caps): [[hotBandStats]] reports every
     * over-cap bucket; the planted 5000-member distinct-text family test
     * pins linear emission with a shuffle-record listener. */
   val HotBandCap = 256
@@ -153,62 +168,87 @@ object Dedup {
       .withColumn("dropped_pairs",
         expr(s"n * (n - 1L) div 2 - ${cap.toLong} * (${cap.toLong} - 1) div 2"))
 
+  /** The hot-bucket rank rule: `rn` numbers each band's rows by ascending
+    * doc_id, so `rn <= cap` keeps a bucket's cap smallest ids (every row of
+    * a cold bucket). */
+  private def bandRank(bands: DataFrame): DataFrame =
+    bands.withColumn("rn", row_number().over(Window.partitionBy("band").orderBy("doc_id")))
+
   /** Self-join of a (doc_id, band) table into distinct candidate pairs
-    * (a < b) with the hot-bucket guard. Cold buckets (n <= cap) emit all
-    * pairs — bit-identical to the uncapped join. Hot buckets emit:
-    *   - pair mode: pairs among the cap smallest doc_ids (`rn <= cap` on
-    *     both sides; rn <= n makes the cold case automatic) — bounded
-    *     cap^2/2 emission for the pair-output queries;
+    * (a < b) with the hot-bucket guard — the one keyed candidate join of
+    * every near-duplicate generator here (MinHash, OPH and Hamming keys).
+    * Cold buckets (n <= cap) emit all pairs — bit-identical to the uncapped
+    * join. Hot buckets emit:
+    *   - pair mode: pairs among the cap smallest doc_ids ([[bandRank]]) —
+    *     bounded cap^2/2 emission for the pair-output queries;
     *   - star mode (`hotStar`, the [[neardupClusters]] path): bucket-min ->
     *     member edges (`x.rn == 1`) — a LINEAR spanning set; connected
     *     components need connectivity, not the quadratic pair list
     *     (verification still gates every edge).
     * The row_number/count windows partition by band, which pre-shuffles the
     * table exactly as the band self-join needs — the join reuses that
-    * exchange, so the guard costs one partition-local sort. */
+    * exchange, so the guard costs one partition-local sort. Columns of
+    * `bands` beyond (doc_id, band) ride along per side as `<c>_a`/`<c>_b`,
+    * so a verify step needs no join back to its inputs. */
   private def cappedBandPairs(bands: DataFrame, cap: Int, hotStar: Boolean): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    val byBand = Window.partitionBy("band")
-    val sized0 = bands.withColumn("rn", row_number().over(byBand.orderBy("doc_id")))
+    val carried = bands.columns.filterNot(c => c == "doc_id" || c == "band").toSeq
+    val pairCols = col("x.doc_id").as("a") +: col("y.doc_id").as("b") +:
+      carried.flatMap(c => Seq(col(s"x.$c").as(s"${c}_a"), col(s"y.$c").as(s"${c}_b")))
+    val sized0 = bandRank(bands)
     // star mode (r6): the keep condition reads ONLY x-side columns, so the
     // y side is the plain bands table — the per-band rank/count windows run
     // once instead of on both join sides (measured ~20 s executor CPU per
     // side at sf0.1; both sides still share the band exchange).
     if (hotStar) {
-      val sized = sized0.withColumn("n", count(lit(1)).over(byBand))
+      val sized = sized0.withColumn("n", count(lit(1)).over(Window.partitionBy("band")))
       sized.as("x").join(bands.as("y"),
           col("x.band") === col("y.band") && col("x.doc_id") < col("y.doc_id") &&
             (col("x.n") <= cap || col("x.rn") === 1))
-        .select(col("x.doc_id").as("a"), col("y.doc_id").as("b"))
+        .select(pairCols: _*)
         .distinct()
     } else {
       sized0.as("x").join(sized0.as("y"),
           col("x.band") === col("y.band") && col("x.doc_id") < col("y.doc_id") &&
             col("x.rn") <= cap && col("y.rn") <= cap)
-        .select(col("x.doc_id").as("a"), col("y.doc_id").as("b"))
+        .select(pairCols: _*)
         .distinct()
     }
   }
 
-  /** (doc_id, band) MinHash band keys at representative grain. */
-  private[graft] def minhashBands(docs: DataFrame): DataFrame = {
+  /** MinHash band keys of a word-shingle array: 64 permutations, 16 bands. */
+  private[graft] val MinHashKeys: Array[Long] => Array[Long] =
+    s => TextHash.bandKeys(TextHash.minHashSignature(s))
+
+  /** One-permutation-hashing band keys ([[TextHash.ophSignature]]): ONE
+    * mixed hash per shingle instead of 64 permutations — the map-side
+    * signature cost drops 64x, which at 100 TB is the dominant MinHash CPU
+    * term (banding/join cost is unchanged: 16 keys/doc either way). */
+  private[graft] val OphKeys: Array[Long] => Array[Long] =
+    s => TextHash.ophBandKeys(TextHash.ophSignature(s))
+
+  /** (doc_id, band) LSH band keys at representative grain: `keys` maps a
+    * doc's word-shingle array to its band keys ([[MinHashKeys]] or
+    * [[OphKeys]]). */
+  private[graft] def minhashBands(docs: DataFrame,
+                                  keys: Array[Long] => Array[Long] = MinHashKeys): DataFrame = {
     val spark = docs.sparkSession
     import spark.implicits._
     docs.select("doc_id", "text").as[(Long, String)]
       .mapPartitions(_.flatMap { case (id, t) =>
-        val sig = TextHash.minHashSignature(TextHash.wordShingleArr(t))
-        TextHash.bandKeys(sig).map(b => (id, b))
+        keys(TextHash.wordShingleArr(t)).map(b => (id, b))
       })
       .toDF("doc_id", "band")
   }
 
-  /** MinHash band-key LSH candidate pairs (a < b), distinct. Run this on
+  /** LSH band-key candidate pairs (a < b), distinct. Run this on
     * REPRESENTATIVES ([[textGroups]]), never the raw corpus: identical texts
     * share every band, so raw-corpus candidates are quadratic in the largest
     * duplicate group. Distinct-text hot buckets are emission-capped
     * ([[HotBandCap]]; star edges for the CC path via `hotStar`). */
-  private[graft] def bandCandidates(docs: DataFrame, hotStar: Boolean = false): DataFrame =
-    cappedBandPairs(minhashBands(docs), HotBandCap, hotStar)
+  private[graft] def bandCandidates(docs: DataFrame,
+                                    keys: Array[Long] => Array[Long] = MinHashKeys,
+                                    hotStar: Boolean = false): DataFrame =
+    cappedBandPairs(minhashBands(docs, keys), HotBandCap, hotStar)
 
   /** Expand representative-level pairs `(a, b, payload...)` to member-level
     * pairs, plus the within-group pairs of every multi-member group with a
@@ -239,36 +279,8 @@ object Dedup {
     * the boundary). Candidate generation and verification run at
     * representative grain (one per distinct text); member pairs are
     * reconstructed by expansion. */
-  def minhashPairs(docs: DataFrame, thrNum: Long = 4L, thrDen: Long = 5L): DataFrame = {
-    val spark = docs.sparkSession
-    import spark.implicits._
-    val (reps, members) = textGroups(docs)
-    val repPairs = verifyJaccard(reps, bandCandidates(reps), thrNum, thrDen)
-    // within-group pairs: identical texts, Jaccard 1 — inter = un = shingle
-    // cardinality, computed once per multi-member group (never 0: wordShingles
-    // returns a singleton set even for short/empty texts).
-    val withinCard = multiGroupCard(reps, members)(t => TextHash.wordShingleArr(t).length.toLong)
-      .select(col("rep"), col("card").as("inter"), col("card").as("un"))
-    expandPairs(repPairs, members, withinCard)
-  }
-
-  /** OPH band-key LSH candidate pairs (a < b), distinct — identical join
-    * shape to [[bandCandidates]] but signatures come from ONE mixed hash per
-    * shingle ([[TextHash.ophSignature]]) instead of 64 permutations: the
-    * map-side signature cost drops 64x, which at 100 TB is the dominant
-    * MinHash CPU term (banding/join cost is unchanged: 16 keys/doc either
-    * way). Run on REPRESENTATIVES for the same mega-group reason. */
-  private[graft] def ophBandCandidates(docs: DataFrame): DataFrame = {
-    val spark = docs.sparkSession
-    import spark.implicits._
-    val bands = docs.select("doc_id", "text").as[(Long, String)]
-      .mapPartitions(_.flatMap { case (id, t) =>
-        val sig = TextHash.ophSignature(TextHash.wordShingleArr(t))
-        TextHash.ophBandKeys(sig).map(b => (id, b))
-      })
-      .toDF("doc_id", "band")
-    cappedBandPairs(bands, HotBandCap, hotStar = false)
-  }
+  def minhashPairs(docs: DataFrame, thrNum: Long = 4L, thrDen: Long = 5L): DataFrame =
+    shinglePairs(docs, MinHashKeys, thrNum, thrDen)
 
   /** Cross-corpus NEAR-duplicate gate — the recrawl-vs-base stage
     * [[crossCorpusNew]] cannot cover: an incoming document that is a light
@@ -289,21 +301,15 @@ object Dedup {
     * resolve texts from one unioned rep table. */
   def crossCorpusNearDup(incoming: DataFrame, base: DataFrame,
                          thrNum: Long = 4L, thrDen: Long = 5L): DataFrame = {
-    val spark = incoming.sparkSession
-    import spark.implicits._
     val (ri, mi) = textGroups(incoming)
     val (rb, _) = textGroups(base)
-    // per-side hot-band guard (VERDICT r5 item 1): each side keeps the
-    // HotBandCap smallest ids per band before the bipartite join, bounding
-    // per-bucket emission at cap^2; inactive at test SFs (max bucket 8)
-    def bands(reps: DataFrame, idCol: String) = reps.select("doc_id", "text").as[(Long, String)]
-      .mapPartitions(_.flatMap { case (id, t) =>
-        TextHash.bandKeys(TextHash.minHashSignature(TextHash.wordShingleArr(t))).map(b => (id, b))
-      }).toDF(idCol, "band")
-      .withColumn("rn", row_number().over(
-        org.apache.spark.sql.expressions.Window.partitionBy("band").orderBy(idCol)))
-      .filter(col("rn") <= HotBandCap).drop("rn")
-    val cand = bands(ri, "a").join(bands(rb, "b"), "band").select("a", "b").distinct()
+    // per-side hot-band guard: each side keeps the HotBandCap smallest ids
+    // per band ([[bandRank]]) before the bipartite join, bounding per-bucket
+    // emission at cap^2; inactive at test SFs (max bucket 8)
+    def capped(reps: DataFrame, id: String) =
+      bandRank(minhashBands(reps)).filter(col("rn") <= HotBandCap)
+        .select(col("doc_id").as(id), col("band"))
+    val cand = capped(ri, "a").join(capped(rb, "b"), "band").select("a", "b").distinct()
     val verified = verifyJaccard(
       ri.unionByName(rb).select("doc_id", "text").dropDuplicates("doc_id"), cand, thrNum, thrDen)
     val hits = verified.groupBy("a").agg(min(col("b")).as("base_match"))
@@ -314,16 +320,26 @@ object Dedup {
   }
 
   /** One-permutation-hashing near-duplicate pairs: [[minhashPairs]] with the
-    * candidate generator swapped for [[ophBandCandidates]]. Same contract —
-    * (a, b, inter, un) with a < b, exact integer Jaccard, rational threshold
-    * `inter*thrDen >= un*thrNum` — so the two generators are directly A/B-able
-    * against the same exact-pairs oracle (BENCH.md records the signature-cost
-    * comparison). Candidate completeness on the planted fixture is verified
-    * numerically in tools/oph_oracle_check.py: all 600 exact pairs are
-    * candidates, ~400 false candidates are removed by the verify join. */
-  def ophPairs(docs: DataFrame, thrNum: Long = 4L, thrDen: Long = 5L): DataFrame = {
+    * band keys swapped for [[OphKeys]]. Same contract — (a, b, inter, un)
+    * with a < b, exact integer Jaccard, rational threshold
+    * `inter*thrDen >= un*thrNum` — so the two generators are directly
+    * A/B-able against the same exact-pairs oracle (BENCH.md records the
+    * signature-cost comparison). Candidate completeness on the planted
+    * fixture is verified numerically in tools/oph_oracle_check.py: all 600
+    * exact pairs are candidates, ~400 false candidates are removed by the
+    * verify join. */
+  def ophPairs(docs: DataFrame, thrNum: Long = 4L, thrDen: Long = 5L): DataFrame =
+    shinglePairs(docs, OphKeys, thrNum, thrDen)
+
+  /** Representative-grain band candidates -> exact Jaccard verify -> member
+    * expansion; within-group pairs (identical texts, Jaccard 1) have
+    * inter = un = shingle cardinality, computed once per multi-member group
+    * (never 0: wordShingles returns a singleton set even for short/empty
+    * texts). */
+  private def shinglePairs(docs: DataFrame, keys: Array[Long] => Array[Long],
+                           thrNum: Long, thrDen: Long): DataFrame = {
     val (reps, members) = textGroups(docs)
-    val repPairs = verifyJaccard(reps, ophBandCandidates(reps), thrNum, thrDen)
+    val repPairs = verifyJaccard(reps, bandCandidates(reps, keys), thrNum, thrDen)
     val withinCard = multiGroupCard(reps, members)(t => TextHash.wordShingleArr(t).length.toLong)
       .select(col("rep"), col("card").as("inter"), col("card").as("un"))
     expandPairs(repPairs, members, withinCard)
@@ -374,52 +390,73 @@ object Dedup {
       .filter(col("inter") * thrDen >= col("un") * thrNum)
   }
 
-  /** SimHash near-duplicate pairs: Manku 3-of-6-block candidate keys
-    * ([[TextHash.simHashKeys]] — lossless at hamming <= 3, ~2^30 key space so
-    * bucket occupancy stays linear at web scale), hamming distance filter.
-    * Returns (a, b, hamming). Representative-grain candidates + expansion, as
-    * in [[minhashPairs]]; within-group pairs have hamming 0. Radii > 3 trade
-    * recall for cost (candidates beyond the guarantee are still usually caught
-    * because token edits perturb few bits).
-    *
-    * NOTE (ADVICE r3): the default radius changed from 12 to 3 in round 3 —
-    * 3 is the LOSSLESS Manku-key path; callers wanting the old wide-radius
-    * heuristic behavior must now pass `maxHamming = 12` explicitly. */
-  def simhashPairs(docs: DataFrame, maxHamming: Int = 3): DataFrame = {
-    val spark = docs.sparkSession
+  /** (doc_id, band, h) candidate keys of fingerprint representatives
+    * `(doc_id, h)`. Radius <= 3: Manku 3-of-6-block keys
+    * ([[TextHash.simHashKeys]] — lossless at hamming <= 3, ~2^30 key space
+    * so bucket occupancy stays linear at web scale, the scale path); wider
+    * radii: heuristic 16-bit chunks ([[TextHash.simHashChunks]], recall
+    * covered by ScalaTest only). The key column is named `band` so
+    * [[hotBandStats]] audits it as it audits MinHash bands. */
+  private[graft] def hammingBands(reps: DataFrame, maxHamming: Int): DataFrame = {
+    val spark = reps.sparkSession
     import spark.implicits._
-    val (reps, members) = textGroups(docs)
-    val sigs = reps.select("doc_id", "text").as[(Long, String)]
-      .mapPartitions(_.map { case (id, t) => (id, TextHash.simHash(t)) })
-      .toDF("doc_id", "sim")
-    // radius <= 3: Manku keys (lossless + linear occupancy, the scale path);
-    // wider radii: heuristic 16-bit chunks (recall covered by ScalaTest only)
     val keysOf: Long => Array[Long] =
       if (maxHamming <= 3) TextHash.simHashKeys else TextHash.simHashChunks
-    val chunks0 = sigs.as[(Long, Long)]
-      .flatMap { case (id, h) => keysOf(h).map(c => (id, h, c)) }
-      .toDF("doc_id", "sim", "chunk")
-    // hot-key guard (VERDICT r5 item 1, same shape as cappedBandPairs): a
-    // templated family sharing untouched blocks puts K distinct reps in one
-    // key bucket; cap emission at pairs among the HotSimKeyCap smallest ids
-    // (inactive at test SFs: max measured occupancy 80 at sf0.1)
-    val chunks = chunks0.withColumn("rn",
-      row_number().over(org.apache.spark.sql.expressions.Window
-        .partitionBy("chunk").orderBy("doc_id")))
-    val repPairs = chunks.as("x").join(chunks.as("y"),
-        col("x.chunk") === col("y.chunk") && col("x.doc_id") < col("y.doc_id") &&
-          col("x.rn") <= HotSimKeyCap && col("y.rn") <= HotSimKeyCap)
-      .select(col("x.doc_id").as("a"), col("y.doc_id").as("b"),
-        col("x.sim").as("sim_a"), col("y.sim").as("sim_b"))
-      .distinct()
-      .as[(Long, Long, Long, Long)]
-      .map { case (a, b, ha, hb) => (a, b, TextHash.hamming(ha, hb)) }
-      .toDF("a", "b", "hamming")
+    reps.select("doc_id", "h").as[(Long, Long)]
+      .flatMap { case (id, h) => keysOf(h).map(k => (id, k, h)) }
+      .toDF("doc_id", "band", "h")
+  }
+
+  /** Candidate pairs (a, b, h_a, h_b), a < b, of fingerprint
+    * representatives: the capped key self-join over [[hammingBands]] with
+    * [[HotSimKeyCap]]. */
+  private[graft] def hammingCandidates(reps: DataFrame, maxHamming: Int): DataFrame =
+    cappedBandPairs(hammingBands(reps, maxHamming), HotSimKeyCap, hotStar = false)
+
+  /** Near-duplicate pairs of 64-bit fingerprints — the one Hamming pipeline
+    * behind text SimHash ([[simhashPairs]]), image aHash and audio prints
+    * ([[Multimodal.imageNearDupPairs]], [[Multimodal.audioNearDupPairs]]).
+    * Input `hashed(doc_id, h)`; output (a, b, hamming) with a < b,
+    * hamming <= maxHamming, hamming a BIGINT.
+    *
+    * Shape: collapse identical fingerprints to one representative
+    * ([[hashGroups]]) -> keys -> capped self-join ([[hammingCandidates]]) ->
+    * exact hamming verify -> member expansion ([[expandPairs]]; within-group
+    * pairs have hamming 0). Identical fingerprints are what a perceptual hash
+    * produces in bulk (the 10,000 sf0.1 images have 1,877 distinct aHash
+    * values): collapsed, a group costs one row per key, not a quadratic
+    * share of its buckets. */
+  private[graft] def hammingPairs(hashed: DataFrame, maxHamming: Int): DataFrame = {
+    val (reps, members) = hashGroups(hashed)
+    val repPairs = hammingCandidates(reps, maxHamming)
+      .select(col("a"), col("b"),
+        bit_count(col("h_a").bitwiseXOR(col("h_b"))).cast("long").as("hamming"))
       .filter(col("hamming") <= maxHamming)
     val withinZero = members.groupBy("rep").agg(count(lit(1)).as("n")).filter(col("n") > 1)
       .select(col("rep"), lit(0L).as("hamming"))
     expandPairs(repPairs, members, withinZero)
   }
+
+  /** (doc_id, h) 64-bit SimHash of every document's text, map-side. */
+  private[graft] def simhashes(docs: DataFrame): DataFrame = {
+    val spark = docs.sparkSession
+    import spark.implicits._
+    docs.select("doc_id", "text").as[(Long, String)]
+      .mapPartitions(_.map { case (id, t) => (id, TextHash.simHash(t)) })
+      .toDF("doc_id", "h")
+  }
+
+  /** SimHash near-duplicate pairs: [[simhashes]] through [[hammingPairs]].
+    * Returns (a, b, hamming). Identical texts have identical SimHashes, so
+    * the fingerprint collapse subsumes exact text dedup without shuffling
+    * text. Radii > 3 trade recall for cost (candidates beyond the guarantee
+    * are still usually caught because token edits perturb few bits).
+    *
+    * NOTE (ADVICE r3): the default radius changed from 12 to 3 in round 3 —
+    * 3 is the LOSSLESS Manku-key path; callers wanting the old wide-radius
+    * heuristic behavior must now pass `maxHamming = 12` explicitly. */
+  def simhashPairs(docs: DataFrame, maxHamming: Int = 3): DataFrame =
+    hammingPairs(simhashes(docs), maxHamming)
 
   /** Connected components over the near-duplicate graph: each document's
     * cluster_id is the smallest doc_id reachable through near-duplicate pairs
@@ -743,7 +780,6 @@ object Dedup {
     * Templates) is the intended mitigation, same as every other gram-grain
     * op here. */
   def ngramNovelty(docs: DataFrame, n: Int = 8): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
     val g = docs
       .select(col("doc_id"), split(col("text"), " ", -1).as("ws"))
       .where(size(col("ws")) >= n)

@@ -348,31 +348,23 @@ object Multimodal {
   }
 
   /** Image near-duplicate pairs: REAL decode (ImageIO, same entry as the
-    * feature path) → aHash → Manku 3-of-6-block candidate keys
-    * ([[TextHash.simHashKeys]] — lossless at hamming ≤ 3, linear occupancy)
-    * → exact hamming verify. The image twin of the text SimHash pipeline:
-    * candidate generation never compares pixels pairwise, the one shuffle
-    * carries 20 (key, id, hash) rows per image. Undecodable payloads drop
+    * feature path) → [[aHash]] map-side → [[Dedup.hammingPairs]] (collapse
+    * identical hashes, Manku 3-of-6-block keys — lossless at hamming ≤ 3 —,
+    * capped key join, exact hamming verify, member expansion). Candidate
+    * generation never compares pixels pairwise. Undecodable payloads drop
     * out (the feature path reports those; dedup has nothing to hash).
     * Output: (a, b, hamming), a < b. */
-  def imageNearDupPairs(media: Dataset[MediaRow], maxHamming: Int = 3): DataFrame = {
+  def imageNearDupPairs(media: Dataset[MediaRow], maxHamming: Int = 3): DataFrame =
+    Dedup.hammingPairs(imageHashes(media), maxHamming)
+
+  /** (doc_id, h) aHash of every decodable image, map-side. */
+  private[graft] def imageHashes(media: Dataset[MediaRow]): DataFrame = {
     val spark = media.sparkSession
     import spark.implicits._
-    import org.apache.spark.sql.functions._
-    val hashed = media.mapPartitions(_.grouped(BatchSize).flatMap(_.flatMap { m =>
+    media.mapPartitions(_.grouped(BatchSize).flatMap(_.flatMap { m =>
       val img = readImage(m.payload)
       if (img == null) None else Some((m.doc_id, aHash(img)))
-    }))
-    val keyed = hashed.flatMap { case (id, v) =>
-      TextHash.simHashKeys(v).map(k => (k, id, v))
-    }.toDF("key", "img_id", "v")
-    keyed.as("x").join(keyed.as("y"),
-        col("x.key") === col("y.key") && col("x.img_id") < col("y.img_id"))
-      .select(col("x.img_id").as("a"), col("y.img_id").as("b"),
-        col("x.v").as("va"), col("y.v").as("vb"))
-      .distinct()
-      .select(col("a"), col("b"), bit_count(col("va").bitwiseXOR(col("vb"))).cast("long").as("hamming"))
-      .filter(col("hamming") <= maxHamming)
+    })).toDF("doc_id", "h")
   }
 
   /** REAL resize (no stub): ImageIO decode -> `Graphics2D` nearest-neighbor
@@ -571,30 +563,19 @@ object Multimodal {
 
   /** Audio near-duplicate pairs — the audio twin of [[imageNearDupPairs]]:
     * REAL RIFF/WAVE chunk-walk decode ([[parseWav]]) → [[audioFingerprint]]
-    * → Manku 3-of-6-block candidate keys (lossless at hamming ≤ 3) → exact
-    * hamming verify. Candidate generation never compares samples pairwise;
-    * the one shuffle carries 20 (key, id, print) rows per clip. Undecodable
-    * payloads drop out. Output: (a, b, hamming), a < b. */
-  def audioNearDupPairs(media: Dataset[MediaRow], maxHamming: Int = 3): DataFrame = {
+    * map-side → [[Dedup.hammingPairs]]. Candidate generation never compares
+    * samples pairwise. Undecodable payloads drop out. Output: (a, b,
+    * hamming), a < b. */
+  def audioNearDupPairs(media: Dataset[MediaRow], maxHamming: Int = 3): DataFrame =
+    Dedup.hammingPairs(audioHashes(media), maxHamming)
+
+  /** (doc_id, h) [[audioFingerprint]] of every decodable clip, map-side. */
+  private[graft] def audioHashes(media: Dataset[MediaRow]): DataFrame = {
     val spark = media.sparkSession
     import spark.implicits._
-    import org.apache.spark.sql.functions._
-    val hashed = media.mapPartitions(_.flatMap { m =>
-      parseWav(m.payload).map { case (_, samples) =>
-        (m.doc_id, audioFingerprint(samples))
-      }
-    })
-    val keyed = hashed.flatMap { case (id, v) =>
-      TextHash.simHashKeys(v).map(k => (k, id, v))
-    }.toDF("key", "clip_id", "v")
-    keyed.as("x").join(keyed.as("y"),
-        col("x.key") === col("y.key") && col("x.clip_id") < col("y.clip_id"))
-      .select(col("x.clip_id").as("a"), col("y.clip_id").as("b"),
-        col("x.v").as("va"), col("y.v").as("vb"))
-      .distinct()
-      .select(col("a"), col("b"),
-        bit_count(col("va").bitwiseXOR(col("vb"))).cast("long").as("hamming"))
-      .filter(col("hamming") <= maxHamming)
+    media.mapPartitions(_.flatMap { m =>
+      parseWav(m.payload).map { case (_, samples) => (m.doc_id, audioFingerprint(samples)) }
+    }).toDF("doc_id", "h")
   }
 
   /** REAL audio features from parsed PCM samples: energy (exact sum of

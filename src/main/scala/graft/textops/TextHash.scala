@@ -117,24 +117,9 @@ object TextHash {
   private val permB: Array[Long] =
     Array.tabulate(MinHashPerms)(i => splitmix64(0x5eed1001L + i))
 
-  /** MinHash signature over a shingle set: h_i(x) = a_i*x + b_i (mod 2^64),
-    * min per permutation. */
-  def minHashSignature(shingles: Set[Long]): Array[Long] = {
-    val sig = Array.fill(MinHashPerms)(Long.MaxValue)
-    shingles.foreach { s =>
-      var i = 0
-      while (i < MinHashPerms) {
-        val h = permA(i) * s + permB(i)
-        if (h < sig(i)) sig(i) = h
-        i += 1
-      }
-    }
-    sig
-  }
-
-  /** [[minHashSignature]] over a shingle array (r6 unboxed hot path) —
-    * per-permutation min is order/duplicate-insensitive, so the signature is
-    * identical for the equivalent set. */
+  /** MinHash signature over a shingle array: h_i(x) = a_i*x + b_i
+    * (mod 2^64), min per permutation — order/duplicate-insensitive, so the
+    * signature is that of the equivalent shingle set. */
   def minHashSignature(shingles: Array[Long]): Array[Long] = {
     val sig = Array.fill(MinHashPerms)(Long.MaxValue)
     var j = 0
@@ -182,35 +167,9 @@ object TextHash {
     * by the gap so two documents collide on a borrowed slot only when they
     * agree on BOTH the donor value and the gap. All arithmetic wraps in
     * Long and all comparisons are signed, so the Python/SQL recompute is
-    * bit-identical (tools/oph_oracle_check.py). */
-  def ophSignature(shingles: Set[Long]): Array[Long] = {
-    val sig = new Array[Long](OphBins)
-    val filled = new Array[Boolean](OphBins)
-    shingles.foreach { s =>
-      val h = splitmix64(s)
-      val b = java.lang.Math.floorMod(h, OphBins.toLong).toInt
-      if (!filled(b) || h < sig(b)) { sig(b) = h; filled(b) = true }
-    }
-    val out = new Array[Long](OphBins)
-    var b = 0
-    while (b < OphBins) {
-      if (filled(b)) out(b) = sig(b)
-      else {
-        var d = 1
-        while (d < OphBins && !filled((b + d) % OphBins)) d += 1
-        // d == OphBins impossible for a non-empty shingle set (wordShingles
-        // never returns empty); guard stays total for safety
-        out(b) =
-          if (d == OphBins) 0L
-          else sig((b + d) % OphBins) + 0x9e3779b97f4a7c15L * d
-      }
-      b += 1
-    }
-    out
-  }
-
-  /** [[ophSignature]] over a shingle array (r6 unboxed hot path) — per-bin
-    * signed min is order/duplicate-insensitive: identical signature. */
+    * bit-identical (tools/oph_oracle_check.py). Per-bin signed min is
+    * order/duplicate-insensitive: the signature is that of the equivalent
+    * shingle set. */
   def ophSignature(shingles: Array[Long]): Array[Long] = {
     val sig = new Array[Long](OphBins)
     val filled = new Array[Boolean](OphBins)
@@ -228,6 +187,8 @@ object TextHash {
       else {
         var d = 1
         while (d < OphBins && !filled((b + d) % OphBins)) d += 1
+        // d == OphBins impossible for a non-empty shingle array (wordShingleArr
+        // never returns empty); guard stays total for safety
         out(b) =
           if (d == OphBins) 0L
           else sig((b + d) % OphBins) + 0x9e3779b97f4a7c15L * d
@@ -335,8 +296,6 @@ object TextHash {
     * oracle-checked production path is [[simHashKeys]]. */
   def simHashChunks(h: Long): Array[Long] =
     Array.tabulate(4)(c => (c.toLong << 32) | ((h >>> (16 * c)) & 0xffffL))
-
-  def hamming(a: Long, b: Long): Int = java.lang.Long.bitCount(a ^ b)
 
   // ---- Winnowing fingerprint ---------------------------------------------------
 

@@ -94,9 +94,6 @@ object StreamingExtract {
     drainToTable(extracted, "stream_extract", "append")
   }
 
-  /** Same lift for the HTML main-content path: generate -> parse -> block
-    * score under readStream, proving every per-row extraction surface of the
-    * engine is streaming-ready without code changes. */
   /** Streaming first-occurrence PARAGRAPH dedup — the incremental form of
     * [[graft.webtext.WebText.paragraphDedup]]: pages arrive as a stream,
     * each parses map-side into narrow (8-byte phash, doc, para) rows
@@ -135,6 +132,9 @@ object StreamingExtract {
         col("keep_para").as("keep_para_idx"), col("n_copies"))
   }
 
+  /** The [[extractOnce]] lift for the HTML main-content path: generate ->
+    * parse -> block score under readStream, proving every per-row extraction
+    * surface of the engine is streaming-ready without code changes. */
   def htmlContentOnce(spark: SparkSession, sfDir: String): DataFrame = {
     val stream = streamTable(spark, sfDir, "documents.parquet")
     val extracted = graft.webtext.WebText.mainContent(

@@ -1,6 +1,7 @@
 package graft
 
 import org.scalatest.funsuite.AnyFunSuite
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** VERDICT r5 item 1: distinct-text hot LSH band buckets. A templated family
@@ -12,6 +13,8 @@ import org.apache.spark.sql.functions._
   *     with a shuffle-record listener (the no-silent-caps evidence);
   *   - hotBandStats reports the over-cap buckets (the audit surface);
   *   - clustering output is still one family component.
+  * The Hamming path (SimHash, image aHash, audio prints) runs through the
+  * same capped join at HotSimKeyCap, after collapsing identical hashes.
   */
 class HotBandSpec extends AnyFunSuite {
   import SparkSuite._
@@ -47,7 +50,9 @@ class HotBandSpec extends AnyFunSuite {
       s"expected a family-sized bucket, got ${stats.map(_.getLong(1)).mkString(",")}")
   }
 
-  test("star mode (neardupClusters path): linear candidate emission, one family component") {
+  /** Shuffle records written while `body` runs. */
+  private def shuffleRecords(body: => Unit): Long = {
+    val bus = org.apache.spark.GraftListenerBus
     val records = new java.util.concurrent.atomic.AtomicLong(0)
     val listener = new org.apache.spark.scheduler.SparkListener {
       override def onTaskEnd(t: org.apache.spark.scheduler.SparkListenerTaskEnd): Unit = {
@@ -55,24 +60,21 @@ class HotBandSpec extends AnyFunSuite {
         if (m != null) records.addAndGet(m.shuffleWriteMetrics.recordsWritten)
       }
     }
+    bus.drain(spark.sparkContext) // earlier jobs' events must not reach it
     spark.sparkContext.addSparkListener(listener)
-    try {
-      records.set(0)
-      val star = textops.Dedup.bandCandidates(family, hotStar = true)
-      val nStar = star.count()
-      // star edges: bucket-min -> member per band; distinct union is ~K-1
-      assert(nStar <= 16L * K && nStar >= K - 1,
-        s"star emission not linear-shaped: $nStar for $K docs")
-      var last = -1L
-      var spins = 0
-      while (records.get() != last && spins < 50) {
-        last = records.get(); Thread.sleep(100); spins += 1
-      }
-      // generous LINEAR budget: 16 band rows/doc + window + join + distinct
-      // stages; the quadratic join would shuffle >= K^2/4 = 6.25M records
-      assert(records.get() < 60L * K,
-        s"shuffle records ${records.get()} exceed the linear budget for $K docs")
-    } finally spark.sparkContext.removeSparkListener(listener)
+    try { body; bus.drain(spark.sparkContext); records.get() }
+    finally spark.sparkContext.removeSparkListener(listener)
+  }
+
+  test("star mode (neardupClusters path): linear candidate emission, one family component") {
+    var nStar = 0L
+    val records = shuffleRecords { nStar = textops.Dedup.bandCandidates(family, hotStar = true).count() }
+    // star edges: bucket-min -> member per band; distinct union is ~K-1
+    assert(nStar <= 16L * K && nStar >= K - 1,
+      s"star emission not linear-shaped: $nStar for $K docs")
+    // generous LINEAR budget: 16 band rows/doc + window + join + distinct
+    // stages; the quadratic join would shuffle >= K^2/4 = 6.25M records
+    assert(records < 60L * K, s"shuffle records $records exceed the linear budget for $K docs")
 
     val clusters = textops.Dedup.neardupClusters(family)
     val labels = clusters.select("cluster_id").distinct().collect().map(_.getLong(0))
@@ -80,19 +82,63 @@ class HotBandSpec extends AnyFunSuite {
       s"family must collapse to one component rooted at doc 1, got ${labels.take(5).mkString(",")}")
   }
 
+  test("Hamming keys: an over-cap family of distinct hashes emits at most cap^2/2 pairs per key") {
+    // K distinct fingerprints that differ only in Manku block 3 (bits 33-43,
+    // 11 bits, so id << 33 is distinct for K < 2048): the 10 keys built from
+    // the other blocks are K-member buckets, the 10 keys through block 3 hold
+    // one member each
+    val k = 2000
+    val reps = spark.range(1, k + 1).select(col("id").as("doc_id"), shiftleft(col("id"), 33).as("h"))
+    val cap = textops.Dedup.HotSimKeyCap
+    val hot = textops.Dedup.hotBandStats(textops.Dedup.hammingBands(reps, 3), cap).collect()
+    assert(hot.length == 10 && hot.forall(_.getLong(1) == k),
+      s"expected 10 K-member keys, got ${hot.map(_.getLong(1)).mkString(",")}")
+    val n = textops.Dedup.hammingCandidates(reps, 3).count()
+    // every hot key keeps the same cap smallest ids, so the distinct union is
+    // exactly one key's cap^2/2 — never the K^2/2 of the uncapped join
+    assert(n == cap.toLong * (cap - 1) / 2, s"capped emission: $n pairs (cap = $cap, K = $k)")
+  }
+
+  test("Hamming pairs: N copies of one hash give N(N-1)/2 pairs at hamming 0; the key join sees one rep") {
+    val n = 2000
+    val hashed = spark.range(1, n + 1).select(col("id").as("doc_id"), lit(0x5eedL).as("h"))
+    val pairs = textops.Dedup.hammingPairs(hashed, 3)
+    var count = 0L
+    val records = shuffleRecords { count = pairs.count() }
+    assert(count == n.toLong * (n - 1) / 2)
+    assert(pairs.filter(col("hamming") =!= 0L).isEmpty)
+    // linear budget: the collapse window and the member expansion joins move
+    // each doc a few times; the key join moves the representative's 20 keys.
+    // Without the collapse, the key rows alone would be 20 * N.
+    assert(records < 10L * n, s"shuffle records $records exceed the linear budget for $n copies")
+  }
+
   test("small corpora stay under every cap: capped join == uncapped join (planted sf0.001)") {
-    val docs = textops.Dedup.planted(
-      spark.read.parquet(s"$sf/documents.parquet").repartition(8))
+    def uncapped(bands: DataFrame) = bands.as("x").join(bands.as("y"),
+        col("x.band") === col("y.band") && col("x.doc_id") < col("y.doc_id"))
+      .select(col("x.doc_id").as("a"), col("y.doc_id").as("b")).distinct()
+    def sameRows(x: DataFrame, y: DataFrame) = x.exceptAll(y).isEmpty && y.exceptAll(x).isEmpty
+    val raw = spark.read.parquet(s"$sf/documents.parquet").repartition(8)
+    val docs = textops.Dedup.planted(raw)
     val (reps, _) = textops.Dedup.textGroups(docs)
     val bands = textops.Dedup.minhashBands(reps)
     assert(textops.Dedup.hotBandStats(bands, textops.Dedup.HotBandCap).isEmpty,
       "test-SF buckets must stay under HotBandCap (cap chosen to be inactive)")
-    // uncapped reference join
-    val uncapped = bands.as("x").join(bands.as("y"),
-        col("x.band") === col("y.band") && col("x.doc_id") < col("y.doc_id"))
-      .select(col("x.doc_id").as("a"), col("y.doc_id").as("b")).distinct()
-    val capped = textops.Dedup.bandCandidates(reps)
-    assert(capped.exceptAll(uncapped).isEmpty && uncapped.exceptAll(capped).isEmpty,
+    assert(sameRows(textops.Dedup.bandCandidates(reps), uncapped(bands)),
       "capped candidates must be bit-identical to the uncapped join below the cap")
+    // the Hamming keys of the three fingerprint queries' inputs, at
+    // representative grain
+    Seq(
+      "simhash" -> textops.Dedup.simhashes(textops.Dedup.plantedTail(raw)),
+      "image" -> textops.Multimodal.imageHashes(textops.Multimodal.mediaWithNearTwins(raw)),
+      "audio" -> textops.Multimodal.audioHashes(textops.Multimodal.mediaWithAudioTwins(raw))
+    ).foreach { case (name, hashed) =>
+      val (hreps, _) = textops.Dedup.hashGroups(hashed)
+      val keys = textops.Dedup.hammingBands(hreps, 3)
+      assert(textops.Dedup.hotBandStats(keys, textops.Dedup.HotSimKeyCap).isEmpty,
+        s"$name: test-SF keys must stay under HotSimKeyCap")
+      assert(sameRows(textops.Dedup.hammingCandidates(hreps, 3).select("a", "b"), uncapped(keys)),
+        s"$name: capped candidates must equal the uncapped key join below the cap")
+    }
   }
 }

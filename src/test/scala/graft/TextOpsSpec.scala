@@ -16,21 +16,21 @@ class TextHashSpec extends AnyFunSuite {
     val t1 = (1 to 50).map("w" + _).mkString(" ")
     val t2 = (3 to 50).map("w" + _).mkString(" ")
     val est = TextHash.estimateJaccard(
-      TextHash.minHashSignature(TextHash.wordShingles(t1)),
-      TextHash.minHashSignature(TextHash.wordShingles(t2)))
+      TextHash.minHashSignature(TextHash.wordShingleArr(t1)),
+      TextHash.minHashSignature(TextHash.wordShingleArr(t2)))
     val truth = TextHash.jaccard(TextHash.wordShingles(t1), TextHash.wordShingles(t2))
     assert(math.abs(est - truth) < 0.25, s"est=$est truth=$truth")
   }
   test("band keys collide for identical signatures and docs share bands at high sim") {
-    val sig = TextHash.minHashSignature(TextHash.wordShingles("a b c d e f"))
+    val sig = TextHash.minHashSignature(TextHash.wordShingleArr("a b c d e f"))
     assert(TextHash.bandKeys(sig).sameElements(TextHash.bandKeys(sig.clone())))
   }
   test("simhash hamming small for near-identical, large for unrelated") {
     val a = (1 to 40).map("w" + _).mkString(" ")
     val b = (1 to 39).map("w" + _).mkString(" ") // drop last word
     val c = (100 to 140).map("x" + _).mkString(" ")
-    assert(TextHash.hamming(TextHash.simHash(a), TextHash.simHash(b)) <= 12)
-    assert(TextHash.hamming(TextHash.simHash(a), TextHash.simHash(c)) > 12)
+    assert(java.lang.Long.bitCount(TextHash.simHash(a) ^ TextHash.simHash(b)) <= 12)
+    assert(java.lang.Long.bitCount(TextHash.simHash(a) ^ TextHash.simHash(c)) > 12)
   }
   test("simHashKeys are lossless at hamming <= 3 (every <=3-bit flip shares a key)") {
     // deterministic exhaustive-ish sweep: seeds from splitmix64, flips over
@@ -90,7 +90,7 @@ class DedupSparkSpec extends AnyFunSuite {
 
   test("oph signature: bins are floorMod of the mixed hash, empties densify from the right donor") {
     import textops.TextHash
-    val sh = Set(1L, 2L, 3L, 42L, -17L)
+    val sh = Array(1L, 2L, 3L, 42L, -17L)
     val sig = TextHash.ophSignature(sh)
     assert(sig.length == TextHash.OphBins)
     assert(sig sameElements TextHash.ophSignature(sh), "deterministic")
@@ -113,7 +113,7 @@ class DedupSparkSpec extends AnyFunSuite {
     }
     // identical sets -> identical band keys; disjoint-ish sets differ somewhere
     assert(TextHash.ophBandKeys(sig) sameElements TextHash.ophBandKeys(TextHash.ophSignature(sh)))
-    val other = TextHash.ophSignature(Set(900L, 901L, 902L, 903L))
+    val other = TextHash.ophSignature(Array(900L, 901L, 902L, 903L))
     assert(!(other sameElements sig))
   }
 
@@ -134,7 +134,7 @@ class DedupSparkSpec extends AnyFunSuite {
     val others = (1L to 10L).map(i => (5000L + i, (1 to 30).map(w => s"o${i}w$w").mkString(" ")))
     val docs = (copies ++ others).toDF("doc_id", "text")
     val (reps, _) = textops.Dedup.textGroups(docs)
-    val cand = textops.Dedup.ophBandCandidates(reps).count()
+    val cand = textops.Dedup.bandCandidates(reps, textops.Dedup.OphKeys).count()
     assert(cand < 100, s"rep-level OPH candidates must be near-linear, got $cand")
   }
 
