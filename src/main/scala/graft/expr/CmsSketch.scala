@@ -43,7 +43,7 @@ case class CmsSketchAgg(
       val f = v.asInstanceOf[Long]
       var i = 0
       while (i < depth) {
-        buf(i * width + (HllSketchAgg.splitmix64(f + i) & (width - 1)).toInt) += 1L
+        buf(i * width + (graft.textops.TextHash.splitmix64(f + i) & (width - 1)).toInt) += 1L
         i += 1
       }
     }
@@ -117,7 +117,7 @@ object CmsSketch {
     var min = Long.MaxValue
     var i = 0
     while (i < depth) {
-      val b = (HllSketchAgg.splitmix64(key + i) & (width - 1)).toInt
+      val b = (graft.textops.TextHash.splitmix64(key + i) & (width - 1)).toInt
       val c = bb.getLong((i * width + b) * 8)
       if (c < min) min = c
       i += 1

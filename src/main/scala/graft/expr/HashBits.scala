@@ -10,8 +10,9 @@ import org.apache.spark.sql.types.{DataType, IntegerType, LongType}
   * share with their oracles (guide §4: keep the corpus-grain hot path inside
   * codegen — a typed `Dataset.map` deserializes every row to Scala objects
   * and breaks the WholeStageCodegen span). Each expression compiles to a
-  * single static JVM call on [[HllSketchAgg]], so the arithmetic is the
-  * EXACT same bytecode the aggregate and the oracle-pinned tools use —
+  * single static JVM call ([[graft.textops.TextHash.splitmix64]],
+  * [[HllSketchAgg.rho]]), so the arithmetic is the EXACT same bytecode the
+  * aggregate and the oracle-pinned tools use —
   * nothing to re-prove about overflow or rounding.
   */
 object HashBits {
@@ -30,9 +31,9 @@ object HashBits {
 case class Splitmix64Expr(child: Expression) extends UnaryExpression {
   override def dataType: DataType = LongType
   override protected def nullSafeEval(input: Any): Any =
-    HllSketchAgg.splitmix64(input.asInstanceOf[Long])
+    graft.textops.TextHash.splitmix64(input.asInstanceOf[Long])
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c => s"graft.expr.HllSketchAgg$$.MODULE$$.splitmix64($c)")
+    defineCodeGen(ctx, ev, c => s"graft.textops.TextHash$$.MODULE$$.splitmix64($c)")
   override protected def withNewChildInternal(newChild: Expression): Splitmix64Expr =
     copy(child = newChild)
   override def prettyName: String = "splitmix64"

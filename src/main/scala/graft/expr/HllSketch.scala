@@ -47,7 +47,7 @@ case class HllSketchAgg(
   override def update(buf: Array[Byte], input: InternalRow): Array[Byte] = {
     val v = child.eval(input)
     if (v != null) {
-      val h = HllSketchAgg.splitmix64(v.asInstanceOf[Long])
+      val h = graft.textops.TextHash.splitmix64(v.asInstanceOf[Long])
       val idx = (h >>> restBits).toInt
       val rho = HllSketchAgg.rho(h, restBits)
       if (buf(idx) < rho) buf(idx) = rho.toByte
@@ -101,15 +101,6 @@ object HllSketchAgg {
     val rest = h & ((1L << restBits) - 1)
     if (rest == 0L) restBits + 1
     else restBits - (64 - java.lang.Long.numberOfLeadingZeros(rest)) + 1
-  }
-
-  /** splitmix64 finalizer — Java Long overflow IS mod-2^64, so this matches
-    * the oracle's HUGEINT formulation (32-bit-split multiplication) exactly. */
-  def splitmix64(x: Long): Long = {
-    var z = x + 0x9E3779B97F4A7C15L
-    z = (z ^ (z >>> 30)) * 0xBF58476D1CE4E5B9L
-    z = (z ^ (z >>> 27)) * 0x94D049BB133111EBL
-    z ^ (z >>> 31)
   }
 
   /** Column API: approximate distinct count of a LONG column. */

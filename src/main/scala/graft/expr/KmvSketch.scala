@@ -50,7 +50,7 @@ case class KmvSketchAgg(
                       input: InternalRow): java.util.TreeSet[java.lang.Long] = {
     val v = child.eval(input)
     if (v != null) {
-      val h = HllSketchAgg.splitmix64(v.asInstanceOf[Long])
+      val h = graft.textops.TextHash.splitmix64(v.asInstanceOf[Long])
       if (buf.size < k) buf.add(h)
       else if (java.lang.Long.compareUnsigned(h, buf.last()) < 0) {
         if (buf.add(h)) buf.pollLast()

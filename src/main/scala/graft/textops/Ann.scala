@@ -347,7 +347,7 @@ object Ann {
       .toDF("rep", "raw")
       .filter(col("raw") >= threshold)
       .select(col("rep"), round(col("raw"), 6).as("cos"))
-    Dedup.expandPairs(repPairs, members, withinCos)
+    Dedup.expandPairs(repPairs, members)(_.join(withinCos, "rep"))
   }
 
   // ---- IVF (inverted-file) variant ----------------------------------------

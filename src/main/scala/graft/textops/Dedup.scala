@@ -251,23 +251,22 @@ object Dedup {
     cappedBandPairs(minhashBands(docs, keys), HotBandCap, hotStar)
 
   /** Expand representative-level pairs `(a, b, payload...)` to member-level
-    * pairs, plus the within-group pairs of every multi-member group with a
-    * constant payload computed once per group. Payload columns are everything
-    * except a/b. */
-  private[graft] def expandPairs(repPairs: DataFrame, members: DataFrame,
-                                 withinPayload: DataFrame): DataFrame = {
+    * pairs, plus the within-group pairs of every multi-member group: `within`
+    * adds the payload columns to those `(a, b, rep)` rows (a join with a
+    * per-group table, or a constant). Payload columns are everything except
+    * a/b. */
+  private[graft] def expandPairs(repPairs: DataFrame, members: DataFrame)
+                                (within: DataFrame => DataFrame): DataFrame = {
     val payloadCols = repPairs.columns.filter(c => c != "a" && c != "b").toSeq
     val ma = members.select(col("rep").as("a"), col("doc_id").as("da"))
     val mb = members.select(col("rep").as("b"), col("doc_id").as("db"))
     val cross = repPairs.join(ma, "a").join(mb, "b")
       .select(least(col("da"), col("db")).as("a") +:
         greatest(col("da"), col("db")).as("b") +: payloadCols.map(col): _*)
-    val within = members.as("x").join(members.as("y"),
+    val groupPairs = members.as("x").join(members.as("y"),
         col("x.rep") === col("y.rep") && col("x.doc_id") < col("y.doc_id"))
       .select(col("x.doc_id").as("a"), col("y.doc_id").as("b"), col("x.rep").as("rep"))
-      .join(withinPayload, "rep")
-      .select(col("a") +: col("b") +: payloadCols.map(col): _*)
-    cross.unionByName(within)
+    cross.unionByName(within(groupPairs).select(col("a") +: col("b") +: payloadCols.map(col): _*))
   }
 
   /** MinHash+LSH near-duplicate pairs with exact-Jaccard verification.
@@ -342,7 +341,7 @@ object Dedup {
     val repPairs = verifyJaccard(reps, bandCandidates(reps, keys), thrNum, thrDen)
     val withinCard = multiGroupCard(reps, members)(t => TextHash.wordShingleArr(t).length.toLong)
       .select(col("rep"), col("card").as("inter"), col("card").as("un"))
-    expandPairs(repPairs, members, withinCard)
+    expandPairs(repPairs, members)(_.join(withinCard, "rep"))
   }
 
   /** Shingle cardinality per representative of multi-member groups only
@@ -422,19 +421,17 @@ object Dedup {
     * Shape: collapse identical fingerprints to one representative
     * ([[hashGroups]]) -> keys -> capped self-join ([[hammingCandidates]]) ->
     * exact hamming verify -> member expansion ([[expandPairs]]; within-group
-    * pairs have hamming 0). Identical fingerprints are what a perceptual hash
-    * produces in bulk (the 10,000 sf0.1 images have 1,877 distinct aHash
-    * values): collapsed, a group costs one row per key, not a quadratic
-    * share of its buckets. */
+    * pairs have hamming 0, a constant, so no per-group table). Identical
+    * fingerprints are what a perceptual hash produces in bulk (the 10,000
+    * sf0.1 images have 1,877 distinct aHash values): collapsed, a group
+    * costs one row per key, not a quadratic share of its buckets. */
   private[graft] def hammingPairs(hashed: DataFrame, maxHamming: Int): DataFrame = {
     val (reps, members) = hashGroups(hashed)
     val repPairs = hammingCandidates(reps, maxHamming)
       .select(col("a"), col("b"),
         bit_count(col("h_a").bitwiseXOR(col("h_b"))).cast("long").as("hamming"))
       .filter(col("hamming") <= maxHamming)
-    val withinZero = members.groupBy("rep").agg(count(lit(1)).as("n")).filter(col("n") > 1)
-      .select(col("rep"), lit(0L).as("hamming"))
-    expandPairs(repPairs, members, withinZero)
+    expandPairs(repPairs, members)(_.withColumn("hamming", lit(0L)))
   }
 
   /** (doc_id, h) 64-bit SimHash of every document's text, map-side. */
@@ -554,73 +551,32 @@ object Dedup {
     * Sees ONLY the edge set — a corpus-wide label table is structurally
     * impossible here, which is the scale property [[neardupClusters]] needs
     * (per-round shuffles proportional to edge nodes; PlanSpec pins it with a
-    * listener). Returns the (cached) labels over edge-incident nodes on
-    * convergence within `maxRounds`, or None (caller falls back to
-    * large-star/small-star).
+    * listener). Returns the labels over edge-incident nodes on convergence
+    * within `maxRounds`, or None (caller falls back to large-star/small-star).
     *
-    * Side effect: sets `spark.sql.adaptive.enabled` to false on the shared
-    * session of `edges` while the round loop runs, then restores it. */
+    * Rounds run through the [[graft.Fixpoint]] loop, witness every
+    * `min(3, maxRounds)` rounds: labels only ever decrease, so the round
+    * output carries the previous label as `prev`, and min-propagation at its
+    * fixed point is the identity. Checkpointed rounds keep the candidate
+    * pipeline upstream of `edges` from re-executing every round. */
   private[graft] def minLabelPropagation(edges: DataFrame, maxRounds: Int): Option[DataFrame] = {
-    // Round state is localCheckpoint'ed, NOT cache()+unpersist()'ed: the r5
-    // form unpersisted round k-1 right after materializing round k, which
-    // makes the CacheManager re-register round k's entry with the uncached
-    // subtree INLINED (the HostRank 2-GB-plan-string trap) — measured here as
-    // the ENTIRE candidate pipeline (window + signatures + band join +
-    // verify, ~20 s executor CPU at sf0.1) re-executing EVERY round. The
-    // checkpointed round output instead pins each round's plan at
-    // edges(cached) join LogicalRDD — constant depth, upstream runs once.
-    //
-    // Convergence witness: labels only ever DECREASE under min-propagation,
-    // so carrying the previous label as a column makes max(prev - cluster_id)
-    // a zero-iff-converged witness computed by the SAME action that
-    // materializes the round (lazy checkpoint) — one job per round instead of
-    // a separate old-vs-new comparison. Null-safe: an empty edge set yields
-    // an empty label table whose max() is null -> converged immediately.
-    // Blocked witness (r6, the rankConverged move): min-propagation at its
-    // fixed point is the identity, so the zero-iff-converged delta only needs
-    // checking at block boundaries — 1 job per `witnessEvery` rounds instead
-    // of 1 per round, bit-identical labels. Lazy per-round checkpoints keep
-    // plan depth constant; the block witness materializes the short RDD chain.
-    // The maxRounds cap is exact: the last block is cut short.
-    val witnessEvery = math.min(3, maxRounds)
-    // AQE off while round plans compile (restored in finally; lazy
-    // checkpoints execute the static plans): post-rep-collapse label tables
-    // are edge-node-grain rows under uniform 64-bit keys — no skew for AQE
-    // to fix, and every per-round exchange otherwise becomes its own
-    // query-stage job (the rankConverged rationale).
-    val spark = edges.sparkSession
-    val aqeKey = "spark.sql.adaptive.enabled"
-    val prevAqe = spark.conf.get(aqeKey, "true")
-    var labels = edges.select(col("src").as("doc_id")).distinct()
+    val init = edges.select(col("src").as("doc_id")).distinct()
       .withColumn("cluster_id", col("doc_id")).localCheckpoint(false)
-    var converged = false
-    var i = 0
-    spark.conf.set(aqeKey, "false")
-    try {
-    while (!converged && i < maxRounds) {
-      val neighborMin = edges
-        .join(labels.select(col("doc_id").as("dst"), col("cluster_id").as("nbr")), "dst")
-        .groupBy(col("src").as("doc_id"))
-        .agg(min("nbr").as("nmin"))
-      // every edge-incident node has >= 1 neighbor, so neighborMin covers the
-      // whole label table and the left join is effectively inner (coalesce
-      // kept as belt-and-braces)
-      val next = labels
-        .join(neighborMin, Seq("doc_id"), "left")
-        .select(col("doc_id"), col("cluster_id").as("prev"),
-          least(col("cluster_id"), coalesce(col("nmin"), col("cluster_id"))).as("cluster_id"))
-        .localCheckpoint(false)
-      i += 1
-      if (i % witnessEvery == 0 || i >= maxRounds) {
-        val delta = Option(next.agg(max(col("prev") - col("cluster_id"))).head().get(0))
-          .map(_.asInstanceOf[Long]).getOrElse(0L)
-        converged = delta == 0L
+    val (labels, converged) =
+      graft.Fixpoint.iterate(init, "cluster_id", every = math.min(3, maxRounds), maxRounds) { labels =>
+        val neighborMin = edges
+          .join(labels.select(col("doc_id").as("dst"), col("cluster_id").as("nbr")), "dst")
+          .groupBy(col("src").as("doc_id"))
+          .agg(min("nbr").as("nmin"))
+        // every edge-incident node has >= 1 neighbor, so neighborMin covers the
+        // whole label table and the left join is effectively inner (coalesce
+        // kept as belt-and-braces)
+        labels
+          .join(neighborMin, Seq("doc_id"), "left")
+          .select(col("doc_id"), col("cluster_id").as("prev"),
+            least(col("cluster_id"), coalesce(col("nmin"), col("cluster_id"))).as("cluster_id"))
       }
-      labels = next.select(col("doc_id"), col("cluster_id"))
-    }
-    } finally spark.conf.set(aqeKey, prevAqe)
-    if (converged) Some(labels)
-    else None
+    if (converged) Some(labels) else None
   }
 
   /** Connected components by the alternating large-star/small-star algorithm
@@ -755,7 +711,7 @@ object Dedup {
       .filter(col("inter") * thrDen >= col("un") * thrNum)
     val withinCard = multiGroupCard(reps, members)(t => TextHash.charShingleArr(t, n).length.toLong)
       .select(col("rep"), col("card").as("inter"), col("card").as("un"))
-    expandPairs(repPairs, members, withinCard)
+    expandPairs(repPairs, members)(_.join(withinCard, "rep"))
   }
 
   /** Per-document n-gram NOVELTY against the whole corpus in doc_id order —

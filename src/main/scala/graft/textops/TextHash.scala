@@ -23,7 +23,10 @@ object TextHash {
     h
   }
 
-  /** splitmix64 — used to derive per-permutation constants from a fixed seed. */
+  /** splitmix64 finalizer — per-permutation constants from a fixed seed, and
+    * the value hash of the HLL/KMV/CMS sketches. Java Long overflow IS
+    * mod-2^64, so this matches the oracles' HUGEINT formulation (32-bit-split
+    * multiplication) exactly. */
   def splitmix64(x0: Long): Long = {
     var x = x0 + 0x9e3779b97f4a7c15L
     x = (x ^ (x >>> 30)) * 0xbf58476d1ce4e5b9L

@@ -75,8 +75,8 @@ object Hits {
           coalesce(expr(s"(raw * ${scale}L) div mx"), lit(0L)).as(outCol))
     }
 
-    // NOTE (r6): AQE stays ON here, unlike rankConverged/minLabelPropagation
-    // — HITS interleaves node-grain joins with 1-row max-norm broadcasts per
+    // NOTE (r6): AQE stays ON here, unlike the graft.Fixpoint loops — HITS
+    // interleaves node-grain joins with 1-row max-norm broadcasts per
     // half-round, and AQE's runtime SMJ->broadcast conversions on those
     // joins outweigh the query-stage scheduling it adds (A/B-measured:
     // static plans were ~1.3 s SLOWER warm at sf0.1).

@@ -1,6 +1,6 @@
 package graft.webtext
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
 /** Host-rank: damped PageRank over the (src_host, dst_host, weight) link
@@ -64,7 +64,35 @@ object HostRank {
     * units. See the object scaladoc for the exact integer arithmetic.
     */
   def rank(edges: DataFrame, iters: Int = 3, dampBp: Long = 8500L,
-           scale: Long = 1000000L): DataFrame = {
+           scale: Long = 1000000L): DataFrame =
+    fixedRounds(edges, iters, dampBp, scale) { nodes =>
+      val n = nodes.count()
+      require(n > 0, "hostRank needs a non-empty edge set")
+      (lit(scale / n), lit(((10000L - dampBp) * scale / 10000L) / n))
+    }
+
+  /** Personalized PageRank (random walk with restart to a single seed) —
+    * the related-host discovery primitive: where [[rank]] spreads teleport
+    * mass uniformly (global importance), PPR restarts every walk at `seed`,
+    * so rank mass measures PROXIMITY to the seed through the link structure
+    * (Jeh–Widom 2003; "more like this host"). Same exact integer-fixed-point
+    * update, same edge-grain shuffles; the only changes are r0 (all `scale`
+    * at the seed) and the teleport term (paid only at the seed). Hosts the
+    * seed cannot reach stay exactly 0 — the oracle-checked witness that
+    * mass flows only through real paths. */
+  def pprRank(edges: DataFrame, seed: String, iters: Int = 3,
+              dampBp: Long = 8500L, scale: Long = 1000000L): DataFrame =
+    fixedRounds(edges, iters, dampBp, scale) { _ =>
+      val atSeed = col("host") === seed
+      (when(atSeed, scale).otherwise(0L),
+        when(atSeed, (10000L - dampBp) * scale / 10000L).otherwise(0L))
+    }
+
+  /** The fixed-round loop of [[rank]] and [[pprRank]]: `start(nodes)` gives
+    * the round-0 rank and the per-host teleport term, as columns over
+    * `host`. */
+  private def fixedRounds(edges: DataFrame, iters: Int, dampBp: Long, scale: Long)
+                         (start: DataFrame => (Column, Column)): DataFrame = {
     require(iters >= 1 && dampBp >= 0 && dampBp <= 10000 && scale > 0)
     // NOTE (r6): deliberately NOT head-checkpointed — nodes/edgesN cache
     // entries are keyed on the stable parquet-rooted plan, so repeat
@@ -75,13 +103,11 @@ object HostRank {
     val nodes = edges.select(col("src").as("host"))
       .unionByName(edges.select(col("dst").as("host")))
       .distinct().cache()
-    val n = nodes.count()
-    require(n > 0, "hostRank needs a non-empty edge set")
+    val (rank0, teleport) = start(nodes)
     // Loop-invariant denominator fused onto the edge table once.
     val outW = edges.groupBy("src").agg(sum("weight").as("outw"))
     val edgesN = edges.join(outW, "src").cache()
-    val teleport = ((10000L - dampBp) * scale / 10000L) / n
-    var ranks = nodes.withColumn("rank", lit(scale / n))
+    var ranks = nodes.withColumn("rank", rank0)
     for (r <- 1 to iters) {
       val contrib = edgesN
         .join(ranks.withColumnRenamed("host", "src"), "src")
@@ -89,8 +115,7 @@ object HostRank {
           expr(s"(rank * weight * ${dampBp}L) div (outw * 10000L)").as("c"))
         .groupBy("host").agg(sum("c").as("in_rank"))
       ranks = nodes.join(contrib, Seq("host"), "left")
-        .select(col("host"),
-          (lit(teleport) + coalesce(col("in_rank"), lit(0L))).as("rank"))
+        .select(col("host"), (teleport + coalesce(col("in_rank"), lit(0L))).as("rank"))
       // Lineage truncation (the Redirects pattern, VERDICT r4 item 6): a lazy
       // localCheckpoint every 3 rounds replaces the nested subtree with a
       // LogicalRDD at PLAN time (computation stays deferred), so a 20-30
@@ -105,69 +130,25 @@ object HostRank {
     ranks
   }
 
-  /** Personalized PageRank (random walk with restart to a single seed) —
-    * the related-host discovery primitive: where [[rank]] spreads teleport
-    * mass uniformly (global importance), PPR restarts every walk at `seed`,
-    * so rank mass measures PROXIMITY to the seed through the link structure
-    * (Jeh–Widom 2003; "more like this host"). Same exact integer-fixed-point
-    * update, same edge-grain shuffles; the only changes are r0 (all `scale`
-    * at the seed) and the teleport term (paid only at the seed). Hosts the
-    * seed cannot reach stay exactly 0 — the oracle-checked witness that
-    * mass flows only through real paths. */
-  def pprRank(edges: DataFrame, seed: String, iters: Int = 3,
-              dampBp: Long = 8500L, scale: Long = 1000000L): DataFrame = {
-    require(iters >= 1 && dampBp >= 0 && dampBp <= 10000 && scale > 0)
-    val nodes = edges.select(col("src").as("host"))
-      .unionByName(edges.select(col("dst").as("host")))
-      .distinct().cache()
-    val outW = edges.groupBy("src").agg(sum("weight").as("outw"))
-    val edgesN = edges.join(outW, "src").cache()
-    val teleport = (10000L - dampBp) * scale / 10000L
-    var ranks = nodes.withColumn("rank",
-      when(col("host") === seed, scale).otherwise(0L))
-    for (r <- 1 to iters) {
-      val contrib = edgesN
-        .join(ranks.withColumnRenamed("host", "src"), "src")
-        .select(col("dst").as("host"),
-          expr(s"(rank * weight * ${dampBp}L) div (outw * 10000L)").as("c"))
-        .groupBy("host").agg(sum("c").as("in_rank"))
-      ranks = nodes.join(contrib, Seq("host"), "left")
-        .select(col("host"),
-          (when(col("host") === seed, teleport).otherwise(0L) +
-            coalesce(col("in_rank"), lit(0L))).as("rank"))
-      if (r % 3 == 0 && r < iters) ranks = ranks.localCheckpoint(false)
-    }
-    ranks
-  }
-
   /** Convergence-stopped PageRank (VERDICT r4 stretch 7): iterate [[rank]]'s
     * exact integer update until the rank vector reaches its trunc-division
-    * FIXED POINT — witnessed by a host-grain join of consecutive rounds with
-    * max|delta| == 0 (the cheap-aggregate-witness move from
-    * minLabelPropagation; rank tables are host-grain, so the witness costs
-    * one small join + a 1-row agg per round). Capped at `maxIters`; the
-    * synthetic host graph reaches its fixed point in 28-29 rounds at every
-    * test sf (measured via the Python recompute in the oracle protocol).
+    * FIXED POINT, through the [[graft.Fixpoint]] loop (witness every 5
+    * rounds). Capped at `maxIters`; the synthetic host graph reaches its
+    * fixed point in 28-29 rounds at every test sf (measured via the Python
+    * recompute in the oracle protocol).
     *
     * Oracle strategy: an exact fixed point is invariant under further
     * iteration, so the SQL oracle unrolls a FIXED M >= K rounds and matches
     * at any scale factor whose fixed point arrives within M — no sf-pinned
     * constants (the bpe_train caveat does not apply here).
     *
-    * Each round is ONE job (r6, VERDICT r5 item 3): the round output carries
-    * its input rank as `prev`, a lazy localCheckpoint truncates lineage, and
-    * the max|rank - prev| convergence witness is the aggregate action that
-    * materializes the round — no separate checkpoint job and no witness
-    * join. See the in-loop comment for why cache+unpersist is a trap here;
-    * loop-invariant caches are released before returning.
-    *
-    * Side effect: sets `spark.sql.adaptive.enabled` to false on the shared
-    * session of `edges` while the round loop runs, then restores it.
-    */
+    * Each round's output carries its input rank as `prev` — the rank table
+    * it joins for contributions is the one the witness compares against —
+    * so the witness needs no join. Loop-invariant caches are released
+    * before returning. */
   def rankConverged(edges: DataFrame, maxIters: Int = 50, dampBp: Long = 8500L,
                     scale: Long = 1000000L): DataFrame = {
     require(maxIters >= 1 && dampBp >= 0 && dampBp <= 10000 && scale > 0)
-    val spark = edges.sparkSession
     // r6: materialize the AGGREGATED (src, dst, weight) edge table once —
     // nodes, outW and edgesN previously each re-derived it from the input
     // plan, so the corpus-grain hostEdges pipeline ran twice (nodes.count +
@@ -182,17 +163,8 @@ object HostRank {
     val outW = e0.groupBy("src").agg(sum("weight").as("outw"))
     val edgesN = e0.join(outW, "src").cache()
     val teleport = ((10000L - dampBp) * scale / 10000L) / n
-    // One job per round, not checkpoint + witness-join (VERDICT r5 item 3):
-    // the round carries the INPUT rank along as `prev` — the rank table it
-    // joins for contributions is the same table the old delta join re-read —
-    // so the convergence witness max|rank - prev| is an aggregate over the
-    // round's own output. A LAZY localCheckpoint makes that aggregate the
-    // materializing action: each round is exactly one job over
-    // (edgesN(cached) ⋈ LogicalRDD), constant plan depth. The r4 warning
-    // still holds: cache+unpersist here compounds uncached subtrees into the
-    // CacheManager's re-registered entries (2 GB plan strings); checkpoint
-    // blocks are host-grain and GC-collectable once the loop drops them.
-    def step(r: DataFrame): DataFrame = {
+    val init = nodes.withColumn("rank", lit(scale / n)).localCheckpoint(true)
+    val (ranks, _) = graft.Fixpoint.iterate(init, "rank", every = 5, maxIters) { r =>
       val contrib = edgesN
         .join(r.select(col("host").as("src"), col("rank").as("prev")), "src")
         .select(col("dst").as("host"),
@@ -203,42 +175,6 @@ object HostRank {
         .select(col("host"), col("prev"),
           (lit(teleport) + coalesce(col("in_rank"), lit(0L))).as("rank"))
     }
-    // Blocked convergence witness (r6): the fixed point is invariant under
-    // further iteration (WebTextSpec pins it), so rounds PAST convergence are
-    // the identity and checking the max|rank - prev| witness only every
-    // `witnessEvery` rounds produces the bit-identical rank vector while
-    // paying 1 job per BLOCK instead of 1 job per round — the per-round jobs
-    // are tiny host-grain joins whose cost is pure fixed scheduling overhead
-    // (measured 29 jobs x ~0.3 s at local[32]). Lazy localCheckpoint per
-    // round keeps plan depth constant; the block's witness agg materializes
-    // the <= witnessEvery-round RDD chain in one job. The maxIters cap is
-    // preserved exactly: the final block is cut short so an unconverged run
-    // still executes precisely maxIters rounds.
-    val witnessEvery = 5
-    var ranks = nodes.withColumn("rank", lit(scale / n)).localCheckpoint(true)
-    var converged = false
-    var i = 0
-    // AQE is disabled for the loop body only (restored in finally): with AQE
-    // on, every per-round exchange becomes its own query-stage job — measured
-    // ~10 scheduler-bound jobs PER ROUND (~300 per converged run) of
-    // host-grain work that AQE coalescing/skew handling cannot improve (rank
-    // tables are uniformly hashed host-grain rows). Static planning runs each
-    // witness block as ONE multi-stage job. Results are plan-identical
-    // arithmetic; the corpus-grain scan above already ran under AQE.
-    val aqeKey = "spark.sql.adaptive.enabled"
-    val prevAqe = spark.conf.get(aqeKey, "true")
-    spark.conf.set(aqeKey, "false")
-    try {
-      while (!converged && i < maxIters) {
-        val next = step(ranks).localCheckpoint(false)
-        i += 1
-        if (i % witnessEvery == 0 || i >= maxIters) {
-          val delta = next.agg(max(abs(col("rank") - col("prev"))).as("d")).head().getLong(0)
-          converged = delta == 0L
-        }
-        ranks = next.select(col("host"), col("rank"))
-      }
-    } finally spark.conf.set(aqeKey, prevAqe)
     nodes.unpersist()
     edgesN.unpersist()
     ranks

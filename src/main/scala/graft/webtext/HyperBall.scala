@@ -51,7 +51,7 @@ object HyperBall {
       .distinct().localCheckpoint(true)
 
     var s = hosts.as[String].map { h =>
-      val hv = HllSketchAgg.splitmix64(TextHash.fnv64(h))
+      val hv = TextHash.splitmix64(TextHash.fnv64(h))
       val rest = hv & ((1L << 58) - 1)
       val rho =
         if (rest == 0L) 59L

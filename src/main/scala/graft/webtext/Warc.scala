@@ -106,9 +106,17 @@ object Warc {
     -1
   }
 
-  /** Walk one segment blob; emits parsed records until damage stops it. */
-  def parseSegment(segmentId: Long, blob: Array[Byte]): Vector[WarcRecord] = {
-    val out = Vector.newBuilder[WarcRecord]
+  /** One well-formed record found by [[walk]]: it starts at byte `start`,
+    * its payload is `clen` bytes from `payloadStart`, and it ends (separator
+    * included) at `end`. */
+  private final case class Frame(start: Int, payloadStart: Int, end: Int,
+                                 url: String, date: String, clen: Long)
+
+  /** The one record walker: frames of `blob` in order, until damage stops it
+    * (bad magic, no header end, a missing header, a length past the blob or
+    * a missing CRLF CRLF separator drops that record and everything after). */
+  private def walk(blob: Array[Byte]): Vector[Frame] = {
+    val out = Vector.newBuilder[Frame]
     var i = 0
     var ok = true
     while (ok && i < blob.length) {
@@ -137,11 +145,10 @@ object Warc {
           if (url == null || date == null || clen < 0 ||
               payloadStart + clen + 4 > blob.length) ok = false // truncated/corrupt: drop + stop
           else {
-            val payload = java.util.Arrays.copyOfRange(blob, payloadStart, payloadStart + clen.toInt)
             val sep = payloadStart + clen.toInt
             if (blob(sep) == '\r' && blob(sep + 1) == '\n' &&
                 blob(sep + 2) == '\r' && blob(sep + 3) == '\n') {
-              out += WarcRecord(segmentId, url, date, clen, payload)
+              out += Frame(i, payloadStart, sep + 4, url, date, clen)
               i = sep + 4
             } else ok = false
           }
@@ -150,6 +157,11 @@ object Warc {
     }
     out.result()
   }
+
+  /** Walk one segment blob; emits parsed records until damage stops it. */
+  def parseSegment(segmentId: Long, blob: Array[Byte]): Vector[WarcRecord] =
+    walk(blob).map(f => WarcRecord(segmentId, f.url, f.date, f.clen,
+      java.util.Arrays.copyOfRange(blob, f.payloadStart, f.payloadStart + f.clen.toInt)))
 
   /** (segment_id, warc) -> exploded records. Map-side; no shuffle. */
   def parse(segments: DataFrame): Dataset[WarcRecord] = {
@@ -223,53 +235,12 @@ object Warc {
     * artifact: each record's BYTE ADDRESS (offset + total record length)
     * inside its segment, so a fetcher can range-read one record without
     * scanning the blob. Same walk as [[parseSegment]] (same damage-stops
-    * semantics), tracking the cursor instead of copying payloads — indexing
-    * never materializes the page bytes. */
-  def indexSegment(segmentId: Long, blob: Array[Byte]): Vector[CdxRow] = {
-    val out = Vector.newBuilder[CdxRow]
-    var i = 0
-    var ord = 0L
-    var ok = true
-    while (ok && i < blob.length) {
-      if (!startsWith(blob, i, Magic)) ok = false
-      else {
-        val he = headerEnd(blob, i + Magic.length)
-        if (he < 0) ok = false
-        else {
-          var url: String = null; var date: String = null; var clen = -1L
-          new String(blob, i + Magic.length, he - i - Magic.length, UTF_8)
-            .split("\r\n", -1).foreach { line =>
-              val c = line.indexOf(':')
-              if (c > 0) {
-                val k = line.substring(0, c).trim.toLowerCase
-                val v = line.substring(c + 1).trim
-                k match {
-                  case "warc-target-uri" => url = v
-                  case "warc-date"       => date = v
-                  case "content-length" =>
-                    clen = try v.toLong catch { case _: NumberFormatException => -1L }
-                  case _ => ()
-                }
-              }
-            }
-          val payloadStart = he + 4
-          if (url == null || date == null || clen < 0 ||
-              payloadStart + clen + 4 > blob.length) ok = false
-          else {
-            val sep = payloadStart + clen.toInt
-            if (blob(sep) == '\r' && blob(sep + 1) == '\n' &&
-                blob(sep + 2) == '\r' && blob(sep + 3) == '\n') {
-              val end = sep + 4
-              out += CdxRow(url, segmentId, ord, i.toLong, (end - i).toLong, clen, date)
-              ord += 1
-              i = end
-            } else ok = false
-          }
-        }
-      }
+    * semantics), reading only the frame bounds — indexing never
+    * materializes the page bytes. */
+  def indexSegment(segmentId: Long, blob: Array[Byte]): Vector[CdxRow] =
+    walk(blob).zipWithIndex.map { case (f, ord) =>
+      CdxRow(f.url, segmentId, ord.toLong, f.start.toLong, (f.end - f.start).toLong, f.clen, f.date)
     }
-    out.result()
-  }
 
   /** (segment_id, warc) -> CDX rows. Map-side; no shuffle — the index job is
     * one linear pass per segment at ingestion parallelism, and the output is

@@ -7,7 +7,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * urls and a resumed run processes only the anti-join remainder, making
   * re-runs idempotent.
   *
-  * Two backends behind one trait, selected by configuration:
+  * Two backends behind one trait; the caller picks one:
   *  - [[ManifestCommitLog]]: an append-only parquet manifest directory — the
   *    sandbox stand-in (each commit adds a manifest file; Iceberg-style
   *    snapshot metadata reduced to files).
@@ -52,14 +52,6 @@ final case class TableCommitLog(table: String) extends CommitLog {
 }
 
 object Checkpoint {
-
-  /** Config-driven backend: `graft.checkpoint.table` (catalog/Iceberg) wins
-    * over `graft.checkpoint.dir` (parquet manifest). */
-  def fromConf(spark: SparkSession): CommitLog = {
-    val table = spark.conf.get("graft.checkpoint.table", "")
-    if (table.nonEmpty) TableCommitLog(table)
-    else ManifestCommitLog(spark.conf.get("graft.checkpoint.dir"))
-  }
 
   /** Rows of `input` not yet committed. Left-anti join on url — at scale this
     * shuffles only on the (compact) url key, and AQE turns it into a broadcast

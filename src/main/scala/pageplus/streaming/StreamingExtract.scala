@@ -53,11 +53,7 @@ object StreamingExtract {
   private def drainToTable(df: DataFrame, namePrefix: String, outputMode: String,
                            noDataBatch: Boolean = true): DataFrame = {
     val name = s"${namePrefix}_${counter.incrementAndGet()}"
-    val spark = df.sparkSession
-    val key = "spark.sql.streaming.noDataMicroBatches.enabled"
-    val prev = spark.conf.get(key, "true")
-    if (!noDataBatch) spark.conf.set(key, "false")
-    try {
+    def drain(): Unit = {
       val q = df.writeStream
         .format("memory")
         .queryName(name)
@@ -66,7 +62,10 @@ object StreamingExtract {
         .start()
       try q.processAllAvailable()
       finally q.stop()
-    } finally if (!noDataBatch) spark.conf.set(key, prev)
+    }
+    if (noDataBatch) drain()
+    else graft.SessionConf.scoped(df.sparkSession,
+      "spark.sql.streaming.noDataMicroBatches.enabled", "false")(drain())
     df.sparkSession.table(name)
   }
 

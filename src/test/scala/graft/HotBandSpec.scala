@@ -50,22 +50,6 @@ class HotBandSpec extends AnyFunSuite {
       s"expected a family-sized bucket, got ${stats.map(_.getLong(1)).mkString(",")}")
   }
 
-  /** Shuffle records written while `body` runs. */
-  private def shuffleRecords(body: => Unit): Long = {
-    val bus = org.apache.spark.GraftListenerBus
-    val records = new java.util.concurrent.atomic.AtomicLong(0)
-    val listener = new org.apache.spark.scheduler.SparkListener {
-      override def onTaskEnd(t: org.apache.spark.scheduler.SparkListenerTaskEnd): Unit = {
-        val m = t.taskMetrics
-        if (m != null) records.addAndGet(m.shuffleWriteMetrics.recordsWritten)
-      }
-    }
-    bus.drain(spark.sparkContext) // earlier jobs' events must not reach it
-    spark.sparkContext.addSparkListener(listener)
-    try { body; bus.drain(spark.sparkContext); records.get() }
-    finally spark.sparkContext.removeSparkListener(listener)
-  }
-
   test("star mode (neardupClusters path): linear candidate emission, one family component") {
     var nStar = 0L
     val records = shuffleRecords { nStar = textops.Dedup.bandCandidates(family, hotStar = true).count() }

@@ -182,27 +182,10 @@ class PlanSpec extends AnyFunSuite {
       s"raw text must not be a shuffle key:\n$plan")
     // listener-measured shuffle: the grouping moves each row exactly once
     // (records == corpus rows), with the text as payload, not key
-    val records = new java.util.concurrent.atomic.AtomicLong(0)
-    val listener = new org.apache.spark.scheduler.SparkListener {
-      override def onTaskEnd(t: org.apache.spark.scheduler.SparkListenerTaskEnd): Unit = {
-        val m = t.taskMetrics
-        if (m != null) records.addAndGet(m.shuffleWriteMetrics.recordsWritten)
-      }
-    }
-    spark.sparkContext.addSparkListener(listener)
-    try {
-      val n = docs.count()
-      records.set(0)
-      // collect, not count: count() prunes the window + exchange entirely
-      assert(members.collect().length == n)
-      // listener events are async: poll until the counter stabilizes
-      var last = -1L
-      var spins = 0
-      while (records.get() != last && spins < 50) {
-        last = records.get(); Thread.sleep(100); spins += 1
-      }
-      assert(records.get() == n, s"expected one shuffle record per doc, got ${records.get()} for $n docs")
-    } finally spark.sparkContext.removeSparkListener(listener)
+    val n = docs.count()
+    // collect, not count: count() prunes the window + exchange entirely
+    val records = shuffleRecords { assert(members.collect().length == n) }
+    assert(records == n, s"expected one shuffle record per doc, got $records for $n docs")
   }
 
   test("CC min-label propagation shuffles edge-node-sized rows, never corpus-sized (VERDICT r3 item 3)") {
@@ -219,36 +202,24 @@ class PlanSpec extends AnyFunSuite {
     }
     val edges = (base ++ base.map(_.swap)).toDF("src", "dst").cache()
     val edgeRows = edges.count() // materialize before measuring
-    val records = new java.util.concurrent.atomic.AtomicLong(0)
-    val listener = new org.apache.spark.scheduler.SparkListener {
-      override def onTaskEnd(t: org.apache.spark.scheduler.SparkListenerTaskEnd): Unit = {
-        val m = t.taskMetrics
-        if (m != null) records.addAndGet(m.shuffleWriteMetrics.recordsWritten)
-      }
-    }
-    spark.sparkContext.addSparkListener(listener)
-    try {
-      records.set(0)
-      val got = graft.textops.Dedup.minLabelPropagation(edges, maxRounds = 6)
+    var got: Option[org.apache.spark.sql.DataFrame] = None
+    var labels = Map.empty[Long, Long]
+    val records = shuffleRecords {
+      got = graft.textops.Dedup.minLabelPropagation(edges, maxRounds = 6)
       assert(got.isDefined, "chain-of-3 graphs must converge in <= 3 rounds")
-      val labels = got.get.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-      assert(labels.size == 60)
-      for (c <- 0 until 20; k <- 0 until 3)
-        assert(labels(c * 3 + 1L + k) == c * 3 + 1L, s"chain $c mislabeled")
-      var last = -1L
-      var spins = 0
-      while (records.get() != last && spins < 50) {
-        last = records.get(); Thread.sleep(100); spins += 1
-      }
-      // generous linear budget: ~4 shuffled frames per round (edges side,
-      // labels side, agg partials, label update) x <= 4 rounds + the initial
-      // node distinct. A corpus-wide loop at even 10^4 docs would blow this
-      // by two orders of magnitude.
-      val budget = 20L * (edgeRows + 60)
-      assert(records.get() <= budget,
-        s"propagation shuffled ${records.get()} records for $edgeRows edge rows (budget $budget)")
-      got.get.unpersist()
-    } finally spark.sparkContext.removeSparkListener(listener)
+      labels = got.get.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+    }
+    assert(labels.size == 60)
+    for (c <- 0 until 20; k <- 0 until 3)
+      assert(labels(c * 3 + 1L + k) == c * 3 + 1L, s"chain $c mislabeled")
+    // generous linear budget: ~4 shuffled frames per round (edges side,
+    // labels side, agg partials, label update) x <= 4 rounds + the initial
+    // node distinct. A corpus-wide loop at even 10^4 docs would blow this
+    // by two orders of magnitude.
+    val budget = 20L * (edgeRows + 60)
+    assert(records <= budget,
+      s"propagation shuffled $records records for $edgeRows edge rows (budget $budget)")
+    got.get.unpersist()
   }
 
   test("url_normalize Expression equals the UDF pipeline and stays in WholeStageCodegen") {

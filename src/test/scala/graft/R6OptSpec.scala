@@ -44,23 +44,12 @@ class R6OptSpec extends AnyFunSuite {
     // compilation must keep it an order of magnitude lower. The sf0.001
     // graph converges in <= 29 rounds like every test SF.
     val docs = spark.read.parquet(s"$sf/documents.parquet")
-    val jobs = new java.util.concurrent.atomic.AtomicLong(0)
-    val listener = new org.apache.spark.scheduler.SparkListener {
-      override def onJobStart(js: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
-        jobs.incrementAndGet()
-    }
-    spark.sparkContext.addSparkListener(listener)
-    try {
-      jobs.set(0)
+    val jobs = jobCount {
       val got = graft.webtext.HostRank.rankConverged(graft.webtext.HostRank.hostEdges(docs))
-      val n = got.count()
-      assert(n == 7)
-      var last = -1L
-      var spins = 0
-      while (jobs.get() != last && spins < 50) { last = jobs.get(); Thread.sleep(100); spins += 1 }
-      assert(jobs.get() <= 120,
-        s"rankConverged spawned ${jobs.get()} jobs — blocked witness / static loop plans regressed")
-    } finally spark.sparkContext.removeSparkListener(listener)
+      assert(got.count() == 7)
+    }
+    assert(jobs <= 120,
+      s"rankConverged spawned $jobs jobs — blocked witness / static loop plans regressed")
     // and AQE must be restored for the session
     assert(spark.conf.get("spark.sql.adaptive.enabled") == "true")
   }

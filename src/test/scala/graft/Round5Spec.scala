@@ -13,7 +13,7 @@ class Round5Spec extends AnyFunSuite {
   // ---- KMV sketch ----
 
   private def bruteKmv(vals: Seq[Long], k: Int): Seq[Long] =
-    vals.distinct.map(HllSketchAgg.splitmix64).distinct
+    vals.distinct.map(graft.textops.TextHash.splitmix64).distinct
       .sortBy(h => h ^ Long.MinValue).take(k)
 
   test("kmv sketch equals brute-force bottom-k and is partition-invariant") {

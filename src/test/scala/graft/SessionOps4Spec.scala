@@ -179,8 +179,8 @@ class SessionOps4Spec extends AnyFunSuite {
   test("hll: splitmix64 matches the reference vectors; sketch equals a driver recompute") {
     import graft.expr.HllSketchAgg
     // reference: splitmix64(0) and splitmix64(1) published test vector values
-    assert(HllSketchAgg.splitmix64(0L) == java.lang.Long.parseUnsignedLong("16294208416658607535"))
-    assert(HllSketchAgg.splitmix64(1L) == java.lang.Long.parseUnsignedLong("10451216379200822465"))
+    assert(graft.textops.TextHash.splitmix64(0L) == java.lang.Long.parseUnsignedLong("16294208416658607535"))
+    assert(graft.textops.TextHash.splitmix64(1L) == java.lang.Long.parseUnsignedLong("10451216379200822465"))
     // sketch over a known value set == independent register recompute
     val vals = (0L until 5000L).map(i => (i % 7, i % 1300))
     val df = vals.toDF("g", "v")
@@ -189,7 +189,7 @@ class SessionOps4Spec extends AnyFunSuite {
     def recompute(vs: Seq[Long]): Long = {
       val regs = new Array[Int](64)
       vs.foreach { v =>
-        val h = HllSketchAgg.splitmix64(v)
+        val h = graft.textops.TextHash.splitmix64(v)
         val idx = (h >>> 58).toInt
         val rest = h & ((1L << 58) - 1)
         val rho = if (rest == 0) 59 else 58 - (64 - java.lang.Long.numberOfLeadingZeros(rest)) + 1

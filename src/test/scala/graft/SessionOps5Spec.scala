@@ -200,7 +200,7 @@ class HyperBallSpec extends AnyFunSuite {
       case (a, b) if a == h => b; case (a, b) if b == h => a }.toSet + h)).toMap
     def name(h: Long) = s"site$h.example.com"
     var state = hosts.map { h =>
-      val hv = HllSketchAgg.splitmix64(TextHash.fnv64(name(h)))
+      val hv = graft.textops.TextHash.splitmix64(TextHash.fnv64(name(h)))
       val rest = hv & ((1L << 58) - 1)
       val rho = if (rest == 0L) 59L
         else 58L - (64 - java.lang.Long.numberOfLeadingZeros(rest)) + 1L

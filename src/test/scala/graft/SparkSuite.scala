@@ -1,5 +1,8 @@
 package graft
 
+import java.util.concurrent.atomic.AtomicLong
+
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkListenerTaskEnd}
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
 import org.apache.spark.sql.types.TimestampNTZType
@@ -26,6 +29,36 @@ object SparkSuite {
   /** A fresh directory under java.io.tmpdir whose tree is deleted when the
     * test JVM exits. */
   def tempDir(prefix: String): String = Scratch.tempDir(prefix)
+
+  /** Shuffle records written while `body` runs. */
+  def shuffleRecords(body: => Unit): Long = tally(body) { n =>
+    new SparkListener {
+      override def onTaskEnd(t: SparkListenerTaskEnd): Unit = {
+        val m = t.taskMetrics
+        if (m != null) n.addAndGet(m.shuffleWriteMetrics.recordsWritten)
+      }
+    }
+  }
+
+  /** Jobs started while `body` runs. */
+  def jobCount(body: => Unit): Long = tally(body) { n =>
+    new SparkListener {
+      override def onJobStart(j: SparkListenerJobStart): Unit = n.incrementAndGet()
+    }
+  }
+
+  /** A counter fed by `listener` over exactly `body`'s events: the listener
+    * bus is drained before the listener is attached (earlier jobs' events
+    * must not reach it) and before the counter is read (late events must). */
+  private def tally(body: => Unit)(listener: AtomicLong => SparkListener): Long = {
+    val n = new AtomicLong(0)
+    val l = listener(n)
+    val sc = spark.sparkContext
+    org.apache.spark.GraftListenerBus.drain(sc)
+    sc.addSparkListener(l)
+    try { body; org.apache.spark.GraftListenerBus.drain(sc); n.get() }
+    finally sc.removeSparkListener(l)
+  }
 }
 
 class ExtractionPipelineSpec extends AnyFunSuite {
@@ -178,32 +211,9 @@ class ScalePlumbingSpec extends AnyFunSuite {
     }
     drive(ManifestCommitLog(tempDir("graft_ckpt_test_")))
     // catalog-table backend: same flow through the session catalog (with an
-    // Iceberg catalog this is the snapshot-append path, config-only switch)
+    // Iceberg catalog this is the snapshot-append path)
     spark.sql("DROP TABLE IF EXISTS graft_ckpt_manifest")
     drive(TableCommitLog("graft_ckpt_manifest"))
-    // config routing picks the table backend when set
-    spark.conf.set("graft.checkpoint.table", "graft_ckpt_manifest")
-    assert(Checkpoint.fromConf(spark) == TableCommitLog("graft_ckpt_manifest"))
-    spark.conf.set("graft.checkpoint.table", "")
-    spark.conf.set("graft.checkpoint.dir", "/tmp/x")
-    assert(Checkpoint.fromConf(spark) == ManifestCommitLog("/tmp/x"))
-  }
-
-  test("catalog seam: same pipeline runs off a catalog table or a parquet path") {
-    import pageplus.spark.{CatalogPages, PagesSource, ParquetPages}
-    val tmp = tempDir("graft_src_pages_")
-    pageplus.data.PagesFromDocuments.clean(spark, sf).toDF().write.mode("overwrite").parquet(tmp)
-    spark.read.parquet(tmp).createOrReplaceTempView("graft_catalog_pages")
-    val viaPath = pageplus.spark.Pipeline.fulltext(ParquetPages(tmp).pages(spark))
-      .collect().map(e => e.url -> e.extracted_text).toMap
-    val viaTable = pageplus.spark.Pipeline.fulltext(CatalogPages("graft_catalog_pages").pages(spark))
-      .collect().map(e => e.url -> e.extracted_text).toMap
-    assert(viaPath == viaTable && viaPath.nonEmpty)
-    spark.conf.set("graft.pages.table", "graft_catalog_pages")
-    assert(PagesSource.fromConf(spark).isInstanceOf[CatalogPages])
-    spark.conf.set("graft.pages.table", "")
-    spark.conf.set("graft.pages.path", tmp)
-    assert(PagesSource.fromConf(spark) == ParquetPages(tmp))
   }
 
   test("skew-aware extraction is byte-equal to the fused path, incl. mega-docs, all flag combos") {
