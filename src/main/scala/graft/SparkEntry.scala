@@ -23,9 +23,17 @@ object SparkEntry {
   }
 
   /** One entry per implemented operator from SURVEY.md §2, each declared once
-    * as a [[graft.queries.Q]] in its family file under `graft/queries`. */
+    * as a [[graft.queries.Q]] in its family file under `graft/queries`. Each
+    * first installs the session's [[graft.plans.GraftExtensions]], so every
+    * query is planned with the same strategies, rule and SQL functions,
+    * whichever queries ran before it. */
   val queries: Map[String, (SparkSession, String) => DataFrame] =
-    graft.queries.Registry.all.map(q => q.name -> q.run).toMap
+    graft.queries.Registry.all.map { q =>
+      q.name -> { (s: SparkSession, dir: String) =>
+        graft.plans.GraftExtensions.install(s)
+        q.run(s, dir)
+      }
+    }.toMap
 
   /** For each key in queries, equivalent ANSI SQL runnable by DuckDB on
     * the same parquet tables. */

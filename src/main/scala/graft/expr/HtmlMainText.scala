@@ -3,7 +3,7 @@ package graft.expr
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.types.{BinaryType, DataType, StringType}
-import org.apache.spark.sql.{Column, SparkSession}
+import org.apache.spark.sql.Column
 import org.apache.spark.unsafe.types.UTF8String
 
 import graft.webtext.MainContent
@@ -45,14 +45,4 @@ object HtmlMainTextExpr {
   def htmlMainText(c: Column): Column =
     org.apache.spark.sql.GraftColumnBridge.column(
       HtmlMainTextExpr(org.apache.spark.sql.GraftColumnBridge.expression(c)))
-
-  /** Register `html_main_text(html)` for SQL access. */
-  def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "html_main_text",
-      {
-        case Seq(h) => HtmlMainTextExpr(h)
-        case _      => throw new IllegalArgumentException("html_main_text(html)")
-      },
-      "built-in")
 }

@@ -3,7 +3,7 @@ package graft.expr
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.types.{DataType, StringType}
-import org.apache.spark.sql.{Column, SparkSession}
+import org.apache.spark.sql.Column
 import org.apache.spark.unsafe.types.UTF8String
 
 import graft.webtext.Mojibake
@@ -39,14 +39,4 @@ object MojibakeRepairExpr {
   def mojibakeRepair(c: Column): Column =
     org.apache.spark.sql.GraftColumnBridge.column(
       MojibakeRepairExpr(org.apache.spark.sql.GraftColumnBridge.expression(c)))
-
-  /** Register `mojibake_repair(s)` for SQL access. */
-  def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "mojibake_repair",
-      {
-        case Seq(t) => MojibakeRepairExpr(t)
-        case _      => throw new IllegalArgumentException("mojibake_repair(text)")
-      },
-      "built-in")
 }

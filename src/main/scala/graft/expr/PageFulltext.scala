@@ -53,21 +53,7 @@ object PageFulltextExpr {
     org.apache.spark.sql.GraftColumnBridge.column(
       PageFulltextExpr(org.apache.spark.sql.GraftColumnBridge.expression(c), dehyphenate, ro))
 
-  /** Register `page_fulltext(html [, dehyphenate, ro])` for SQL access. */
-  def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "page_fulltext",
-      exprs => {
-        def flag(e: Expression): Boolean = e.eval(null) match {
-          case b: Boolean => b
-          case other      => other != null && other.toString.toBoolean
-        }
-        exprs match {
-          case Seq(h)        => PageFulltextExpr(h)
-          case Seq(h, d)     => PageFulltextExpr(h, flag(d))
-          case Seq(h, d, r)  => PageFulltextExpr(h, flag(d), flag(r))
-          case _ => throw new IllegalArgumentException("page_fulltext(html[, dehyphenate[, ro]])")
-        }
-      },
-      "built-in")
+  /** `page_fulltext(html [, dehyphenate, ro])` for SQL access: installs
+    * the session's whole [[graft.plans.GraftExtensions]] set. */
+  def register(spark: SparkSession): Unit = graft.plans.GraftExtensions.install(spark)
 }

@@ -3,7 +3,7 @@ package graft.expr
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.types.{DataType, StringType}
-import org.apache.spark.sql.{Column, SparkSession}
+import org.apache.spark.sql.Column
 import org.apache.spark.unsafe.types.UTF8String
 
 import graft.textops.TextNorm
@@ -42,14 +42,4 @@ object TextNormalizeExpr {
   def textNormalize(c: Column): Column =
     org.apache.spark.sql.GraftColumnBridge.column(
       TextNormalizeExpr(org.apache.spark.sql.GraftColumnBridge.expression(c)))
-
-  /** Register `text_normalize(s)` for SQL access. */
-  def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "text_normalize",
-      {
-        case Seq(t) => TextNormalizeExpr(t)
-        case _      => throw new IllegalArgumentException("text_normalize(text)")
-      },
-      "built-in")
 }

@@ -3,7 +3,7 @@ package graft.expr
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.types.{DataType, StringType}
-import org.apache.spark.sql.{Column, SparkSession}
+import org.apache.spark.sql.Column
 import org.apache.spark.unsafe.types.UTF8String
 
 import graft.webtext.UrlOps
@@ -74,22 +74,4 @@ object UrlNormalizeExpr {
   def urlHost(c: Column): Column =
     org.apache.spark.sql.GraftColumnBridge.column(
       UrlHostExpr(org.apache.spark.sql.GraftColumnBridge.expression(c)))
-
-  /** Register `url_normalize(url)` / `url_host(url)` for SQL access. */
-  def register(spark: SparkSession): Unit = {
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "url_normalize",
-      {
-        case Seq(u) => UrlNormalizeExpr(u)
-        case _      => throw new IllegalArgumentException("url_normalize(url)")
-      },
-      "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "url_host",
-      {
-        case Seq(u) => UrlHostExpr(u)
-        case _      => throw new IllegalArgumentException("url_host(url)")
-      },
-      "built-in")
-  }
 }

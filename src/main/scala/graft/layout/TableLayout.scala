@@ -21,8 +21,7 @@ object TableLayout {
     * keeps the demo on the SMJ path even at test scale where the sides
     * would otherwise broadcast.
     */
-  def bucketedJoin(s: SparkSession, docs: DataFrame, buckets: Int = 8,
-                   baseDir: String = s"${sys.props("java.io.tmpdir")}/graft_buckets"): DataFrame = {
+  def bucketedJoin(s: SparkSession, docs: DataFrame, buckets: Int = 8): DataFrame = {
     val words = docs.select(col("doc_id"),
       size(split(col("text"), " ")).cast("long").as("n_words"), col("lang"))
     val chars = docs.select(col("doc_id"),
@@ -31,7 +30,7 @@ object TableLayout {
       s.sql(s"DROP TABLE IF EXISTS $name")
       df.write.format("parquet")
         .bucketBy(buckets, "doc_id").sortBy("doc_id")
-        .option("path", s"$baseDir/$name")
+        .option("path", s"${graft.Scratch.root}/buckets/$name")
         .mode("overwrite")
         .saveAsTable(name)
     }
@@ -49,9 +48,8 @@ object TableLayout {
     * ~1/100 of the files without any index. The predicate never even
     * reaches row-level filtering.
     */
-  def partitionPrunedScan(s: SparkSession, docs: DataFrame, lang: String,
-                          baseDir: String = s"${sys.props("java.io.tmpdir")}/graft_partitioned"): DataFrame = {
-    val path = s"$baseDir/docs_by_lang"
+  def partitionPrunedScan(s: SparkSession, docs: DataFrame, lang: String): DataFrame = {
+    val path = s"${graft.Scratch.root}/partitioned/docs_by_lang"
     docs.select(col("doc_id"), col("text"), col("lang"))
       .write.partitionBy("lang").mode("overwrite").parquet(path)
     s.read.parquet(path)

@@ -1,7 +1,7 @@
 package graft.plans
 
 import org.apache.spark.rdd.RDD
-import org.apache.spark.sql.{DataFrame, GraftPlanBridge, SparkSession, SparkSessionExtensions}
+import org.apache.spark.sql.{DataFrame, GraftPlanBridge}
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.{Ascending, Attribute, AttributeReference, AttributeSet, GenericInternalRow, SortOrder, UnsafeProjection}
 import org.apache.spark.sql.catalyst.plans.logical.{BinaryNode, LogicalPlan}
@@ -11,9 +11,9 @@ import org.apache.spark.sql.execution.metric.SQLMetrics
 import org.apache.spark.sql.types.LongType
 
 /** The as-of join as a WHOLE-OPERATOR Catalyst extension — custom
-  * `LogicalPlan` + `SparkStrategy` + physical `SparkPlan`, registered via
-  * `SparkSessionExtensions` ([[GraftExtensions]]) or per-session
-  * `experimental.extraStrategies` — the (c) tier of the extension ladder
+  * `LogicalPlan` + `SparkStrategy` + physical `SparkPlan`, whose strategy
+  * reaches a session only through [[GraftExtensions]] — the (c) tier of the
+  * extension ladder
   * (compose > Expression > LogicalPlan+Strategy+SparkPlan > mapPartitions):
   * [[graft.webtext.AsofJoin]] is the composed (a)-tier plan (union + running
   * last-non-null window), and this node exists because the composed plan
@@ -77,12 +77,6 @@ object AsofJoinStrategy extends SparkStrategy {
       AsofJoinExec(planLater(n.left), planLater(n.right), n.outAttrs) :: Nil
     case _ => Nil
   }
-}
-
-/** `spark.sql.extensions=graft.plans.GraftExtensions` entry point. */
-class GraftExtensions extends (SparkSessionExtensions => Unit) {
-  override def apply(e: SparkSessionExtensions): Unit =
-    e.injectPlannerStrategy(_ => AsofJoinStrategy)
 }
 
 case class AsofJoinExec(left: SparkPlan, right: SparkPlan,
@@ -167,23 +161,10 @@ case class AsofJoinExec(left: SparkPlan, right: SparkPlan,
 }
 
 object AsofExec {
-  /** Idempotently add [[AsofJoinStrategy]] to an EXISTING session (the query
-    * surface receives a driver-built session; `spark.sql.extensions` only
-    * applies at session construction — [[GraftExtensions]] covers that path,
-    * this covers the other). */
-  def ensureRegistered(spark: SparkSession): Unit =
-    GraftPlanBridge.addStrategy(spark, AsofJoinStrategy)
-
   /** As-of join `snaps` (k, t, version) x `events` (k, t, event_id) through
-    * the physical operator. Output (event_id, doc_key, version, age_s). */
+    * the physical operator. Output (event_id, doc_key, version, age_s).
+    * Plans only in a session that has [[GraftExtensions]]. */
   def asof(snaps: DataFrame, events: DataFrame): DataFrame = {
-    ensureRegistered(snaps.sparkSession)
-    build(snaps, events)
-  }
-
-  /** Plan construction only — no strategy registration side effect (the
-    * SparkSessionExtensions test plans this through an injected strategy). */
-  private[graft] def build(snaps: DataFrame, events: DataFrame): DataFrame = {
     val spark = snaps.sparkSession
     val s = GraftPlanBridge.analyzed(snaps.select("k", "t", "version"))
     val e = GraftPlanBridge.analyzed(events.select("k", "t", "event_id"))

@@ -29,12 +29,11 @@ import org.apache.spark.sql.types.LongType
   * equality condition, so the rule never re-matches its own result
   * (idempotent under the fixed-point batch).
   *
-  * Registered per-session via `spark.experimental.extraOptimizations` — the
-  * public seam for user-provided optimizer rules (no session rebuild
-  * needed); `SparkSessionExtensions.injectOptimizerRule` is the equivalent
-  * build-time seam. */
-case class BucketedRangeJoin(bucket: Long = 1800L) extends Rule[LogicalPlan] {
-  require(bucket > 0)
+  * The bucket width is [[graft.events.RangeJoin.BucketSec]], the
+  * hand-bucketized operator's. The rule reaches a session only through
+  * [[GraftExtensions]], which keeps it on for every query: a rewrite that
+  * re-verifies its predicate changes no answer, only the plan. */
+object BucketedRangeJoin extends Rule[LogicalPlan] {
 
   private def attrOf(e: Expression): Option[AttributeReference] = e match {
     case a: AttributeReference if a.dataType == LongType => Some(a)
@@ -58,7 +57,7 @@ case class BucketedRangeJoin(bucket: Long = 1800L) extends Rule[LogicalPlan] {
       sides match {
         case None => j
         case Some((ivSide, ptSide, swapped)) =>
-          val b = Literal(bucket, LongType)
+          val b = Literal(graft.events.RangeJoin.BucketSec, LongType)
           // interval side: one output row per covered bucket id. The
           // generator output attribute must mirror Explode's element schema
           // exactly (LONG, non-null) or the Generate stays unresolved.

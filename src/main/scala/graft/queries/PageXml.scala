@@ -41,7 +41,9 @@ object PageXml {
       // PAGE-XML files (io/utils.py dir walk) read via a binaryFile scan —
       // landing-format ingestion whose extraction must be byte-identical to
       // the parquet-table path (same oracle as fulltext_extract)
-      val xmlDir = s"${sys.props("java.io.tmpdir")}/graft_xmldir_${dir.hashCode.toHexString}"
+      // one tree per sf dir and JVM: a second run in the same JVM skips the
+      // write, a new JVM never reads a tree written from older sf files
+      val xmlDir = s"${graft.Scratch.root}/xmldir_${dir.hashCode.toHexString}"
       pageplus.spark.XmlDirIngest.writeXmlDir(
         PagesFromDocuments.clean(s, dir).toDF(), xmlDir)
       Pipeline.fulltext(pageplus.spark.XmlDirIngest.readXmlDir(s, xmlDir),
@@ -130,11 +132,10 @@ object PageXml {
         ro = true, bigDocBytes = 2000, saltPartitions = s.sparkContext.defaultParallelism)
     }, RoLastWinsOracleSql),
     Q("fulltext_sql_expr", (s, dir) => {
-      // codegen'd Catalyst Expression path, registered for SQL — the whole
-      // scan -> extract pipeline stays inside WholeStageCodegen
-      graft.expr.PageFulltextExpr.register(s)
-      PagesFromDocuments.clean(s, dir).toDF().createOrReplaceTempView("graft_pages_tmp")
-      s.sql("SELECT url, page_fulltext(html) AS extracted_text FROM graft_pages_tmp")
+      // codegen'd Catalyst Expression path through its SQL function — the
+      // whole scan -> extract pipeline stays inside WholeStageCodegen
+      PagesFromDocuments.clean(s, dir).toDF()
+        .selectExpr("url", "page_fulltext(html) AS extracted_text")
     },
       FulltextOracleSql),
     Q("fulltext_dehyphenate", (s, dir) => {

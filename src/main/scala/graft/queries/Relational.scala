@@ -264,12 +264,10 @@ object Relational {
       EventsRangeJoinOracleSql, eventTime = true),
     Q("range_join_rule", (s, dir) => {
       // the SAME naive BETWEEN join a user would write — planned through
-      // the injected Catalyst optimizer rule (plans.BucketedRangeJoin),
-      // which rewrites it to the bucketized equi-join; without the rule
-      // this plan is a BroadcastNestedLoopJoin (pinned in the spec)
-      if (!s.experimental.extraOptimizations.exists(_.isInstanceOf[graft.plans.BucketedRangeJoin]))
-        s.experimental.extraOptimizations =
-          s.experimental.extraOptimizations :+ graft.plans.BucketedRangeJoin()
+      // the session's Catalyst optimizer rule (plans.BucketedRangeJoin, one
+      // of plans.GraftExtensions), which rewrites it to the bucketized
+      // equi-join; without the rule this plan is a BroadcastNestedLoopJoin
+      // (pinned in the spec)
       val ev = tp(s, dir, "events")
       val iv = graft.events.RangeJoin.incidentWindows(ev)
       val pt = graft.events.RangeJoin.errorPoints(ev)

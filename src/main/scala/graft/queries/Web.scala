@@ -313,15 +313,13 @@ object Web {
       UrlNormalizeOracleSql),
     Q("url_normalize_sql_expr", (s, dir) => {
       // codegen Catalyst-Expression twin of url_normalize (same static
-      // methods, SQL-registered) — no ScalaUDF boundary, WholeStageCodegen
-      graft.expr.UrlNormalizeExpr.register(s)
+      // methods, through their SQL functions) — no ScalaUDF boundary,
+      // WholeStageCodegen. url_host takes the NORMALIZED url: the repeated
+      // url_normalize(url) subtree is evaluated once by codegen
+      // subexpression elimination
       graft.webtext.UrlOps.plantMessyUrls(tp(s, dir, "documents"))
-        .createOrReplaceTempView("graft_urls_tmp")
-      // url_host takes the NORMALIZED url: the repeated url_normalize(url)
-      // subtree is evaluated once by codegen subexpression elimination
-      s.sql("""SELECT doc_id, url_normalize(url) AS url_norm,
-              |       url_host(url_normalize(url)) AS host
-              |FROM graft_urls_tmp""".stripMargin)
+        .selectExpr("doc_id", "url_normalize(url) AS url_norm",
+          "url_host(url_normalize(url)) AS host")
     },
       UrlNormalizeOracleSql),
     Q("host_prefix_trim", (s, dir) => {
@@ -453,10 +451,8 @@ object Web {
     Q("html_main_sql_expr", (s, dir) => {
       // codegen'd Catalyst Expression twin of html_main_content: the whole
       // scan -> boilerplate-strip pipeline stays inside WholeStageCodegen
-      graft.expr.HtmlMainTextExpr.register(s)
       graft.webtext.WebText.htmlPages(tp(s, dir, "documents")).toDF()
-        .createOrReplaceTempView("graft_html_pages_tmp")
-      s.sql("SELECT url, html_main_text(html) AS extracted_text FROM graft_html_pages_tmp")
+        .selectExpr("url", "html_main_text(html) AS extracted_text")
     }, HtmlMainOracleSql),
     Q("html_block_stats", (s, dir) => {
       graft.webtext.WebText.blockStats(

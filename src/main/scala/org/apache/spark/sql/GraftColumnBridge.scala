@@ -13,26 +13,15 @@ object GraftColumnBridge {
 }
 
 /** Same shim one layer up: building a DataFrame over a CUSTOM LogicalPlan
-  * (`Dataset.ofRows`) and registering an extra planner strategy on an
-  * already-constructed session are both `private[sql]`/classic-only in
-  * Spark 4 — the whole-operator extension tier (custom LogicalPlan +
-  * SparkStrategy + SparkPlan, see [[graft.plans.AsofJoinNode]]) needs them.
+  * (`Dataset.ofRows`) is `private[sql]`/classic-only in Spark 4 — the
+  * whole-operator extension tier (custom LogicalPlan + SparkStrategy +
+  * SparkPlan, see [[graft.plans.AsofJoinNode]]) needs it.
   */
 object GraftPlanBridge {
   import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
-  import org.apache.spark.sql.execution.SparkStrategy
 
   def ofRows(spark: SparkSession, plan: LogicalPlan): DataFrame =
     classic.Dataset.ofRows(spark.asInstanceOf[classic.SparkSession], plan)
 
   def analyzed(df: DataFrame): LogicalPlan = df.queryExecution.analyzed
-
-  /** Idempotent `experimental.extraStrategies` append. */
-  def addStrategy(spark: SparkSession, s: SparkStrategy): Unit = {
-    val cs = spark.asInstanceOf[classic.SparkSession]
-    cs.synchronized {
-      if (!cs.experimental.extraStrategies.contains(s))
-        cs.experimental.extraStrategies = cs.experimental.extraStrategies :+ s
-    }
-  }
 }

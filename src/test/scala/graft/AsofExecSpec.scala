@@ -10,8 +10,9 @@ import graft.webtext.AsofJoin
 /** The whole-operator extension tier: AsofJoinNode/Strategy/Exec must agree
   * bit-for-bit with the composed window plan on the corpus fixture, plan as
   * one exec + two co-partitioned exchanges + EnsureRequirements-inserted
-  * sorts, stay partitioning-invariant, and register through BOTH entry
-  * points (extraStrategies and spark.sql.extensions). */
+  * sorts, stay partitioning-invariant, and reach a session through BOTH
+  * ways in of [[graft.plans.GraftExtensions]] (install on the suite session,
+  * spark.sql.extensions on a new one). */
 class AsofExecSpec extends AnyFunSuite {
   import SparkSuite._
 
@@ -88,12 +89,29 @@ class AsofExecSpec extends AnyFunSuite {
         .config("spark.ui.enabled", "false")
         .getOrCreate()
       import s2.implicits._
+      // nothing is installed on s2: planning must succeed through the
+      // injected strategy alone
+      assert(s2.experimental.extraStrategies.isEmpty && s2.experimental.extraOptimizations.isEmpty)
       val snaps = Seq((1L, 10L, 3L)).toDF("k", "t", "version")
       val events = Seq((1L, 11L, 42L), (1L, 9L, 41L)).toDF("k", "t", "event_id")
-      // build() only — no extraStrategies fallback; planning must succeed
-      // through the injected strategy alone
-      val got = rows(AsofExec.build(snaps, events))
+      val got = rows(AsofExec.asof(snaps, events))
       assert(got == Map(42L -> ((1L, 3L, 1L)), 41L -> ((1L, -1L, -1L))))
+      // the same set carries the range-join rule: the naive BETWEEN join is
+      // keyed, not a nested loop
+      val iv = Seq((1L, 100L, 4000L), (2L, 3000L, 9000L)).toDF("iv_id", "lo", "hi")
+      val pt = Seq((7L, 3500L), (8L, 8000L), (9L, 50L)).toDF("event_id", "sec")
+      val ranged = iv.join(pt, col("sec") >= col("lo") && col("sec") <= col("hi"))
+        .select("iv_id", "event_id")
+      val plan = ranged.queryExecution.executedPlan.toString.split("== Initial Plan ==")(0)
+      assert(!plan.contains("BroadcastNestedLoopJoin") && !plan.contains("CartesianProduct"),
+        s"rule must produce a keyed join:\n$plan")
+      assert(ranged.collect().map(r => (r.getLong(0), r.getLong(1))).sorted.toSeq ==
+        Seq((1L, 7L), (2L, 7L), (2L, 8L)))
+      // ...and the SQL functions
+      val xml = pageplus.xml.PageXmlWriter.write(
+        pageplus.data.PagesFromDocuments.cleanDoc(1, "a b c")).getBytes("UTF-8")
+      val text = Seq(Tuple1(xml)).toDF("html").selectExpr("page_fulltext(html)").head().getString(0)
+      assert(text == graft.expr.PageFulltextExpr.extract(xml, false, false) && text.nonEmpty)
     } finally {
       SparkSession.setDefaultSession(orig)
       SparkSession.setActiveSession(orig)

@@ -67,7 +67,6 @@ class PlanSpec extends AnyFunSuite {
     // codegen stage with no object mode (the '*' markers denote WholeStageCodegen)
     val tmp = tempDir("graft_plan_expr_")
     PagesFromDocuments.clean(spark, sf).toDF().write.mode("overwrite").parquet(tmp)
-    graft.expr.PageFulltextExpr.register(spark)
     spark.read.parquet(tmp).createOrReplaceTempView("graft_pages_parquet")
     val pq = spark.sql("SELECT url, page_fulltext(html) AS extracted_text FROM graft_pages_parquet")
     val plan = executedPlan(pq)
@@ -92,7 +91,6 @@ class PlanSpec extends AnyFunSuite {
     val tmp = tempDir("graft_plan_html_expr_")
     graft.webtext.WebText.htmlPages(spark.read.parquet(s"$sf/documents.parquet")).toDF()
       .write.mode("overwrite").parquet(tmp)
-    graft.expr.HtmlMainTextExpr.register(spark)
     spark.read.parquet(tmp).createOrReplaceTempView("graft_html_parquet")
     val pq = spark.sql("SELECT url, html_main_text(html) AS extracted_text FROM graft_html_parquet")
     val plan = executedPlan(pq)

@@ -8,24 +8,28 @@ import scala.jdk.CollectionConverters._
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Queries share one session, so an operator that changes session conf must
-  * put it back. Main code does that in one place, [[SessionConf.scoped]];
-  * this scans `src/main/scala` (the CoverageSpec pattern) so that a
-  * hand-written save/set/restore cannot come back, and pins what `scoped`
-  * restores.
+  * put it back, and no operator may change what the session plans with.
+  * Main code changes conf in one place, [[SessionConf.scoped]], and extends
+  * the session in one place, [[graft.plans.GraftExtensions]]; this scans
+  * `src/main/scala` (the CoverageSpec pattern) so that neither a
+  * hand-written save/set/restore nor a per-operator strategy, rule,
+  * function or temp view can come back, and pins what `scoped` restores.
   */
 class SessionConfSpec extends AnyFunSuite {
 
-  test("session conf is set or unset only by SessionConf.scoped, which restores the previous state") {
+  /** `file:line` of every `src/main/scala` line that contains one of `needles`. */
+  private def hits(needles: String*): Seq[String] = {
     val root = Paths.get("src/main/scala")
     val files = Files.walk(root)
-    val hits =
-      try files.iterator().asScala.filter(_.toString.endsWith(".scala")).toSeq.sorted.flatMap { p =>
-        Files.readAllLines(p, UTF_8).asScala.zipWithIndex.collect {
-          case (line, i) if line.contains("conf.set(") || line.contains("conf.unset(") =>
-            s"${root.relativize(p)}:${i + 1}"
-        }
-      } finally files.close()
-    val (scoped, elsewhere) = hits.partition(_.startsWith("graft/SessionConf.scala:"))
+    try files.iterator().asScala.filter(_.toString.endsWith(".scala")).toSeq.sorted.flatMap { p =>
+      Files.readAllLines(p, UTF_8).asScala.zipWithIndex.collect {
+        case (line, i) if needles.exists(line.contains) => s"${root.relativize(p)}:${i + 1}"
+      }
+    } finally files.close()
+  }
+
+  test("session conf is set or unset only by SessionConf.scoped, which restores the previous state") {
+    val (scoped, elsewhere) = hits("conf.set(", "conf.unset(").partition(_.startsWith("graft/SessionConf.scala:"))
     assert(elsewhere.isEmpty, s"session conf changed outside SessionConf.scoped: ${elsewhere.mkString(", ")}")
     assert(scoped.size == 3, s"expected set, restore and unset in SessionConf.scoped: $scoped")
 
@@ -38,5 +42,14 @@ class SessionConfSpec extends AnyFunSuite {
       intercept[IllegalStateException](SessionConf.scoped(spark, key, "inner")(throw new IllegalStateException))
       assert(spark.conf.get(key) == "outer", "the previous value must come back, also when the block throws")
     } finally spark.conf.unset(key)
+  }
+
+  test("strategies, optimizer rules, SQL functions and temp views come only from GraftExtensions") {
+    val found = hits("experimental.extra", "functionRegistry",
+      "createOrReplaceTempView", "createTempView", "createGlobalTempView")
+      .filterNot(_.startsWith("graft/plans/GraftExtensions.scala:"))
+    // the frozen Bench registers its SQL-expression pages table as a view
+    val frozen = Seq("graft/Bench.scala:151")
+    assert(found == frozen, s"session extended outside GraftExtensions (only $frozen may): ${found.mkString(", ")}")
   }
 }

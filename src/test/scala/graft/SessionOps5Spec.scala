@@ -273,63 +273,67 @@ class RangeJoinSpec extends AnyFunSuite {
   }
 }
 
+/** The rule is pinned on two fresh sessions of the suite's context, so no
+  * earlier suite's queries can have given either of them the rule: a bare
+  * one, where the naive join must nested-loop, and one with
+  * [[graft.plans.GraftExtensions]] installed, where it must not. */
 class RangeJoinRuleSpec extends AnyFunSuite {
   import SparkSuite._
   import graft.events.RangeJoin
-  import graft.plans.BucketedRangeJoin
-  import org.apache.spark.sql.DataFrame
+  import graft.plans.GraftExtensions
+  import org.apache.spark.sql.{DataFrame, SparkSession}
 
   import org.apache.spark.sql.functions.col
+
+  private lazy val bare: SparkSession = spark.newSession()
+  private lazy val installed: SparkSession = {
+    val s = spark.newSession()
+    GraftExtensions.install(s)
+    s
+  }
+
+  private def inputs(s: SparkSession): (DataFrame, DataFrame) = {
+    val events = s.read.parquet(s"$sf/events.parquet")
+    (RangeJoin.incidentWindows(events), RangeJoin.errorPoints(events))
+  }
 
   private def naive(iv: DataFrame, pt: DataFrame) =
     iv.join(pt, col("sec") >= col("lo") && col("sec") <= col("hi"))
       .select("iv_id", "event_id", "sec")
 
-  private def withRule[A](f: => A): A = {
-    val saved = spark.experimental.extraOptimizations
-    spark.experimental.extraOptimizations = saved :+ BucketedRangeJoin()
-    try f finally spark.experimental.extraOptimizations = saved
-  }
+  private def finalPlan(df: DataFrame): String =
+    df.queryExecution.executedPlan.toString.split("== Initial Plan ==")(0)
+
+  private def triples(df: DataFrame): Seq[(Long, Long, Long)] =
+    df.collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).sorted.toSeq
 
   test("the optimizer rule rewrites the naive BETWEEN join to an equi-join, result-identical") {
-    val events = spark.read.parquet(s"$sf/events.parquet")
-    val iv = RangeJoin.incidentWindows(events)
-    val pt = RangeJoin.errorPoints(events)
-    val without = naive(iv, pt).collect()
-      .map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).sorted.toSeq
+    val (bIv, bPt) = inputs(bare)
+    val without = triples(naive(bIv, bPt))
     // sanity: without the rule, Catalyst bottoms out at a nested loop
-    val naivePlan = naive(iv, pt).queryExecution.executedPlan.toString
-      .split("== Initial Plan ==")(0)
+    val naivePlan = finalPlan(naive(bIv, bPt))
     assert(naivePlan.contains("BroadcastNestedLoopJoin"),
       s"expected the naive plan to nested-loop:\n$naivePlan")
-    withRule {
-      val q = naive(iv, pt)
-      val plan = q.queryExecution.executedPlan.toString.split("== Initial Plan ==")(0)
-      assert(!plan.contains("BroadcastNestedLoopJoin") && !plan.contains("CartesianProduct"),
-        s"rule must produce a keyed join:\n$plan")
-      val got = q.collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).sorted.toSeq
-      assert(got == without && got.nonEmpty)
-      // and it equals the hand-bucketized operator
-      val manual = RangeJoin.containJoin(iv, pt).collect()
-        .map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).sorted.toSeq
-      assert(got == manual)
-    }
+    val (iv, pt) = inputs(installed)
+    val q = naive(iv, pt)
+    val plan = finalPlan(q)
+    assert(!plan.contains("BroadcastNestedLoopJoin") && !plan.contains("CartesianProduct"),
+      s"rule must produce a keyed join:\n$plan")
+    val got = triples(q)
+    assert(got == without && got.nonEmpty)
+    // and it equals the hand-bucketized operator
+    assert(got == triples(RangeJoin.containJoin(iv, pt)))
   }
 
   test("the rule handles the swapped orientation (points on the left)") {
-    val events = spark.read.parquet(s"$sf/events.parquet")
-    val iv = RangeJoin.incidentWindows(events)
-    val pt = RangeJoin.errorPoints(events)
-    val expected = naive(iv, pt).collect()
-      .map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).sorted.toSeq
-    withRule {
-      val q = pt.join(iv, col("sec") >= col("lo") && col("sec") <= col("hi"))
-        .select("iv_id", "event_id", "sec")
-      val plan = q.queryExecution.executedPlan.toString.split("== Initial Plan ==")(0)
-      assert(!plan.contains("BroadcastNestedLoopJoin"), s"swapped form must rewrite:\n$plan")
-      val got = q.collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).sorted.toSeq
-      assert(got == expected)
-    }
+    val (bIv, bPt) = inputs(bare)
+    val expected = triples(naive(bIv, bPt))
+    val (iv, pt) = inputs(installed)
+    val q = pt.join(iv, col("sec") >= col("lo") && col("sec") <= col("hi"))
+      .select("iv_id", "event_id", "sec")
+    val plan = finalPlan(q)
+    assert(!plan.contains("BroadcastNestedLoopJoin"), s"swapped form must rewrite:\n$plan")
+    assert(triples(q) == expected)
   }
 }
 

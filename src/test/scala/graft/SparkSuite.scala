@@ -3,14 +3,15 @@ package graft
 import java.util.concurrent.atomic.AtomicLong
 
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkListenerTaskEnd}
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
 import org.apache.spark.sql.types.TimestampNTZType
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.queries.Registry
 
-/** Shared local SparkSession for all Spark-backed suites. */
+/** Shared local SparkSession for all Spark-backed suites, with the engine's
+  * session extensions installed once (as every query installs them). */
 object SparkSuite {
   lazy val spark: SparkSession = {
     val s = SparkSession.builder()
@@ -22,6 +23,7 @@ object SparkSuite {
       .config("spark.ui.enabled", "false")
       .getOrCreate()
     s.sparkContext.setLogLevel("WARN")
+    graft.plans.GraftExtensions.install(s)
     s
   }
   val sf = "/root/testdata/sf0.001"
@@ -287,13 +289,33 @@ class QueriesSmokeSpec extends AnyFunSuite {
   import SparkSuite._
   test("every declared query runs on sf0.001 and returns rows") {
     val eventTime = Registry.all.filter(_.eventTime).map(_.name).toSet
-    val unflagged = SparkEntry.queries.toSeq.flatMap { case (name, fn) =>
-      val df = fn(spark, sf)
-      val n = df.count()
-      assert(n > 0, s"query $name returned 0 rows")
-      if (!eventTime(name) && readsNtz(df.queryExecution.optimizedPlan)) Some(name) else None
+    val runs = SparkEntry.queries.toSeq.map { case (name, fn) =>
+      var df: DataFrame = null
+      val jobs = jobCount {
+        df = fn(spark, sf)
+        assert(df.count() > 0, s"query $name returned 0 rows")
+      }
+      (name, jobs, !eventTime(name) && readsNtz(df.queryExecution.optimizedPlan))
     }
+    val unflagged = runs.collect { case (name, _, true) => name }
     assert(unflagged.isEmpty, s"read a TIMESTAMP_NTZ column without eventTime: ${unflagged.sorted}")
+    checkJobBudget(runs.map(r => r._1 -> r._2).toMap)
+  }
+
+  /** Each query's jobs (construction plus `count()`) may not rise above
+    * `src/test/resources/query_jobs.tsv` (`name<TAB>jobs`). The counts seen
+    * are written to `target/query_jobs.tsv`; a change that lowers a count,
+    * or adds a query, copies that file over the baseline. */
+  private def checkJobBudget(seen: Map[String, Long]): Unit = {
+    val tsv = seen.toSeq.sorted.map { case (n, j) => s"$n\t$j" }.mkString("", "\n", "\n")
+    java.nio.file.Files.writeString(java.nio.file.Paths.get("target", "query_jobs.tsv"), tsv)
+    val src = scala.io.Source.fromResource("query_jobs.tsv")
+    val budget = try src.getLines().map(_.split('\t')).map(a => a(0) -> a(1).toLong).toMap
+      finally src.close()
+    val missing = seen.keySet -- budget.keySet
+    assert(missing.isEmpty, s"no job budget for ${missing.toSeq.sorted.mkString(", ")}")
+    val over = seen.toSeq.sorted.collect { case (n, j) if j > budget(n) => s"$n: $j > ${budget(n)}" }
+    assert(over.isEmpty, s"jobs above query_jobs.tsv: ${over.mkString(", ")}")
   }
   test("the registry rejects two queries with one name") {
     val Seq(a, b) = Registry.all.take(2)

@@ -1137,7 +1137,6 @@ class TextNormSpec extends AnyFunSuite {
   }
 
   test("SQL registration keeps text_normalize inside whole-stage codegen") {
-    graft.expr.TextNormalizeExpr.register(spark)
     spark.read.parquet(s"$sf/documents.parquet").createOrReplaceTempView("tn_docs")
     val df = spark.sql("SELECT doc_id, text_normalize(text) AS t FROM tn_docs")
     val plan = df.queryExecution.executedPlan.toString
