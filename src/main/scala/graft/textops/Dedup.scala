@@ -333,7 +333,7 @@ object Dedup {
   /** Representative-grain band candidates -> exact Jaccard verify -> member
     * expansion; within-group pairs (identical texts, Jaccard 1) have
     * inter = un = shingle cardinality, computed once per multi-member group
-    * (never 0: wordShingles returns a singleton set even for short/empty
+    * (never 0: wordShingleArr returns one shingle even for short/empty
     * texts). */
   private def shinglePairs(docs: DataFrame, keys: Array[Long] => Array[Long],
                            thrNum: Long, thrDen: Long): DataFrame = {

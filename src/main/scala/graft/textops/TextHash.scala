@@ -34,16 +34,15 @@ object TextHash {
     x ^ (x >>> 31)
   }
 
-  /** Word k-shingles hashed to Long (k consecutive tokens joined). */
-  def wordShingles(text: String, k: Int = 3): Set[Long] = wordShingleArr(text, k).toSet
-
-  /** [[wordShingles]] as a sorted DISTINCT Array[Long] — the r6 hot path for
-    * the dedup family (signatures + verify run this per document/candidate):
-    * the hash VALUES are bit-identical (the FNV streams over each token's
-    * UTF-8 bytes plus a single 0x20 separator, which is exactly the byte
-    * stream of the joined string), but tokens are encoded once instead of k
-    * times, no joined String is built per shingle, and no Long is boxed into
-    * a Set. Consumers use [[intersectSize]] / `.length` — same set algebra. */
+  /** Word k-shingles (k consecutive tokens joined by one space, FNV-64
+    * hashed) as a sorted DISTINCT Array[Long] — the hot path of the dedup
+    * family (signatures + verify run this per document/candidate). The FNV
+    * stream runs over each token's UTF-8 bytes plus a single 0x20 separator,
+    * which is exactly the byte stream of the joined string, so tokens are
+    * encoded once instead of k times, no joined String is built per shingle,
+    * and no Long is boxed into a Set. Fewer than k tokens give one shingle of
+    * the joined text. Consumers use [[intersectSize]] / `.length` as set
+    * algebra. */
   def wordShingleArr(text: String, k: Int = 3): Array[Long] = {
     val toks = PyStr.split(text).toArray
     val n = toks.length
@@ -71,10 +70,8 @@ object TextHash {
     sortedDistinct(out)
   }
 
-  /** Character n-gram shingles hashed to Long. */
-  def charShingles(text: String, n: Int = 3): Set[Long] = charShingleArr(text, n).toSet
-
-  /** [[charShingles]] as a sorted distinct Array[Long] (same values). */
+  /** Character n-gram shingles (FNV-64 hashed) as a sorted distinct
+    * Array[Long]; a text shorter than n is one shingle. */
   def charShingleArr(text: String, n: Int = 3): Array[Long] = {
     if (text.length < n) return Array(fnv64(text))
     val out = new Array[Long](text.length - n + 1)
@@ -220,12 +217,6 @@ object TextHash {
     var i = 0
     while (i < a.length) { if (a(i) == b(i)) eq += 1; i += 1 }
     eq.toDouble / a.length
-  }
-
-  def jaccard(a: Set[Long], b: Set[Long]): Double = {
-    if (a.isEmpty && b.isEmpty) return 1.0
-    val inter = a.intersect(b).size
-    inter.toDouble / (a.size + b.size - inter)
   }
 
   // ---- SimHash ---------------------------------------------------------------

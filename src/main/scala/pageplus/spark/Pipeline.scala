@@ -83,19 +83,11 @@ object Pipeline {
       .as[(Long, String, Array[Byte])]
       .flatMap { case (rid, url, html) =>
         val doc = StaxPageParser.parseTextOnly(url, html)
+        // each .//TextLine chunks once, in the first region that carries it
+        // (a nested region's lines also sit inside its parent)
         val regionLines: Seq[(Int, Seq[String])] =
           if (ro) Seq((0, FullText.lastReadingOrderLines(doc)))
-          else {
-            // mirror docOrderLines' identity dedup ACROSS regions: a nested
-            // region's lines appear both inside its parent and as its own
-            // region (parser emits both); each .//TextLine must chunk once
-            val seen = java.util.Collections.newSetFromMap(
-              new java.util.IdentityHashMap[LineT, java.lang.Boolean]())
-            doc.regions.zipWithIndex.map { case (r, i) =>
-              val lines = if (r.kind == "table") r.lines ++ r.cells.flatMap(_.lines) else r.lines
-              (i, lines.filter(seen.add).flatMap(_.unicodes))
-            }
-          }
+          else FullText.regionLines(doc).zipWithIndex.map { case (ls, i) => (i, ls.flatMap(_.unicodes)) }
         if (regionLines.isEmpty) Seq((rid, url, 0, Seq.empty[String]))
         else regionLines.map { case (i, ls) => (rid, url, i, ls) }
       }

@@ -14,8 +14,13 @@ import pageplus.model._
   */
 object FullText {
 
-  /** Document-order TextLines: regions in document order; a text region's own
-    * lines, then a table region's cells' lines (cells in document order).
+  /** A region's TextLines in document order: a text region's own lines, then
+    * a table region's cells' lines (cells in document order). */
+  private def regionOwnLines(r: RegionT): Seq[LineT] =
+    if (r.kind == "table") r.lines ++ r.cells.flatMap(_.lines) else r.lines
+
+  /** Per-region document-order TextLines, one entry per region of
+    * `doc.regions`, each line in the first region that carries it.
     *
     * Page-level extraction is `root.iterfind('.//TextLine')` in the reference
     * — each line exactly ONCE — while nested regions carry their parent's
@@ -25,14 +30,14 @@ object FullText {
     * break the shared identity, so run extraction before, not after,
     * transforming documents with nested regions (the reference mutates the
     * shared DOM node instead — same visible result on untransformed docs). */
-  def docOrderLines(doc: PageDoc): Seq[LineT] = {
+  def regionLines(doc: PageDoc): Seq[Seq[LineT]] = {
     val seen = java.util.Collections.newSetFromMap(
       new java.util.IdentityHashMap[LineT, java.lang.Boolean]())
-    doc.regions.flatMap { r =>
-      val ls = if (r.kind == "table") r.lines ++ r.cells.flatMap(_.lines) else r.lines
-      ls.filter(seen.add)
-    }
+    doc.regions.map(r => regionOwnLines(r).filter(seen.add))
   }
+
+  /** Document-order TextLines, each exactly once (see [[regionLines]]). */
+  def docOrderLines(doc: PageDoc): Seq[LineT] = regionLines(doc).flatten
 
   private def lineUnicodes(lines: Seq[LineT]): Seq[String] =
     lines.flatMap(_.unicodes) // parser already applied the truthy filter
@@ -57,7 +62,7 @@ object FullText {
     val byId = scala.collection.mutable.HashMap.empty[String, Seq[String]]
     doc.regions.foreach { r =>
       if (!byId.contains(r.id))
-        byId(r.id) = lineUnicodes(if (r.kind == "table") r.lines ++ r.cells.flatMap(_.lines) else r.lines)
+        byId(r.id) = lineUnicodes(regionOwnLines(r))
       r.cells.foreach { c => if (!byId.contains(c.id)) byId(c.id) = lineUnicodes(c.lines) }
     }
     var last: Seq[String] = Nil

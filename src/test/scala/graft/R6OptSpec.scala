@@ -19,8 +19,8 @@ class R6OptSpec extends AnyFunSuite {
       val arr = TextHash.wordShingleArr(t)
       // sorted + distinct
       assert(arr.toSeq == arr.toSeq.distinct.sorted, s"not sorted-distinct for '$t'")
-      // identical value set as the (delegating) Set API and as the ORIGINAL
-      // formulation: fnv64 over the space-joined token windows
+      // identical value set as the ORIGINAL formulation: fnv64 over the
+      // space-joined token windows
       val toks = pageplus.model.PyStr.split(t)
       val expected =
         if (toks.size < 3) Set(TextHash.fnv64(toks.mkString(" ")))

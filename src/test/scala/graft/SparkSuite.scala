@@ -2,7 +2,8 @@ package graft
 
 import java.util.concurrent.atomic.AtomicLong
 
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkListenerTaskEnd}
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkListenerStageCompleted,
+  SparkListenerTaskEnd}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
 import org.apache.spark.sql.types.TimestampNTZType
@@ -46,6 +47,14 @@ object SparkSuite {
   def jobCount(body: => Unit): Long = tally(body) { n =>
     new SparkListener {
       override def onJobStart(j: SparkListenerJobStart): Unit = n.incrementAndGet()
+    }
+  }
+
+  /** Stages run while `body` runs, as `graft.Profile` counts them: skipped
+    * stages (reused shuffle output) do not count. */
+  def stageCount(body: => Unit): Long = tally(body) { n =>
+    new SparkListener {
+      override def onStageCompleted(s: SparkListenerStageCompleted): Unit = n.incrementAndGet()
     }
   }
 
@@ -291,31 +300,41 @@ class QueriesSmokeSpec extends AnyFunSuite {
     val eventTime = Registry.all.filter(_.eventTime).map(_.name).toSet
     val runs = SparkEntry.queries.toSeq.map { case (name, fn) =>
       var df: DataFrame = null
-      val jobs = jobCount {
-        df = fn(spark, sf)
-        assert(df.count() > 0, s"query $name returned 0 rows")
+      var jobs = 0L
+      val stages = stageCount {
+        jobs = jobCount {
+          df = fn(spark, sf)
+          assert(df.count() > 0, s"query $name returned 0 rows")
+        }
       }
-      (name, jobs, !eventTime(name) && readsNtz(df.queryExecution.optimizedPlan))
+      (name, Budget(jobs, stages), !eventTime(name) && readsNtz(df.queryExecution.optimizedPlan))
     }
     val unflagged = runs.collect { case (name, _, true) => name }
     assert(unflagged.isEmpty, s"read a TIMESTAMP_NTZ column without eventTime: ${unflagged.sorted}")
-    checkJobBudget(runs.map(r => r._1 -> r._2).toMap)
+    checkBudget(runs.map(r => r._1 -> r._2).toMap)
   }
 
-  /** Each query's jobs (construction plus `count()`) may not rise above
-    * `src/test/resources/query_jobs.tsv` (`name<TAB>jobs`). The counts seen
-    * are written to `target/query_jobs.tsv`; a change that lowers a count,
-    * or adds a query, copies that file over the baseline. */
-  private def checkJobBudget(seen: Map[String, Long]): Unit = {
-    val tsv = seen.toSeq.sorted.map { case (n, j) => s"$n\t$j" }.mkString("", "\n", "\n")
+  private case class Budget(jobs: Long, stages: Long)
+
+  /** Each query's jobs and stages (construction plus `count()`) may not rise
+    * above `src/test/resources/query_jobs.tsv` (`name<TAB>jobs<TAB>stages`).
+    * The counts seen are written to `target/query_jobs.tsv`; a change that
+    * lowers a count, or adds a query, copies that file over the baseline. */
+  private def checkBudget(seen: Map[String, Budget]): Unit = {
+    val tsv = seen.toSeq.sortBy(_._1).map { case (n, b) => s"$n\t${b.jobs}\t${b.stages}" }
+      .mkString("", "\n", "\n")
     java.nio.file.Files.writeString(java.nio.file.Paths.get("target", "query_jobs.tsv"), tsv)
     val src = scala.io.Source.fromResource("query_jobs.tsv")
-    val budget = try src.getLines().map(_.split('\t')).map(a => a(0) -> a(1).toLong).toMap
+    val budget = try src.getLines().map(_.split('\t'))
+        .map(a => a(0) -> Budget(a(1).toLong, a(2).toLong)).toMap
       finally src.close()
     val missing = seen.keySet -- budget.keySet
-    assert(missing.isEmpty, s"no job budget for ${missing.toSeq.sorted.mkString(", ")}")
-    val over = seen.toSeq.sorted.collect { case (n, j) if j > budget(n) => s"$n: $j > ${budget(n)}" }
-    assert(over.isEmpty, s"jobs above query_jobs.tsv: ${over.mkString(", ")}")
+    assert(missing.isEmpty, s"no job/stage budget for ${missing.toSeq.sorted.mkString(", ")}")
+    val over = seen.toSeq.sortBy(_._1).flatMap { case (n, b) =>
+      (if (b.jobs > budget(n).jobs) Seq(s"$n: ${b.jobs} jobs > ${budget(n).jobs}") else Nil) ++
+        (if (b.stages > budget(n).stages) Seq(s"$n: ${b.stages} stages > ${budget(n).stages}") else Nil)
+    }
+    assert(over.isEmpty, s"above query_jobs.tsv: ${over.mkString(", ")}")
   }
   test("the registry rejects two queries with one name") {
     val Seq(a, b) = Registry.all.take(2)

@@ -4,12 +4,22 @@ import org.scalatest.funsuite.AnyFunSuite
 
 import graft.textops._
 
+object TextHashSpec {
+  /** Exact Jaccard of two sorted distinct shingle arrays. */
+  def jaccard(a: Array[Long], b: Array[Long]): Double = {
+    val inter = TextHash.intersectSize(a, b)
+    inter.toDouble / (a.length + b.length - inter)
+  }
+}
+
 class TextHashSpec extends AnyFunSuite {
+  import TextHashSpec.jaccard
+
   test("jaccard of planted variant (drop first word) is (n-3)/(n-2) for distinct shingles") {
     val words = (1 to 20).map("w" + _)
     val t1 = words.mkString(" ")
     val t2 = words.drop(1).mkString(" ")
-    val j = TextHash.jaccard(TextHash.wordShingles(t1), TextHash.wordShingles(t2))
+    val j = jaccard(TextHash.wordShingleArr(t1), TextHash.wordShingleArr(t2))
     assert(math.abs(j - 17.0 / 18.0) < 1e-9)
   }
   test("minhash estimate approximates true jaccard") {
@@ -18,7 +28,7 @@ class TextHashSpec extends AnyFunSuite {
     val est = TextHash.estimateJaccard(
       TextHash.minHashSignature(TextHash.wordShingleArr(t1)),
       TextHash.minHashSignature(TextHash.wordShingleArr(t2)))
-    val truth = TextHash.jaccard(TextHash.wordShingles(t1), TextHash.wordShingles(t2))
+    val truth = jaccard(TextHash.wordShingleArr(t1), TextHash.wordShingleArr(t2))
     assert(math.abs(est - truth) < 0.25, s"est=$est truth=$truth")
   }
   test("band keys collide for identical signatures and docs share bands at high sim") {
@@ -184,8 +194,8 @@ class DedupSparkSpec extends AnyFunSuite {
     val lone = Seq((100L, (1 to 20).map("z" + _).mkString(" ")))
     val docs = (chain ++ lone).toDF("doc_id", "text")
     // direct-pair sanity: endpoints below threshold
-    val j16 = textops.TextHash.jaccard(
-      textops.TextHash.wordShingles(chain.head._2), textops.TextHash.wordShingles(chain.last._2))
+    val j16 = TextHashSpec.jaccard(
+      textops.TextHash.wordShingleArr(chain.head._2), textops.TextHash.wordShingleArr(chain.last._2))
     assert(j16 < 0.8, s"chain endpoints must not be a direct pair, j=$j16")
     val got = textops.Dedup.neardupClusters(docs)
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap

@@ -59,7 +59,7 @@ object RoundTripProps extends Properties("PageXml") {
     if (kind == "table") RegionT(id, kind, hasCoords, if (hasCoords) pts else Nil, Nil, Nil, cells)
     else RegionT(id, kind, hasCoords, if (hasCoords) pts else Nil, Nil, lines, Nil)
 
-  private val docGen: Gen[PageDoc] = for {
+  private[pageplus] val docGen: Gen[PageDoc] = for {
     n <- Gen.choose(0, 4)
     regions <- Gen.listOfN(n, regionGen)
     w <- Gen.chooseNum(1, 10000)
