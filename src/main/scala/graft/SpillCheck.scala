@@ -109,7 +109,7 @@ object SpillCheck {
       }
     })
     val tight = queries(spark, sfDir, rep).map { case (name, df) => name -> contentHash(df) }
-    Thread.sleep(500)
+    org.apache.spark.GraftListenerBus.drain(spark.sparkContext) // every task's spill reaches the counters
     val spilledMb = memSpill.get() / 1e6
     val diskMb = diskSpill.get() / 1e6
     spark.stop()

@@ -95,8 +95,8 @@ object HllSketchAgg {
 
   /** rho of the low `restBits` bits of an already-splitmixed hash —
     * rho = restBits - bit_length(rest) + 1, rest == 0 -> restBits + 1.
-    * Shared by [[HllSketchAgg.update]] and the codegen
-    * [[graft.expr.HllRhoExpr]] so both paths are the same bytecode. */
+    * Shared by [[HllSketchAgg.update]] and the codegen `hll_rho` kernel
+    * ([[graft.expr.Kernel.HllRho]]) so both paths are the same bytecode. */
   def rho(h: Long, restBits: Int): Int = {
     val rest = h & ((1L << restBits) - 1)
     if (rest == 0L) restBits + 1

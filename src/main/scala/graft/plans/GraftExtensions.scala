@@ -4,7 +4,8 @@ import org.apache.spark.sql.{SparkSession, SparkSessionExtensions}
 import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
 
-import graft.expr.{HtmlMainTextExpr, PageFulltextExpr, TextNormalizeExpr, UrlHostExpr, UrlNormalizeExpr}
+import graft.expr.{Kernel, KernelExpr}
+import graft.expr.Kernel.{HtmlMainText, PageFulltext, TextNormalize, UrlHost, UrlNormalize}
 
 /** The engine's one set of session extensions: the [[AsofJoinStrategy]]
   * planner strategy, the [[BucketedRangeJoin]] optimizer rule and the SQL
@@ -33,11 +34,15 @@ object GraftExtensions {
 
   type FunctionDescription = (FunctionIdentifier, ExpressionInfo, Seq[Expression] => Expression)
 
-  private def fn(name: String, usage: String, cls: Class[_])(
+  private def fn(name: String, usage: String)(
       build: PartialFunction[Seq[Expression], Expression]): FunctionDescription =
     (FunctionIdentifier(name),
-      new ExpressionInfo(cls.getCanonicalName, null, name, usage, "", "", "", "", "", "", "built-in"),
+      new ExpressionInfo(classOf[KernelExpr].getCanonicalName, null, name, usage, "", "", "", "", "", "", "built-in"),
       args => build.applyOrElse(args, (_: Seq[Expression]) => throw new IllegalArgumentException(usage)))
+
+  /** `name(arg)` over a one-input kernel. */
+  private def unary(k: Kernel, arg: String): FunctionDescription =
+    fn(k.name, s"${k.name}($arg)") { case Seq(e) => KernelExpr(k, e) }
 
   /** A foldable BOOLEAN (or 'true'/'false') argument. */
   private def flag(e: Expression): Boolean = e.eval(null) match {
@@ -45,25 +50,17 @@ object GraftExtensions {
     case other      => other != null && other.toString.toBoolean
   }
 
-  /** The SQL functions, each the SQL face of a codegen expression. */
+  /** The SQL functions, each the SQL face of a codegen kernel. */
   val functions: Seq[FunctionDescription] = Seq(
-    fn("page_fulltext", "page_fulltext(html[, dehyphenate[, ro]])", classOf[PageFulltextExpr]) {
-      case Seq(h)       => PageFulltextExpr(h)
-      case Seq(h, d)    => PageFulltextExpr(h, flag(d))
-      case Seq(h, d, r) => PageFulltextExpr(h, flag(d), flag(r))
+    fn("page_fulltext", "page_fulltext(html[, dehyphenate[, ro]])") {
+      case Seq(h)       => KernelExpr(PageFulltext(), h)
+      case Seq(h, d)    => KernelExpr(PageFulltext(flag(d)), h)
+      case Seq(h, d, r) => KernelExpr(PageFulltext(flag(d), flag(r)), h)
     },
-    fn("html_main_text", "html_main_text(html)", classOf[HtmlMainTextExpr]) {
-      case Seq(h) => HtmlMainTextExpr(h)
-    },
-    fn("url_normalize", "url_normalize(url)", classOf[UrlNormalizeExpr]) {
-      case Seq(u) => UrlNormalizeExpr(u)
-    },
-    fn("url_host", "url_host(url)", classOf[UrlHostExpr]) {
-      case Seq(u) => UrlHostExpr(u)
-    },
-    fn("text_normalize", "text_normalize(text)", classOf[TextNormalizeExpr]) {
-      case Seq(t) => TextNormalizeExpr(t)
-    })
+    unary(HtmlMainText, "html"),
+    unary(UrlNormalize, "url"),
+    unary(UrlHost, "url"),
+    unary(TextNormalize, "text"))
 
   /** Give an existing session the whole set; a no-op on a session that has
     * it. (A session built with the extension then lists the strategy and

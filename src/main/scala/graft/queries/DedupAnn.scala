@@ -1266,7 +1266,7 @@ object DedupAnn {
         col("text").as("t"))
       messy.unionByName(twins)
         .select(col("doc_id"),
-          graft.expr.TextNormalizeExpr.textNormalize(col("t")).as("norm"))
+          graft.expr.Kernel.TextNormalize(col("t")).as("norm"))
         .groupBy(xxhash64(col("norm")), length(col("norm")))
         .agg(min("doc_id").as("keep_id"), count(lit(1)).as("n_copies"))
         .select("keep_id", "n_copies")
@@ -1374,7 +1374,7 @@ object DedupAnn {
       // the canonical-bytes pass every exact-match op depends on
       val raw = graft.textops.TextNorm.plantMessy(tp(s, dir, "documents"))
       raw.select(col("doc_id"),
-          graft.expr.TextNormalizeExpr.textNormalize(col("raw")).as("text_norm"))
+          graft.expr.Kernel.TextNormalize(col("raw")).as("text_norm"))
         .withColumn("n_chars", length(col("text_norm")).cast("long"))
         .orderBy("doc_id")
     },

@@ -998,7 +998,7 @@ object TrainingData {
       val bigramsC = transform(sequence(lit(0), size(ws) - 2),
         i => concat(element_at(ws, i + 1), lit(" "), element_at(ws, i + 2)))
       val terms = planted.filter(size(ws) >= 2).select(explode(bigramsC).as("term"))
-      val fstream = terms.as[String].map(graft.textops.TextHash.fnv64).toDF("f")
+      val fstream = terms.select(graft.expr.Kernel.Fnv64(col("term")).as("f"))
       val sketch = fstream.agg(graft.expr.CmsSketch.cmsSketch(col("f")).as("sk"))
       val keyTerms = graft.textops.Dedup.BoilerLine.split(" ").sliding(2)
         .map(_.mkString(" ")).toSeq :+ "zzz qqq"

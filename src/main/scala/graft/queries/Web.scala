@@ -1302,8 +1302,8 @@ object Web {
       // accents and ASCII pass through untouched
       val planted = graft.webtext.Mojibake.plantMojibake(tp(s, dir, "documents"))
       planted.select(col("doc_id"),
-          graft.expr.MojibakeRepairExpr.mojibakeRepair(col("text")).as("repaired"),
-          (graft.expr.MojibakeRepairExpr.mojibakeRepair(col("text")) =!= col("text"))
+          graft.expr.Kernel.MojibakeRepair(col("text")).as("repaired"),
+          (graft.expr.Kernel.MojibakeRepair(col("text")) =!= col("text"))
             .cast("long").as("was_mojibake"))
         .orderBy("doc_id")
     },

@@ -43,14 +43,13 @@ object SketchMerge {
     * corpus-sized shuffle in every consumer: a partial-aggregated groupBy
     * down to (type, day, 64) grain. */
   private def registerMaxima(vals: DataFrame): DataFrame = {
-    // r6: the hash runs as codegen expressions (graft.expr.HashBits calls
-    // the same static JVM helpers as HllSketchAgg, so the arithmetic is the
-    // identical bytecode) instead of a corpus-grain typed Dataset.map that
-    // deserialized every row and broke the WholeStageCodegen span (guide §4).
-    val h = graft.expr.HashBits.splitmix64(col("v"))
+    // the hash runs as codegen kernels (graft.expr.Kernel), inside the
+    // WholeStageCodegen span (guide §4), calling the same static JVM helpers
+    // as HllSketchAgg, so the arithmetic is the identical bytecode
+    val h = graft.expr.Kernel.Splitmix64(col("v"))
     vals.select(col("event_type"), col("day"),
         shiftrightunsigned(h, RestBits).cast("int").as("idx"),
-        graft.expr.HashBits.hllRho(h, RestBits).as("rho"))
+        graft.expr.Kernel.HllRho(RestBits)(h).as("rho"))
       .groupBy("event_type", "day", "idx").agg(max("rho").as("rho"))
   }
 

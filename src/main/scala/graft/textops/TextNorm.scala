@@ -20,7 +20,7 @@ import org.apache.spark.sql.functions._
   * Total (never throws), idempotent, null-safe at the Expression layer.
   *
   * Scale shape: pure map-side scalar work — no shuffle, no state; the
-  * Expression twin ([[graft.expr.TextNormalizeExpr]]) keeps it inside
+  * `text_normalize` kernel ([[graft.expr.Kernel.TextNormalize]]) keeps it inside
   * whole-stage codegen. NFC uses the JDK's `java.text.Normalizer` (the
   * Unicode canonical composition pairs are stable for practical web text);
   * the cleanup pass is a single StringBuilder walk with an isNormalized

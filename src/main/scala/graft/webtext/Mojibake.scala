@@ -24,8 +24,9 @@ import org.apache.spark.sql.functions._
   */
 object Mojibake {
 
-  /** Static repair kernel — shared verbatim by the codegen Expression twin
-    * ([[graft.expr.MojibakeRepairExpr]]) so the two surfaces cannot drift. */
+  /** Static repair kernel — the `mojibake_repair` codegen kernel
+    * ([[graft.expr.Kernel.MojibakeRepair]]) calls it, so the two surfaces
+    * cannot drift. */
   def repair(s: String): String = {
     if (s == null) return null
     var i = 0

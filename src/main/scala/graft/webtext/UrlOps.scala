@@ -3,6 +3,8 @@ package graft.webtext
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
+import graft.expr.Kernel.{UrlHost, UrlNormalize}
+
 /** URL canonicalization + host-grain aggregation — the first dedup/quality
   * axis of a Common-Crawl pipeline (URL-exact dedup, host blocklists,
   * per-host quality priors) runs on CANONICAL urls, not raw crawl strings.
@@ -102,19 +104,14 @@ object UrlOps {
     if (pi >= 0) hp.substring(0, pi) else hp
   }
 
-  /** pages/docs with a `url` column -> (.., url_norm, host). Map-side; ONE
-    * normalization per row (a single struct-returning UDF — two black-box
-    * UDFs on the same input get no common-subexpression elimination). */
+  /** pages/docs with a `url` column -> (.., url_norm, host). Map-side and
+    * inside whole-stage codegen, through the `url_normalize` and `url_host`
+    * kernels ([[graft.expr.Kernel]], the same [[normalize]] and [[hostOf]]);
+    * `host` reads `url_norm`, so each row is normalized once. A null `url`
+    * keeps a null `url_norm` and an empty `host`. */
   def withNormalized(df: DataFrame): DataFrame = {
-    val normHost = udf((u: String) => { val n = normalize(u); (n, hostOf(n)) })
-    // scalar normalization is branchy string slicing — a UDF is appropriate
-    // here (no regex-builtin composition expresses param filtering + port
-    // stripping without multiple passes); it stays map-side, so the plan
-    // shape (zero shuffle) is unchanged
-    df.withColumn("_nh", normHost(col("url")))
-      .withColumn("url_norm", col("_nh._1"))
-      .withColumn("host", col("_nh._2"))
-      .drop("_nh")
+    df.withColumn("url_norm", UrlNormalize(col("url")))
+      .withColumn("host", coalesce(UrlHost(col("url_norm")), lit("")))
   }
 
   /** Deterministically plant MESSY crawl urls (the driver corpus has clean

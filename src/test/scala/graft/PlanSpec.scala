@@ -77,7 +77,7 @@ class PlanSpec extends AnyFunSuite {
     // Column-API form too
     val viaCol = PagesFromDocuments.clean(spark, sf).toDF()
       .select(org.apache.spark.sql.functions.col("url"),
-        graft.expr.PageFulltextExpr.pageFulltext(org.apache.spark.sql.functions.col("html")).as("t"))
+        graft.expr.Kernel.PageFulltext()(org.apache.spark.sql.functions.col("html")).as("t"))
       .collect().map(r => r.getString(0) -> r.getString(1)).toMap
     assert(viaCol == typed)
   }
@@ -100,7 +100,7 @@ class PlanSpec extends AnyFunSuite {
     assert(pq.collect().map(r => r.getString(0) -> r.getString(1)).toMap == typed)
     val viaCol = spark.read.parquet(tmp)
       .select(org.apache.spark.sql.functions.col("url"),
-        graft.expr.HtmlMainTextExpr.htmlMainText(org.apache.spark.sql.functions.col("html")).as("t"))
+        graft.expr.Kernel.HtmlMainText(org.apache.spark.sql.functions.col("html")).as("t"))
       .collect().map(r => r.getString(0) -> r.getString(1)).toMap
     assert(viaCol == typed)
   }
@@ -220,12 +220,12 @@ class PlanSpec extends AnyFunSuite {
     got.get.unpersist()
   }
 
-  test("url_normalize Expression equals the UDF pipeline and stays in WholeStageCodegen") {
-    val udfSide = SparkEntry.queries("url_normalize")(spark, sf)
+  test("url_normalize Column pipeline equals its SQL-function twin and stays in WholeStageCodegen") {
+    val colSide = SparkEntry.queries("url_normalize")(spark, sf)
       .collect().map(r => r.getLong(0) -> ((r.getString(1), r.getString(2)))).toMap
     val exprDf = SparkEntry.queries("url_normalize_sql_expr")(spark, sf)
     val exprSide = exprDf.collect().map(r => r.getLong(0) -> ((r.getString(1), r.getString(2)))).toMap
-    assert(exprSide == udfSide && exprSide.nonEmpty)
+    assert(exprSide == colSide && exprSide.nonEmpty)
     // the '*(n)' markers denote WholeStageCodegen stages in the final plan
     val plan = executedPlan(exprDf)
     assert("\\*\\(\\d+\\) Project \\[.*url_normalize".r.findFirstIn(plan).isDefined,
@@ -234,10 +234,10 @@ class PlanSpec extends AnyFunSuite {
       s"no object-mode boundary expected:\n$plan")
     // Column-API bridges agree with the SQL-registry path
     import org.apache.spark.sql.functions.col
-    import graft.expr.UrlNormalizeExpr.{urlHost, urlNormalize}
+    import graft.expr.Kernel.{UrlHost, UrlNormalize}
     val viaCol = graft.webtext.UrlOps.plantMessyUrls(
         spark.read.parquet(s"$sf/documents.parquet"))
-      .select(col("doc_id"), urlNormalize(col("url")).as("n"), urlHost(urlNormalize(col("url"))).as("h"))
+      .select(col("doc_id"), UrlNormalize(col("url")).as("n"), UrlHost(UrlNormalize(col("url"))).as("h"))
       .collect().map(r => r.getLong(0) -> ((r.getString(1), r.getString(2)))).toMap
     assert(viaCol == exprSide)
   }

@@ -13,7 +13,8 @@ import org.scalatest.funsuite.AnyFunSuite
   * the session in one place, [[graft.plans.GraftExtensions]]; this scans
   * `src/main/scala` (the CoverageSpec pattern) so that neither a
   * hand-written save/set/restore nor a per-operator strategy, rule,
-  * function or temp view can come back, and pins what `scoped` restores.
+  * function, temp view or ScalaUDF can come back, and pins what `scoped`
+  * restores.
   */
 class SessionConfSpec extends AnyFunSuite {
 
@@ -51,5 +52,10 @@ class SessionConfSpec extends AnyFunSuite {
     // the frozen Bench registers its SQL-expression pages table as a view
     val frozen = Seq("graft/Bench.scala:151")
     assert(found == frozen, s"session extended outside GraftExtensions (only $frozen may): ${found.mkString(", ")}")
+  }
+
+  test("no ScalaUDF: a per-row function is a graft.expr.Kernel declaration") {
+    val found = hits("udf(")
+    assert(found.isEmpty, s"udf( under src/main/scala: ${found.mkString(", ")}")
   }
 }

@@ -1131,8 +1131,7 @@ class TextNormSpec extends AnyFunSuite {
     val docs = spark.read.parquet(s"$sf/documents.parquet")
     val raw = TextNorm.plantMessy(docs)
     val got = raw.select(org.apache.spark.sql.functions.col("doc_id"),
-        graft.expr.TextNormalizeExpr.textNormalize(
-          org.apache.spark.sql.functions.col("raw")).as("text_norm"))
+        graft.expr.Kernel.TextNormalize(org.apache.spark.sql.functions.col("raw")).as("text_norm"))
       .collect().map(r => r.getLong(0) -> r.getString(1)).toMap
     val rawLocal = raw.collect().map(r => r.getLong(0) -> r.getString(1))
     assert(rawLocal.nonEmpty)
