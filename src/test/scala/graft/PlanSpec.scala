@@ -220,12 +220,24 @@ class PlanSpec extends AnyFunSuite {
     got.get.unpersist()
   }
 
-  test("url_normalize Column pipeline equals its SQL-function twin and stays in WholeStageCodegen") {
+  test("url_normalize Expression equals the UDF pipeline and stays in WholeStageCodegen") {
+    import org.apache.spark.sql.functions.{col, udf}
+    // reference: one struct-returning ScalaUDF over the plain Scala functions
+    // the kernels call, as withNormalized ran before it used the kernels
+    val normHost = udf((u: String) => {
+      val n = graft.webtext.UrlOps.normalize(u); (n, graft.webtext.UrlOps.hostOf(n))
+    })
+    val udfSide = graft.webtext.UrlOps.plantMessyUrls(
+        spark.read.parquet(s"$sf/documents.parquet"))
+      .select(col("doc_id"), normHost(col("url")).as("nh"))
+      .select(col("doc_id"), col("nh._1"), col("nh._2"))
+      .collect().map(r => r.getLong(0) -> ((r.getString(1), r.getString(2)))).toMap
     val colSide = SparkEntry.queries("url_normalize")(spark, sf)
       .collect().map(r => r.getLong(0) -> ((r.getString(1), r.getString(2)))).toMap
     val exprDf = SparkEntry.queries("url_normalize_sql_expr")(spark, sf)
     val exprSide = exprDf.collect().map(r => r.getLong(0) -> ((r.getString(1), r.getString(2)))).toMap
-    assert(exprSide == colSide && exprSide.nonEmpty)
+    assert(exprSide == udfSide && exprSide.nonEmpty)
+    assert(colSide == udfSide)
     // the '*(n)' markers denote WholeStageCodegen stages in the final plan
     val plan = executedPlan(exprDf)
     assert("\\*\\(\\d+\\) Project \\[.*url_normalize".r.findFirstIn(plan).isDefined,
@@ -233,7 +245,6 @@ class PlanSpec extends AnyFunSuite {
     assert(!plan.contains("DeserializeToObject"),
       s"no object-mode boundary expected:\n$plan")
     // Column-API bridges agree with the SQL-registry path
-    import org.apache.spark.sql.functions.col
     import graft.expr.Kernel.{UrlHost, UrlNormalize}
     val viaCol = graft.webtext.UrlOps.plantMessyUrls(
         spark.read.parquet(s"$sf/documents.parquet"))
