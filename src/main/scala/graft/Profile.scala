@@ -31,11 +31,13 @@ object Profile {
     * query's family in [[graft.queries.Registry]]. `runsS`: both
     * runs (None: failed); `minS`: -1 if both failed. `executions`: internal
     * Dataset actions (a checkpoint, a witness) and the final `drain`, each with
-    * its operators that have a non-zero rows, time, spill or size metric. */
+    * its operators that have a non-zero rows, time, spill or size metric.
+    * `schemaReads`: the warm run's [[Tables]] reads that inferred a parquet
+    * schema and reads that reused one. */
   final case class Record(query: String, family: String, sf: String, cores: Int,
       runsS: Seq[Option[Double]], minS: Double, error: Option[String], jobs: Int, stages: Int,
-      tasks: Int, exchanges: Int, codegenStages: Int, jobList: Seq[Job], stageList: Seq[Stage],
-      executions: Seq[Execution])
+      tasks: Int, exchanges: Int, codegenStages: Int, schemaReads: Tables.Reads, jobList: Seq[Job],
+      stageList: Seq[Stage], executions: Seq[Execution])
   /** `description`: the job description, else its result stage's call site. */
   final case class Job(id: Int, wallMs: Long, description: String)
   /** `runMs`: summed task run time. */
@@ -99,18 +101,20 @@ object Profile {
     org.apache.spark.GraftListenerBus.drain(spark.sparkContext) // else cold-run events reach it
     spark.sparkContext.addSparkListener(probe)
     spark.listenerManager.register(probe)
+    val reads0 = Tables.reads
     val warm = try once() finally {
       org.apache.spark.GraftListenerBus.drain(spark.sparkContext)
       spark.sparkContext.removeSparkListener(probe)
       spark.listenerManager.unregister(probe)
     }
+    val schemaReads = Tables.reads - reads0
     val execs = probe.executions.toSeq ++ warm.map(w => "drain" -> operators(w._2.executedPlan, 0))
     val runs = Seq(cold, warm.map(_._1))
     val rec = Record(name, graft.queries.Registry.familyOf(name), sfDir,
       spark.sparkContext.defaultParallelism,
       runs, runs.flatten.minOption.getOrElse(-1.0), errors.headOption,
       probe.jobs.size, probe.stages.size, probe.stages.map(_.tasks).sum,
-      execs.flatMap(_._2).count(_.exchange), execs.flatMap(_._2).count(_.codegen),
+      execs.flatMap(_._2).count(_.exchange), execs.flatMap(_._2).count(_.codegen), schemaReads,
       probe.jobs.sortBy(_.id).toSeq, probe.stages.sortBy(_.id).toSeq,
       // metric values are read only now, when every job that feeds them is done
       execs.map { case (action, ops) =>

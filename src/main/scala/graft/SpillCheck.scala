@@ -50,7 +50,7 @@ object SpillCheck {
 
   private def queries(spark: SparkSession, sfDir: String, k: Int): Seq[(String, DataFrame)] = {
     val pages = pageplus.data.PagesFromDocuments.clean(spark, sfDir).toDF()
-    val docs = spark.read.parquet(s"$sfDir/documents.parquet")
+    val docs = Tables.parquet(spark, s"$sfDir/documents.parquet")
       .select("doc_id", "text")
       .repartition(spark.sparkContext.defaultParallelism)
     val docsRep = replicate(docs, k)

@@ -52,7 +52,7 @@ object TableLayout {
     val path = s"${graft.Scratch.root}/partitioned/docs_by_lang"
     docs.select(col("doc_id"), col("text"), col("lang"))
       .write.partitionBy("lang").mode("overwrite").parquet(path)
-    s.read.parquet(path)
+    graft.Tables.parquet(s, path)
       .where(col("lang") === lang)
       .select(col("doc_id"), col("lang"),
         length(col("text")).cast("long").as("n_chars"))

@@ -6,7 +6,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 private[queries] object Shared {
 
   def t(spark: SparkSession, dir: String, name: String): DataFrame =
-    spark.read.parquet(s"$dir/$name.parquet")
+    graft.Tables.parquet(spark, s"$dir/$name.parquet")
 
   /** Parallelized reader for map-heavy pipelines: the input tables are
     * single-row-group parquet files, so without an explicit repartition every

@@ -284,7 +284,7 @@ object PagesFromDocuments {
   }
 
   private def lift(spark: SparkSession, sfDir: String)(build: (Long, String) => PageDoc): Dataset[PageRow] =
-    liftDf(spark.read.parquet(s"$sfDir/documents.parquet"))(build)
+    liftDf(graft.Tables.parquet(spark, s"$sfDir/documents.parquet"))(build)
 
   def clean(spark: SparkSession, sfDir: String): Dataset[PageRow] = lift(spark, sfDir)(cleanDoc)
   def twoRegion(spark: SparkSession, sfDir: String): Dataset[PageRow] = lift(spark, sfDir)(twoRegionDoc)

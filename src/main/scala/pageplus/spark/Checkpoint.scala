@@ -37,7 +37,7 @@ final case class ManifestCommitLog(dir: String) extends CommitLog {
         val p = new org.apache.hadoop.fs.Path(dir)
         p.getFileSystem(spark.sparkContext.hadoopConfiguration).exists(p)
       } catch { case _: Exception => false }
-    if (!exists) None else Some(spark.read.parquet(dir).select("url"))
+    if (!exists) None else Some(graft.Tables.parquet(spark, dir).select("url"))
   }
 }
 

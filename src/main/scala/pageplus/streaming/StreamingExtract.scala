@@ -21,13 +21,11 @@ object StreamingExtract {
 
   /** One-file streaming source with the batch schema (the file-stream source
     * wants a directory; the glob pins our table's file). */
-  private def streamTable(spark: SparkSession, sfDir: String, fileName: String): DataFrame = {
-    val schema = spark.read.parquet(s"$sfDir/$fileName").schema
+  private def streamTable(spark: SparkSession, sfDir: String, fileName: String): DataFrame =
     spark.readStream
-      .schema(schema)
+      .schema(graft.Tables.schema(spark, s"$sfDir/$fileName"))
       .option("pathGlobFilter", fileName)
       .parquet(sfDir)
-  }
 
   /** Update-mode memory sinks APPEND one row per key per micro-batch (no
     * upsert); keep each key's LAST update by maximizing a monotone column
@@ -288,7 +286,7 @@ object StreamingExtract {
     val pts = RangeJoin.errorPoints(
       streamTable(spark, sfDir, "events.parquet")
         .repartition(spark.sparkContext.defaultParallelism))
-    val iv = RangeJoin.incidentWindows(spark.read.parquet(s"$sfDir/events.parquet"))
+    val iv = RangeJoin.incidentWindows(graft.Tables.parquet(spark, s"$sfDir/events.parquet"))
     drainToTable(RangeJoin.containJoin(iv, pts), "stream_rangejoin", "append")
   }
 
@@ -299,7 +297,7 @@ object StreamingExtract {
       .select((col("doc_id") + graft.textops.Dedup.PlantOffset).as("doc_id"),
         when(col("doc_id") % 2 === 1, col("text"))
           .otherwise(concat(lit("new "), col("text"))).as("text"))
-    val base = spark.read.parquet(s"$sfDir/documents.parquet")
+    val base = graft.Tables.parquet(spark, s"$sfDir/documents.parquet")
     drainToTable(graft.textops.Dedup.crossCorpusNew(incoming, base),
       "stream_crosscorpus", "append")
   }
@@ -315,7 +313,7 @@ object StreamingExtract {
     * frozen eval set as they land, before they ever join the corpus. */
   def decontaminateOnce(spark: SparkSession, sfDir: String): DataFrame = {
     import org.apache.spark.sql.functions._
-    val evalDocs = spark.read.parquet(s"$sfDir/documents.parquet")
+    val evalDocs = graft.Tables.parquet(spark, s"$sfDir/documents.parquet")
       .filter(col("doc_id") % 41 === 0)
     val stream = streamTable(spark, sfDir, "documents.parquet")
       .repartition(spark.sparkContext.defaultParallelism)
@@ -352,7 +350,7 @@ object StreamingExtract {
       .select(col("doc_id"), col("text"))
     val src = graft.textops.Bitext.segmentWords(srcDocs)
     val tgt = graft.textops.Bitext.pseudoTranslated(
-      spark.read.parquet(s"$sfDir/documents.parquet"))
+      graft.Tables.parquet(spark, s"$sfDir/documents.parquet"))
     drainToTable(graft.textops.Bitext.alignByIndex(src, tgt), "stream_bitext", "append")
   }
 
@@ -398,7 +396,7 @@ object StreamingExtract {
       Seq("key"), "n_seen", Seq("min_id"))
     // batch-side deterministic key recompute joined against the drained state
     val batchKeys = explodeKeys(
-      graft.textops.Dedup.plantedTail(spark.read.parquet(s"$sfDir/documents.parquet")))
+      graft.textops.Dedup.plantedTail(graft.Tables.parquet(spark, s"$sfDir/documents.parquet")))
       .toDF("key", "doc_id")
     batchKeys.join(finalKeys, "key")
       .groupBy("doc_id")
@@ -479,7 +477,7 @@ object StreamingExtract {
     * data; the snapshot dimension is the small side by contract. */
   def asofOnce(spark: SparkSession, sfDir: String): DataFrame = {
     import org.apache.spark.sql.functions._
-    val docs = spark.read.parquet(s"$sfDir/documents.parquet")
+    val docs = graft.Tables.parquet(spark, s"$sfDir/documents.parquet")
     val n = docs.count()
     val timelines = graft.webtext.AsofJoin.snapshotTimelines(
       graft.webtext.AsofJoin.plantSnapshots(docs))

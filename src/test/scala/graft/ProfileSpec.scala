@@ -45,4 +45,13 @@ class ProfileSpec extends AnyFunSuite {
     assert(ListenerCounts(spark) == listeners, "Profile left a listener registered")
     first.zip(again).foreach { case (a, b) => assert(counts(a) == counts(b), a.query) }
   }
+
+  test("the warm run of fulltext_sql_expr reuses every parquet schema the cold run inferred") {
+    val out = tempDir("graft_profile_")
+    val Seq(rec) = Profile.run(spark, sf, out, Seq("fulltext_sql_expr"))
+    assert(rec.schemaReads.inferred == 0 && rec.schemaReads.reused >= 1, rec.schemaReads)
+    val line = new ObjectMapper().readTree(Files.readAllLines(Paths.get(out, "PROFILE.json")).get(0))
+    assert(line.get("schema_reads").get("inferred").asLong == 0)
+    assert(line.get("schema_reads").get("reused").asLong == rec.schemaReads.reused)
+  }
 }

@@ -13,8 +13,8 @@ import org.scalatest.funsuite.AnyFunSuite
   * the session in one place, [[graft.plans.GraftExtensions]]; this scans
   * `src/main/scala` (the CoverageSpec pattern) so that neither a
   * hand-written save/set/restore nor a per-operator strategy, rule,
-  * function, temp view or ScalaUDF can come back, and pins what `scoped`
-  * restores.
+  * function, temp view, ScalaUDF or schema-inferring parquet read can come
+  * back, and pins what `scoped` restores.
   */
 class SessionConfSpec extends AnyFunSuite {
 
@@ -52,6 +52,13 @@ class SessionConfSpec extends AnyFunSuite {
     // the frozen Bench registers its SQL-expression pages table as a view
     val frozen = Seq("graft/Bench.scala:151")
     assert(found == frozen, s"session extended outside GraftExtensions (only $frozen may): ${found.mkString(", ")}")
+  }
+
+  test("main code reads a parquet table only through graft.Tables.parquet") {
+    val found = hits("read.parquet(").filterNot(_.startsWith("graft/Tables.scala:"))
+    // the frozen Bench reads its inputs itself
+    val frozen = Seq(72, 86, 135, 151, 281).map(n => s"graft/Bench.scala:$n")
+    assert(found == frozen, s"read.parquet( outside graft.Tables (only $frozen may): ${found.mkString(", ")}")
   }
 
   test("no ScalaUDF: a per-row function is a graft.expr.Kernel declaration") {
