@@ -9,6 +9,7 @@ import com.fasterxml.jackson.databind.{ObjectMapper, PropertyNamingStrategies}
 import com.fasterxml.jackson.module.scala.DefaultScalaModule
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd, SparkListenerJobStart, SparkListenerStageCompleted}
 import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.catalyst.expressions.LambdaFunction
 import org.apache.spark.sql.execution.{FormattedMode, QueryExecution, SparkPlan, WholeStageCodegenExec}
 import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
 import org.apache.spark.sql.execution.exchange.{Exchange, ReusedExchangeExec}
@@ -33,11 +34,14 @@ object Profile {
     * Dataset actions (a checkpoint, a witness) and the final `drain`, each with
     * its operators that have a non-zero rows, time, spill or size metric.
     * `schemaReads`: the warm run's [[Tables]] reads that inferred a parquet
-    * schema and reads that reused one. */
+    * schema and reads that reused one. `objectNodes`: the warm run's final
+    * plan's operators that move rows to JVM objects ([[ObjectNodes]]), not
+    * counting the plans of cached relations it scans; `lambdaExprs`: its
+    * higher-order-function lambdas. */
   final case class Record(query: String, family: String, sf: String, cores: Int,
       runsS: Seq[Option[Double]], minS: Double, error: Option[String], jobs: Int, stages: Int,
-      tasks: Int, exchanges: Int, codegenStages: Int, schemaReads: Tables.Reads, jobList: Seq[Job],
-      stageList: Seq[Stage], executions: Seq[Execution])
+      tasks: Int, exchanges: Int, codegenStages: Int, schemaReads: Tables.Reads, objectNodes: Int,
+      lambdaExprs: Int, jobList: Seq[Job], stageList: Seq[Stage], executions: Seq[Execution])
   /** `description`: the job description, else its result stage's call site. */
   final case class Job(id: Int, wallMs: Long, description: String)
   /** `runMs`: summed task run time. */
@@ -83,6 +87,9 @@ object Profile {
 
   private val Recorded = Seq("rows", "time", "spill", "size", "bytes")
 
+  /** Operators that deserialize rows to JVM objects or run typed code on them. */
+  val ObjectNodes = Set("DeserializeToObject", "MapPartitions", "MapElements", "MapGroups", "AppendColumns")
+
   /** One query's record; writes the warm run's formatted plan. */
   private def profile(spark: SparkSession, sfDir: String, out: String, name: String): Record = {
     val errors = mutable.ArrayBuffer.empty[String]
@@ -108,13 +115,15 @@ object Profile {
       spark.listenerManager.unregister(probe)
     }
     val schemaReads = Tables.reads - reads0
-    val execs = probe.executions.toSeq ++ warm.map(w => "drain" -> operators(w._2.executedPlan, 0))
+    val drain = warm.toSeq.flatMap(w => operators(w._2.executedPlan, 0))
+    val execs = probe.executions.toSeq ++ warm.map(_ => "drain" -> drain)
     val runs = Seq(cold, warm.map(_._1))
     val rec = Record(name, graft.queries.Registry.familyOf(name), sfDir,
       spark.sparkContext.defaultParallelism,
       runs, runs.flatten.minOption.getOrElse(-1.0), errors.headOption,
       probe.jobs.size, probe.stages.size, probe.stages.map(_.tasks).sum,
       execs.flatMap(_._2).count(_.exchange), execs.flatMap(_._2).count(_.codegen), schemaReads,
+      drain.count(n => ObjectNodes(n.op)), drain.map(_.lambdas).sum,
       probe.jobs.sortBy(_.id).toSeq, probe.stages.sortBy(_.id).toSeq,
       // metric values are read only now, when every job that feeds them is done
       execs.map { case (action, ops) =>
@@ -127,7 +136,7 @@ object Profile {
     rec
   }
 
-  private final case class Node(op: String, depth: Int, exchange: Boolean, codegen: Boolean,
+  private final case class Node(op: String, depth: Int, exchange: Boolean, codegen: Boolean, lambdas: Int,
       metrics: Seq[(String, SQLMetric)])
 
   /** An executed plan's operators and their rows, time, spill and size
@@ -139,7 +148,8 @@ object Profile {
     case q: QueryStageExec => operators(q.plan, depth)
     case _ =>
       val ms = p.metrics.toSeq.filter { case (k, _) => Recorded.exists(k.toLowerCase.contains) }
-      Node(p.nodeName, depth, p.isInstanceOf[Exchange], p.isInstanceOf[WholeStageCodegenExec], ms) +:
+      val lambdas = p.expressions.map(_.collect { case l: LambdaFunction => l }.size).sum
+      Node(p.nodeName, depth, p.isInstanceOf[Exchange], p.isInstanceOf[WholeStageCodegenExec], lambdas, ms) +:
         (if (p.isInstanceOf[ReusedExchangeExec]) Nil else p.children.flatMap(operators(_, depth + 1)))
   }
 

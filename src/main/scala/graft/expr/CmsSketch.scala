@@ -2,11 +2,10 @@ package graft.expr
 
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
+import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.catalyst.expressions.aggregate.TypedImperativeAggregate
 import org.apache.spark.sql.catalyst.trees.UnaryLike
-import org.apache.spark.sql.types.{BinaryType, DataType, LongType}
+import org.apache.spark.sql.types.{BinaryType, DataType}
 
 /** Count-min sketch as a Catalyst [[TypedImperativeAggregate]] — the
   * heavy-hitter frequency primitive for corpus-scale term statistics: exact
@@ -84,34 +83,10 @@ case class CmsSketchAgg(
   override def prettyName: String = "cms_sketch"
 }
 
-/** Point query against a serialized CMS: `min_i counters[i][bucket_i(key)]`.
-  * Codegen scalar (no ScalaUDF boundary) via the shared static kernel. */
-case class CmsQueryExpr(left: Expression, right: Expression,
-                        depth: Int = 4, width: Int = 1024) extends BinaryExpression {
-
-  override def dataType: DataType = LongType
-  override def checkInputDataTypes(): org.apache.spark.sql.catalyst.analysis.TypeCheckResult =
-    if (left.dataType == BinaryType && right.dataType == LongType)
-      org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-    else org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-      s"cms_query expects (BINARY, BIGINT), got (${left.dataType.catalogString}, ${right.dataType.catalogString})")
-
-  override def nullSafeEval(sk: Any, key: Any): Any =
-    CmsSketch.query(sk.asInstanceOf[Array[Byte]], key.asInstanceOf[Long], depth, width)
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, (s, k) =>
-      s"graft.expr.CmsSketch.query($s, $k, $depth, $width)")
-
-  override protected def withNewChildrenInternal(l: Expression, r: Expression): CmsQueryExpr =
-    copy(left = l, right = r)
-
-  override def prettyName: String = "cms_query"
-}
-
 object CmsSketch {
 
-  /** Static point-query kernel shared by eval and codegen. */
+  /** Point query: `min_i counters[i][bucket_i(key)]`, the static method of
+    * the [[Kernel.CmsQuery]] kernel. */
   def query(sketch: Array[Byte], key: Long, depth: Int, width: Int): Long = {
     val bb = java.nio.ByteBuffer.wrap(sketch).order(java.nio.ByteOrder.LITTLE_ENDIAN)
     var min = Long.MaxValue
@@ -131,7 +106,5 @@ object CmsSketch {
         .toAggregateExpression())
 
   def cmsQuery(sketch: Column, key: Column, depth: Int = 4, width: Int = 1024): Column =
-    org.apache.spark.sql.GraftColumnBridge.column(
-      CmsQueryExpr(org.apache.spark.sql.GraftColumnBridge.expression(sketch),
-        org.apache.spark.sql.GraftColumnBridge.expression(key), depth, width))
+    Kernel.CmsQuery(depth, width)(sketch, key)
 }

@@ -42,7 +42,7 @@ object GraftExtensions {
 
   /** `name(arg)` over a one-input kernel. */
   private def unary(k: Kernel, arg: String): FunctionDescription =
-    fn(k.name, s"${k.name}($arg)") { case Seq(e) => KernelExpr(k, e) }
+    fn(k.name, s"${k.name}($arg)") { case Seq(e) => KernelExpr(k, Seq(e)) }
 
   /** A foldable BOOLEAN (or 'true'/'false') argument. */
   private def flag(e: Expression): Boolean = e.eval(null) match {
@@ -53,9 +53,9 @@ object GraftExtensions {
   /** The SQL functions, each the SQL face of a codegen kernel. */
   val functions: Seq[FunctionDescription] = Seq(
     fn("page_fulltext", "page_fulltext(html[, dehyphenate[, ro]])") {
-      case Seq(h)       => KernelExpr(PageFulltext(), h)
-      case Seq(h, d)    => KernelExpr(PageFulltext(flag(d)), h)
-      case Seq(h, d, r) => KernelExpr(PageFulltext(flag(d), flag(r)), h)
+      case Seq(h)       => KernelExpr(PageFulltext(), Seq(h))
+      case Seq(h, d)    => KernelExpr(PageFulltext(flag(d)), Seq(h))
+      case Seq(h, d, r) => KernelExpr(PageFulltext(flag(d), flag(r)), Seq(h))
     },
     unary(HtmlMainText, "html"),
     unary(UrlNormalize, "url"),

@@ -17,6 +17,16 @@ object HtmlGen {
 
   val ParaWords = 24
 
+  /** The HTML fixture families by name: the one table the
+    * [[graft.expr.Kernel.HtmlFixture]] kernel looks its page builder up in. */
+  val families: Map[String, (Long, String) => String] = Map(
+    "page" -> (page _), "tables" -> (pageWithTables _), "hreflang" -> (pageWithHreflang _),
+    "microdata" -> (pageWithMicrodata _))
+
+  /** The UTF-8 bytes of fixture `family`'s page for one document. */
+  def pageBytes(docId: Long, text: String, family: String): Array[Byte] =
+    families(family)(docId, text).getBytes(java.nio.charset.StandardCharsets.UTF_8)
+
   // label pools: every boilerplate link label is >= 8 chars so the body
   // block's link-density penalty separates it from the article even for the
   // shortest documents (scoring margin analysis in MainContent)

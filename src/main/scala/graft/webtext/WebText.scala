@@ -2,81 +2,35 @@ package graft.webtext
 
 import org.apache.spark.sql.{DataFrame, Dataset}
 
+import graft.expr.Kernel.HtmlFixture
+import pageplus.data.PagesFromDocuments
 import pageplus.model.PageRow
 import pageplus.spark.Pipeline
 
 /** Spark surface of the HTML main-content path: lift the driver's `documents`
-  * table into the north-rule pages shape with a synthetic-HTML payload, then
-  * extract per-row inside `mapPartitions` — identical execution pattern to the
-  * PAGE-XML path (narrow (url, html) projection -> optional salted
-  * repartition -> fused parse+score+extract, zero shuffles). */
+  * table into the north-rule pages shape with a synthetic-HTML payload (one
+  * projection through an [[HtmlFixture]] kernel), then run the per-document
+  * extractors over the narrow (url, html) projection -> optional salted
+  * repartition, zero shuffles. */
 object WebText {
 
   /** documents(doc_id, text, lang, …) -> pages(url, warc_ts, html, text, lang)
     * with `html` = deterministic boilerplate-wrapped page bytes. */
-  def htmlPages(docs: DataFrame): Dataset[PageRow] = {
-    val spark = docs.sparkSession
-    import spark.implicits._
-    docs.select("doc_id", "text", "lang")
-      .as[(Long, String, String)]
-      .mapPartitions(_.map { case (id, text, lang) =>
-        val t = if (text == null) "" else text
-        PageRow(pageplus.data.PagesFromDocuments.url(id),
-          new java.sql.Timestamp(id * 3600 * 1000L),
-          HtmlGen.page(id, t).getBytes(java.nio.charset.StandardCharsets.UTF_8),
-          text, lang)
-      })
-  }
+  def htmlPages(docs: DataFrame): Dataset[PageRow] = PagesFromDocuments.lift(docs, HtmlFixture("page"))
 
   /** [[htmlPages]] with [[HtmlGen.pageWithTables]] payloads — the fixture
     * family for structured-table mining (consumed only by the tables query;
     * all other page oracles keep the base byte layout). */
-  def tablePages(docs: DataFrame): Dataset[PageRow] = {
-    val spark = docs.sparkSession
-    import spark.implicits._
-    docs.select("doc_id", "text", "lang")
-      .as[(Long, String, String)]
-      .mapPartitions(_.map { case (id, text, lang) =>
-        val t = if (text == null) "" else text
-        PageRow(pageplus.data.PagesFromDocuments.url(id),
-          new java.sql.Timestamp(id * 3600 * 1000L),
-          HtmlGen.pageWithTables(id, t).getBytes(java.nio.charset.StandardCharsets.UTF_8),
-          text, lang)
-      })
-  }
+  def tablePages(docs: DataFrame): Dataset[PageRow] = PagesFromDocuments.lift(docs, HtmlFixture("tables"))
 
   /** [[htmlPages]] with [[HtmlGen.pageWithHreflang]] payloads — the fixture
     * family for translation-family mining (consumed only by the hreflang /
     * bitext queries; all other page oracles keep the base byte layout). */
-  def hreflangPages(docs: DataFrame): Dataset[PageRow] = {
-    val spark = docs.sparkSession
-    import spark.implicits._
-    docs.select("doc_id", "text", "lang")
-      .as[(Long, String, String)]
-      .mapPartitions(_.map { case (id, text, lang) =>
-        val t = if (text == null) "" else text
-        PageRow(pageplus.data.PagesFromDocuments.url(id),
-          new java.sql.Timestamp(id * 3600 * 1000L),
-          HtmlGen.pageWithHreflang(id, t).getBytes(java.nio.charset.StandardCharsets.UTF_8),
-          text, lang)
-      })
-  }
+  def hreflangPages(docs: DataFrame): Dataset[PageRow] = PagesFromDocuments.lift(docs, HtmlFixture("hreflang"))
 
   /** [[htmlPages]] with [[HtmlGen.pageWithMicrodata]] payloads — the fixture
     * family for microdata article mining (consumed only by that query). */
-  def microdataPages(docs: DataFrame): Dataset[PageRow] = {
-    val spark = docs.sparkSession
-    import spark.implicits._
-    docs.select("doc_id", "text", "lang")
-      .as[(Long, String, String)]
-      .mapPartitions(_.map { case (id, text, lang) =>
-        val t = if (text == null) "" else text
-        PageRow(pageplus.data.PagesFromDocuments.url(id),
-          new java.sql.Timestamp(id * 3600 * 1000L),
-          HtmlGen.pageWithMicrodata(id, t).getBytes(java.nio.charset.StandardCharsets.UTF_8),
-          text, lang)
-      })
-  }
+  def microdataPages(docs: DataFrame): Dataset[PageRow] = PagesFromDocuments.lift(docs, HtmlFixture("microdata"))
 
   final case class TableCell(url: String, table_idx: Long, row_idx: Long,
                              col_idx: Long, is_header: Boolean, cell: String)

@@ -1,7 +1,12 @@
 package pageplus.data
 
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import java.nio.charset.StandardCharsets
 
+import org.apache.spark.sql.{DataFrame, Dataset, Encoders, SparkSession}
+import org.apache.spark.sql.functions.{coalesce, col, concat, lit, timestamp_seconds}
+import org.apache.spark.sql.types.{LongType, StringType}
+
+import graft.expr.Kernel
 import pageplus.model._
 import pageplus.xml.PageXmlWriter
 
@@ -24,18 +29,18 @@ object PagesFromDocuments {
     if (text == null || text.isEmpty) Nil
     else text.split(" ", -1).grouped(WordsPerLine).map(_.mkString(" ")).toSeq
 
-  private def lineGeom(i: Int): (Seq[Pt], Seq[Pt]) = {
-    val y0 = 100 + 60 * i
-    val rect = Seq(Pt(100, y0), Pt(900, y0), Pt(900, y0 + 50), Pt(100, y0 + 50))
-    val baseline = Seq(Pt(120, y0 + 40), Pt(880, y0 + 40))
-    (rect, baseline)
-  }
+  /** The rectangle (x0, y0)-(x1, y1), clockwise from its top-left corner. */
+  private def box(x0: Int, y0: Int, x1: Int, y1: Int): Seq[Pt] = Seq(Pt(x0, y0), Pt(x1, y0), Pt(x1, y1), Pt(x0, y1))
 
+  /** A TextLine whose one TextEquiv is `text` (also its `.//Unicode` when non-empty). */
+  private def line(id: String, coords: Seq[Pt], baseline: Seq[Pt], text: String): LineT =
+    LineT(id, hasCoords = true, coords, hasBaseline = true, baseline, texts = Seq(TextEquivT(0, text)),
+      words = Nil, unicodes = if (text.nonEmpty) Seq(text) else Nil)
+
+  /** Line `i` of a one-column page. */
   private def mkLine(id: String, i: Int, text: String): LineT = {
-    val (rect, baseline) = lineGeom(i)
-    LineT(id, hasCoords = true, rect, hasBaseline = true, baseline,
-      texts = Seq(TextEquivT(0, text)), words = Nil,
-      unicodes = if (text.nonEmpty) Seq(text) else Nil)
+    val y0 = 100 + 60 * i
+    line(id, box(100, y0, 900, y0 + 50), Seq(Pt(120, y0 + 40), Pt(880, y0 + 40)), text)
   }
 
   private def regionCoords(nLines: Int): Seq[Pt] = {
@@ -43,14 +48,19 @@ object PagesFromDocuments {
     Seq(Pt(50, 50), Pt(950, 50), Pt(950, yMax + 10), Pt(50, yMax + 10))
   }
 
-  /** Clean single-region document. */
-  def cleanDoc(docId: Long, text: String): PageDoc = {
-    val lines = lineTexts(text).zipWithIndex.map { case (t, i) => mkLine(s"r0l$i", i, t) }
-    val region = RegionT("r0", "text", hasCoords = true, regionCoords(lines.size), Nil, lines, Nil)
-    PageDoc(url(docId), Ns, 2000, 100 + 60 * lines.size + 60, s"p$docId.png",
-      readingOrder = Nil, docOrderRegionIds = Seq("r0"), regions = Seq(region),
-      parseOk = true, parseError = "")
+  /** A document of one text region `r0` holding `lines`, sized for `rows` line rows. */
+  private def oneRegionDoc(docId: Long, rows: Int, lines: Seq[LineT]): PageDoc = {
+    val region = RegionT("r0", "text", hasCoords = true, regionCoords(rows), Nil, lines, Nil)
+    PageDoc(url(docId), Ns, 2000, 100 + 60 * rows + 60, s"p$docId.png", readingOrder = Nil,
+      docOrderRegionIds = Seq("r0"), regions = Seq(region), parseOk = true, parseError = "")
   }
+
+  /** One plain line per chunk, in a single region. */
+  private def chunkDoc(docId: Long, lts: Seq[String]): PageDoc =
+    oneRegionDoc(docId, lts.size, lts.zipWithIndex.map { case (t, i) => mkLine(s"r0l$i", i, t) })
+
+  /** Clean single-region document. */
+  def cleanDoc(docId: Long, text: String): PageDoc = chunkDoc(docId, lineTexts(text))
 
   /** Two-region document with an explicit ReadingOrder [r0, r1]; r0 holds the
     * first n/2 lines, r1 the rest — exercises the literal last-region-wins
@@ -98,13 +108,7 @@ object PagesFromDocuments {
         }
         l0m +: lines0.tail
       }
-    val withEmpty =
-      if (docId % 7 == 0) {
-        val i = mutated.size
-        val (rect, bl) = lineGeom(i)
-        mutated :+ LineT(s"r0lE", hasCoords = true, rect, hasBaseline = true, bl,
-          texts = Seq(TextEquivT(0, "")), words = Nil, unicodes = Nil)
-      } else mutated
+    val withEmpty = if (docId % 7 == 0) mutated :+ mkLine("r0lE", mutated.size, "") else mutated
     base.copy(regions = Seq(region.copy(lines = withEmpty)))
   }
 
@@ -131,29 +135,17 @@ object PagesFromDocuments {
     * clean extraction (models/text_elements.py:138-207). Partial trailing
     * chunks stay single lines. */
   def splitLinesDoc(docId: Long, text: String): PageDoc = {
-    val words = if (text == null || text.isEmpty) Array.empty[String] else text.split(" ", -1)
-    val chunks = words.grouped(WordsPerLine).toSeq
-    val lines = chunks.zipWithIndex.flatMap { case (chunk, i) =>
-      val y0 = 100 + 60 * i
-      if (chunk.length == WordsPerLine) {
-        val (a, b) = (chunk.take(5).mkString(" "), chunk.drop(5).mkString(" "))
-        Seq(
-          LineT(s"r0l${i}a", hasCoords = true,
-            Seq(Pt(100, y0), Pt(480, y0), Pt(480, y0 + 50), Pt(100, y0 + 50)),
-            hasBaseline = true, Seq(Pt(120, y0 + 40), Pt(460, y0 + 40)),
-            Seq(TextEquivT(0, a)), Nil, Seq(a)),
-          LineT(s"r0l${i}b", hasCoords = true,
-            Seq(Pt(500, y0), Pt(900, y0), Pt(900, y0 + 50), Pt(500, y0 + 50)),
-            hasBaseline = true, Seq(Pt(510, y0 + 40), Pt(890, y0 + 40)),
-            Seq(TextEquivT(0, b)), Nil, Seq(b)))
-      } else {
-        val t = chunk.mkString(" ")
-        Seq(mkLine(s"r0l$i", i, t))
-      }
+    val lts = lineTexts(text)
+    val lines = lts.zipWithIndex.flatMap { case (t, i) =>
+      val (chunk, y0) = (t.split(" ", -1), 100 + 60 * i)
+      if (chunk.length < WordsPerLine) Seq(mkLine(s"r0l$i", i, t))
+      else Seq(
+        line(s"r0l${i}a", box(100, y0, 480, y0 + 50), Seq(Pt(120, y0 + 40), Pt(460, y0 + 40)),
+          chunk.take(5).mkString(" ")),
+        line(s"r0l${i}b", box(500, y0, 900, y0 + 50), Seq(Pt(510, y0 + 40), Pt(890, y0 + 40)),
+          chunk.drop(5).mkString(" ")))
     }
-    val region = RegionT("r0", "text", hasCoords = true, regionCoords(chunks.size), Nil, lines, Nil)
-    PageDoc(url(docId), Ns, 2000, 100 + 60 * chunks.size + 60, s"p$docId.png",
-      Nil, Seq("r0"), Seq(region), parseOk = true, parseError = "")
+    oneRegionDoc(docId, lts.size, lines)
   }
 
   /** Chunks alternate between a left column (x 100..400) and a right column
@@ -162,17 +154,11 @@ object PagesFromDocuments {
   def twoColumnDoc(docId: Long, text: String): PageDoc = {
     val lts = lineTexts(text)
     val lines = lts.zipWithIndex.map { case (t, i) =>
-      val row = i / 2
-      val y0 = 100 + 60 * row
+      val y0 = 100 + 60 * (i / 2)
       val (x0, x1) = if (i % 2 == 0) (100, 400) else (700, 1000)
-      LineT(s"r0l$i", hasCoords = true,
-        Seq(Pt(x0, y0), Pt(x1, y0), Pt(x1, y0 + 50), Pt(x0, y0 + 50)),
-        hasBaseline = true, Seq(Pt(x0 + 20, y0 + 40), Pt(x1 - 20, y0 + 40)),
-        Seq(TextEquivT(0, t)), Nil, if (t.nonEmpty) Seq(t) else Nil)
+      line(s"r0l$i", box(x0, y0, x1, y0 + 50), Seq(Pt(x0 + 20, y0 + 40), Pt(x1 - 20, y0 + 40)), t)
     }
-    val region = RegionT("r0", "text", hasCoords = true, regionCoords(lts.size), Nil, lines, Nil)
-    PageDoc(url(docId), Ns, 2000, 100 + 60 * lts.size + 60, s"p$docId.png",
-      Nil, Seq("r0"), Seq(region), parseOk = true, parseError = "")
+    oneRegionDoc(docId, lts.size, lines)
   }
 
   /** Every chunk with index i%3==2 that is not the last gets a trailing ASCII
@@ -181,13 +167,7 @@ object PagesFromDocuments {
     * lowercase, so the merge branch always fires (models/page.py:125-129). */
   def hyphenatedDoc(docId: Long, text: String): PageDoc = {
     val lts0 = lineTexts(text)
-    val lts = lts0.zipWithIndex.map { case (t, i) =>
-      if (i % 3 == 2 && i < lts0.size - 1) t + "-" else t
-    }
-    val lines = lts.zipWithIndex.map { case (t, i) => mkLine(s"r0l$i", i, t) }
-    val region = RegionT("r0", "text", hasCoords = true, regionCoords(lines.size), Nil, lines, Nil)
-    PageDoc(url(docId), Ns, 2000, 100 + 60 * lines.size + 60, s"p$docId.png",
-      Nil, Seq("r0"), Seq(region), parseOk = true, parseError = "")
+    chunkDoc(docId, lts0.zipWithIndex.map { case (t, i) => if (i % 3 == 2 && i < lts0.size - 1) t + "-" else t })
   }
 
   /** Adversarial-geometry document family (VERDICT r1 item 3): the reference's
@@ -237,10 +217,7 @@ object PagesFromDocuments {
     if (m == 6) {
       val uParent = Seq(Pt(50, 950), Pt(400, 950), Pt(400, 1070), Pt(500, 1070), Pt(500, 950),
         Pt(950, 950), Pt(950, 1100), Pt(50, 1100))
-      val bar = LineT("rxl0", hasCoords = true,
-        Seq(Pt(100, 1000), Pt(900, 1000), Pt(900, 1050), Pt(100, 1050)),
-        hasBaseline = true, Seq(Pt(120, 1040), Pt(880, 1040)),
-        texts = Seq(TextEquivT(0, "xb xb")), words = Nil, unicodes = Seq("xb xb"))
+      val bar = line("rxl0", box(100, 1000, 900, 1050), Seq(Pt(120, 1040), Pt(880, 1040)), "xb xb")
       val rx = RegionT("rx", "text", hasCoords = true, uParent, Nil, Seq(bar), Nil)
       mutated.copy(docOrderRegionIds = mutated.docOrderRegionIds :+ "rx",
         regions = mutated.regions :+ rx)
@@ -268,31 +245,47 @@ object PagesFromDocuments {
 
   // ---- DataFrame lifters ----------------------------------------------------
 
-  /** Works on both batch and streaming DataFrames (pure mapPartitions). */
-  def liftDf(docs: DataFrame)(build: (Long, String) => PageDoc): Dataset[PageRow] = {
-    val spark = docs.sparkSession
-    import spark.implicits._
-    docs
-      .select("doc_id", "text", "lang")
-      .as[(Long, String, String)]
-      .mapPartitions(_.map { case (id, text, lang) =>
-        val doc = build(id, if (text == null) "" else text)
-        PageRow(url(id), new java.sql.Timestamp(id * 3600 * 1000L),
-          PageXmlWriter.write(doc).getBytes(java.nio.charset.StandardCharsets.UTF_8),
-          text, lang)
-      })
+  /** Every PAGE-XML fixture family by name: the one table the
+    * [[graft.expr.Kernel.PageXmlFixture]] kernel looks its builder up in. */
+  val families: Map[String, (Long, String) => PageDoc] = Map(
+    "clean" -> (cleanDoc _), "twoRegion" -> (twoRegionDoc _), "corrupt" -> (corruptDoc _), "withWords" -> (wordDoc _),
+    "splitLines" -> (splitLinesDoc _), "twoColumn" -> (twoColumnDoc _), "hyphenated" -> (hyphenatedDoc _),
+    "messy" -> (messyDoc _), "withExtras" -> (extrasDoc _))
+
+  /** The PAGE-XML bytes of fixture `family` for one document. */
+  def pageXml(docId: Long, text: String, family: String): Array[Byte] =
+    PageXmlWriter.write(families(family)(docId, text)).getBytes(StandardCharsets.UTF_8)
+
+  /** documents(doc_id, text, lang, …) -> pages(url, warc_ts, html, text, lang)
+    * as one projection, with `html = payload(doc_id, coalesce(text, ''))`:
+    * `payload` is a (BIGINT, STRING) -> BINARY fixture kernel. It works on
+    * batch and streaming DataFrames alike, and a plan that does not read
+    * `html` never builds it. */
+  def lift(docs: DataFrame, payload: Kernel): Dataset[PageRow] = {
+    val id = col("doc_id").cast(LongType)
+    val text = col("text").cast(StringType)
+    docs.select(
+      concat(lit("doc://"), id.cast(StringType)).as("url"),
+      timestamp_seconds(id * 3600).as("warc_ts"),
+      payload(id, coalesce(text, lit(""))).as("html"),
+      text.as("text"),
+      col("lang").cast(StringType).as("lang"))
+      .as(Encoders.product[PageRow])
   }
 
-  private def lift(spark: SparkSession, sfDir: String)(build: (Long, String) => PageDoc): Dataset[PageRow] =
-    liftDf(graft.Tables.parquet(spark, s"$sfDir/documents.parquet"))(build)
+  /** PAGE-XML pages of fixture `family` (a key of [[families]]). */
+  def liftDf(docs: DataFrame, family: String): Dataset[PageRow] = lift(docs, Kernel.PageXmlFixture(family))
 
-  def clean(spark: SparkSession, sfDir: String): Dataset[PageRow] = lift(spark, sfDir)(cleanDoc)
-  def twoRegion(spark: SparkSession, sfDir: String): Dataset[PageRow] = lift(spark, sfDir)(twoRegionDoc)
-  def corrupt(spark: SparkSession, sfDir: String): Dataset[PageRow] = lift(spark, sfDir)(corruptDoc)
-  def withWords(spark: SparkSession, sfDir: String): Dataset[PageRow] = lift(spark, sfDir)(wordDoc)
-  def splitLines(spark: SparkSession, sfDir: String): Dataset[PageRow] = lift(spark, sfDir)(splitLinesDoc)
-  def twoColumn(spark: SparkSession, sfDir: String): Dataset[PageRow] = lift(spark, sfDir)(twoColumnDoc)
-  def hyphenated(spark: SparkSession, sfDir: String): Dataset[PageRow] = lift(spark, sfDir)(hyphenatedDoc)
-  def messy(spark: SparkSession, sfDir: String): Dataset[PageRow] = lift(spark, sfDir)(messyDoc)
-  def withExtras(spark: SparkSession, sfDir: String): Dataset[PageRow] = lift(spark, sfDir)(extrasDoc)
+  private def table(spark: SparkSession, sfDir: String, family: String): Dataset[PageRow] =
+    liftDf(graft.Tables.parquet(spark, s"$sfDir/documents.parquet"), family)
+
+  def clean(spark: SparkSession, sfDir: String): Dataset[PageRow] = table(spark, sfDir, "clean")
+  def twoRegion(spark: SparkSession, sfDir: String): Dataset[PageRow] = table(spark, sfDir, "twoRegion")
+  def corrupt(spark: SparkSession, sfDir: String): Dataset[PageRow] = table(spark, sfDir, "corrupt")
+  def withWords(spark: SparkSession, sfDir: String): Dataset[PageRow] = table(spark, sfDir, "withWords")
+  def splitLines(spark: SparkSession, sfDir: String): Dataset[PageRow] = table(spark, sfDir, "splitLines")
+  def twoColumn(spark: SparkSession, sfDir: String): Dataset[PageRow] = table(spark, sfDir, "twoColumn")
+  def hyphenated(spark: SparkSession, sfDir: String): Dataset[PageRow] = table(spark, sfDir, "hyphenated")
+  def messy(spark: SparkSession, sfDir: String): Dataset[PageRow] = table(spark, sfDir, "messy")
+  def withExtras(spark: SparkSession, sfDir: String): Dataset[PageRow] = table(spark, sfDir, "withExtras")
 }

@@ -41,11 +41,4 @@ object Delete {
     * (cli/modification.py:127-129 iterates page.regions.textregions). */
   def textlines(doc: PageDoc): PageDoc =
     doc.copy(regions = doc.regions.map(r => if (r.kind == "text") r.copy(lines = Nil) else r))
-
-  def textlevel(doc: PageDoc, level: String): PageDoc = level match {
-    case "word"   => words(doc)
-    case "line"   => lineTextEquiv(doc)
-    case "region" => regionTextEquiv(doc)
-    case _        => doc
-  }
 }

@@ -1,17 +1,19 @@
 package pageplus.spark
 
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset, Encoders}
 import org.apache.spark.sql.functions._
 
+import graft.expr.Kernel
 import pageplus.model._
 import pageplus.text.{FullText, Stats}
 import pageplus.xml.StaxPageParser
 
 /** The Spark lifecycle of the reference's per-file loop (SURVEY §3.1):
-  * narrow projection -> optional salted repartition -> fused parse+transform in
-  * one `mapPartitions` pass (no intermediate PageDoc ser/de on the hot path) ->
-  * typed output. Column pruning keeps the scan at (url, html) even though the
-  * pages table carries text/lang.
+  * narrow projection -> optional salted repartition -> per-row parse and
+  * transform -> output. Extraction is the `page_fulltext` kernel inside
+  * generated code; the transforms that need a whole [[PageDoc]] ([[parse]],
+  * [[pageStats]]) run typed. Column pruning keeps the scan at (url, html)
+  * even though the pages table carries text/lang.
   */
 object Pipeline {
 
@@ -26,21 +28,14 @@ object Pipeline {
     if (partitions <= 0) df
     else df.repartition(partitions, col("url"))
 
-  /** pages(url, warc_ts, html, text, lang) -> (url, extracted_text).
-    * The fused hot path: one StAX parse + extraction per row. */
+  /** pages(url, warc_ts, html, text, lang) -> (url, extracted_text): the
+    * text-only parse and extraction of the `page_fulltext` kernel, one
+    * codegen projection per row. */
   def fulltext(pages: DataFrame, dehyphenate: Boolean = false, ro: Boolean = false,
-               saltPartitions: Int = 0): Dataset[Extracted] = {
-    val spark = pages.sparkSession
-    import spark.implicits._
+               saltPartitions: Int = 0): Dataset[Extracted] =
     saltByUrl(pages.select("url", "html"), saltPartitions)
-      .as[(String, Array[Byte])]
-      .mapPartitions(_.map { case (url, html) =>
-        // text-only parse: extraction reads no geometry, so Coords/Baseline
-        // decoding (a large share of parse time) is skipped on this hot path
-        val doc = StaxPageParser.parseTextOnly(url, html)
-        Extracted(url, FullText.extract(doc, dehyphenate = dehyphenate, readingOrder = ro))
-      })
-  }
+      .select(col("url"), Kernel.PageFulltext(dehyphenate, ro)(col("html")).as("extracted_text"))
+      .as(Encoders.product[Extracted])
 
   /** pages -> full typed [[PageDoc]] Dataset, for multi-step transforms. */
   def parse(pages: DataFrame, saltPartitions: Int = 0): Dataset[PageDoc] = {
@@ -55,7 +50,7 @@ object Pipeline {
     * `bigDocBytes` are NOT processed as one task-blocking row — they are parsed
     * once, split into per-region line chunks (explode), shuffled across the
     * cluster, and reassembled in document order with a deterministic
-    * array_sort. Small documents take the fused single-pass path. Byte-equal
+    * array_sort. Small documents take the [[fulltext]] kernel path. Byte-equal
     * to [[fulltext]] for every flag combination (chunk boundaries are region
     * boundaries; chunks carry LINE ARRAYS so the cross-region sequential
     * `dehyphe` fold runs once per document over the reassembled line sequence

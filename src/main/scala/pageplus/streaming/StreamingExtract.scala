@@ -85,7 +85,7 @@ object StreamingExtract {
     * so the per-row parse+extract must be spread (CLAUDE.md rule). */
   def extractOnce(spark: SparkSession, sfDir: String): DataFrame = {
     val stream = streamTable(spark, sfDir, "documents.parquet")
-    val pages = PagesFromDocuments.liftDf(stream)(PagesFromDocuments.cleanDoc).toDF()
+    val pages = PagesFromDocuments.liftDf(stream, "clean").toDF()
     val extracted = Pipeline.fulltext(pages,
       saltPartitions = spark.sparkContext.defaultParallelism).toDF()
     drainToTable(extracted, "stream_extract", "append")

@@ -56,13 +56,25 @@ class PlanSpec extends AnyFunSuite {
       "fused extraction should have no shuffle without salting")
   }
 
+  /** The executed plan's final section (AQE appends the initial plan). */
+  private def finalPlan(df: org.apache.spark.sql.DataFrame): String =
+    executedPlan(df).split("== Initial Plan ==")(0)
+
+  /** `url -> f(url, html)` over `pages`, called directly per collected row. */
+  private def direct(pages: org.apache.spark.sql.DataFrame)(f: (String, Array[Byte]) => String): Map[String, String] =
+    pages.select("url", "html").collect().map(r => r.getString(0) -> f(r.getString(0), r.getAs[Array[Byte]](1))).toMap
+
   test("page_fulltext Expression equals the typed pipeline and stays in WholeStageCodegen") {
     import pageplus.data.PagesFromDocuments
-    val typed = SparkEntry.queries("fulltext_extract")(spark, sf)
-      .collect().map(r => r.getString(0) -> r.getString(1)).toMap
-    val df = SparkEntry.queries("fulltext_sql_expr")(spark, sf)
-    val viaExpr = df.collect().map(r => r.getString(0) -> r.getString(1)).toMap
-    assert(viaExpr == typed)
+    import pageplus.text.FullText
+    import pageplus.xml.StaxPageParser
+    // the reference: the Scala calls themselves, per row on the driver
+    val want = direct(PagesFromDocuments.clean(spark, sf).toDF())((url, html) =>
+      FullText.extract(StaxPageParser.parseTextOnly(url, html)))
+    assert(want.size > 10 && want.values.exists(_.nonEmpty))
+    def got(df: org.apache.spark.sql.DataFrame) = df.collect().map(r => r.getString(0) -> r.getString(1)).toMap
+    assert(got(SparkEntry.queries("fulltext_extract")(spark, sf)) == want)
+    assert(got(SparkEntry.queries("fulltext_sql_expr")(spark, sf)) == want)
     // over a parquet-backed pages table the whole scan->extract stage is one
     // codegen stage with no object mode (the '*' markers denote WholeStageCodegen)
     val tmp = tempDir("graft_plan_expr_")
@@ -73,36 +85,78 @@ class PlanSpec extends AnyFunSuite {
     assert(plan.contains("*(1) Project") && plan.contains("page_fulltext"),
       s"expression fell out of codegen:\n$plan")
     assert(!plan.contains("DeserializeToObject"), "expression path must not enter object mode")
-    assert(pq.collect().map(r => r.getString(0) -> r.getString(1)).toMap == typed)
+    assert(got(pq) == want)
     // Column-API form too
-    val viaCol = PagesFromDocuments.clean(spark, sf).toDF()
+    assert(got(PagesFromDocuments.clean(spark, sf).toDF()
       .select(org.apache.spark.sql.functions.col("url"),
-        graft.expr.Kernel.PageFulltext()(org.apache.spark.sql.functions.col("html")).as("t"))
-      .collect().map(r => r.getString(0) -> r.getString(1)).toMap
-    assert(viaCol == typed)
+        graft.expr.Kernel.PageFulltext()(org.apache.spark.sql.functions.col("html")).as("t"))) == want)
   }
 
   test("html_main_text Expression equals the typed HTML pipeline and stays in WholeStageCodegen") {
-    val typed = SparkEntry.queries("html_main_content")(spark, sf)
-      .collect().map(r => r.getString(0) -> r.getString(1)).toMap
-    val viaExpr = SparkEntry.queries("html_main_sql_expr")(spark, sf)
-      .collect().map(r => r.getString(0) -> r.getString(1)).toMap
-    assert(viaExpr == typed)
+    import graft.webtext.MainContent
+    val pages = graft.webtext.WebText.htmlPages(spark.read.parquet(s"$sf/documents.parquet")).toDF()
+    val want = direct(pages)((_, html) => MainContent.extract(new String(html, java.nio.charset.StandardCharsets.UTF_8)))
+    assert(want.size > 10 && want.values.exists(_.nonEmpty))
+    def got(df: org.apache.spark.sql.DataFrame) = df.collect().map(r => r.getString(0) -> r.getString(1)).toMap
+    assert(got(SparkEntry.queries("html_main_content")(spark, sf)) == want)
+    assert(got(SparkEntry.queries("html_main_sql_expr")(spark, sf)) == want)
     val tmp = tempDir("graft_plan_html_expr_")
-    graft.webtext.WebText.htmlPages(spark.read.parquet(s"$sf/documents.parquet")).toDF()
-      .write.mode("overwrite").parquet(tmp)
+    pages.write.mode("overwrite").parquet(tmp)
     spark.read.parquet(tmp).createOrReplaceTempView("graft_html_parquet")
     val pq = spark.sql("SELECT url, html_main_text(html) AS extracted_text FROM graft_html_parquet")
     val plan = executedPlan(pq)
     assert(plan.contains("*(1) Project") && plan.contains("html_main_text"),
       s"expression fell out of codegen:\n$plan")
     assert(!plan.contains("DeserializeToObject"), "expression path must not enter object mode")
-    assert(pq.collect().map(r => r.getString(0) -> r.getString(1)).toMap == typed)
-    val viaCol = spark.read.parquet(tmp)
+    assert(got(pq) == want)
+    assert(got(spark.read.parquet(tmp)
       .select(org.apache.spark.sql.functions.col("url"),
-        graft.expr.Kernel.HtmlMainText(org.apache.spark.sql.functions.col("html")).as("t"))
-      .collect().map(r => r.getString(0) -> r.getString(1)).toMap
-    assert(viaCol == typed)
+        graft.expr.Kernel.HtmlMainText(org.apache.spark.sql.functions.col("html")).as("t"))) == want)
+  }
+
+  /** Every fixture family's lifted pages, by family name. */
+  private def liftedFamilies: Seq[(String, org.apache.spark.sql.DataFrame)] = {
+    import pageplus.data.PagesFromDocuments._
+    import graft.webtext.WebText
+    val docs = spark.read.parquet(s"$sf/documents.parquet")
+    Seq("clean" -> clean _, "twoRegion" -> twoRegion _, "corrupt" -> corrupt _, "withWords" -> withWords _,
+      "splitLines" -> splitLines _, "twoColumn" -> twoColumn _, "hyphenated" -> hyphenated _,
+      "messy" -> messy _, "withExtras" -> withExtras _).map { case (n, f) => n -> f(spark, sf).toDF() } ++
+      Seq("html page" -> WebText.htmlPages _, "html tables" -> WebText.tablePages _,
+        "html hreflang" -> WebText.hreflangPages _, "html microdata" -> WebText.microdataPages _)
+        .map { case (n, f) => n -> f(docs).toDF() }
+  }
+
+  test("lifted pages of every PAGE-XML and HTML fixture family stay out of object mode") {
+    for ((family, pages) <- liftedFamilies) {
+      val plan = finalPlan(pages)
+      for (op <- Seq("DeserializeToObject", "SerializeFromObject", "MapPartitions"))
+        assert(!plan.contains(op), s"$family lifts through $op:\n$plan")
+      assert(pages.count() == spark.read.parquet(s"$sf/documents.parquet").count(), family)
+    }
+  }
+
+  test("Pipeline.fulltext plans as one codegen Project over page_fulltext") {
+    val tmp = tempDir("graft_plan_fulltext_")
+    pageplus.data.PagesFromDocuments.clean(spark, sf).toDF().write.mode("overwrite").parquet(tmp)
+    val plan = finalPlan(pageplus.spark.Pipeline.fulltext(spark.read.parquet(tmp)).toDF())
+    val projects = plan.linesIterator.filter(_.contains("Project [")).toSeq
+    assert(projects.size == 1 && "\\*\\(\\d+\\) Project \\[".r.findFirstIn(projects.head).isDefined &&
+      projects.head.contains("page_fulltext(html"), s"expected one codegen Project over page_fulltext:\n$plan")
+    for (op <- Profile.ObjectNodes + "SerializeFromObject")
+      assert(!plan.contains(op), s"$op in:\n$plan")
+  }
+
+  test("a url filter and url projection over lifted pages never builds the payload") {
+    import org.apache.spark.sql.functions.col
+    val first = spark.read.parquet(s"$sf/documents.parquet").select("doc_id").head().getLong(0)
+    for ((family, pages) <- liftedFamilies) {
+      val df = pages.filter(col("url") === s"doc://$first").select("url")
+      val plan = finalPlan(df)
+      assert(!plan.contains("page_xml_fixture") && !plan.contains("html_fixture"),
+        s"$family builds its payload for a url-only plan:\n$plan")
+      assert(df.collect().map(_.getString(0)).toSeq == Seq(s"doc://$first"), family)
+    }
   }
 
   test("checkpoint pending anti-join plans as a join, not a cartesian") {

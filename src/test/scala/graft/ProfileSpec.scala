@@ -54,4 +54,15 @@ class ProfileSpec extends AnyFunSuite {
     assert(line.get("schema_reads").get("inferred").asLong == 0)
     assert(line.get("schema_reads").get("reused").asLong == rec.schemaReads.reused)
   }
+
+  test("object_nodes counts the final plan's object-mode operators, lambda_exprs its lambdas") {
+    val out = tempDir("graft_profile_")
+    val Seq(expr, typed, cms) = Profile.run(spark, sf, out, Seq("fulltext_sql_expr", "html_main_content", "cms_freq"))
+    assert(expr.objectNodes == 0, "fulltext_sql_expr lifts pages and extracts in generated code")
+    assert(typed.objectNodes >= 1, "WebText.mainContent runs typed")
+    assert(cms.lambdaExprs >= 1, "cms_freq builds its bigrams with transform(sequence(...))")
+    val lines = Files.readAllLines(Paths.get(out, "PROFILE.json")).asScala.map(new ObjectMapper().readTree)
+    assert(lines.map(_.get("object_nodes").asLong) == Seq(expr, typed, cms).map(_.objectNodes.toLong))
+    assert(lines(2).get("lambda_exprs").asLong == cms.lambdaExprs)
+  }
 }

@@ -13,8 +13,9 @@ import org.scalatest.funsuite.AnyFunSuite
   * the session in one place, [[graft.plans.GraftExtensions]]; this scans
   * `src/main/scala` (the CoverageSpec pattern) so that neither a
   * hand-written save/set/restore nor a per-operator strategy, rule,
-  * function, temp view, ScalaUDF or schema-inferring parquet read can come
-  * back, and pins what `scoped` restores.
+  * function, temp view, ScalaUDF, hand-written scalar Expression or
+  * schema-inferring parquet read can come back, and pins what `scoped`
+  * restores.
   */
 class SessionConfSpec extends AnyFunSuite {
 
@@ -64,5 +65,11 @@ class SessionConfSpec extends AnyFunSuite {
   test("no ScalaUDF: a per-row function is a graft.expr.Kernel declaration") {
     val found = hits("udf(")
     assert(found.isEmpty, s"udf( under src/main/scala: ${found.mkString(", ")}")
+  }
+
+  test("no hand-written scalar Expression: KernelExpr is the only one (aggregates excepted)") {
+    val found = hits("extends UnaryExpression", "extends BinaryExpression", "extends TernaryExpression",
+      "with CodegenFallback", "extends Expression").filterNot(_.startsWith("graft/expr/Kernel.scala:"))
+    assert(found.isEmpty, s"a scalar Expression outside KernelExpr (declare a graft.expr.Kernel): ${found.mkString(", ")}")
   }
 }
